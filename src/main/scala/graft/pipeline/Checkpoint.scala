@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Resumable runs with ATOMIC commits, modeling Iceberg snapshot semantics
@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * SURVEY.md §7; a real catalog swap is a `TableIO` config change):
   *
   *  - each commit is a `batch`: data files under `extracted/<batch>/`,
-  *    manifest rows (url + per-partition lineage + metrics) under
+  *    manifest rows (url + the data file holding it + metrics) under
   *    `_manifest/<batch>/`;
   *  - both are first written to dot-prefixed staging directories (hidden
   *    from every Spark/Hadoop reader), then published with two renames,
@@ -24,9 +24,11 @@ import org.apache.spark.sql.functions._
   *    urls, so a re-submitted 10^12-row job re-reads only undone work.
   *
   * The north_rule's "checkpoints per-partition with lineage + metrics" maps
-  * to manifest rows (url, spark_partition_id, n_chars, decode_failures,
-  * batch) — enough to resume, attribute output to input splits, and roll up
-  * run metrics without re-reading the output table.
+  * to manifest rows (url, n_chars, decode_failures, file_name, batch) —
+  * enough to resume, find the data file that holds each url, and roll up
+  * run metrics without re-reading the output table. Manifests written
+  * before `file_name` carry a `part_id` column instead; they read through
+  * the same `mergeSchema` as every other manifest.
   */
 object Checkpoint {
 
@@ -39,11 +41,23 @@ object Checkpoint {
   private def newBatchId(): String =
     "batch_" + java.util.UUID.randomUUID.toString.replace("-", "").take(16)
 
-  private def manifestRows(done: Dataset[ExtractedDoc], batch: String): DataFrame =
-    done
-      .select(col("url"), col("n_chars"), col("decode_failures"))
-      .withColumn("part_id", spark_partition_id())
-      .withColumn("batch", lit(batch))
+  /** Run metrics of one [[commitWithData]], observed during its data write. */
+  final case class CommitStats(docs: Long, chars: Long, decodeFailures: Long, pdfDocs: Long)
+
+  /** Manifest rows: `file` names the data file that holds each row (null
+    * when the commit writes no data). */
+  private def manifestRows(rows: DataFrame, file: Column, batch: String): DataFrame =
+    rows.select(col("url"), col("n_chars"), col("decode_failures"),
+      file.as("file_name"), lit(batch).as("batch"))
+
+  /** Manifest rows of a data directory this sink has just written, read
+    * back from its files. The read is given the `ExtractedDoc` schema, so
+    * no schema-inference job runs, and is pruned to the manifest columns. */
+  private def stagedManifestRows(spark: SparkSession, dataDir: String, batch: String): DataFrame =
+    manifestRows(
+      spark.read.schema(Encoders.product[ExtractedDoc].schema)
+        .format(tableFormat(spark)).load(dataDir),
+      col("_metadata.file_name"), batch)
 
   private def publish(spark: SparkSession, staging: String, target: String): Unit = {
     val fs = fsOf(spark, target)
@@ -63,31 +77,37 @@ object Checkpoint {
       throw new IllegalStateException(s"commit rename failed: $staging -> $target")
   }
 
-  /** Atomically commit a batch of extracted docs: stage data + manifest,
-    * rename data into place, then rename the manifest — the commit point.
-    * Returns the batch id. */
-  def commitWithData(done: Dataset[ExtractedDoc], outDir: String): String = {
+  /** Atomically commit a batch of extracted docs in one pass: the data is
+    * written once to staging, with no cache, under one `observe` that
+    * counts its docs, chars, decode failures and PDF docs. An empty batch
+    * deletes its staging dir and publishes nothing. Otherwise the manifest
+    * is read back from the staged data files, so its url set equals the
+    * written data by construction, even for a nondeterministic upstream.
+    * Then the data dir is renamed into place and the manifest after it —
+    * the commit point. Returns the observed counts. */
+  def commitWithData(done: Dataset[ExtractedDoc], outDir: String): CommitStats = {
     val spark = done.sparkSession
     val batch = newBatchId()
     val dataStaging = s"${dataPath(outDir)}/.staging_$batch"
     val manStaging = s"${manifestPath(outDir)}/.staging_$batch"
-    // the data write and the manifest write are two jobs over `done`; pin it
-    // so (a) the (possibly expensive) upstream runs once and (b) a
-    // nondeterministic upstream cannot produce a manifest whose url set
-    // differs from the data actually written. Respect a caller's own cache.
-    val wasCached = done.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    if (!wasCached) done.persist()
-    try {
-      // data goes through the TableIO format seam (spark.graft.table.format);
-      // the manifest is engine bookkeeping and stays parquet
-      done.toDF().write.format(tableFormat(spark)).save(dataStaging)
-      manifestRows(done, batch).write.parquet(manStaging)
-    } finally {
-      if (!wasCached) done.unpersist()
+    val observed = Observation()
+    // data goes through the TableIO format seam (spark.graft.table.format);
+    // the manifest is engine bookkeeping and stays parquet
+    done.observe(observed,
+        count(lit(1)).as("docs"),
+        coalesce(sum("n_chars"), lit(0L)).as("chars"),
+        coalesce(sum("decode_failures"), lit(0L)).as("decode_failures"),
+        count_if(col("kind") === "pdf").as("pdf_docs"))
+      .toDF().write.format(tableFormat(spark)).save(dataStaging)
+    val m = observed.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
+    val stats = CommitStats(m("docs"), m("chars"), m("decode_failures"), m("pdf_docs"))
+    if (stats.docs == 0) fsOf(spark, dataStaging).delete(new Path(dataStaging), true)
+    else {
+      stagedManifestRows(spark, dataStaging, batch).write.parquet(manStaging)
+      publish(spark, dataStaging, s"${dataPath(outDir)}/$batch")
+      publish(spark, manStaging, s"${manifestPath(outDir)}/$batch")
     }
-    publish(spark, dataStaging, s"${dataPath(outDir)}/$batch")
-    publish(spark, manStaging, s"${manifestPath(outDir)}/$batch")
-    batch
+    stats
   }
 
   /** Manifest-only commit (marks urls done without writing output data —
@@ -96,7 +116,7 @@ object Checkpoint {
     val spark = done.sparkSession
     val batch = newBatchId()
     val manStaging = s"${manifestPath(outDir)}/.staging_$batch"
-    manifestRows(done, batch = "").write.parquet(manStaging)
+    manifestRows(done.toDF(), lit(null).cast("string"), batch = "").write.parquet(manStaging)
     publish(spark, manStaging, s"${manifestPath(outDir)}/$batch")
   }
 
@@ -348,14 +368,12 @@ object Checkpoint {
     * collapses (the replaced manifests are gone, so time travel spans only
     * commits after the last compaction — a filesystem sink without a
     * metadata log cannot keep rewritten lineage alive), and manifest
-    * `part_id` lineage is re-derived over the compacted layout (original
-    * extraction partition attribution does not survive). Manifest-only
-    * commits and the legacy flat layout are untouched. Returns the new
-    * batch id; None when < 2 data batches exist. */
+    * `file_name` lineage is re-derived over the compacted files.
+    * Manifest-only commits and the legacy flat layout are untouched.
+    * Returns the new batch id; None when < 2 data batches exist. */
   def compact(spark: SparkSession, outDir: String,
       targetFileBytes: Long = 128L << 20,
       lockStaleMs: Long = MaintenanceLockStaleMs): Option[String] = {
-    import spark.implicits._
     val mans = committedManifests(spark, outDir)
     val dataBatches = referencedBatches(spark, mans)
     if (dataBatches.size <= 1) return None
@@ -378,8 +396,7 @@ object Checkpoint {
       sized.write.format(tableFormat(spark)).save(dataStaging)
       // manifest rows re-derive from the compacted data: the url set equals
       // the union of the replaced batches' data by construction
-      manifestRows(spark.read.format(tableFormat(spark)).load(dataStaging)
-        .as[ExtractedDoc], batch).write.parquet(manStaging)
+      stagedManifestRows(spark, dataStaging, batch).write.parquet(manStaging)
       publish(spark, dataStaging, s"${dataPath(outDir)}/$batch") // step 2
       // commitWithData names each manifest dir after its one data batch, so
       // the replaced manifests are exactly those named by a compacted batch

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** spark-submit entry point for the extraction pipeline:
@@ -22,11 +22,14 @@ import org.apache.spark.sql.functions._
   *
   * Reads the input_hint page table (parquet path or Iceberg-style table
   * path), skips urls already present in `<outDir>/_manifest` (resume),
-  * salts against document-size skew, extracts, writes the output table and
-  * appends the per-partition checkpoint manifest, then prints a one-line
-  * metrics rollup. Designed so a killed run re-submitted with the same
-  * arguments continues mid-table (north_rule: resumable with per-partition
-  * lineage + metrics).
+  * salts against document-size skew, then extracts and writes the output
+  * table in one pass through [[Checkpoint.commitWithData]]: nothing is
+  * cached, the metrics rollup is observed during that data write, and the
+  * checkpoint manifest (url + data file lineage + metrics) is read back
+  * from the written files. It prints the rollup as one JSON line. A
+  * fully-resumed run commits nothing. Designed so a killed run
+  * re-submitted with the same arguments continues mid-table (north_rule:
+  * resumable with per-partition lineage + metrics).
   *
   * `--maintenance` skips extraction and instead runs the sink maintenance
   * pair on `<outDir>` — [[Checkpoint.compact]] (small-file rewrite, under
@@ -78,7 +81,7 @@ object Main {
     val partitions = opt("partitions").map(_.toInt)
       .getOrElse(spark.sparkContext.defaultParallelism * 2)
 
-    val t0 = System.nanoTime() // job time: resume + extract + metrics + commit
+    val t0 = System.nanoTime() // job time: resume + extract + commit
     val allPages = TableIO.readPages(spark, input)
     // incremental recrawl: shrink the work list to added+changed urls before
     // the (per-output) resume filter — the two compose: delta skips content
@@ -103,27 +106,18 @@ object Main {
       case None => allPages
     }
     val todo = if (resume) Checkpoint.resume(pages, outDir) else pages
-    val extracted = ExtractPipeline
-      .run(ExtractPipeline.salted(todo, partitions), delimiter)
-      .persist()
-
-    // one metrics job over the persisted batch; its docs count also gates
-    // the commit so a fully-resumed (empty) run commits nothing and idle
-    // re-submissions don't accumulate empty batch directories
-    val m = extracted.agg(
-      count(lit(1)).as("docs"),
-      coalesce(sum("n_chars"), lit(0L)).as("chars"),
-      coalesce(sum("decode_failures"), lit(0L)).as("decode_failures"),
-      coalesce(sum(when(col("kind") === "pdf", 1L).otherwise(0L)), lit(0L)).as("pdf_docs"))
-      .collect().head
-    // single atomic commit: data staged + renamed, then the manifest rename
-    // as the commit point — a crash at any moment leaves either nothing or
-    // an unmanifested (invisible, re-extracted) orphan, never duplicates
-    if (m.getLong(0) > 0) Checkpoint.commitWithData(extracted, outDir)
+    // single atomic, one-pass commit: extraction runs inside the observed
+    // data write, whose counts are the run metrics; data staged + renamed,
+    // then the manifest rename as the commit point — a crash at any moment
+    // leaves either nothing or an unmanifested (invisible, re-extracted)
+    // orphan, never duplicates. A fully-resumed (empty) run commits nothing,
+    // so idle re-submissions don't accumulate empty batch directories
+    val m = Checkpoint.commitWithData(
+      ExtractPipeline.run(ExtractPipeline.salted(todo, partitions), delimiter), outDir)
     deltaCached.foreach(_.unpersist())
     val wall = (System.nanoTime() - t0) / 1e9
-    println(s"""{"docs":${m.getLong(0)},"chars":${m.getLong(1)},""" +
-      s""""decode_failures":${m.getLong(2)},"pdf_docs":${m.getLong(3)},"resumed":$resume,""" +
+    println(s"""{"docs":${m.docs},"chars":${m.chars},""" +
+      s""""decode_failures":${m.decodeFailures},"pdf_docs":${m.pdfDocs},"resumed":$resume,""" +
       s""""wall_sec":${f"$wall%.2f"}}""")
     spark.stop()
   }

@@ -1,0 +1,79 @@
+package graft
+
+import java.io.{ByteArrayOutputStream, File, PrintStream}
+import java.nio.file.Files
+
+import graft.pipeline.{Checkpoint, Corpus, Main}
+import org.apache.spark.sql.SparkSession
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Runs the `Main` submit path in process, as `spark-submit` would: `Main`
+  * builds and stops its own session from the `spark.master` system
+  * property, so every other session is stopped first and each submit's
+  * stdout is captured. */
+class MainSpec extends AnyFunSuite {
+
+  private def stopSessions(): Unit =
+    (SparkSession.getActiveSession ++ SparkSession.getDefaultSession).foreach(_.stop())
+
+  private def withSession[A](body: SparkSession => A): A = {
+    stopSessions()
+    val s = SparkSession.builder().appName("graft-main-spec").master("local[2]").getOrCreate()
+    s.sparkContext.setLogLevel("ERROR")
+    try body(s) finally s.stop()
+  }
+
+  /** One `Main.main` call; returns its stdout. */
+  private def submit(args: String*): String = {
+    stopSessions()
+    val master = sys.props.get("spark.master")
+    System.setProperty("spark.master", "local[2]")
+    val buf = new ByteArrayOutputStream()
+    try Console.withOut(new PrintStream(buf, true, "UTF-8"))(Main.main(args.toArray))
+    finally master match {
+      case Some(m) => System.setProperty("spark.master", m)
+      case None    => System.clearProperty("spark.master")
+    }
+    buf.toString("UTF-8")
+  }
+
+  private def writePages(dir: String, texts: Seq[(Long, String)]): Unit = withSession { s =>
+    import s.implicits._
+    texts.map { case (id, t) => Corpus.pageRowFor(id, t, "en") }.toDS().write.parquet(dir)
+  }
+
+  test("Main: fresh submit commits every doc, re-submit commits nothing, --delta prints statuses") {
+    val dir = Files.createTempDirectory("graft_spec_main").toString
+    val texts = (0L until 12L).map(i => i -> s"main submit document $i words")
+    writePages(s"$dir/pages", texts)
+    val out = s"$dir/out"
+
+    val first = submit(s"$dir/pages", out)
+    assert(first.contains("\"docs\":12,"), first)
+    withSession { s =>
+      import s.implicits._
+      val got = Checkpoint.readExtracted(s, out).select("url", "text").as[(String, String)].collect()
+      val want = texts.map { case (id, t) =>
+        Corpus.UrlPrefix + id -> (if (id % 2 == 0) Corpus.pdfExpectedText(id, t) else t)
+      }
+      assert(got.sorted.toSeq == want.sorted)
+    }
+
+    // a fully-resumed re-submit publishes nothing: no empty batch, no
+    // leftover staging dir
+    def listing() = Seq("extracted", "_manifest").map(d => new File(s"$out/$d").list.toSeq.sorted)
+    val before = listing()
+    assert(before.forall(_.count(_.startsWith("batch_")) == 1), before)
+    val again = submit(s"$dir/pages", out)
+    assert(again.contains("\"docs\":0,"), again)
+    assert(listing() == before)
+
+    // next snapshot: ids 0-2 changed, 3-5 removed, 6-11 unchanged, 12-14 added
+    val next = texts.drop(6) ++ (0L until 3L).map(i => i -> s"changed document $i words") ++
+      (12L until 15L).map(i => i -> s"added document $i words")
+    writePages(s"$dir/next", next)
+    val delta = submit(s"$dir/next", s"$dir/delta_out", "--delta", s"$dir/pages")
+    assert(delta.contains(""""statuses":{"added":3,"changed":3,"removed":3,"unchanged":6}"""), delta)
+    assert(delta.contains("\"docs\":6,"), delta)
+  }
+}

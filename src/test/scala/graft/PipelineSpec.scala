@@ -147,6 +147,32 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Checkpoint.readExtracted(spark, outDir).count() == 10,
       "vacuum must not touch referenced batches")
     assert(Checkpoint.vacuum(spark, outDir, graceMs = -1000L).isEmpty)
+    // each batch's manifest is read back from its data: the same url set,
+    // and every manifest row names the data file that holds it
+    def batchDirs(root: String) = new java.io.File(root).listFiles
+      .filter(_.getName.startsWith("batch_")).map(_.getName).sorted.toSeq
+    val batches = batchDirs(Checkpoint.manifestPath(outDir))
+    assert(batches.size == 2 && batchDirs(Checkpoint.dataPath(outDir)) == batches)
+    batches.foreach { b =>
+      val man = spark.read.parquet(s"${Checkpoint.manifestPath(outDir)}/$b")
+        .select("url", "file_name").as[(String, String)].collect().toSet
+      val data = spark.read.parquet(s"${Checkpoint.dataPath(outDir)}/$b")
+        .select(col("url"), col("_metadata.file_name")).as[(String, String)].collect().toSet
+      assert(man == data, s"manifest of $b differs from its data")
+    }
+    // an empty commit returns 0 docs without waiting forever for its
+    // observation, and leaves no batch and no staging dir behind
+    def listing() = Seq(Checkpoint.dataPath(outDir), Checkpoint.manifestPath(outDir))
+      .map(d => new java.io.File(d).list.toSeq.sorted)
+    val before = listing()
+    Seq(spark.emptyDataset[graft.pipeline.ExtractedDoc], ExtractPipeline.run(pages.where(docId < 0)))
+      .foreach { empty =>
+        import scala.concurrent.{Await, Future}, scala.concurrent.duration._
+        import scala.concurrent.ExecutionContext.Implicits.global
+        val stats = Await.result(Future(Checkpoint.commitWithData(empty, outDir)), 2.minutes)
+        assert(stats == Checkpoint.CommitStats(0, 0, 0, 0))
+        assert(listing() == before, "an empty commit must publish nothing")
+      }
   }
 
   test("compact: content identical, one data batch remains, resume stays empty, manifest-only kept") {
