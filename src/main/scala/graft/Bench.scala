@@ -213,7 +213,6 @@ object Bench {
     val docsDf = spark.read.parquet(s"$sfDir/documents.parquet")
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id").as("id"), col("embedding"))
-    val eventsDf = spark.read.parquet(s"$sfDir/events.parquet")
     val queryThunks: Seq[(String, () => Unit)] = Seq(
       "extract_pipeline" -> (() => runExtract(pages)),
       "extract_salted" -> (() => {
@@ -250,11 +249,9 @@ object Bench {
         Dedup.ngramOverlapContamination(docsDf, "doc_id", "text", "source").count()
         // release this thunk's index caches before the next queries are
         // timed (the old sequential bench cleared here too) — otherwise the
-        // persisted tables sit in block storage while events/extract run
+        // persisted tables sit in block storage while later queries run
         Dedup.clearCaches()
       }),
-      "events_hourly" -> (() => { graft.streaming.Events.hourlyByType(eventsDf).count(); () }),
-      "events_sessions" -> (() => { graft.streaming.Events.userSessions(eventsDf).count(); () }),
       // late-round operators, added to the timed tier in round 5 so their
       // cost is tracked round-over-round (same operator shapes as the
       // correctness gate, minus the gate's presentation orderBy)
@@ -281,12 +278,6 @@ object Bench {
           .agg(count(lit(1)), sum("n_emails"), sum("n_ips"), sum("n_phones"))
           .collect(); ()
       }),
-      "events_asof" -> (() => {
-        graft.streaming.Events.asofJoin(
-          eventsDf.where(col("event_type") === "purchase"),
-          eventsDf.where(col("event_type") === "view"),
-          "user_id", "ts", "event_id").count(); ()
-      }),
       "mix_token_budget" -> (() => {
         graft.functions.Sampling.mixByTokenBudget(
           docsDf, "lang", "doc_id", "text", budget = 2000L).count(); ()
@@ -299,14 +290,6 @@ object Bench {
       "lm_score" -> (() => {
         TextStats.lmScore(docsDf, "doc_id", "text").count()
         Dedup.clearCaches() // the bigram cache must not linger into later timings
-      }),
-      "link_pagerank" -> (() => {
-        val withN = docsDf.select("doc_id")
-          .crossJoin(docsDf.agg(count(lit(1)).as("n")))
-        val edges = withN.selectExpr("doc_id AS src", "(doc_id*31+7) % n AS dst")
-          .unionByName(withN.selectExpr("doc_id AS src", "(doc_id*17+3) % n AS dst"))
-          .unionByName(withN.selectExpr("doc_id AS src", "(doc_id+1) % n AS dst"))
-        graft.graph.PageRank.run(edges, "src", "dst", iterations = 8).count(); ()
       }),
       "warc_parse" -> (() => {
         import spark.implicits._

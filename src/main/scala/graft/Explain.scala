@@ -39,8 +39,6 @@ object Explain {
         |  + single driver merge of k rows), NOT a global sort
         |- packing: ONE hash exchange on the stream key + in-partition sort +
         |  MapPartitions — the whole greedy recurrence costs one shuffle
-        |- as-of join: ONE hash exchange + in-partition sort + MapPartitions;
-        |  no SortMergeJoin/BNLJ carrying `l.ts >= r.ts` anywhere
         |- blocklist: both joins BroadcastHashJoin (semi + anti); the page
         |  table is never exchanged
         |- pii: the whole redaction chain is one codegen'd Project fused over
@@ -51,8 +49,6 @@ object Explain {
         |  concentrates on one reducer
         |- lm_score: the narrow bigram table is ONE InMemoryTableScan reused
         |  by both count aggs and the score join; both counts partial-combine
-        |- pagerank round: the per-round contribution sum partial-aggregates
-        |  before its single exchange on v
         |""".stripMargin)
     def dump(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
       sb.append(s"\n## $name\n\n```\n")
@@ -95,16 +91,8 @@ object Explain {
     dump("extract_metrics_only (narrow row out of the map; ReadSchema still url/html/lang)",
       ExtractPipeline.runMetrics(pagesTable).groupBy("kind")
         .agg(count(lit(1)), sum("n_chars")))
-    dump("dedup_minhash_stream_parity (streaming banding in batch + capped candidate join + exact verify)",
-      graft.streaming.StreamMinhash.batchParityPairs(docs, "doc_id", "text"))
     dump("pack_sequences (one exchange on stream + sort + MapPartitions)",
       graft.pipeline.Packing.packSequences(docs, "doc_id", "text"))
-    dump("events_asof (one exchange + sort + merge-scan MapPartitions, no range join)", {
-      val ev = spark.read.parquet(s"$sfDir/events.parquet")
-      graft.streaming.Events.asofJoin(
-        ev.where(col("event_type") === "purchase"),
-        ev.where(col("event_type") === "view"), "user_id", "ts", "event_id")
-    })
     dump("url_block_domains (broadcast semi + broadcast anti; corpus never exchanged)", {
       import spark.implicits._
       val pages = docs.select(col("doc_id"),
@@ -132,14 +120,6 @@ object Explain {
       Dedup.dedupLinesAcrossCorpus(docs, "doc_id", "text"))
     dump("lm_score (bigram table persisted once -> InMemoryTableScan x3; counts map-side combined; vocab 1-row broadcast)",
       graft.functions.TextStats.lmScore(docs, "doc_id", "text"))
-    dump("link_pagerank round (contribution sum partial-aggregated before its ONE exchange on v)", {
-      val e = docs.selectExpr("doc_id AS src", "(doc_id*31+7) % 500 AS dst")
-      val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      val ranks = docs.selectExpr("doc_id AS v", "CAST(1000000 AS BIGINT) AS r")
-      e.join(deg, "src").join(ranks.withColumnRenamed("v", "src"), "src")
-        .select(col("dst").as("v"), expr("r DIV outdeg").as("c"))
-        .groupBy("v").agg(sum("c").as("s"))
-    })
     Dedup.clearCaches()
     dump("mix_token_budget (tiny bucket aggregate prefix-summed; one crossing key per group windows)",
       graft.functions.Sampling.mixByTokenBudget(docs, "lang", "doc_id", "text", 2000L))

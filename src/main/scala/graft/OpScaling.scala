@@ -72,19 +72,11 @@ object OpScaling {
         { Sampling.mixByTokenBudget(df, "lang", "doc_id", "text", budget = 2000L).count(); () }),
       // round-5 second-half operators with the same risk shapes: identical
       // replicas maximise cross-replica line/bigram duplication (corpus-line
-      // winner and bigram-count tables carry the worst-case hot keys), and
-      // the PageRank edge fan grows linearly with the corpus
+      // winner and bigram-count tables carry the worst-case hot keys)
       "dedup_corpus_lines" -> (df =>
         { Dedup.dedupLinesAcrossCorpus(df, "doc_id", "text").count(); () }),
       "lm_score" -> (df =>
         { TextStats.lmScore(df, "doc_id", "text").count(); () }),
-      "link_pagerank" -> (df => {
-        val withN = df.select("doc_id").crossJoin(df.agg(count(lit(1)).as("n")))
-        val edges = withN.selectExpr("doc_id AS src", "(doc_id*31+7) % n AS dst")
-          .unionByName(withN.selectExpr("doc_id AS src", "(doc_id*17+3) % n AS dst"))
-          .unionByName(withN.selectExpr("doc_id AS src", "(doc_id+1) % n AS dst"))
-        graft.graph.PageRank.run(edges, "src", "dst", iterations = 8).count(); ()
-      }),
       // identical replicas concentrate the probe's shared hub targets:
       // replica-many in-links land on the SAME (dst, anchor) keys, the
       // worst case for the profile's first agg — map-side combine must

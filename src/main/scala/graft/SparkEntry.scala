@@ -3,9 +3,7 @@ package graft
 import graft.ann.Ann
 import graft.dedup.Dedup
 import graft.functions.TextStats
-import graft.multimodal.Multimodal
 import graft.pipeline.{Checkpoint, Corpus, ExtractPipeline}
-import graft.streaming.Events
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -231,13 +229,6 @@ object SparkEntry {
     "dedup_minhash_lsh" -> ((s, dir) =>
       Dedup.minhashDedupPairs(docs(s, dir), "doc_id", "text", k = 3, threshold = 0.8)
         .orderBy("id_a", "id_b")),
-    "dedup_minhash_stream_parity" -> ((s, dir) =>
-      // the STREAMING banding transform (StreamMinhash.bandedStream) run in
-      // batch + exact verify: driver-gate evidence for the streaming code
-      // path — same banding fold a readStream pipeline executes, same
-      // exact-Jaccard oracle as dedup_minhash_lsh
-      graft.streaming.StreamMinhash.batchParityPairs(docs(s, dir), "doc_id", "text")
-        .orderBy("id_a", "id_b")),
     "dedup_clusters" -> ((s, dir) =>
       Dedup.connectedComponents(
           Dedup.ngramJaccardPairs(docs(s, dir), "doc_id", "text", k = 3, threshold = 0.8))
@@ -318,21 +309,6 @@ object SparkEntry {
       graft.functions.Chunking.chunkWindows(
         docs(s, dir), "doc_id", "text", windowTokens = 40, overlapTokens = 10)
         .orderBy("doc_id", "chunk_idx")),
-    "pack_sequences_stream_parity" -> ((s, dir) => {
-      // the STREAMING packing transform (stateful flatMapGroupsWithState)
-      // run in batch: must reproduce packSequences row-for-row against the
-      // identical recursive-CTE oracle
-      import s.implicits._
-      val typed = docs(s, dir)
-        .where(col("doc_id").isNotNull)
-        .select((col("doc_id") % 16).as("stream"), col("doc_id"),
-          graft.functions.TextStats.wsTokens(coalesce(col("text"), lit("")))
-            .as("n_tokens"))
-        .as[graft.streaming.PackEvent]
-      graft.streaming.StreamPacking.packStream(typed)
-        .toDF("doc_id", "stream", "bin", "n_tokens")
-        .orderBy("doc_id")
-    }),
     "pack_bins" -> ((s, dir) =>
       // trainer-ready assembly: completed bins emitted from the SAME
       // single sorted pass (no second shuffle); fingerprint the packed
@@ -842,23 +818,6 @@ object SparkEntry {
         }.toDF("doc_id", "ord", "href")
         .orderBy("doc_id", "ord")
     }),
-    "link_pagerank" -> ((s, dir) => {
-      // link-graph quality prior: EXACT INTEGER PageRank (8 rounds, d=85,
-      // scale 10^12 — floor-div recurrence, so the distributed sum is
-      // bit-reproducible on any partitioning and the oracle can restate
-      // the fixpoint exactly) over a synthetic functional graph whose
-      // three out-edges per doc are closed forms of doc_id mod N; N rides
-      // a 1-row broadcast cross join, never a driver-side count
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-      val withN = docs.select("doc_id")
-        .crossJoin(docs.agg(count(lit(1)).as("n")))
-      val edges = withN.selectExpr("doc_id AS src", "(doc_id*31+7) % n AS dst")
-        .unionByName(withN.selectExpr("doc_id AS src", "(doc_id*17+3) % n AS dst"))
-        .unionByName(withN.selectExpr("doc_id AS src", "(doc_id+1) % n AS dst"))
-      graft.graph.PageRank.run(edges, "src", "dst", iterations = 8)
-        .withColumnRenamed("v", "doc_id")
-        .orderBy("doc_id")
-    }),
     "html_meta" -> ((s, dir) => {
       // head-metadata extraction (ADDITIVE surface): canonical link (the
       // strongest dedup key a page can carry), meta/og descriptions, and
@@ -1244,149 +1203,6 @@ object SparkEntry {
         .where(col("rn") <= 5)
         .select(col("lang"), col("bigram"), col("n"))
         .orderBy("lang", "bigram")
-    }),
-    // ------------------------------------------------------------ multimodal
-    "multimodal_meta" -> ((s, dir) =>
-      Multimodal.extractMeta(Multimodal.mediaTable(s, dir)).toDF()
-        .orderBy("doc_id")),
-    "multimodal_frames" -> ((s, dir) =>
-      // frame-sample + resize plumbing: video rows fan out to every-4th
-      // frame with a deterministic frame fingerprint and 224-target resize
-      Multimodal.sampleFrames(Multimodal.mediaTable(s, dir)).toDF()
-        .orderBy("doc_id", "frame_idx")),
-    "multimodal_real_decode" -> ((s, dir) => {
-      // REAL media decoding, no codec libraries (RealMedia): even ids carry
-      // a genuine 24bpp BMP (nonzero row padding — a stride bug corrupts
-      // the channel sum), odd ids a PCM16 WAV (odd-sized junk LIST chunk —
-      // the word-aligned chunk walk is gate-visible); dimensions, rate,
-      // sample count and the pixel/sample-level feature are all closed
-      // forms the oracle recomputes from the generation arms
-      import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id").as[Long]
-        .map { id =>
-          val payload = if (id % 2 == 0) Corpus.bmpForDoc(id) else Corpus.wavForDoc(id)
-          val d = graft.multimodal.RealMedia.decode(payload)
-            .getOrElse(sys.error(s"doc $id: payload failed to decode"))
-          (id, d.container, d.width, d.height, d.sampleRate, d.nSamples, d.feature)
-        }
-        .toDF("doc_id", "container", "width", "height", "sample_rate",
-          "n_samples", "feature")
-        .orderBy("doc_id")
-    }),
-    "multimodal_real_png_gif" -> ((s, dir) => {
-      // REAL compressed-image decoding, no codec libraries (RealMedia):
-      // even ids carry a genuine zlib-deflated PNG whose rows cycle through
-      // ALL FIVE filter types (a wrong unfilter arm corrupts the green
-      // sum), odd ids a GIF89a with real variable-width LZW (wrong code
-      // width / table growth / KwKwK corrupts the palette-red sum); both
-      // features are closed forms the oracle recomputes from the
-      // generation arms — the decoders must invert deflate+filtering and
-      // LZW exactly to reproduce them
-      import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id").as[Long]
-        .map { id =>
-          val payload = if (id % 2 == 0) Corpus.pngForDoc(id) else Corpus.gifForDoc(id)
-          val d = graft.multimodal.RealMedia.decode(payload)
-            .getOrElse(sys.error(s"doc $id: payload failed to decode"))
-          (id, d.container, d.width, d.height, d.feature)
-        }
-        .toDF("doc_id", "container", "width", "height", "feature")
-        .orderBy("doc_id")
-    }),
-    "multimodal_real_mp4" -> ((s, dir) => {
-      // REAL ISO-BMFF container parsing (RealMedia.decodeMp4): box walk
-      // with 32/64-bit size forms, a decoy audio track routed away by
-      // hdlr, tkhd 16.16 dims, mvhd timescale/duration, stts frame count —
-      // all closed forms the oracle recomputes; duration_ms is the
-      // decoder's integer division, floor-divided identically in SQL
-      import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id").as[Long]
-        .map { id =>
-          val d = graft.multimodal.RealMedia.decode(Corpus.mp4ForDoc(id))
-            .getOrElse(sys.error(s"doc $id: mp4 failed to decode"))
-          (id, d.width, d.height, d.sampleRate, d.nSamples, d.feature)
-        }
-        .toDF("doc_id", "width", "height", "timescale", "n_frames", "duration_ms")
-        .orderBy("doc_id")
-    }),
-    "multimodal_real_jpeg" -> ((s, dir) => {
-      // REAL baseline JPEG decoding (multimodal/Jpeg): marker walk, DHT
-      // canonical Huffman, DQT dequant, MSB-first entropy decode with
-      // 0xFF00 unstuffing, IDCT. Fixtures are per-8x8-block-constant
-      // images (DCT round-trips constants bit-exactly), so the oracle
-      // recomputes the decoded luma sum in closed form while the decoder
-      // must run the full entropy+IDCT pipeline to produce it
-      import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id").as[Long]
-        .map { id =>
-          val d = graft.multimodal.RealMedia.decode(Corpus.jpegForDoc(id))
-            .getOrElse(sys.error(s"doc $id: jpeg failed to decode"))
-          (id, d.width, d.height, d.feature)
-        }
-        .toDF("doc_id", "width", "height", "luma_sum")
-        .orderBy("doc_id")
-    }),
-    "multimodal_real_mp3" -> ((s, dir) => {
-      // REAL MPEG-1 Layer III frame-header walk (RealMedia.decodeMp3):
-      // syncsafe ID3v2 skip, sync word + version/layer fields, bitrate and
-      // sample-rate tables, padding-bit frame-length arithmetic — frame
-      // count and duration are closed forms the oracle recomputes; a
-      // decoder that miscomputes any frame length desyncs and errors
-      import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id").as[Long]
-        .map { id =>
-          val d = graft.multimodal.RealMedia.decode(Corpus.mp3ForDoc(id))
-            .getOrElse(sys.error(s"doc $id: mp3 failed to decode"))
-          (id, d.sampleRate, d.nSamples, d.feature)
-        }
-        .toDF("doc_id", "sample_rate", "n_samples", "duration_ms")
-        .orderBy("doc_id")
-    }),
-    // --------------------------------------------------------------- events
-    "events_hourly" -> ((s, dir) =>
-      Events.hourlyByType(s.read.parquet(s"$dir/events.parquet"))
-        .orderBy("window_start", "event_type")),
-    "events_sessions" -> ((s, dir) =>
-      Events.userSessions(s.read.parquet(s"$dir/events.parquet"))
-        .orderBy("user_id", "session_start")),
-    "events_asof" -> ((s, dir) => {
-      // as-of join: each purchase matched to the user's latest view at or
-      // before it (merge-scan shape; see Events.asofJoin scaladoc)
-      val ev = s.read.parquet(s"$dir/events.parquet")
-      Events.asofJoin(
-          ev.where(col("event_type") === "purchase"),
-          ev.where(col("event_type") === "view"),
-          "user_id", "ts", "event_id")
-        .select(col("user_id"), col("left_id").as("purchase_id"),
-          col("ts").as("purchase_ts"), col("asof_id").as("view_id"),
-          col("asof_ts").as("view_ts"))
-        .orderBy("purchase_id")
-    }),
-    "events_asof_stream_parity" -> ((s, dir) => {
-      // the STREAMING as-of transform (stateful flatMapGroupsWithState)
-      // run in batch: must reproduce Events.asofJoin row-for-row against
-      // the identical oracle — gate evidence for the streaming code path
-      import s.implicits._
-      val ev = s.read.parquet(s"$dir/events.parquet")
-      // StreamAsof's precondition: apply the batch null contract BEFORE
-      // typing (null rows would kill the primitive encoder, not mismatch);
-      // null-key/ts left rows would route around the join — the corpus has
-      // none, so the passthrough union is omitted here
-      val typed = ev.where(col("event_type").isin("view", "purchase") &&
-          col("user_id").isNotNull && col("ts").isNotNull &&
-          col("event_id").isNotNull)
-        .select(col("user_id").as("k"), col("ts"),
-          col("event_id").as("id"),
-          when(col("event_type") === "view", 0).otherwise(1).as("side"))
-        .as[graft.streaming.AsofEvent]
-      graft.streaming.StreamAsof.asofStream(typed)
-        .toDF("user_id", "purchase_id", "purchase_ts", "view_id", "view_ts")
-        .orderBy("purchase_id")
     })
   )
 
@@ -1425,28 +1241,6 @@ object SparkEntry {
                   CASE WHEN p.filled + d.n_tokens > 2048 AND p.filled > 0
                        THEN d.n_tokens ELSE p.filled + d.n_tokens END AS filled
            FROM d JOIN p ON d.stream = p.stream AND d.rn = p.rn + 1)"""
-
-  /** As-of join as the explicit ordered scan it is (union both tagged
-    * sides, carry the last view forward per user; `side` orders a view at
-    * the same ts BEFORE the purchase — ≤ semantics — and id breaks ts
-    * ties). One copy oracles BOTH the batch merge scan and the streaming
-    * state machine (`events_asof` / `events_asof_stream_parity`). */
-  private val asofOracleSql: String =
-    """WITH u AS (
-           SELECT user_id, ts, event_id, 0 AS side FROM events WHERE event_type = 'view'
-           UNION ALL
-           SELECT user_id, ts, event_id, 1 AS side FROM events WHERE event_type = 'purchase'),
-         w AS (
-           SELECT user_id, ts, event_id, side,
-             last_value(CASE WHEN side = 0 THEN event_id END IGNORE NULLS)
-               OVER (PARTITION BY user_id ORDER BY ts, side, event_id
-                     ROWS UNBOUNDED PRECEDING) AS view_id,
-             last_value(CASE WHEN side = 0 THEN ts END IGNORE NULLS)
-               OVER (PARTITION BY user_id ORDER BY ts, side, event_id
-                     ROWS UNBOUNDED PRECEDING) AS view_ts
-           FROM u)
-         SELECT user_id, event_id AS purchase_id, ts AS purchase_ts, view_id, view_ts
-         FROM w WHERE side = 1 ORDER BY purchase_id"""
 
   private val pdfExpectedSql: String =
     """CASE
@@ -1613,7 +1407,6 @@ object SparkEntry {
          FROM corpus GROUP BY 1 ORDER BY fp""",
     "dedup_ngram_jaccard" -> exactJaccardSql,
     "dedup_minhash_lsh" -> exactJaccardSql,
-    "dedup_minhash_stream_parity" -> exactJaccardSql,
     "dedup_clusters" ->
       """WITH RECURSIVE docs AS (SELECT doc_id, string_split(trim(text), ' ') AS ws FROM documents),
          sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS sh
@@ -1672,10 +1465,6 @@ object SparkEntry {
            CAST(least(40, n - i * 30) AS BIGINT) AS n_tokens,
            array_to_string(w[i * 30 + 1 : i * 30 + 40], ' ') AS chunk
          FROM c ORDER BY doc_id, chunk_idx""",
-    "pack_sequences_stream_parity" ->
-      (packRecurrenceCte +
-      """
-         SELECT doc_id, stream, bin, n_tokens FROM p ORDER BY doc_id"""),
     "pack_bins" ->
       (packRecurrenceCte +
       """
@@ -1877,14 +1666,6 @@ object SparkEntry {
            AND len(list_filter(string_split(trim(text), ' '),
                  w -> w IN ('the','a','an','of','and','to','in','is','it','that'))) >= 1
          ORDER BY doc_id""",
-    "events_sessions" ->
-      """WITH o AS (SELECT user_id, ts, lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS pts FROM events),
-         b AS (SELECT user_id, ts, CASE WHEN pts IS NULL OR ts - pts >= INTERVAL 5 MINUTE THEN 1 ELSE 0 END AS brk FROM o),
-         s AS (SELECT user_id, ts, sum(brk) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sid FROM b)
-         SELECT user_id, min(ts) AS session_start, count(*) AS n_events
-         FROM s GROUP BY user_id, sid ORDER BY user_id, session_start""",
-    "events_asof" -> asofOracleSql,
-    "events_asof_stream_parity" -> asofOracleSql,
     "text_gopher" ->
       """WITH aug AS (
            SELECT doc_id, text ||
@@ -2192,30 +1973,6 @@ object SparkEntry {
                 CAST(len(string_split(d.input, chr(10))) AS BIGINT) AS n_lines,
                 coalesce(g.n_kept, 0) AS n_kept
          FROM d LEFT JOIN g USING (doc_id) ORDER BY doc_id""",
-    // independent restatement of the integer fixpoint: the same
-    // floor-div recurrence unrolled as 8 chained CTEs (DuckDB SUM(BIGINT)
-    // widens to HUGEINT — exact — so only the final rank needs the cast)
-    "link_pagerank" -> {
-      val scale = "1000000000000"
-      val rounds = (1 to 8).map { t =>
-        s"""c$t AS (SELECT e.dst AS v, SUM(r${t - 1}.r // e.outdeg) AS s
-           |       FROM e JOIN r${t - 1} ON r${t - 1}.v = e.src GROUP BY e.dst),
-           |r$t AS (SELECT nodes.v,
-           |       (SELECT ($scale * 15) // 100 // n FROM nn)
-           |         + (85 * COALESCE(c$t.s, 0)) // 100 AS r
-           |       FROM nodes LEFT JOIN c$t USING (v))""".stripMargin
-      }.mkString(",\n")
-      s"""WITH nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-         |nodes AS (SELECT doc_id AS v FROM documents),
-         |e0 AS (SELECT doc_id AS src, (doc_id*31+7) % (SELECT n FROM nn) AS dst FROM documents
-         |       UNION SELECT doc_id, (doc_id*17+3) % (SELECT n FROM nn) FROM documents
-         |       UNION SELECT doc_id, (doc_id+1) % (SELECT n FROM nn) FROM documents),
-         |deg AS (SELECT src, count(*) AS outdeg FROM e0 GROUP BY src),
-         |e AS (SELECT e0.src, e0.dst, deg.outdeg FROM e0 JOIN deg USING (src)),
-         |r0 AS (SELECT v, (SELECT $scale // n FROM nn) AS r FROM nodes),
-         |$rounds
-         |SELECT v AS doc_id, CAST(r AS BIGINT) AS rank FROM r8 ORDER BY doc_id""".stripMargin
-    },
     // Corpus.htmlLinksProbe resolved URLs restated as closed forms of
     // (doc_id, length(text)); the CASE arms are the <base>-rebased odd ids
     // Corpus.htmlAnchorProbe edges: hrefs and anchor strings are closed
@@ -2529,115 +2286,6 @@ object SparkEntry {
          r AS (SELECT lang, bigram, n,
                  row_number() OVER (PARTITION BY lang ORDER BY n DESC, bigram) AS rn FROM cnt)
          SELECT lang, bigram, n FROM r WHERE rn <= 5 ORDER BY lang, bigram""",
-    // n = UTF-8 BYTE length of the payload (the Scala path derives every
-    // field from payload.length) — octet_length(encode(..)), matching the
-    // multimodal_frames oracle; length(text) counts CHARACTERS and diverges
-    // on any non-ASCII doc
-    "multimodal_meta" ->
-      """WITH v AS (SELECT doc_id, text, octet_length(encode(text)) AS n FROM documents)
-         SELECT doc_id,
-         CASE WHEN doc_id % 3 = 0 THEN 'image' WHEN doc_id % 3 = 1 THEN 'audio' ELSE 'video' END AS media_kind,
-         CAST(n AS BIGINT) AS n_bytes,
-         CAST(CASE WHEN doc_id % 3 = 1 THEN 0 ELSE 64 + n % 512 END AS BIGINT) AS width,
-         CAST(CASE WHEN doc_id % 3 = 1 THEN 0 ELSE 64 + (n * 7) % 512 END AS BIGINT) AS height,
-         CAST(CASE WHEN doc_id % 3 = 0 THEN 1 WHEN doc_id % 3 = 1 THEN 0 ELSE 1 + n % 24 END AS BIGINT) AS frames,
-         CAST(CASE WHEN doc_id % 3 = 1 THEN 8000 + (n % 5) * 8000 ELSE 0 END AS BIGINT) AS sample_rate,
-         md5(text) AS checksum
-         FROM v ORDER BY doc_id""",
-    // RealMedia closed forms: BMP channel sum over (x,y) as ONE
-    // comprehension (x = i % w, y = i // w), WAV peak = max |sample|
-    "multimodal_real_decode" ->
-      """WITH d AS (SELECT doc_id, 3 + doc_id % 5 AS w, 2 + doc_id % 3 AS h
-                    FROM documents)
-         SELECT doc_id,
-           CASE WHEN doc_id % 2 = 0 THEN 'bmp' ELSE 'wav' END AS container,
-           CAST(CASE WHEN doc_id % 2 = 0 THEN w ELSE 0 END AS BIGINT) AS width,
-           CAST(CASE WHEN doc_id % 2 = 0 THEN h ELSE 0 END AS BIGINT) AS height,
-           CAST(CASE WHEN doc_id % 2 = 0 THEN 0
-                     ELSE 8000 * (1 + doc_id % 3) END AS BIGINT) AS sample_rate,
-           CAST(CASE WHEN doc_id % 2 = 0 THEN 0
-                     ELSE 50 + doc_id % 20 END AS BIGINT) AS n_samples,
-           CAST(CASE WHEN doc_id % 2 = 0
-                THEN list_sum([((i % w) * 7 + (i // w) * 13 + doc_id) % 256
-                               for i in generate_series(0, w * h - 1)])
-                ELSE list_max([abs(((i * 31 + doc_id) % 2001) - 1000)
-                               for i in generate_series(0, 50 + doc_id % 20 - 1)])
-                END AS BIGINT) AS feature
-         FROM d ORDER BY doc_id""",
-    // RealMedia PNG/GIF closed forms: the decoders must invert zlib+all-5-
-    // filters (PNG green sum) and variable-width LZW (GIF palette-red sum)
-    // exactly to reproduce these comprehensions
-    "multimodal_real_png_gif" ->
-      """WITH d AS (SELECT doc_id, 3 + doc_id % 5 AS w, 5 + doc_id % 3 AS h
-                    FROM documents)
-         SELECT doc_id,
-           CASE WHEN doc_id % 2 = 0 THEN 'png' ELSE 'gif' END AS container,
-           CAST(w AS BIGINT) AS width,
-           CAST(h AS BIGINT) AS height,
-           CAST(CASE WHEN doc_id % 2 = 0
-                THEN list_sum([((i % w) * 11 + (i // w) * 3 + 2 * doc_id) % 256
-                               for i in generate_series(0, w * h - 1)])
-                ELSE list_sum([((((i % w) * 5 + (i // w) * 7 + doc_id) % 256) * 3
-                                + doc_id) % 256
-                               for i in generate_series(0, w * h - 1)])
-                END AS BIGINT) AS feature
-         FROM d ORDER BY doc_id""",
-    // RealMedia MP4 closed forms (generator arms in Corpus.mp4ForDoc)
-    "multimodal_real_mp4" ->
-      """SELECT doc_id,
-           CAST(160 + 16 * (doc_id % 8) AS BIGINT) AS width,
-           CAST(96 + 16 * (doc_id % 5) AS BIGINT) AS height,
-           CAST(1000 * (1 + doc_id % 3) AS BIGINT) AS timescale,
-           CAST(1 + doc_id % 24 AS BIGINT) AS n_frames,
-           CAST((4000 + (doc_id * 7) % 9000) // (1 + doc_id % 3) AS BIGINT)
-             AS duration_ms
-         FROM documents ORDER BY doc_id""",
-    // Jpeg closed forms: per-block-constant luma, 64 px per 8x8 block
-    "multimodal_real_jpeg" ->
-      """WITH d AS (SELECT doc_id, 2 + doc_id % 3 AS bw, 1 + doc_id % 2 AS bh
-                    FROM documents)
-         SELECT doc_id,
-           CAST(8 * bw AS BIGINT) AS width,
-           CAST(8 * bh AS BIGINT) AS height,
-           CAST(list_sum([64 * (((i % bw) * 29 + (i // bw) * 31 + doc_id) % 256)
-                          for i in generate_series(0, bw * bh - 1)]) AS BIGINT)
-             AS luma_sum
-         FROM d ORDER BY doc_id""",
-    // RealMedia MP3 closed forms (generator arms in Corpus.mp3ForDoc):
-    // 1152 samples per MPEG-1 Layer III frame
-    "multimodal_real_mp3" ->
-      """WITH d AS (SELECT doc_id, 20 + doc_id % 30 AS frames,
-                    CASE doc_id % 3 WHEN 0 THEN 44100 WHEN 1 THEN 48000
-                                    ELSE 32000 END AS rate
-                    FROM documents)
-         SELECT doc_id,
-           CAST(rate AS BIGINT) AS sample_rate,
-           CAST(frames * 1152 AS BIGINT) AS n_samples,
-           CAST((frames * 1152 * 1000) // rate AS BIGINT) AS duration_ms
-         FROM d ORDER BY doc_id""",
-    // stub decoder arithmetic mirrored exactly: payload = UTF-8 of text,
-    // video kind = doc_id%3==2, frames = 1 + n%24, w/h from n, resize to
-    // min(w,224) with integer floor division; frame fp = md5 of
-    // payload ++ ':' ++ idx (same bytes both engines)
-    "multimodal_frames" ->
-      """WITH v AS (SELECT doc_id, text, octet_length(encode(text)) AS n
-           FROM documents WHERE doc_id % 3 = 2),
-         m AS (SELECT doc_id, text,
-             64 + n % 512 AS w, 64 + (n * 7) % 512 AS h, 1 + n % 24 AS frames
-           FROM v),
-         f AS (SELECT doc_id, text, w, h,
-             unnest(generate_series(0, CAST(frames - 1 AS BIGINT), 4)) AS frame_idx
-           FROM m)
-         SELECT doc_id, CAST(frame_idx AS BIGINT) AS frame_idx,
-           md5(text || ':' || CAST(frame_idx AS VARCHAR)) AS frame_fp,
-           CAST(least(w, 224) AS BIGINT) AS out_w,
-           CAST((h * least(w, 224)) // w AS BIGINT) AS out_h
-         FROM f ORDER BY doc_id, frame_idx""",
-    "events_hourly" ->
-      """SELECT date_trunc('hour', ts) AS window_start, event_type,
-         count(*) AS n_events,
-         CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS value_cents
-         FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""",
     // SimHash restricted to normalized-exact-duplicate pairs (see the query
     // comment): banding surfaces every Hamming≤3 pair, equal CASE-SENSITIVE
     // normalized text gives Hamming 0, so the restricted output =

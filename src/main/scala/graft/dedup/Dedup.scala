@@ -317,9 +317,7 @@ object Dedup {
   }
 
   /** Band key of signature rows [b*RowsPerBand, (b+1)*RowsPerBand): the ONE
-    * definition of the banding fold — the batch path and the streaming path
-    * ([[graft.streaming.StreamMinhash]]) must bucket identically or the
-    * streamed candidate set silently desyncs from the batch one. */
+    * definition of the banding fold. */
   def bandKey(sig: Array[Long], b: Int): Long = {
     var h = 1125899906842597L
     var j = b * RowsPerBand
@@ -394,19 +392,17 @@ object Dedup {
   final val MaxSetSize = 100000
 
   /** The exact-Jaccard verification stage over an arbitrary candidate-pair
-    * set `(id_a, id_b)` — shared by [[minhashDedupPairs]] and the streaming
-    * banding's batch-parity gate query
-    * (`StreamMinhash.batchParityPairs`). Uses the SAME hot-shingle cap as
-    * [[ngramJaccardPairs]] so all paths agree on the (stop-shingle-free)
-    * Jaccard value. Docs whose shingle set exceeds `maxSetSize` take the
+    * set `(id_a, id_b)` — the second stage of [[minhashDedupPairs]]. Uses
+    * the SAME hot-shingle cap as [[ngramJaccardPairs]] so all paths agree
+    * on the (stop-shingle-free) Jaccard value. Docs whose shingle set exceeds `maxSetSize` take the
     * narrow-row fallback (see [[MaxSetSize]]). */
   def verifyCandidatesExact(docs: DataFrame, idCol: String, textCol: String,
       candidates: DataFrame, k: Int = 3, threshold: Double = 0.8,
       maxBucket: Int = MaxBucket, maxSetSize: Int = MaxSetSize): DataFrame = {
     // normalize the candidate set up front: orientation a<b, self-pairs
     // dropped, duplicates collapsed — the verify is documented as
-    // idempotent (StreamMinhash feeds it a per-band stream where the same
-    // pair surfaces repeatedly), and output rows are driven off cand rows
+    // idempotent (a per-band candidate set surfaces the same pair
+    // repeatedly), and output rows are driven off cand rows
     val cand = candidates.select(
         least(col("id_a"), col("id_b")).as("id_a"),
         greatest(col("id_a"), col("id_b")).as("id_b"))

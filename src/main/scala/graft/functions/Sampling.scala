@@ -18,9 +18,9 @@ object Sampling {
   final val Knuth = 2654435761L
   final val Mod = 1000003L // prime > 100 buckets, small enough for exact SQL
 
-  /** Refuse non-integral id columns before a `.cast("long")` — the same
-    * contract Events.asofJoin enforces: a fractional id truncates (distinct
-    * docs silently merge) and a non-numeric one nulls out downstream. */
+  /** Refuse non-integral id columns before a `.cast("long")`: a fractional
+    * id truncates (distinct docs silently merge) and a non-numeric one
+    * nulls out downstream. */
   private[graft] def requireIntegral(df: DataFrame, c: String, op: String): Unit = {
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     val dt = df.schema(c).dataType

@@ -195,7 +195,7 @@ object TextStats {
     * count, C1 = prefix count, V = corpus vocabulary) — so the per-doc sum
     * is order-independent and hash-gateable, where a float log-prob sum
     * depends on partial-aggregation order (same trick as the tf-idf
-    * surrogate and the integer PageRank).
+    * surrogate).
     *
     * Shape at 10^12 docs: the narrow (doc, w1, bigram) table is persisted
     * and reused for BOTH count aggregations (map-side combined) and the

@@ -2,8 +2,8 @@ package graft.html
 
 /** Out-link extraction: the edges of the web graph a corpus pipeline feeds
   * into URL frontiers and link-based quality priors (Common-Crawl publishes
-  * exactly this as its host/domain graph; harmonic-centrality and PageRank
-  * ranks derived from it are standard crawl-filtering signals). ADDITIVE
+  * exactly this as its host/domain graph; ranks computed downstream from it
+  * are standard crawl-filtering signals). ADDITIVE
   * surface — the reference has no HTML code.
   *
   * Shares [[Meta]]'s hardened scanner rules: comments/CDATA skipped,

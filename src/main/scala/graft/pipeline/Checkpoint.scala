@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Resumable runs with ATOMIC commits, modeling Iceberg snapshot semantics
   * on plain filesystem primitives (no Iceberg runtime jar in this sandbox —
@@ -26,9 +27,9 @@ import org.apache.spark.sql.functions._
   * The north_rule's "checkpoints per-partition with lineage + metrics" maps
   * to manifest rows (url, n_chars, decode_failures, file_name, batch) —
   * enough to resume, find the data file that holds each url, and roll up
-  * run metrics without re-reading the output table. Manifests written
-  * before `file_name` carry a `part_id` column instead; they read through
-  * the same `mergeSchema` as every other manifest.
+  * run metrics without re-reading the output table. Every manifest is
+  * read with that fixed schema; one written before `file_name` existed
+  * carries a `part_id` column instead and reads with a null `file_name`.
   */
 object Checkpoint {
 
@@ -43,6 +44,13 @@ object Checkpoint {
 
   /** Run metrics of one [[commitWithData]], observed during its data write. */
   final case class CommitStats(docs: Long, chars: Long, decodeFailures: Long, pdfDocs: Long)
+
+  /** The manifest schema: url, n_chars, decode_failures, file_name, batch. */
+  private lazy val manifestSchema: StructType = {
+    val doc = Encoders.product[ExtractedDoc].schema
+    StructType(Seq("url", "n_chars", "decode_failures").map(doc(_)) ++
+      Seq(StructField("file_name", StringType), StructField("batch", StringType)))
+  }
 
   /** Manifest rows: `file` names the data file that holds each row (null
     * when the commit writes no data). */
@@ -139,8 +147,7 @@ object Checkpoint {
     manifestStatuses(spark, outDir).map(_.getPath.toString)
 
   private def readManifests(spark: SparkSession, dirs: Seq[String]): DataFrame =
-    // mergeSchema: legacy manifests lack the `batch` column
-    spark.read.option("mergeSchema", "true").parquet(dirs: _*)
+    spark.read.schema(manifestSchema).parquet(dirs: _*)
 
   private def tableFormat(spark: SparkSession): String =
     spark.conf.get("spark.graft.table.format", "parquet")
@@ -167,16 +174,12 @@ object Checkpoint {
   }
 
   /** Distinct data-batch names referenced by the given manifests' ROWS
-    * (manifest-only commits reference none; all-legacy manifests have no
-    * `batch` column at all). */
+    * (manifest-only commits and legacy manifests reference none). */
   private def referencedBatches(spark: SparkSession, manifests: Seq[String]): Seq[String] =
     if (manifests.isEmpty) Nil
-    else {
-      val man = readManifests(spark, manifests)
-      if (!man.columns.contains("batch")) Nil
-      else man.select("batch").where(col("batch").isNotNull && col("batch") =!= "")
-        .distinct().collect().map(_.getString(0)).toSeq
-    }
+    else readManifests(spark, manifests)
+      .select("batch").where(col("batch").isNotNull && col("batch") =!= "")
+      .distinct().collect().map(_.getString(0)).toSeq
 
   /** Assemble the output table from committed batch dirs plus (when a
     * LEGACY manifest vouches for them) the pre-atomic flat part-files
@@ -209,7 +212,7 @@ object Checkpoint {
       case (None, None)       =>
         // schema-carrying empty table, so .select("url")/.as[ExtractedDoc]
         // work on a fresh or manifest-only outDir
-        spark.emptyDataset(org.apache.spark.sql.Encoders.product[ExtractedDoc]).toDF()
+        spark.emptyDataset(Encoders.product[ExtractedDoc]).toDF()
     }
   }
 

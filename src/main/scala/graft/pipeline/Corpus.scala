@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.fixtures.GoldenGen
 import graft.pdf.{ObjectId, PdfCrypto}
-import java.nio.charset.StandardCharsets.{ISO_8859_1, US_ASCII, UTF_8}
+import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 import java.sql.Timestamp
 import java.time.Instant
 import org.apache.spark.sql.{Dataset, SparkSession}
@@ -1653,452 +1653,6 @@ object Corpus {
          |$second
          |</head><body><p>$esc</p></body></html>""".stripMargin
     html.getBytes(UTF_8)
-  }
-
-  /** Real 24bpp bottom-up BMP whose pixel values are closed forms of
-    * (x, y, doc_id) — pixel (x,y) carries ((x·7 + y·13 + doc_id) % 256) in
-    * all three channels, and row padding bytes are NONZERO (0x55), so a
-    * decoder that misreads the 4-byte row stride produces a wrong channel
-    * sum instead of accidentally matching. */
-  def bmpForDoc(docId: Long): Array[Byte] = {
-    val w = 3 + (docId % 5).toInt
-    val h = 2 + (docId % 3).toInt
-    val rowSize = ((w * 3 + 3) / 4) * 4
-    val size = 54 + rowSize * h
-    val b = java.nio.ByteBuffer.allocate(size).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    b.put('B'.toByte).put('M'.toByte).putInt(size).putShort(0).putShort(0).putInt(54)
-    b.putInt(40).putInt(w).putInt(h).putShort(1).putShort(24).putInt(0)
-    b.putInt(rowSize * h).putInt(2835).putInt(2835).putInt(0).putInt(0)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val v = ((x * 7 + y * 13 + docId) % 256).toByte
-        b.put(v).put(v).put(v)
-        x += 1
-      }
-      var pad = w * 3
-      while (pad < rowSize) { b.put(0x55.toByte); pad += 1 }
-      y += 1
-    }
-    b.array()
-  }
-
-  /** Real RIFF/WAVE PCM16 mono file: rate and sample values closed forms of
-    * doc_id; odd ids carry an ODD-sized junk LIST chunk before `fmt ` so
-    * the decoder's word-aligned chunk walk is gate-visible. */
-  def wavForDoc(docId: Long): Array[Byte] = {
-    val rate = (8000 * (1 + docId % 3)).toInt
-    val n = (50 + docId % 20).toInt
-    val junk = docId % 2 == 1
-    val junkBytes = if (junk) 8 + 11 + 1 else 0 // header + odd body + pad
-    val dataSize = n * 2
-    val riffSize = 4 + junkBytes + (8 + 16) + (8 + dataSize)
-    val b = java.nio.ByteBuffer.allocate(8 + riffSize)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    b.put("RIFF".getBytes(US_ASCII)).putInt(riffSize).put("WAVE".getBytes(US_ASCII))
-    if (junk) {
-      b.put("LIST".getBytes(US_ASCII)).putInt(11)
-      b.put(Array.fill(11)(0x4a.toByte)).put(0.toByte)
-    }
-    b.put("fmt ".getBytes(US_ASCII)).putInt(16).putShort(1).putShort(1)
-    b.putInt(rate).putInt(rate * 2).putShort(2).putShort(16)
-    b.put("data".getBytes(US_ASCII)).putInt(dataSize)
-    var i = 0
-    while (i < n) {
-      b.putShort((((i * 31 + docId) % 2001) - 1000).toShort)
-      i += 1
-    }
-    b.array()
-  }
-
-  /** Real PNG (8-bit truecolor RGB, non-interlaced) whose pixels are closed
-    * forms of (x, y, doc_id). Every decoder arm is gate-visible:
-    *  - row `y` is written with filter type `y % 5`, and h ≥ 5, so all five
-    *    PNG filters (None/Sub/Up/Average/Paeth) appear in EVERY payload —
-    *    a decoder that misimplements any unfilter arm corrupts the channel
-    *    sum;
-    *  - an ancillary `tEXt` chunk sits between IHDR and IDAT (chunk-skip
-    *    arm);
-    *  - the zlib stream is split across TWO IDAT chunks at an uneven
-    *    boundary (multi-IDAT concatenation arm);
-    *  - every chunk carries its real CRC32 (corruption detection arm).
-    * Channels: r=(x·7+y·13+id)%256, g=(x·11+y·3+2id)%256, b=(x·5+y·17+3id)%256. */
-  def pngForDoc(docId: Long): Array[Byte] = {
-    val w = 3 + (docId % 5).toInt
-    val h = 5 + (docId % 3).toInt
-    val stride = w * 3
-    def px(x: Int, y: Int, c: Int): Int = ((c match {
-      case 0 => x * 7 + y * 13 + docId
-      case 1 => x * 11 + y * 3 + 2 * docId
-      case _ => x * 5 + y * 17 + 3 * docId
-    }) % 256).toInt // docId ≥ 0 → no negative mod
-    def paeth(a: Int, b: Int, c: Int): Int = {
-      val p = a + b - c
-      val pa = math.abs(p - a); val pb = math.abs(p - b); val pc = math.abs(p - c)
-      if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
-    }
-    // raw scanlines: 1 filter-type byte + FILTERED row bytes (decoder inverts)
-    val raw = new Array[Byte](h * (1 + stride))
-    val prev = new Array[Int](stride) // unfiltered previous row (0 for y=0)
-    val cur = new Array[Int](stride)
-    var y = 0
-    while (y < h) {
-      var i = 0
-      while (i < stride) { cur(i) = px(i / 3, y, i % 3); i += 1 }
-      val f = y % 5
-      raw(y * (1 + stride)) = f.toByte
-      i = 0
-      while (i < stride) {
-        val left = if (i >= 3) cur(i - 3) else 0
-        val up = prev(i)
-        val upLeft = if (i >= 3) prev(i - 3) else 0
-        val pred = f match {
-          case 0 => 0
-          case 1 => left
-          case 2 => up
-          case 3 => (left + up) / 2
-          case _ => paeth(left, up, upLeft)
-        }
-        raw(y * (1 + stride) + 1 + i) = ((cur(i) - pred) & 0xff).toByte
-        i += 1
-      }
-      System.arraycopy(cur, 0, prev, 0, stride)
-      y += 1
-    }
-    val deflater = new java.util.zip.Deflater()
-    deflater.setInput(raw); deflater.finish()
-    val zb = new Array[Byte](raw.length + 64)
-    val zOut = new java.io.ByteArrayOutputStream()
-    while (!deflater.finished()) zOut.write(zb, 0, deflater.deflate(zb))
-    deflater.end()
-    val idat = zOut.toByteArray
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte))
-    def chunk(typ: String, data: Array[Byte]): Unit = {
-      val b = java.nio.ByteBuffer.allocate(4 + 4 + data.length + 4)
-      b.putInt(data.length).put(typ.getBytes(US_ASCII)).put(data)
-      val crc = new java.util.zip.CRC32()
-      crc.update(typ.getBytes(US_ASCII)); crc.update(data)
-      b.putInt(crc.getValue.toInt)
-      out.write(b.array())
-    }
-    val ihdr = java.nio.ByteBuffer.allocate(13)
-      .putInt(w).putInt(h).put(8.toByte).put(2.toByte)
-      .put(0.toByte).put(0.toByte).put(0.toByte)
-    chunk("IHDR", ihdr.array())
-    chunk("tEXt", s"Software graft-gen-$docId".getBytes(US_ASCII))
-    val split = math.max(1, idat.length / 3) // uneven 2-chunk split, both nonempty
-    chunk("IDAT", idat.take(split))
-    chunk("IDAT", idat.drop(split))
-    chunk("IEND", Array.emptyByteArray)
-    out.toByteArray
-  }
-
-  /** Real GIF89a (global 256-color table, single full-frame image, genuine
-    * variable-code-width LZW) whose palette and pixel indices are closed
-    * forms of (x, y, doc_id): index(x,y) = (x·5+y·7+id)%256, palette[k] =
-    * ((k·3+id)%256, (k·5+2id)%256, (k·7+3id)%256). A Graphic Control
-    * Extension AND a two-sub-block Comment extension precede the image
-    * descriptor, so the decoder's extension-skip arm (multi-sub-block) is
-    * gate-visible; the LZW stream is emitted by [[gifLzwEncode]] with the
-    * standard width-bump rule, so the decoder's code-width tracking, table
-    * growth and KwKwK arm are exercised by real compressed data. */
-  def gifForDoc(docId: Long): Array[Byte] = {
-    val w = 3 + (docId % 5).toInt
-    val h = 5 + (docId % 3).toInt
-    val indices = Array.tabulate(w * h) { i =>
-      (((i % w) * 5 + (i / w) * 7 + docId) % 256).toByte
-    }
-    val palette = new Array[Byte](256 * 3)
-    var k = 0
-    while (k < 256) {
-      palette(k * 3) = ((k * 3 + docId) % 256).toByte
-      palette(k * 3 + 1) = ((k * 5 + 2 * docId) % 256).toByte
-      palette(k * 3 + 2) = ((k * 7 + 3 * docId) % 256).toByte
-      k += 1
-    }
-    gifBytes(w, h, indices, palette)
-  }
-
-  /** Assemble a single-frame GIF89a around arbitrary indices/palette —
-    * shared by [[gifForDoc]] and the unit tests that need pathological
-    * pixel streams (uniform images force the LZW KwKwK case). */
-  private[graft] def gifBytes(w: Int, h: Int, indices: Array[Byte],
-      palette: Array[Byte]): Array[Byte] = {
-    require(indices.length == w * h && palette.length == 256 * 3)
-    val out = new java.io.ByteArrayOutputStream()
-    out.write("GIF89a".getBytes(US_ASCII))
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    le16(w); le16(h)
-    out.write(0xf7) // global table present, 8-bit color resolution, 256 entries
-    out.write(0); out.write(0) // background index, aspect
-    out.write(palette)
-    // Graphic Control Extension (skipped by the decoder)
-    out.write(Array(0x21, 0xf9, 0x04, 0x00, 0x00, 0x00, 0x00, 0x00).map(_.toByte))
-    // Comment extension with TWO sub-blocks (multi-sub-block skip arm)
-    out.write(0x21); out.write(0xfe)
-    out.write(5); out.write("graft".getBytes(US_ASCII))
-    out.write(5); out.write("junk!".getBytes(US_ASCII))
-    out.write(0)
-    // image descriptor: full frame, no local table, not interlaced
-    out.write(0x2c); le16(0); le16(0); le16(w); le16(h); out.write(0x00)
-    out.write(8) // LZW minimum code size
-    val lzw = gifLzwEncode(indices, 8)
-    var off = 0
-    while (off < lzw.length) {
-      val n = math.min(255, lzw.length - off)
-      out.write(n); out.write(lzw, off, n)
-      off += n
-    }
-    out.write(0) // block terminator
-    out.write(0x3b) // trailer
-    out.toByteArray
-  }
-
-  /** Real baseline grayscale JPEG whose decoded pixels are closed forms of
-    * (block, doc_id): the image is CONSTANT PER 8×8 BLOCK — block (bx,by)
-    * carries luma (bx·29 + by·31 + id) % 256 — because constant blocks
-    * round-trip bit-exactly through DCT → quantize → IDCT (only the DC
-    * coefficient is nonzero, and with q[0]=8 the coded DC is exactly
-    * v−128), so the DuckDB oracle can predict the decoded luma sum while
-    * [[graft.multimodal.Jpeg]] still runs real Huffman + dequant + IDCT.
-    * The stream uses the standard Annex-K luminance DC table and a compact
-    * file-declared AC table (the decoder builds whatever DHT declares), an
-    * APP0/JFIF header and a COM segment (marker-skip arms), and real
-    * 0xFF00 byte stuffing whenever a code boundary lands on 0xFF. */
-  def jpegForDoc(docId: Long): Array[Byte] = {
-    val bw = 2 + (docId % 3).toInt
-    val bh = 1 + (docId % 2).toInt
-    jpegBytes(8 * bw, 8 * bh, (bx, by) => ((bx * 29 + by * 31 + docId) % 256).toInt)
-  }
-
-  private val JpegDcBits = Array(0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0)
-  private val JpegDcVals = Array(0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11)
-  // compact AC table (5 symbols, all length 3): EOB, (run 0..2, size 1), ZRL
-  private val JpegAcBits = Array(0, 0, 5, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
-  private val JpegAcVals = Array(0x00, 0x01, 0x11, 0x21, 0xf0)
-
-  private def canonicalCodes(bits: Array[Int], vals: Array[Int]): Map[Int, (Int, Int)] = {
-    val out = Map.newBuilder[Int, (Int, Int)]
-    var code = 0; var k = 0; var l = 1
-    while (l <= 16) {
-      var i = 0
-      while (i < bits(l - 1)) { out += vals(k) -> ((code, l)); code += 1; k += 1; i += 1 }
-      code <<= 1
-      l += 1
-    }
-    out.result()
-  }
-
-  /** Assemble a baseline grayscale JPEG of per-block-constant luma —
-    * shared by [[jpegForDoc]] and unit tests. */
-  private[graft] def jpegBytes(w: Int, h: Int, blockLuma: (Int, Int) => Int): Array[Byte] = {
-    require(w % 8 == 0 && h % 8 == 0, "constant-block fixtures are multiple-of-8")
-    val out = new java.io.ByteArrayOutputStream()
-    def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
-    def segment(m: Int, body: Array[Byte]): Unit = {
-      marker(m); out.write((body.length + 2) >> 8); out.write((body.length + 2) & 0xff)
-      out.write(body)
-    }
-    marker(0xd8) // SOI
-    segment(0xe0, "JFIF".getBytes(US_ASCII) ++
-      Array[Byte](0, 1, 1, 0, 0, 1, 0, 1, 0, 0))
-    segment(0xfe, "graft jpeg fixture".getBytes(US_ASCII)) // COM skip arm
-    // DQT: natural-order q[0]=8 (exact DC), 16 elsewhere; written in zigzag
-    val qtNatural = Array.tabulate(64)(i => if (i == 0) 8 else 16)
-    segment(0xdb, 0.toByte +: Array.tabulate(64)(i =>
-      qtNatural(graft.multimodal.Jpeg.Zigzag(i)).toByte))
-    segment(0xc0, Array[Byte](8, (h >> 8).toByte, (h & 0xff).toByte,
-      (w >> 8).toByte, (w & 0xff).toByte, 1, 1, 0x11, 0))
-    segment(0xc4, 0x00.toByte +: (JpegDcBits.map(_.toByte) ++ JpegDcVals.map(_.toByte)))
-    segment(0xc4, 0x10.toByte +: (JpegAcBits.map(_.toByte) ++ JpegAcVals.map(_.toByte)))
-    segment(0xda, Array[Byte](1, 1, 0x00, 0, 63, 0))
-    // entropy-coded scan: MSB-first writer with 0xFF00 stuffing
-    val dcCodes = canonicalCodes(JpegDcBits, JpegDcVals)
-    val acCodes = canonicalCodes(JpegAcBits, JpegAcVals)
-    var acc = 0L; var nBits = 0
-    def put(v: Int, len: Int): Unit = {
-      acc = (acc << len) | (v & ((1L << len) - 1)); nBits += len
-      while (nBits >= 8) {
-        val b = ((acc >> (nBits - 8)) & 0xff).toInt
-        out.write(b)
-        if (b == 0xff) out.write(0x00) // byte stuffing
-        nBits -= 8
-      }
-    }
-    var pred = 0
-    var by = 0
-    while (by < h / 8) {
-      var bx = 0
-      while (bx < w / 8) {
-        val dc = blockLuma(bx, by) - 128
-        val diff = dc - pred
-        pred = dc
-        val s = if (diff == 0) 0 else 32 - Integer.numberOfLeadingZeros(math.abs(diff))
-        val (c, cl) = dcCodes(s)
-        put(c, cl)
-        if (s > 0) put(if (diff < 0) diff + (1 << s) - 1 else diff, s)
-        val (e, el) = acCodes(0x00) // EOB: no AC coefficients
-        put(e, el)
-        bx += 1
-      }
-      by += 1
-    }
-    if (nBits > 0) put((1 << (8 - nBits)) - 1, 8 - nBits) // pad with 1s
-    marker(0xd9) // EOI
-    out.toByteArray
-  }
-
-  /** Real MPEG-1 Layer III (MP3) stream whose frame metadata are closed
-    * forms of doc_id: an ID3v2 tag with a SYNCSAFE size (the skip arm the
-    * decoder must get right — byte 7 bits per size byte), then
-    * 20 + id%30 frames at sample-rate index id%3 ([44100,48000,32000]) and
-    * bitrate index 1 + id%14, each frame a valid 4-byte header plus junk
-    * payload of EXACTLY the header-declared length (alternating padding
-    * bit), so a decoder that miscomputes frame length desyncs and fails
-    * instead of overcounting. */
-  def mp3ForDoc(docId: Long): Array[Byte] = {
-    val Bitrates = Array(0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320)
-    val Rates = Array(44100, 48000, 32000)
-    val frames = (20 + docId % 30).toInt
-    val srIdx = (docId % 3).toInt
-    val brIdx = (1 + docId % 14).toInt
-    val out = new java.io.ByteArrayOutputStream()
-    // ID3v2.3 tag: 10-byte header + syncsafe-sized body (body > 127 bytes
-    // so a reader treating size as plain big-endian desyncs)
-    val tagBody = Array.fill(200 + (docId % 56).toInt)(0x54.toByte)
-    out.write("ID3".getBytes(US_ASCII))
-    out.write(3); out.write(0); out.write(0) // version 2.3.0, no flags
-    out.write((tagBody.length >> 21) & 0x7f); out.write((tagBody.length >> 14) & 0x7f)
-    out.write((tagBody.length >> 7) & 0x7f); out.write(tagBody.length & 0x7f)
-    out.write(tagBody)
-    var i = 0
-    while (i < frames) {
-      val padding = i % 2 // alternate the padding bit
-      val len = 144 * Bitrates(brIdx) * 1000 / Rates(srIdx) + padding
-      out.write(0xff)
-      out.write(0xfb) // sync + MPEG1 + Layer III + no CRC
-      out.write((brIdx << 4) | (srIdx << 2) | (padding << 1))
-      out.write(0xc0) // mono
-      var j = 4
-      while (j < len) { out.write((j * 7 + i) & 0xff); j += 1 }
-      i += 1
-    }
-    out.toByteArray
-  }
-
-  /** Real ISO-BMFF (MP4) box tree whose movie/track metadata are closed
-    * forms of doc_id: mvhd carries timescale = 1000·(1+id%3) and duration =
-    * 4000 + (id·7)%9000 ticks; tkhd carries width/height = (160+16·(id%8),
-    * 96+16·(id%5)) in 16.16 fixed point; stts carries 1 + id%24 samples.
-    * Every decoder arm is gate-visible: a `free` box sits between ftyp and
-    * moov (unknown-box skip), a decoy SOUND track precedes the video track
-    * (handler-type routing via hdlr), and the trailing mdat uses the
-    * 64-bit largesize form (size==1 arm). */
-  def mp4ForDoc(docId: Long): Array[Byte] = {
-    def box(typ: String, payload: Array[Byte]*): Array[Byte] = {
-      val n = 8 + payload.map(_.length).sum
-      val b = java.nio.ByteBuffer.allocate(n)
-      b.putInt(n).put(typ.getBytes(US_ASCII))
-      payload.foreach(b.put)
-      b.array()
-    }
-    def be32(v: Long): Array[Byte] =
-      java.nio.ByteBuffer.allocate(4).putInt(v.toInt).array()
-    def be16(v: Int): Array[Byte] =
-      java.nio.ByteBuffer.allocate(2).putShort(v.toShort).array()
-    val timescale = 1000L * (1 + docId % 3)
-    val duration = 4000L + (docId * 7) % 9000
-    val w = 160 + 16 * (docId % 8)
-    val h = 96 + 16 * (docId % 5)
-    val nSamples = 1 + docId % 24
-    val ftyp = box("ftyp", "isom".getBytes(US_ASCII), be32(0),
-      "isom".getBytes(US_ASCII), "mp42".getBytes(US_ASCII))
-    val free = box("free", Array.fill(9)(0x46.toByte))
-    val mvhd = box("mvhd", be32(0), // version 0 + flags
-      be32(0), be32(0), // creation, modification
-      be32(timescale), be32(duration),
-      be32(0x00010000L), be16(0x0100), be16(0), be32(0), be32(0),
-      Array.fill(36)(0.toByte), // matrix (zeros acceptable for the gate)
-      Array.fill(24)(0.toByte), // predefined
-      be32(2)) // next track id
-    def hdlr(handler: String): Array[Byte] =
-      box("hdlr", be32(0), be32(0), handler.getBytes(US_ASCII),
-        Array.fill(12)(0.toByte), "graft".getBytes(US_ASCII), Array[Byte](0))
-    def tkhd(trackId: Long, tw: Long, th: Long): Array[Byte] =
-      box("tkhd", be32(0x000003L), // version 0, flags enabled+in-movie
-        be32(0), be32(0), be32(trackId), be32(0), be32(duration),
-        Array.fill(8)(0.toByte), be16(0), be16(0), be16(0), be16(0),
-        Array.fill(36)(0.toByte),
-        be32(tw << 16), be32(th << 16)) // 16.16 fixed point
-    val stts = box("stts", be32(0), be32(1), be32(nSamples), be32(100))
-    val stbl = box("stbl", stts)
-    val minf = box("minf", stbl)
-    val mdhd = box("mdhd", be32(0), be32(0), be32(0), be32(timescale),
-      be32(duration), be16(0x55c4), be16(0)) // language "und"
-    def mdia(handler: String, inner: Array[Byte]*): Array[Byte] =
-      box("mdia", (Seq(mdhd, hdlr(handler)) ++ inner).map(identity): _*)
-    // decoy audio track FIRST: zero dims, soun handler, its own stts the
-    // decoder must NOT count video samples from
-    val audioTrak = box("trak", tkhd(1, 0, 0),
-      mdia("soun", box("minf", box("stbl",
-        box("stts", be32(0), be32(1), be32(999), be32(1))))))
-    val videoTrak = box("trak", tkhd(2, w, h), mdia("vide", minf))
-    val moov = box("moov", mvhd, audioTrak, videoTrak)
-    // mdat with the 64-bit largesize form (size == 1)
-    val mdatBody = Array.fill(5 + (docId % 7).toInt)(0x4d.toByte)
-    val mdat = {
-      val b = java.nio.ByteBuffer.allocate(16 + mdatBody.length)
-      b.putInt(1).put("mdat".getBytes(US_ASCII))
-      b.putLong(16L + mdatBody.length).put(mdatBody)
-      b.array()
-    }
-    ftyp ++ free ++ moov ++ mdat
-  }
-
-  /** GIF-variant LZW encoder (LSB-first bit packing, code width grows when
-    * the just-assigned table code no longer fits, clear emitted when the
-    * table fills at 4096). The matched decoder lives in
-    * [[graft.multimodal.RealMedia]]; MediaCodecSpec pins the decoder
-    * against a HAND-PACKED spec stream too, so an encoder/decoder pair
-    * sharing a wrong width rule cannot silently agree. */
-  private[graft] def gifLzwEncode(data: Array[Byte], minCodeSize: Int): Array[Byte] = {
-    require(data.nonEmpty && minCodeSize >= 2 && minCodeSize <= 8)
-    val clear = 1 << minCodeSize
-    val eoi = clear + 1
-    val out = new java.io.ByteArrayOutputStream()
-    var bitBuf = 0L; var nBits = 0; var codeSize = minCodeSize + 1
-    def emit(code: Int): Unit = {
-      bitBuf |= code.toLong << nBits; nBits += codeSize
-      while (nBits >= 8) { out.write((bitBuf & 0xff).toInt); bitBuf >>>= 8; nBits -= 8 }
-    }
-    val dict = new java.util.HashMap[Integer, Integer]()
-    var nextCode = eoi + 1
-    emit(clear)
-    var prefix = data(0) & 0xff
-    var i = 1
-    while (i < data.length) {
-      val b = data(i) & 0xff
-      val key = Integer.valueOf((prefix << 8) | b)
-      val hit = dict.get(key)
-      if (hit != null) prefix = hit.intValue()
-      else {
-        emit(prefix)
-        dict.put(key, Integer.valueOf(nextCode))
-        if (nextCode == (1 << codeSize) && codeSize < 12) codeSize += 1
-        nextCode += 1
-        if (nextCode > 4095) {
-          emit(clear)
-          dict.clear(); nextCode = eoi + 1; codeSize = minCodeSize + 1
-        }
-        prefix = b
-      }
-      i += 1
-    }
-    emit(prefix); emit(eoi)
-    if (nBits > 0) out.write((bitBuf & 0xff).toInt)
-    out.toByteArray
   }
 
   def htmlSpanProbePageRowFor(docId: Long, text: String, lang: String): PageRow =

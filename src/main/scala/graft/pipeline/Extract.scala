@@ -62,7 +62,8 @@ object ExtractPipeline {
     }
   }
 
-  /** Column-pruned, buffer-reusing extraction transform. */
+  /** Column-pruned, buffer-reusing extraction transform. It is a narrow
+    * map, so it runs unchanged over a `readStream` source as well. */
   def run(pages: Dataset[PageRow], delimiter: String = "",
       captureLines: Boolean = false): Dataset[ExtractedDoc] = {
     val spark = pages.sparkSession
@@ -100,15 +101,6 @@ object ExtractPipeline {
         }
       }
   }
-
-  /** Streaming variant: the same stateless transform over a `readStream`
-    * source. Extraction is a narrow map, so it runs unchanged under
-    * Structured Streaming — continuous Common-Crawl ingest is
-    * `readStream → run → writeStream` with checkpointing giving
-    * exactly-once output (an alternative resumability story to the batch
-    * manifest in [[Checkpoint]]). */
-  def runStreaming(pages: Dataset[PageRow], delimiter: String = ""): Dataset[ExtractedDoc] =
-    run(pages, delimiter)
 
   /** Salted repartition against oversized-document skew: uniform hash salt,
     * `numPartitions` ≈ total cores (or a small multiple at high skew). At

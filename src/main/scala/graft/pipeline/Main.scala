@@ -48,20 +48,6 @@ object Main {
     val delimiter = opt("delimiter").getOrElse("")
     val resume = !args.contains("--no-resume")
 
-    if (args.contains("--stream")) {
-      // REAL micro-batch streaming run (round 5): the streaming MinHash
-      // near-dup detector driven end-to-end through readStream →
-      // flatMapGroupsWithState → writeStream under spark-submit, across
-      // MULTIPLE triggers (maxFilesPerTrigger=1 over a 4-file staging of
-      // the input, Trigger.AvailableNow), then a batch-parity assertion:
-      // the accumulated, exact-verified stream output must equal
-      // Dedup.minhashDedupPairs over the same corpus. `<inputTable>` is a
-      // documents parquet (doc_id, text); everything is written under
-      // `<outDir>`.
-      runStream(input, outDir)
-      return
-    }
-
     if (args.contains("--maintenance")) {
       val spark = SparkSession.builder().appName("graft-maintenance").getOrCreate()
       val compacted = Checkpoint.compact(spark, outDir)
@@ -120,66 +106,5 @@ object Main {
       s""""decode_failures":${m.decodeFailures},"pdf_docs":${m.pdfDocs},"resumed":$resume,""" +
       s""""wall_sec":${f"$wall%.2f"}}""")
     spark.stop()
-  }
-
-  private def runStream(input: String, outDir: String): Unit = {
-    import graft.dedup.Dedup
-    import graft.streaming.StreamMinhash
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val spark = SparkSession.builder()
-      .appName("graft-stream")
-      .config("spark.sql.shuffle.partitions", 32)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
-    val docs = spark.read.parquet(input)
-      .select(col("doc_id").cast("long").as("doc_id"), col("text").cast("string").as("text"))
-    // a PRIOR run's sink/checkpoint must not leak into this one: the
-    // overwrite below writes uniquely-named part files, so a retained
-    // checkpoint would treat them as unseen and the sink would accumulate
-    // BOTH runs' pairs — stale pairs from a different corpus could then
-    // flip the parity verdict either way
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(outDir), spark.sparkContext.hadoopConfiguration)
-    Seq("stream_in", "stream_out", "stream_ckpt").foreach(d =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$outDir/$d"), true))
-    val staged = s"$outDir/stream_in"
-    docs.repartition(4).write.mode("overwrite").parquet(staged)
-
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    val streamIn = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1) // one file per micro-batch → ≥4 triggers
-      .parquet(staged)
-      .as[(Long, String)]
-    val query = StreamMinhash.candidatePairs(StreamMinhash.bandedStream(streamIn))
-      .writeStream.outputMode("append").format("parquet")
-      .option("path", s"$outDir/stream_out")
-      .option("checkpointLocation", s"$outDir/stream_ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    val batches = query.recentProgress.length
-
-    // parity: exact-verify the accumulated candidates; must equal the batch
-    // operator's output on the same corpus. The explicit schema keeps a
-    // ZERO-candidate corpus working — its sink dir holds only
-    // _spark_metadata and schema inference would throw before parity prints
-    val sinkSchema = StructType(Seq(
-      StructField("id_a", LongType), StructField("id_b", LongType)))
-    val streamPairs = Dedup.verifyCandidatesExact(docs, "doc_id", "text",
-        spark.read.schema(sinkSchema).parquet(s"$outDir/stream_out")
-          .select("id_a", "id_b"))
-      .select("id_a", "id_b")
-    val batchPairs = Dedup.minhashDedupPairs(docs, "doc_id", "text")
-      .select("id_a", "id_b")
-    val nStream = streamPairs.count()
-    val nBatch = batchPairs.count()
-    val diff = streamPairs.exceptAll(batchPairs).count() +
-      batchPairs.exceptAll(streamPairs).count()
-    println(s"""{"mode":"stream","micro_batches":$batches,"stream_pairs":$nStream,""" +
-      s""""batch_pairs":$nBatch,"diff":$diff,"parity":${diff == 0 && nStream == nBatch}}""")
-    spark.stop()
-    if (diff != 0) sys.exit(1)
   }
 }

@@ -44,7 +44,7 @@ object Packing {
 
   private def prepared(docs: DataFrame, idCol: String, textCol: String,
       numStreams: Int) = {
-    // same contract as Events.asofJoin: a fractional id would TRUNCATE
+    // a fractional id would TRUNCATE
     // (distinct docs silently merging into one doc_id/stream) and a
     // non-numeric id becomes null after the filter, dying later in the
     // primitive tuple encoder with an opaque error — refuse up front

@@ -112,33 +112,6 @@ class HtmlStructureSpec extends AnyFunSuite {
       """<script type="application/ld+json">{"y":1}""") == Seq("""{"y":1}"""))
   }
 
-  test("RealMedia: BMP stride/padding, WAV chunk walk, defensive negatives") {
-    import graft.multimodal.RealMedia
-    import graft.pipeline.Corpus
-    // hand-computed 3x2 BMP (doc 10): pixels (x*7 + y*13 + 10) % 256
-    val bmp = RealMedia.decode(Corpus.bmpForDoc(10L)).get
-    assert((bmp.container, bmp.width, bmp.height) == ("bmp", 3 + 10 % 5, 2 + 10 % 3))
-    val expSum = (for {
-      y <- 0 until bmp.height.toInt; x <- 0 until bmp.width.toInt
-    } yield (x * 7 + y * 13 + 10) % 256).sum
-    assert(bmp.feature == expSum) // 0x55 padding bytes excluded
-    // WAV with the odd-size junk LIST chunk (odd doc): rate/count/peak
-    val wav = RealMedia.decode(Corpus.wavForDoc(7L)).get
-    assert((wav.container, wav.sampleRate, wav.nSamples) ==
-      ("wav", 8000 * (1 + 7 % 3), 50 + 7 % 20))
-    assert(wav.feature ==
-      (0 until wav.nSamples.toInt).map(i => math.abs((i * 31 + 7) % 2001 - 1000)).max)
-    // negatives: truncated, wrong bpp, non-PCM, stereo, junk -> None, no throw
-    assert(RealMedia.decode(Corpus.bmpForDoc(4L).take(40)).isEmpty)
-    val badBpp = Corpus.bmpForDoc(4L).clone(); badBpp(28) = 8 // 8bpp unsupported
-    assert(RealMedia.decode(badBpp).isEmpty)
-    val nonPcm = Corpus.wavForDoc(8L).clone(); nonPcm(20) = 3 // IEEE float fmt
-    assert(RealMedia.decode(nonPcm).isEmpty)
-    assert(RealMedia.decode(Corpus.wavForDoc(8L).take(30)).isEmpty) // truncated chunk
-    assert(RealMedia.decode("not media at all".getBytes).isEmpty)
-    assert(RealMedia.decode(Array.empty[Byte]).isEmpty)
-  }
-
   test("Tables: cell text uses innerText conventions (entities, inline tags, br, attr quotes)") {
     val cells = Tables.cells(
       """<table><tr><td>one&amp;<b>two</b><br>three</td><td><a href="a>b">link text</a></td></tr></table>""")

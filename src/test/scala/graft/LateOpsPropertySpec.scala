@@ -2,7 +2,6 @@ package graft
 
 import graft.functions.{Pii, Urls}
 import graft.pipeline.Packing
-import graft.streaming.Events
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -61,31 +60,6 @@ class LateOpsPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
       got.groupBy(r => (r._2, r._3)).foreach { case (key, members) =>
         if (members.length > 1)
           assert(members.map(_._4).sum <= cap, s"trial $trial bin $key over capacity")
-      }
-    }
-  }
-
-  test("asofJoin matches brute force on random event sets") {
-    import spark.implicits._
-    import java.sql.Timestamp
-    val rnd = new scala.util.Random(7)
-    for (trial <- 1 to 3) {
-      def gen(n: Int, idBase: Long) = (0 until n).map(i =>
-        (rnd.nextInt(8).toLong, new Timestamp(rnd.nextInt(500) * 1000L), idBase + i))
-      val lefts = gen(120, 1000L)
-      val rights = gen(120, 5000L)
-      val got = Events.asofJoin(
-          lefts.toDF("k", "ts", "id"), rights.toDF("k", "ts", "id"),
-          "k", "ts", "id", numPartitions = 4)
-        .collect()
-        .map(r => r.getLong(1) -> ((Option(r.get(3)).map(_.asInstanceOf[Long]),
-          Option(r.getTimestamp(4))))).toMap
-      assert(got.size == lefts.size, s"trial $trial: left rows lost")
-      lefts.foreach { case (k, ts, id) =>
-        val best = rights.filter(r => r._1 == k && !r._2.after(ts))
-          .sortBy(r => (r._2.getTime, r._3)).lastOption
-        assert(got(id) == ((best.map(_._3), best.map(_._2))),
-          s"trial $trial left $id key $k ts $ts")
       }
     }
   }

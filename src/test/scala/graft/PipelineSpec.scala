@@ -2,7 +2,6 @@ package graft
 
 import graft.dedup.Dedup
 import graft.pipeline.{Checkpoint, Corpus, ExtractPipeline, PageRow}
-import graft.streaming.Events
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -266,7 +265,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("query inventory: every query has an oracle and the count is pinned") {
     // the README/NOTES quote this number; pinning it here keeps the prose
     // from drifting (r4 verdict item 7). Update BOTH on every new query.
-    assert(SparkEntry.queries.size == 100,
+    assert(SparkEntry.queries.size == 86,
       s"queries=${SparkEntry.queries.size} — update this pin AND README.md")
     assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet,
       "every query needs a DuckDB oracle (and no orphaned oracles): " +
@@ -434,17 +433,28 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("snapshot time travel: readExtractedAsOf sees exactly the batches committed by then") {
     import spark.implicits._
     val outDir = java.nio.file.Files.createTempDirectory("graft_spec_tt").toString
+    def pages(lo: Long, hi: Long) =
+      (lo until hi).map(i => Corpus.pageRowFor(i, s"time travel doc $i", "en")).toDS()
     def commitRange(lo: Long, hi: Long): Unit = {
-      val pages = (lo until hi).map(i => Corpus.pageRowFor(i, s"time travel doc $i", "en")).toDS()
-      Checkpoint.commitWithData(ExtractPipeline.run(pages), outDir)
+      Checkpoint.commitWithData(ExtractPipeline.run(pages(lo, hi)), outDir)
       Thread.sleep(20) // distinct manifest mtimes on a coarse-granularity fs
     }
-    commitRange(0, 3); commitRange(3, 7); commitRange(7, 12)
+    // a batch committed before manifests carried `file_name`: its manifest
+    // holds the writing task's `part_id` instead
+    val old = "batch_partid"
+    val oldDocs = ExtractPipeline.run(pages(0, 3)).toDF()
+    oldDocs.write.parquet(s"${Checkpoint.dataPath(outDir)}/$old")
+    oldDocs.select(col("url"), col("n_chars"), col("decode_failures"),
+        spark_partition_id().as("part_id"), lit(old).as("batch"))
+      .write.parquet(s"${Checkpoint.manifestPath(outDir)}/$old")
+    Thread.sleep(20)
+    commitRange(3, 7); commitRange(7, 12)
     // a manifest-ONLY commit (no data batch) must not break as-of reads
     val extra = Seq(Corpus.pageRowFor(100L, "manifest only doc", "en")).toDS()
     Checkpoint.commit(ExtractPipeline.run(extra), outDir)
     val snaps = Checkpoint.snapshots(spark, outDir)
     assert(snaps.length == 4)
+    assert(snaps.head.name == old)
     assert(snaps.map(_.commitMs).sliding(2).forall(p => p.head <= p.last))
     assert(Checkpoint.readExtractedAsOf(spark, outDir, snaps(0).commitMs).count() == 3)
     assert(Checkpoint.readExtractedAsOf(spark, outDir, snaps(1).commitMs).count() == 7)
@@ -452,7 +462,15 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Checkpoint.readExtractedAsOf(spark, outDir, snaps(3).commitMs).count() == 12)
     assert(Checkpoint.readExtractedAsOf(spark, outDir, snaps(0).commitMs - 1).count() == 0)
     // as-of the newest snapshot == the current table
-    assert(Checkpoint.readExtracted(spark, outDir).count() == 12)
+    val table = Checkpoint.readExtracted(spark, outDir)
+    assert(table.count() == 12 && table.select("url").distinct().count() == 12)
+    // the part_id manifest's urls are done like every other commit's
+    assert(Checkpoint.resume(pages(0, 15).union(extra), outDir)
+      .map(_.url).collect().toSet == (12L until 15L).map(Corpus.UrlPrefix + _).toSet)
+    val m = Checkpoint.metrics(spark, outDir).collect().head
+    assert(m.getAs[Long]("docs_done") == 13)
+    assert(m.getAs[Long]("total_chars") ==
+      table.agg(sum("n_chars")).head.getLong(0) + ExtractPipeline.run(extra).head.n_chars)
   }
 
   test("table-format seam: commit + crash-orphan + resume round-trips under ORC") {
@@ -666,7 +684,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .schema(spark.read.parquet(s"$dir/in").schema)
       .parquet(s"$dir/in")
       .as[PageRow](org.apache.spark.sql.Encoders.product[PageRow])
-    val q = ExtractPipeline.runStreaming(streamIn)
+    val q = ExtractPipeline.run(streamIn)
       .writeStream
       .outputMode("append")
       .format("memory")
@@ -677,90 +695,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     q.awaitTermination(120000)
     val streamed = spark.sql("SELECT url, kind, text FROM graft_extract_stream")
       .orderBy("url").collect()
-    assert(streamed.toSeq == batch.toSeq)
-  }
-
-  test("stateful streaming dedup keeps only first-seen fingerprints across batches") {
-    import spark.implicits._
-    import graft.streaming.{FingerprintedDoc, StreamDedup}
-    val dir = java.nio.file.Files.createTempDirectory("graft_sdedup").toString
-    // two files processed as separate micro-batches (maxFilesPerTrigger=1);
-    // the duplicate fp in file 2 must be suppressed by cross-batch state
-    Seq(FingerprintedDoc("fpA", "u1", "alpha"), FingerprintedDoc("fpB", "u2", "beta"))
-      .toDS().coalesce(1).write.parquet(s"$dir/in/f1")
-    Seq(FingerprintedDoc("fpA", "u3", "alpha again"), FingerprintedDoc("fpC", "u4", "gamma"))
-      .toDS().coalesce(1).write.parquet(s"$dir/in/f2")
-    val schema = spark.read.parquet(s"$dir/in/f1").schema
-    val streamIn = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$dir/in/*")
-      .as[FingerprintedDoc]
-    val q = StreamDedup.firstSeenOnly(streamIn)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("graft_sdedup")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val out = spark.sql("SELECT fp, url FROM graft_sdedup").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(out.keySet == Set("fpA", "fpB", "fpC"))
-    assert(out("fpB") == "u2" && out("fpC") == "u4")
-    assert(out("fpA") == "u1" || out("fpA") == "u3") // first batch order wins when batched separately
-  }
-
-  test("streaming minhash-LSH emits the batch candidate set across micro-batches") {
-    import spark.implicits._
-    import graft.streaming.StreamMinhash
-    // base docs in batch 1, near-dup copies in batch 2: every pair must be
-    // flagged when the SECOND member arrives, via cross-batch bucket state
-    val base = (0L until 20L).map(i => i -> (0 to 30).map(j => s"w${i}q$j").mkString(" "))
-    val dups = base.take(6).map { case (id, t) => (id + 1000L) -> (t + " tail") }
-    val dir = java.nio.file.Files.createTempDirectory("graft_sminhash").toString
-    base.toDF("id", "text").coalesce(1).write.parquet(s"$dir/in/f1")
-    dups.toDF("id", "text").coalesce(1).write.parquet(s"$dir/in/f2")
-    val schema = spark.read.parquet(s"$dir/in/f1").schema
-    val streamIn = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$dir/in/*").as[(Long, String)]
-    val q = StreamMinhash.candidatePairs(StreamMinhash.bandedStream(streamIn))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("graft_sminhash")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val streamed = spark.sql("SELECT DISTINCT id_a, id_b FROM graft_sminhash")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val batch = Dedup.minhashCandidates(
-        Dedup.minhashBands((base ++ dups).toDF("id", "text"), "id", "text", k = 3))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(streamed == batch, s"streamed=$streamed batch=$batch")
-    assert(streamed.nonEmpty)
-    assert((0L until 6L).map(i => (i, i + 1000L)).toSet.subsetOf(streamed))
-  }
-
-  test("streaming and batch window aggregation agree") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_events").toString
-    spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .write.mode("overwrite").parquet(s"$dir/in")
-    val batch = Events.hourlyByType(spark.read.parquet(s"$dir/in"))
-      .orderBy("window_start", "event_type").collect()
-
-    val streamIn = spark.readStream
-      .schema(spark.read.parquet(s"$dir/in").schema)
-      .parquet(s"$dir/in")
-    val q = Events.hourlyByType(streamIn.withWatermark("ts", "2 hours"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName("graft_events_stream")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val streamed = spark.sql("SELECT * FROM graft_events_stream")
-      .orderBy("window_start", "event_type").collect()
     assert(streamed.toSeq == batch.toSeq)
   }
 
@@ -816,106 +750,5 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(bins((0L, 4L)) == ((1L, 2L, words(2))))
     // n_docs matches the assignment cardinality everywhere
     assert(bins.forall { case (k, (n, _, _)) => assigned(k).size == n })
-  }
-
-  test("asofJoin: <= semantics, equal-ts tie rules, per-key state reset") {
-    import graft.streaming.Events
-    import java.sql.Timestamp
-    import spark.implicits._
-    def t(s: Long) = new Timestamp(s * 1000L)
-    // user 1: views at 10, 20, 20 (ids 100, 101, 102 — equal-ts tie),
-    //   purchases at 5 (no prior), 20 (equal ts -> view visible, id 102
-    //   wins the tie), 30 (latest view still 20/102)
-    // user 2: no views at all -> both purchases null (state must reset)
-    // null-key left row must pass through with null asof columns (NOT
-    // silently merge with key 0 via encoder default); null-key right row
-    // can never match anyone
-    val left = Seq((1L, t(5), 200L), (1L, t(20), 201L), (1L, t(30), 202L),
-      (2L, t(10), 203L), (2L, t(40), 204L)).toDF("user_id", "ts", "event_id")
-      .union(spark.sql("SELECT CAST(NULL AS BIGINT), TIMESTAMP'2024-01-01', CAST(205 AS BIGINT)"))
-    val right = Seq((1L, t(10), 100L), (1L, t(20), 101L), (1L, t(20), 102L))
-      .toDF("user_id", "ts", "event_id")
-      .union(spark.sql("SELECT CAST(NULL AS BIGINT), TIMESTAMP'2020-01-01', CAST(103 AS BIGINT)"))
-    val got = Events.asofJoin(left, right, "user_id", "ts", "event_id",
-        numPartitions = 2)
-      .collect()
-      .map(r => r.getLong(1) -> ((Option(r.get(3)).map(_.asInstanceOf[Long]),
-        Option(r.getTimestamp(4))))).toMap
-    assert(got(200L) == ((None, None)))
-    assert(got(201L) == ((Some(102L), Some(t(20)))))
-    assert(got(202L) == ((Some(102L), Some(t(20)))))
-    assert(got(203L) == ((None, None)))
-    assert(got(204L) == ((None, None)))
-    assert(got(205L) == ((None, None))) // null key: passes through unmatched
-    assert(got.size == 6)               // null-key right row matched nothing
-  }
-
-  test("streaming packing carries the open bin across micro-batches") {
-    import graft.streaming.{PackEvent, StreamPacking}
-    import spark.implicits._
-    // capacity 10, one stream. batch 1: 6+3 fill bin 0 to 9;
-    // batch 2: a 4-token doc must SPILL to bin 1 because the open bin's
-    // fill is carried in state; then 5 joins it (9), and 2 spills to bin 2
-    val b1 = Seq(PackEvent(0L, 1L, 6L), PackEvent(0L, 2L, 3L))
-    val b2 = Seq(PackEvent(0L, 3L, 4L), PackEvent(0L, 4L, 5L), PackEvent(0L, 5L, 2L))
-    val dir = java.nio.file.Files.createTempDirectory("graft_spack").toString
-    b1.toDS().coalesce(1).write.parquet(s"$dir/in/f1")
-    b2.toDS().coalesce(1).write.parquet(s"$dir/in/f2")
-    def touch(sub: String, t: Long): Unit =
-      java.nio.file.Files.walk(java.nio.file.Paths.get(s"$dir/in/$sub"))
-        .forEach(p => p.toFile.setLastModified(t))
-    val base = System.currentTimeMillis() - 120000L
-    touch("f1", base); touch("f2", base + 60000L)
-    val schema = spark.read.parquet(s"$dir/in/f1").schema
-    val streamIn = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$dir/in/*").as[PackEvent]
-    val q = StreamPacking.packStream(streamIn, capacity = 10L)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("graft_spack")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val got = spark.sql("SELECT doc_id, bin FROM graft_spack")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(1L -> 0L, 2L -> 0L, 3L -> 1L, 4L -> 1L, 5L -> 2L))
-  }
-
-  test("streaming as-of matches across micro-batches via carried state") {
-    import graft.streaming.{AsofEvent, StreamAsof}
-    import java.sql.Timestamp
-    import spark.implicits._
-    def t(s: Long) = new Timestamp(s * 1000L)
-    // batch 1: view@10 then purchase@20 (matched within the batch);
-    // batch 2: purchase@30 must match the view carried in STATE from
-    // batch 1, then view@40 + purchase@50 re-match within batch 2
-    val b1 = Seq(AsofEvent(1L, t(10), 100L, 0), AsofEvent(1L, t(20), 200L, 1))
-    val b2 = Seq(AsofEvent(1L, t(30), 201L, 1),
-      AsofEvent(1L, t(40), 101L, 0), AsofEvent(1L, t(50), 202L, 1))
-    val dir = java.nio.file.Files.createTempDirectory("graft_sasof").toString
-    b1.toDS().coalesce(1).write.parquet(s"$dir/in/f1")
-    b2.toDS().coalesce(1).write.parquet(s"$dir/in/f2")
-    // FileStreamSource orders pending files by mtime with no tie-break:
-    // pin f1 strictly earlier so the two triggers are deterministic even
-    // when both writes land in one filesystem-timestamp tick
-    def touch(sub: String, t: Long): Unit =
-      java.nio.file.Files.walk(java.nio.file.Paths.get(s"$dir/in/$sub"))
-        .forEach(p => p.toFile.setLastModified(t))
-    val base = System.currentTimeMillis() - 120000L
-    touch("f1", base)
-    touch("f2", base + 60000L)
-    val schema = spark.read.parquet(s"$dir/in/f1").schema
-    val streamIn = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$dir/in/*").as[AsofEvent]
-    val q = StreamAsof.asofStream(streamIn)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("graft_sasof")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val streamed = spark.sql("SELECT left_id, asof_id FROM graft_sasof")
-      .collect().map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Long])).toMap
-    assert(streamed == Map(200L -> Some(100L), 201L -> Some(100L), 202L -> Some(101L)))
   }
 }
