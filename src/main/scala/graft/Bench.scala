@@ -1,6 +1,5 @@
 package graft
 
-import graft.ann.Ann
 import graft.dedup.Dedup
 import graft.functions.TextStats
 import graft.html.Boilerplate
@@ -211,8 +210,6 @@ object Bench {
     // degraded phase and is rejected; per-query MEDIANS over accepted
     // rounds are reported and every raw sample ships in the JSON.
     val docsDf = spark.read.parquet(s"$sfDir/documents.parquet")
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id").as("id"), col("embedding"))
     val queryThunks: Seq[(String, () => Unit)] = Seq(
       "extract_pipeline" -> (() => runExtract(pages)),
       "extract_salted" -> (() => {
@@ -224,7 +221,6 @@ object Bench {
         Dedup.minhashDedupPairs(docsDf, "doc_id", "text").count(); ()
       }),
       "dedup_exact" -> (() => { Dedup.exactGroups(docsDf, "doc_id", "text").count(); () }),
-      "ann_topk" -> (() => { Ann.bruteForceTopK(emb, emb.where(col("id") < 10), k = 5).count(); () }),
       "text_stats" -> (() => {
         docsDf.select(
             TextStats.wsTokens(col("text")),
@@ -237,10 +233,6 @@ object Bench {
         Dedup.clearCaches()
         Dedup.connectedComponents(
           Dedup.ngramJaccardPairs(docsDf, "doc_id", "text")).count(); ()
-      }),
-      "vocab_stats" -> (() => {
-        docsDf.select(explode(split(trim(col("text")), "\\s+")).as("term"))
-          .groupBy("term").agg(count(lit(1))).count(); ()
       }),
       "dedup_chunks" -> (() => { Dedup.duplicateChunks(docsDf, "doc_id", "text").count(); () }),
       "text_repetition" -> (() => { TextStats.repetitionSignals(docsDf, "doc_id", "text").count(); () }),
@@ -263,24 +255,6 @@ object Bench {
       "dedup_drop_common_chunks" -> (() => {
         Dedup.dropCommonChunks(docsDf.select("doc_id", "text"), "doc_id", "text").count()
         Dedup.clearCaches()
-      }),
-      "pack_sequences" -> (() => {
-        graft.pipeline.Packing.packSequences(
-          docsDf.select("doc_id", "text"), "doc_id", "text").count(); ()
-      }),
-      "pii_scrub" -> (() => {
-        import graft.functions.Pii
-        docsDf.select(col("doc_id"),
-            Pii.nEmails(col("text")).as("n_emails"),
-            Pii.nIpv4(col("text")).as("n_ips"),
-            Pii.nPhones(col("text")).as("n_phones"),
-            md5(Pii.scrub(col("text")).cast("binary")).as("redacted_fp"))
-          .agg(count(lit(1)), sum("n_emails"), sum("n_ips"), sum("n_phones"))
-          .collect(); ()
-      }),
-      "mix_token_budget" -> (() => {
-        graft.functions.Sampling.mixByTokenBudget(
-          docsDf, "lang", "doc_id", "text", budget = 2000L).count(); ()
       }),
       // round-5 second-half operators (same shapes as their gate queries)
       "dedup_corpus_lines" -> (() => {
@@ -340,30 +314,6 @@ object Bench {
               graft.html.Tables.cells(Corpus.htmlTableProbe(id, t)).length.toLong
             }
           }.agg(sum("value")).collect(); ()
-      }),
-      "quality_funnel" -> (() => {
-        import spark.implicits._
-        val aug = docsDf.select(col("doc_id"),
-          concat(lit("https://sub"), (col("doc_id") % 11).cast("string"),
-            lit(".example"), (col("doc_id") % 7).cast("string"),
-            lit(".com/p/"), col("doc_id").cast("string")).as("url"),
-          lit("en").as("lang"), col("text"))
-        val bl = Seq("example3.com", "sub5.example2.com").toDF("domain")
-        graft.functions.Funnel.verdicts(aug, "doc_id", "url", "lang", "text",
-          bl, minWords = 15).groupBy("verdict").count().collect(); ()
-      }),
-      "chunk_windows" -> (() => {
-        graft.functions.Chunking.chunkWindows(
-          docsDf.select("doc_id", "text"), "doc_id", "text",
-          windowTokens = 40, overlapTokens = 10).count(); ()
-      }),
-      "host_caps" -> (() => {
-        val d = docsDf.select(
-          concat(lit("h"), (col("doc_id") % 7).cast("string"),
-            lit(".example.org")).as("host"),
-          ((col("doc_id") * 31) % 101).as("score"), col("doc_id"))
-        graft.functions.TopK.topKPerKey(d, "host", "score", "doc_id", 3)
-          .count(); ()
       }),
       "crawl_delta" -> (() => {
         val url = concat(lit(Corpus.UrlPrefix), col("doc_id"))

@@ -1,6 +1,5 @@
 package graft
 
-import graft.ann.Ann
 import graft.dedup.Dedup
 import graft.functions.TextStats
 import graft.pipeline.{Checkpoint, Corpus, ExtractPipeline}
@@ -20,9 +19,6 @@ object SparkEntry {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/documents.parquet")
-
-  private def embeddings(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
 
   private def docIdFromUrl: Column =
     element_at(split(col("url"), "/"), -1).cast("long").as("doc_id")
@@ -259,32 +255,6 @@ object SparkEntry {
         .select(col("id_a"), col("id_b"))
         .orderBy("id_a", "id_b")
     }),
-    "dedup_embedding_cosine" -> ((s, dir) => {
-      val e = embeddings(s, dir).select(col("vec_id").as("id"), col("embedding"))
-      val corpus = e.unionAll(
-        e.where(col("id") % 10 === 0).select((col("id") + 100000L).as("id"), col("embedding")))
-      Ann.cosineDupPairsIvf(corpus, threshold = 0.95).orderBy("id_a", "id_b")
-    }),
-    "dedup_embedding_rplsh" -> ((s, dir) => {
-      // random-hyperplane LSH band candidates + exact cosine verify — the
-      // quantizer-free scale path; same corpus and threshold as the IVF
-      // variant, so the exact-verified output is identical
-      val e = embeddings(s, dir).select(col("vec_id").as("id"), col("embedding"))
-      val corpus = e.unionAll(
-        e.where(col("id") % 10 === 0).select((col("id") + 100000L).as("id"), col("embedding")))
-      Ann.rplshCosineDupPairs(corpus, threshold = 0.95).orderBy("id_a", "id_b")
-    }),
-    "dedup_embedding_rplsh_mp" -> ((s, dir) => {
-      // multi-probe RP-LSH (distance-1 bucket probing) on the same
-      // planted-copy corpus: exact copies match every band, so the
-      // exact-verified output is identical to the single-probe gate's —
-      // the recall edge the probing buys is pinned in AnnSpec
-      val e = embeddings(s, dir).select(col("vec_id").as("id"), col("embedding"))
-      val corpus = e.unionAll(
-        e.where(col("id") % 10 === 0).select((col("id") + 100000L).as("id"), col("embedding")))
-      Ann.rplshCosineDupPairsMultiProbe(corpus, threshold = 0.95)
-        .orderBy("id_a", "id_b")
-    }),
     "dedup_chunks" -> ((s, dir) => {
       // paragraph-style exact chunk dedup (20-word windows) with planted
       // exact copies so duplicated windows exist deterministically
@@ -294,31 +264,6 @@ object SparkEntry {
           .select((col("doc_id") + 4000000L).as("doc_id"), col("text")))
       Dedup.duplicateChunks(corpus, "doc_id", "text").orderBy("fp")
     }),
-    "pack_sequences" -> ((s, dir) =>
-      // greedy fixed-capacity sequence packing (pretraining batch
-      // construction) over 16 independent streams; the sequential
-      // recurrence runs per-stream inside one sorted mapPartitions pass
-      graft.pipeline.Packing.packSequences(
-        docs(s, dir).select("doc_id", "text"), "doc_id", "text")
-        .orderBy("doc_id")),
-    "chunk_windows" -> ((s, dir) =>
-      // sliding-token-window chunking with overlap (embedding/retrieval
-      // index preparation — packSequences' sibling: SPLIT documents into
-      // overlapping windows instead of packing them into budgets); pure
-      // codegen'd split/sequence/explode/slice, zero shuffles
-      graft.functions.Chunking.chunkWindows(
-        docs(s, dir), "doc_id", "text", windowTokens = 40, overlapTokens = 10)
-        .orderBy("doc_id", "chunk_idx")),
-    "pack_bins" -> ((s, dir) =>
-      // trainer-ready assembly: completed bins emitted from the SAME
-      // single sorted pass (no second shuffle); fingerprint the packed
-      // text so the oracle checks byte-identical member order and joins
-      graft.pipeline.Packing.packedBins(
-        docs(s, dir).select("doc_id", "text"), "doc_id", "text")
-        .select(col("stream"), col("bin"), col("n_docs"), col("tot_tokens"),
-          md5(col("text").cast("binary")).as("packed_fp"),
-          length(col("text")).cast("long").as("packed_len"))
-        .orderBy("stream", "bin")),
     "dedup_exact_spans" -> ((s, dir) => {
       // Lee-et-al-style exact-substring span dedup: chimera docs (text
       // self-concatenated) plant long duplicated spans; windows crossing
@@ -354,28 +299,6 @@ object SparkEntry {
     "text_repetition" -> ((s, dir) =>
       TextStats.repetitionSignals(docs(s, dir), "doc_id", "text")
         .orderBy("doc_id")),
-    "embedding_quantize" -> ((s, dir) =>
-      Ann.quantizeInt8(embeddings(s, dir).select(col("vec_id").as("id"), col("embedding")))
-        .orderBy("id", "pos")),
-    // ----------------------------------------------------- similarity search
-    "ann_topk_bruteforce" -> ((s, dir) => {
-      val e = embeddings(s, dir).select(col("vec_id").as("id"), col("embedding"))
-      Ann.bruteForceTopK(e, e.where(col("id") < 10), k = 5)
-        .orderBy("query_id", "rank")
-    }),
-    "ann_ivf" -> ((s, dir) => {
-      val e = embeddings(s, dir).select(col("vec_id").as("id"), col("embedding"))
-      Ann.ivfTopK(e, e.where(col("id") < 10), e.where(col("id") % 50 === 0),
-          nprobe = 3, k = 5)
-        .orderBy("query_id", "rank")
-    }),
-    "ann_quantized_rerank" -> ((s, dir) => {
-      // SQ8 search: integer-exact coarse top-25 over int8-quantized vectors,
-      // exact-cosine re-rank to top-5 — the compressed-index scale path
-      val e = embeddings(s, dir).select(col("vec_id").as("id"), col("embedding"))
-      Ann.quantizedRerankTopK(e, e.where(col("id") < 10), k = 5, pool = 25)
-        .orderBy("query_id", "rank")
-    }),
     // --------------------------------------------------------- text analysis
     "text_tokens" -> ((s, dir) =>
       docs(s, dir).select(col("doc_id"),
@@ -398,30 +321,6 @@ object SparkEntry {
       docs(s, dir).select(col("doc_id"),
           TextStats.fingerprint(col("text")).as("fp"))
         .orderBy("doc_id")),
-    "pii_scrub" -> ((s, dir) => {
-      // deterministic PII augmentation (doc_id mod 3/5/7 gets an email /
-      // dotted quad / phone) so both match and no-match paths are gated;
-      // counts follow the chain's intermediates (see Pii scaladoc)
-      import graft.functions.Pii
-      val aug = docs(s, dir).select(col("doc_id"), concat(
-        col("text"),
-        when(col("doc_id") % 3 === 0, concat(lit(" contact user"),
-          col("doc_id").cast("string"), lit("@example.com now")))
-          .otherwise(lit("")),
-        when(col("doc_id") % 5 === 0, concat(lit(" from 10."),
-          (col("doc_id") % 200).cast("string"), lit(".3.4")))
-          .otherwise(lit("")),
-        when(col("doc_id") % 7 === 0, concat(lit(" call +1 555-01"),
-          lpad((col("doc_id") % 100).cast("string"), 2, "0")))
-          .otherwise(lit(""))).as("text"))
-      aug.select(col("doc_id"),
-          Pii.nEmails(col("text")).as("n_emails"),
-          Pii.nIpv4(col("text")).as("n_ips"),
-          Pii.nPhones(col("text")).as("n_phones"),
-          md5(Pii.scrub(col("text")).cast("binary")).as("redacted_fp"),
-          length(Pii.scrub(col("text"))).cast("long").as("redacted_len"))
-        .orderBy("doc_id")
-    }),
     "text_gopher" -> ((s, dir) => {
       // full Gopher rule set over deterministically-augmented text: doc_id
       // mod 4/5/7 plants bullet lines, an ellipsis line + hashes, and a
@@ -444,12 +343,6 @@ object SparkEntry {
       docs(s, dir).select(col("doc_id"),
           TextStats.langId(col("text")).as("pred_lang"))
         .orderBy("doc_id")),
-    "text_rollinghash" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
-      docs(s, dir).select(col("doc_id"),
-          expr("rolling_hash64(text)").as("rhash"))
-        .orderBy("doc_id")
-    }),
     "pdf_metadata" -> ((s, dir) => {
       // document-level metadata surface (version sniff, trailer /Info merge,
       // page-tree count, /Metadata XML, trailer /ID) — S2/S7/S15/S24
@@ -553,25 +446,6 @@ object SparkEntry {
             (id, r.text, r.decodeFailures.toLong)
           }
         }.toDF("doc_id", "text", "failures")
-        .orderBy("doc_id")
-    }),
-    "text_dedup_lines" -> ((s, dir) => {
-      // within-document duplicate-line removal (RefinedWeb-style
-      // preprocessing) as the native codegen'd `dedup_lines` expression —
-      // a pure per-row rewrite, ZERO shuffles at any corpus size. Both
-      // engines build the same multi-line input from `text` (planted
-      // duplicate lines + empty lines, plus a prefix line that collapses
-      // into a duplicate when the text is short), so first-wins order,
-      // empty-line preservation and the trailing-empty split contract are
-      // all gate-visible
-      graft.functions.GraftFunctions.register(s)
-      s.read.parquet(s"$dir/documents.parquet")
-        .where("doc_id % 2 = 0")
-        .selectExpr(
-          "doc_id",
-          """dedup_lines(concat(text, chr(10), 'dup-line', chr(10), substr(text, 1, 20),
-            |  chr(10), 'dup-line', chr(10), chr(10), 'dup-line', chr(10), chr(10), text)) AS text"""
-            .stripMargin)
         .orderBy("doc_id")
     }),
     "warc_roundtrip" -> ((s, dir) => {
@@ -683,32 +557,12 @@ object SparkEntry {
         }.toDF("doc_id", "arm", "allowed", "crawl_delay", "sitemap")
         .orderBy("doc_id", "arm")
     }),
-    "text_normalize" -> ((s, dir) => {
-      // Unicode NFC normalization (UAX #15) as the native codegen'd
-      // nfc_normalize expression — the CCNet-style cleanup stage before
-      // any fingerprinting: byte-distinct spellings of the same text must
-      // hash identically downstream. Both engines prepend the same
-      // combining-mark-rich prefix (combining acute/diaeresis/ring that
-      // must COMPOSE, Hangul L+V jamo that must compose algorithmically,
-      // and an fi-ligature U+FB01 that must SURVIVE — NFC, not NFKC), so
-      // composition, the codepoint delta and the already-normalized
-      // passthrough are all gate-visible
-      graft.functions.GraftFunctions.register(s)
-      s.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id"),
-          concat(lit("cafe\u0301 nai\u0308ve A\u030A \u1100\u1161 \uFB01sh "),
-            col("text")).as("raw"))
-        .selectExpr("doc_id", "nfc_normalize(raw) AS text",
-          "CAST(length(raw) - length(nfc_normalize(raw)) AS BIGINT) AS n_composed")
-        .orderBy("doc_id")
-    }),
     "dedup_corpus_lines" -> ((s, dir) => {
-      // CCNet-style CORPUS-WIDE line dedup (the cross-document complement
-      // of text_dedup_lines): both engines build the same 5-line input —
-      // a boilerplate line shared by every doc_id%7 class (cross-doc dup,
-      // planted twice so the within-doc repeat is also gate-visible), a
-      // unique content line, an empty line (always kept), and a second
-      // shared line keyed by doc_id%5 — so the corpus-wide
+      // CCNet-style CORPUS-WIDE line dedup: both engines build the same
+      // 5-line input — a boilerplate line shared by every doc_id%7 class
+      // (cross-doc dup, planted twice so the within-doc repeat is also
+      // gate-visible), a unique content line, an empty line (always kept),
+      // and a second shared line keyed by doc_id%5 — so the corpus-wide
       // first-occurrence-wins contract, empty-line preservation and
       // whole-doc reassembly are all oracle-checked
       s.read.parquet(s"$dir/documents.parquet")
@@ -1074,62 +928,6 @@ object SparkEntry {
       graft.sources.Frontier.allowed(targets, "url", robots)
         .orderBy("doc_id", "ord")
     }),
-    "quality_funnel" -> ((s, dir) => {
-      // composed keep/drop policy with first-failing-stage verdicts
-      // (Funnel.verdicts): urls synthesized as in url_block_domains
-      // (blocked arm %7==3 or sub5.example2.com), expected lang 'en'
-      // (the corpus text is English-ish; its lang COLUMN is an unrelated
-      // label) flipped to an impossible code on %13 (planted wrong_lang;
-      // the stage also fires naturally on the de-predicted tail), text
-      // replaced by a 7-word string on %9 (gopher word-count fail) or
-      // padded with a repeated bigram run on %6 (repetitive); the oracle
-      // recomputes EVERY stage from the same augmented inputs
-      import s.implicits._
-      val aug = docs(s, dir).select(col("doc_id"),
-        concat(lit("https://sub"), (col("doc_id") % 11).cast("string"),
-          lit(".example"), (col("doc_id") % 7).cast("string"),
-          lit(".com/p/"), col("doc_id").cast("string")).as("url"),
-        when(col("doc_id") % 13 === 0, lit("zz")).otherwise(lit("en")).as("lang"),
-        // the stopword-bearing prefix is what lets documents PASS gopher's
-        // ">= 2 distinct stop words" rule (the synthetic corpus has none) —
-        // without it every doc funnels out at gopher_fail and the
-        // repetitive/kept arms would be dead code in the gate
-        when(col("doc_id") % 9 === 0, lit("just nine short words that fail gopher"))
-          .when(col("doc_id") % 6 === 0,
-            concat(lit("the corpus and its text "), col("text"),
-              expr("repeat(' zqxw zqxw', 25)")))
-          .otherwise(concat(lit("the corpus and its text "), col("text")))
-          .as("text"))
-      val blocklist = Seq("example3.com", "sub5.example2.com", "absent.org")
-        .toDF("domain")
-      graft.functions.Funnel.verdicts(aug, "doc_id", "url", "lang", "text",
-          blocklist, minWords = 15)
-        .orderBy("doc_id")
-    }),
-    "host_caps" -> ((s, dir) => {
-      // per-host top-K cap (TopK.topKPerKey — typed combinable Aggregator,
-      // NOT a window: map-side state caps at K per key, the shuffle ships
-      // <=K rows per key per task): 7 host arms, deterministic integer
-      // scores with guaranteed ties so the id tie-break is gate-visible
-      val d = s.read.parquet(s"$dir/documents.parquet").select(
-        concat(lit("h"), (col("doc_id") % 7).cast("string"),
-          lit(".example.org")).as("host"),
-        ((col("doc_id") * 31) % 101).as("score"),
-        col("doc_id"))
-      graft.functions.TopK.topKPerKey(d, "host", "score", "doc_id", k = 3)
-        .orderBy("host", "rank")
-    }),
-    "split_assign" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-          graft.functions.Sampling.split(col("doc_id")).as("split"))
-        .orderBy("doc_id")),
-    "mix_token_budget" -> ((s, dir) =>
-      // corpus mixing: greedy hash-order prefix of each language up to a
-      // 2000-token budget (bucketized two-pass shape; see Sampling scaladoc)
-      graft.functions.Sampling.mixByTokenBudget(
-        docs(s, dir), "lang", "doc_id", "text", budget = 2000L)
-        .withColumnRenamed("grp", "lang")
-        .orderBy("lang", "doc_id")),
     "decontamination" -> ((s, dir) =>
       Dedup.crossGroupContamination(docs(s, dir), "doc_id", "text", "source")
         .orderBy("id_a", "id_b")),
@@ -1138,18 +936,6 @@ object SparkEntry {
       // count of distinct leaking 13-grams
       Dedup.ngramOverlapContamination(docs(s, dir), "doc_id", "text", "source")
         .orderBy("doc_id")),
-    "stratified_sample" -> ((s, dir) => {
-      // deterministic per-language sample: smallest hash buckets win —
-      // reproducible under re-runs/repartitioning, unlike rand() sampling
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("lang")
-        .orderBy(graft.functions.Sampling.bucket(col("doc_id")), col("doc_id"))
-      docs(s, dir)
-        .withColumn("rn", row_number().over(w))
-        .where(col("rn") <= 10)
-        .select(col("lang"), col("doc_id"))
-        .orderBy("lang", "doc_id")
-    }),
     "tokens_histogram" -> ((s, dir) =>
       // document-length distribution in 50-token buckets — the training-mix
       // length profile; one map-side-combined groupBy
@@ -1158,21 +944,6 @@ object SparkEntry {
         .select(expr("n div 50").as("bucket_50"))
         .groupBy("bucket_50").agg(count(lit(1)).as("n_docs"))
         .orderBy("bucket_50")),
-    "vocab_stats" -> ((s, dir) => {
-      // global term frequencies: classic explode -> map-side partial count
-      // -> single shuffle; top-50 with deterministic (count desc, term asc)
-      val words = docs(s, dir)
-        .select(explode(split(trim(col("text")), "\\s+")).as("term"))
-      words.groupBy("term").agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("term"))
-        .limit(50)
-    }),
-    "vocab_size_by_lang" -> ((s, dir) =>
-      docs(s, dir)
-        .select(col("lang"), explode(split(trim(col("text")), "\\s+")).as("term"))
-        .groupBy("lang")
-        .agg(countDistinct(col("term")).as("vocab"))
-        .orderBy("lang")),
     "tfidf_top_terms" -> ((s, dir) =>
       // per-document top-5 distinctive terms by tf·idf with an exact
       // integer-scaled idf (no ln() — engine-portable BIGINT score)
@@ -1183,27 +954,7 @@ object SparkEntry {
       // add-one smoothing) as an EXACT INTEGER ppm surrogate — the per-doc
       // sum is order-independent, so the fixpoint hash-gates where a float
       // log-prob sum cannot
-      TextStats.lmScore(docs(s, dir), "doc_id", "text").orderBy("doc_id")),
-    "vocab_bigrams_by_lang" -> ((s, dir) => {
-      // per-language top-5 bigrams (training-mix phrase profile): one
-      // explode -> map-side-combined groupBy -> per-lang WindowGroupLimit;
-      // ws materialized before the transform (CSE across the HOF boundary,
-      // same rationale as Dedup.shinglesFromWords)
-      import org.apache.spark.sql.expressions.Window
-      val withWs = docs(s, dir)
-        .select(col("lang"), split(trim(col("text")), "\\s+").as("ws"))
-        .where(size(col("ws")) >= 2)
-      val bg = withWs.select(col("lang"),
-        explode(transform(sequence(lit(0), size(col("ws")) - 2),
-          i => concat_ws(" ", element_at(col("ws"), i + 1), element_at(col("ws"), i + 2))))
-          .as("bigram"))
-      bg.groupBy("lang", "bigram").agg(count(lit(1)).as("n"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("lang").orderBy(col("n").desc, col("bigram"))))
-        .where(col("rn") <= 5)
-        .select(col("lang"), col("bigram"), col("n"))
-        .orderBy("lang", "bigram")
-    })
+      TextStats.lmScore(docs(s, dir), "doc_id", "text").orderBy("doc_id"))
   )
 
   /** DuckDB mirror of [[graft.pipeline.Corpus.pdfExpectedText]]: given list
@@ -1220,28 +971,6 @@ object SparkEntry {
     * 8-chunk page only; every other variant concatenates — they vary the
     * FILE layout (encryption, xref stream + ObjStm, /Prev chain, malformed
     * tolerances, linearized front-xref), not the operator stream. */
-  /** The greedy-packing recurrence as a recursive CTE (`p` = per-doc bin
-    * assignment), shared by the pack_sequences and pack_bins oracles so the
-    * overflow rule — the SQL twin of [[graft.pipeline.Packing.spills]] —
-    * exists in exactly one place on the SQL side too. */
-  private val packRecurrenceCte: String =
-    """WITH RECURSIVE d AS (
-           SELECT doc_id, doc_id % 16 AS stream,
-                  CAST(len(string_split(trim(text), ' ')) AS BIGINT) AS n_tokens,
-                  row_number() OVER (PARTITION BY doc_id % 16 ORDER BY doc_id) AS rn
-           FROM documents),
-         p AS (
-           SELECT doc_id, stream, n_tokens, rn,
-                  CAST(0 AS BIGINT) AS bin, n_tokens AS filled
-           FROM d WHERE rn = 1
-           UNION ALL
-           SELECT d.doc_id, d.stream, d.n_tokens, d.rn,
-                  CASE WHEN p.filled + d.n_tokens > 2048 AND p.filled > 0
-                       THEN p.bin + 1 ELSE p.bin END AS bin,
-                  CASE WHEN p.filled + d.n_tokens > 2048 AND p.filled > 0
-                       THEN d.n_tokens ELSE p.filled + d.n_tokens END AS filled
-           FROM d JOIN p ON d.stream = p.stream AND d.rn = p.rn + 1)"""
-
   private val pdfExpectedSql: String =
     """CASE
          WHEN v = 1 THEN array_to_string(ch, chr(10))
@@ -1423,15 +1152,6 @@ object SparkEntry {
                    UNION SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u WHERE e.v <> r.u)
          SELECT u AS doc_id, least(u, min(v)) AS cluster_rep
          FROM reach GROUP BY u ORDER BY doc_id""",
-    "dedup_embedding_cosine" ->
-      "SELECT vec_id AS id_a, vec_id + 100000 AS id_b FROM embeddings WHERE vec_id % 10 = 0 ORDER BY id_a",
-    // exact copies share every signature bit (Hamming 0 passes all bands)
-    // and no natural pair reaches cosine 0.95 in this corpus, so the
-    // LSH+exact-verify output equals the planted-copy set
-    "dedup_embedding_rplsh" ->
-      "SELECT vec_id AS id_a, vec_id + 100000 AS id_b FROM embeddings WHERE vec_id % 10 = 0 ORDER BY id_a",
-    "dedup_embedding_rplsh_mp" ->
-      "SELECT vec_id AS id_a, vec_id + 100000 AS id_b FROM embeddings WHERE vec_id % 10 = 0 ORDER BY id_a",
     "dedup_chunks" ->
       """WITH corpus AS (
            SELECT doc_id, text FROM documents
@@ -1443,37 +1163,6 @@ object SparkEntry {
          SELECT md5(chunk) AS fp, count(*) AS n,
                 min(doc_id) AS first_doc, CAST(min(pos) AS BIGINT) AS min_pos
          FROM ch GROUP BY 1 HAVING count(*) >= 2 ORDER BY fp""",
-    // greedy packing is a per-stream recurrence -> recursive CTE stepping
-    // row_number within each stream, reproducing the exact mapPartitions
-    // scan (same overflow rule — Packing.spills — same per-stream bin
-    // reset); ONE copy of the recurrence feeds both packing oracles
-    "pack_sequences" ->
-      (packRecurrenceCte +
-      """
-         SELECT doc_id, stream, bin, n_tokens FROM p ORDER BY doc_id"""),
-    // W=40, S=30 (overlap 10): chunk count 1 for n<=40 else
-    // ceil((n-40)/30)+1 = (n-11)//30 + 1; DuckDB list slice is 1-based
-    // inclusive, Spark slice(start, length) — both clamp at the end
-    "chunk_windows" ->
-      """WITH d AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
-                    FROM documents WHERE length(trim(text)) > 0),
-         k AS (SELECT doc_id, w, len(w) AS n,
-                 CASE WHEN len(w) <= 40 THEN 1 ELSE (len(w) - 11) // 30 + 1 END AS nc
-               FROM d),
-         c AS (SELECT doc_id, n, w, unnest(generate_series(0, nc - 1)) AS i FROM k)
-         SELECT doc_id, CAST(i AS BIGINT) AS chunk_idx,
-           CAST(least(40, n - i * 30) AS BIGINT) AS n_tokens,
-           array_to_string(w[i * 30 + 1 : i * 30 + 40], ' ') AS chunk
-         FROM c ORDER BY doc_id, chunk_idx""",
-    "pack_bins" ->
-      (packRecurrenceCte +
-      """
-         SELECT p.stream, p.bin, count(*) AS n_docs,
-                CAST(sum(p.n_tokens) AS BIGINT) AS tot_tokens,
-                md5(string_agg(doc.text, ' ' ORDER BY p.doc_id)) AS packed_fp,
-                CAST(length(string_agg(doc.text, ' ' ORDER BY p.doc_id)) AS BIGINT) AS packed_len
-         FROM p JOIN documents doc ON p.doc_id = doc.doc_id
-         GROUP BY p.stream, p.bin ORDER BY p.stream, p.bin"""),
     // positions whose 20-gram repeats corpus-wide, merged to maximal spans
     // by the pos - row_number gaps-and-islands identity
     "dedup_exact_spans" ->
@@ -1525,77 +1214,6 @@ object SparkEntry {
                 CAST(coalesce((1000 * (total_bg - distinct_bg)) // total_bg, 0) AS BIGINT) AS dup_bigram_permille,
                 (100 * char_sum) // n_words AS mean_word_len_centi
          FROM doc LEFT JOIN bgd ON bgd.doc_id = doc.doc_id ORDER BY doc_id""",
-    // arithmetic mirrored operation-for-operation in IEEE double:
-    // (x*127.0)/maxabs + 0.5, floor, with maxabs an exact max of |x|
-    "embedding_quantize" ->
-      """WITH e AS (SELECT vec_id, embedding,
-             list_max(list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))) AS maxabs
-           FROM embeddings)
-         SELECT vec_id AS id, CAST(i - 1 AS BIGINT) AS pos,
-           CAST(CASE WHEN maxabs = 0 THEN 0
-                ELSE floor((CAST(embedding[i] AS DOUBLE) * 127.0) / maxabs + 0.5) END AS BIGINT) AS qval
-         FROM (SELECT vec_id, embedding, maxabs,
-                 unnest(generate_series(1, len(embedding))) AS i FROM e)
-         ORDER BY id, pos""",
-    "ann_topk_bruteforce" ->
-      """WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10)
-         SELECT query_id, rank, neighbor_id FROM (
-           SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-             row_number() OVER (PARTITION BY q.vec_id
-               ORDER BY list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])) DESC,
-                        e.vec_id) AS rank
-           FROM q, embeddings e WHERE e.vec_id <> q.vec_id)
-         WHERE rank <= 5 ORDER BY query_id, rank""",
-    "ann_ivf" ->
-      """WITH cents AS (SELECT vec_id AS cid, embedding AS cemb FROM embeddings WHERE vec_id % 50 = 0),
-         assigned AS (
-           SELECT vec_id, embedding, cid FROM (
-             SELECT e.vec_id, e.embedding, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(c.cemb AS DOUBLE[])) DESC, c.cid) AS rn
-             FROM embeddings e, cents c)
-           WHERE rn = 1),
-         probes AS (
-           SELECT query_id, qemb, cid FROM (
-             SELECT e.vec_id AS query_id, e.embedding AS qemb, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(c.cemb AS DOUBLE[])) DESC, c.cid) AS rn
-             FROM embeddings e, cents c WHERE e.vec_id < 10)
-           WHERE rn <= 3)
-         SELECT query_id, rank, neighbor_id FROM (
-           SELECT p.query_id, a.vec_id AS neighbor_id,
-             row_number() OVER (PARTITION BY p.query_id
-               ORDER BY list_cosine_similarity(CAST(p.qemb AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])) DESC, a.vec_id) AS rank
-           FROM probes p JOIN assigned a ON a.cid = p.cid AND a.vec_id <> p.query_id)
-         WHERE rank <= 5 ORDER BY query_id, rank""",
-    // two-stage SQ8 search mirrored stage by stage: the coarse score is the
-    // integer dot product of the quantized vectors (same quantization
-    // arithmetic as embedding_quantize — exact in both engines), the pool
-    // boundary is deterministic on (idot DESC, id), and the re-rank is the
-    // same double cosine as ann_topk_bruteforce
-    "ann_quantized_rerank" ->
-      """WITH e AS (SELECT vec_id AS id, embedding,
-             list_max(list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))) AS maxabs
-           FROM embeddings),
-         qz AS (SELECT id, embedding,
-             list_transform(embedding, v -> CASE WHEN maxabs = 0 THEN CAST(0 AS BIGINT)
-                 ELSE CAST(floor((CAST(v AS DOUBLE) * 127.0) / maxabs + 0.5) AS BIGINT) END) AS qvec
-           FROM e),
-         q AS (SELECT id AS query_id, embedding AS qemb, qvec AS qq FROM qz WHERE id < 10),
-         coarse AS (SELECT q.query_id, q.qemb, c.id,
-             list_dot_product(q.qq, c.qvec) AS idot
-           FROM qz c JOIN q ON q.query_id <> c.id),
-         pool AS (SELECT query_id, qemb, id FROM (
-             SELECT query_id, qemb, id,
-               row_number() OVER (PARTITION BY query_id ORDER BY idot DESC, id) AS rn
-             FROM coarse) WHERE rn <= 25),
-         rr AS (SELECT p.query_id, f.id AS neighbor_id,
-             list_cosine_similarity(CAST(p.qemb AS DOUBLE[]), CAST(f.embedding AS DOUBLE[])) AS cos
-           FROM pool p JOIN qz f ON f.id = p.id)
-         SELECT query_id, rank, neighbor_id FROM (
-           SELECT query_id, neighbor_id,
-             row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-           FROM rr) WHERE rank <= 5 ORDER BY query_id, rank""",
     // key = the canonical form of the synthesized messy URL (url_canonical
     // oracles the canonicalization itself step by step; here the oracle
     // asserts the END RESULT — a broken canonicalizer shifts keys and fails
@@ -1640,24 +1258,6 @@ object SparkEntry {
     "text_fingerprint" ->
       """SELECT doc_id, md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g'))) AS fp
          FROM documents ORDER BY doc_id""",
-    "pii_scrub" ->
-      """WITH aug AS (
-           SELECT doc_id, text ||
-             CASE WHEN doc_id % 3 = 0 THEN ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com now' ELSE '' END ||
-             CASE WHEN doc_id % 5 = 0 THEN ' from 10.' || CAST(doc_id % 200 AS VARCHAR) || '.3.4' ELSE '' END ||
-             CASE WHEN doc_id % 7 = 0 THEN ' call +1 555-01' || lpad(CAST(doc_id % 100 AS VARCHAR), 2, '0') ELSE '' END AS t
-           FROM documents),
-         st AS (SELECT doc_id, t,
-             regexp_replace(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g') AS t1 FROM aug),
-         st2 AS (SELECT doc_id, t, t1,
-             regexp_replace(t1, '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b', '<IP>', 'g') AS t2 FROM st)
-         SELECT doc_id,
-           CAST(len(regexp_extract_all(t,  '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
-           CAST(len(regexp_extract_all(t1, '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b')) AS BIGINT) AS n_ips,
-           CAST(len(regexp_extract_all(t2, '\+[0-9][0-9 -]{6,}[0-9]')) AS BIGINT) AS n_phones,
-           md5(regexp_replace(t2, '\+[0-9][0-9 -]{6,}[0-9]', '<PHONE>', 'g')) AS redacted_fp,
-           CAST(length(regexp_replace(t2, '\+[0-9][0-9 -]{6,}[0-9]', '<PHONE>', 'g')) AS BIGINT) AS redacted_len
-         FROM st2 ORDER BY doc_id""",
     "text_quality_filter" ->
       """SELECT doc_id, CAST(len(string_split(trim(text), ' ')) AS BIGINT) AS n_words FROM documents
          WHERE len(string_split(trim(text), ' ')) BETWEEN 15 AND 100000
@@ -1700,16 +1300,6 @@ object SparkEntry {
                  AND n_stop_distinct >= 2
                 THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END AS keep
          FROM sig ORDER BY doc_id""",
-    // the window restatement is oracle-side only (DuckDB is single-node);
-    // the Spark side is the combinable top-K Aggregator, never a window
-    "host_caps" ->
-      """WITH d AS (SELECT 'h' || (doc_id % 7) || '.example.org' AS host,
-                           (doc_id * 31) % 101 AS score, doc_id FROM documents),
-         r AS (SELECT host, score, doc_id,
-                 row_number() OVER (PARTITION BY host ORDER BY score DESC, doc_id ASC) AS rank
-               FROM d)
-         SELECT host, CAST(rank AS BIGINT) AS rank, doc_id, CAST(score AS BIGINT) AS score
-         FROM r WHERE rank <= 3 ORDER BY host, rank""",
     // per-(host arm, probe path) verdicts in closed form: h0 blocks only
     // /private/, h1 allows only /public (longest-match), h2 blocks nothing,
     // h3's graftbot group blocks only *.pdf (shadowing the disallow-all *
@@ -1727,71 +1317,6 @@ object SparkEntry {
                 WHEN k = 3 THEN ord != 2
                 ELSE true END AS allowed
          FROM t ORDER BY doc_id, ord""",
-    // every funnel stage recomputed from the same augmented inputs: blocked
-    // arm in closed form, langid/gopher/repetition CTEs are the same
-    // restatements as their standalone oracles, applied to t
-    "quality_funnel" ->
-      """WITH aug AS (
-           SELECT doc_id,
-             CASE WHEN doc_id % 9 = 0 THEN 'just nine short words that fail gopher'
-                  WHEN doc_id % 6 = 0 THEN 'the corpus and its text ' || text || repeat(' zqxw zqxw', 25)
-                  ELSE 'the corpus and its text ' || text END AS t,
-             CASE WHEN doc_id % 13 = 0 THEN 'zz' ELSE 'en' END AS lg,
-             (doc_id % 7 = 3) OR (doc_id % 11 = 5 AND doc_id % 7 = 2) AS blocked
-           FROM documents),
-         lid AS (SELECT doc_id,
-           len(list_filter(string_split(lower(trim(t)), ' '), w -> w IN ('der','die','und','das','nicht','von','ist','mit','den','ein'))) AS h_de,
-           len(list_filter(string_split(lower(trim(t)), ' '), w -> w IN ('the','and','of','to','a','in','is','it','that','for'))) AS h_en,
-           len(list_filter(string_split(lower(trim(t)), ' '), w -> w IN ('el','la','de','que','y','en','un','los','del','las'))) AS h_es,
-           len(list_filter(string_split(lower(trim(t)), ' '), w -> w IN ('le','la','les','et','des','un','une','du','que','est'))) AS h_fr,
-           len(list_filter(string_split(lower(trim(t)), ' '), w -> w IN ('的','了','是','我','不','在','有','人','这','他'))) AS h_zh
-           FROM aug),
-         pred AS (SELECT doc_id, CASE
-           WHEN h_de = greatest(h_de,h_en,h_es,h_fr,h_zh) THEN 'de'
-           WHEN h_en = greatest(h_de,h_en,h_es,h_fr,h_zh) THEN 'en'
-           WHEN h_es = greatest(h_de,h_en,h_es,h_fr,h_zh) THEN 'es'
-           WHEN h_fr = greatest(h_de,h_en,h_es,h_fr,h_zh) THEN 'fr'
-           ELSE 'zh' END AS pred_lang FROM lid),
-         gsig AS (SELECT doc_id,
-             CAST(len(string_split_regex(trim(t), '\s+')) AS BIGINT) AS n_words,
-             CAST(length(regexp_replace(t, '\s+', '', 'g')) AS BIGINT) AS chars_in_words,
-             CAST(length(t) - length(replace(t, '#', '')) AS BIGINT) AS n_hash,
-             CAST((length(t) - length(replace(t, '...', ''))) // 3 AS BIGINT) AS n_ellipsis,
-             CAST(len(string_split(t, chr(10))) AS BIGINT) AS n_lines,
-             CAST(len(list_filter(string_split(t, chr(10)),
-               l -> starts_with(trim(l), '- ') OR starts_with(trim(l), '* '))) AS BIGINT) AS n_bullet_lines,
-             CAST(len(list_filter(string_split(t, chr(10)),
-               l -> ends_with(trim(l), '...'))) AS BIGINT) AS n_ellipsis_lines,
-             CAST(len(list_filter(string_split_regex(trim(t), '\s+'),
-               w -> regexp_matches(w, '[a-zA-Z]'))) AS BIGINT) AS n_alpha_words,
-             CAST(len(list_intersect(list_distinct(string_split_regex(lower(trim(t)), '\s+')),
-               ['the','be','to','of','and','that','have','with'])) AS BIGINT) AS n_stop_distinct
-           FROM aug),
-         gk AS (SELECT doc_id,
-           CASE WHEN n_words >= 15 AND n_words <= 100000
-                 AND chars_in_words >= n_words * 3 AND chars_in_words <= n_words * 10
-                 AND n_hash * 10 <= n_words AND n_ellipsis * 10 <= n_words
-                 AND n_bullet_lines * 10 <= n_lines * 9
-                 AND n_ellipsis_lines * 10 <= n_lines * 3
-                 AND n_alpha_words * 10 >= n_words * 8
-                 AND n_stop_distinct >= 2
-                THEN 1 ELSE 0 END AS keep FROM gsig),
-         d AS (SELECT doc_id, string_split(trim(t), ' ') AS ws FROM aug),
-         bg AS (SELECT doc_id, b, count(*) AS c FROM (
-                  SELECT doc_id, ws[i] || ' ' || ws[i+1] AS b
-                  FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 1)) AS i
-                        FROM d WHERE len(ws) >= 2)) GROUP BY 1, 2),
-         bgd AS (SELECT doc_id, (1000 * (sum(c) - count(*))) // sum(c) AS dup FROM bg GROUP BY 1)
-         SELECT aug.doc_id AS doc_id,
-           CASE WHEN blocked THEN 'blocked_url'
-                WHEN pred_lang != lg THEN 'wrong_lang'
-                WHEN keep = 0 THEN 'gopher_fail'
-                WHEN coalesce(dup, 0) >= 200 THEN 'repetitive'
-                ELSE 'kept' END AS verdict
-         FROM aug
-         JOIN pred USING (doc_id) JOIN gk USING (doc_id)
-         LEFT JOIN bgd USING (doc_id)
-         ORDER BY doc_id""",
     "text_langid" ->
       """WITH h AS (SELECT doc_id,
            len(list_filter(string_split(lower(trim(text)), ' '), w -> w IN ('der','die','und','das','nicht','von','ist','mit','den','ein'))) AS h_de,
@@ -1844,22 +1369,6 @@ object SparkEntry {
     "pdf_extract_hybrid_xref" ->
       """SELECT doc_id, text, CAST(0 AS BIGINT) AS failures
          FROM documents WHERE doc_id % 2 = 0 ORDER BY doc_id""",
-    // independent restatement: same constructed input, dedup via a
-    // first-occurrence window (empty lines always kept)
-    "text_dedup_lines" ->
-      """WITH d AS (SELECT doc_id,
-             text || chr(10) || 'dup-line' || chr(10) || substr(text, 1, 20)
-               || chr(10) || 'dup-line' || chr(10) || chr(10) || 'dup-line'
-               || chr(10) || chr(10) || text AS input
-           FROM documents WHERE doc_id % 2 = 0),
-         l AS (SELECT doc_id, unnest(string_split(input, chr(10))) AS line,
-                      unnest(generate_series(1, len(string_split(input, chr(10))))) AS ord
-               FROM d),
-         r AS (SELECT doc_id, line, ord,
-                      row_number() OVER (PARTITION BY doc_id, line ORDER BY ord) AS rn
-               FROM l)
-         SELECT doc_id, string_agg(line, chr(10) ORDER BY ord) AS text
-         FROM r WHERE rn = 1 OR line = '' GROUP BY doc_id ORDER BY doc_id""",
     // every column is a closed form of doc_id/text — the builder and the
     // reader are independent of this restatement
     "warc_roundtrip" ->
@@ -1939,17 +1448,6 @@ object SparkEntry {
                      ELSE NULL END AS crawl_delay,
                 'https://example.org/' || doc_id || '/sitemap.xml' AS sitemap
          FROM documents CROSS JOIN arms ORDER BY doc_id, arm""",
-    // same decomposed prefix (chr() is codepoint-based in DuckDB), same
-    // NFC function from DuckDB's utf8proc — two independent UAX #15
-    // implementations must produce byte-identical output
-    "text_normalize" ->
-      """WITH d AS (SELECT doc_id,
-             'cafe'||chr(769)||' nai'||chr(776)||'ve A'||chr(778)||' '||
-               chr(4352)||chr(4449)||' '||chr(64257)||'sh '||text AS raw
-           FROM documents)
-         SELECT doc_id, nfc_normalize(raw) AS text,
-                CAST(length(raw) - length(nfc_normalize(raw)) AS BIGINT) AS n_composed
-         FROM d ORDER BY doc_id""",
     // independent restatement: same constructed input, corpus-wide
     // first-occurrence via a window over (doc_id, position); empty lines
     // always kept; docs losing every line come back as empty husks
@@ -2197,27 +1695,6 @@ object SparkEntry {
                  OR host = 'sub5.example2.com' OR host LIKE '%.sub5.example2.com'
                  OR host = 'absent.org' OR host LIKE '%.absent.org')
          ORDER BY doc_id""",
-    // ((id%P)*(K%P))%P == (id*K)%P mathematically, but stays exact in
-    // 64-bit for every id (the direct product overflows at id >= ~3.5e9);
-    // 427799 = 2654435761 % 1000003
-    "split_assign" ->
-      """SELECT doc_id, CASE WHEN ((doc_id % 1000003) * 427799) % 1000003 % 100 < 80 THEN 'train'
-         WHEN ((doc_id % 1000003) * 427799) % 1000003 % 100 < 90 THEN 'val' ELSE 'test' END AS split
-         FROM documents ORDER BY doc_id""",
-    // the bucketized two-pass selection collapses to ONE window cumsum in
-    // the oracle: greedy prefix = rows whose cumulative-before is under
-    // budget, ordered by (knuth-hash, doc_id) within the language
-    "mix_token_budget" ->
-      """WITH t AS (SELECT lang, doc_id,
-             CAST(len(string_split(trim(text), ' ')) AS BIGINT) AS n_tokens,
-             ((doc_id % 1000003) * 427799) % 1000003 AS ok
-           FROM documents),
-         c AS (SELECT lang, doc_id, n_tokens,
-             sum(n_tokens) OVER (PARTITION BY lang ORDER BY ok, doc_id
-                                 ROWS UNBOUNDED PRECEDING) AS cum
-           FROM t)
-         SELECT lang, doc_id, n_tokens FROM c
-         WHERE cum - n_tokens < 2000 ORDER BY lang, doc_id""",
     "decontamination" ->
       """WITH docs2 AS (SELECT doc_id, text, source, string_split(trim(text), ' ') AS ws FROM documents),
          sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS sh
@@ -2241,24 +1718,10 @@ object SparkEntry {
                 CAST(count(DISTINCT a.sh) AS BIGINT) AS shared_ngrams
          FROM sh a JOIN sh b ON a.sh = b.sh AND a.source <> b.source
          GROUP BY 1, 2 ORDER BY doc_id""",
-    "stratified_sample" ->
-      """SELECT lang, doc_id FROM (
-           SELECT lang, doc_id, row_number() OVER (PARTITION BY lang
-             ORDER BY ((doc_id % 1000003) * 427799) % 1000003 % 100, doc_id) AS rn
-           FROM documents)
-         WHERE rn <= 10 ORDER BY lang, doc_id""",
     "tokens_histogram" ->
       """SELECT len(string_split(trim(text), ' ')) // 50 AS bucket_50,
                 count(*) AS n_docs
          FROM documents GROUP BY 1 ORDER BY bucket_50""",
-    "vocab_stats" ->
-      """SELECT term, count(*) AS n FROM (
-           SELECT unnest(string_split(trim(text), ' ')) AS term FROM documents)
-         GROUP BY term ORDER BY n DESC, term LIMIT 50""",
-    "vocab_size_by_lang" ->
-      """SELECT lang, CAST(count(DISTINCT term) AS BIGINT) AS vocab FROM (
-           SELECT lang, unnest(string_split(trim(text), ' ')) AS term FROM documents)
-         GROUP BY lang ORDER BY lang""",
     // independent restatement of the integer bigram-LM surrogate; DuckDB
     // SUM(BIGINT) widens to HUGEINT (exact), so only the outputs cast
     "lm_score" ->
@@ -2277,15 +1740,6 @@ object SparkEntry {
                 CAST(SUM(ppm) AS BIGINT) AS sum_ppm,
                 CAST(SUM(ppm) // count(*) AS BIGINT) AS avg_ppm
          FROM sc GROUP BY doc_id ORDER BY doc_id""",
-    "vocab_bigrams_by_lang" ->
-      """WITH d AS (SELECT lang, string_split(trim(text), ' ') AS ws FROM documents
-                    WHERE len(string_split(trim(text), ' ')) >= 2),
-         bg AS (SELECT lang, ws[i] || ' ' || ws[i+1] AS bigram
-                FROM (SELECT lang, ws, unnest(generate_series(1, len(ws) - 1)) AS i FROM d)),
-         cnt AS (SELECT lang, bigram, count(*) AS n FROM bg GROUP BY 1, 2),
-         r AS (SELECT lang, bigram, n,
-                 row_number() OVER (PARTITION BY lang ORDER BY n DESC, bigram) AS rn FROM cnt)
-         SELECT lang, bigram, n FROM r WHERE rn <= 5 ORDER BY lang, bigram""",
     // SimHash restricted to normalized-exact-duplicate pairs (see the query
     // comment): banding surfaces every Hamming≤3 pair, equal CASE-SENSITIVE
     // normalized text gives Hamming 0, so the restricted output =
@@ -2302,25 +1756,7 @@ object SparkEntry {
                 FROM corpus)
          SELECT a.doc_id AS id_a, b.doc_id AS id_b
          FROM fp a JOIN fp b ON a.fp = b.fp AND a.doc_id < b.doc_id
-         ORDER BY id_a, id_b""",
-    // rolling_hash64 = fold over UTF-8 bytes of h*1099511628211 + byte,
-    // 64-bit wrapping, seeded with the FNV offset basis — replayed in DuckDB
-    // as a HUGEINT list_reduce mod 2^64 over the hex-decoded byte list.
-    "text_rollinghash" ->
-      """SELECT doc_id,
-           CAST(CASE WHEN h >= 9223372036854775808::HUGEINT
-                     THEN h - 18446744073709551616::HUGEINT ELSE h END AS BIGINT) AS rhash
-         FROM (
-           SELECT doc_id,
-             list_reduce(
-               list_prepend(14695981039346656037::HUGEINT,
-                 list_transform(generate_series(1, length(hx) // 2), i ->
-                   CAST((strpos('0123456789ABCDEF', substr(hx, 2*i-1, 1)) - 1) * 16
-                      + strpos('0123456789ABCDEF', substr(hx, 2*i, 1)) - 1 AS HUGEINT))),
-               (a, b) -> (a * 1099511628211::HUGEINT + b) % 18446744073709551616::HUGEINT
-             ) AS h
-           FROM (SELECT doc_id, hex(encode(text)) AS hx FROM documents))
-         ORDER BY doc_id"""
+         ORDER BY id_a, id_b"""
   )
 
   /** Exact word-3-gram Jaccard ≥ 0.8 pairs, computed natively by DuckDB —

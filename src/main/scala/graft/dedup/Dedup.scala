@@ -32,10 +32,9 @@ import scala.util.hashing.MurmurHash3
   *
   * CACHE LIFECYCLE: the operators that build a capped inverted index or
   * candidate set ([[ngramJaccardPairs]], [[minhashCandidates]],
-  * [[minhashDedupPairs]], [[ngramOverlapContamination]], [[simhashPairs]],
-  * `Ann.rplshCosineDupPairs`) persist that index (MEMORY_AND_DISK,
-  * evictable) so the expensive explode runs once per query instead of once
-  * per downstream join. Every such cache is registered centrally; a
+  * [[minhashDedupPairs]], [[ngramOverlapContamination]], [[simhashPairs]])
+  * persist that index (MEMORY_AND_DISK, evictable) so the expensive explode
+  * runs once per query instead of once per downstream join. Every such cache is registered centrally; a
   * long-lived session that issues dedup queries in a loop should call
   * [[clearCaches]] between batches — results already materialized are
   * unaffected. DedupSpec's cache-lifecycle test pins the invariant that two
@@ -80,8 +79,7 @@ object Dedup {
 
   /** Register an already-persisted frame with the operator-cache lifecycle so
     * [[clearCaches]] releases it (used by the operators here and by
-    * `Ann.kmeansCentroids`, whose per-round centroid caches follow the same
-    * discipline). */
+    * `TextStats.lmScore`). */
   private[graft] def registerCache(df: DataFrame): Unit =
     liveCaches.synchronized { liveCaches += df }
 
@@ -150,10 +148,7 @@ object Dedup {
     * only at its FIRST occurrence corpus-wide (ordered by (doc id, line
     * position) — deterministic regardless of partitioning), and rewrite
     * each document from its surviving lines. Empty lines always survive:
-    * they carry paragraph structure, not content (same contract as the
-    * per-document `dedup_lines` expression this composes with — run the
-    * per-doc pass first to shrink the explode, then this pass to kill the
-    * cross-document boilerplate the per-doc pass cannot see).
+    * they carry paragraph structure, not content.
     *
     * Shape at 10^12 docs — three bounded shuffles, no windows, no
     * all-pairs step:

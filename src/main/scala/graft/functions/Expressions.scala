@@ -58,42 +58,6 @@ object PdfExtractExpr {
     ThreadLocal.withInitial(() => new WorkBuffers())
 }
 
-/** `rolling_hash64(text)` → BIGINT: 64-bit Rabin-Karp polynomial fingerprint
-  * over the UTF-8 bytes. A native expression WITH `doGenCode` (not a UDF):
-  * the generated code is a direct static-style call, so the whole projection
-  * stays inside one WholeStageCodegen span with no boxing or row-conversion
-  * at the expression boundary. */
-case class RollingHash64Expr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"rolling_hash64 expects STRING, got ${child.dataType.catalogString}")
-  override def prettyName: String = "rolling_hash64"
-
-  override def nullSafeEval(input: Any): Any =
-    RollingHash64.hash(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.RollingHash64.hash($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): RollingHash64Expr =
-    copy(child = newChild)
-}
-
-object RollingHash64 {
-  final val Base = 1099511628211L // FNV prime as the polynomial base
-
-  /** Java-static entry (called from generated code). */
-  def hash(s: UTF8String): Long = {
-    val bytes = s.getBytes
-    var h = 0xcbf29ce484222325L
-    var i = 0
-    while (i < bytes.length) { h = h * Base + (bytes(i) & 0xff); i += 1 }
-    h
-  }
-}
-
 /** `simhash64(text)` → BIGINT: Charikar/Manku 64-bit SimHash over word
   * 4-shingles — the same function the dedup operators use
   * ([[graft.dedup.Dedup.simhash64]]), surfaced as a native expression with
@@ -166,149 +130,33 @@ object MinhashBands {
   }
 }
 
-/** `dedup_lines(text)` → STRING: within-document duplicate-line removal —
-  * the RefinedWeb/CCNet-style preprocessing step that drops repeated exact
-  * lines (navigation remnants, boilerplate echoes) keeping the FIRST
-  * occurrence in order. Empty lines are never treated as duplicates: they
-  * carry paragraph structure, not content. Pure per-row rewrite — a native
-  * `doGenCode` expression, so at 10^12 rows it runs inside WholeStageCodegen
-  * with ZERO shuffles (contrast the corpus-wide operators in
-  * [[graft.dedup.Dedup]], which this composes with, not replaces). */
-case class DedupLinesExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"dedup_lines expects STRING, got ${child.dataType.catalogString}")
-  override def prettyName: String = "dedup_lines"
-
-  override def nullSafeEval(input: Any): Any =
-    DedupLines.dedup(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.DedupLines.dedup($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): DedupLinesExpr =
-    copy(child = newChild)
-}
-
-object DedupLines {
-  /** Java-static entry (called from generated code). Split limit -1 keeps
-    * trailing empty lines (DuckDB string_split parity — Java's default
-    * limit 0 silently drops them). */
-  def dedup(s: UTF8String): UTF8String = {
-    val text = s.toString
-    if (text.indexOf('\n') < 0) return s // fast path: single line, no copy
-    val lines = text.split("\n", -1)
-    val seen = new java.util.HashSet[String](lines.length * 2)
-    val out = new java.lang.StringBuilder(text.length)
-    var first = true
-    var i = 0
-    while (i < lines.length) {
-      val line = lines(i)
-      if (line.isEmpty || seen.add(line)) {
-        if (!first) out.append('\n')
-        out.append(line)
-        first = false
-      }
-      i += 1
-    }
-    UTF8String.fromString(out.toString)
-  }
-}
-
-/** `nfc_normalize(text)` → STRING: Unicode NFC normalization (canonical
-  * decomposition + canonical composition, UAX #15) — the standard first
-  * stage of a web-text cleaning pipeline (CCNet normalizes before hashing;
-  * two byte-distinct spellings of "café" must dedup together). NFC, not
-  * NFKC: compatibility characters (ligatures, full-width forms) are
-  * CONTENT and survive. Native `doGenCode` expression; the common
-  * already-normalized case is detected with `Normalizer.isNormalized` and
-  * returns the input UTF8String with no copy. */
-case class NfcNormalizeExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"nfc_normalize expects STRING, got ${child.dataType.catalogString}")
-  override def prettyName: String = "nfc_normalize"
-
-  override def nullSafeEval(input: Any): Any =
-    NfcNormalize.normalize(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.NfcNormalize.normalize($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): NfcNormalizeExpr =
-    copy(child = newChild)
-}
-
-object NfcNormalize {
-  /** Java-static entry (called from generated code). */
-  def normalize(s: UTF8String): UTF8String = {
-    val str = s.toString
-    if (java.text.Normalizer.isNormalized(str, java.text.Normalizer.Form.NFC)) s
-    else UTF8String.fromString(
-      java.text.Normalizer.normalize(str, java.text.Normalizer.Form.NFC))
-  }
-}
-
 /** Function registration: either through `SparkSessionExtensions` (config
   * `spark.sql.extensions=graft.functions.GraftExtensions`) or imperatively
   * on a live session via [[GraftFunctions.register]]. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftFunctions.pdfExtractDesc)
-    ext.injectFunction(GraftFunctions.rollingHashDesc)
-    ext.injectFunction(GraftFunctions.simHashDesc)
-    ext.injectFunction(GraftFunctions.minhashBandsDesc)
-    ext.injectFunction(GraftFunctions.dedupLinesDesc)
-    ext.injectFunction(GraftFunctions.nfcNormalizeDesc)
-  }
+  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
+    GraftFunctions.all.foreach(ext.injectFunction)
 }
 
 object GraftFunctions {
   type FunctionDescription =
     (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  val pdfExtractDesc: FunctionDescription = (
-    FunctionIdentifier("pdf_extract"),
-    new ExpressionInfo(classOf[PdfExtractExpr].getName, "pdf_extract"),
-    (children: Seq[Expression]) => PdfExtractExpr(children.head))
+  private def describe(name: String, cls: Class[_])(
+      build: Expression => Expression): FunctionDescription =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+      (children: Seq[Expression]) => build(children.head))
 
-  val rollingHashDesc: FunctionDescription = (
-    FunctionIdentifier("rolling_hash64"),
-    new ExpressionInfo(classOf[RollingHash64Expr].getName, "rolling_hash64"),
-    (children: Seq[Expression]) => RollingHash64Expr(children.head))
-
-  val simHashDesc: FunctionDescription = (
-    FunctionIdentifier("simhash64"),
-    new ExpressionInfo(classOf[SimHash64Expr].getName, "simhash64"),
-    (children: Seq[Expression]) => SimHash64Expr(children.head))
-
-  val minhashBandsDesc: FunctionDescription = (
-    FunctionIdentifier("minhash_bands"),
-    new ExpressionInfo(classOf[MinhashBandsExpr].getName, "minhash_bands"),
-    (children: Seq[Expression]) => MinhashBandsExpr(children.head))
-
-  val dedupLinesDesc: FunctionDescription = (
-    FunctionIdentifier("dedup_lines"),
-    new ExpressionInfo(classOf[DedupLinesExpr].getName, "dedup_lines"),
-    (children: Seq[Expression]) => DedupLinesExpr(children.head))
-
-  val nfcNormalizeDesc: FunctionDescription = (
-    FunctionIdentifier("nfc_normalize"),
-    new ExpressionInfo(classOf[NfcNormalizeExpr].getName, "nfc_normalize"),
-    (children: Seq[Expression]) => NfcNormalizeExpr(children.head))
+  /** Every SQL function this library defines; both entry points register
+    * exactly this list. */
+  val all: Seq[FunctionDescription] = Seq(
+    describe("pdf_extract", classOf[PdfExtractExpr])(PdfExtractExpr(_)),
+    describe("simhash64", classOf[SimHash64Expr])(SimHash64Expr(_)),
+    describe("minhash_bands", classOf[MinhashBandsExpr])(MinhashBandsExpr(_)))
 
   /** Imperative registration on an existing session. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.registerFunction(pdfExtractDesc._1, pdfExtractDesc._2, pdfExtractDesc._3)
-    reg.registerFunction(rollingHashDesc._1, rollingHashDesc._2, rollingHashDesc._3)
-    reg.registerFunction(simHashDesc._1, simHashDesc._2, simHashDesc._3)
-    reg.registerFunction(minhashBandsDesc._1, minhashBandsDesc._2, minhashBandsDesc._3)
-    reg.registerFunction(dedupLinesDesc._1, dedupLinesDesc._2, dedupLinesDesc._3)
-    reg.registerFunction(nfcNormalizeDesc._1, nfcNormalizeDesc._2, nfcNormalizeDesc._3)
+    all.foreach { case (id, info, builder) => reg.registerFunction(id, info, builder) }
   }
 }

@@ -1,9 +1,8 @@
 package graft
 
-import graft.functions.{DedupLines, GraftFunctions, RollingHash64}
+import graft.functions.GraftFunctions
 import graft.pipeline.Corpus
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -92,77 +91,27 @@ class ExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage.toLowerCase.contains("binary") || e.getMessage.contains("DATATYPE"))
   }
 
-  test("rolling_hash64 matches the reference implementation and stays in codegen") {
-    // spark.range source so the projection is NOT constant-folded into a
-    // LocalTableScan — the plan must show a codegen'd stage
-    val df = spark.range(3).selectExpr("concat('doc ', id) AS t")
-      .selectExpr("t", "rolling_hash64(t) AS h")
-    val got = df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    (0 until 3).map(i => s"doc $i").foreach { s =>
-      assert(got(s) == RollingHash64.hash(UTF8String.fromString(s)))
-    }
-    // the projection must be inside a WholeStageCodegen span (native
-    // doGenCode): the '*(n)' prefix marks codegen'd operators
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.linesIterator.next().trim.startsWith("*(") &&
-      plan.contains("rolling_hash64"), plan)
-  }
-
-  test("dedup_lines: first-wins order, empty lines kept, trailing empties preserved, codegen'd") {
-    def d(s: String): String =
-      DedupLines.dedup(UTF8String.fromString(s)).toString
-    assert(d("a\nb\na\n\n\nb") == "a\nb\n\n")       // dups dropped, empties kept
-    assert(d("single line no newline") == "single line no newline") // fast path
-    assert(d("x\nx\nx") == "x")                      // run of dups
-    assert(d("") == "")
-    assert(d("\n\n") == "\n\n")                      // empties are never dups
-    assert(d("a\n") == "a\n")                        // trailing empty survives (split -1)
-    // non-constant source so the projection stays a codegen'd stage
-    val df = spark.range(3)
-      .selectExpr("concat('l', id % 2, chr(10), 'l0', chr(10), 'l', id % 2) AS t")
-      .selectExpr("t", "dedup_lines(t) AS out")
-    val got = df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(got("l0\nl0\nl0") == "l0")
-    assert(got("l1\nl0\nl1") == "l1\nl0")
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.linesIterator.next().trim.startsWith("*(") && plan.contains("dedup_lines"), plan)
-  }
-
-  test("nfc_normalize: composes combining marks and jamo, keeps ligatures, codegen'd") {
-    def n(x: String): String =
-      graft.functions.NfcNormalize.normalize(UTF8String.fromString(x)).toString
-    assert(n("cafe\u0301") == "caf\u00e9")         // e + combining acute -> e-acute
-    assert(n("A\u030A") == "\u00c5")               // A + combining ring
-    assert(n("\u1100\u1161") == "\uac00")          // Hangul L+V jamo compose
-    assert(n("\uFB01sh") == "\uFB01sh")             // NFC, not NFKC: ligature survives
-    assert(n("plain ascii") == "plain ascii")
-    assert(n("") == "")
-    // already-NFC input returns the SAME UTF8String (no copy)
-    val u = UTF8String.fromString("caf\u00e9 already")
-    assert(graft.functions.NfcNormalize.normalize(u) eq u)
-    // non-constant source (spark.range, like the other expression tests \u2014
-    // a local Seq folds into LocalTableScan) so the projection stays a
-    // codegen'd stage; the combining mark rides a SQL string literal
-    val df = spark.range(3)
-      .selectExpr("concat('v', id, '-e\u0301') AS t")
-      .selectExpr("t", "nfc_normalize(t) AS out")
-    val got = df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    (0 until 3).foreach { i =>
-      assert(got(s"v$i-e\u0301") == s"v$i-\u00e9")
-    }
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.linesIterator.next().trim.startsWith("*(") && plan.contains("nfc_normalize"), plan)
-  }
-
   test("GraftExtensions wires both function builders") {
     // getOrCreate would reuse the suite session and ignore the extensions
-    // config, so apply the injector directly and check the builders.
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    // config, so apply the injector directly and record what it injects.
+    import GraftFunctions.FunctionDescription
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+    val injected = scala.collection.mutable.Buffer.empty[FunctionDescription]
+    val ext = new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit = {
+        injected += f
+        super.injectFunction(f)
+      }
+    }
     new graft.functions.GraftExtensions()(ext)
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    assert(GraftFunctions.pdfExtractDesc._3(Seq(Literal(Array[Byte](1))))
-      .isInstanceOf[graft.functions.PdfExtractExpr])
-    assert(GraftFunctions.rollingHashDesc._3(Seq(Literal("x")))
-      .isInstanceOf[graft.functions.RollingHash64Expr])
+    assert(injected.toSeq == GraftFunctions.all)
+    val names = GraftFunctions.all.map(_._1.funcName)
+    assert(names == Seq("pdf_extract", "simhash64", "minhash_bands"))
+    // register() adds exactly `all` to the builtins: a function dropped
+    // from the list no longer resolves in the session
+    val builtin = FunctionRegistry.builtin.listFunction().map(_.funcName).toSet
+    val added = spark.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).filterNot(builtin).toSet
+    assert(added == names.toSet, added)
   }
 }

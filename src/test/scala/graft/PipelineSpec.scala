@@ -265,7 +265,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("query inventory: every query has an oracle and the count is pinned") {
     // the README/NOTES quote this number; pinning it here keeps the prose
     // from drifting (r4 verdict item 7). Update BOTH on every new query.
-    assert(SparkEntry.queries.size == 86,
+    assert(SparkEntry.queries.size == 64,
       s"queries=${SparkEntry.queries.size} — update this pin AND README.md")
     assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet,
       "every query needs a DuckDB oracle (and no orphaned oracles): " +
@@ -291,32 +291,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(work == Set("u2", "u3", "u5"))
   }
 
-  test("TopK.topKPerKey: rank order, tie-break, partitioning independence, guards") {
-    import spark.implicits._
-    val rows = Seq(
-      ("a", 5L, 10L), ("a", 9L, 11L), ("a", 9L, 3L), ("a", 1L, 12L), ("a", 7L, 2L),
-      ("b", 4L, 20L),
-      // Long.MinValue score must rank LAST, not overflow to best
-      ("c", Long.MinValue, 30L), ("c", 0L, 31L))
-    def run(parts: Int) = graft.functions.TopK.topKPerKey(
-        rows.toDF("k", "score", "id").repartition(parts), "k", "score", "id", 3)
-      .as[(String, Long, Long, Long)].collect().sortBy(r => (r._1, r._2)).toSeq
-    val expected = Seq(
-      ("a", 1L, 3L, 9L), ("a", 2L, 11L, 9L), ("a", 3L, 2L, 7L), // id asc on the 9-tie
-      ("b", 1L, 20L, 4L),
-      ("c", 1L, 31L, 0L), ("c", 2L, 30L, Long.MinValue))
-    assert(run(1) == expected)
-    assert(run(7) == expected) // merge path: same result on any partitioning
-    intercept[IllegalArgumentException] {
-      graft.functions.TopK.topKPerKey(
-        Seq(("a", 1.5, 1L)).toDF("k", "score", "id"), "k", "score", "id", 3)
-    }
-    intercept[IllegalArgumentException] {
-      graft.functions.TopK.topKPerKey(
-        Seq((1L, 1L, 1L)).toDF("k", "score", "id"), "k", "score", "id", 3)
-    }
-  }
-
   test("Frontier.allowed: per-host policies, missing robots, null url, columns preserved") {
     import spark.implicits._
     val targets = Seq(
@@ -336,98 +310,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dup = Seq(("a.com", "User-agent: *\nDisallow: /private/"),
       ("a.com", "User-agent: *\nDisallow: /private/")).toDF("host", "robots_txt")
     assert(graft.sources.Frontier.allowed(targets, "url", dup).count() == 5)
-  }
-
-  test("Funnel: first-fail verdict order and attrition report") {
-    import spark.implicits._
-    // all-distinct bigrams (dup 0), gopher-clean, langId-predicts-en
-    val good = "the be to of and that have with " +
-      (1 to 60).map("word" + _).mkString(" ")
-    val docs = Seq(
-      // blocked AND wrong lang: blocked_url wins (stage order)
-      (1L, "https://x.bad.com/p", "zz", good),
-      (2L, "https://ok.com/p", "zz", good),                   // wrong_lang
-      (3L, "https://ok.com/p", "en", "the and of to a few"),  // gopher_fail (6 words)
-      (4L, "https://ok.com/p", "en",
-        good + (" zqzqzq zqzqzq" * 400)),                     // repetitive
-      (5L, "https://ok.com/p", "en", good),                   // kept
-      // extraction-failed documents fail CLOSED, never "kept"
-      (6L, "https://ok.com/p", "en", null.asInstanceOf[String]),
-      (7L, "https://ok.com/p", "en", "   ")
-    ).toDF("doc_id", "url", "lang", "text")
-    val bl = Seq("bad.com").toDF("domain")
-    val v = graft.functions.Funnel
-      .verdicts(docs, "doc_id", "url", "lang", "text", bl, minWords = 15)
-    assert(v.as[(Long, String)].collect().toMap == Map(
-      1L -> "blocked_url", 2L -> "wrong_lang", 3L -> "gopher_fail",
-      4L -> "repetitive", 5L -> "kept",
-      6L -> "gopher_fail", 7L -> "gopher_fail"))
-    val r = graft.functions.Funnel.report(v)
-      .as[(Long, String, Long, Long)].collect().toSeq
-    assert(r == Seq(
-      (0L, "blocked_url", 1L, 6L), (1L, "wrong_lang", 1L, 5L),
-      (2L, "gopher_fail", 3L, 2L), (3L, "repetitive", 1L, 1L),
-      (4L, "kept", 0L, 1L)))
-    // a stage that drops nothing still appears with n_dropped = 0
-    val r2 = graft.functions.Funnel
-      .report(Seq("kept", "kept").toDF("verdict"))
-      .as[(Long, String, Long, Long)].collect().toSeq
-    assert(r2.map(x => (x._2, x._3, x._4)) == Seq(
-      ("blocked_url", 0L, 2L), ("wrong_lang", 0L, 2L), ("gopher_fail", 0L, 2L),
-      ("repetitive", 0L, 2L), ("kept", 0L, 2L)))
-  }
-
-  test("chunkWindows: boundaries, overlap content, tail chunk, empty docs") {
-    import spark.implicits._
-    def words(n: Int): String = (1 to n).map("w" + _).mkString(" ")
-    val docs = Seq(
-      (1L, words(5)),   // n <= W: one chunk
-      (2L, words(10)),  // n == W exactly: one chunk
-      (3L, words(16)),  // tail chunk of 16 - 6 = 10? no: starts 0,6 -> 10 tokens
-      (4L, words(22)),  // starts 0,6,12 -> last = 10 tokens ending at 22
-      (5L, "   "),      // whitespace-only: no chunks
-      (6L, words(11))   // one past W: second chunk is the 6-token overlap tail
-    ).toDF("doc_id", "text")
-    val out = graft.functions.Chunking
-      .chunkWindows(docs, "doc_id", "text", windowTokens = 10, overlapTokens = 4)
-      .as[(Long, Long, Long, String)].collect()
-      .groupBy(_._1).view.mapValues(_.sortBy(_._2).toSeq).toMap
-    assert(out(1L) == Seq((1L, 0L, 5L, words(5))))
-    assert(out(2L) == Seq((2L, 0L, 10L, words(10))))
-    // stride 6: chunk 1 = w7..w16 — shares w7..w10 with chunk 0 (overlap 4)
-    assert(out(3L) == Seq(
-      (3L, 0L, 10L, (1 to 10).map("w" + _).mkString(" ")),
-      (3L, 1L, 10L, (7 to 16).map("w" + _).mkString(" "))))
-    assert(out(4L).map(c => (c._2, c._4.split(" ").head, c._4.split(" ").last, c._3)) ==
-      Seq((0L, "w1", "w10", 10L), (1L, "w7", "w16", 10L), (2L, "w13", "w22", 10L)))
-    assert(!out.contains(5L))
-    assert(out(6L) == Seq(
-      (6L, 0L, 10L, (1 to 10).map("w" + _).mkString(" ")),
-      (6L, 1L, 5L, (7 to 11).map("w" + _).mkString(" "))))
-    // every chunk but the last is exactly W tokens; concatenating chunks at
-    // stride offsets reproduces the document (no token lost or duplicated
-    // beyond the declared overlap)
-    intercept[IllegalArgumentException] {
-      graft.functions.Chunking.chunkWindows(docs, "doc_id", "text", 10, 10)
-    }
-    intercept[IllegalArgumentException] {
-      graft.functions.Chunking.chunkWindows(docs, "doc_id", "text", 0, 0)
-    }
-  }
-
-  test("packSequences / mixByTokenBudget refuse non-integral id columns") {
-    import spark.implicits._
-    // a fractional id truncates under cast("long") — distinct docs silently
-    // merge into one doc_id/stream — and a non-numeric id nulls out and
-    // dies later in the tuple encoder with an opaque error
-    val rows = Seq((1.5, "g", "a b c"), (2.0, "g", "d e"))
-      .toDF("doc_id", "grp", "text")
-    val e1 = intercept[IllegalArgumentException](
-      graft.pipeline.Packing.packSequences(rows, "doc_id", "text", 8L, 2))
-    assert(e1.getMessage.contains("must be integral"))
-    val e2 = intercept[IllegalArgumentException](
-      graft.functions.Sampling.mixByTokenBudget(rows, "grp", "doc_id", "text", 10L))
-    assert(e2.getMessage.contains("must be integral"))
   }
 
   test("snapshot time travel: readExtractedAsOf sees exactly the batches committed by then") {
@@ -696,59 +578,5 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val streamed = spark.sql("SELECT url, kind, text FROM graft_extract_stream")
       .orderBy("url").collect()
     assert(streamed.toSeq == batch.toSeq)
-  }
-
-  test("packSequences: greedy per-stream packing, not cumulative-floor binning") {
-    import spark.implicits._
-    def words(n: Int): String = (1 to n).map(i => "w" + i).mkString(" ")
-    // stream 0 (capacity 10): sizes 6,6,6 -> greedy bins 0,1,2; the
-    // cumulative-floor shortcut would put the third doc in bin 1 with 12
-    // tokens (> capacity) - this row is the discriminator. Then an
-    // oversized doc (15) gets a bin of its own and the next doc starts
-    // fresh. Stream 1: 3,3,3,3 packs 3 per bin.
-    val rows = Seq(
-      (0L, words(6)), (2L, words(6)), (4L, words(6)), (6L, words(15)), (8L, words(2)),
-      (1L, words(3)), (3L, words(3)), (5L, words(3)), (7L, words(3))
-    ).toDF("doc_id", "text")
-      // null contract: null id -> dropped; null text -> empty (1 ws token)
-      .union(spark.sql("SELECT CAST(NULL AS BIGINT), 'orphan text'"))
-      .union(spark.sql("SELECT CAST(9 AS BIGINT), CAST(NULL AS STRING)"))
-    val got = graft.pipeline.Packing.packSequences(rows, "doc_id", "text",
-        capacity = 10L, numStreams = 2)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    assert(got.size == 10) // the null-id row is gone, the null-text row is not
-    assert(got(9L) == ((1L, 1L, 1L))) // null text: 1 token, joins 7's bin 1
-    assert(got(0L) == ((0L, 0L, 6L)))
-    assert(got(2L) == ((0L, 1L, 6L)))
-    assert(got(4L) == ((0L, 2L, 6L)), s"floor-binning would give bin 1: ${got(4L)}")
-    assert(got(6L) == ((0L, 3L, 15L))) // oversized: bin of its own
-    assert(got(8L) == ((0L, 4L, 2L)))  // fresh bin after the oversized one
-    assert(got(1L) == ((1L, 0L, 3L)) && got(3L) == ((1L, 0L, 3L)) && got(5L) == ((1L, 0L, 3L)))
-    assert(got(7L) == ((1L, 1L, 3L))) // 3+3+3+3 > 10 -> fourth doc spills
-  }
-
-  test("packedBins: assembly agrees with packSequences and joins in doc-id order") {
-    import spark.implicits._
-    def words(n: Int): String = (1 to n).map(i => "w" + i).mkString(" ")
-    val rows = Seq(
-      (0L, words(6)), (2L, words(6)), (4L, words(6)), (6L, words(15)), (8L, words(2)),
-      (1L, words(3)), (3L, words(3)), (5L, words(3)), (7L, words(3))
-    ).toDF("doc_id", "text")
-    val bins = graft.pipeline.Packing.packedBins(rows, "doc_id", "text",
-        capacity = 10L, numStreams = 2)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)) ->
-        ((r.getLong(2), r.getLong(3), r.getString(4)))).toMap
-    // every (stream, bin) from the assignment view appears exactly once
-    val assigned = graft.pipeline.Packing.packSequences(rows, "doc_id", "text",
-        capacity = 10L, numStreams = 2)
-      .collect().map(r => (r.getLong(1), r.getLong(2)) -> r.getLong(0))
-      .groupBy(_._1).view.mapValues(_.map(_._2).sorted.toList).toMap
-    assert(bins.keySet == assigned.keySet)
-    assert(bins((0L, 3L)) == ((1L, 15L, words(15)))) // oversized doc alone
-    assert(bins((1L, 0L)) == ((3L, 9L, words(3) + " " + words(3) + " " + words(3))))
-    assert(bins((0L, 4L)) == ((1L, 2L, words(2))))
-    // n_docs matches the assignment cardinality everywhere
-    assert(bins.forall { case (k, (n, _, _)) => assigned(k).size == n })
   }
 }

@@ -97,33 +97,6 @@ class TextStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("Pii: redaction chain order, placeholder isolation, counts on intermediates") {
-    import graft.functions.Pii
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    val rows = Seq(
-      // email whose host is a dotted quad: the email stage must consume it
-      // whole so the IP stage sees nothing (count-on-intermediates contract)
-      (1L, "mail root@10.0.0.1.net to ops"),
-      // bare dotted quad + international phone; phone digits must not be
-      // eaten by the IP stage (word boundary) nor re-match inside <IP>
-      (2L, "srv 192.168.7.19 dial +44 20-7946-0958 end"),
-      // phone without leading + is out of scope (precision contract)
-      (3L, "call 555 123 4567 maybe"),
-      // two emails in one doc
-      (4L, "a@b.co and c.d@e-f.org meet"))
-      .toDF("doc_id", "text")
-    val got = rows.select(col("doc_id"), Pii.nEmails(col("text")).as("e"),
-        Pii.nIpv4(col("text")).as("i"), Pii.nPhones(col("text")).as("p"),
-        Pii.scrub(col("text")).as("red"))
-      .collect().map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4)))).toMap
-    assert(got(1L) == ((1L, 0L, 0L, "mail <EMAIL> to ops")))
-    assert(got(2L) == ((0L, 1L, 1L, "srv <IP> dial <PHONE> end")))
-    assert(got(3L) == ((0L, 0L, 0L, "call 555 123 4567 maybe")))
-    assert(got(4L) == ((2L, 0L, 0L, "<EMAIL> and <EMAIL> meet")))
-  }
-
   test("lmScore: hand-computed add-one bigram ppm; sub-bigram docs excluded") {
     import spark.implicits._
     // corpus: C2("a b")=3, C2("b a")=1; prefixes C1(a)=3, C1(b)=1; V=3

@@ -2,7 +2,11 @@
 """Local stand-in for the driver's correctness gate: run graft.Verify first
 (sbt "runMain graft.Verify <sfDir> <outDir>"), then this script compares each
 <outDir>/<name> parquet against the DuckDB oracle from oracle_sql.json,
-with sfDir tables registered as views. Usage: check.py <sfDir> <outDir>"""
+with sfDir tables registered as views. Every oracle key must have an output
+directory (Verify only logs a query that throws, so a missing directory is
+the failure) and every output directory must have an oracle key (a stale
+directory from an earlier run or a deleted query). Use a fresh <outDir>.
+Usage: check.py <sfDir> <outDir>"""
 import sys, json, glob, os
 import duckdb
 
@@ -13,20 +17,19 @@ for p in glob.glob(f"{sf}/*.parquet"):
     con.sql(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
 
 oracle = json.load(open(f"{out}/oracle_sql.json"))
+outputs = {n for n in os.listdir(out) if os.path.isdir(os.path.join(out, n))}
 fails = 0
-for name in sorted(os.listdir(out)):
+for name in sorted(oracle.keys() - outputs):
+    print(f"  [FAIL] {name}: missing output (the query threw or never ran)")
+    fails += 1
+for name in sorted(outputs - oracle.keys()):
+    print(f"  [FAIL] {name}: no oracle (stale or unregistered output directory)")
+    fails += 1
+for name in sorted(outputs & oracle.keys()):
     d = os.path.join(out, name)
-    if not os.path.isdir(d):
-        continue
     got = con.sql(f"SELECT * FROM read_parquet('{d}/*.parquet')").fetchall()
     cols = [c[0] for c in con.sql(
         f"DESCRIBE SELECT * FROM read_parquet('{d}/*.parquet')").fetchall()]
-    if name not in oracle:
-        print(f"  [rows-only] {name}: {len(got)} rows "
-              f"{'OK' if len(got) > 0 else 'EMPTY!'}")
-        if len(got) == 0:
-            fails += 1
-        continue
     try:
         exp_rel = con.sql(oracle[name])
         exp = exp_rel.fetchall()
