@@ -212,10 +212,6 @@ object Bench {
     val docsDf = spark.read.parquet(s"$sfDir/documents.parquet")
     val queryThunks: Seq[(String, () => Unit)] = Seq(
       "extract_pipeline" -> (() => runExtract(pages)),
-      "extract_salted" -> (() => {
-        ExtractPipeline.run(ExtractPipeline.salted(pages, cpus * 2), delimiter = "")
-          .groupBy("kind").agg(count(lit(1))).collect(); ()
-      }),
       "dedup_minhash_lsh" -> (() => {
         Dedup.clearCaches() // each pass builds fresh index caches; no pile-up
         Dedup.minhashDedupPairs(docsDf, "doc_id", "text").count(); ()

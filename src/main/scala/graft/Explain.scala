@@ -1,28 +1,36 @@
 package graft
 
 import graft.dedup.Dedup
-import graft.pipeline.{Corpus, ExtractPipeline}
+import graft.pipeline.{Checkpoint, Corpus, ExtractPipeline, TableIO}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
-/** Dev tool: dump formatted physical plans of the load-bearing queries to
-  * PLANS.md so scan pruning / pushdown / broadcast choices are reviewable
-  * (and reviewed — see the checklist at the top of the generated file). */
+/** Dev tool: dump formatted physical plans of the load-bearing queries to a
+  * markdown file so scan pruning / pushdown / broadcast choices are
+  * reviewable (and reviewed — see the checklist at the top of the generated
+  * file). Run from the repository root as
+  * `sbt 'runMain graft.Explain <sfDir> PLANS.md'`, where `<sfDir>` holds the
+  * generated tables (`documents.parquet`, …). */
 object Explain {
   def main(args: Array[String]): Unit = {
+    val Array(sfDir, outPath) = args
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", 4)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val sfDir = "/root/testdata/sf0.001"
     val sb = new StringBuilder
     sb.append(
       """# PLANS — physical-plan review (generated by `graft.Explain`)
         |
         |Checklist verified per plan:
         |- extraction: ReadSchema carries ONLY url/html/lang (text+warc_ts pruned at scan)
+        |- submit write (`Main`): no Exchange between the scan and MapPartitions
+        |  when the table has a row group per core — a fresh submit is one
+        |  scan → extract → write stage (a table with fewer row groups is
+        |  hash-spread first; pinned by MainSpec)
         |- dedup exact: partial (map-side) aggregation before the single shuffle
         |- jaccard: equi-joins on derived keys only (no cartesian anywhere);
         |  hot shingles (df > MaxBucket) anti-joined out before the self-join
@@ -37,14 +45,20 @@ object Explain {
         |""".stripMargin)
     def dump(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
       sb.append(s"\n## $name\n\n```\n")
-      sb.append(df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
+      sb.append(df.queryExecution.explainString(FormattedMode))
       sb.append("```\n")
     }
     // extraction over a real parquet page table (write one to tmp to show scan pruning)
     val tmp = Files.createTempDirectory("graft_explain").toString
-    Corpus.pages(spark, sfDir).limit(50).write.mode("overwrite").parquet(s"$tmp/pages")
+    Corpus.pages(spark, sfDir).limit(50).repartition(4).write.mode("overwrite").parquet(s"$tmp/pages")
     val pagesTable = spark.read.parquet(s"$tmp/pages")
       .as[graft.pipeline.PageRow](org.apache.spark.sql.Encoders.product[graft.pipeline.PageRow])
+    // what a fresh submit hands its data write, as Main composes it: the
+    // table has a row group per core, so spread keeps it on the scan splits
+    val submitPages = TableIO.readPages(spark, s"$tmp/pages")
+    dump("submit_write input (Main: scan -> resume -> spread -> mapPartitions)",
+      ExtractPipeline.run(ExtractPipeline.spread(
+        Checkpoint.resume(submitPages, s"$tmp/submit_out"), submitPages), "").toDF())
     dump("extract_pipeline (scan -> mapPartitions -> agg)",
       ExtractPipeline.run(pagesTable, "").groupBy("kind")
         .agg(count(lit(1)), sum("n_chars")))
@@ -110,8 +124,8 @@ object Explain {
         .select(url.as("url"), md5(col("text").cast("binary")).as("fp"))
       graft.pipeline.Recrawl.delta(prev, next, "url", "fp")
     })
-    Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
-    println("wrote PLANS.md")
+    Files.writeString(Paths.get(outPath), sb.toString)
+    println(s"wrote $outPath")
     spark.stop()
   }
 }

@@ -286,10 +286,10 @@ object Boilerplate {
           }
         }
       } else if (c == '&' && skipTag == null) {
-        val (decoded, extra, next) = entity(html, i)
-        appendChar(decoded, i)
-        if (extra != 0) appendChar(extra, i) // low surrogate of an astral codepoint
-        i = next
+        val e = entity(html, i)
+        appendChar(entityChar(e), i)
+        if (entityLow(e) != 0) appendChar(entityLow(e), i) // low surrogate of an astral codepoint
+        i = entityNext(e)
       } else {
         if (skipTag == null) appendChar(c, i)
         i += 1
@@ -301,33 +301,42 @@ object Boilerplate {
 
   /** Entity decoder: the full HTML 4.01 named table ([[Entities]], 252
     * names + apos) plus numeric references (decimal/hex, incl. astral
-    * codepoints as surrogate pairs). Returns (char, extraChar-or-0,
-    * nextIndex); an unrecognized body falls back to a literal '&'. */
+    * codepoints as surrogate pairs). An unrecognized body falls back to a
+    * literal '&'. */
   // longest body we ever accept: the longest named entity or a numeric
   // reference like #x10ffff (8 chars) — derived from the table, not a magic
   // number, so a longer entity added there is automatically scanned
   private val MaxEntityBody = math.max(Entities.maxNameLength, 8)
 
-  /** Decode the entity starting at `html(i) == '&'`: (char, optional low
-    * surrogate, next index). Shared with the head-metadata scanner. */
-  private[html] def entity(html: String, i: Int): (Char, Char, Int) = {
-    val semi = html.indexOf(';', i + 1)
-    if (semi < 0 || semi - i - 1 > MaxEntityBody) return ('&', 0, i + 1)
-    val body = html.substring(i + 1, semi)
-    Entities.table.get(body) match {
-      case Some(c) => (c, 0, semi + 1)
-      case None =>
-        val cp =
-          try {
-            if (body.startsWith("#x") || body.startsWith("#X")) Integer.parseInt(body.substring(2), 16)
-            else if (body.startsWith("#")) Integer.parseInt(body.substring(1))
-            else return ('&', 0, i + 1)
-          } catch { case _: Exception => return ('&', 0, i + 1) }
-        if (cp < 0 || cp > 0x10ffff) return ('&', 0, i + 1)
-        if (cp > 0xffff) {
-          val pair = Character.toChars(cp)
-          (pair(0), pair(1), semi + 1)
-        } else (cp.toChar, 0, semi + 1)
-    }
+  /** Decode the entity starting at `html(i) == '&'`, packed into one Long
+    * so a numeric reference allocates nothing: read it with
+    * [[entityChar]], [[entityLow]] (low surrogate, or 0) and [[entityNext]]
+    * (next index). The terminating ';' is looked for within
+    * `MaxEntityBody + 1` chars only, so a page of unterminated '&'s stays
+    * linear; numeric bodies parse in place with the sign and overflow rules
+    * of `Integer.parseInt`, and only a body not starting with '#' is looked
+    * up by name. Shared with the head-metadata and anchor scanners. */
+  private[graft] def entity(html: String, i: Int): Long = {
+    val from = i + 1
+    val limit = math.min(html.length, from + MaxEntityBody + 1)
+    var semi = from
+    while (semi < limit && html.charAt(semi) != ';') semi += 1
+    if (semi == limit) return packEntity('&', 0, from)
+    val cp =
+      if (semi > from && html.charAt(from) == '#') {
+        val hex = semi > from + 1 && (html.charAt(from + 1) | 0x20) == 'x'
+        try Integer.parseInt(html, if (hex) from + 2 else from + 1, semi, if (hex) 16 else 10)
+        catch { case _: NumberFormatException => -1 }
+      } else Entities.table.get(html.substring(from, semi)).fold(-1)(_.toInt)
+    if (cp < 0 || cp > 0x10ffff) packEntity('&', 0, from)
+    else if (cp > 0xffff) packEntity(Character.highSurrogate(cp), Character.lowSurrogate(cp), semi + 1)
+    else packEntity(cp.toChar, 0, semi + 1)
   }
+
+  private def packEntity(c: Char, low: Char, next: Int): Long =
+    (next.toLong << 32) | (c.toLong << 16) | low.toLong
+
+  private[graft] def entityChar(e: Long): Char = (e >>> 16).toChar
+  private[graft] def entityLow(e: Long): Char = e.toChar
+  private[graft] def entityNext(e: Long): Int = (e >>> 32).toInt
 }

@@ -129,10 +129,11 @@ object Links {
           }
         }
       } else if (c == '&') {
-        val (ch, lo, next) = Boilerplate.entity(html, i)
-        append(ch)
+        val e = Boilerplate.entity(html, i)
+        append(Boilerplate.entityChar(e))
+        val lo = Boilerplate.entityLow(e)
         if (lo != 0) sb.append(lo) // low surrogate rides with its pair
-        i = next
+        i = Boilerplate.entityNext(e)
       } else { append(c); i += 1 }
     }
     sb.toString

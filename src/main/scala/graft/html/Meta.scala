@@ -179,10 +179,11 @@ object Meta {
 
   private def appendDecoded(html: String, i: Int, sb: java.lang.StringBuilder): Int =
     if (html.charAt(i) == '&') {
-      val (c, lo, next) = Boilerplate.entity(html, i)
-      sb.append(c)
+      val e = Boilerplate.entity(html, i)
+      sb.append(Boilerplate.entityChar(e))
+      val lo = Boilerplate.entityLow(e)
       if (lo != 0) sb.append(lo)
-      next
+      Boilerplate.entityNext(e)
     } else {
       sb.append(html.charAt(i))
       i + 1

@@ -129,18 +129,15 @@ object Checkpoint {
   }
 
   /** The ONE listing predicate for committed manifest entries: `batch_`
-    * directories (new layout) and flat `part-` files (the pre-atomic
-    * legacy layout — honored so an outDir written by an older run keeps
-    * its resume/metrics validity; its rows read with a null `batch`).
-    * Staging dirs are dot-prefixed and never listed. Every consumer
+    * directories. Staging dirs are dot-prefixed and never listed, and
+    * neither is anything else under `_manifest/`. Every consumer
     * ([[committedManifests]], [[snapshots]]) goes through here. */
   private def manifestStatuses(spark: SparkSession, outDir: String): Seq[org.apache.hadoop.fs.FileStatus] = {
     val root = new Path(manifestPath(outDir))
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) Nil
     else fs.listStatus(root).toSeq.filter(s =>
-      (s.isDirectory && s.getPath.getName.startsWith("batch_")) ||
-        (s.isFile && s.getPath.getName.startsWith("part-")))
+      s.isDirectory && s.getPath.getName.startsWith("batch_"))
   }
 
   private def committedManifests(spark: SparkSession, outDir: String): Seq[String] =
@@ -174,59 +171,35 @@ object Checkpoint {
   }
 
   /** Distinct data-batch names referenced by the given manifests' ROWS
-    * (manifest-only commits and legacy manifests reference none). */
+    * (manifest-only commits reference none). */
   private def referencedBatches(spark: SparkSession, manifests: Seq[String]): Seq[String] =
     if (manifests.isEmpty) Nil
     else readManifests(spark, manifests)
       .select("batch").where(col("batch").isNotNull && col("batch") =!= "")
       .distinct().collect().map(_.getString(0)).toSeq
 
-  /** Assemble the output table from committed batch dirs plus (when a
-    * LEGACY manifest vouches for them) the pre-atomic flat part-files
-    * directly under `extracted/`. Legacy files predate the format seam and
-    * are always parquet. Gating legacy data on legacy MANIFESTS — not on
-    * any manifest — keeps exactly-once: a legacy run that crashed between
-    * its data write and its manifest write left flat files that no
-    * manifest vouches for; they stay invisible and their urls re-extract. */
-  private def assembleTable(spark: SparkSession, outDir: String,
-      batches: Seq[String], includeLegacy: Boolean): DataFrame = {
-    val legacyFiles =
-      if (!includeLegacy) Nil
-      else {
-        val root = new Path(dataPath(outDir))
-        val fs = fsOf(spark, dataPath(outDir))
-        if (!fs.exists(root)) Nil
-        else fs.listStatus(root).toSeq
-          .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-          .map(_.getPath.toString)
-      }
-    val batchDf =
-      if (batches.isEmpty) None
-      else Some(spark.read.format(tableFormat(spark))
-        .load(batches.map(b => s"${dataPath(outDir)}/$b"): _*))
-    val legacyDf = if (legacyFiles.isEmpty) None else Some(spark.read.parquet(legacyFiles: _*))
-    (batchDf, legacyDf) match {
-      case (Some(b), Some(l)) => b.unionByName(l, allowMissingColumns = true)
-      case (Some(b), None)    => b
-      case (None, Some(l))    => l
-      case (None, None)       =>
-        // schema-carrying empty table, so .select("url")/.as[ExtractedDoc]
-        // work on a fresh or manifest-only outDir
-        spark.emptyDataset(Encoders.product[ExtractedDoc]).toDF()
-    }
-  }
+  /** Assemble the output table from the given committed batch dirs. Only
+    * `batch_` directories a manifest references are read: anything else
+    * under `extracted/` (an orphan batch, stray flat files) stays
+    * invisible and its urls re-extract. */
+  private def assembleTable(spark: SparkSession, outDir: String, batches: Seq[String]): DataFrame =
+    if (batches.isEmpty)
+      // schema-carrying empty table, so .select("url")/.as[ExtractedDoc]
+      // work on a fresh or manifest-only outDir
+      spark.emptyDataset(Encoders.product[ExtractedDoc]).toDF()
+    else spark.read.format(tableFormat(spark))
+      .load(batches.map(b => s"${dataPath(outDir)}/$b"): _*)
 
   /** The committed output table: data batches referenced by a committed
-    * manifest — an orphan data directory from a crashed run is invisible —
-    * plus the implicit legacy flat batch when a legacy manifest exists
+    * manifest — an orphan data directory from a crashed run is invisible
     * (see [[assembleTable]]). Definitionally the as-of read at the end of
     * time, so the two read paths cannot drift apart. */
   def readExtracted(spark: SparkSession, outDir: String): DataFrame =
     readExtractedAsOf(spark, outDir, Long.MaxValue)
 
-  /** One committed snapshot. `name` is the manifest entry ("" only for the
-    * coalesced legacy snapshot); `commitMs` is the commit time ([[publish]]
-    * stamps the manifest just before the rename; on a filesystem without
+  /** One committed snapshot. `name` is the manifest entry's batch name;
+    * `commitMs` is the commit time ([[publish]] stamps the manifest just
+    * before the rename; on a filesystem without
     * setTimes it degrades to the staging-write mtime, which still orders
     * single-committer histories correctly). Ties at millisecond
     * granularity order by name and are both included by an inclusive
@@ -236,35 +209,21 @@ object Checkpoint {
   /** Commit history, oldest first — the Iceberg-snapshot analogue over the
     * manifest model: every committed manifest is one snapshot; the table
     * "as of" snapshot k is the union of the data batches referenced by
-    * manifests 1..k. The pre-atomic legacy layout (flat part- manifest
-    * files) is ONE logical commit regardless of its part-file count and
-    * appears as a single snapshot with name = "" at its newest file's
-    * mtime — as-of reads before that instant see none of the legacy data,
-    * from it onward all of it. */
-  def snapshots(spark: SparkSession, outDir: String): Seq[Snapshot] = {
-    val (legacy, batchDirs) = manifestStatuses(spark, outDir).partition(_.isFile)
-    val batchSnaps = batchDirs.map(s =>
-      Snapshot(s.getPath.toString, s.getPath.getName, s.getModificationTime))
-    val legacySnap =
-      if (legacy.isEmpty) Nil
-      else Seq(Snapshot(manifestPath(outDir), "", legacy.map(_.getModificationTime).max))
-    (legacySnap ++ batchSnaps).sortBy(s => (s.commitMs, s.manifest))
-  }
+    * manifests 1..k. */
+  def snapshots(spark: SparkSession, outDir: String): Seq[Snapshot] =
+    manifestStatuses(spark, outDir)
+      .map(s => Snapshot(s.getPath.toString, s.getPath.getName, s.getModificationTime))
+      .sortBy(s => (s.commitMs, s.manifest))
 
   /** Time travel: the committed output table as of `commitMs` — the same
     * manifest-gated read as [[readExtracted]] (data batches resolved from
-    * the manifests' ROWS, so manifest-only commits contribute nothing and
-    * legacy flat data participates exactly when a legacy manifest is in
-    * range), restricted to the manifests published at or before that
-    * instant. `readExtractedAsOf(outDir, snapshots.last.commitMs)` equals
+    * the manifests' ROWS, so manifest-only commits contribute nothing),
+    * restricted to the manifests published at or before that instant.
+    * `readExtractedAsOf(outDir, snapshots.last.commitMs)` equals
     * `readExtracted(outDir)`. */
   def readExtractedAsOf(spark: SparkSession, outDir: String, commitMs: Long): DataFrame = {
     val keep = snapshots(spark, outDir).filter(_.commitMs <= commitMs)
-    // only batch manifests carry batch references; the coalesced legacy
-    // snapshot's `manifest` is the _manifest DIR and must not be globbed
-    assembleTable(spark, outDir,
-      referencedBatches(spark, keep.filter(_.name.nonEmpty).map(_.manifest)),
-      includeLegacy = keep.exists(_.name.isEmpty))
+    assembleTable(spark, outDir, referencedBatches(spark, keep.map(_.manifest)))
   }
 
   def maintenanceLockPath(outDir: String): String = s"$outDir/_maintenance_lock"
@@ -372,7 +331,7 @@ object Checkpoint {
     * commits after the last compaction — a filesystem sink without a
     * metadata log cannot keep rewritten lineage alive), and manifest
     * `file_name` lineage is re-derived over the compacted files.
-    * Manifest-only commits and the legacy flat layout are untouched.
+    * Manifest-only commits are untouched.
     * Returns the new batch id; None when < 2 data batches exist. */
   def compact(spark: SparkSession, outDir: String,
       targetFileBytes: Long = 128L << 20,
@@ -403,7 +362,7 @@ object Checkpoint {
       publish(spark, dataStaging, s"${dataPath(outDir)}/$batch") // step 2
       // commitWithData names each manifest dir after its one data batch, so
       // the replaced manifests are exactly those named by a compacted batch
-      // (manifest-only and legacy entries never carry such a name) — a pure
+      // (manifest-only entries never carry such a name) — a pure
       // name check, no per-manifest read jobs
       val replaced = mans.filter(m => dataBatches.contains(new Path(m).getName))
       replaced.foreach(m => fs.delete(new Path(m), true)) // step 3
@@ -421,9 +380,8 @@ object Checkpoint {
     * Iceberg `remove_orphan_files` analogue. Only artifacts older than
     * `graceMs` are touched: an IN-FLIGHT commit's data dir is briefly
     * unreferenced and its staging dir briefly present by design, so a
-    * concurrent committer inside the grace window is never broken. The
-    * legacy flat files (vouched by legacy manifests, not batch
-    * references) are never touched. Returns the removed names.
+    * concurrent committer inside the grace window is never broken. Only
+    * directories are removed. Returns the removed names.
     *
     * Vacuum runs UNDER the maintenance lock: without it, a vacuum with a
     * small `graceMs` racing a concurrent [[compact]] could delete the

@@ -2,7 +2,11 @@ package graft.pipeline
 
 import graft.html.Boilerplate
 import graft.pdf.{PdfExtract, WorkBuffers}
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 
 /** The extraction pipeline: classify each page payload (PDF header sniff per
@@ -11,11 +15,16 @@ import org.apache.spark.sql.functions._
   * rows with captured errors and span offsets.
   *
   * Scale design (100 TB / 1000 executors):
-  *  - the transform is a narrow map — zero shuffles; throughput scales with
-  *    cores as long as input splits are balanced;
-  *  - [[salted]] pre-shuffles on a hash-salt so one parquet file full of
-  *    50 MB PDFs can't pin a single task (AQE alone can't split a pathological
-  *    input row group); the salt count is the target parallelism;
+  *  - the transform is a narrow map straight off the scan splits — zero
+  *    shuffles, so scan → extract → write is one stage ([[spread]] decides);
+  *  - skew is bounded by the scan, not by a repartition: parquet row groups
+  *    are byte-bounded (`parquet.block.size`) and Spark packs them into
+  *    splits of at most `spark.sql.files.maxPartitionBytes`, which free
+  *    cores pull as they finish. A hash repartition would move every
+  *    payload byte through a shuffle first, and its fixed partition count
+  *    makes partitions grow with the input. Only a table with fewer row
+  *    groups than cores (one small file, say) is hash-spread first, since
+  *    one task reads a whole row group and the other cores would idle;
   *  - per-partition buffer reuse mirrors the reference's explicit
   *    multi-file-loop allocation reuse (Tokeniser.cs:141-170): one
   *    Inflater/StringBuilder/work buffer per partition, not per row;
@@ -77,6 +86,38 @@ object ExtractPipeline {
       }
   }
 
+  /** `pages` as extraction should consume them, judged by the parquet
+    * table `scanned` they are read from. When `scanned` has at least one row
+    * group per core, `pages` is returned as is and extraction runs straight
+    * off the scan splits. With fewer row groups, the scan could keep only
+    * that many cores busy, so the rows are first spread over
+    * `2 × defaultParallelism` partitions by a hash of the url. A source
+    * that lists no input files (a DataSource V2 table) counts as having no
+    * row groups and is spread. */
+  def spread(pages: Dataset[PageRow], scanned: Dataset[_]): Dataset[PageRow] = {
+    val cores = pages.sparkSession.sparkContext.defaultParallelism
+    if (rowGroups(scanned, cores) >= cores) pages
+    // repartition on the 64-bit url hash itself: HashPartitioning re-hashes
+    // the expression value, so pre-bucketing it with pmod would funnel the
+    // bucket values through a second hash and collide them
+    else pages.repartition(2 * cores, xxhash64(col("url")))
+  }
+
+  /** Parquet row groups across `table`'s input files, read from the file
+    * footers on the driver; counting stops once it reaches `enough`. The
+    * static footer read costs about 1 ms a file on a local disk, where
+    * opening a `ParquetFileReader` costs about 17 ms. */
+  private[pipeline] def rowGroups(table: Dataset[_], enough: Int): Int = {
+    val conf = table.sparkSession.sparkContext.hadoopConfiguration
+    val files = table.inputFiles.iterator
+    var n = 0
+    while (n < enough && files.hasNext) {
+      val file = HadoopInputFile.fromPath(new Path(files.next()), conf)
+      n += ParquetFileReader.readFooter(file, ParquetMetadataConverter.NO_FILTER).getBlocks.size
+    }
+    n
+  }
+
   /** Metrics-only extraction: the full parse runs but (a) the PDF path
     * skips the final full-document text copy (`captureText = false` —
     * lengths come from the shared builder) and (b) the output row carries
@@ -101,27 +142,4 @@ object ExtractPipeline {
         }
       }
   }
-
-  /** Salted repartition against oversized-document skew: uniform hash salt,
-    * `numPartitions` ≈ total cores (or a small multiple at high skew). At
-    * cluster scale this is the difference between a stage tail of one task
-    * chewing a 2 GB row group and an even spread. */
-  def salted(pages: Dataset[PageRow], numPartitions: Int): Dataset[PageRow] =
-    // repartition on the 64-bit url hash itself: HashPartitioning re-hashes
-    // the expression value, so pre-bucketing it with pmod would funnel the
-    // n salt values through a second hash and collide them
-    pages.repartition(numPartitions, xxhash64(col("url")))
-
-  /** Size-aware routing (SURVEY §4 tactic c) in ONE scan and ONE shuffle:
-    * AQE's REBALANCE partitioning splits output partitions by BYTE SIZE
-    * (spark.sql.adaptive.optimizeSkewsInRebalancePartitions, on by
-    * default), so a handful of 50 MB PDFs get isolated toward one-doc-per-
-    * task while 1 KB pages coalesce to full partitions — without reading
-    * the input twice (the previous two-filtered-lanes design scanned the
-    * table once per lane) and staying deterministic under task retry
-    * (round-robin is not). `numPartitions`/`bigBytes` kept for API
-    * stability; AQE sizes the result itself. */
-  def sizeRouted(pages: Dataset[PageRow], numPartitions: Int,
-      bigBytes: Int = 4 << 20): Dataset[PageRow] =
-    pages.hint("rebalance", col("url")) // attribute, not expression: hint rule requirement
 }

@@ -7,27 +7,30 @@ import org.apache.spark.sql.functions._
   *
   * {{{
   * spark-submit --class graft.pipeline.Main pdfparserspark.jar \
-  *   <inputTable> <outDir> [--delimiter D] [--partitions N] [--no-resume]
-  *   [--maintenance] [--delta prevSnapshot]
+  *   <inputTable> <outDir> [--delimiter D] [--no-resume] [--maintenance]
+  *   [--delta prevSnapshot]
   * }}}
   *
   * `--delta <prevSnapshot>` runs the INCREMENTAL recrawl path: both tables
   * are fingerprinted (md5 of the raw html payload — extraction-relevant
   * bytes only, never fetch metadata), [[Recrawl.delta]] classifies every
   * url, the status counts are printed, and ONLY added+changed documents
-  * flow into the normal resume → salt → extract → commit path. On a real
+  * flow into the normal resume → extract → commit path. On a real
   * monthly recrawl the unchanged fraction dominates, so this is the
   * difference between re-extracting the whole 10^12-row table and a few
   * percent of it.
   *
   * Reads the input_hint page table (parquet path or Iceberg-style table
   * path), skips urls already present in `<outDir>/_manifest` (resume),
-  * salts against document-size skew, then extracts and writes the output
-  * table in one pass through [[Checkpoint.commitWithData]]: nothing is
-  * cached, the metrics rollup is observed during that data write, and the
-  * checkpoint manifest (url + data file lineage + metrics) is read back
-  * from the written files. It prints the rollup as one JSON line. A
-  * fully-resumed run commits nothing. Designed so a killed run
+  * then extracts and writes the output table in one pass through
+  * [[Checkpoint.commitWithData]]. Extraction runs straight off the scan
+  * splits, so a fresh submit is one scan → extract → write stage with no
+  * shuffle; only an input with fewer parquet row groups than cores is
+  * hash-spread first ([[ExtractPipeline.spread]]). Nothing is cached, the
+  * metrics rollup is observed during that data write, and the checkpoint
+  * manifest (url + data file lineage + metrics) is read back from the
+  * written files. It prints the rollup as one JSON line. A fully-resumed
+  * run commits nothing. Designed so a killed run
   * re-submitted with the same arguments continues mid-table (north_rule:
   * resumable with per-partition lineage + metrics).
   *
@@ -41,7 +44,7 @@ import org.apache.spark.sql.functions._
 object Main {
   def main(args: Array[String]): Unit = {
     val pos = args.filterNot(_.startsWith("--"))
-    require(pos.length >= 2, "usage: Main <inputTable> <outDir> [--delimiter D] [--partitions N] [--no-resume] [--maintenance] [--delta prevSnapshot]")
+    require(pos.length >= 2, "usage: Main <inputTable> <outDir> [--delimiter D] [--no-resume] [--maintenance] [--delta prevSnapshot]")
     val (input, outDir) = (pos(0), pos(1))
     def opt(name: String): Option[String] =
       args.sliding(2).collectFirst { case Array(k, v) if k == s"--$name" => v }
@@ -64,8 +67,6 @@ object Main {
       .config("spark.sql.parquet.columnarReaderBatchSize", 64)
       .config("spark.sql.columnVector.offheap.enabled", "true")
       .getOrCreate()
-    val partitions = opt("partitions").map(_.toInt)
-      .getOrElse(spark.sparkContext.defaultParallelism * 2)
 
     val t0 = System.nanoTime() // job time: resume + extract + commit
     val allPages = TableIO.readPages(spark, input)
@@ -99,7 +100,7 @@ object Main {
     // orphan, never duplicates. A fully-resumed (empty) run commits nothing,
     // so idle re-submissions don't accumulate empty batch directories
     val m = Checkpoint.commitWithData(
-      ExtractPipeline.run(ExtractPipeline.salted(todo, partitions), delimiter), outDir)
+      ExtractPipeline.run(ExtractPipeline.spread(todo, allPages), delimiter), outDir)
     deltaCached.foreach(_.unpersist())
     val wall = (System.nanoTime() - t0) / 1e9
     println(s"""{"docs":${m.docs},"chars":${m.chars},""" +

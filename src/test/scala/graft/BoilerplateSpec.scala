@@ -224,4 +224,78 @@ class BoilerplateSpec extends AnyFunSuite {
     }
     (1 to 30).foreach(_ => Meta.extract(java.util.Arrays.copyOf(base, 1 + rnd.nextInt(base.length))))
   }
+
+  /** The decoder as it stood before it decoded in place: an unbounded
+    * `indexOf(';')`, a substring per body, `parseInt` on a substring, a
+    * tuple per entity. The in-place decoder must agree with it everywhere. */
+  private def referenceEntity(html: String, i: Int): (Char, Char, Int) = {
+    val maxBody = math.max(graft.html.Entities.maxNameLength, 8)
+    val semi = html.indexOf(';', i + 1)
+    if (semi < 0 || semi - i - 1 > maxBody) return ('&', 0, i + 1)
+    val body = html.substring(i + 1, semi)
+    graft.html.Entities.table.get(body) match {
+      case Some(c) => (c, 0, semi + 1)
+      case None =>
+        val cp =
+          try {
+            if (body.startsWith("#x") || body.startsWith("#X")) Integer.parseInt(body.substring(2), 16)
+            else if (body.startsWith("#")) Integer.parseInt(body.substring(1))
+            else return ('&', 0, i + 1)
+          } catch { case _: Exception => return ('&', 0, i + 1) }
+        if (cp < 0 || cp > 0x10ffff) return ('&', 0, i + 1)
+        if (cp > 0xffff) {
+          val pair = Character.toChars(cp)
+          (pair(0), pair(1), semi + 1)
+        } else (cp.toChar, 0, semi + 1)
+    }
+  }
+
+  private def inPlaceEntity(html: String, i: Int): (Char, Char, Int) = {
+    val e = Boilerplate.entity(html, i)
+    (Boilerplate.entityChar(e), Boilerplate.entityLow(e), Boilerplate.entityNext(e))
+  }
+
+  private def assertDecodersAgree(html: String): Unit =
+    html.indices.filter(html.charAt(_) == '&').foreach { i =>
+      assert(inPlaceEntity(html, i) == referenceEntity(html, i), s"at $i of ${html.take(60)}")
+    }
+
+  test("in-place entity decoding agrees with the substring decoder on every edge") {
+    val maxName = graft.html.Entities.maxNameLength
+    val longest = graft.html.Entities.table.keys.filter(_.length == maxName).toSeq.sorted
+    assert(longest.nonEmpty)
+    val edges = Seq("&;", "&#;", "&#x;", "&#X;", "&#+65;", "&#-1;", "&#x+41;", "&#x-41;",
+      "&#1114112;", "&#x110000;", "&#x10FFFF;", "&#x1F600;", "&#128512;", "&#0;", "&#xD800;",
+      "&#65", "&", "&amp", "&AMP;", "&amp;", "&apos;", "&Omega;", "&#X41;", "&#0000065;",
+      "&#00000065;", "&#99999999;", "&#2147483648;", "&#4294967361;", "&#xg;", "&# 65;",
+      "&amp" + "x" * 20 + ";", "&" + "#" + "6" * 20 + ";") ++
+      longest.flatMap(n => Seq(s"&$n;", s"&${n}x;", s"&$n")) ++
+      Seq("a" * maxName, "#" + "1" * maxName, "#x" + "1" * (maxName - 1))
+        .flatMap(body => Seq(s"&$body;", s"&${body}0;"))
+    edges.foreach(e => assertDecodersAgree(s"a${e}b&$e;"))
+    // the named, numeric and astral corners decode to what they name
+    assert(inPlaceEntity("&#+65;", 0) == (('A', 0.toChar, 6)))
+    assert(inPlaceEntity("&#-1;", 0) == (('&', 0.toChar, 1)))
+    assert(inPlaceEntity("&#x1F600;", 0) == ((0xD83D.toChar, 0xDE00.toChar, 9)))
+    assert(inPlaceEntity(s"&${longest.head};", 0)._3 == maxName + 2)
+    // and random soup built from the decoder's own alphabet
+    val rnd = new java.util.Random(0x454e54L) // "ENT"
+    val alphabet = "&&&;;##xX+-0123456789aAfFmplgtOeo"
+    (1 to 3000).foreach { _ =>
+      assertDecodersAgree(Seq.fill(1 + rnd.nextInt(24))(alphabet.charAt(rnd.nextInt(alphabet.length))).mkString)
+    }
+  }
+
+  test("a 2 MB page of unterminated '&' extracts in linear time") {
+    val n = 700 * 1000
+    val page = "<body><p>" + "&x " * n + "</p></body>"
+    assert(page.length > 2 * 1000 * 1000)
+    val t0 = System.nanoTime()
+    val r = Boilerplate.extract(page)
+    val s = (System.nanoTime() - t0) / 1e9
+    assert(r.text == ("&x " * n).trim)
+    // tens of milliseconds in place; an unbounded ';' search per '&' is
+    // quadratic here and takes tens of seconds
+    assert(s < 10.0, f"$s%.2f s")
+  }
 }

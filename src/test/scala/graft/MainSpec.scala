@@ -2,10 +2,25 @@ package graft
 
 import java.io.{ByteArrayOutputStream, File, PrintStream}
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicLong
 
 import graft.pipeline.{Checkpoint, Corpus, Main}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+/** Sums the shuffle bytes every task of a context writes. Registered by
+  * class name through `spark.extraListeners`, so it sees the session that
+  * `Main` builds itself. */
+class ShuffleBytesListener extends SparkListener {
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+    if (e.taskMetrics != null)
+      ShuffleBytesListener.written.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+}
+
+object ShuffleBytesListener {
+  val written = new AtomicLong
+}
 
 /** Runs the `Main` submit path in process, as `spark-submit` would: `Main`
   * builds and stops its own session from the `spark.master` system
@@ -37,9 +52,36 @@ class MainSpec extends AnyFunSuite {
     buf.toString("UTF-8")
   }
 
-  private def writePages(dir: String, texts: Seq[(Long, String)]): Unit = withSession { s =>
+  /** Writes `texts` as a page table of `files` parquet files, one row group
+    * each; the default gives each of a submit's 2 cores one. */
+  private def writePages(dir: String, texts: Seq[(Long, String)], files: Int = 2): Unit =
+    withSession { s =>
+      import s.implicits._
+      texts.map { case (id, t) => Corpus.pageRowFor(id, t, "en") }.toDS()
+        .repartition(files).write.parquet(dir)
+    }
+
+  /** One submit with [[ShuffleBytesListener]] attached; returns its stdout
+    * and the shuffle bytes its tasks wrote. */
+  private def submitCountingShuffle(args: String*): (String, Long) = {
+    ShuffleBytesListener.written.set(0L)
+    System.setProperty("spark.extraListeners", classOf[ShuffleBytesListener].getName)
+    val printed =
+      try submit(args: _*)
+      finally System.clearProperty("spark.extraListeners")
+    // Main's spark.stop() drains the listener bus before submit returns
+    (printed, ShuffleBytesListener.written.get)
+  }
+
+  /** The committed output holds exactly `texts`, each with its expected
+    * extracted text (even ids are PDFs). */
+  private def assertCommitted(out: String, texts: Seq[(Long, String)]): Unit = withSession { s =>
     import s.implicits._
-    texts.map { case (id, t) => Corpus.pageRowFor(id, t, "en") }.toDS().write.parquet(dir)
+    val got = Checkpoint.readExtracted(s, out).select("url", "text").as[(String, String)].collect()
+    val want = texts.map { case (id, t) =>
+      Corpus.UrlPrefix + id -> (if (id % 2 == 0) Corpus.pdfExpectedText(id, t) else t)
+    }
+    assert(got.sorted.toSeq == want.sorted)
   }
 
   test("Main: fresh submit commits every doc, re-submit commits nothing, --delta prints statuses") {
@@ -50,14 +92,7 @@ class MainSpec extends AnyFunSuite {
 
     val first = submit(s"$dir/pages", out)
     assert(first.contains("\"docs\":12,"), first)
-    withSession { s =>
-      import s.implicits._
-      val got = Checkpoint.readExtracted(s, out).select("url", "text").as[(String, String)].collect()
-      val want = texts.map { case (id, t) =>
-        Corpus.UrlPrefix + id -> (if (id % 2 == 0) Corpus.pdfExpectedText(id, t) else t)
-      }
-      assert(got.sorted.toSeq == want.sorted)
-    }
+    assertCommitted(out, texts)
 
     // a fully-resumed re-submit publishes nothing: no empty batch, no
     // leftover staging dir
@@ -75,5 +110,27 @@ class MainSpec extends AnyFunSuite {
     val delta = submit(s"$dir/next", s"$dir/delta_out", "--delta", s"$dir/pages")
     assert(delta.contains(""""statuses":{"added":3,"changed":3,"removed":3,"unchanged":6}"""), delta)
     assert(delta.contains("\"docs\":6,"), delta)
+  }
+
+  test("Main: a fresh submit extracts straight off the scan splits and writes no shuffle bytes") {
+    val dir = Files.createTempDirectory("graft_spec_main_noshuffle").toString
+    val texts = (0L until 40L).map(i => i -> s"scan aligned document $i with a few more words")
+    writePages(s"$dir/pages", texts)
+    val out = s"$dir/out"
+    val (printed, shuffled) = submitCountingShuffle(s"$dir/pages", out)
+    assert(printed.contains("\"docs\":40,"), printed)
+    assert(shuffled == 0L)
+    assertCommitted(out, texts)
+  }
+
+  test("Main: fewer row groups than cores are hash-spread before extraction") {
+    val dir = Files.createTempDirectory("graft_spec_main_spread").toString
+    val texts = (0L until 40L).map(i => i -> s"single file document $i with a few more words")
+    writePages(s"$dir/pages", texts, files = 1)
+    val out = s"$dir/out"
+    val (printed, shuffled) = submitCountingShuffle(s"$dir/pages", out)
+    assert(printed.contains("\"docs\":40,"), printed)
+    assert(shuffled > 0L)
+    assertCommitted(out, texts)
   }
 }

@@ -384,48 +384,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.conf.unset("spark.graft.table.format")
   }
 
-  test("legacy pre-atomic layout: flat data files stay readable and their urls stay done") {
-    import spark.implicits._
-    val texts = (0L until 8L).map(i => i -> s"legacy layout document $i words")
-    val pages = texts.map { case (id, t) => Corpus.pageRowFor(id, t, "en") }.toDS()
-    val outDir = java.nio.file.Files.createTempDirectory("graft_spec_legacy").toString
-    // simulate an old run: data as FLAT part-files under extracted/, manifest
-    // as flat part-files under _manifest/ without a `batch` column
-    val done = ExtractPipeline.run(pages)
-    done.toDF().coalesce(1).write.parquet(s"$outDir/.legacy_stage")
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(Checkpoint.dataPath(outDir)))
-    new java.io.File(s"$outDir/.legacy_stage").listFiles()
-      .filter(_.getName.startsWith("part-")).foreach { f =>
-        fs.rename(new org.apache.hadoop.fs.Path(f.getPath),
-          new org.apache.hadoop.fs.Path(s"${Checkpoint.dataPath(outDir)}/${f.getName}"))
-      }
-    done.select("url", "n_chars", "decode_failures")
-      .withColumn("part_id", spark_partition_id())
-      .coalesce(1).write.parquet(s"$outDir/.legacy_man")
-    fs.mkdirs(new org.apache.hadoop.fs.Path(Checkpoint.manifestPath(outDir)))
-    new java.io.File(s"$outDir/.legacy_man").listFiles()
-      .filter(_.getName.startsWith("part-")).foreach { f =>
-        fs.rename(new org.apache.hadoop.fs.Path(f.getPath),
-          new org.apache.hadoop.fs.Path(s"${Checkpoint.manifestPath(outDir)}/${f.getName}"))
-      }
-    // the committed legacy output is readable through the standard reader...
-    assert(Checkpoint.readExtracted(spark, outDir).count() == 8)
-    // ...its urls stay done, and a new-layout commit coexists with it
-    assert(Checkpoint.resume(pages, outDir).count() == 0)
-    val more = (100L until 104L).map(i => Corpus.pageRowFor(i, s"new doc $i", "en")).toDS()
-    Checkpoint.commitWithData(ExtractPipeline.run(more), outDir)
-    assert(Checkpoint.readExtracted(spark, outDir).count() == 12)
-    assert(Checkpoint.metrics(spark, outDir).collect().head.getAs[Long]("docs_done") == 12)
-    // time travel spans the legacy commit too: as of the legacy manifest's
-    // snapshot only the 8 legacy rows exist; as of the newest, all 12
-    val snaps = Checkpoint.snapshots(spark, outDir)
-    assert(snaps.length == 2 && snaps.head.name.isEmpty)
-    assert(Checkpoint.readExtractedAsOf(spark, outDir, snaps.head.commitMs).count() == 8)
-    assert(Checkpoint.readExtractedAsOf(spark, outDir, snaps.last.commitMs).count() == 12)
-  }
-
   test("exactly-once: ORPHAN legacy flat data (no legacy manifest) stays invisible") {
     import spark.implicits._
     val texts = (0L until 6L).map(i => i -> s"orphan legacy doc $i words")
@@ -449,16 +407,30 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out.select("url").distinct().count() == 6, "duplicate urls from orphan leak")
   }
 
-  test("sizeRouted: both lanes preserve rows and extraction is unchanged") {
+  test("only batch_ directories are committed manifests: a flat manifest file marks nothing done") {
     import spark.implicits._
-    val tiny = (0L until 40L).map(i => Corpus.pageRowFor(i, s"small doc $i words", "en"))
-    val big = Seq(Corpus.pageRowFor(1000L, "huge " * 40000, "en")) // ~200 KB payload
-    val pages = (tiny ++ big).toDS()
-    val routed = ExtractPipeline.sizeRouted(pages, numPartitions = 4, bigBytes = 100 * 1024)
-    assert(routed.count() == 41)
-    val a = ExtractPipeline.run(routed).collect().map(d => d.url -> d.text).toMap
-    val b = ExtractPipeline.run(pages).collect().map(d => d.url -> d.text).toMap
-    assert(a == b)
+    val pages = (0L until 6L).map(i => Corpus.pageRowFor(i, s"flat manifest doc $i words", "en")).toDS()
+    val outDir = java.nio.file.Files.createTempDirectory("graft_spec_flatman").toString
+    // a flat part- file of manifest rows directly under _manifest/, as the
+    // pre-atomic layout wrote it: not a batch, so it vouches for nothing
+    ExtractPipeline.run(pages).select("url", "n_chars", "decode_failures")
+      .coalesce(1).write.parquet(s"$outDir/.flat")
+    val fs = new org.apache.hadoop.fs.Path(outDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(new org.apache.hadoop.fs.Path(Checkpoint.manifestPath(outDir)))
+    new java.io.File(s"$outDir/.flat").listFiles()
+      .filter(_.getName.startsWith("part-")).foreach { f =>
+        fs.rename(new org.apache.hadoop.fs.Path(f.getPath),
+          new org.apache.hadoop.fs.Path(s"${Checkpoint.manifestPath(outDir)}/${f.getName}"))
+      }
+    assert(Checkpoint.snapshots(spark, outDir).isEmpty)
+    assert(Checkpoint.resume(pages, outDir).count() == 6)
+    assert(Checkpoint.readExtracted(spark, outDir).count() == 0)
+    // the first real commit is the only snapshot, and the flat file stays out
+    Checkpoint.commitWithData(ExtractPipeline.run(pages), outDir)
+    assert(Checkpoint.snapshots(spark, outDir).map(_.name.startsWith("batch_")) == Seq(true))
+    assert(Checkpoint.readExtracted(spark, outDir).count() == 6)
+    assert(Checkpoint.metrics(spark, outDir).collect().head.getAs[Long]("docs_done") == 6)
   }
 
   test("captureLines: pdf span source lines match the reference's CR/LF/CRLF rules") {
@@ -531,25 +503,30 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(pairs.toSeq == (0L until 3L).map(i => (i, i + 500L)))
   }
 
-  test("salted repartition spreads a skewed corpus evenly by bytes") {
+  test("spread: a one-row-group skewed corpus is hash-spread by url") {
     import spark.implicits._
     // 1 giant doc (500 KB text -> multi-MB pdf) + 600 tiny docs, written as
-    // ONE parquet file: without salting, whichever task gets the file gets
-    // everything; salted() spreads rows across all partitions
+    // ONE parquet file: one task would read the whole row group, so spread()
+    // hashes the rows over 2 x 4 partitions
     val giant = Corpus.pageRowFor(0L, "x" * 500000, "en")
     val tiny = (1L to 600L).map(i => Corpus.pageRowFor(i, s"tiny doc number $i", "en"))
     val dir = java.nio.file.Files.createTempDirectory("graft_skew").toString
-    (giant +: tiny).toDS().coalesce(1).write.mode("overwrite").parquet(dir)
-    val pages = spark.read.parquet(dir)
-      .as[PageRow](org.apache.spark.sql.Encoders.product[PageRow])
-    val salted = ExtractPipeline.salted(pages, 8)
-    val perPart = salted.mapPartitions(it => Iterator.single(it.size)).collect()
+    def table(files: Int, name: String) = {
+      (giant +: tiny).toDS().repartition(files).write.parquet(s"$dir/$name")
+      spark.read.parquet(s"$dir/$name").as[PageRow](org.apache.spark.sql.Encoders.product[PageRow])
+    }
+    val one = table(1, "one")
+    val spread = ExtractPipeline.spread(one, one)
+    val perPart = spread.mapPartitions(it => Iterator.single(it.size)).collect()
     assert(perPart.length == 8)
     assert(perPart.count(_ > 0) >= 6, perPart.mkString(",")) // spread, not piled
     // extraction result unchanged by the repartition
-    val a = ExtractPipeline.run(pages).select("url", "n_chars").collect().toSet
-    val b = ExtractPipeline.run(salted).select("url", "n_chars").collect().toSet
+    val a = ExtractPipeline.run(one).select("url", "n_chars").collect().toSet
+    val b = ExtractPipeline.run(spread).select("url", "n_chars").collect().toSet
     assert(a == b)
+    // with a row group for each of the 4 cores, the scan splits are kept
+    val four = table(4, "four")
+    assert(ExtractPipeline.spread(four, four) eq four)
   }
 
   test("streaming extraction (readStream -> mapPartitions -> sink) matches batch") {
