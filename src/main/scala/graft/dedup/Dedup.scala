@@ -213,11 +213,6 @@ object Dedup {
       concat_ws(" ", (0 until k).map(j => element_at(ws, i + j + 1)): _*)))
   }
 
-  /** Word k-shingles of a text column (convenience; see the caveat on
-    * [[shinglesFromWords]] — prefer materializing the split). */
-  def shingleCol(textCol: Column, k: Int): Column =
-    shinglesFromWords(split(trim(textCol), "\\s+"), k)
-
   /** (id, shingle) inverted-index rows, distinct per doc. */
   def shingles(docs: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
     docs

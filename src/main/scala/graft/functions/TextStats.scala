@@ -28,10 +28,6 @@ object TextStats {
   def nChars(text: Column): Column = length(text).cast("long")
   def nAlpha(text: Column): Column =
     (length(text) - length(regexp_replace(text, "[a-zA-Z]", ""))).cast("long")
-  def nDigits(text: Column): Column =
-    (length(text) - length(regexp_replace(text, "[0-9]", ""))).cast("long")
-  def nPunct(text: Column): Column =
-    (length(text) - length(regexp_replace(text, "[.,;:!?'\"()]", ""))).cast("long")
 
   val Stopwords: Seq[String] =
     Seq("the", "a", "an", "of", "and", "to", "in", "is", "it", "that")

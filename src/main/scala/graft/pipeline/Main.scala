@@ -21,15 +21,16 @@ import org.apache.spark.sql.functions._
   * percent of it.
   *
   * Reads the input_hint page table (parquet path or Iceberg-style table
-  * path), skips urls already present in `<outDir>/_manifest` (resume),
-  * then extracts and writes the output table in one pass through
-  * [[Checkpoint.commitWithData]]. Extraction runs straight off the scan
-  * splits, so a fresh submit is one scan → extract → write stage with no
-  * shuffle; only an input with fewer parquet row groups than cores is
-  * hash-spread first ([[ExtractPipeline.spread]]). Nothing is cached, the
-  * metrics rollup is observed during that data write, and the checkpoint
-  * manifest (url + data file lineage + metrics) is read back from the
-  * written files. It prints the rollup as one JSON line. A fully-resumed
+  * path) with the `PageRow` schema given, skips urls already committed
+  * under `<outDir>/_manifest` (resume), then extracts and writes the
+  * output table in one pass through [[Checkpoint.commitWithData]].
+  * Extraction runs straight off the scan splits, so a fresh submit is ONE
+  * Spark job, scan → extract → write in one stage with no shuffle; only an
+  * input with fewer parquet row groups than cores is hash-spread first
+  * ([[ExtractPipeline.spread]]). Nothing is cached, the metrics rollup is
+  * observed during that data write, and the driver then writes the
+  * checkpoint manifest: the list of the written data files and the
+  * observed totals. It prints the rollup as one JSON line. A fully-resumed
   * run commits nothing. Designed so a killed run
   * re-submitted with the same arguments continues mid-table (north_rule:
   * resumable with per-partition lineage + metrics).

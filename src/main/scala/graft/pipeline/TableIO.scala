@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 
 /** Table access seam: the pipeline reads/writes through this object so the
   * storage format is a configuration, not a code change. In this sandbox the
@@ -10,18 +10,16 @@ import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
   * through the Iceberg catalog (`format("iceberg")` with a table identifier),
   * whose snapshots subsume the manifest's resume role. */
 object TableIO {
-  private def format(spark: SparkSession): String =
+  /** The one lookup of `spark.graft.table.format`: the format of the page
+    * table and of the extracted data files. */
+  private[pipeline] def format(spark: SparkSession): String =
     spark.conf.get("spark.graft.table.format", "parquet")
 
-  def readPages(spark: SparkSession, table: String): Dataset[PageRow] =
-    spark.read.format(format(spark)).load(table)
-      .select("url", "warc_ts", "html", "text", "lang")
-      .as[PageRow](org.apache.spark.sql.Encoders.product[PageRow])
-
-  def read(spark: SparkSession, table: String): DataFrame =
-    spark.read.format(format(spark)).load(table)
-
-  def append(df: DataFrame, table: String): Unit =
-    df.write.format(df.sparkSession.conf.get("spark.graft.table.format", "parquet"))
-      .mode(SaveMode.Append).save(table)
+  /** The page table, read with the `PageRow` schema given: the reader
+    * starts no schema-inference job, and columns the table has beyond
+    * `PageRow`'s five are not read. */
+  def readPages(spark: SparkSession, table: String): Dataset[PageRow] = {
+    val enc = Encoders.product[PageRow]
+    spark.read.schema(enc.schema).format(format(spark)).load(table).as[PageRow](enc)
+  }
 }

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicLong
 
 import graft.pipeline.{Checkpoint, Corpus, Main}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,6 +20,15 @@ class ShuffleBytesListener extends SparkListener {
 
 object ShuffleBytesListener {
   val written = new AtomicLong
+}
+
+/** Counts the jobs a context starts; registered like [[ShuffleBytesListener]]. */
+class JobCountListener extends SparkListener {
+  override def onJobStart(e: SparkListenerJobStart): Unit = JobCountListener.started.incrementAndGet()
+}
+
+object JobCountListener {
+  val started = new AtomicLong
 }
 
 /** Runs the `Main` submit path in process, as `spark-submit` would: `Main`
@@ -61,17 +70,23 @@ class MainSpec extends AnyFunSuite {
         .repartition(files).write.parquet(dir)
     }
 
-  /** One submit with [[ShuffleBytesListener]] attached; returns its stdout
-    * and the shuffle bytes its tasks wrote. */
-  private def submitCountingShuffle(args: String*): (String, Long) = {
-    ShuffleBytesListener.written.set(0L)
-    System.setProperty("spark.extraListeners", classOf[ShuffleBytesListener].getName)
+  /** One submit with `listener` attached by class name; returns its
+    * stdout and what the listener added to `counter`. */
+  private def submitCounting(listener: Class[_ <: SparkListener], counter: AtomicLong)(
+      args: String*): (String, Long) = {
+    counter.set(0L)
+    System.setProperty("spark.extraListeners", listener.getName)
     val printed =
       try submit(args: _*)
       finally System.clearProperty("spark.extraListeners")
     // Main's spark.stop() drains the listener bus before submit returns
-    (printed, ShuffleBytesListener.written.get)
+    (printed, counter.get)
   }
+
+  /** One submit with [[ShuffleBytesListener]] attached; returns its stdout
+    * and the shuffle bytes its tasks wrote. */
+  private def submitCountingShuffle(args: String*): (String, Long) =
+    submitCounting(classOf[ShuffleBytesListener], ShuffleBytesListener.written)(args: _*)
 
   /** The committed output holds exactly `texts`, each with its expected
     * extracted text (even ids are PDFs). */
@@ -120,6 +135,20 @@ class MainSpec extends AnyFunSuite {
     val (printed, shuffled) = submitCountingShuffle(s"$dir/pages", out)
     assert(printed.contains("\"docs\":40,"), printed)
     assert(shuffled == 0L)
+    assertCommitted(out, texts)
+  }
+
+  test("Main: a fresh submit runs exactly one Spark job") {
+    val dir = Files.createTempDirectory("graft_spec_main_onejob").toString
+    val texts = (0L until 40L).map(i => i -> s"one job document $i with a few more words")
+    writePages(s"$dir/pages", texts)
+    val out = s"$dir/out"
+    val (printed, jobs) = submitCounting(classOf[JobCountListener], JobCountListener.started)(
+      s"$dir/pages", out)
+    assert(printed.contains("\"docs\":40,"), printed)
+    assert(jobs == 1L, s"a fresh submit started $jobs jobs")
+    val again = submit(s"$dir/pages", out)
+    assert(again.contains("\"docs\":0,"), again)
     assertCommitted(out, texts)
   }
 

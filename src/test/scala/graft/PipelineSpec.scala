@@ -146,18 +146,25 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Checkpoint.readExtracted(spark, outDir).count() == 10,
       "vacuum must not touch referenced batches")
     assert(Checkpoint.vacuum(spark, outDir, graceMs = -1000L).isEmpty)
-    // each batch's manifest is read back from its data: the same url set,
-    // and every manifest row names the data file that holds it
+    // each batch's manifest lists exactly the visible files of its data
+    // batch, with their row count, and every url's file is among them
     def batchDirs(root: String) = new java.io.File(root).listFiles
       .filter(_.getName.startsWith("batch_")).map(_.getName).sorted.toSeq
     val batches = batchDirs(Checkpoint.manifestPath(outDir))
     assert(batches.size == 2 && batchDirs(Checkpoint.dataPath(outDir)) == batches)
+    val manifests = Checkpoint.manifests(spark, outDir).map(m => m.name -> m).toMap
     batches.foreach { b =>
-      val man = spark.read.parquet(s"${Checkpoint.manifestPath(outDir)}/$b")
-        .select("url", "file_name").as[(String, String)].collect().toSet
-      val data = spark.read.parquet(s"${Checkpoint.dataPath(outDir)}/$b")
-        .select(col("url"), col("_metadata.file_name")).as[(String, String)].collect().toSet
-      assert(man == data, s"manifest of $b differs from its data")
+      val m = manifests(b)
+      assert(m.dataBatch.contains(b))
+      val listed = m.files.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
+      val visible = new java.io.File(s"${Checkpoint.dataPath(outDir)}/$b").list
+        .filterNot(n => n.startsWith(".") || n.startsWith("_")).toSet
+      assert(listed == visible, s"manifest of $b differs from its data files")
+      val held = spark.read.parquet(s"${Checkpoint.dataPath(outDir)}/$b")
+        .select(col("url"), col("_metadata.file_name")).as[(String, String)].collect()
+      assert(held.nonEmpty && held.forall { case (_, f) => listed.contains(f) },
+        s"a url of $b sits in a file its manifest does not list")
+      assert(m.stats.docs == held.length)
     }
     // an empty commit returns 0 docs without waiting forever for its
     // observation, and leaves no batch and no staging dir behind
@@ -172,6 +179,30 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(stats == Checkpoint.CommitStats(0, 0, 0, 0))
         assert(listing() == before, "an empty commit must publish nothing")
       }
+  }
+
+  test("metrics: the sum of the totals each commit observed") {
+    import spark.implicits._
+    val texts = (0L until 9L).map(i => i -> s"metrics document $i body words")
+    val junk = PageRow(Corpus.UrlPrefix + 99, new java.sql.Timestamp(0),
+      "%PDF-1.4 this is not really a pdf".getBytes("ISO-8859-1"), "", "en")
+    val pages = (texts.map { case (id, t) => Corpus.pageRowFor(id, t, "en") } :+ junk).toDS()
+    def docId = element_at(split(col("url"), "/"), -1).cast("long")
+    val outDir = java.nio.file.Files.createTempDirectory("graft_spec_metrics").toString
+    val stats = Seq(pages.where(docId < 4), pages.where(docId >= 4))
+      .map(p => Checkpoint.commitWithData(ExtractPipeline.run(p), outDir))
+    val total = stats.reduce(_ + _)
+    assert(total.docs == 10 && total.pdfDocs == 6 && total.decodeFailures >= 1)
+    def rollup() = Checkpoint.metrics(spark, outDir)
+      .as[(Long, Long, Long)].collect().toSeq
+    assert(rollup() == Seq((total.docs, total.chars, total.decodeFailures)))
+    // the totals agree with the table itself, and survive compaction
+    val table = Checkpoint.readExtracted(spark, outDir)
+      .agg(count(lit(1)), sum("n_chars"), sum("decode_failures")).as[(Long, Long, Long)].head
+    assert(table == rollup().head)
+    assert(Checkpoint.compact(spark, outDir).isDefined)
+    assert(rollup() == Seq((total.docs, total.chars, total.decodeFailures)))
+    assert(Checkpoint.manifests(spark, outDir).map(_.stats) == Seq(total))
   }
 
   test("compact: content identical, one data batch remains, resume stays empty, manifest-only kept") {
