@@ -1,7 +1,5 @@
 package graft
 
-import graft.dedup.Dedup
-import graft.functions.TextStats
 import graft.html.Boilerplate
 import graft.pdf.{PdfExtract, WorkBuffers}
 import graft.pipeline.{Corpus, ExtractPipeline, PageRow}
@@ -212,55 +210,6 @@ object Bench {
     val docsDf = spark.read.parquet(s"$sfDir/documents.parquet")
     val queryThunks: Seq[(String, () => Unit)] = Seq(
       "extract_pipeline" -> (() => runExtract(pages)),
-      "dedup_minhash_lsh" -> (() => {
-        Dedup.clearCaches() // each pass builds fresh index caches; no pile-up
-        Dedup.minhashDedupPairs(docsDf, "doc_id", "text").count(); ()
-      }),
-      "dedup_exact" -> (() => { Dedup.exactGroups(docsDf, "doc_id", "text").count(); () }),
-      "text_stats" -> (() => {
-        docsDf.select(
-            TextStats.wsTokens(col("text")),
-            TextStats.nAlpha(col("text")),
-            TextStats.fingerprint(col("text")),
-            TextStats.langId(col("text")))
-          .agg(count(lit(1))).collect(); ()
-      }),
-      "dedup_clusters" -> (() => {
-        Dedup.clearCaches()
-        Dedup.connectedComponents(
-          Dedup.ngramJaccardPairs(docsDf, "doc_id", "text")).count(); ()
-      }),
-      "dedup_chunks" -> (() => { Dedup.duplicateChunks(docsDf, "doc_id", "text").count(); () }),
-      "text_repetition" -> (() => { TextStats.repetitionSignals(docsDf, "doc_id", "text").count(); () }),
-      "decontamination_13gram" -> (() => {
-        Dedup.clearCaches()
-        Dedup.ngramOverlapContamination(docsDf, "doc_id", "text", "source").count()
-        // release this thunk's index caches before the next queries are
-        // timed (the old sequential bench cleared here too) — otherwise the
-        // persisted tables sit in block storage while later queries run
-        Dedup.clearCaches()
-      }),
-      // late-round operators, added to the timed tier in round 5 so their
-      // cost is tracked round-over-round (same operator shapes as the
-      // correctness gate, minus the gate's presentation orderBy)
-      "dedup_exact_spans" -> (() => {
-        Dedup.duplicateSpans(docsDf.select("doc_id", "text"), "doc_id", "text",
-          windowTokens = 20).count()
-        Dedup.clearCaches() // position-table cache must not linger into later timings
-      }),
-      "dedup_drop_common_chunks" -> (() => {
-        Dedup.dropCommonChunks(docsDf.select("doc_id", "text"), "doc_id", "text").count()
-        Dedup.clearCaches()
-      }),
-      // round-5 second-half operators (same shapes as their gate queries)
-      "dedup_corpus_lines" -> (() => {
-        Dedup.dedupLinesAcrossCorpus(
-          docsDf.select("doc_id", "text"), "doc_id", "text").count(); ()
-      }),
-      "lm_score" -> (() => {
-        TextStats.lmScore(docsDf, "doc_id", "text").count()
-        Dedup.clearCaches() // the bigram cache must not linger into later timings
-      }),
       "warc_parse" -> (() => {
         import spark.implicits._
         docsDf.select("doc_id", "text").as[(Long, String)]

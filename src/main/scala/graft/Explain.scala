@@ -1,6 +1,5 @@
 package graft
 
-import graft.dedup.Dedup
 import graft.pipeline.{Checkpoint, Corpus, ExtractPipeline, TableIO}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
@@ -31,17 +30,8 @@ object Explain {
         |  when the table has a row group per core — a fresh submit is one
         |  scan → extract → write stage (a table with fewer row groups is
         |  hash-spread first; pinned by MainSpec)
-        |- dedup exact: partial (map-side) aggregation before the single shuffle
-        |- jaccard: equi-joins on derived keys only (no cartesian anywhere);
-        |  hot shingles (df > MaxBucket) anti-joined out before the self-join
         |- blocklist: both joins BroadcastHashJoin (semi + anti); the page
         |  table is never exchanged
-        |- corpus-line dedup: winner agg partial-combines on md5(line); the
-        |  survivor filter is LEFT SEMI on the UNIQUE (line-key, id, pos)
-        |  composite, so a boilerplate line hitting half the corpus never
-        |  concentrates on one reducer
-        |- lm_score: the narrow bigram table is ONE InMemoryTableScan reused
-        |  by both count aggs and the score join; both counts partial-combine
         |""".stripMargin)
     def dump(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
       sb.append(s"\n## $name\n\n```\n")
@@ -63,15 +53,6 @@ object Explain {
       ExtractPipeline.run(pagesTable, "").groupBy("kind")
         .agg(count(lit(1)), sum("n_chars")))
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    dump("dedup_exact", Dedup.exactGroups(docs, "doc_id", "text"))
-    dump("dedup_ngram_jaccard", Dedup.ngramJaccardPairs(docs, "doc_id", "text"))
-    dump("dedup_chunks (linear explode -> map-side-combined groupBy, no self-join)",
-      Dedup.duplicateChunks(docs, "doc_id", "text"))
-    dump("text_repetition (two explode->agg chains, no per-doc window/collect_list)",
-      graft.functions.TextStats.repetitionSignals(docs, "doc_id", "text"))
-    dump("text_stats (single codegen stage)", docs.select(
-      graft.functions.TextStats.wsTokens(col("text")).as("t"),
-      graft.functions.TextStats.fingerprint(col("text")).as("f")))
     dump("extract_metrics_only (narrow row out of the map; ReadSchema still url/html/lang)",
       ExtractPipeline.runMetrics(pagesTable).groupBy("kind")
         .agg(count(lit(1)), sum("n_chars")))
@@ -84,8 +65,6 @@ object Explain {
       graft.functions.Urls.dropBlockedDomains(pages, "url", "doc_id",
         Seq("example3.com").toDF("domain"))
     })
-    dump("dedup_exact_spans (narrow fp explode cached once; per-DOC island window, no corpus-wide sort)",
-      Dedup.duplicateSpans(docs, "doc_id", "text", windowTokens = 20))
     dump("pdf_spans (span explode is a Generate fused after the extract map — no extra exchange)", {
       import spark.implicits._
       val probe = docs.where(length(col("text")) > 0)
@@ -94,11 +73,6 @@ object Explain {
       ExtractPipeline.run(probe, delimiter = "").toDF()
         .select(col("url"), posexplode(col("spans")))
     })
-    dump("dedup_corpus_lines (map-side-combined winner agg; LEFT SEMI on the UNIQUE (line,id,pos) key so hot lines have no single reducer; per-doc reassembly)",
-      Dedup.dedupLinesAcrossCorpus(docs, "doc_id", "text"))
-    dump("lm_score (bigram table persisted once -> InMemoryTableScan x3; counts map-side combined; vocab 1-row broadcast)",
-      graft.functions.TextStats.lmScore(docs, "doc_id", "text"))
-    Dedup.clearCaches()
     dump("anchor_profile (both aggs partial-combined: duplicate anchors collapse map-side, argmax rides min(struct) — no collect_list, no window)", {
       import spark.implicits._
       val edges = docs.select("doc_id", "text").as[(Long, String)]

@@ -1,7 +1,5 @@
 package graft
 
-import graft.dedup.Dedup
-import graft.functions.TextStats
 import graft.pipeline.{Checkpoint, Corpus, ExtractPipeline}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -211,138 +209,6 @@ object SparkEntry {
         .select(docIdFromUrl, col("n_chars").cast("long").as("n_chars"))
         .orderBy("doc_id")
     }),
-    // --------------------------------------------------------------- dedup
-    "dedup_exact" -> ((s, dir) => {
-      val d = docs(s, dir).select("doc_id", "text")
-      val corpus = d.unionAll(
-        d.where(col("doc_id") % 4 === 0)
-          .select((col("doc_id") + 3000000L).as("doc_id"), col("text")))
-      Dedup.exactGroups(corpus, "doc_id", "text").orderBy("fp")
-    }),
-    "dedup_ngram_jaccard" -> ((s, dir) =>
-      Dedup.ngramJaccardPairs(docs(s, dir), "doc_id", "text", k = 3, threshold = 0.8)
-        .orderBy("id_a", "id_b")),
-    "dedup_minhash_lsh" -> ((s, dir) =>
-      Dedup.minhashDedupPairs(docs(s, dir), "doc_id", "text", k = 3, threshold = 0.8)
-        .orderBy("id_a", "id_b")),
-    "dedup_clusters" -> ((s, dir) =>
-      Dedup.connectedComponents(
-          Dedup.ngramJaccardPairs(docs(s, dir), "doc_id", "text", k = 3, threshold = 0.8))
-        .orderBy("doc_id")),
-    "dedup_simhash" -> ((s, dir) => {
-      // SimHash Hamming-band near-dup pairs, restricted to pairs whose
-      // CASE-SENSITIVE whitespace-normalized text is identical so DuckDB
-      // can oracle it exactly: equal normalized text ⇒ identical word
-      // sequence (simhash64 is case-sensitive, so the fingerprint must be
-      // too — a lowercased fp would admit case-variant pairs with nonzero
-      // Hamming) ⇒ identical simhash ⇒ Hamming 0, and the pigeonhole
-      // banding surfaces every Hamming≤3 pair. Docs under 4 words are
-      // excluded on both sides (their simhash degenerates to 0, making all
-      // of them mutually Hamming-0 — a degenerate bucket the cap may drop).
-      // The unrestricted Hamming-1..3 behavior is covered by DedupSpec's
-      // brute-force comparison (not ANSI-SQL-expressible).
-      val d = docs(s, dir).select("doc_id", "text")
-        .where(TextStats.wsTokens(col("text")) >= 4)
-      val corpus = d.unionAll(
-        d.where(col("doc_id") % 5 === 0)
-          .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
-      val fp = corpus.select(col("doc_id"),
-        md5(regexp_replace(trim(col("text")), "\\s+", " ").cast("binary")).as("fp"))
-      Dedup.simhashPairs(Dedup.simhashes(corpus, "doc_id", "text"), maxDist = 3)
-        .join(fp.as("fa"), col("id_a") === col("fa.doc_id"))
-        .join(fp.as("fb"), col("id_b") === col("fb.doc_id"))
-        .where(col("fa.fp") === col("fb.fp"))
-        .select(col("id_a"), col("id_b"))
-        .orderBy("id_a", "id_b")
-    }),
-    "dedup_chunks" -> ((s, dir) => {
-      // paragraph-style exact chunk dedup (20-word windows) with planted
-      // exact copies so duplicated windows exist deterministically
-      val d = docs(s, dir).select("doc_id", "text")
-      val corpus = d.unionAll(
-        d.where(col("doc_id") % 6 === 0)
-          .select((col("doc_id") + 4000000L).as("doc_id"), col("text")))
-      Dedup.duplicateChunks(corpus, "doc_id", "text").orderBy("fp")
-    }),
-    "dedup_exact_spans" -> ((s, dir) => {
-      // Lee-et-al-style exact-substring span dedup: chimera docs (text
-      // self-concatenated) plant long duplicated spans; windows crossing
-      // the chimera seam occur once, so the island merge must SPLIT there
-      val d = docs(s, dir).select("doc_id", "text")
-      val corpus = d.unionAll(
-        d.where(col("doc_id") % 9 === 0)
-          .select((col("doc_id") + 7000000L).as("doc_id"),
-            concat(col("text"), lit(" "), col("text")).as("text")))
-      Dedup.duplicateSpans(corpus, "doc_id", "text", windowTokens = 20)
-        .orderBy("doc_id", "start_pos")
-    }),
-    "dedup_drop_common_chunks" -> ((s, dir) =>
-      // C4-style boilerplate removal: drop every 5-word window occurring in
-      // >= 3 distinct documents, reassemble the survivors in order (docs
-      // reduced to nothing stay as empty rows)
-      Dedup.dropCommonChunks(docs(s, dir).select("doc_id", "text"),
-        "doc_id", "text").orderBy("doc_id")),
-    "dedup_keep_best" -> ((s, dir) =>
-      // canonical-URL dedup keeping the BEST fetch per page: key = the
-      // canonicalized form of a deterministically-synthesized messy URL
-      // (35 groups), score = text length, kept_id = argmax score with
-      // min-id tie-break — one map-side-combined aggregation, no window
-      Dedup.keepBestPerKey(
-          docs(s, dir).select(col("doc_id"),
-            graft.functions.Urls.canonicalUrl(concat(
-              lit("HTTPS://Example"), col("doc_id") % 7,
-              lit(".COM:443/p"), col("doc_id") % 5,
-              lit("?utm_source=a&gclid=z#frag"))).as("curl"),
-            TextStats.nChars(col("text")).as("score")),
-          "curl", "doc_id", "score")
-        .orderBy("key")),
-    "text_repetition" -> ((s, dir) =>
-      TextStats.repetitionSignals(docs(s, dir), "doc_id", "text")
-        .orderBy("doc_id")),
-    // --------------------------------------------------------- text analysis
-    "text_tokens" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-          TextStats.wsTokens(col("text")).as("ws_tokens"),
-          TextStats.regexTokens(col("text")).as("re_tokens"))
-        .orderBy("doc_id")),
-    "text_quality" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-          TextStats.nChars(col("text")).as("n_chars"),
-          TextStats.wsTokens(col("text")).as("n_words"),
-          TextStats.nAlpha(col("text")).as("n_alpha"),
-          TextStats.nStopwords(col("text")).as("n_stop"))
-        .orderBy("doc_id")),
-    "text_quality_filter" -> ((s, dir) =>
-      docs(s, dir)
-        .where(TextStats.qualityKeep(col("text"), wordMin = 15))
-        .select(col("doc_id"), TextStats.wsTokens(col("text")).as("n_words"))
-        .orderBy("doc_id")),
-    "text_fingerprint" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-          TextStats.fingerprint(col("text")).as("fp"))
-        .orderBy("doc_id")),
-    "text_gopher" -> ((s, dir) => {
-      // full Gopher rule set over deterministically-augmented text: doc_id
-      // mod 4/5/7 plants bullet lines, an ellipsis line + hashes, and a
-      // run of non-alphabetic words, so every rule's fail path is gated
-      val aug = docs(s, dir).select(col("doc_id"), concat(
-        col("text"),
-        when(col("doc_id") % 4 === 0,
-          lit("\n- bullet line\n- another bullet")).otherwise(lit("")),
-        when(col("doc_id") % 5 === 0,
-          lit("\nto be continued...\n# # #")).otherwise(lit("")),
-        when(col("doc_id") % 7 === 0,
-          concat(lit(" "), repeat(lit("9 "), 10))).otherwise(lit(""))
-      ).as("text"))
-      aug.select(col("doc_id"),
-          graft.functions.TextStats.gopherSignals(col("text"), minWords = 15).as("g"))
-        .select(col("doc_id"), col("g.*"))
-        .orderBy("doc_id")
-    }),
-    "text_langid" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-          TextStats.langId(col("text")).as("pred_lang"))
-        .orderBy("doc_id")),
     "pdf_metadata" -> ((s, dir) => {
       // document-level metadata surface (version sniff, trailer /Info merge,
       // page-tree count, /Metadata XML, trailer /ID) — S2/S7/S15/S24
@@ -556,23 +422,6 @@ object SparkEntry {
           }
         }.toDF("doc_id", "arm", "allowed", "crawl_delay", "sitemap")
         .orderBy("doc_id", "arm")
-    }),
-    "dedup_corpus_lines" -> ((s, dir) => {
-      // CCNet-style CORPUS-WIDE line dedup: both engines build the same
-      // 5-line input — a boilerplate line shared by every doc_id%7 class
-      // (cross-doc dup, planted twice so the within-doc repeat is also
-      // gate-visible), a unique content line, an empty line (always kept),
-      // and a second shared line keyed by doc_id%5 — so the corpus-wide
-      // first-occurrence-wins contract, empty-line preservation and
-      // whole-doc reassembly are all oracle-checked
-      s.read.parquet(s"$dir/documents.parquet")
-        .selectExpr("doc_id",
-          """concat('shared-', doc_id % 7, chr(10), md5(text), chr(10),
-            |  'shared-', doc_id % 7, chr(10), chr(10), 'tail-', doc_id % 5) AS text"""
-            .stripMargin)
-        .transform(d => graft.dedup.Dedup.dedupLinesAcrossCorpus(d, "doc_id", "text"))
-        .withColumnRenamed("id", "doc_id")
-        .orderBy("doc_id")
     }),
     "html_anchor_text" -> ((s, dir) => {
       // anchor-text extraction: the same edge walk as html_links, each
@@ -927,34 +776,7 @@ object SparkEntry {
       ).toDF("host", "robots_txt")
       graft.sources.Frontier.allowed(targets, "url", robots)
         .orderBy("doc_id", "ord")
-    }),
-    "decontamination" -> ((s, dir) =>
-      Dedup.crossGroupContamination(docs(s, dir), "doc_id", "text", "source")
-        .orderBy("id_a", "id_b")),
-    "decontamination_13gram" -> ((s, dir) =>
-      // GPT-3-style: docs sharing any 13-gram across sources, with the
-      // count of distinct leaking 13-grams
-      Dedup.ngramOverlapContamination(docs(s, dir), "doc_id", "text", "source")
-        .orderBy("doc_id")),
-    "tokens_histogram" -> ((s, dir) =>
-      // document-length distribution in 50-token buckets — the training-mix
-      // length profile; one map-side-combined groupBy
-      docs(s, dir)
-        .select(TextStats.wsTokens(col("text")).as("n"))
-        .select(expr("n div 50").as("bucket_50"))
-        .groupBy("bucket_50").agg(count(lit(1)).as("n_docs"))
-        .orderBy("bucket_50")),
-    "tfidf_top_terms" -> ((s, dir) =>
-      // per-document top-5 distinctive terms by tf·idf with an exact
-      // integer-scaled idf (no ln() — engine-portable BIGINT score)
-      TextStats.tfidfTopTerms(docs(s, dir), "doc_id", "text", topN = 5)
-        .orderBy("doc_id", "rank")),
-    "lm_score" -> ((s, dir) =>
-      // CCNet-style LM quality score (corpus-trained bigram model,
-      // add-one smoothing) as an EXACT INTEGER ppm surrogate — the per-doc
-      // sum is order-independent, so the fixpoint hash-gates where a float
-      // log-prob sum cannot
-      TextStats.lmScore(docs(s, dir), "doc_id", "text").orderBy("doc_id"))
+    })
   )
 
   /** DuckDB mirror of [[graft.pipeline.Corpus.pdfExpectedText]]: given list
@@ -1126,180 +948,6 @@ object SparkEntry {
     "compact_checkpoint" ->
       s"""SELECT doc_id, CAST(length(text) + $pdfExtraCharsSql AS BIGINT) AS n_chars
           FROM documents ORDER BY doc_id""",
-    "dedup_exact" ->
-      """WITH corpus AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 3000000, text FROM documents WHERE doc_id % 4 = 0)
-         SELECT md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g'))) AS fp,
-                count(*) AS n_docs, min(doc_id) AS keep_id
-         FROM corpus GROUP BY 1 ORDER BY fp""",
-    "dedup_ngram_jaccard" -> exactJaccardSql,
-    "dedup_minhash_lsh" -> exactJaccardSql,
-    "dedup_clusters" ->
-      """WITH RECURSIVE docs AS (SELECT doc_id, string_split(trim(text), ' ') AS ws FROM documents),
-         sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS sh
-                FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 2)) AS i
-                      FROM docs WHERE len(ws) >= 3)),
-         cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-         inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-                   FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2),
-         pairs AS (SELECT id_a, id_b FROM inter
-                   JOIN cnt ca ON ca.doc_id = id_a JOIN cnt cb ON cb.doc_id = id_b
-                   WHERE CAST(i AS DOUBLE) / (ca.n + cb.n - i) >= 0.8),
-         edges AS (SELECT id_a AS u, id_b AS v FROM pairs UNION ALL SELECT id_b, id_a FROM pairs),
-         reach AS (SELECT u, v FROM edges
-                   UNION SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u WHERE e.v <> r.u)
-         SELECT u AS doc_id, least(u, min(v)) AS cluster_rep
-         FROM reach GROUP BY u ORDER BY doc_id""",
-    "dedup_chunks" ->
-      """WITH corpus AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 4000000, text FROM documents WHERE doc_id % 6 = 0),
-         d AS (SELECT doc_id, string_split(trim(text), ' ') AS ws FROM corpus),
-         ch AS (SELECT doc_id, i AS pos, array_to_string(ws[i*20+1 : i*20+20], ' ') AS chunk
-                FROM (SELECT doc_id, ws, unnest(generate_series(0, (len(ws)-1)//20)) AS i FROM d))
-         SELECT md5(chunk) AS fp, count(*) AS n,
-                min(doc_id) AS first_doc, CAST(min(pos) AS BIGINT) AS min_pos
-         FROM ch GROUP BY 1 HAVING count(*) >= 2 ORDER BY fp""",
-    // positions whose 20-gram repeats corpus-wide, merged to maximal spans
-    // by the pos - row_number gaps-and-islands identity
-    "dedup_exact_spans" ->
-      """WITH corpus AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 7000000, text || ' ' || text FROM documents WHERE doc_id % 9 = 0),
-         d AS (SELECT doc_id, string_split(trim(text), ' ') AS ws FROM corpus),
-         pos AS (SELECT doc_id, i AS pos, md5(array_to_string(ws[i+1 : i+20], ' ')) AS fp
-                 FROM (SELECT doc_id, ws, unnest(generate_series(0, len(ws) - 20)) AS i
-                       FROM d WHERE len(ws) >= 20)),
-         dup AS (SELECT fp FROM pos GROUP BY fp HAVING count(*) >= 2),
-         dp AS (SELECT doc_id, pos FROM pos WHERE fp IN (SELECT fp FROM dup)),
-         isl AS (SELECT doc_id, pos,
-                   pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-                 FROM dp)
-         SELECT doc_id, CAST(min(pos) AS BIGINT) AS start_pos,
-                CAST(max(pos) + 20 AS BIGINT) AS end_pos, count(*) AS n_windows
-         FROM isl GROUP BY doc_id, grp ORDER BY doc_id, start_pos""",
-    "dedup_drop_common_chunks" ->
-      """WITH d AS (SELECT doc_id, string_split(trim(text), ' ') AS ws FROM documents),
-         ch AS (SELECT doc_id, i AS pos, array_to_string(ws[i*5+1 : i*5+5], ' ') AS chunk
-                FROM (SELECT doc_id, ws, unnest(generate_series(0, (len(ws)-1)//5)) AS i FROM d)),
-         common AS (SELECT chunk FROM (SELECT chunk, count(DISTINCT doc_id) AS df
-                                       FROM ch GROUP BY 1) WHERE df >= 3),
-         kept AS (SELECT doc_id, pos, chunk FROM ch ANTI JOIN common USING (chunk)),
-         agg AS (SELECT doc_id, string_agg(chunk, ' ' ORDER BY pos) AS text_clean,
-                        count(*) AS n_kept
-                 FROM kept GROUP BY doc_id)
-         SELECT d.doc_id, coalesce(a.text_clean, '') AS text_clean,
-                CAST(coalesce(a.n_kept, 0) AS BIGINT) AS n_kept
-         FROM d LEFT JOIN agg a USING (doc_id) ORDER BY doc_id""",
-    "text_repetition" ->
-      """WITH d AS (SELECT doc_id, string_split(trim(text), ' ') AS ws FROM documents),
-         wc AS (SELECT doc_id, w, count(*) AS c
-                FROM (SELECT doc_id, unnest(ws) AS w FROM d) GROUP BY 1, 2),
-         doc AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_words,
-                        CAST(max(c) AS BIGINT) AS top_cnt,
-                        CAST(sum(c * length(w)) AS BIGINT) AS char_sum
-                 FROM wc GROUP BY 1),
-         bg AS (SELECT doc_id, b, count(*) AS c FROM (
-                  SELECT doc_id, ws[i] || ' ' || ws[i+1] AS b
-                  FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 1)) AS i
-                        FROM d WHERE len(ws) >= 2)) GROUP BY 1, 2),
-         bgd AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS total_bg,
-                        CAST(count(*) AS BIGINT) AS distinct_bg FROM bg GROUP BY 1)
-         SELECT doc.doc_id AS doc_id, n_words,
-                (1000 * top_cnt) // n_words AS top_word_permille,
-                CAST(coalesce((1000 * (total_bg - distinct_bg)) // total_bg, 0) AS BIGINT) AS dup_bigram_permille,
-                (100 * char_sum) // n_words AS mean_word_len_centi
-         FROM doc LEFT JOIN bgd ON bgd.doc_id = doc.doc_id ORDER BY doc_id""",
-    // key = the canonical form of the synthesized messy URL (url_canonical
-    // oracles the canonicalization itself step by step; here the oracle
-    // asserts the END RESULT — a broken canonicalizer shifts keys and fails
-    // the hash); argmax(score) with min-id tie-break as a window
-    "dedup_keep_best" ->
-      """WITH u AS (SELECT doc_id,
-             'https://example' || (doc_id % 7) || '.com/p' || (doc_id % 5) AS key,
-             CAST(length(text) AS BIGINT) AS score
-           FROM documents),
-         r AS (SELECT key, doc_id,
-             count(*) OVER (PARTITION BY key) AS n_docs,
-             row_number() OVER (PARTITION BY key ORDER BY score DESC, doc_id) AS rn
-           FROM u)
-         SELECT key, doc_id AS kept_id, CAST(n_docs AS BIGINT) AS n_docs
-         FROM r WHERE rn = 1 ORDER BY key""",
-    "tfidf_top_terms" ->
-      """WITH w AS (SELECT doc_id, unnest(string_split(trim(text), ' ')) AS term FROM documents),
-         tf AS (SELECT doc_id, term, count(*) AS tf FROM w GROUP BY 1, 2),
-         df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         n AS (SELECT count(*) AS n_docs FROM documents),
-         scored AS (SELECT doc_id, tf.term AS term, tf.tf AS tf, df.df AS df,
-             tf.tf * ((1000 * n_docs) // df.df) AS score
-           FROM tf JOIN df ON df.term = tf.term CROSS JOIN n),
-         r AS (SELECT doc_id, term, tf, df, score,
-             row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, term) AS rank
-           FROM scored)
-         SELECT doc_id, rank, term, tf, df, score
-         FROM r WHERE rank <= 5 ORDER BY doc_id, rank""",
-    "text_tokens" ->
-      """SELECT doc_id,
-         CAST(len(string_split(trim(text), ' ')) AS BIGINT) AS ws_tokens,
-         CAST(len(regexp_extract_all(text, '[a-z]+|[A-Z]+|[0-9]+|[^a-zA-Z0-9\s]')) AS BIGINT) AS re_tokens
-         FROM documents ORDER BY doc_id""",
-    "text_quality" ->
-      """SELECT doc_id,
-         CAST(length(text) AS BIGINT) AS n_chars,
-         CAST(len(string_split(trim(text), ' ')) AS BIGINT) AS n_words,
-         CAST(length(text) - length(regexp_replace(text, '[a-zA-Z]', '', 'g')) AS BIGINT) AS n_alpha,
-         CAST(len(list_filter(string_split(trim(text), ' '),
-           w -> w IN ('the','a','an','of','and','to','in','is','it','that'))) AS BIGINT) AS n_stop
-         FROM documents ORDER BY doc_id""",
-    "text_fingerprint" ->
-      """SELECT doc_id, md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g'))) AS fp
-         FROM documents ORDER BY doc_id""",
-    "text_quality_filter" ->
-      """SELECT doc_id, CAST(len(string_split(trim(text), ' ')) AS BIGINT) AS n_words FROM documents
-         WHERE len(string_split(trim(text), ' ')) BETWEEN 15 AND 100000
-           AND (length(text) - length(regexp_replace(text, '[a-zA-Z]', '', 'g'))) >= 3 * len(string_split(trim(text), ' '))
-           AND (length(text) - length(regexp_replace(text, '[a-zA-Z]', '', 'g'))) <= 12 * len(string_split(trim(text), ' '))
-           AND len(list_filter(string_split(trim(text), ' '),
-                 w -> w IN ('the','a','an','of','and','to','in','is','it','that'))) >= 1
-         ORDER BY doc_id""",
-    "text_gopher" ->
-      """WITH aug AS (
-           SELECT doc_id, text ||
-             CASE WHEN doc_id % 4 = 0 THEN chr(10) || '- bullet line' || chr(10) || '- another bullet' ELSE '' END ||
-             CASE WHEN doc_id % 5 = 0 THEN chr(10) || 'to be continued...' || chr(10) || '# # #' ELSE '' END ||
-             CASE WHEN doc_id % 7 = 0 THEN ' ' || repeat('9 ', 10) ELSE '' END AS t
-           FROM documents),
-         sig AS (
-           SELECT doc_id,
-             CAST(len(string_split_regex(trim(t), '\s+')) AS BIGINT) AS n_words,
-             CAST(length(regexp_replace(t, '\s+', '', 'g')) AS BIGINT) AS chars_in_words,
-             CAST(length(t) - length(replace(t, '#', '')) AS BIGINT) AS n_hash,
-             CAST((length(t) - length(replace(t, '...', ''))) // 3 AS BIGINT) AS n_ellipsis,
-             CAST(len(string_split(t, chr(10))) AS BIGINT) AS n_lines,
-             CAST(len(list_filter(string_split(t, chr(10)),
-               l -> starts_with(trim(l), '- ') OR starts_with(trim(l), '* '))) AS BIGINT) AS n_bullet_lines,
-             CAST(len(list_filter(string_split(t, chr(10)),
-               l -> ends_with(trim(l), '...'))) AS BIGINT) AS n_ellipsis_lines,
-             CAST(len(list_filter(string_split_regex(trim(t), '\s+'),
-               w -> regexp_matches(w, '[a-zA-Z]'))) AS BIGINT) AS n_alpha_words,
-             CAST(len(list_intersect(list_distinct(string_split_regex(lower(trim(t)), '\s+')),
-               ['the','be','to','of','and','that','have','with'])) AS BIGINT) AS n_stop_distinct
-           FROM aug)
-         SELECT doc_id, n_words, chars_in_words, n_hash, n_ellipsis, n_lines, n_bullet_lines,
-           n_ellipsis_lines, n_alpha_words, n_stop_distinct,
-           CASE WHEN n_words >= 15 AND n_words <= 100000
-                 AND chars_in_words >= n_words * 3 AND chars_in_words <= n_words * 10
-                 AND n_hash * 10 <= n_words AND n_ellipsis * 10 <= n_words
-                 AND n_bullet_lines * 10 <= n_lines * 9
-                 AND n_ellipsis_lines * 10 <= n_lines * 3
-                 AND n_alpha_words * 10 >= n_words * 8
-                 AND n_stop_distinct >= 2
-                THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END AS keep
-         FROM sig ORDER BY doc_id""",
     // per-(host arm, probe path) verdicts in closed form: h0 blocks only
     // /private/, h1 allows only /public (longest-match), h2 blocks nothing,
     // h3's graftbot group blocks only *.pdf (shadowing the disallow-all *
@@ -1317,21 +965,6 @@ object SparkEntry {
                 WHEN k = 3 THEN ord != 2
                 ELSE true END AS allowed
          FROM t ORDER BY doc_id, ord""",
-    "text_langid" ->
-      """WITH h AS (SELECT doc_id,
-           len(list_filter(string_split(lower(trim(text)), ' '), w -> w IN ('der','die','und','das','nicht','von','ist','mit','den','ein'))) AS h_de,
-           len(list_filter(string_split(lower(trim(text)), ' '), w -> w IN ('the','and','of','to','a','in','is','it','that','for'))) AS h_en,
-           len(list_filter(string_split(lower(trim(text)), ' '), w -> w IN ('el','la','de','que','y','en','un','los','del','las'))) AS h_es,
-           len(list_filter(string_split(lower(trim(text)), ' '), w -> w IN ('le','la','les','et','des','un','une','du','que','est'))) AS h_fr,
-           len(list_filter(string_split(lower(trim(text)), ' '), w -> w IN ('的','了','是','我','不','在','有','人','这','他'))) AS h_zh
-           FROM documents)
-         SELECT doc_id, CASE
-           WHEN h_de = greatest(h_de,h_en,h_es,h_fr,h_zh) THEN 'de'
-           WHEN h_en = greatest(h_de,h_en,h_es,h_fr,h_zh) THEN 'en'
-           WHEN h_es = greatest(h_de,h_en,h_es,h_fr,h_zh) THEN 'es'
-           WHEN h_fr = greatest(h_de,h_en,h_es,h_fr,h_zh) THEN 'fr'
-           ELSE 'zh' END AS pred_lang
-         FROM h ORDER BY doc_id""",
     // document_id: the reference renders each trailer /ID hex string as
     // '"<hex>"; ' (StrTok.render keeps the angle brackets and wraps in
     // double quotes); variant 3's /ID is the fixed encryption docId (the
@@ -1448,29 +1081,6 @@ object SparkEntry {
                      ELSE NULL END AS crawl_delay,
                 'https://example.org/' || doc_id || '/sitemap.xml' AS sitemap
          FROM documents CROSS JOIN arms ORDER BY doc_id, arm""",
-    // independent restatement: same constructed input, corpus-wide
-    // first-occurrence via a window over (doc_id, position); empty lines
-    // always kept; docs losing every line come back as empty husks
-    "dedup_corpus_lines" ->
-      """WITH d AS (SELECT doc_id,
-             'shared-'||(doc_id % 7)||chr(10)||md5(text)||chr(10)||'shared-'||(doc_id % 7)
-               ||chr(10)||chr(10)||'tail-'||(doc_id % 5) AS input
-           FROM documents),
-         l AS (SELECT doc_id, unnest(string_split(input, chr(10))) AS line,
-                      unnest(generate_series(1, len(string_split(input, chr(10))))) AS ord
-               FROM d),
-         r AS (SELECT doc_id, line, ord,
-                      row_number() OVER (PARTITION BY line ORDER BY doc_id, ord) AS rn
-               FROM l WHERE line <> ''),
-         k AS (SELECT doc_id, line, ord FROM r WHERE rn = 1
-               UNION ALL SELECT doc_id, line, ord FROM l WHERE line = ''),
-         g AS (SELECT doc_id, string_agg(line, chr(10) ORDER BY ord) AS text,
-                      count(*) AS n_kept
-               FROM k GROUP BY doc_id)
-         SELECT d.doc_id, coalesce(g.text, '') AS text,
-                CAST(len(string_split(d.input, chr(10))) AS BIGINT) AS n_lines,
-                coalesce(g.n_kept, 0) AS n_kept
-         FROM d LEFT JOIN g USING (doc_id) ORDER BY doc_id""",
     // Corpus.htmlLinksProbe resolved URLs restated as closed forms of
     // (doc_id, length(text)); the CASE arms are the <base>-rebased odd ids
     // Corpus.htmlAnchorProbe edges: hrefs and anchor strings are closed
@@ -1694,86 +1304,6 @@ object SparkEntry {
          WHERE NOT (host = 'example3.com' OR host LIKE '%.example3.com'
                  OR host = 'sub5.example2.com' OR host LIKE '%.sub5.example2.com'
                  OR host = 'absent.org' OR host LIKE '%.absent.org')
-         ORDER BY doc_id""",
-    "decontamination" ->
-      """WITH docs2 AS (SELECT doc_id, text, source, string_split(trim(text), ' ') AS ws FROM documents),
-         sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS sh
-                FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 2)) AS i
-                      FROM docs2 WHERE len(ws) >= 3)),
-         cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-         inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-                   FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2),
-         pairs AS (SELECT id_a, id_b FROM inter
-                   JOIN cnt ca ON ca.doc_id = id_a JOIN cnt cb ON cb.doc_id = id_b
-                   WHERE CAST(i AS DOUBLE) / (ca.n + cb.n - i) >= 0.8)
-         SELECT id_a, id_b, da.source AS group_a, db.source AS group_b
-         FROM pairs JOIN docs2 da ON da.doc_id = id_a JOIN docs2 db ON db.doc_id = id_b
-         WHERE da.source <> db.source ORDER BY id_a, id_b""",
-    "decontamination_13gram" ->
-      """WITH d AS (SELECT doc_id, source, string_split(trim(text), ' ') AS ws FROM documents),
-         sh AS (SELECT DISTINCT doc_id, source, array_to_string(ws[i : i+12], ' ') AS sh
-                FROM (SELECT doc_id, source, ws, unnest(generate_series(1, len(ws) - 12)) AS i
-                      FROM d WHERE len(ws) >= 13))
-         SELECT a.doc_id AS doc_id, a.source AS grp,
-                CAST(count(DISTINCT a.sh) AS BIGINT) AS shared_ngrams
-         FROM sh a JOIN sh b ON a.sh = b.sh AND a.source <> b.source
-         GROUP BY 1, 2 ORDER BY doc_id""",
-    "tokens_histogram" ->
-      """SELECT len(string_split(trim(text), ' ')) // 50 AS bucket_50,
-                count(*) AS n_docs
-         FROM documents GROUP BY 1 ORDER BY bucket_50""",
-    // independent restatement of the integer bigram-LM surrogate; DuckDB
-    // SUM(BIGINT) widens to HUGEINT (exact), so only the outputs cast
-    "lm_score" ->
-      """WITH d AS (SELECT doc_id, string_split(trim(text), ' ') AS ws FROM documents
-                    WHERE len(string_split(trim(text), ' ')) >= 2),
-         bg AS (SELECT doc_id, ws[i] AS w1, ws[i] || ' ' || ws[i+1] AS bgk
-                FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 1)) AS i FROM d)),
-         c2 AS (SELECT bgk, count(*) AS n2 FROM bg GROUP BY bgk),
-         c1 AS (SELECT w1, count(*) AS n1 FROM bg GROUP BY w1),
-         vv AS (SELECT count(DISTINCT term) AS v FROM (
-                  SELECT unnest(string_split(trim(text), ' ')) AS term FROM documents)),
-         sc AS (SELECT bg.doc_id,
-                       (1000000 * (c2.n2 + 1)) // (c1.n1 + (SELECT v FROM vv)) AS ppm
-                FROM bg JOIN c2 USING (bgk) JOIN c1 USING (w1))
-         SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-                CAST(SUM(ppm) AS BIGINT) AS sum_ppm,
-                CAST(SUM(ppm) // count(*) AS BIGINT) AS avg_ppm
-         FROM sc GROUP BY doc_id ORDER BY doc_id""",
-    // SimHash restricted to normalized-exact-duplicate pairs (see the query
-    // comment): banding surfaces every Hamming≤3 pair, equal CASE-SENSITIVE
-    // normalized text gives Hamming 0, so the restricted output =
-    // equal-fingerprint pairs (docs ≥ 4 words on both sides).
-    "dedup_simhash" ->
-      """WITH base AS (
-           SELECT doc_id, text FROM documents
-           WHERE len(string_split(trim(text), ' ')) >= 4),
-         corpus AS (
-           SELECT doc_id, text FROM base
-           UNION ALL
-           SELECT doc_id + 2000000, text FROM base WHERE doc_id % 5 = 0),
-         fp AS (SELECT doc_id, md5(regexp_replace(trim(text), '\s+', ' ', 'g')) AS fp
-                FROM corpus)
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         FROM fp a JOIN fp b ON a.fp = b.fp AND a.doc_id < b.doc_id
-         ORDER BY id_a, id_b"""
+         ORDER BY doc_id"""
   )
-
-  /** Exact word-3-gram Jaccard ≥ 0.8 pairs, computed natively by DuckDB —
-    * the shared oracle for both the inverted-index exact join and the
-    * MinHash-LSH + exact-verify path. */
-  private val exactJaccardSql: String =
-    """WITH docs AS (SELECT doc_id, string_split(trim(text), ' ') AS ws FROM documents),
-       sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS sh
-              FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 2)) AS i
-                    FROM docs WHERE len(ws) >= 3)),
-       cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-       inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-                 FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-                 GROUP BY 1, 2)
-       SELECT id_a, id_b FROM inter
-       JOIN cnt ca ON ca.doc_id = id_a
-       JOIN cnt cb ON cb.doc_id = id_b
-       WHERE CAST(i AS DOUBLE) / (ca.n + cb.n - i) >= 0.8
-       ORDER BY id_a, id_b"""
 }

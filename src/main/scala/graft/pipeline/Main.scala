@@ -43,16 +43,35 @@ import org.apache.spark.sql.functions._
   * flag.
   */
 object Main {
-  def main(args: Array[String]): Unit = {
-    val pos = args.filterNot(_.startsWith("--"))
-    require(pos.length >= 2, "usage: Main <inputTable> <outDir> [--delimiter D] [--no-resume] [--maintenance] [--delta prevSnapshot]")
-    val (input, outDir) = (pos(0), pos(1))
-    def opt(name: String): Option[String] =
-      args.sliding(2).collectFirst { case Array(k, v) if k == s"--$name" => v }
-    val delimiter = opt("delimiter").getOrElse("")
-    val resume = !args.contains("--no-resume")
+  private val usage =
+    "usage: Main <inputTable> <outDir> [--delimiter D] [--no-resume] [--maintenance] [--delta prevSnapshot]"
+  private val switches = Set("--no-resume", "--maintenance")
+  private val valued = Set("--delimiter", "--delta")
 
-    if (args.contains("--maintenance")) {
+  /** Splits `args` into positionals and options (a switch maps to "").
+    * The arg after `--delimiter`/`--delta` is that option's value, never
+    * a positional; an unknown `--` flag or a valued option at the end
+    * fails with the usage message. */
+  private def parse(args: List[String], pos: Vector[String] = Vector.empty,
+      opts: Map[String, String] = Map.empty): (Vector[String], Map[String, String]) =
+    args match {
+      case Nil => (pos, opts)
+      case k :: v :: rest if valued(k) => parse(rest, pos, opts + (k -> v))
+      case k :: rest if switches(k) => parse(rest, pos, opts + (k -> ""))
+      case k :: _ if k.startsWith("--") =>
+        throw new IllegalArgumentException(
+          s"${if (valued(k)) s"$k needs a value" else s"unknown option $k"}; $usage")
+      case p :: rest => parse(rest, pos :+ p, opts)
+    }
+
+  def main(args: Array[String]): Unit = {
+    val (pos, opts) = parse(args.toList)
+    require(pos.length >= 2, usage)
+    val (input, outDir) = (pos(0), pos(1))
+    val delimiter = opts.getOrElse("--delimiter", "")
+    val resume = !opts.contains("--no-resume")
+
+    if (opts.contains("--maintenance")) {
       val spark = SparkSession.builder().appName("graft-maintenance").getOrCreate()
       val compacted = Checkpoint.compact(spark, outDir)
       val vacuumed = Checkpoint.vacuum(spark, outDir)
@@ -75,7 +94,7 @@ object Main {
     // the (per-output) resume filter — the two compose: delta skips content
     // the PREVIOUS SNAPSHOT already had, resume skips urls THIS OUTPUT
     // already extracted
-    val deltaCached = opt("delta").map { prevPath =>
+    val deltaCached = opts.get("--delta").map { prevPath =>
       val fpOf = (t: org.apache.spark.sql.DataFrame) =>
         t.select(col("url"), md5(col("html")).as("fp"))
       val d = Recrawl.delta(

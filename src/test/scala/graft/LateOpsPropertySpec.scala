@@ -24,40 +24,6 @@ class LateOpsPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  test("duplicateSpans matches the brute-force window/island reference") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(77)
-    val L = 5
-    for (trial <- 1 to 3) {
-      // tiny alphabet so corpus-wide duplicate windows arise naturally
-      val docs = (0 until 40).map { i =>
-        (i.toLong, (0 until (L + rnd.nextInt(30))).map(_ => s"w${rnd.nextInt(6)}").mkString(" "))
-      }
-      val got = graft.dedup.Dedup.duplicateSpans(
-          docs.toDF("doc_id", "text"), "doc_id", "text", windowTokens = L)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .sortBy(t => (t._1, t._2)).toList
-      graft.dedup.Dedup.clearCaches()
-      // brute force: count every L-gram globally, mark positions, merge runs
-      val grams = docs.flatMap { case (id, t) =>
-        val ws = t.split(" ")
-        (0 to ws.length - L).map(p => (id, p, ws.slice(p, p + L).mkString(" ")))
-      }
-      val counts = grams.groupBy(_._3).view.mapValues(_.size).toMap
-      val ref = grams.filter(g => counts(g._3) >= 2)
-        .groupBy(_._1).toSeq.flatMap { case (id, ps) =>
-          val sorted = ps.map(_._2).sorted
-          val islands = sorted.foldLeft(List.empty[List[Int]]) {
-            case (acc @ (cur :: rest), p) if p == cur.head + 1 => (p :: cur) :: rest
-            case (acc, p) => List(p) :: acc
-          }
-          islands.map(isl => (id, isl.min.toLong, isl.max.toLong + L, isl.size.toLong))
-        }.sortBy(t => (t._1, t._2)).toList
-      assert(got == ref, s"trial $trial: got=${got.take(3)} ref=${ref.take(3)}")
-      assert(ref.nonEmpty, s"trial $trial produced no duplicate spans — weak trial")
-    }
-  }
-
   test("hostOf recovers the host from assembled authority forms") {
     import spark.implicits._
     val rnd = new scala.util.Random(99)

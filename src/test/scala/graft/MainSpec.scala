@@ -122,7 +122,7 @@ class MainSpec extends AnyFunSuite {
     val next = texts.drop(6) ++ (0L until 3L).map(i => i -> s"changed document $i words") ++
       (12L until 15L).map(i => i -> s"added document $i words")
     writePages(s"$dir/next", next)
-    val delta = submit(s"$dir/next", s"$dir/delta_out", "--delta", s"$dir/pages")
+    val delta = submit("--delta", s"$dir/pages", s"$dir/next", s"$dir/delta_out")
     assert(delta.contains(""""statuses":{"added":3,"changed":3,"removed":3,"unchanged":6}"""), delta)
     assert(delta.contains("\"docs\":6,"), delta)
   }

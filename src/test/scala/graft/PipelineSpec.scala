@@ -1,14 +1,13 @@
 package graft
 
-import graft.dedup.Dedup
 import graft.pipeline.{Checkpoint, Corpus, ExtractPipeline, PageRow}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** End-to-end Spark tests of the extraction pipeline and the training-data
-  * operators, on tiny in-memory corpora (the sf tables are exercised by the
+/** End-to-end Spark tests of the extraction pipeline and its commit
+  * protocol, on tiny in-memory corpora (the sf tables are exercised by the
   * driver's Verify gate; these cover edge cases the synthetic tables lack). */
 class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -296,7 +295,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("query inventory: every query has an oracle and the count is pinned") {
     // the README/NOTES quote this number; pinning it here keeps the prose
     // from drifting (r4 verdict item 7). Update BOTH on every new query.
-    assert(SparkEntry.queries.size == 64,
+    assert(SparkEntry.queries.size == 42,
       s"queries=${SparkEntry.queries.size} — update this pin AND README.md")
     assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet,
       "every query needs a DuckDB oracle (and no orphaned oracles): " +
@@ -503,35 +502,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(s.src_line == want, s"span at ${s.src_offset}")
       assert(s.src_line > 1)
     }
-  }
-
-  private def docsDf(rows: Seq[(Long, String)]): DataFrame = {
-    import spark.implicits._
-    rows.toDF("doc_id", "text")
-  }
-
-  test("minhash LSH finds planted near-duplicates and nothing else") {
-    val base = (0L until 30L).map(i =>
-      i -> (0 to 30).map(j => s"w${i}q$j").mkString(" "))
-    val nearDups = base.take(5).map { case (id, t) => (id + 1000L) -> (t + " tail") }
-    val docs = docsDf(base ++ nearDups)
-    val pairs = Dedup.minhashDedupPairs(docs, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-    assert(pairs.toSeq == (0L until 5L).map(i => (i, i + 1000L)))
-    // and the exact inverted-index path agrees
-    val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-    assert(exact.toSeq == pairs.toSeq)
-  }
-
-  test("simhash: identical docs collide, distinct docs don't") {
-    val base = (0L until 20L).map(i =>
-      i -> (0 to 40).map(j => s"t${(i * 53 + j * 11) % 89}x$j").mkString(" "))
-    val copies = base.take(3).map { case (id, t) => (id + 500L) -> t }
-    val pairs = Dedup.simhashPairs(
-        Dedup.simhashes(docsDf(base ++ copies), "doc_id", "text"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-    assert(pairs.toSeq == (0L until 3L).map(i => (i, i + 500L)))
   }
 
   test("spread: a one-row-group skewed corpus is hash-spread by url") {
