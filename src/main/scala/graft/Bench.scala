@@ -40,10 +40,8 @@ import org.apache.spark.sql.functions._
   */
 object Bench {
 
-  /** `maxPartitionBytes` > 0 forces finer scan splits (the task-fan-out
-    * probe in [[ScalingProbe]]); -1 keeps Spark's default (128 MB). */
-  private[graft] def session(cores: Int, maxPartitionBytes: Long = -1): SparkSession = {
-    val b0 = SparkSession.builder()
+  private[graft] def session(cores: Int): SparkSession = {
+    val s = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(s"graft-bench-$cores")
       .config("spark.sql.shuffle.partitions", cores)
@@ -60,9 +58,7 @@ object Bench {
       // without also churning reader buffers through the heap)
       .config("spark.sql.columnVector.offheap.enabled", "true")
       .config("spark.ui.enabled", "false")
-    val b = if (maxPartitionBytes > 0)
-      b0.config("spark.sql.files.maxPartitionBytes", maxPartitionBytes) else b0
-    val s = b.getOrCreate()
+      .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }
@@ -122,9 +118,9 @@ object Bench {
     * pipeline — the r2 artifact recorded a physically impossible 2.16
     * efficiency from exactly that asymmetry). */
   /** Mean of three back-to-back runs — the ONE timing estimator for bench
-    * tiers, scan floors, and every ScalingProbe experiment (single ~1 s
-    * windows swing ±25% under VM jitter; sharing the estimator keeps the
-    * probe's decomposition terms comparable to the bench's numbers). */
+    * tiers and scan floors (single ~1 s windows swing ±25% under VM jitter;
+    * sharing the estimator keeps the subtracted scan floor comparable to
+    * the tier it is subtracted from). */
   private[graft] def meanOf3(f: => Unit): Double = {
     val t0 = System.nanoTime(); f; f; f
     (System.nanoTime() - t0) / 3e9
@@ -242,24 +238,6 @@ object Bench {
             }
           }.agg(sum("value")).collect(); ()
       }),
-      "anchor_profile" -> (() => {
-        import spark.implicits._
-        val edges = docsDf.select("doc_id", "text").as[(Long, String)]
-          .flatMap { case (id, t) =>
-            graft.html.Links.extractAnchors(
-              Corpus.htmlAnchorProbe(id, t), Corpus.UrlPrefix + id)
-          }.toDF("dst", "anchor")
-        graft.html.Anchors.profile(edges, "dst", "anchor").count(); ()
-      }),
-      "html_tables" -> (() => {
-        import spark.implicits._
-        docsDf.select("doc_id", "text").as[(Long, String)]
-          .mapPartitions { it =>
-            it.map { case (id, t) =>
-              graft.html.Tables.cells(Corpus.htmlTableProbe(id, t)).length.toLong
-            }
-          }.agg(sum("value")).collect(); ()
-      }),
       "crawl_delta" -> (() => {
         val url = concat(lit(Corpus.UrlPrefix), col("doc_id"))
         val prev = docsDf.select(url.as("url"), md5(col("text").cast("binary")).as("fp"))
@@ -331,9 +309,8 @@ object Bench {
     //     auditable.
     // Each tier's wall time is a mean of 3 back-to-back runs after a warm-up
     // run (single ~1 s windows swing ±25% under VM jitter); the scan floor
-    // uses the SAME estimator so the subtracted compute term is unbiased.
-    // (meanOf3 is the object-level helper, shared with ScalingProbe so the
-    // probe's decomposition uses the bench's exact timing discipline.)
+    // uses the SAME estimator (meanOf3) so the subtracted compute term is
+    // unbiased.
     final case class Round(tLo: Double, tHi: Double, scanLo: Double, scanHi: Double) {
       def eff: Double = (tLo / tHi) / (cpus.toDouble / loCores)
       def computeEff: Double = {

@@ -40,65 +40,68 @@ object Explain {
     }
     // extraction over a real parquet page table (write one to tmp to show scan pruning)
     val tmp = Files.createTempDirectory("graft_explain").toString
-    Corpus.pages(spark, sfDir).limit(50).repartition(4).write.mode("overwrite").parquet(s"$tmp/pages")
-    val pagesTable = spark.read.parquet(s"$tmp/pages")
-      .as[graft.pipeline.PageRow](org.apache.spark.sql.Encoders.product[graft.pipeline.PageRow])
-    // what a fresh submit hands its data write, as Main composes it: the
-    // table has a row group per core, so spread keeps it on the scan splits
-    val submitPages = TableIO.readPages(spark, s"$tmp/pages")
-    dump("submit_write input (Main: scan -> resume -> spread -> mapPartitions)",
-      ExtractPipeline.run(ExtractPipeline.spread(
-        Checkpoint.resume(submitPages, s"$tmp/submit_out"), submitPages), "").toDF())
-    dump("extract_pipeline (scan -> mapPartitions -> agg)",
-      ExtractPipeline.run(pagesTable, "").groupBy("kind")
-        .agg(count(lit(1)), sum("n_chars")))
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    dump("extract_metrics_only (narrow row out of the map; ReadSchema still url/html/lang)",
-      ExtractPipeline.runMetrics(pagesTable).groupBy("kind")
-        .agg(count(lit(1)), sum("n_chars")))
-    dump("url_block_domains (broadcast semi + broadcast anti; corpus never exchanged)", {
-      import spark.implicits._
-      val pages = docs.select(col("doc_id"),
-        concat(lit("https://sub"), (col("doc_id") % 11).cast("string"),
-          lit(".example"), (col("doc_id") % 7).cast("string"),
-          lit(".com/p")).as("url"))
-      graft.functions.Urls.dropBlockedDomains(pages, "url", "doc_id",
-        Seq("example3.com").toDF("domain"))
-    })
-    dump("pdf_spans (span explode is a Generate fused after the extract map — no extra exchange)", {
-      import spark.implicits._
-      val probe = docs.where(length(col("text")) > 0)
-        .select("doc_id", "text", "lang").as[(Long, String, String)]
-        .map { case (id, t, lang) => Corpus.spanProbePageRowFor(id, t, lang) }
-      ExtractPipeline.run(probe, delimiter = "").toDF()
-        .select(col("url"), posexplode(col("spans")))
-    })
-    dump("anchor_profile (both aggs partial-combined: duplicate anchors collapse map-side, argmax rides min(struct) — no collect_list, no window)", {
-      import spark.implicits._
-      val edges = docs.select("doc_id", "text").as[(Long, String)]
-        .flatMap { case (id, t) =>
-          graft.html.Links.extractAnchors(
-            Corpus.htmlAnchorProbe(id, t), Corpus.UrlPrefix + id)
-        }.toDF("dst", "anchor")
-      graft.html.Anchors.profile(edges, "dst", "anchor")
-    })
-    dump("frontier_allowed (ONE equi-join on host — robots side aggregated to hosts-size and broadcast; targets never shuffle; policy eval in one MapPartitions)", {
-      import spark.implicits._
-      val targets = docs.select(col("doc_id"),
-        concat(lit("https://h"), (col("doc_id") % 5).cast("string"),
-          lit(".example.org/p/"), col("doc_id").cast("string")).as("url"))
-      graft.sources.Frontier.allowed(targets, "url",
-        Seq(("h0.example.org", "User-agent: *\nDisallow: /private/"))
-          .toDF("host", "robots_txt"))
-    })
-    dump("crawl_delta (ONE full-outer SortMergeJoin on url; presence flags are literals, no extra pass)", {
-      val url = concat(lit(Corpus.UrlPrefix), col("doc_id"))
-      val prev = docs.select(url.as("url"), md5(col("text").cast("binary")).as("fp"))
-      val next = docs.where(col("doc_id") % 7 =!= 0)
-        .select(url.as("url"), md5(col("text").cast("binary")).as("fp"))
-      graft.pipeline.Recrawl.delta(prev, next, "url", "fp")
-    })
-    Files.writeString(Paths.get(outPath), sb.toString)
+    try {
+      Corpus.pages(spark, sfDir).limit(50).repartition(4).write.mode("overwrite").parquet(s"$tmp/pages")
+      val pagesTable = spark.read.parquet(s"$tmp/pages")
+        .as[graft.pipeline.PageRow](org.apache.spark.sql.Encoders.product[graft.pipeline.PageRow])
+      // what a fresh submit hands its data write, as Main composes it: the
+      // table has a row group per core, so spread keeps it on the scan splits
+      val submitPages = TableIO.readPages(spark, s"$tmp/pages")
+      dump("submit_write input (Main: scan -> resume -> spread -> mapPartitions)",
+        ExtractPipeline.run(ExtractPipeline.spread(
+          Checkpoint.resume(submitPages, s"$tmp/submit_out"), submitPages), "").toDF())
+      dump("extract_pipeline (scan -> mapPartitions -> agg)",
+        ExtractPipeline.run(pagesTable, "").groupBy("kind")
+          .agg(count(lit(1)), sum("n_chars")))
+      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      dump("extract_metrics_only (narrow row out of the map; ReadSchema still url/html/lang)",
+        ExtractPipeline.runMetrics(pagesTable).groupBy("kind")
+          .agg(count(lit(1)), sum("n_chars")))
+      dump("url_block_domains (broadcast semi + broadcast anti; corpus never exchanged)", {
+        import spark.implicits._
+        val pages = docs.select(col("doc_id"),
+          concat(lit("https://sub"), (col("doc_id") % 11).cast("string"),
+            lit(".example"), (col("doc_id") % 7).cast("string"),
+            lit(".com/p")).as("url"))
+        graft.functions.Urls.dropBlockedDomains(pages, "url", "doc_id",
+          Seq("example3.com").toDF("domain"))
+      })
+      dump("pdf_spans (span explode is a Generate fused after the extract map — no extra exchange)", {
+        import spark.implicits._
+        val probe = docs.where(length(col("text")) > 0)
+          .select("doc_id", "text", "lang").as[(Long, String, String)]
+          .map { case (id, t, lang) => Corpus.spanProbePageRowFor(id, t, lang) }
+        ExtractPipeline.run(probe, delimiter = "").toDF()
+          .select(col("url"), posexplode(col("spans")))
+      })
+      dump("frontier_allowed (ONE equi-join on host — robots side aggregated to hosts-size and broadcast; targets never shuffle; policy eval in one MapPartitions)", {
+        import spark.implicits._
+        val targets = docs.select(col("doc_id"),
+          concat(lit("https://h"), (col("doc_id") % 5).cast("string"),
+            lit(".example.org/p/"), col("doc_id").cast("string")).as("url"))
+        graft.sources.Frontier.allowed(targets, "url",
+          Seq(("h0.example.org", "User-agent: *\nDisallow: /private/"))
+            .toDF("host", "robots_txt"))
+      })
+      dump("crawl_delta (ONE full-outer SortMergeJoin on url; presence flags are literals, no extra pass)", {
+        val url = concat(lit(Corpus.UrlPrefix), col("doc_id"))
+        val prev = docs.select(url.as("url"), md5(col("text").cast("binary")).as("fp"))
+        val next = docs.where(col("doc_id") % 7 =!= 0)
+          .select(url.as("url"), md5(col("text").cast("binary")).as("fp"))
+        graft.pipeline.Recrawl.delta(prev, next, "url", "fp")
+      })
+    } finally {
+      val tmpPath = new org.apache.hadoop.fs.Path(tmp)
+      tmpPath.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(tmpPath, true)
+    }
+    // scan locations name the random temp dir and this machine's data dir,
+    // and lambda names carry per-JVM ids; fixed placeholders keep an
+    // unchanged plan byte-identical across runs
+    val plans = sb.toString
+      .replace(tmp, "<tmp>")
+      .replace(new java.io.File(sfDir).getAbsolutePath, "<sfDir>")
+      .replaceAll("""Lambda\$\d+/0x\p{XDigit}+@\p{XDigit}+""", "Lambda<id>")
+    Files.writeString(Paths.get(outPath), plans)
     println(s"wrote $outPath")
     spark.stop()
   }

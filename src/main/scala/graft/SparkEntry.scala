@@ -423,203 +423,6 @@ object SparkEntry {
         }.toDF("doc_id", "arm", "allowed", "crawl_delay", "sitemap")
         .orderBy("doc_id", "arm")
     }),
-    "html_anchor_text" -> ((s, dir) => {
-      // anchor-text extraction: the same edge walk as html_links, each
-      // edge keyed to its element's inner text — pins every innerText
-      // convention on closed forms (mid-word entity, transparent inline
-      // tag, <br> separator, comment skip, whitespace collapse, image-only
-      // empty anchor, HTML5 nested-<a> auto-close, javascript:-text and
-      // href-less-target suppression); probe at Corpus.htmlAnchorProbe
-      import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "text").as[(Long, String)]
-        .flatMap { case (id, t) =>
-          graft.html.Links.extractAnchors(Corpus.htmlAnchorProbe(id, t), Corpus.UrlPrefix + id)
-            .zipWithIndex.map { case ((href, anchor), ord) => (id, ord.toLong, href, anchor) }
-        }.toDF("doc_id", "ord", "href", "anchor")
-        .orderBy("doc_id", "ord")
-    }),
-    "anchor_profile" -> ((s, dir) => {
-      // per-target anchor profile (Anchors.profile): in-link count,
-      // distinct-anchor count and most-frequent anchor per target over the
-      // whole corpus's htmlAnchorProbe edges — the shared hub targets give
-      // the argmax real cross-document frequency structure (the empty
-      // image-anchor ties ords 0 and 2 onto one hub target; the three
-      // "bold-K tail" variants contend on the example.org targets)
-      import s.implicits._
-      val edges = s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "text").as[(Long, String)]
-        .flatMap { case (id, t) =>
-          graft.html.Links.extractAnchors(Corpus.htmlAnchorProbe(id, t), Corpus.UrlPrefix + id)
-        }.toDF("dst", "anchor")
-      graft.html.Anchors.profile(edges, "dst", "anchor")
-        .orderBy("dst")
-    }),
-    "html_jsonld" -> ((s, dir) => {
-      // schema.org JSON-LD extraction (StructuredData.jsonLd): raw blocks
-      // found by the hardened scanner, PARSED by Spark's own
-      // get_json_object (the Spark-first division of labor — no hand-rolled
-      // JSON parser); type-attr quoting/case/parameter arms rotate by
-      // doc_id, decoys (javascript-typed, type-less, commented-out) vanish
-      import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "text").as[(Long, String)]
-        .flatMap { case (id, t) =>
-          graft.html.StructuredData.jsonLd(Corpus.htmlJsonLdProbe(id, t))
-            .zipWithIndex.map { case (j, i) => (id, i.toLong, j) }
-        }.toDF("doc_id", "idx", "json")
-        .select(col("doc_id"), col("idx"), col("json"),
-          get_json_object(col("json"), "$.headline").as("headline"),
-          get_json_object(col("json"), "$.datePublished").as("published"))
-        .orderBy("doc_id", "idx")
-    }),
-    "html_outline" -> ((s, dir) => {
-      // heading outline (Outline.headings — the HTML twin of pdf_outline):
-      // three body headings whose levels/titles are closed forms of doc_id
-      // (named entity, transparent inline tag, numeric character
-      // reference), with chrome / commented-out / forged-in-script heading
-      // decoys that must vanish; probe at Corpus.htmlOutlineProbe
-      import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "text").as[(Long, String)]
-        .flatMap { case (id, t) =>
-          graft.html.Outline.headings(Corpus.htmlOutlineProbe(id, t))
-            .zipWithIndex.map { case ((lvl, title), i) => (id, i.toLong, lvl.toLong, title) }
-        }.toDF("doc_id", "idx", "level", "title")
-        .orderBy("doc_id", "idx")
-    }),
-    "html_tables" -> ((s, dir) => {
-      // structured table-cell extraction (Tables.cells): header/data cells,
-      // an EMPTY structural cell, implied </td>/</tr> closes, a NESTED
-      // table whose containing cell pauses around it, a <tr>-less implied
-      // row, and forged-in-script / commented-out decoys; probe at
-      // Corpus.htmlTableProbe, every cell a closed form of doc_id
-      import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "text").as[(Long, String)]
-        .flatMap { case (id, t) =>
-          graft.html.Tables.cells(Corpus.htmlTableProbe(id, t))
-            .map(c => (id, c.tableIdx.toLong, c.rowIdx.toLong, c.colIdx.toLong,
-              c.header, c.text))
-        }.toDF("doc_id", "table_idx", "row_idx", "col_idx", "is_header", "cell")
-        .orderBy("doc_id", "table_idx", "row_idx", "col_idx")
-    }),
-    "html_links" -> ((s, dir) => {
-      // out-link extraction (ADDITIVE surface — the edges of the web graph
-      // that feed URL frontiers and link-based quality priors): five kept
-      // anchors rotate every href form (absolute / path-relative /
-      // root-relative / protocol-relative / dot-dot+fragment), four
-      // non-links must vanish (javascript:, mailto:, commented-out,
-      // script-forged), and odd doc_ids add a first-wins <base> that
-      // rebases the relative arms; every resolved URL a closed form
-      import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "text").as[(Long, String)]
-        .flatMap { case (id, t) =>
-          graft.html.Links.extract(Corpus.htmlLinksProbe(id, t), Corpus.UrlPrefix + id)
-            .zipWithIndex.map { case (href, ord) => (id, ord.toLong, href) }
-        }.toDF("doc_id", "ord", "href")
-        .orderBy("doc_id", "ord")
-    }),
-    "html_meta" -> ((s, dir) => {
-      // head-metadata extraction (ADDITIVE surface): canonical link (the
-      // strongest dedup key a page can carry), meta/og descriptions, and
-      // robots noindex/nofollow — quoted/unquoted/swapped-order attribute
-      // forms and a forged meta inside a <script> string are all
-      // gate-visible; every value is a closed form of (doc_id, len)
-      import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "text").as[(Long, String)]
-        .filter(_._1 % 2 == 1)
-        .map { case (id, t) =>
-          val m = graft.html.Meta.extract(Corpus.htmlMetaProbe(id, t))
-          (id, m.canonical, m.description, m.ogTitle, m.ogDescription, m.noindex, m.nofollow)
-        }
-        .toDF("doc_id", "canonical", "description", "og_title", "og_description", "noindex", "nofollow")
-        .orderBy("doc_id")
-    }),
-    "pdf_annotations" -> ((s, dir) => {
-      // per-page annotation extraction (ADDITIVE surface — annotation text
-      // IS document text, Link URIs feed the URL graph): FreeText
-      // /Contents and Link /A /URI per page, all closed forms of
-      // (doc_id, page, length(text))
-      import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "text").as[(Long, String)]
-        .filter(_._1 % 2 == 0)
-        .mapPartitions { it =>
-          val buffers = new graft.pdf.WorkBuffers()
-          it.flatMap { case (id, t) =>
-            val r = graft.pdf.PdfExtract.extract(Corpus.pdfAnnotsForDoc(id, t),
-              contentDelimiter = "", buffers = buffers, captureFragments = false)
-            r.annotations.map { case (page, sub, txt) => (id, page.toLong, sub, txt) }
-          }
-        }.toDF("doc_id", "page", "subtype", "content")
-        .orderBy("doc_id", "page", "subtype")
-    }),
-    "pdf_attachments" -> ((s, dir) => {
-      // embedded-file extraction (/Names → /EmbeddedFiles name tree,
-      // ADDITIVE surface — attachments are documents too in a corpus
-      // pipeline): three per doc, payloads decoded through the normal
-      // filter chain; the oracle recomputes each payload's md5 from the
-      // closed-form transform of the document text
-      import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "text").as[(Long, String)]
-        .filter(_._1 % 2 == 0)
-        .mapPartitions { it =>
-          val buffers = new graft.pdf.WorkBuffers()
-          val md = java.security.MessageDigest.getInstance("MD5")
-          it.flatMap { case (id, t) =>
-            val r = graft.pdf.PdfExtract.extract(Corpus.pdfAttachmentsForDoc(id, t),
-              contentDelimiter = "", buffers = buffers, captureFragments = false,
-              captureAttachments = true)
-            r.attachments.zipWithIndex.map { case ((name, bytes), i) =>
-              md.reset()
-              val hex = md.digest(bytes).map(b => f"$b%02x").mkString
-              (id, i.toLong, name, bytes.length.toLong, hex)
-            }
-          }
-        }.toDF("doc_id", "att_idx", "name", "n_bytes", "content_md5")
-        .orderBy("doc_id", "att_idx")
-    }),
-    "pdf_form_fields" -> ((s, dir) => {
-      // AcroForm field-value extraction (ADDITIVE surface — form values ARE
-      // document text): dotted-name DFS over /Fields + /Kids; oracle is
-      // Corpus.formFieldsExpectedText in closed form
-      import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "text").as[(Long, String)]
-        .filter(_._1 % 2 == 0)
-        .mapPartitions { it =>
-          val buffers = new graft.pdf.WorkBuffers()
-          it.map { case (id, t) =>
-            val r = graft.pdf.PdfExtract.extract(Corpus.pdfFormFieldsForDoc(id, t),
-              contentDelimiter = "", buffers = buffers, captureFragments = false)
-            (id, r.formFields.getOrElse(""), r.decodeFailures.toLong)
-          }
-        }.toDF("doc_id", "form_fields", "failures")
-        .orderBy("doc_id")
-    }),
-    "pdf_outline" -> ((s, dir) => {
-      // /Outlines bookmark-tree extraction (ADDITIVE surface — the reference
-      // never reads /Outlines): DFS "depth:title" walk over a tree whose
-      // sibling chain scales with the page count plus a fixed depth-3
-      // First-chain; oracle is Corpus.outlineExpectedText in closed form
-      import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "text").as[(Long, String)]
-        .filter(_._1 % 2 == 0)
-        .mapPartitions { it =>
-          val buffers = new graft.pdf.WorkBuffers()
-          it.map { case (id, t) =>
-            val r = graft.pdf.PdfExtract.extract(Corpus.pdfOutlineForDoc(id, t),
-              contentDelimiter = "", buffers = buffers, captureFragments = false)
-            (id, r.outline.getOrElse(""), r.decodeFailures.toLong)
-          }
-        }.toDF("doc_id", "outline", "failures")
-        .orderBy("doc_id")
-    }),
     "pdf_extract_type0" -> ((s, dir) => {
       // Type0/Identity-H composite fonts (EXTENSION, opt-in extended mode):
       // 2-byte CIDs decoded through the FULL ToUnicode CMap — multi-char
@@ -1081,176 +884,6 @@ object SparkEntry {
                      ELSE NULL END AS crawl_delay,
                 'https://example.org/' || doc_id || '/sitemap.xml' AS sitemap
          FROM documents CROSS JOIN arms ORDER BY doc_id, arm""",
-    // Corpus.htmlLinksProbe resolved URLs restated as closed forms of
-    // (doc_id, length(text)); the CASE arms are the <base>-rebased odd ids
-    // Corpus.htmlAnchorProbe edges: hrefs and anchor strings are closed
-    // forms of doc_id (the javascript: and href-less arms never surface)
-    "html_anchor_text" ->
-      """WITH d AS (SELECT doc_id FROM documents),
-         u AS (
-           SELECT doc_id, 0 AS ord,
-                  'https://hub.example/t' || (doc_id % 4) AS href,
-                  'plain ' || (doc_id % 3) AS anchor FROM d
-           UNION ALL
-           SELECT doc_id, 1, 'https://example.org/t' || ((doc_id + 1) % 4),
-                  'bold-' || (doc_id % 3) || ' tail' FROM d
-           UNION ALL
-           SELECT doc_id, 2, 'https://hub.example/t' || (doc_id % 4), '' FROM d
-           UNION ALL
-           SELECT doc_id, 3, 'https://hub.example/n1', 'one' FROM d
-           UNION ALL
-           SELECT doc_id, 4, 'https://hub.example/n2', 'two' FROM d)
-         SELECT doc_id, CAST(ord AS BIGINT) AS ord, href, anchor
-         FROM u ORDER BY doc_id, ord""",
-    // same regenerated edges, aggregated the way Anchors.profile does —
-    // the window restatement is oracle-side only (DuckDB is single-node);
-    // the Spark side is two combinable hash aggs, never a window
-    "anchor_profile" ->
-      """WITH d AS (SELECT doc_id FROM documents),
-         e AS (
-           SELECT 'https://hub.example/t' || (doc_id % 4) AS dst,
-                  'plain ' || (doc_id % 3) AS anchor FROM d
-           UNION ALL
-           SELECT 'https://example.org/t' || ((doc_id + 1) % 4),
-                  'bold-' || (doc_id % 3) || ' tail' FROM d
-           UNION ALL
-           SELECT 'https://hub.example/t' || (doc_id % 4), '' FROM d
-           UNION ALL
-           SELECT 'https://hub.example/n1', 'one' FROM d
-           UNION ALL
-           SELECT 'https://hub.example/n2', 'two' FROM d),
-         c AS (SELECT dst, anchor, count(*) AS cnt FROM e GROUP BY 1, 2),
-         r AS (SELECT dst, anchor, cnt,
-                 row_number() OVER (PARTITION BY dst ORDER BY cnt DESC, anchor ASC) AS rn,
-                 sum(cnt) OVER (PARTITION BY dst) AS n_refs,
-                 count(*) OVER (PARTITION BY dst) AS n_anchors
-               FROM c)
-         SELECT dst, CAST(n_refs AS BIGINT) AS n_refs,
-                CAST(n_anchors AS BIGINT) AS n_anchors, anchor AS top_anchor
-         FROM r WHERE rn = 1 ORDER BY dst""",
-    // Corpus.htmlJsonLdProbe: block 0 = the Article object, block 1 (odd
-    // ids) = the array form ($.headline on an array -> NULL in both engines)
-    "html_jsonld" ->
-      """WITH b AS (
-           SELECT doc_id, 0 AS idx,
-             '{"@type":"Article","headline":"t-' || (doc_id % 9)
-               || '","datePublished":"2024-01-0' || (doc_id % 9 + 1) || '"}' AS json,
-             't-' || (doc_id % 9) AS headline,
-             '2024-01-0' || (doc_id % 9 + 1) AS published
-           FROM documents
-           UNION ALL
-           SELECT doc_id, 1,
-             '[{"@type":"BreadcrumbList","position":' || (doc_id % 5) || '}]',
-             NULL, NULL
-           FROM documents WHERE doc_id % 2 = 1)
-         SELECT doc_id, CAST(idx AS BIGINT) AS idx, json, headline, published
-         FROM b ORDER BY doc_id, idx""",
-    // Corpus.htmlOutlineProbe: three body headings per doc; the chrome /
-    // commented / in-script decoys must NOT appear
-    "html_outline" ->
-      """SELECT doc_id, CAST(i AS BIGINT) AS idx,
-           CAST(CASE i WHEN 0 THEN 1 WHEN 1 THEN 2 ELSE 3 END AS BIGINT) AS level,
-           CASE i WHEN 0 THEN 'Ch & ap-' || (doc_id % 9)
-                  WHEN 1 THEN 'Section ' || (doc_id % 5)
-                  ELSE 'Sub a-' || (doc_id % 7) END AS title
-         FROM documents, generate_series(0, 2) t(i)
-         ORDER BY doc_id, idx""",
-    // Corpus.htmlTableProbe: 8 cells in table 0 (incl. the empty structural
-    // cell and the nested-table-punctured "pre post" cell), the nested
-    // table's single cell as table 1, the <tr>-less loose table as table 2
-    "html_tables" ->
-      """WITH c(tbl, rw, cl, hdr, i) AS (VALUES
-           (0,0,0,true,0),(0,0,1,true,1),(0,1,0,false,2),(0,1,1,false,3),
-           (0,2,0,false,4),(0,2,1,false,5),(0,3,0,false,6),(0,3,1,false,7),
-           (1,0,0,false,8),(2,0,0,false,9))
-         SELECT doc_id, CAST(tbl AS BIGINT) AS table_idx,
-           CAST(rw AS BIGINT) AS row_idx, CAST(cl AS BIGINT) AS col_idx,
-           hdr AS is_header,
-           CASE i WHEN 0 THEN 'name'
-                  WHEN 1 THEN 'v & ' || (doc_id % 7)
-                  WHEN 2 THEN 'a-' || (doc_id % 5)
-                  WHEN 3 THEN ''
-                  WHEN 4 THEN 'pre post'
-                  WHEN 5 THEN 'b bold-' || (doc_id % 4)
-                  WHEN 6 THEN 'u-' || (doc_id % 2)
-                  WHEN 7 THEN 'v-' || (doc_id % 2)
-                  WHEN 8 THEN 'in-' || (doc_id % 3)
-                  ELSE 'loose-' || (doc_id % 9) END AS cell
-         FROM documents, c
-         ORDER BY doc_id, table_idx, row_idx, col_idx""",
-    "html_links" ->
-      """WITH d AS (SELECT doc_id, length(text) AS len FROM documents),
-         u AS (
-           SELECT doc_id, 0 AS ord, 'https://abs.example/a-' || len AS href FROM d
-           UNION ALL
-           SELECT doc_id, 1, CASE WHEN doc_id % 2 = 1
-             THEN 'https://base' || doc_id || '.example/b' || (doc_id % 3) || '/dir/rel-' || (doc_id % 5) || '/p'
-             ELSE 'https://example.org/doc/rel-' || (doc_id % 5) || '/p' END FROM d
-           UNION ALL
-           SELECT doc_id, 2, CASE WHEN doc_id % 2 = 1
-             THEN 'https://base' || doc_id || '.example/root-' || (doc_id % 7)
-             ELSE 'https://example.org/root-' || (doc_id % 7) END FROM d
-           UNION ALL
-           SELECT doc_id, 3, 'https://cdn.example/c-' || len FROM d
-           UNION ALL
-           SELECT doc_id, 4, CASE WHEN doc_id % 2 = 1
-             THEN 'https://base' || doc_id || '.example/b' || (doc_id % 3) || '/up-1'
-             ELSE 'https://example.org/up-0' END FROM d)
-         SELECT doc_id, CAST(ord AS BIGINT) AS ord, href
-         FROM u ORDER BY doc_id, ord""",
-    // Corpus.htmlMetaProbe values are closed forms of (doc_id, length(text))
-    "html_meta" ->
-      """SELECT doc_id,
-           'https://example'||(doc_id % 7)||'.com/p'||(doc_id % 5) AS canonical,
-           'desc-'||length(text)||' & more' AS description,
-           'og-'||length(text) AS og_title,
-           'ogd-'||length(text) AS og_description,
-           doc_id % 3 = 0 AS noindex,
-           doc_id % 3 = 0 AS nofollow
-         FROM documents WHERE doc_id % 2 = 1 ORDER BY doc_id""",
-    // one FreeText + one Link per page, closed forms of (doc_id, page, len)
-    "pdf_annotations" ->
-      """WITH d AS (SELECT doc_id, length(text) AS len,
-                           ((length(text)+63)//64 + 7)//8 AS p
-                    FROM documents WHERE doc_id % 2 = 0),
-         e AS (SELECT doc_id, len, unnest(generate_series(1, p)) AS i FROM d)
-         SELECT doc_id, CAST(i AS BIGINT) AS page, 'FreeText' AS subtype,
-                'note-'||i||'-'||len AS content
-         FROM e
-         UNION ALL
-         SELECT doc_id, CAST(i AS BIGINT), 'Link',
-                'https://ann'||(doc_id % 5)||'.example/p'||i
-         FROM e
-         ORDER BY doc_id, page, subtype""",
-    // three attachments per doc, payloads are closed-form transforms of text
-    "pdf_attachments" ->
-      """SELECT doc_id, CAST(i AS BIGINT) AS att_idx,
-           CASE i WHEN 0 THEN 'att-0.txt' WHEN 1 THEN 'att-1.bin' ELSE 'att-2.txt' END AS name,
-           CAST(length(text) AS BIGINT) AS n_bytes,
-           CASE i WHEN 0 THEN md5(text) WHEN 1 THEN md5(reverse(text))
-                  ELSE md5(upper(text)) END AS content_md5
-         FROM documents, generate_series(0, 2) t(i)
-         WHERE doc_id % 2 = 0 ORDER BY doc_id, att_idx""",
-    // Corpus.formFieldsExpectedText in closed form
-    "pdf_form_fields" ->
-      """SELECT doc_id,
-           'title=t-'||length(text)||'|meta.lang=v1-'||length(text)
-             ||'|meta.count=v2-'||length(text) AS form_fields,
-           CAST(0 AS BIGINT) AS failures
-         FROM documents WHERE doc_id % 2 = 0 ORDER BY doc_id""",
-    // Corpus.outlineExpectedText: depth-3 subtree under chapter 0, then one
-    // top-level chapter per page (p from the variant-0 page-count formula)
-    "pdf_outline" ->
-      """WITH d AS (SELECT doc_id, length(text) AS len,
-                           greatest(((length(text)+63)//64 + 7)//8, 1) AS p
-                    FROM documents WHERE doc_id % 2 = 0)
-         SELECT doc_id,
-           '0:ch-0-'||len||'|1:sec-0-'||len||'|2:sub-0-'||len ||
-             coalesce('|' || array_to_string(
-               ['0:ch-'||i||'-'||len for i in generate_series(1, p-1)], '|'), '')
-             AS outline,
-           CAST(0 AS BIGINT) AS failures
-         FROM d ORDER BY doc_id""",
     // Corpus.type0ExpectedText: 'e' → "ff" (multi-char bfchar), 't' → U+1F600
     // (surrogate-pair bfchar); everything else round-trips through the
     // bfrange / Identity passthrough

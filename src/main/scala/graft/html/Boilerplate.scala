@@ -8,7 +8,7 @@ final case class Block(
     text: String,
     words: Int,
     linkedWords: Int,
-    headingLevel: Int, // 0 = not a heading
+    title: Boolean,    // the <title> block
     inChrome: Boolean, // inside nav/aside/footer
     srcOffset: Int,    // char offset of the block's first text in the page
     listItem: Boolean = false) { // <li> content: rendered with a "- " marker
@@ -109,8 +109,8 @@ object Boilerplate {
 
   def extract(html: String): HtmlResult = {
     val blocks = scan(html)
-    val title = blocks.find(_.headingLevel == -1).map(_.text).getOrElse("")
-    val bodyBlocks = blocks.filter(_.headingLevel != -1).toIndexedSeq
+    val title = blocks.find(_.title).map(_.text).getOrElse("")
+    val bodyBlocks = blocks.filterNot(_.title).toIndexedSeq
 
     val content = classify(bodyBlocks)
     val out = new StringBuilder
@@ -146,16 +146,13 @@ object Boilerplate {
   }
 
   /** Single forward pass: tags, comments, CDATA, entities → blocks.
-    * The <title> block is emitted with headingLevel = -1. Package-visible
-    * so [[Outline]] can read heading structure off the SAME scan the
-    * extractor uses (one scanner, no drift). */
-  private[html] def scan(html: String): Seq[Block] = {
+    * The <title> block is emitted with `title = true`. */
+  private def scan(html: String): Seq[Block] = {
     val blocks = mutable.ArrayBuffer.empty[Block]
     val text = new StringBuilder
     var words = 0
     var linkedWords = 0
     var blockStart = -1
-    var headingLevel = 0
     var chromeDepth = 0
     var anchorDepth = 0
     var inTitle = false
@@ -182,7 +179,7 @@ object Boilerplate {
           text.toString,
           words,
           linkedWords,
-          if (inTitle) -1 else headingLevel,
+          inTitle,
           chromeDepth > 0,
           blockStart,
           listItem)
@@ -277,10 +274,6 @@ object Boilerplate {
                 if (closing) chromeDepth = math.max(0, chromeDepth - 1)
                 else if (!selfClosed) chromeDepth += 1
               }
-              headingLevel =
-                if (!closing && name.length == 2 && name.charAt(0) == 'h' && name.charAt(1).isDigit)
-                  name.charAt(1) - '0'
-                else 0
             }
             i = tagEnd
           }
@@ -315,7 +308,7 @@ object Boilerplate {
     * `MaxEntityBody + 1` chars only, so a page of unterminated '&'s stays
     * linear; numeric bodies parse in place with the sign and overflow rules
     * of `Integer.parseInt`, and only a body not starting with '#' is looked
-    * up by name. Shared with the head-metadata and anchor scanners. */
+    * up by name. */
   private[graft] def entity(html: String, i: Int): Long = {
     val from = i + 1
     val limit = math.min(html.length, from + MaxEntityBody + 1)

@@ -149,36 +149,9 @@ final class PdfContent(tk: PdfTokeniser, contentsDict: DictTok, fonts: collectio
 final class PdfPage(tk: PdfTokeniser, pageToken: DictTok) {
   val fonts: mutable.LinkedHashMap[String, PdfFont] = mutable.LinkedHashMap.empty
   val contents: mutable.ArrayBuffer[PdfContent] = mutable.ArrayBuffer.empty
-  /** ADDITIVE SURFACE (the reference never reads /Annots — annotation text
-    * IS document text, and Link URIs feed the URL graph): (subtype, text)
-    * per annotation in array order — /Contents strings for markup
-    * annotations, the /A /URI action target for Links. Exception-isolated:
-    * a malformed annotation costs only this surface, never the page. */
-  val annotations: mutable.ArrayBuffer[(String, String)] = mutable.ArrayBuffer.empty
   var exception: String = null
 
   pageToken.pdfObject = this
-
-  try {
-    pageToken.get("Annots").foreach {
-      case arr: ArrTok => arr.iterator.foreach {
-        case a: DictTok =>
-          val subtype = a.getName("Subtype").getOrElse("")
-          def strOf(d: DictTok, key: String): Option[String] =
-            d.get(key).collect { case s: StrTok => s.text }
-          // Links carry their TARGET in /A /URI; /Contents on a Link is
-          // only alternate-description text, so the URI must win there —
-          // everything else emits its /Contents text
-          val text =
-            if (subtype == "Link")
-              a.getDictionary("A").flatMap(strOf(_, "URI")).orElse(strOf(a, "Contents"))
-            else strOf(a, "Contents")
-          text.foreach(t => annotations += ((subtype, t)))
-        case _ =>
-      }
-      case _ =>
-    }
-  } catch { case _: Exception => annotations.clear() }
 
   try {
     pageToken.getDictionary("Resources").foreach { resources =>

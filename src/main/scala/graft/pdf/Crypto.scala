@@ -13,7 +13,7 @@ object PdfCrypto {
   // Key derivation alone runs 51 MD5 rounds and user-password
   // authentication 19 RC4 rounds PER DOCUMENT — fresh allocations here
   // measured ~2.5x the baseline extraction allocation rate on encrypted
-  // docs (AllocProfile).
+  // docs.
   private val rc4Box: ThreadLocal[Array[Int]] =
     ThreadLocal.withInitial(() => new Array[Int](256))
   private val md5Digest: ThreadLocal[MessageDigest] =

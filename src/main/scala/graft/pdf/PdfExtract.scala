@@ -28,23 +28,7 @@ final case class ExtractResult(
     pdfVersion: Option[String],
     documentInfo: Option[String],
     documentId: Option[String],
-    metadata: Option[String],
-    /** Bookmark tree as "depth:title" items joined by "|" (DFS order);
-      * None when the document has no /Outlines. Additive surface — the
-      * reference never reads /Outlines. */
-    outline: Option[String] = None,
-    /** Embedded-file attachments (/Names → /EmbeddedFiles name tree) in
-      * tree order, payloads decoded through the normal filter chain.
-      * Additive surface — the reference never reads /Names. */
-    attachments: Seq[(String, Array[Byte])] = Nil,
-    /** AcroForm "dotted.name=value" pairs joined by "|" (DFS over /Fields
-      * and /Kids); None when the document has no /AcroForm. Additive
-      * surface — the reference never reads /AcroForm. */
-    formFields: Option[String] = None,
-    /** Per-page annotations: (1-based page, subtype, text) — /Contents of
-      * markup annotations and /A /URI of Links, in page/array order.
-      * Additive surface — the reference never reads /Annots. */
-    annotations: Seq[(Int, String, String)] = Nil)
+    metadata: Option[String])
 
 /** E1 façade: the reference's `new PdfParser(bytes, …)` entry point as a pure
   * function (reference: PdfParser/PdfParser.cs:92-106). Per-document parse
@@ -82,12 +66,9 @@ object PdfExtract {
       captureLines: Boolean = false,
       /** `false` = metrics-only: skip the final full-document text copy
         * (`nChars` still reports the assembled length). */
-      captureText: Boolean = true,
-      /** Opt-in embedded-file decoding (an attachment can be megabytes, so
-        * the /Names walk + payload copies only run when asked). */
-      captureAttachments: Boolean = false): ExtractResult = {
+      captureText: Boolean = true): ExtractResult = {
     val tk = new PdfTokeniser(bytes, password, contentDelimiter, buffers, captureFragments,
-      extendedFilters, captureAttachments)
+      extendedFilters)
     try {
       tk.verifyFileHeader()
       tk.findPages()
@@ -141,13 +122,7 @@ object PdfExtract {
         pdfVersion = Some(tk.versionString),
         documentInfo = Option(tk.documentInfo),
         documentId = Option(tk.documentId),
-        metadata = Option(tk.metadata),
-        outline = Option(tk.outline),
-        attachments = tk.attachments.toSeq,
-        formFields = Option(tk.formFields),
-        annotations = tk.pageList.iterator.zipWithIndex.flatMap { case (p, i) =>
-          p.annotations.iterator.map { case (sub, txt) => (i + 1, sub, txt) }
-        }.toSeq)
+        metadata = Option(tk.metadata))
     } catch {
       case e: Throwable =>
         val msg = e match {

@@ -121,10 +121,7 @@ final class PdfTokeniser(
     /** Opt-in LZW/ASCIIHex/ASCII85 filters (the reference supports only
       * None/FlateDecode and throws otherwise — kept as the default so
       * byte-identity vs the reference is preserved unless asked). */
-    val extendedFilters: Boolean = false,
-    /** Opt-in embedded-file decoding: an attachment can be megabytes, so
-      * the /Names walk + payload copy only runs when a consumer asks. */
-    val captureAttachments: Boolean = false) {
+    val extendedFilters: Boolean = false) {
 
   private val CR: Byte = '\r'
   private val LF: Byte = '\n'
@@ -162,12 +159,6 @@ final class PdfTokeniser(
   var documentId: String = null
   var documentInfo: String = null
   var metadata: String = null
-  /** Bookmark tree, "depth:title"-joined (see readOutline); null = no /Outlines. */
-  var outline: String = null
-  /** Embedded-file attachments in name-tree order (see readAttachments). */
-  val attachments: mutable.ArrayBuffer[(String, Array[Byte])] = mutable.ArrayBuffer.empty
-  /** AcroForm "dotted.name=value" pairs, "|"-joined (see readFormFields); null = no /AcroForm. */
-  var formFields: String = null
   var isDecryptionError: Boolean = false
   var isStringNeedsDecryption: Boolean = false
   /** EXTENSION (extended mode only): the indirect object currently being
@@ -584,154 +575,6 @@ final class PdfTokeniser(
       val root = rootToken.asInstanceOf[DictTok]
       root.get("Pages").foreach(readPages(_, mutable.HashSet.empty))
       root.get("Metadata").foreach(readMetadata)
-      // the additive structure surfaces must never cost page text: a
-      // malformed /Outlines / /Names / /AcroForm degrades that surface to
-      // null/empty, not the document to an error row (the reference reads
-      // none of these keys, so its extraction succeeds on such docs)
-      try root.get("Outlines").foreach(readOutline)
-      catch { case _: Exception => outline = null }
-      if (captureAttachments) {
-        try root.get("Names").foreach {
-          case names: DictTok => names.get("EmbeddedFiles").foreach(readAttachments)
-          case _              =>
-        } catch { case _: Exception => }
-      }
-      try root.get("AcroForm").foreach(readFormFields)
-      catch { case _: Exception => formFields = null }
-    }
-  }
-
-  /** Recursion bound for the additive structure walks (outline First
-    * chains, name-tree Kids, form-field Kids): an adversarial 100k-deep
-    * chain must exhaust this counter, not the JVM stack. */
-  private val MaxStructureDepth = 64
-
-  /** ADDITIVE SURFACE (the reference never reads /Names — attachments are
-    * documents too in a corpus pipeline): walk the /EmbeddedFiles name tree
-    * (ISO 32000-1 §7.7.4: intermediate /Kids nodes, leaf /Names arrays of
-    * alternating name/filespec), decode each filespec's /EF /F stream with
-    * the normal filter chain, and collect (name, payload) in tree order.
-    * Cycle-guarded; individual bad filespecs are skipped, never thrown. */
-  private def readAttachments(treeToken: PdfTok): Unit = {
-    val visited = mutable.HashSet.empty[ObjectId]
-    def walk(node: DictTok, depth: Int): Unit = {
-      if (depth > MaxStructureDepth) return
-      if (!node.objectId.forall(visited.add)) return
-      node.get("Kids").foreach {
-        case kids: ArrTok => kids.iterator.foreach {
-          case kid: DictTok => walk(kid, depth + 1)
-          case _            =>
-        }
-        case _ =>
-      }
-      node.get("Names").foreach {
-        case pairs: ArrTok =>
-          val it = pairs.iterator
-          while (it.hasNext) {
-            val nameTok = it.next()
-            if (it.hasNext) (nameTok, it.next()) match {
-              case (n: StrTok, spec: DictTok) =>
-                try {
-                  spec.getDictionary("EF").foreach { ef =>
-                    ef.getDictionary("F").orElse(ef.getDictionary("UF")).foreach { fileStream =>
-                      fileStream.loadStream()
-                      attachments += ((n.text, streamBytesCopy()))
-                    }
-                  }
-                } catch { case _: Exception => } // bad filespec: skip, keep walking
-              case _ =>
-            }
-          }
-        case _ =>
-      }
-    }
-    treeToken match {
-      case d: DictTok => walk(d, 0)
-      case _          =>
-    }
-  }
-
-  /** ADDITIVE SURFACE (the reference never reads /AcroForm — form-field
-    * values ARE document text): DFS over /AcroForm /Fields, recursing /Kids,
-    * collecting "dotted.name=value" for every terminal field whose /V is a
-    * string; partial field names (/T) join with '.' per ISO 32000-1 §12.7.3.
-    * Cycle-guarded; results joined by "|" in tree order. */
-  private def readFormFields(formToken: PdfTok): Unit = {
-    val out = new java.lang.StringBuilder
-    val visited = mutable.HashSet.empty[ObjectId]
-    def walk(field: DictTok, prefix: String, depth: Int): Unit = {
-      if (depth > MaxStructureDepth) return
-      if (!field.objectId.forall(visited.add)) return
-      val name = field.get("T") match {
-        case Some(t: StrTok) => if (prefix.isEmpty) t.text else prefix + "." + t.text
-        case _               => prefix
-      }
-      field.get("V") match {
-        case Some(v: StrTok) =>
-          if (out.length > 0) out.append('|')
-          out.append(name).append('=').append(v.text) // PDF text strings (§7.9.2)
-        case _ =>
-      }
-      field.get("Kids").foreach {
-        case kids: ArrTok => kids.iterator.foreach {
-          case kid: DictTok => walk(kid, name, depth + 1)
-          case _            =>
-        }
-        case _ =>
-      }
-    }
-    formToken match {
-      case form: DictTok =>
-        form.get("Fields").foreach {
-          case fields: ArrTok =>
-            fields.iterator.foreach {
-              case f: DictTok => walk(f, "", 0)
-              case _          =>
-            }
-            formFields = out.toString
-          case _ =>
-        }
-      case _ =>
-    }
-  }
-
-  /** ADDITIVE SURFACE (nothing in the reference reads /Outlines — verified
-    * against all 16 PdfParser .cs files): the catalog's bookmark tree as
-    * "depth:title" items joined by "|", in first-child-then-next-sibling
-    * (DFS) order per ISO 32000-1 §12.3.3, cycle-guarded; null when the
-    * document has no /Outlines, "" when the tree is present but empty.
-    * Encrypted documents: in DEFAULT mode nested-string decryption keeps
-    * the reference's crash surface (Token.cs:269), so the walk degrades to
-    * null; in extended mode titles decrypt with the containing object's
-    * key (see containingObjectId) and the outline extracts. Training-data
-    * pipelines use this for section-aware chunking; it changes no
-    * reference-identical output. */
-  private def readOutline(outlinesToken: PdfTok): Unit = {
-    val out = new java.lang.StringBuilder
-    val visited = mutable.HashSet.empty[ObjectId]
-    def walk(first: PdfTok, depth: Int): Unit = {
-      if (depth > MaxStructureDepth) return
-      var cur: DictTok = first match { case d: DictTok => d; case _ => null }
-      while (cur != null) {
-        if (!cur.objectId.forall(visited.add)) return
-        cur.get("Title").foreach {
-          case s: StrTok =>
-            if (out.length > 0) out.append('|')
-            out.append(depth).append(':').append(s.value)
-          case _ =>
-        }
-        cur.get("First").foreach(walk(_, depth + 1))
-        cur = cur.get("Next") match {
-          case Some(n: DictTok) => n
-          case _                => null
-        }
-      }
-    }
-    outlinesToken match {
-      case d: DictTok =>
-        d.get("First").foreach(walk(_, 0))
-        outline = out.toString
-      case _ =>
     }
   }
 
@@ -892,9 +735,9 @@ final class PdfTokeniser(
     sb.toString
   }
 
-  /** Raw copy of the current (decoded) stream payload — attachments surface;
-    * the shared decode buffers are reused per document, so callers that keep
-    * payloads need their own copy. */
+  /** Raw copy of the current (decoded) stream payload; the shared decode
+    * buffers are reused per document, so callers that keep payloads need
+    * their own copy. */
   private[pdf] def streamBytesCopy(): Array[Byte] =
     java.util.Arrays.copyOfRange(streamBuf, streamOff, streamOff + streamLen)
 
@@ -1168,7 +1011,7 @@ final class PdfTokeniser(
     // (/Info) are covered by the decrypt-strings-parsed-before-the-key-
     // existed fix-up loop. EXTENSION (extended mode): nested strings fall
     // back to the CONTAINING object's id — the key ISO 32000-1 §7.6.2
-    // actually prescribes — so encrypted outlines/annotations/forms decode;
+    // actually prescribes — so encrypted nested strings decode;
     // and strings inside OBJECT-STREAM members are already plaintext
     // (§7.5.7, the stream itself was decrypted), so they are left as-is
     // instead of being "decrypted" into garbage.

@@ -87,54 +87,6 @@ final class StrTok(var value: String, val hexBytes: Option[Array[Byte]], val obj
     sb.append('"').append(value).append('"')
     addRef(sb)
   }
-
-  /** The token as a PDF TEXT STRING (ISO 32000-1 §7.9.2) — what the
-    * additive structure surfaces (outline titles, form values, annotation
-    * text) emit: hex strings decode their bytes (UTF-16BE when they carry
-    * the FEFF byte-order mark, PDFDocEncoding≈Latin-1 otherwise), literal
-    * strings resolve the backslash escapes `value` keeps raw (the
-    * reference quirk, Token.cs:219-233). The raw `value` stays the
-    * reference-faithful surface for everything else (/Info, rendering). */
-  def text: String = hexBytes match {
-    case Some(b) =>
-      if (b.length >= 2 && b(0) == 0xfe.toByte && b(1) == 0xff.toByte)
-        new String(b, 2, b.length - 2, java.nio.charset.StandardCharsets.UTF_16BE)
-      else new String(b, java.nio.charset.StandardCharsets.ISO_8859_1)
-    case None =>
-      if (value.indexOf('\\') < 0) value
-      else {
-        val out = new java.lang.StringBuilder(value.length)
-        var i = 0
-        val n = value.length
-        while (i < n) {
-          val c = value.charAt(i)
-          if (c != '\\' || i + 1 >= n) { out.append(c); i += 1 }
-          else {
-            val e = value.charAt(i + 1)
-            e match {
-              case 'n' => out.append('\n'); i += 2
-              case 'r' => out.append('\r'); i += 2
-              case 't' => out.append('\t'); i += 2
-              case 'b' => out.append('\b'); i += 2
-              case 'f' => out.append('\f'); i += 2
-              case '(' | ')' | '\\' => out.append(e); i += 2
-              case '\n' => i += 2 // line continuation
-              case '\r' => i += (if (i + 2 < n && value.charAt(i + 2) == '\n') 3 else 2)
-              case d if d >= '0' && d <= '7' =>
-                var v = 0
-                var k = i + 1
-                while (k < n && k < i + 4 && value.charAt(k) >= '0' && value.charAt(k) <= '7') {
-                  v = v * 8 + (value.charAt(k) - '0')
-                  k += 1
-                }
-                out.append(v.toChar); i = k
-              case other => out.append(other); i += 2 // unknown escape: keep the char
-            }
-          }
-        }
-        out.toString
-      }
-  }
 }
 
 /** reference: Token.cs:305-329 */

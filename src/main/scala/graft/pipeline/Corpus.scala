@@ -1174,128 +1174,6 @@ object Corpus {
     case _ => "/blocked"              // even: specific group shadows *; odd: blocked
   }
 
-  /** Expected `pdf_outline` surface for [[pdfOutlineForDoc]] (Scala twin of
-    * the SQL oracle): a fixed depth-3 subtree under chapter 0, then one
-    * top-level chapter per page. */
-  def outlineExpectedText(text: String): String = {
-    val len = text.length
-    val p = math.max(1, pdfPageCount(text))
-    val head = s"0:ch-0-$len|1:sec-0-$len|2:sub-0-$len"
-    if (p == 1) head
-    else head + (1 until p).map(i => s"|0:ch-$i-$len").mkString
-  }
-
-  /** Outline gate corpus: a variant-0 document whose catalog carries an
-    * /Outlines bookmark tree — one top-level chapter per page (sibling chain
-    * scales with the document) and a depth-3 First-chain under chapter 0, so
-    * the DFS walk, the Next chain, and the recursion are all gate-visible.
-    * The reference never reads /Outlines (verified across all 16 PdfParser
-    * .cs files), so this is an ADDITIVE surface: it changes no
-    * reference-identical output, and no mode gate is needed. */
-  def pdfOutlineForDoc(docId: Long, text: String): Array[Byte] = {
-    val b = new GoldenGen.PdfBuilder()
-    val contentIds = rotatingShowContents(b, text)
-    val len = text.length
-    val p = math.max(1, pdfPageCount(text))
-    // sequential ids, computed up front so First/Next can point forward:
-    // root=r, ch0=r+1, sec0=r+2, sub0=r+3, ch_i (i>=1) = r+3+i
-    val r = b.nextObjectNumber
-    def chIdOf(i: Int): Int = if (i == 0) r + 1 else r + 3 + i
-    b.addObject(s"<</Type/Outlines/First ${chIdOf(0)} 0 R/Last ${chIdOf(p - 1)} 0 R/Count $p>>")
-    b.addObject(s"<</Title (ch-0-$len)/Parent $r 0 R/First ${r + 2} 0 R/Last ${r + 2} 0 R" +
-      (if (p > 1) s"/Next ${chIdOf(1)} 0 R" else "") + ">>")
-    b.addObject(s"<</Title (sec-0-$len)/Parent ${r + 1} 0 R/First ${r + 3} 0 R/Last ${r + 3} 0 R>>")
-    b.addObject(s"<</Title (sub-0-$len)/Parent ${r + 2} 0 R>>")
-    (1 until p).foreach { i =>
-      val id = b.addObject(s"<</Title (ch-$i-$len)/Parent $r 0 R" +
-        (if (i + 1 < p) s"/Next ${chIdOf(i + 1)} 0 R" else "") + ">>")
-      require(id == chIdOf(i), s"outline id drift: $id vs ${chIdOf(i)}")
-    }
-    val metaId = addMetadata(b, text)
-    val catalog = GoldenGen.catalogFor(b, contentIds, metadataId = Some(metaId),
-      catalogExtra = s"/Outlines $r 0 R")
-    val info = b.addObject(infoContent(text))
-    b.finish(s"/Root $catalog 0 R/Info $info 0 R/ID[<${docIdHex(text)}><${docIdHex(text)}>]")
-  }
-
-  /** Attachment gate corpus: a variant-0 document carrying THREE embedded
-    * files behind a /Names → /EmbeddedFiles name tree whose root splits into
-    * two /Kids nodes (the intermediate-node walk is gate-visible, not just
-    * the leaf /Names form). Contents are SQL-computable transforms of the
-    * document text: att-0.txt = text (Flate), att-1.bin = reverse(text)
-    * (Flate), att-2.txt = upper(text) (unfiltered). ADDITIVE surface — the
-    * reference never reads /Names. */
-  def pdfAttachmentsForDoc(docId: Long, text: String): Array[Byte] = {
-    val b = new GoldenGen.PdfBuilder()
-    val contentIds = rotatingShowContents(b, text)
-    def bytesOf(s: String) = s.getBytes(ISO_8859_1)
-    val s0 = b.addStream("/Type/EmbeddedFile", bytesOf(text), deflate = true)
-    val s1 = b.addStream("/Type/EmbeddedFile", bytesOf(new StringBuilder(text).reverse.toString), deflate = true)
-    // Locale.ROOT: the oracle is DuckDB's upper(); a tr_TR default locale
-    // would dot-map 'i' and break the md5 (corpus contract is ASCII anyway)
-    val s2 = b.addStream("/Type/EmbeddedFile", bytesOf(text.toUpperCase(java.util.Locale.ROOT)))
-    def filespec(name: String, sid: Int): Int =
-      b.addObject(s"<</Type/Filespec/F ($name)/EF<</F $sid 0 R>>>>")
-    val f0 = filespec("att-0.txt", s0)
-    val f1 = filespec("att-1.bin", s1)
-    val f2 = filespec("att-2.txt", s2)
-    val kid1 = b.addObject(s"<</Limits[(att-0.txt)(att-1.bin)]/Names[(att-0.txt) $f0 0 R (att-1.bin) $f1 0 R]>>")
-    val kid2 = b.addObject(s"<</Limits[(att-2.txt)(att-2.txt)]/Names[(att-2.txt) $f2 0 R]>>")
-    val treeRoot = b.addObject(s"<</Kids[$kid1 0 R $kid2 0 R]>>")
-    val metaId = addMetadata(b, text)
-    val catalog = GoldenGen.catalogFor(b, contentIds, metadataId = Some(metaId),
-      catalogExtra = s"/Names<</EmbeddedFiles $treeRoot 0 R>>")
-    val info = b.addObject(infoContent(text))
-    b.finish(s"/Root $catalog 0 R/Info $info 0 R/ID[<${docIdHex(text)}><${docIdHex(text)}>]")
-  }
-
-  /** Annotation gate corpus: variant-0 pages each carrying an INLINE
-    * /Annots array with one FreeText note (/Contents a closed form of the
-    * 1-based page number and length(text)) and one Link whose /A /URI is a
-    * closed form of (doc_id, page). ADDITIVE surface — the reference never
-    * reads /Annots. */
-  def pdfAnnotsForDoc(docId: Long, text: String): Array[Byte] = {
-    val len = text.length
-    val b = new GoldenGen.PdfBuilder()
-    val contentIds = rotatingShowContents(b, text)
-    val metaId = addMetadata(b, text)
-    val catalog = GoldenGen.catalogFor(b, contentIds, metadataId = Some(metaId),
-      pageExtra = pi => {
-        val page = pi + 1
-        s"/Annots[<</Subtype/FreeText/Contents (note-$page-$len)>>" +
-          s"<</Subtype/Link/A<</S/URI/URI (https://ann${docId % 5}.example/p$page)>>>>]"
-      })
-    val info = b.addObject(infoContent(text))
-    b.finish(s"/Root $catalog 0 R/Info $info 0 R/ID[<${docIdHex(text)}><${docIdHex(text)}>]")
-  }
-
-  /** Expected `pdf_form_fields` surface for [[pdfFormFieldsForDoc]]. */
-  def formFieldsExpectedText(text: String): String = {
-    val len = text.length
-    s"title=t-$len|meta.lang=v1-$len|meta.count=v2-$len"
-  }
-
-  /** AcroForm gate corpus: a variant-0 document whose catalog carries an
-    * /AcroForm with a flat text field and a non-terminal group whose /Kids
-    * hold two terminal fields — the dotted-name join (meta.lang) and the
-    * Kids recursion are gate-visible. Values are closed forms of
-    * length(text). ADDITIVE surface — the reference never reads /AcroForm. */
-  def pdfFormFieldsForDoc(docId: Long, text: String): Array[Byte] = {
-    val b = new GoldenGen.PdfBuilder()
-    val contentIds = rotatingShowContents(b, text)
-    val len = text.length
-    val f1 = b.addObject(s"<</FT/Tx/T (title)/V (t-$len)>>")
-    val k1 = b.addObject(s"<</FT/Tx/T (lang)/V (v1-$len)>>")
-    val k2 = b.addObject(s"<</FT/Tx/T (count)/V (v2-$len)>>")
-    val group = b.addObject(s"<</T (meta)/Kids[$k1 0 R $k2 0 R]>>")
-    val acro = b.addObject(s"<</Fields[$f1 0 R $group 0 R]>>")
-    val metaId = addMetadata(b, text)
-    val catalog = GoldenGen.catalogFor(b, contentIds, metadataId = Some(metaId),
-      catalogExtra = s"/AcroForm $acro 0 R")
-    val info = b.addObject(infoContent(text))
-    b.finish(s"/Root $catalog 0 R/Info $info 0 R/ID[<${docIdHex(text)}><${docIdHex(text)}>]")
-  }
-
   /** Source char the Type0 gate writes as CID 0x0001, whose ToUnicode
     * destination <00660066> is the TWO-char "ff" — extended-mode composite
     * decoding keeps multi-char targets verbatim (no ligature packing; the
@@ -1479,180 +1357,6 @@ object Corpus {
       sb.append("<p>").append(b.mkString(" ")).append("</p>\n"))
     sb.append("</body></html>")
     sb.toString.getBytes(UTF_8)
-  }
-
-  /** Head-metadata gate page (`html_meta`): canonical link, description
-    * (with an entity in the value), og:title, og:description with the
-    * attribute ORDER swapped and single quotes, robots noindex,nofollow as
-    * an UNQUOTED value on every doc_id % 3 == 0, and a forged meta inside
-    * a <script> string that the scanner must skip. All values closed forms
-    * of (doc_id, length(text)). */
-  def htmlMetaProbe(docId: Long, text: String): Array[Byte] = {
-    val len = text.length
-    val sb = new StringBuilder("<!DOCTYPE html>\n<html><head>\n")
-    sb.append(s"<title>t-$len</title>\n")
-    sb.append(s"""<link rel="canonical" href="https://example${docId % 7}.com/p${docId % 5}">""").append('\n')
-    sb.append(s"""<meta name="description" content="desc-$len &amp; more">""").append('\n')
-    sb.append(s"""<meta property="og:title" content="og-$len">""").append('\n')
-    sb.append(s"""<meta content='ogd-$len' property='og:description'>""").append('\n')
-    if (docId % 3 == 0) sb.append("<meta name=robots content=noindex,nofollow>\n")
-    sb.append("""<script>var forged = "<meta name=\"description\" content=\"forged\">";</script>""").append('\n')
-    sb.append("</head><body>\n<p>").append(text).append("</p>\n</body></html>")
-    sb.toString.getBytes(UTF_8)
-  }
-
-  /** Out-link gate page (`html_links`): five kept anchors rotating every
-    * href form (absolute; single-quoted path-relative; unquoted
-    * root-relative; protocol-relative; dot-dot with a fragment to drop),
-    * plus four that must NOT surface (javascript:, mailto:, a commented-out
-    * anchor, one forged inside a <script> string). Odd doc_ids carry a
-    * <base href> that rebases the relative arms — and a second base that
-    * must LOSE (first wins). Every resolved URL is a closed form of
-    * (doc_id, length(text)); the page URL is [[UrlPrefix]] + docId. */
-  def htmlLinksProbe(docId: Long, text: String): Array[Byte] = {
-    val len = text.length
-    val sb = new StringBuilder("<!DOCTYPE html>\n<html><head>\n")
-    if (docId % 2 == 1) {
-      sb.append(s"""<base href="https://base$docId.example/b${docId % 3}/dir/">""").append('\n')
-      sb.append("""<base href="https://ignored.example/">""").append('\n')
-    }
-    sb.append("</head><body>\n")
-    sb.append(s"""<a href="https://abs.example/a-$len">abs</a>""").append('\n')
-    sb.append(s"""<a href='rel-${docId % 5}/p'>rel</a>""").append('\n')
-    sb.append(s"""<a href=/root-${docId % 7}>root</a>""").append('\n')
-    sb.append(s"""<a href="//cdn.example/c-$len">proto</a>""").append('\n')
-    sb.append(s"""<a href="../up-${docId % 2}#sec">dotdot</a>""").append('\n')
-    sb.append("""<a href="javascript:void(0)">js</a>""").append('\n')
-    sb.append("""<a href="mailto:x@example.org">mail</a>""").append('\n')
-    sb.append("""<!-- <a href="commented-out">x</a> -->""").append('\n')
-    sb.append("""<script>var a = '<a href="forged-in-script">';</script>""").append('\n')
-    sb.append("<p>").append(escapeHtml(text)).append("</p>\n</body></html>")
-    sb.toString.getBytes(UTF_8)
-  }
-
-  /** Anchor-text probe (the `html_anchor_text` / `anchor_profile` gates):
-    * five kept edges per doc whose hrefs AND anchor strings are closed
-    * forms of doc_id, exercising every [[graft.html.Links.innerText]]
-    * convention — a plain anchor, an anchor with a mid-word numeric
-    * character reference + transparent inline tag + `<br>` separator +
-    * embedded comment + whitespace collapse, an image-only anchor (empty
-    * text), and the HTML5 nested-`<a>` auto-close pair — plus two
-    * non-edges that must vanish (a javascript: link whose text must not
-    * surface, and an href-less named target). The shared hub targets
-    * (`t0..t3`, `n1`, `n2`) give [[graft.html.Anchors.profile]] real
-    * cross-document frequency structure to argmax over. */
-  def htmlAnchorProbe(docId: Long, text: String): Array[Byte] = {
-    val k3 = docId % 3
-    val k4 = docId % 4
-    val sb = new StringBuilder("<!DOCTYPE html>\n<html><body>\n")
-    sb.append(s"""<a href="https://hub.example/t$k4">plain $k3</a>""").append('\n')
-    sb.append(s"""<a href="/t${(docId + 1) % 4}"> <b>bo&#108;d</b>-$k3 <br><!-- <a href="noise">x</a> --> tail </a>""").append('\n')
-    sb.append(s"""<a href="https://hub.example/t$k4"><img src="x.png"></a>""").append('\n')
-    sb.append(s"""<a href="https://hub.example/n1">one <a href="https://hub.example/n2">two</a>""").append('\n')
-    sb.append("""<a href="javascript:void(0)">never</a>""").append('\n')
-    sb.append("""<a name="here">not a link</a>""").append('\n')
-    sb.append("<p>").append(escapeHtml(text)).append("</p>\n</body></html>")
-    sb.toString.getBytes(UTF_8)
-  }
-
-  /** Outline probe (the `html_outline` gate): three body headings whose
-    * levels and titles are closed forms of doc_id, exercising every
-    * [[graft.html.Outline]] convention — an h1 with a named entity, an h2
-    * with a transparent inline tag, an h3 with a numeric character
-    * reference — plus three decoys that must vanish: a chrome heading
-    * (inside `<nav>`), a commented-out heading, and a heading forged
-    * inside `<script>` text. The real paragraphs carry the corpus text so
-    * the payload stays realistic. */
-  def htmlOutlineProbe(docId: Long, text: String): Array[Byte] = {
-    val esc = escapeHtml(text)
-    val html =
-      s"""<!DOCTYPE html>
-         |<html><head><title>doc $docId</title>
-         |<script>var x = '<h2>forged in script</h2>';</script>
-         |</head><body>
-         |<nav><h2>site sections</h2><a href="/">home</a></nav>
-         |<h1>Ch &amp; ap-${docId % 9}</h1>
-         |<p>$esc</p>
-         |<!-- <h3>commented out</h3> -->
-         |<h2>Se<b>cti</b>on ${docId % 5}</h2>
-         |<p>$esc</p>
-         |<h3>Sub &#97;-${docId % 7}</h3>
-         |<p>$esc</p>
-         |</body></html>""".stripMargin
-    html.getBytes(UTF_8)
-  }
-
-  /** Table probe (the `html_tables` gate): a header table (thead/tbody,
-    * caption, entity and inline-tag cells, an EMPTY cell, implied
-    * `</td>`/`</tr>` closes), a NESTED table inside a cell (the containing
-    * cell's text must pause at the inner table and resume after it — no
-    * duplication, no loss), a `<tr>`-less loose table (implied row 0), and
-    * two decoys that must produce no cells (a table forged in `<script>`
-    * text and a commented-out table). Every cell a closed form of
-    * doc_id. */
-  def htmlTableProbe(docId: Long, text: String): Array[Byte] = {
-    val esc = escapeHtml(text)
-    val html =
-      s"""<!DOCTYPE html>
-         |<html><body>
-         |<script>var t = '<table><tr><td>forged</td></tr></table>';</script>
-         |<!-- <table><tr><td>commented</td></tr></table> -->
-         |<p>$esc</p>
-         |<table>
-         | <caption>not a cell</caption>
-         | <thead><tr><th>name</th><th>v &amp; ${docId % 7}</th></tr></thead>
-         | <tbody>
-         |  <tr><td>a-${docId % 5}</td><td></td></tr>
-         |  <tr><td>pre <table><tr><td>in-${docId % 3}</td></tr></table> post</td><td>b <b>bo</b>ld-${docId % 4}</td></tr>
-         |  <tr><td>u-${docId % 2}<td>v-${docId % 2}
-         | </tr></tbody>
-         |</table>
-         |<table><td>loose-${docId % 9}</td></table>
-         |<p>$esc</p>
-         |</body></html>""".stripMargin
-    html.getBytes(UTF_8)
-  }
-
-  /** JSON-LD probe (the `html_jsonld` gate): one Article block per doc
-    * (headline/datePublished closed forms of doc_id) whose type attribute
-    * rotates quoting by doc_id%3 (double/single/unquoted) and value form
-    * by doc_id%4 when quoted (plain / uppercase / parameterized
-    * `; charset=utf-8` / space-padded — all must match), a second
-    * array-form block on odd ids, and three decoys that must vanish: a
-    * javascript-typed script, a type-less script, and a commented-out
-    * JSON-LD element. */
-  def htmlJsonLdProbe(docId: Long, text: String): Array[Byte] = {
-    val esc = escapeHtml(text)
-    val block1 =
-      s"""{"@type":"Article","headline":"t-${docId % 9}","datePublished":"2024-01-0${docId % 9 + 1}"}"""
-    val block2 = s"""[{"@type":"BreadcrumbList","position":${docId % 5}}]"""
-    val typeAttr =
-      if (docId % 3 == 2) "type=application/ld+json" // unquoted: plain value only
-      else {
-        val v = (docId % 4) match {
-          case 0 => "application/ld+json"
-          case 1 => "APPLICATION/LD+JSON"
-          case 2 => "application/ld+json; charset=utf-8"
-          case _ => " application/ld+json "
-        }
-        if (docId % 3 == 0) s"""type="$v"""" else s"type='$v'"
-      }
-    val second =
-      if (docId % 2 == 1)
-        s"""<script type="application/ld+json">$block2</script>"""
-      else ""
-    val html =
-      s"""<!DOCTYPE html>
-         |<html><head><title>doc $docId</title>
-         |<script type="text/javascript">var decoy = {"not":"ld"};</script>
-         |<script>var alsoNot = 1;</script>
-         |<!-- <script type="application/ld+json">{"commented":true}</script> -->
-         |<script $typeAttr>
-         |$block1
-         |</script>
-         |$second
-         |</head><body><p>$esc</p></body></html>""".stripMargin
-    html.getBytes(UTF_8)
   }
 
   def htmlSpanProbePageRowFor(docId: Long, text: String, lang: String): PageRow =

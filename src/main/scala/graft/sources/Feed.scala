@@ -133,8 +133,8 @@ object Feed {
               t.substring(vStart, end)
             } else {
               // unquoted value — invalid XML, but "real feeds don't
-              // validate" is this module's whole premise (Meta.attrs'
-              // HTML rule): read to whitespace or '>'
+              // validate" is this module's whole premise (HTML's
+              // unquoted-attribute rule): read to whitespace or '>'
               val vStart = i
               while (i < n && !ws(t.charAt(i)) && t.charAt(i) != '>') i += 1
               t.substring(vStart, i)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BooleanType
 
 /** The operational capstone of the crawl-discovery chain: candidate
-  * frontier URLs (from [[graft.html.Links]] extraction, sitemaps or feeds)
+  * frontier URLs (from page links, sitemaps or feeds)
   * joined against per-host robots.txt policies ([[Robots]]) to decide what
   * a crawler may actually fetch. robots.txt → sitemaps → feeds → links
   * produce CANDIDATES; this produces the ALLOWED frontier. ADDITIVE

@@ -2,7 +2,7 @@ package graft.sources
 
 /** Robots Exclusion Protocol (RFC 9309) — the crawl-policy artifact every
   * web corpus pipeline must honor before a page may be kept (the fetch-side
-  * twin of the `<meta name=robots>` directives `html/Meta.scala` reads).
+  * twin of a page's `<meta name=robots>` directives).
   * ADDITIVE surface: the reference has no web code.
   *
   * Implemented per the RFC:

@@ -148,83 +148,6 @@ class BoilerplateSpec extends AnyFunSuite {
     assert(Boilerplate.extract("plain text with no tags at all but quite a few words so it counts as content for the rules").text.nonEmpty)
   }
 
-  test("head metadata: probe closed forms, attribute forms, script forging, robots tokens") {
-    import graft.html.Meta
-    import graft.pipeline.Corpus
-    for (docId <- Seq(1L, 3L, 5L, 9L); text <- Seq("x", "some longer body text here")) {
-      val m = Meta.extract(Corpus.htmlMetaProbe(docId, text))
-      val len = text.length
-      assert(m.canonical == s"https://example${docId % 7}.com/p${docId % 5}", m.canonical)
-      assert(m.description == s"desc-$len & more", m.description) // entity decoded
-      assert(m.ogTitle == s"og-$len")
-      assert(m.ogDescription == s"ogd-$len") // swapped attr order, single quotes
-      assert(m.noindex == (docId % 3 == 0) && m.nofollow == (docId % 3 == 0))
-    }
-    // absent surfaces -> empty/false; robots 'none' implies both flags;
-    // first-wins duplicate resolution; forged meta inside <script> ignored
-    val none = Meta.extract("<html><head></head><body>hi</body></html>")
-    assert(none.canonical == "" && none.description == "" && !none.noindex && !none.nofollow)
-    val both = Meta.extract("""<meta name="ROBOTS" content="NONE">""")
-    assert(both.noindex && both.nofollow)
-    val dup = Meta.extract(
-      """<meta name=description content=first><meta name=description content=second>""")
-    assert(dup.description == "first")
-    val forged = Meta.extract(
-      """<script>var x = "<meta name=\"description\" content=\"forged\">";</script>
-        |<meta name="description" content="real">""".stripMargin)
-    assert(forged.description == "real")
-    // pathological: unterminated tag, attr with no value, never throws
-    Meta.extract("<meta name=description content")
-    Meta.extract("<link rel")
-    Meta.extract("")
-  }
-
-  test("head metadata hardening: case-insensitive raw-text close, comments, forging, dup attrs, rel tokens") {
-    import graft.html.Meta
-    import graft.pipeline.Corpus
-    // uppercase close tag must end the script skip — losing the rest of
-    // the document would drop the canonical key and miss a noindex
-    val upper = Meta.extract(
-      """<script>x</SCRIPT><meta name="robots" content="noindex">
-        |<link rel="canonical" href="https://a.example/x">""".stripMargin)
-    assert(upper.noindex && upper.canonical == "https://a.example/x")
-    // commented-out stale metadata must not latch (first-wins would
-    // otherwise shadow the live values)
-    val commented = Meta.extract(
-      """<!-- <meta name="robots" content="noindex">
-        |     <meta name="description" content="stale"> -->
-        |<meta name="description" content="live">""".stripMargin)
-    assert(!commented.noindex && commented.description == "live")
-    // markup-looking text inside attribute values and RCDATA bodies is
-    // text, never a tag
-    val forged = Meta.extract(
-      """<img alt='see <meta name=robots content=noindex> docs'>
-        |<title>writing <meta name="description" content="forged"> tags</title>
-        |<meta name="description" content="real">""".stripMargin)
-    assert(!forged.noindex && forged.description == "real")
-    // duplicate attributes resolve first-wins (HTML5 ignores the repeat)
-    val dupAttr = Meta.extract("""<meta name="description" content="real" content="">""")
-    assert(dupAttr.description == "real")
-    // rel is a space-separated token list
-    val relList = Meta.extract("""<link rel="canonical alternate" href="https://b.example/y">""")
-    assert(relList.canonical == "https://b.example/y")
-    // CDATA skipped like comments
-    val cdata = Meta.extract("""<![CDATA[<meta name=robots content=noindex>]]><meta name=description content=ok>""")
-    assert(!cdata.noindex && cdata.description == "ok")
-    // unterminated comment / rawtext never throw
-    Meta.extract("<!-- never closed <meta name=robots content=noindex>")
-    Meta.extract("<script>never closed")
-    // fuzz: mutated and truncated probe pages never throw
-    val rnd = new java.util.Random(0x4d455441L) // "META"
-    val base = Corpus.htmlMetaProbe(3L, "fuzz body words for the meta probe page here")
-    (1 to 200).foreach { _ =>
-      val m = base.clone()
-      (0 until 1 + rnd.nextInt(6)).foreach(_ => m(rnd.nextInt(m.length)) = rnd.nextInt(256).toByte)
-      Meta.extract(m)
-    }
-    (1 to 30).foreach(_ => Meta.extract(java.util.Arrays.copyOf(base, 1 + rnd.nextInt(base.length))))
-  }
-
   /** The decoder as it stood before it decoded in place: an unbounded
     * `indexOf(';')`, a substring per body, `parseInt` on a substring, a
     * tuple per entity. The in-place decoder must agree with it everywhere. */

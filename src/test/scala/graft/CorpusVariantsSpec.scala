@@ -214,34 +214,11 @@ class CorpusVariantsSpec extends AnyFunSuite {
     assert(!r6.sameElements(PdfCrypto.hash2B(pwd, salt, Array.fill[Byte](48)(7), 6)))
   }
 
-  test("outline corpus: DFS depth:title walk matches the closed form; cycles and absent trees are safe") {
+  test("encrypted nested string: keyed by the containing object") {
+    // extended mode decrypts a string nested in the page dict with the page
+    // object's key; default mode keeps the reference crash surface
     import graft.fixtures.GoldenGen
-    for ((t, i) <- texts.zipWithIndex) {
-      val r = PdfExtract.extract(Corpus.pdfOutlineForDoc(i.toLong * 2, t),
-        contentDelimiter = "", captureFragments = false)
-      assert(r.decodeFailures == 0, s"text $i: ${r.error}")
-      assert(r.outline.contains(Corpus.outlineExpectedText(t)), s"text $i: ${r.outline}")
-      assert(r.text == t, s"text $i") // the page text is untouched by the outline
-    }
-    // no /Outlines → None (the common case; every other corpus builder)
-    assert(PdfExtract.extract(Corpus.pdfFromText(texts(0)),
-      contentDelimiter = "", captureFragments = false).outline.isEmpty)
-    // a CYCLIC Next chain must terminate via the visited guard, not hang
-    val b = new GoldenGen.PdfBuilder()
-    val cid = b.addStream("", "BT (x) Tj ET".getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
-    val r0 = b.nextObjectNumber
-    b.addObject(s"<</Type/Outlines/First ${r0 + 1} 0 R/Last ${r0 + 2} 0 R/Count 2>>")
-    b.addObject(s"<</Title (a)/Parent $r0 0 R/Next ${r0 + 2} 0 R>>")
-    b.addObject(s"<</Title (b)/Parent $r0 0 R/Next ${r0 + 1} 0 R>>") // cycle back to a
-    val catalog = GoldenGen.catalogFor(b, Seq(cid), catalogExtra = s"/Outlines $r0 0 R")
-    val cyc = PdfExtract.extract(b.finish(s"/Root $catalog 0 R"),
-      contentDelimiter = "", captureFragments = false)
-    assert(cyc.outline.contains("0:a|0:b"), cyc.outline)
-  }
-
-  test("encrypted outline: extended mode decrypts titles with the containing-object key; default keeps the reference crash surface") {
-    import graft.fixtures.GoldenGen
-    import graft.pdf.{ObjectId, PdfCrypto}
+    import graft.pdf.{DictTok, ObjectId, PdfCrypto, PdfTokeniser}
     import java.nio.charset.StandardCharsets.ISO_8859_1
     // V1/R2 empty-password chain, like variant 3
     val docIdHex = "0123456789abcdef0123456789abcdef"
@@ -252,125 +229,62 @@ class CorpusVariantsSpec extends AnyFunSuite {
     val u = PdfCrypto.computeEncryptU(PdfCrypto.pad(""), docId, key)
     val b = new GoldenGen.PdfBuilder()
     val cid = b.addStream("", "BT (body) Tj ET".getBytes(ISO_8859_1), encryptKey = key)
-    val title = "chapter-one"
+    val note = "page-note"
     def cipher(id: Int): Array[Byte] = {
-      val d = title.getBytes(ISO_8859_1)
+      val d = note.getBytes(ISO_8859_1)
       PdfCrypto.rc4InPlace(PdfCrypto.objectKey(key, ObjectId(id, 0)), d, 0, d.length)
       d
     }
-    // shift ids until the ciphertext is escape-free (variant 3's trick:
-    // the reference decrypts the RAW literal form, so no ()\ allowed)
-    var r = b.nextObjectNumber
+    // catalogFor writes the page as the next object; shift ids until the
+    // ciphertext is escape-free (variant 3's trick: the reference decrypts
+    // the RAW literal form, so no ()\ allowed)
+    var pageId = b.nextObjectNumber
     var tries = 0
-    while (cipher(r + 1).exists(x => x == 0x28 || x == 0x29 || x == 0x5c)) {
+    while (cipher(pageId).exists(x => x == 0x28 || x == 0x29 || x == 0x5c)) {
       b.addObject("<</Type/GraftPad>>")
-      r = b.nextObjectNumber
+      pageId = b.nextObjectNumber
       tries += 1
       assert(tries < 64)
     }
-    b.addObject(s"<</Type/Outlines/First ${r + 1} 0 R/Last ${r + 1} 0 R/Count 1>>")
-    val raw = new String(cipher(r + 1).map(x => (x & 0xff).toChar))
-    b.addObject(s"<</Title ($raw)/Parent $r 0 R>>")
-    val catalog = GoldenGen.catalogFor(b, Seq(cid), catalogExtra = s"/Outlines $r 0 R")
+    val raw = new String(cipher(pageId).map(x => (x & 0xff).toChar))
+    // a literal string NESTED in the page dict: the page object's id is the
+    // containing-object key; the token itself carries no id
+    val catalog = GoldenGen.catalogFor(b, Seq(cid), pageExtra = _ => s"/GraftNote ($raw)")
     val encId = b.addObject(
       s"<</Filter/Standard/V 1/R 2/P -44/O <${o.map(x => f"${x & 0xff}%02x").mkString}>" +
         s"/U <${u.map(x => f"${x & 0xff}%02x").mkString}>>>")
     val pdf = b.finish(s"/Root $catalog 0 R/Encrypt $encId 0 R/ID[<$docIdHex><$docIdHex>]")
     // extended mode: nested strings decrypt with the CONTAINING object's
-    // key (ISO 32000-1 §7.6.2) — the outline extracts decrypted
+    // key (ISO 32000-1 §7.6.2) — the page parses and its text extracts
     val ext = PdfExtract.extract(pdf, contentDelimiter = "", captureFragments = false,
       extendedFilters = true)
-    assert(ext.text == "body", ext.error)
-    assert(ext.outline.contains("0:" + title), ext.outline)
+    assert(ext.text == "body" && ext.error.isEmpty, ext.error)
+    val tk = new PdfTokeniser(pdf, contentDelimiter = "", extendedFilters = true)
+    tk.verifyFileHeader()
+    tk.findPages()
+    val page = tk.trailerEntries("Root").asInstanceOf[DictTok]
+      .getDictionary("Pages").flatMap(_.getArray("Kids")).map(_(0)).get.asInstanceOf[DictTok]
+    assert(page.objectId.contains(ObjectId(pageId, 0)))
+    assert(page.getString("GraftNote").contains(note), page.getString("GraftNote"))
     // default mode: the reference's nested-string decrypt crash surface
-    // (Token.cs:269) is kept — the walk degrades to None, page text intact
+    // (Token.cs:269) is kept — the document becomes an error row
     val dft = PdfExtract.extract(pdf, contentDelimiter = "", captureFragments = false)
-    assert(dft.text == "body", dft.error)
-    assert(dft.outline.isEmpty, dft.outline)
-  }
-
-  test("annotations corpus: FreeText contents + Link URIs per page; plain docs expose none") {
-    for ((t, i) <- texts.zipWithIndex) {
-      val docId = i.toLong * 2
-      val r = PdfExtract.extract(Corpus.pdfAnnotsForDoc(docId, t),
-        contentDelimiter = "", captureFragments = false)
-      assert(r.decodeFailures == 0, s"text $i: ${r.error}")
-      assert(r.text == t, s"text $i") // page text untouched
-      val p = Corpus.pdfPageCount(t)
-      val want = (1 to p).flatMap { page =>
-        Seq((page, "FreeText", s"note-$page-${t.length}"),
-          (page, "Link", s"https://ann${docId % 5}.example/p$page"))
-      }
-      assert(r.annotations == want, s"text $i: ${r.annotations}")
-    }
-    assert(PdfExtract.extract(Corpus.pdfFromText(texts(0)),
-      contentDelimiter = "", captureFragments = false).annotations.isEmpty)
-  }
-
-  test("annotation text-string semantics: hex UTF-16BE, escapes, Link URI precedence") {
-    import graft.fixtures.GoldenGen
-    import java.nio.charset.StandardCharsets.ISO_8859_1
-    val b = new GoldenGen.PdfBuilder()
-    val cid = b.addStream("", "BT (body) Tj ET".getBytes(ISO_8859_1))
-    val annots =
-      // UTF-16BE hex /Contents with BOM: <FEFF 0041 00E9> = "Aé"
-      "<</Subtype/FreeText/Contents <FEFF004100E9>>>" +
-        // literal escapes resolve: \( \) \\ \n and octal \101 = 'A'
-        "<</Subtype/Text/Contents (a\\(b\\)\\\\c\\n\\101)>>" +
-        // a Link with BOTH alternate text and a URI: the URI must win
-        "<</Subtype/Link/Contents (see website)/A<</S/URI/URI (https://u.example/x)>>>>"
-    val catalog = GoldenGen.catalogFor(b, Seq(cid), pageExtra = _ => s"/Annots[$annots]")
-    val r = PdfExtract.extract(b.finish(s"/Root $catalog 0 R"),
-      contentDelimiter = "", captureFragments = false)
-    assert(r.text == "body", r.error)
-    assert(r.annotations == Seq(
-      (1, "FreeText", "Aé"),
-      (1, "Text", "a(b)\\c\nA"),
-      (1, "Link", "https://u.example/x")), r.annotations)
-  }
-
-  test("attachments corpus: name-tree walk decodes all three payloads; forms corpus: dotted-name DFS") {
-    for ((t, i) <- texts.zipWithIndex) {
-      val r = PdfExtract.extract(Corpus.pdfAttachmentsForDoc(i.toLong * 2, t),
-        contentDelimiter = "", captureFragments = false, captureAttachments = true)
-      assert(r.decodeFailures == 0, s"text $i: ${r.error}")
-      assert(r.text == t, s"text $i") // page text untouched
-      val atts = r.attachments
-      assert(atts.map(_._1) == Seq("att-0.txt", "att-1.bin", "att-2.txt"), atts.map(_._1))
-      assert(new String(atts(0)._2, "ISO-8859-1") == t)                                   // Flate
-      assert(new String(atts(1)._2, "ISO-8859-1") == new StringBuilder(t).reverse.toString) // Flate
-      assert(new String(atts(2)._2, "ISO-8859-1") == t.toUpperCase)                        // unfiltered
-
-      val f = PdfExtract.extract(Corpus.pdfFormFieldsForDoc(i.toLong * 2, t),
-        contentDelimiter = "", captureFragments = false)
-      assert(f.decodeFailures == 0, s"text $i: ${f.error}")
-      assert(f.formFields.contains(Corpus.formFieldsExpectedText(t)), f.formFields)
-      assert(f.text == t, s"text $i")
-    }
-    // plain docs expose neither surface
-    val none = PdfExtract.extract(Corpus.pdfFromText(texts(0)),
-      contentDelimiter = "", captureFragments = false, captureAttachments = true)
-    assert(none.attachments.isEmpty && none.formFields.isEmpty)
-    // attachment decoding is opt-in: the bulk pipeline never pays the
-    // inflate + payload copy for attachments it doesn't read
-    val off = PdfExtract.extract(Corpus.pdfAttachmentsForDoc(0L, texts(0)),
-      contentDelimiter = "", captureFragments = false)
-    assert(off.attachments.isEmpty && off.text == texts(0))
+    assert(dft.text == "" && dft.error.exists(_.contains("NoSuchElementException")), dft.error)
   }
 
   test("review fixes: malformed additive structures never cost page text; non-Identity Type0 keeps the overlay; CID overflow throws; surrogate passthrough is replaced") {
     import graft.fixtures.GoldenGen
     import java.nio.charset.StandardCharsets.ISO_8859_1
-    // a dangling /Outlines ref (and /AcroForm, /Names) must degrade that
-    // surface only — the page text extracts exactly as the reference would
+    // dangling /Outlines, /AcroForm and /Names refs sit in catalog keys the
+    // extraction never reads (nor does the reference), so the page text
+    // extracts exactly as the reference would
     val b1 = new GoldenGen.PdfBuilder()
     val c1 = b1.addStream("", "BT (kept text) Tj ET".getBytes(ISO_8859_1))
     val cat1 = GoldenGen.catalogFor(b1, Seq(c1),
       catalogExtra = "/Outlines 99 0 R/AcroForm 98 0 R/Names<</EmbeddedFiles 97 0 R>>")
     val broken = PdfExtract.extract(b1.finish(s"/Root $cat1 0 R"),
-      contentDelimiter = "", captureFragments = false, captureAttachments = true)
+      contentDelimiter = "", captureFragments = false)
     assert(broken.text == "kept text", broken.error)
-    assert(broken.outline.isEmpty && broken.formFields.isEmpty && broken.attachments.isEmpty)
 
     def fontDoc(fontBody: String, cmap: String, ops: String): Array[Byte] = {
       val b = new GoldenGen.PdfBuilder()
@@ -607,11 +521,8 @@ class CorpusVariantsSpec extends AnyFunSuite {
     // under random corruption — one bad doc must never kill an executor
     val rnd = new java.util.Random(20260817L)
     val t = ("fuzz base corpus words repeated for a couple of pages worth " * 12).trim
-    val bases = (0 until Corpus.NumPdfVariants).map(v => Corpus.pdfForDoc(v.toLong * 2, t)) ++
-      // the structure-surface builders: corrupted outlines / name trees /
-      // form fields must degrade (surface null or error row), never throw
-      Seq(Corpus.pdfOutlineForDoc(0L, t), Corpus.pdfAttachmentsForDoc(0L, t),
-        Corpus.pdfFormFieldsForDoc(0L, t), Corpus.pdfType0ForDoc(0L, t))
+    val bases = (0 until Corpus.NumPdfVariants).map(v => Corpus.pdfForDoc(v.toLong * 2, t)) :+
+      Corpus.pdfType0ForDoc(0L, t)
     var errorRows = 0
     (1 to 320).foreach { i =>
       val mutated = bases(i % bases.length).clone()
@@ -619,9 +530,9 @@ class CorpusVariantsSpec extends AnyFunSuite {
         mutated(rnd.nextInt(mutated.length)) = rnd.nextInt(256).toByte
       }
       // alternate extended mode so the CID-decode and extended-filter
-      // paths fuzz too; captureAttachments exercises the name-tree walk
+      // paths fuzz too
       val r = PdfExtract.extract(mutated, captureFragments = false,
-        extendedFilters = i % 2 == 0, captureAttachments = true) // must not throw
+        extendedFilters = i % 2 == 0) // must not throw
       if (r.error.isDefined) errorRows += 1
     }
     (1 to 40).foreach { i =>

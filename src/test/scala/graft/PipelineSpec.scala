@@ -295,7 +295,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("query inventory: every query has an oracle and the count is pinned") {
     // the README/NOTES quote this number; pinning it here keeps the prose
     // from drifting (r4 verdict item 7). Update BOTH on every new query.
-    assert(SparkEntry.queries.size == 42,
+    assert(SparkEntry.queries.size == 31,
       s"queries=${SparkEntry.queries.size} — update this pin AND README.md")
     assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet,
       "every query needs a DuckDB oracle (and no orphaned oracles): " +
