@@ -228,16 +228,6 @@ object Bench {
             }
           }.agg(sum("value")).collect(); ()
       }),
-      "feed_parse" -> (() => {
-        import spark.implicits._
-        docsDf.select("doc_id").as[Long]
-          .mapPartitions { it =>
-            it.map { id =>
-              graft.sources.Feed.parse(graft.pipeline.Corpus.feedForDoc(id))
-                .fold(_ => 0L, _.items.length.toLong)
-            }
-          }.agg(sum("value")).collect(); ()
-      }),
       "crawl_delta" -> (() => {
         val url = concat(lit(Corpus.UrlPrefix), col("doc_id"))
         val prev = docsDf.select(url.as("url"), md5(col("text").cast("binary")).as("fp"))

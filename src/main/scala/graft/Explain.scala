@@ -57,15 +57,6 @@ object Explain {
       dump("extract_metrics_only (narrow row out of the map; ReadSchema still url/html/lang)",
         ExtractPipeline.runMetrics(pagesTable).groupBy("kind")
           .agg(count(lit(1)), sum("n_chars")))
-      dump("url_block_domains (broadcast semi + broadcast anti; corpus never exchanged)", {
-        import spark.implicits._
-        val pages = docs.select(col("doc_id"),
-          concat(lit("https://sub"), (col("doc_id") % 11).cast("string"),
-            lit(".example"), (col("doc_id") % 7).cast("string"),
-            lit(".com/p")).as("url"))
-        graft.functions.Urls.dropBlockedDomains(pages, "url", "doc_id",
-          Seq("example3.com").toDF("domain"))
-      })
       dump("pdf_spans (span explode is a Generate fused after the extract map — no extra exchange)", {
         import spark.implicits._
         val probe = docs.where(length(col("text")) > 0)
@@ -73,15 +64,6 @@ object Explain {
           .map { case (id, t, lang) => Corpus.spanProbePageRowFor(id, t, lang) }
         ExtractPipeline.run(probe, delimiter = "").toDF()
           .select(col("url"), posexplode(col("spans")))
-      })
-      dump("frontier_allowed (ONE equi-join on host — robots side aggregated to hosts-size and broadcast; targets never shuffle; policy eval in one MapPartitions)", {
-        import spark.implicits._
-        val targets = docs.select(col("doc_id"),
-          concat(lit("https://h"), (col("doc_id") % 5).cast("string"),
-            lit(".example.org/p/"), col("doc_id").cast("string")).as("url"))
-        graft.sources.Frontier.allowed(targets, "url",
-          Seq(("h0.example.org", "User-agent: *\nDisallow: /private/"))
-            .toDF("host", "robots_txt"))
       })
       dump("crawl_delta (ONE full-outer SortMergeJoin on url; presence flags are literals, no extra pass)", {
         val url = concat(lit(Corpus.UrlPrefix), col("doc_id"))

@@ -365,64 +365,6 @@ object SparkEntry {
         }.toDF("doc_id", "n_records", "n_conversion", "url", "wet_date", "text")
         .orderBy("doc_id")
     }),
-    "sitemap_entries" -> ((s, dir) => {
-      // sitemaps.org protocol (the crawl-seeding artifact robots.txt points
-      // at): per document a synthetic urlset (even ids, entity-escaped
-      // query strings + lastmod arms) or sitemapindex (odd ids), gzip
-      // transport on ids%3==0, namespace prefixes on ids%4==0 — every
-      // entry a closed form of (doc_id, idx)
-      import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id").as[Long]
-        .flatMap { id =>
-          val p = graft.sources.Sitemap.parse(Corpus.sitemapForDoc(id))
-            .fold(e => throw new IllegalStateException(e), identity)
-          p.entries.zipWithIndex.map { case (e, i) =>
-            (id, i.toLong, p.isIndex, e.loc, e.lastmod.orNull)
-          }
-        }.toDF("doc_id", "idx", "is_index", "loc", "lastmod")
-        .orderBy("doc_id", "idx")
-    }),
-    "feed_items" -> ((s, dir) => {
-      // RSS/Atom feed parsing (the third crawl-discovery artifact —
-      // news-style pipelines seed frontiers from feeds): per document a
-      // synthetic RSS 2.0 (even ids) or Atom 1.0 (odd ids) feed — CDATA
-      // titles literal, entity-decoded plain titles/hrefs, Atom rel
-      // selection past self-link decoys, pubDate vs published/updated
-      // fallback, a linkless entry that must vanish; namespace prefixes on
-      // odd%5==1, gzip on %3==0 — every field a closed form of (doc_id, idx)
-      import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id").as[Long]
-        .flatMap { id =>
-          val p = graft.sources.Feed.parse(Corpus.feedForDoc(id))
-            .fold(e => throw new IllegalStateException(e), identity)
-          p.items.zipWithIndex.map { case (it, i) =>
-            (id, i.toLong, p.kind, it.link, it.title.orNull, it.published.orNull)
-          }
-        }.toDF("doc_id", "idx", "kind", "link", "title", "published")
-        .orderBy("doc_id", "idx")
-    }),
-    "robots_allow" -> ((s, dir) => {
-      // RFC 9309 robots.txt policy (the fetch-side keepability gate, twin
-      // of html_meta's robots directives): per document a synthetic policy
-      // file — specific graftbot group on EVEN ids only, so
-      // group-selection-vs-* is visible — evaluated against 5 probe paths;
-      // wildcard + $-anchor matching, longest-match-wins and the
-      // crawl-delay/sitemap surfaces are all closed forms of (doc_id, arm)
-      import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id").as[Long]
-        .flatMap { id =>
-          val policy = graft.sources.Robots.parse(Corpus.robotsForDoc(id), "graftbot")
-          (0 until 5).map { arm =>
-            (id, arm.toLong, policy.isAllowed(Corpus.robotsPathArm(id, arm)),
-              policy.crawlDelaySec.map(_.toLong),
-              policy.sitemaps.headOption.getOrElse(""))
-          }
-        }.toDF("doc_id", "arm", "allowed", "crawl_delay", "sitemap")
-        .orderBy("doc_id", "arm")
-    }),
     "pdf_extract_type0" -> ((s, dir) => {
       // Type0/Identity-H composite fonts (EXTENSION, opt-in extended mode):
       // 2-byte CIDs decoded through the FULL ToUnicode CMap — multi-char
@@ -524,61 +466,6 @@ object SparkEntry {
           |       pdf_extract(html).kind AS kind,
           |       pdf_extract(html).text AS text
           |FROM graft_pages""".stripMargin).orderBy("doc_id")
-    }),
-    "url_canonical" -> ((s, dir) =>
-      // URL-level dedup key: canonicalize deterministically-synthesized
-      // messy urls (mixed case, default port, tracking params, fragment) —
-      // both engines build the identical input from doc_id
-      docs(s, dir).select(col("doc_id"),
-          graft.functions.Urls.canonicalUrl(concat(
-            lit("HTTPS://Example"), col("doc_id") % 7,
-            lit(".COM:443/p"), col("doc_id") % 5,
-            lit("?utm_source=a&id="), col("doc_id"),
-            lit("&gclid=z&q="), col("doc_id") % 3,
-            lit("#frag"))).as("canon_url"))
-        .orderBy("doc_id")),
-    "url_block_domains" -> ((s, dir) => {
-      // UT1-style domain blocklist filtering, subdomains included: hosts
-      // synthesized from doc_id (11 subdomains × 7 registrable domains);
-      // blocklist hits example3.com (plus all subdomains), the single
-      // host sub5.example2.com, and a domain absent from the corpus
-      import s.implicits._
-      val pages = docs(s, dir).select(col("doc_id"),
-        concat(lit("https://sub"), (col("doc_id") % 11).cast("string"),
-          lit(".example"), (col("doc_id") % 7).cast("string"),
-          lit(".com/p/"), col("doc_id").cast("string")).as("url"))
-      val blocklist = Seq("example3.com", "sub5.example2.com", "absent.org")
-        .toDF("domain")
-      graft.functions.Urls.dropBlockedDomains(pages, "url", "doc_id", blocklist)
-        .select(col("doc_id"),
-          graft.functions.Urls.hostOf(col("url")).as("host"))
-        .orderBy("doc_id")
-    }),
-    "frontier_allowed" -> ((s, dir) => {
-      // crawl-frontier composition (Frontier.allowed): 3 probe urls per doc
-      // against 5 host arms — prefix disallow, allow-overrides-disallow
-      // (longest match), empty disallow, a graftbot-specific group with a
-      // $-anchored wildcard SHADOWING a disallow-all * group, and a host
-      // with no robots.txt at all (RFC 9309: fully allowed); every verdict
-      // a closed form of (doc_id % 5, ord)
-      import s.implicits._
-      val k = (col("doc_id") % 5).cast("string")
-      val id = col("doc_id").cast("string")
-      val targets = s.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id"), posexplode(array(
-          concat(lit("https://h"), k, lit(".example.org/public/doc-"), id),
-          concat(lit("https://h"), k, lit(".example.org/private/x-"), id),
-          concat(lit("https://h"), k, lit(".example.org/file-"), id, lit(".pdf")))))
-        .select(col("doc_id"), col("pos").cast("long").as("ord"), col("col").as("url"))
-      val robots = Seq(
-        ("h0.example.org", "User-agent: *\nDisallow: /private/"),
-        ("h1.example.org", "User-agent: *\nDisallow: /\nAllow: /public"),
-        ("h2.example.org", "User-agent: *\nDisallow:"),
-        ("h3.example.org",
-          "User-agent: graftbot\nDisallow: /*.pdf$\n\nUser-agent: *\nDisallow: /")
-      ).toDF("host", "robots_txt")
-      graft.sources.Frontier.allowed(targets, "url", robots)
-        .orderBy("doc_id", "ord")
     })
   )
 
@@ -751,23 +638,6 @@ object SparkEntry {
     "compact_checkpoint" ->
       s"""SELECT doc_id, CAST(length(text) + $pdfExtraCharsSql AS BIGINT) AS n_chars
           FROM documents ORDER BY doc_id""",
-    // per-(host arm, probe path) verdicts in closed form: h0 blocks only
-    // /private/, h1 allows only /public (longest-match), h2 blocks nothing,
-    // h3's graftbot group blocks only *.pdf (shadowing the disallow-all *
-    // group), h4 has no robots.txt -> everything allowed
-    "frontier_allowed" ->
-      """WITH t AS (SELECT doc_id, i AS ord, doc_id % 5 AS k
-                    FROM documents, generate_series(0, 2) s(i))
-         SELECT doc_id, CAST(ord AS BIGINT) AS ord,
-           'https://h' || k || '.example.org' ||
-             CASE ord WHEN 0 THEN '/public/doc-' || doc_id
-                      WHEN 1 THEN '/private/x-' || doc_id
-                      ELSE '/file-' || doc_id || '.pdf' END AS url,
-           CASE WHEN k = 0 THEN ord != 1
-                WHEN k = 1 THEN ord = 0
-                WHEN k = 3 THEN ord != 2
-                ELSE true END AS allowed
-         FROM t ORDER BY doc_id, ord""",
     // document_id: the reference renders each trailer /ID hex string as
     // '"<hex>"; ' (StrTok.render keeps the angle brackets and wraps in
     // double quotes); variant 3's /ID is the fixed encryption docId (the
@@ -823,67 +693,6 @@ object SparkEntry {
                          '%Y-%m-%dT%H:%M:%SZ') AS wet_date,
                 text || ' ¶wet-' || (doc_id % 9) AS text
          FROM documents ORDER BY doc_id""",
-    // every entry restated as closed forms of (doc_id, idx): even ids a
-    // urlset of doc_id%5+1 page urls (decoded '&' query on even idx),
-    // odd ids a 2-entry index; lastmod on even idx only
-    "sitemap_entries" ->
-      """WITH k AS (SELECT unnest(range(5)) AS idx),
-         e AS (SELECT doc_id, idx FROM documents CROSS JOIN k
-               WHERE (doc_id % 2 = 0 AND idx < doc_id % 5 + 1)
-                  OR (doc_id % 2 = 1 AND idx < 2))
-         SELECT doc_id, CAST(idx AS BIGINT) AS idx,
-                (doc_id % 2 = 1) AS is_index,
-                CASE WHEN doc_id % 2 = 0
-                     THEN 'https://example.org/doc/' || doc_id || '/p' || idx
-                          || CASE WHEN idx % 2 = 0 THEN '?a=1&b=2' ELSE '' END
-                     ELSE 'https://example.org/' || doc_id || '/s' || (idx + 1) || '.xml.gz'
-                END AS loc,
-                CASE WHEN idx % 2 = 0
-                     THEN '2024-01-' || lpad(CAST((doc_id + idx) % 28 + 1 AS VARCHAR), 2, '0')
-                     ELSE NULL END AS lastmod
-         FROM e ORDER BY doc_id, idx""",
-    // Corpus.feedForDoc surfaces: three kept items per doc, every field a
-    // closed form of (doc_id, idx); the linkless arm never surfaces
-    "feed_items" ->
-      """WITH d AS (SELECT doc_id, doc_id % 7 AS k, doc_id % 2 = 0 AS rss FROM documents),
-         u AS (
-           SELECT doc_id, 0 AS idx,
-                  CASE WHEN rss THEN 'rss' ELSE 'atom' END AS kind,
-                  CASE WHEN rss THEN 'https://news.example/r' || doc_id || '/0'
-                       ELSE 'https://news.example/a' || doc_id || '/0' END AS link,
-                  't&' || k || ' 0' AS title,
-                  CASE WHEN rss THEN '0' || (k + 1) || ' Jan 2024 00:00:00 GMT'
-                       ELSE '2024-01-0' || (k + 1) || 'T00:00:00Z' END AS published
-           FROM d
-           UNION ALL
-           SELECT doc_id, 1,
-                  CASE WHEN rss THEN 'rss' ELSE 'atom' END,
-                  CASE WHEN rss THEN 'https://news.example/r' || doc_id || '/1?a=1&b=2'
-                       ELSE 'https://news.example/a' || doc_id || '/1?x=1&y=2' END,
-                  't&' || k || ' 1',
-                  CASE WHEN rss THEN NULL ELSE '2024-02-01T00:00:00Z' END
-           FROM d
-           UNION ALL
-           SELECT doc_id, 2,
-                  CASE WHEN rss THEN 'rss' ELSE 'atom' END,
-                  CASE WHEN rss THEN 'https://news.example/r' || doc_id || '/2'
-                       ELSE 'https://news.example/a' || doc_id || '/2' END,
-                  NULL, NULL
-           FROM d)
-         SELECT doc_id, CAST(idx AS BIGINT) AS idx, kind, link, title, published
-         FROM u ORDER BY doc_id, idx""",
-    // independent restatement of every robots arm outcome as closed forms
-    // of (doc_id, arm): even ids carry the specific graftbot group (arms
-    // 0/3/4 allowed), odd ids fall to the * group (arms 2/3 allowed)
-    "robots_allow" ->
-      """WITH arms AS (SELECT unnest(range(5)) AS arm)
-         SELECT doc_id, CAST(arm AS BIGINT) AS arm,
-                CASE WHEN doc_id % 2 = 0 THEN arm IN (0, 3, 4)
-                     ELSE arm IN (2, 3) END AS allowed,
-                CASE WHEN doc_id % 2 = 0 THEN CAST(doc_id % 7 + 1 AS BIGINT)
-                     ELSE NULL END AS crawl_delay,
-                'https://example.org/' || doc_id || '/sitemap.xml' AS sitemap
-         FROM documents CROSS JOIN arms ORDER BY doc_id, arm""",
     // Corpus.type0ExpectedText: 'e' → "ff" (multi-char bfchar), 't' → U+1F600
     // (surrogate-pair bfchar); everything else round-trips through the
     // bfrange / Identity passthrough
@@ -901,42 +710,6 @@ object SparkEntry {
       """SELECT doc_id,
            'UnsupportedOperationException: owner-password authentication is not implemented' AS error,
            CAST(1 AS BIGINT) AS failures, '' AS text, CAST(0 AS BIGINT) AS n_pages
-         FROM documents WHERE doc_id % 2 = 0 ORDER BY doc_id""",
-    // mirrors Urls.canonicalUrl step by step (all regexes RE2-safe)
-    "url_canonical" ->
-      """WITH u AS (SELECT doc_id,
-             'HTTPS://Example' || (doc_id % 7) || '.COM:443/p' || (doc_id % 5)
-               || '?utm_source=a&id=' || doc_id || '&gclid=z&q=' || (doc_id % 3)
-               || '#frag' AS url
-           FROM documents),
-         c AS (SELECT doc_id,
-             lower(regexp_extract(regexp_replace(url, '#.*', ''), '^([^:/?#]+://[^/?#]*)', 1)) AS sh,
-             regexp_extract(regexp_replace(url, '#.*', ''), '^[^:/?#]+://[^/?#]*(.*)', 1) AS rest
-           FROM u),
-         d AS (SELECT doc_id,
-             CASE WHEN sh LIKE 'https://%' THEN regexp_replace(sh, ':443$', '')
-                  WHEN sh LIKE 'http://%' THEN regexp_replace(sh, ':80$', '')
-                  ELSE sh END AS host,
-             regexp_extract(rest, '^([^?]*)', 1) AS path0,
-             array_to_string(list_filter(string_split(regexp_extract(rest, '\?(.*)', 1), '&'),
-               p -> NOT regexp_matches(p, '^(utm_[A-Za-z0-9_]*|fbclid|gclid)=')), '&') AS q
-           FROM c)
-         SELECT d.doc_id AS doc_id,
-           CASE WHEN c.sh = '' THEN u.url  -- scheme-less: passthrough, like the Column fn
-                ELSE host || (CASE WHEN path0 = '' THEN '/' ELSE path0 END)
-                     || (CASE WHEN length(q) > 0 THEN '?' || q ELSE '' END) END AS canon_url
-         FROM d JOIN c ON c.doc_id = d.doc_id JOIN u ON u.doc_id = d.doc_id
-         ORDER BY doc_id""",
-    // blocklist semantics spelled out per literal entry: host under domain
-    // means host = d OR host ends with '.' || d (subdomain inclusion)
-    "url_block_domains" ->
-      """WITH u AS (SELECT doc_id,
-             'sub' || (doc_id % 11) || '.example' || (doc_id % 7) || '.com' AS host
-           FROM documents)
-         SELECT doc_id, host FROM u
-         WHERE NOT (host = 'example3.com' OR host LIKE '%.example3.com'
-                 OR host = 'sub5.example2.com' OR host LIKE '%.sub5.example2.com'
-                 OR host = 'absent.org' OR host LIKE '%.absent.org')
-         ORDER BY doc_id"""
+         FROM documents WHERE doc_id % 2 = 0 ORDER BY doc_id"""
   )
 }

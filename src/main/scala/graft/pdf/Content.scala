@@ -34,8 +34,6 @@ final class PdfContent(tk: PdfTokeniser, contentsDict: DictTok, fonts: collectio
     * reads the document builder once instead. Valid until the tokeniser's
     * buffers are reused for the next document. */
   def text: String = if (hasText) textSb.substring(textStart, textEndIdx) else null
-  /** Reference's `Text != null` check without materialising the String. */
-  def hasAnyText: Boolean = hasText
   val textFragments: mutable.ArrayBuffer[String] = mutable.ArrayBuffer.empty
   var exception: String = null
   var error: String = contentsDict.streamLengthProblem

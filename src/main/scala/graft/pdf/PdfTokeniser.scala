@@ -77,8 +77,6 @@ private[pdf] final class XRefTable(tk: PdfTokeniser) {
     tokens(id) = t
   }
 
-  def removeToken(id: ObjectId): Unit = tokens.remove(id)
-
   def apply(id: ObjectId): PdfTok =
     tokens.getOrElse(
       id,
@@ -1423,39 +1421,6 @@ final class PdfTokeniser(
     streamIdx = 0
   }
 
-  /** Raw/decoded stream access with the xref-miss full-file `n g obj` search
-    * (reference: Tokeniser.cs:1735-1775). */
-  def getStream(objectId: ObjectId): Option[(Option[DictTok], Array[Byte])] = {
-    tokenById(objectId) match {
-      case _: NullTok =>
-        val searchText = s"${objectId.objectNumber} ${objectId.generation} obj"
-        var searchIndex = 0
-        idx = 0
-        while (idx < bytes.length) {
-          if (bytes(idx) == searchText.charAt(searchIndex)) {
-            searchIndex += 1
-            if (searchIndex == searchText.length) {
-              idx += 1
-              xref.removeToken(objectId)
-              val dict = parseDictionary(Some(objectId))
-              xref.addToken(dict)
-              dict.loadStream()
-              return Some((None, streamBytesCopy()))
-            }
-          } else if (searchIndex != 0) searchIndex = 0
-          idx += 1
-        }
-        None
-      case dict: DictTok =>
-        if (dict.streamLengthProblem != null) Some((Some(dict), null))
-        else {
-          dict.loadStream()
-          Some((Some(dict), streamBytesCopy()))
-        }
-      case _ => None
-    }
-  }
-
   // ------------------------------------------------ content-stream cursor
 
   @inline private def sByte(i: Int): Byte = streamBuf(streamOff + i)
@@ -1477,8 +1442,6 @@ final class PdfTokeniser(
     }
     false // unreachable
   }
-
-  def skipStreamWhiteSpace(): Boolean = streamSkipWhiteSpace()
 
   /** Skip one operand: string/hex/name/number/bool (reference: Tokeniser.cs:1937-1990). */
   def skipStreamArgument(): Unit = {
@@ -1738,12 +1701,8 @@ final class PdfTokeniser(
   }
 
   /** Decode one shown string (literal or hex) through the font's 8-bit table
-    * (reference: Tokeniser.cs:2360-2472). */
-  def getStreamString(font: PdfFont): String =
-    getStreamStringScratch(font).toString
-
-  /** Allocation-light variant: decodes into the shared scratch builder and
-    * returns it as a CharSequence — valid only until the next tokeniser
+    * (reference: Tokeniser.cs:2360-2472) into the shared scratch builder and
+    * return it as a CharSequence — valid only until the next tokeniser
     * call. Appending `scratch` into a target StringBuilder copies chars
     * without materialising an intermediate String (hot path: one shown
     * string per show op on 10^12 docs). Decode errors throw BEFORE the

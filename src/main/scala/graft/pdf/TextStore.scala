@@ -27,7 +27,6 @@ final class TextStore(initialSize: Int = 1000) {
   private var starts = new Array[Int](math.max(2, initialSize / 40))
   private var byteOffsets = new Array[Int](math.max(2, initialSize / 40))
 
-  def charCount: Int = charsCount
   def linesCount: Int = lineCount
   def lineStarts(i: Int): Int = starts(i)
   def lineByteOffsets(i: Int): Int = byteOffsets(i)

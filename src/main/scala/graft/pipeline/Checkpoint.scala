@@ -4,7 +4,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import scala.jdk.CollectionConverters._
 
 /** Resumable runs with ATOMIC commits, modeling Iceberg snapshot semantics
@@ -37,11 +37,11 @@ import scala.jdk.CollectionConverters._
   * of the files it names) and the recorded totals, which roll up run
   * metrics without re-reading the output table. A manifest-only [[commit]]
   * has no data batch: it writes its urls as parquet files under its
-  * manifest directory, and its file list names them. A manifest written
-  * before the file list existed is a directory of parquet rows (url,
-  * n_chars, decode_failures, batch, and `file_name` or `part_id`); it
-  * stays readable, at the cost of one Spark job over such directories
-  * whenever they are resolved.
+  * manifest directory, and its file list names them. Resolving the
+  * manifests runs no Spark job. A `batch_` directory without a file list
+  * (the parquet-row manifests written before it) is not a committed
+  * manifest: it marks nothing done and its data batch stays invisible, so
+  * the next run re-extracts those urls once.
   */
 object Checkpoint {
 
@@ -68,15 +68,9 @@ object Checkpoint {
   /** One committed manifest. `dataBatch` is the `extracted/` directory it
     * publishes (None for a manifest-only commit); `files` are the full
     * paths of the `format` files that hold its urls; `stats` are the
-    * recorded totals (`pdfDocs` reads 0 for a parquet-row manifest, which
-    * did not record it). */
+    * recorded totals. */
   final case class Manifest(name: String, dataBatch: Option[String], format: String,
       files: Seq[String], stats: CommitStats)
-
-  /** Schema of parquet-row manifests, pruned to what is read of them. */
-  private val legacySchema = StructType(Seq(StructField("url", StringType),
-    StructField("n_chars", IntegerType), StructField("decode_failures", IntegerType),
-    StructField("batch", StringType)))
 
   /** Writes `rows` (`ExtractedDoc` columns) to `dir` in `format` after
     * `keep` projects them, in one job under one `observe` that counts
@@ -182,26 +176,28 @@ object Checkpoint {
   }
 
   /** The ONE listing predicate for committed manifest entries: `batch_`
-    * directories. Staging dirs are dot-prefixed and never listed, and
-    * neither is anything else under `_manifest/`. Every consumer
-    * ([[manifests]], [[snapshots]]) goes through here. */
+    * directories that hold a [[ManifestFile]]. Staging dirs are
+    * dot-prefixed and never listed, and neither is anything else under
+    * `_manifest/`. Every consumer ([[manifests]], [[snapshots]]) goes
+    * through here. */
   private def manifestStatuses(spark: SparkSession, outDir: String): Seq[FileStatus] = {
     val root = new Path(manifestPath(outDir))
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) Nil
     else fs.listStatus(root).toSeq.filter(s =>
-      s.isDirectory && s.getPath.getName.startsWith("batch_"))
+      s.isDirectory && s.getPath.getName.startsWith("batch_") &&
+        fs.exists(new Path(s.getPath, ManifestFile)))
   }
 
   /** The committed manifests, resolved on the driver from their file
-    * lists; no Spark job runs unless a parquet-row manifest is among them. */
+    * lists; no Spark job runs. */
   def manifests(spark: SparkSession, outDir: String): Seq[Manifest] =
     resolve(spark, outDir, manifestStatuses(spark, outDir))
 
   private def resolve(spark: SparkSession, outDir: String, dirs: Seq[FileStatus]): Seq[Manifest] = {
     val fs = fsOf(spark, outDir)
-    val (lists, legacy) = dirs.map(_.getPath).partition(d => fs.exists(new Path(d, ManifestFile)))
-    lists.map { dir =>
+    dirs.map { st =>
+      val dir = st.getPath
       val in = fs.open(new Path(dir, ManifestFile))
       val m = try json.readTree(in) finally in.close()
       val batch = Option(m.get("batch")).map(_.asText)
@@ -209,26 +205,8 @@ object Checkpoint {
       val files = m.get("files").elements.asScala.map(f => new Path(base, f.asText).toString).toSeq
       Manifest(dir.getName, batch, m.get("format").asText, files, CommitStats(m.get("docs").asLong,
         m.get("chars").asLong, m.get("decode_failures").asLong, m.get("pdf_docs").asLong))
-    } ++ resolveLegacy(spark, fs, legacy)
-  }
-
-  /** Parquet-row manifests: their own files hold the urls, and one
-    * aggregate over their rows gives each its data batch and totals. */
-  private def resolveLegacy(spark: SparkSession, fs: FileSystem, dirs: Seq[Path]): Seq[Manifest] =
-    if (dirs.isEmpty) Nil
-    else {
-      val rolled = spark.read.schema(legacySchema).parquet(dirs.map(_.toString): _*)
-        .groupBy(element_at(split(col("_metadata.file_path"), "/"), -2).as("dir"))
-        .agg(max("batch"), count(lit(1)),
-          coalesce(sum("n_chars"), lit(0L)), coalesce(sum("decode_failures"), lit(0L)))
-        .collect().map(r => r.getString(0) -> r).toMap
-      dirs.map { dir =>
-        val r = rolled.get(dir.getName)
-        Manifest(dir.getName, r.flatMap(r => Option(r.getString(1))).filter(_.nonEmpty), "parquet",
-          visibleFiles(fs, dir).map(new Path(dir, _).toString),
-          r.fold(CommitStats(0, 0, 0, 0))(r => CommitStats(r.getLong(2), r.getLong(3), r.getLong(4), 0)))
-      }
     }
+  }
 
   /** Rows of `pages` not yet present in any committed manifest. Left-anti on
     * `url`; the manifest side is small relative to the input and
@@ -247,8 +225,8 @@ object Checkpoint {
 
   /** Distinct urls of the committed manifests: the `url` column alone,
     * read with its schema given from the files they name. Every manifest's
-    * files fill their directory alone (a data batch, a manifest-only
-    * commit's `urls/`, a parquet-row manifest), so the scan is given those
+    * files fill their directory alone (a data batch or a manifest-only
+    * commit's `urls/`), so the scan is given those
     * directories: Spark lists more than 32 input paths with a Spark job,
     * which took about 500 ms for the 40 files of 10 batches at `local[4]`
     * on a 4-core machine, against 50 ms for their 10 directories. */

@@ -1017,76 +1017,6 @@ object Corpus {
     graft.sources.Warc.encode(recs, gzipPerRecord = docId % 3 == 0)
   }
 
-  /** Robots gate corpus: one robots.txt per document exercising every
-    * RFC 9309 feature the parser implements — a specific `graftbot` group
-    * (present only on EVEN doc_ids, so group-selection-vs-`*` is
-    * gate-visible), wildcard + `$`-anchored rules, longest-match-wins
-    * allow/disallow overlap, a decoy group, crawl-delay and a sitemap.
-    * Every per-arm outcome is a closed form of (doc_id, arm) the DuckDB
-    * oracle restates independently. */
-  def robotsForDoc(docId: Long): String = {
-    val specific =
-      if (docId % 2 == 0)
-        s"""User-agent: graftbot
-           |Allow: /doc/$docId/keep*
-           |Disallow: /doc/$docId/
-           |Disallow: /tmp/*.dat$$
-           |Crawl-delay: ${docId % 7 + 1}
-           |""".stripMargin
-      else ""
-    s"""# corpus policy $docId
-       |User-agent: otherbot
-       |Disallow: /
-       |
-       |$specific
-       |User-agent: *
-       |Disallow: /doc/
-       |Disallow: /blocked
-       |
-       |Sitemap: https://example.org/$docId/sitemap.xml
-       |""".stripMargin
-  }
-
-  /** Sitemap gate corpus: per document a sitemap exercising every parser
-    * feature as closed forms of (doc_id, idx) — even ids a `<urlset>` of
-    * (id%5+1) page URLs (escaped `&amp;` query strings on even idx, the
-    * entity-decode arm; `<lastmod>` on even idx), odd ids a 2-entry
-    * `<sitemapindex>`; ids %3==0 ride gzip transport, ids %4==0 carry a
-    * namespace prefix on every element. */
-  def sitemapForDoc(docId: Long): Array[Byte] = {
-    val pre = if (docId % 4 == 0) "sm:" else ""
-    def lastmod(idx: Long): String =
-      if (idx % 2 == 0)
-        f"<${pre}lastmod>2024-01-${(docId + idx) % 28 + 1}%02d</${pre}lastmod>"
-      else ""
-    val body =
-      if (docId % 2 == 0) {
-        val n = docId % 5 + 1
-        val urls = (0L until n).map { k =>
-          val q = if (k % 2 == 0) "?a=1&amp;b=2" else ""
-          s"<${pre}url><${pre}loc>$UrlPrefix$docId/p$k$q</${pre}loc>${lastmod(k)}</${pre}url>"
-        }.mkString("\n")
-        s"""<?xml version="1.0" encoding="UTF-8"?>
-           |<${pre}urlset xmlns${if (pre.isEmpty) "" else ":sm"}="http://www.sitemaps.org/schemas/sitemap/0.9">
-           |$urls
-           |</${pre}urlset>""".stripMargin
-      } else {
-        val maps = (0L until 2L).map { k =>
-          s"<${pre}sitemap><${pre}loc>https://example.org/$docId/s${k + 1}.xml.gz</${pre}loc>${lastmod(k)}</${pre}sitemap>"
-        }.mkString("\n")
-        s"""<${pre}sitemapindex xmlns${if (pre.isEmpty) "" else ":sm"}="http://www.sitemaps.org/schemas/sitemap/0.9">
-           |$maps
-           |</${pre}sitemapindex>""".stripMargin
-      }
-    val bytes = body.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    if (docId % 3 == 0) {
-      val out = new java.io.ByteArrayOutputStream()
-      val g = new java.util.zip.GZIPOutputStream(out)
-      g.write(bytes); g.close()
-      out.toByteArray
-    } else bytes
-  }
-
   /** Non-ASCII marker appended by [[htmlCharsetProbe]]: all three words
     * sit in ISO-8859-1's 0xA0–0xFF range (identical in windows-1252), so
     * a wrong decode cannot accidentally produce the expected text. */
@@ -1121,57 +1051,6 @@ object Corpus {
       case _ => withBom(page("").getBytes(UTF_16LE),
         Array(0xff.toByte, 0xfe.toByte))
     }
-  }
-
-  /** Feed gate corpus: one RSS 2.0 (even ids) or Atom 1.0 (odd ids) feed
-    * per document exercising every [[graft.sources.Feed]] rule — CDATA
-    * titles kept literal (the raw `&` inside proves no entity decoding in
-    * CDATA), entity-decoded plain titles and hrefs, Atom link selection by
-    * rel (feed-level and entry-level `rel="self"` decoys skipped,
-    * alternate and rel-less chosen), `pubDate` vs `published`-with-
-    * `updated`-fallback, a linkless entry that must vanish, and a
-    * missing-title/missing-date arm. Namespace-prefix arm on odd ids with
-    * id%5==1; gzip transport on id%3==0. Every surfaced field is a closed
-    * form of (doc_id, idx). */
-  def feedForDoc(docId: Long): Array[Byte] = {
-    val k = docId % 7
-    val body =
-      if (docId % 2 == 0)
-        s"""<?xml version="1.0" encoding="UTF-8"?>
-           |<rss version="2.0"><channel>
-           |<title>chan-$docId</title><link>https://news.example/chan</link>
-           |<item><link>https://news.example/r$docId/0</link><title><![CDATA[t&$k 0]]></title><pubDate>0${k + 1} Jan 2024 00:00:00 GMT</pubDate></item>
-           |<item><link>https://news.example/r$docId/1?a=1&amp;b=2</link><title>t&amp;$k 1</title></item>
-           |<item><title>linkless, must vanish</title></item>
-           |<item><link>https://news.example/r$docId/2</link></item>
-           |</channel></rss>""".stripMargin
-      else {
-        val p = if (docId % 5 == 1) "a:" else ""
-        s"""<?xml version="1.0" encoding="UTF-8"?>
-           |<${p}feed xmlns${if (p.isEmpty) "" else ":a"}="http://www.w3.org/2005/Atom">
-           |<${p}title>chan-$docId</${p}title><${p}link rel="self" href="https://news.example/feed.xml"/>
-           |<${p}entry><${p}link rel="self" href="https://news.example/self"/><${p}link rel="alternate" href="https://news.example/a$docId/0"/><${p}title><![CDATA[t&$k 0]]></${p}title><${p}published>2024-01-0${k + 1}T00:00:00Z</${p}published></${p}entry>
-           |<${p}entry><${p}link href="https://news.example/a$docId/1?x=1&amp;y=2"/><${p}title>t&amp;$k 1</${p}title><${p}updated>2024-02-01T00:00:00Z</${p}updated></${p}entry>
-           |<${p}entry><${p}title>linkless</${p}title></${p}entry>
-           |<${p}entry><${p}link href="https://news.example/a$docId/2"/></${p}entry>
-           |</${p}feed>""".stripMargin
-      }
-    val bytes = body.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    if (docId % 3 == 0) {
-      val out = new java.io.ByteArrayOutputStream()
-      val g = new java.util.zip.GZIPOutputStream(out)
-      g.write(bytes); g.close()
-      out.toByteArray
-    } else bytes
-  }
-
-  /** The five probe paths for [[robotsForDoc]], by arm. */
-  def robotsPathArm(docId: Long, arm: Int): String = arm match {
-    case 0 => s"/doc/$docId/keep/a"   // even: allow beats disallow (longer); odd: * group blocks /doc/
-    case 1 => s"/doc/$docId/x"        // blocked under both groups
-    case 2 => s"/tmp/$docId.dat"      // even: $-anchored block; odd: * group has no /tmp rule
-    case 3 => s"/tmp/$docId.dat?x=1"  // anchor mismatch: allowed under both
-    case _ => "/blocked"              // even: specific group shadows *; odd: blocked
   }
 
   /** Source char the Type0 gate writes as CID 0x0001, whose ToUnicode

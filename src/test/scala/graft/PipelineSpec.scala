@@ -295,7 +295,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("query inventory: every query has an oracle and the count is pinned") {
     // the README/NOTES quote this number; pinning it here keeps the prose
     // from drifting (r4 verdict item 7). Update BOTH on every new query.
-    assert(SparkEntry.queries.size == 31,
+    assert(SparkEntry.queries.size == 25,
       s"queries=${SparkEntry.queries.size} — update this pin AND README.md")
     assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet,
       "every query needs a DuckDB oracle (and no orphaned oracles): " +
@@ -321,27 +321,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(work == Set("u2", "u3", "u5"))
   }
 
-  test("Frontier.allowed: per-host policies, missing robots, null url, columns preserved") {
-    import spark.implicits._
-    val targets = Seq(
-      (1L, "https://a.com/private/x"), // a.com blocks /private/
-      (2L, "https://a.com/pub/x"),
-      (3L, "https://b.com/anything"),  // b.com has no robots.txt row
-      (4L, "https://A.COM/private/y"), // host matching is case-insensitive
-      (5L, null.asInstanceOf[String])  // null url: not fetchable
-    ).toDF("id", "url")
-    val robots = Seq(("a.com", "User-agent: *\nDisallow: /private/"))
-      .toDF("host", "robots_txt")
-    val out = graft.sources.Frontier.allowed(targets, "url", robots)
-    assert(out.columns.toSeq == Seq("id", "url", "allowed"))
-    val m = out.select("id", "allowed").as[(Long, Boolean)].collect().toMap
-    assert(m == Map(1L -> false, 2L -> true, 3L -> true, 4L -> false, 5L -> false))
-    // a duplicated robots host row must not duplicate frontier urls
-    val dup = Seq(("a.com", "User-agent: *\nDisallow: /private/"),
-      ("a.com", "User-agent: *\nDisallow: /private/")).toDF("host", "robots_txt")
-    assert(graft.sources.Frontier.allowed(targets, "url", dup).count() == 5)
-  }
-
   test("snapshot time travel: readExtractedAsOf sees exactly the batches committed by then") {
     import spark.implicits._
     val outDir = java.nio.file.Files.createTempDirectory("graft_spec_tt").toString
@@ -351,22 +330,12 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       Checkpoint.commitWithData(ExtractPipeline.run(pages(lo, hi)), outDir)
       Thread.sleep(20) // distinct manifest mtimes on a coarse-granularity fs
     }
-    // a batch committed before manifests carried `file_name`: its manifest
-    // holds the writing task's `part_id` instead
-    val old = "batch_partid"
-    val oldDocs = ExtractPipeline.run(pages(0, 3)).toDF()
-    oldDocs.write.parquet(s"${Checkpoint.dataPath(outDir)}/$old")
-    oldDocs.select(col("url"), col("n_chars"), col("decode_failures"),
-        spark_partition_id().as("part_id"), lit(old).as("batch"))
-      .write.parquet(s"${Checkpoint.manifestPath(outDir)}/$old")
-    Thread.sleep(20)
-    commitRange(3, 7); commitRange(7, 12)
+    commitRange(0, 3); commitRange(3, 7); commitRange(7, 12)
     // a manifest-ONLY commit (no data batch) must not break as-of reads
     val extra = Seq(Corpus.pageRowFor(100L, "manifest only doc", "en")).toDS()
     Checkpoint.commit(ExtractPipeline.run(extra), outDir)
     val snaps = Checkpoint.snapshots(spark, outDir)
     assert(snaps.length == 4)
-    assert(snaps.head.name == old)
     assert(snaps.map(_.commitMs).sliding(2).forall(p => p.head <= p.last))
     assert(Checkpoint.readExtractedAsOf(spark, outDir, snaps(0).commitMs).count() == 3)
     assert(Checkpoint.readExtractedAsOf(spark, outDir, snaps(1).commitMs).count() == 7)
@@ -376,7 +345,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // as-of the newest snapshot == the current table
     val table = Checkpoint.readExtracted(spark, outDir)
     assert(table.count() == 12 && table.select("url").distinct().count() == 12)
-    // the part_id manifest's urls are done like every other commit's
+    // every data commit's urls are done, the manifest-only commit's too
     assert(Checkpoint.resume(pages(0, 15).union(extra), outDir)
       .map(_.url).collect().toSet == (12L until 15L).map(Corpus.UrlPrefix + _).toSet)
     val m = Checkpoint.metrics(spark, outDir).collect().head
@@ -437,7 +406,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out.select("url").distinct().count() == 6, "duplicate urls from orphan leak")
   }
 
-  test("only batch_ directories are committed manifests: a flat manifest file marks nothing done") {
+  test("only batch_ directories holding manifest.json are committed manifests: a flat manifest file or a parquet-row batch marks nothing done") {
     import spark.implicits._
     val pages = (0L until 6L).map(i => Corpus.pageRowFor(i, s"flat manifest doc $i words", "en")).toDS()
     val outDir = java.nio.file.Files.createTempDirectory("graft_spec_flatman").toString
@@ -453,13 +422,25 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         fs.rename(new org.apache.hadoop.fs.Path(f.getPath),
           new org.apache.hadoop.fs.Path(s"${Checkpoint.manifestPath(outDir)}/${f.getName}"))
       }
+    // a batch_ directory of parquet manifest rows, as written before the
+    // file list, plus the data batch it names: without a manifest.json it
+    // commits nothing, so its data batch stays invisible too
+    val old = "batch_partid"
+    val oldDocs = ExtractPipeline.run(pages).toDF()
+    oldDocs.write.parquet(s"${Checkpoint.dataPath(outDir)}/$old")
+    oldDocs.select(col("url"), col("n_chars"), col("decode_failures"),
+        spark_partition_id().as("part_id"), lit(old).as("batch"))
+      .write.parquet(s"${Checkpoint.manifestPath(outDir)}/$old")
     assert(Checkpoint.snapshots(spark, outDir).isEmpty)
     assert(Checkpoint.resume(pages, outDir).count() == 6)
     assert(Checkpoint.readExtracted(spark, outDir).count() == 0)
-    // the first real commit is the only snapshot, and the flat file stays out
+    // the first real commit is the only snapshot, and the flat file and the
+    // parquet-row batch stay out: each url is visible exactly once
     Checkpoint.commitWithData(ExtractPipeline.run(pages), outDir)
     assert(Checkpoint.snapshots(spark, outDir).map(_.name.startsWith("batch_")) == Seq(true))
+    assert(!Checkpoint.snapshots(spark, outDir).exists(_.name == old))
     assert(Checkpoint.readExtracted(spark, outDir).count() == 6)
+    assert(Checkpoint.readExtracted(spark, outDir).select("url").distinct().count() == 6)
     assert(Checkpoint.metrics(spark, outDir).collect().head.getAs[Long]("docs_done") == 6)
   }
 
