@@ -14,12 +14,11 @@ import org.apache.spark.sql.functions._
   *
   * Three scaling numbers are reported, because on one box they measure
   * different things:
-  *  - `scaling.efficiency`      — the Spark metrics-rollup pipeline (scan +
-  *    parse + agg, no text materialization — the job a profiling run
-  *    actually executes). On shared hardware this is bounded by the single
-  *    memory bus all 32 threads contend for; on a real N→4N *executor*
-  *    scale-out each node brings its own memory system, so per-node
-  *    profiles transfer.
+  *  - `scaling.efficiency`      — the headline `extract_pipeline` job (scan +
+  *    full extraction + agg). On shared hardware this is bounded by the
+  *    single memory bus all 32 threads contend for; on a real N→4N
+  *    *executor* scale-out each node brings its own memory system, so
+  *    per-node profiles transfer.
   *  - `scaling.parse_efficiency` — the pure parse stack (no Spark) at the
   *    same two thread counts: the per-core compute that dominates at
   *    cluster scale.
@@ -91,22 +90,10 @@ object Bench {
   private[graft] def pagesOf(spark: SparkSession, dir: String): Dataset[PageRow] =
     spark.read.parquet(dir).as[PageRow](org.apache.spark.sql.Encoders.product[PageRow])
 
-  /** The headline job: full mixed extraction + metrics rollup. */
+  /** The headline job, also timed by the scaling tier: full mixed
+    * extraction + metrics rollup. */
   private def runExtract(pages: Dataset[PageRow]): Unit = {
     ExtractPipeline.run(pages, delimiter = "")
-      .groupBy("kind")
-      .agg(count(lit(1)), sum("n_chars"), sum("decode_failures"))
-      .collect()
-    ()
-  }
-
-  /** The scaling-tier job: same parse work, metrics-only output
-    * (`ExtractPipeline.runMetrics`) — no full-document text copy, no text
-    * column serialized into the agg that immediately drops it. This is the
-    * honest shape of a counting/profiling run; the full-text job stays the
-    * headline `extract_pipeline` entry. */
-  private[graft] def runMetricsJob(pages: Dataset[PageRow]): Unit = {
-    ExtractPipeline.runMetrics(pages)
       .groupBy("kind")
       .agg(count(lit(1)), sum("n_chars"), sum("decode_failures"))
       .collect()
@@ -206,28 +193,6 @@ object Bench {
     val docsDf = spark.read.parquet(s"$sfDir/documents.parquet")
     val queryThunks: Seq[(String, () => Unit)] = Seq(
       "extract_pipeline" -> (() => runExtract(pages)),
-      "warc_parse" -> (() => {
-        import spark.implicits._
-        docsDf.select("doc_id", "text").as[(Long, String)]
-          .mapPartitions { it =>
-            it.map { case (id, t) =>
-              val recs = graft.sources.Warc.records(new java.io.ByteArrayInputStream(
-                graft.pipeline.Corpus.warcForDoc(id, t)))
-              recs.count(_.isRight).toLong
-            }
-          }.agg(sum("value")).collect(); ()
-      }),
-      "wet_parse" -> (() => {
-        import spark.implicits._
-        docsDf.select("doc_id", "text").as[(Long, String)]
-          .mapPartitions { it =>
-            it.map { case (id, t) =>
-              graft.sources.Warc.records(new java.io.ByteArrayInputStream(
-                graft.pipeline.Corpus.wetForDoc(id, t)))
-                .count(r => r.isRight && r.toOption.get.warcType == "conversion").toLong
-            }
-          }.agg(sum("value")).collect(); ()
-      }),
       "crawl_delta" -> (() => {
         val url = concat(lit(Corpus.UrlPrefix), col("doc_id"))
         val prev = docsDf.select(url.as("url"), md5(col("text").cast("binary")).as("fp"))
@@ -236,9 +201,7 @@ object Bench {
             .otherwise(col("text")).cast("binary")).as("fp"))
         graft.pipeline.Recrawl.delta(prev, next, "url", "fp")
           .groupBy("status").count().collect(); ()
-      }),
-      // metrics-only throughput at full cores (the scaling-tier job)
-      "extract_metrics_only" -> (() => runMetricsJob(pages)))
+      }))
 
     val qNames = queryThunks.map(_._1)
     def onePass(): Map[String, Double] =
@@ -322,8 +285,8 @@ object Bench {
       preReadCorpus(dir)
       val s = session(cores)
       val p = pagesOf(s, dir)
-      runMetricsJob(p) // per-session codegen warm-up (JIT is already hot)
-      val t = meanOf3(runMetricsJob(p))
+      runExtract(p) // per-session codegen warm-up (JIT is already hot)
+      val t = meanOf3(runExtract(p))
       val scan = meanOf3(s.read.parquet(dir).agg(sum(length(col("html")))).collect())
       s.stop()
       (t, scan)
@@ -382,7 +345,7 @@ object Bench {
     val qs = results.map { case (k, v) => s""""$k":${f"$v%.3f"}""" }.mkString("{", ",", "}")
     val total = results.values.sum
     val scaling =
-      s"""{"cores_lo":$loCores,"cores_hi":$cpus,"job":"metrics_rollup",""" +
+      s"""{"cores_lo":$loCores,"cores_hi":$cpus,"job":"extract_pipeline",""" +
         s""""docs_per_sec_lo":${f"$thrLo%.1f"},"docs_per_sec_hi":${f"$thrHi%.1f"},"efficiency":${f"$eff%.3f"},""" +
         s""""scan_floor_sec_lo":${f"$tScanLo%.3f"},"scan_floor_sec_hi":${f"$tScanHi%.3f"},"compute_efficiency":${f"$computeEff%.3f"},""" +
         s""""rounds":$roundsJson,""" +
@@ -392,8 +355,8 @@ object Bench {
       s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qs,"sf":"$sfDir",""" +
         s""""bench_docs":$nDocs,"bench_mb":${f"$mb%.1f"},""" +
         // headline throughput = the FULL extraction job (text materialized),
-        // comparable across rounds; the scaling block's docs_per_sec_* are
-        // the metrics-rollup job (see scaling.job)
+        // comparable across rounds; the scaling block's docs_per_sec_* time
+        // the same job per scaling tier (see scaling.job)
         s""""extract_docs_per_sec":${f"${nDocs / results("extract_pipeline")}%.1f"},"extract_mb_per_sec":${f"${mb / results("extract_pipeline")}%.1f"},""" +
         s""""query_rounds":$queryRoundsJson,""" +
         s""""scaling":$scaling}""")

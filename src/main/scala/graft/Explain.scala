@@ -54,9 +54,6 @@ object Explain {
         ExtractPipeline.run(pagesTable, "").groupBy("kind")
           .agg(count(lit(1)), sum("n_chars")))
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      dump("extract_metrics_only (narrow row out of the map; ReadSchema still url/html/lang)",
-        ExtractPipeline.runMetrics(pagesTable).groupBy("kind")
-          .agg(count(lit(1)), sum("n_chars")))
       dump("pdf_spans (span explode is a Generate fused after the extract map — no extra exchange)", {
         import spark.implicits._
         val probe = docs.where(length(col("text")) > 0)
@@ -77,12 +74,16 @@ object Explain {
       tmpPath.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(tmpPath, true)
     }
     // scan locations name the random temp dir and this machine's data dir,
-    // and lambda names carry per-JVM ids; fixed placeholders keep an
+    // lambda names carry per-JVM ids, and Catalyst's expression and plan
+    // ids count up across the dumps of one run (so adding or removing a
+    // dump would renumber every later one); fixed placeholders keep an
     // unchanged plan byte-identical across runs
     val plans = sb.toString
       .replace(tmp, "<tmp>")
       .replace(new java.io.File(sfDir).getAbsolutePath, "<sfDir>")
       .replaceAll("""Lambda\$\d+/0x\p{XDigit}+@\p{XDigit}+""", "Lambda<id>")
+      .replaceAll("""#\d+""", "#<n>")
+      .replaceAll("""plan_id=\d+""", "plan_id=<n>")
     Files.writeString(Paths.get(outPath), plans)
     println(s"wrote $outPath")
     spark.stop()

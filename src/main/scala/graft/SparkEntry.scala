@@ -159,17 +159,6 @@ object SparkEntry {
           sum(col("decode_failures").cast("long")).as("total_failures"))
         .orderBy("lang")
     }),
-    "extract_metrics_fast" -> ((s, dir) =>
-      // the metrics-only path (runMetrics: captureText=false, narrow row) —
-      // gated independently of the full-text path so the two can never
-      // silently diverge
-      ExtractPipeline.runMetrics(Corpus.pagesCached(s, dir)).toDF()
-        .groupBy("kind")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars").cast("long")).as("total_chars"),
-          sum(col("pages").cast("long")).as("total_pages"),
-          sum(col("decode_failures").cast("long")).as("total_failures"))
-        .orderBy("kind")),
     "resume_after_checkpoint" -> ((s, dir) => {
       import org.apache.spark.sql.SaveMode
       val pages = Corpus.pagesCached(s, dir)
@@ -312,57 +301,6 @@ object SparkEntry {
             (id, r.text, r.decodeFailures.toLong)
           }
         }.toDF("doc_id", "text", "failures")
-        .orderBy("doc_id")
-    }),
-    "warc_roundtrip" -> ((s, dir) => {
-      // the WARC source (ISO 28500 — the on-disk format upstream of the
-      // page table): per document a 3-record crawl file (warcinfo/request/
-      // response, gzip-per-record member layout on even doc_ids) is parsed
-      // streaming; only the response's HTTP body may surface, headers
-      // stripped, URL/date/record counts all closed forms of doc_id
-      import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "text").as[(Long, String)]
-        .mapPartitions { it =>
-          it.map { case (id, t) =>
-            val recs = graft.sources.Warc.records(
-              new java.io.ByteArrayInputStream(Corpus.warcForDoc(id, t))).toVector
-            val nErrors = recs.count(_.isLeft).toLong
-            val good = recs.collect { case Right(r) => r }
-            val resp = good.filter(_.warcType == "response")
-            val (url, date, body) = resp.headOption.map { r =>
-              val (_, b) = graft.sources.Warc.httpSplit(r.payload)
-              (r.targetUri, r.date,
-                new String(b, java.nio.charset.StandardCharsets.UTF_8))
-            }.getOrElse(("", "", ""))
-            (id, good.size.toLong, nErrors, url, date, body)
-          }
-        }.toDF("doc_id", "n_records", "n_errors", "url", "warc_date", "text")
-        .orderBy("doc_id")
-    }),
-    "wet_roundtrip" -> ((s, dir) => {
-      // the WET sidecar format (Common Crawl's pre-extracted text): only
-      // the conversion record's UTF-8 payload may surface — the warcinfo
-      // and the planted DECOY response (an HTTP body masquerading as text)
-      // must be skipped; url/date/text closed forms of doc_id, gzip-member
-      // transport on ids%3==0
-      import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "text").as[(Long, String)]
-        .mapPartitions { it =>
-          it.map { case (id, t) =>
-            val recs = graft.sources.Warc.records(
-              new java.io.ByteArrayInputStream(Corpus.wetForDoc(id, t))).toVector
-            val conv = recs.collect {
-              case Right(r) if r.warcType == "conversion" => r
-            }
-            val (url, date, text) = conv.headOption.map { r =>
-              (r.targetUri, r.date,
-                new String(r.payload, java.nio.charset.StandardCharsets.UTF_8))
-            }.getOrElse(("", "", ""))
-            (id, recs.count(_.isRight).toLong, conv.size.toLong, url, date, text)
-          }
-        }.toDF("doc_id", "n_records", "n_conversion", "url", "wet_date", "text")
         .orderBy("doc_id")
     }),
     "pdf_extract_type0" -> ((s, dir) => {
@@ -624,13 +562,6 @@ object SparkEntry {
          CAST(sum(length(text) + $pdfExtraCharsSql) AS BIGINT) AS total_chars,
          CAST(0 AS BIGINT) AS total_failures
          FROM documents GROUP BY lang ORDER BY lang""",
-    "extract_metrics_fast" ->
-      s"""SELECT CASE WHEN doc_id % 2 = 0 THEN 'pdf' ELSE 'html' END AS kind,
-         count(*) AS n_docs,
-         CAST(sum(length(text) + $pdfExtraCharsSql) AS BIGINT) AS total_chars,
-         CAST(sum(CASE WHEN doc_id % 2 = 0 THEN ((length(text)+63)//64 + 7)//8 ELSE 1 END) AS BIGINT) AS total_pages,
-         CAST(0 AS BIGINT) AS total_failures
-         FROM documents GROUP BY 1 ORDER BY kind""",
     "resume_after_checkpoint" ->
       s"""SELECT doc_id, CAST(length(text) + $pdfExtraCharsSql AS BIGINT) AS n_chars
           FROM documents WHERE doc_id % 7 <> 0 ORDER BY doc_id""",
@@ -675,24 +606,6 @@ object SparkEntry {
     "pdf_extract_hybrid_xref" ->
       """SELECT doc_id, text, CAST(0 AS BIGINT) AS failures
          FROM documents WHERE doc_id % 2 = 0 ORDER BY doc_id""",
-    // every column is a closed form of doc_id/text — the builder and the
-    // reader are independent of this restatement
-    "warc_roundtrip" ->
-      """SELECT doc_id, CAST(3 AS BIGINT) AS n_records,
-                CAST(0 AS BIGINT) AS n_errors,
-                'https://example.org/doc/' || doc_id AS url,
-                strftime(TIMESTAMP '2024-01-01 00:00:00' + doc_id * INTERVAL 1 MINUTE,
-                         '%Y-%m-%dT%H:%M:%SZ') AS warc_date,
-                text
-         FROM documents ORDER BY doc_id""",
-    "wet_roundtrip" ->
-      """SELECT doc_id, CAST(3 AS BIGINT) AS n_records,
-                CAST(1 AS BIGINT) AS n_conversion,
-                'https://example.org/doc/' || doc_id AS url,
-                strftime(TIMESTAMP '2024-01-01 00:00:00' + doc_id * INTERVAL 1 MINUTE,
-                         '%Y-%m-%dT%H:%M:%SZ') AS wet_date,
-                text || ' ¶wet-' || (doc_id % 9) AS text
-         FROM documents ORDER BY doc_id""",
     // Corpus.type0ExpectedText: 'e' → "ff" (multi-char bfchar), 't' → U+1F600
     // (surrogate-pair bfchar); everything else round-trips through the
     // bfrange / Identity passthrough

@@ -14,9 +14,7 @@ final case class TextSpan(start: Int, end: Int, srcOffset: Int, kind: String, sr
 /** Document-level extraction result. `text` is the byte-identical surface:
   * pages in tree order → contents in array order → each content's assembled
   * text (reference: PdfParser/PdfContent.cs:186, browser concatenation).
-  * `nChars` always carries the assembled length — under
-  * `captureText = false` (metrics-only jobs) `text` stays empty and the
-  * full-document String copy is skipped entirely. */
+  * `nChars` equals `text.length`. */
 final case class ExtractResult(
     text: String,
     nChars: Int,
@@ -63,10 +61,7 @@ object PdfExtract {
       /** Compute each span's 1-based source line ([[TextStore]] semantics);
         * costs one extra pass + char buffer over the document bytes, so the
         * bulk pipeline leaves it off. */
-      captureLines: Boolean = false,
-      /** `false` = metrics-only: skip the final full-document text copy
-        * (`nChars` still reports the assembled length). */
-      captureText: Boolean = true): ExtractResult = {
+      captureLines: Boolean = false): ExtractResult = {
     val tk = new PdfTokeniser(bytes, password, contentDelimiter, buffers, captureFragments,
       extendedFilters)
     try {
@@ -112,7 +107,7 @@ object PdfExtract {
       }
 
       ExtractResult(
-        text = if (captureText) tk.docText.toString else "",
+        text = tk.docText.toString,
         nChars = tk.docText.length,
         fragments = fragments.toSeq,
         spans = spans.toSeq,

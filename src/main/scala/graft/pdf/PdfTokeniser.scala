@@ -129,10 +129,6 @@ final class PdfTokeniser(
   private[pdf] var bytes: Array[Byte] = pdfBytes
   private[pdf] var idx: Int = 0
 
-  /** The original file bytes regardless of any object-stream swap — the
-    * viewer annotator ([[PdfToTextStore]]) walks the file itself. */
-  private[pdf] def originalBytes: Array[Byte] = pdfBytes
-
   private[pdf] val sb: StringBuilder = buffers.sb
 
   /** Per-document view of the reused document-text buffer (reset here, once,

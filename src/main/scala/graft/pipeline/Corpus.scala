@@ -971,52 +971,6 @@ object Corpus {
     b.currentBytes
   }
 
-  /** WARC gate corpus: a 3-record crawl file per document (warcinfo +
-    * request + response — only the response must surface as a page), the
-    * response body wrapped in real HTTP/1.1 headers that the reader must
-    * strip, and the whole file gzip-per-record (the Common-Crawl member
-    * layout) on even doc_ids so both transport arms are gate-visible. URL
-    * and WARC-Date are the same closed forms the page corpus uses, so the
-    * oracle reproduces every column from doc_id alone. */
-  def warcForDoc(docId: Long, text: String): Array[Byte] = {
-    val url = UrlPrefix + docId
-    val date = Instant.parse("2024-01-01T00:00:00Z").plusSeconds(docId * 60).toString
-    val recs = Seq(
-      (Seq("WARC-Type" -> "warcinfo", "WARC-Date" -> date,
-        "WARC-Record-ID" -> s"<urn:uuid:info-$docId>"),
-        "software: graft-fixture\r\n".getBytes(ISO_8859_1)),
-      (Seq("WARC-Type" -> "request", "WARC-Target-URI" -> url, "WARC-Date" -> date,
-        "WARC-Record-ID" -> s"<urn:uuid:req-$docId>"),
-        s"GET /doc/$docId HTTP/1.1\r\nHost: example.org\r\n\r\n".getBytes(ISO_8859_1)),
-      (Seq("WARC-Type" -> "response", "WARC-Target-URI" -> url, "WARC-Date" -> date,
-        "WARC-Record-ID" -> s"<urn:uuid:resp-$docId>"),
-        graft.sources.Warc.httpResponse(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))))
-    graft.sources.Warc.encode(recs, gzipPerRecord = docId % 2 == 0)
-  }
-
-  /** WET gate corpus: a warcinfo record, the `conversion` record carrying
-    * the extracted text (UTF-8, with a non-ASCII marker so the charset arm
-    * is hash-visible), and a DECOY `response` record whose HTTP body must
-    * never surface through a WET reader. Gzip-member layout on ids%3==0. */
-  def wetForDoc(docId: Long, text: String): Array[Byte] = {
-    val url = UrlPrefix + docId
-    val date = Instant.parse("2024-01-01T00:00:00Z").plusSeconds(docId * 60).toString
-    val wetText = text + " ¶wet-" + (docId % 9)
-    val recs = Seq(
-      (Seq("WARC-Type" -> "warcinfo", "WARC-Date" -> date,
-        "WARC-Record-ID" -> s"<urn:uuid:wetinfo-$docId>"),
-        "software: graft-wet-fixture\r\n".getBytes(ISO_8859_1)),
-      (Seq("WARC-Type" -> "conversion", "WARC-Target-URI" -> url,
-        "WARC-Date" -> date, "WARC-Refers-To" -> s"<urn:uuid:resp-$docId>",
-        "WARC-Record-ID" -> s"<urn:uuid:conv-$docId>",
-        "Content-Type" -> "text/plain"),
-        wetText.getBytes(UTF_8)),
-      (Seq("WARC-Type" -> "response", "WARC-Target-URI" -> url, "WARC-Date" -> date,
-        "WARC-Record-ID" -> s"<urn:uuid:decoy-$docId>"),
-        graft.sources.Warc.httpResponse("decoy html".getBytes(UTF_8))))
-    graft.sources.Warc.encode(recs, gzipPerRecord = docId % 3 == 0)
-  }
-
   /** Non-ASCII marker appended by [[htmlCharsetProbe]]: all three words
     * sit in ISO-8859-1's 0xA0–0xFF range (identical in windows-1252), so
     * a wrong decode cannot accidentally produce the expected text. */

@@ -34,23 +34,19 @@ import org.apache.spark.sql.functions._
 object ExtractPipeline {
 
   /** Pure per-row extraction — also usable outside Spark; the ONE place
-    * payload routing and error capture live (the full-text and metrics-only
-    * paths both call it, so they cannot diverge). `captureLines` adds each
+    * payload routing and error capture live. `captureLines` adds each
     * PDF span's 1-based source line (TextStore semantics) at the cost of one
-    * extra pass over the document bytes; off in the bulk path.
-    * `captureText = false` skips the PDF path's full-document text copy and
-    * empties `text` (n_chars still reports the assembled length). */
+    * extra pass over the document bytes; off in the bulk path. */
   def extractOne(url: String, payload: Array[Byte], lang: String,
       delimiter: String, buffers: WorkBuffers,
-      captureLines: Boolean = false, captureText: Boolean = true): ExtractedDoc = {
+      captureLines: Boolean = false): ExtractedDoc = {
     val nBytes = if (payload == null) 0L else payload.length.toLong
     if (payload == null || payload.isEmpty) {
       ExtractedDoc(url, "empty", "", "", Nil, 0, 0, 1, "empty payload", lang, nBytes)
     } else if (PdfExtract.isPdf(payload)) {
       // fragments are a debugging surface; the bulk pipeline skips the copy
       val r = PdfExtract.extract(payload, contentDelimiter = delimiter,
-        buffers = buffers, captureFragments = false, captureLines = captureLines,
-        captureText = captureText)
+        buffers = buffers, captureFragments = false, captureLines = captureLines)
       ExtractedDoc(url, "pdf", r.text, "",
         r.spans.map(s => SpanRow(s.start, s.end, s.srcOffset, s.kind, s.srcLine)),
         r.pages, r.nChars, r.decodeFailures, r.error.getOrElse(""), lang, nBytes)
@@ -59,7 +55,7 @@ object ExtractPipeline {
         val html = Boilerplate.decode(payload)
         val r = Boilerplate.extract(html)
         val nls = if (captureLines) Boilerplate.newlinePositions(html) else null
-        ExtractedDoc(url, "html", if (captureText) r.text else "", r.title,
+        ExtractedDoc(url, "html", r.text, r.title,
           r.spans.map(s => SpanRow(s.start, s.end, s.srcOffset, s.kind,
             if (nls != null) Boilerplate.lineOf(nls, s.srcOffset) else -1)),
           1, r.text.length, 0, "", lang, nBytes)
@@ -116,30 +112,5 @@ object ExtractPipeline {
       n += ParquetFileReader.readFooter(file, ParquetMetadataConverter.NO_FILTER).getBlocks.size
     }
     n
-  }
-
-  /** Metrics-only extraction: the full parse runs but (a) the PDF path
-    * skips the final full-document text copy (`captureText = false` —
-    * lengths come from the shared builder) and (b) the output row carries
-    * no text/spans, so nothing wide is serialized between the map and the
-    * downstream agg. This is the job shape for counting/profiling runs
-    * (tokens, decode failures, corpus stats) where the extracted text is
-    * never stored — at 100 TB the difference is the text column's worth of
-    * row-serialization plus the per-doc copy, with zero change to what is
-    * parsed. */
-  def runMetrics(pages: Dataset[PageRow], delimiter: String = ""): Dataset[ExtractMetricsRow] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages
-      .select(col("url"), col("html"), col("lang"))
-      .as[ExtractInput]
-      .mapPartitions { it =>
-        val buffers = new WorkBuffers()
-        it.map { r =>
-          // the SAME routing/error capture as run() — see extractOne
-          val d = extractOne(r.url, r.html, r.lang, delimiter, buffers, captureText = false)
-          ExtractMetricsRow(d.url, d.kind, d.pages, d.n_chars, d.decode_failures, d.lang, d.html_bytes)
-        }
-      }
   }
 }

@@ -29,17 +29,6 @@ final case class ExtractInput(url: String, html: Array[Byte], lang: String)
   * document bytes). */
 final case class SpanRow(start: Int, end: Int, src_offset: Int, kind: String, src_line: Int = -1)
 
-/** Narrow output row of [[ExtractPipeline.runMetrics]]: everything the
-  * metrics rollups need, nothing wide — no text, no spans. */
-final case class ExtractMetricsRow(
-    url: String,
-    kind: String,
-    pages: Int,
-    n_chars: Int,
-    decode_failures: Int,
-    lang: String,
-    n_bytes: Long)
-
 /** Output row of the extraction pipeline. Errors are captured per row, never
   * thrown — one malformed document must not fail a 10^12-row job
   * (reference: PdfPage.cs:70-81, PdfContent.cs:191-202). */

@@ -74,21 +74,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       == Corpus.pdfExpectedText(42L, t))
   }
 
-  test("runMetrics agrees with run on kind/pages/chars/failures across all variants and delimiters") {
-    import spark.implicits._
-    val long = ("metrics parity corpus with plenty of words to span pages " * 12).trim
-    val pages = (0L until 20L).map(i => Corpus.pageRowFor(i, long, "en")).toDS()
-    def key(url: String, kind: String, pages: Int, chars: Int, fails: Int) =
-      url -> ((kind, pages, chars, fails))
-    for (delim <- Seq("", "|")) {
-      val full = ExtractPipeline.run(pages, delimiter = delim).collect()
-        .map(d => key(d.url, d.kind, d.pages, d.n_chars, d.decode_failures)).toMap
-      val metrics = ExtractPipeline.runMetrics(pages, delimiter = delim).collect()
-        .map(d => key(d.url, d.kind, d.pages, d.n_chars, d.decode_failures)).toMap
-      assert(metrics == full, s"delimiter '$delim'")
-    }
-  }
-
   test("malformed payload becomes an error row, not an exception") {
     import spark.implicits._
     val junk = "%PDF-1.4 this is not really a pdf".getBytes("ISO-8859-1")
@@ -295,7 +280,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("query inventory: every query has an oracle and the count is pinned") {
     // the README/NOTES quote this number; pinning it here keeps the prose
     // from drifting (r4 verdict item 7). Update BOTH on every new query.
-    assert(SparkEntry.queries.size == 25,
+    assert(SparkEntry.queries.size == 22,
       s"queries=${SparkEntry.queries.size} — update this pin AND README.md")
     assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet,
       "every query needs a DuckDB oracle (and no orphaned oracles): " +
