@@ -30,8 +30,6 @@ object Explain {
         |  when the table has a row group per core — a fresh submit is one
         |  scan → extract → write stage (a table with fewer row groups is
         |  hash-spread first; pinned by MainSpec)
-        |- blocklist: both joins BroadcastHashJoin (semi + anti); the page
-        |  table is never exchanged
         |""".stripMargin)
     def dump(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
       sb.append(s"\n## $name\n\n```\n")

@@ -215,165 +215,6 @@ object SparkEntry {
         }.toDF("doc_id", "pdf_version", "info", "n_pages", "metadata", "document_id")
         .orderBy("doc_id")
     }),
-    "pdf_extract_extended" -> ((s, dir) => {
-      // the opt-in extended filter surface (LZW / ASCIIHex / ASCII85 /
-      // ASCII85+Flate chain) — extraction with extendedFilters = true over
-      // payloads the DEFAULT reference mode refuses (it supports only None
-      // and FlateDecode); same chunk contract as variant 0, so the oracle
-      // is the raw text
-      import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "text").as[(Long, String)]
-        .filter(_._1 % 2 == 0)
-        .mapPartitions { it =>
-          val buffers = new graft.pdf.WorkBuffers()
-          it.map { case (id, t) =>
-            val r = graft.pdf.PdfExtract.extract(Corpus.pdfExtendedForDoc(id, t),
-              contentDelimiter = "", buffers = buffers, captureFragments = false,
-              extendedFilters = true)
-            (id, r.text, r.decodeFailures.toLong)
-          }
-        }.toDF("doc_id", "text", "failures")
-        .orderBy("doc_id")
-    }),
-    "pdf_extract_predictors" -> ((s, dir) => {
-      // the opt-in full predictor surface (PNG per-row None/Sub/Up/Average/
-      // Paeth under Predictor 15, TIFF Predictor 2, Predictor 1) — variant-4
-      // xref-STREAM docs whose cross-reference rows the DEFAULT reference
-      // mode refuses (Token.cs:652-668 accepts only Predictor 12 + all-Up
-      // rows); the page graph lives behind that xref stream, so a predictor
-      // bug loses the whole document, and the chunk contract is variant 4's
-      // (plain text), so the oracle is the raw text
-      import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "text").as[(Long, String)]
-        .filter(_._1 % 2 == 0)
-        .mapPartitions { it =>
-          val buffers = new graft.pdf.WorkBuffers()
-          it.map { case (id, t) =>
-            val r = graft.pdf.PdfExtract.extract(Corpus.pdfPredictorForDoc(id, t),
-              contentDelimiter = "", buffers = buffers, captureFragments = false,
-              extendedFilters = true)
-            (id, r.text, r.decodeFailures.toLong)
-          }
-        }.toDF("doc_id", "text", "failures")
-        .orderBy("doc_id")
-    }),
-    "pdf_extract_hybrid_xref" -> ((s, dir) => {
-      // HYBRID-reference files (ISO 32000-1 §7.5.8.4): the classic table
-      // hides the whole page graph behind free entries; only the trailer's
-      // /XRefStm supplement (followed under extendedFilters) can resolve
-      // the catalog, so a resurrect bug loses every document here. Same
-      // chunk contract as variant 0 -> the oracle is the raw text. Default
-      // mode keeps the reference's ignore-the-key error surface
-      // (unit-pinned in PdfExtractSpec).
-      import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "text").as[(Long, String)]
-        .filter(_._1 % 2 == 0)
-        .mapPartitions { it =>
-          val buffers = new graft.pdf.WorkBuffers()
-          it.map { case (id, t) =>
-            val r = graft.pdf.PdfExtract.extract(Corpus.pdfHybridForDoc(id, t),
-              contentDelimiter = "", buffers = buffers, captureFragments = false,
-              extendedFilters = true)
-            (id, r.text, r.decodeFailures.toLong)
-          }
-        }.toDF("doc_id", "text", "failures")
-        .orderBy("doc_id")
-    }),
-    "pdf_extract_extended_aes" -> ((s, dir) => {
-      // REAL AES-128-CBC decryption (V4/R4 AESV2 crypt filter) under the
-      // opt-in extended mode — the one beyond-reference PDF capability that
-      // previously had only fixture tests; same chunk contract as variant 0,
-      // so the oracle is the raw text (reference throw surface for V>2:
-      // Tokeniser.cs:635-645 — default mode replicates it, unit-tested)
-      import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "text").as[(Long, String)]
-        .filter(_._1 % 2 == 0)
-        .mapPartitions { it =>
-          val buffers = new graft.pdf.WorkBuffers()
-          it.map { case (id, t) =>
-            val r = graft.pdf.PdfExtract.extract(Corpus.pdfAesForDoc(id, t),
-              contentDelimiter = "", buffers = buffers, captureFragments = false,
-              extendedFilters = true)
-            (id, r.text, r.decodeFailures.toLong)
-          }
-        }.toDF("doc_id", "text", "failures")
-        .orderBy("doc_id")
-    }),
-    "pdf_extract_type0" -> ((s, dir) => {
-      // Type0/Identity-H composite fonts (EXTENSION, opt-in extended mode):
-      // 2-byte CIDs decoded through the FULL ToUnicode CMap — multi-char
-      // destinations kept verbatim, surrogate-pair (non-BMP) destinations,
-      // 4-hex-digit bfranges above 0xFF, and Identity passthrough for
-      // unmapped CIDs. The reference parses these CMaps but never consults
-      // entries above 0xFF (PdfFont.cs:40 written, never read), so
-      // real-world Identity-H text is unreadable to it — default mode
-      // replicates that surface (unit-pinned); the oracle is
-      // Corpus.type0ExpectedText in SQL
-      import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "text").as[(Long, String)]
-        .filter(_._1 % 2 == 0)
-        .mapPartitions { it =>
-          val buffers = new graft.pdf.WorkBuffers()
-          it.map { case (id, t) =>
-            val r = graft.pdf.PdfExtract.extract(Corpus.pdfType0ForDoc(id, t),
-              contentDelimiter = "", buffers = buffers, captureFragments = false,
-              extendedFilters = true)
-            (id, r.text, r.decodeFailures.toLong)
-          }
-        }.toDF("doc_id", "text", "failures")
-        .orderBy("doc_id")
-    }),
-    "pdf_extract_aes256" -> ((s, dir) => {
-      // AES-256 decryption (V5/AESV3, ISO 32000-2) under the opt-in
-      // extended mode — docs rotate the R6 hardened Algorithm-2.B hash, the
-      // deprecated R5 single-SHA-256 precursor, and R6 with
-      // /EncryptMetadata false; every doc carries a /Perms capsule the
-      // reader validates against the recovered file key (Algorithm 13).
-      // Same chunk contract as variant 0, so the oracle is the raw text.
-      import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "text").as[(Long, String)]
-        .filter(_._1 % 2 == 0)
-        .mapPartitions { it =>
-          val buffers = new graft.pdf.WorkBuffers()
-          it.map { case (id, t) =>
-            val r = graft.pdf.PdfExtract.extract(Corpus.pdfAes256ForDoc(id, t),
-              contentDelimiter = "", buffers = buffers, captureFragments = false,
-              extendedFilters = true)
-            (id, r.text, r.decodeFailures.toLong)
-          }
-        }.toDF("doc_id", "text", "failures")
-        .orderBy("doc_id")
-    }),
-    "pdf_owner_password_extended" -> ((s, dir) => {
-      // Algorithm 7 owner-password decryption (EXTENSION, opt-in extended
-      // mode — default mode keeps the reference's NotImplementedException
-      // verbatim, gated by pdf_owner_password_error): the owner-only
-      // documents EXTRACT with the owner password; docs rotate through the
-      // R2 single-pass inversion, the R3 20-key-chain inversion, the
-      // AESV2-R4 composition (RC4 /O inversion feeding the AES cipher
-      // path), and the AES-256-R6 Algorithm-12 /OE unwrap
-      import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "text").as[(Long, String)]
-        .filter(_._1 % 2 == 0)
-        .mapPartitions { it =>
-          val buffers = new graft.pdf.WorkBuffers()
-          it.map { case (id, t) =>
-            val r = graft.pdf.PdfExtract.extract(Corpus.pdfOwnerOnlyForDoc(id, t),
-              password = Corpus.OwnerPassword,
-              contentDelimiter = "", buffers = buffers, captureFragments = false,
-              extendedFilters = true)
-            (id, r.text, r.decodeFailures.toLong)
-          }
-        }.toDF("doc_id", "text", "failures")
-        .orderBy("doc_id")
-    }),
     "pdf_owner_password_error" -> ((s, dir) => {
       // owner-password-only documents: user auth fails with the empty
       // password, the reader reaches the reference's unimplemented
@@ -594,31 +435,6 @@ object SparkEntry {
           CASE WHEN doc_id % 2 = 0 THEN 'pdf' ELSE 'html' END AS kind,
           CASE WHEN doc_id % 2 = 0 THEN $pdfExpectedSql ELSE text END AS text
           FROM d ORDER BY doc_id""",
-    "pdf_extract_extended" ->
-      """SELECT doc_id, text, CAST(0 AS BIGINT) AS failures
-         FROM documents WHERE doc_id % 2 = 0 ORDER BY doc_id""",
-    "pdf_extract_predictors" ->
-      """SELECT doc_id, text, CAST(0 AS BIGINT) AS failures
-         FROM documents WHERE doc_id % 2 = 0 ORDER BY doc_id""",
-    "pdf_extract_extended_aes" ->
-      """SELECT doc_id, text, CAST(0 AS BIGINT) AS failures
-         FROM documents WHERE doc_id % 2 = 0 ORDER BY doc_id""",
-    "pdf_extract_hybrid_xref" ->
-      """SELECT doc_id, text, CAST(0 AS BIGINT) AS failures
-         FROM documents WHERE doc_id % 2 = 0 ORDER BY doc_id""",
-    // Corpus.type0ExpectedText: 'e' → "ff" (multi-char bfchar), 't' → U+1F600
-    // (surrogate-pair bfchar); everything else round-trips through the
-    // bfrange / Identity passthrough
-    "pdf_extract_type0" ->
-      """SELECT doc_id, replace(replace(text, 'e', 'ff'), 't', chr(128512)) AS text,
-           CAST(0 AS BIGINT) AS failures
-         FROM documents WHERE doc_id % 2 = 0 ORDER BY doc_id""",
-    "pdf_extract_aes256" ->
-      """SELECT doc_id, text, CAST(0 AS BIGINT) AS failures
-         FROM documents WHERE doc_id % 2 = 0 ORDER BY doc_id""",
-    "pdf_owner_password_extended" ->
-      """SELECT doc_id, text, CAST(0 AS BIGINT) AS failures
-         FROM documents WHERE doc_id % 2 = 0 ORDER BY doc_id""",
     "pdf_owner_password_error" ->
       """SELECT doc_id,
            'UnsupportedOperationException: owner-password authentication is not implemented' AS error,

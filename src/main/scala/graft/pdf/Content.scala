@@ -158,7 +158,7 @@ final class PdfPage(tk: PdfTokeniser, pageToken: DictTok) {
           val fontToken = fontsDict(fontName)
           fontToken.pdfObject match {
             case f: PdfFont => fonts(fontName) = f
-            case _          => fonts(fontName) = new PdfFont(tk, fontToken)
+            case _          => fonts(fontName) = new PdfFont(fontToken)
           }
         }
       }

@@ -32,7 +32,7 @@ object PdfFontType extends Enumeration {
   *  - the local shadowing bug leaves the `EncodingName` field null
   *    (PdfFont.cs:101).
   */
-final class PdfFont(tk: PdfTokeniser, token: PdfTok) {
+final class PdfFont(token: PdfTok) {
   val objectId: Option[ObjectId] = token.objectId
   var fontType: PdfFontType.Value = PdfFontType.None0
   var baseFont: String = null
@@ -42,22 +42,7 @@ final class PdfFont(tk: PdfTokeniser, token: PdfTok) {
   var toUnicodeHeader: String = null
   var fontDescriptor: PdfTok = null
   var cMap: mutable.TreeMap[Int, Char] = null
-  /** EXTENSION (extended mode, Type0 fonts only): full CID → text map from
-    * the ToUnicode CMap — 4-hex-digit source CIDs, arbitrary-length UTF-16BE
-    * destinations kept verbatim (no ligature packing). The reference parses
-    * ToUnicode into `CMap` but never consults entries above 0xFF during
-    * content decoding (PdfFont.cs:40 is written, never read;
-    * Tokeniser.cs:2464-2472 maps single BYTES through Encoding8Bit), so
-    * composite Identity-H fonts — what every modern PDF writer emits —
-    * extract garbage in default mode. */
-  var cidToText: mutable.TreeMap[Int, String] = null
   var exception: String = null
-
-  /** True when extended-mode content decoding must read 2-BYTE codes and map
-    * them through [[cidToText]] (Identity passthrough for unmapped CIDs):
-    * a Type0 font with an Identity-H/V encoding under `extendedFilters`. */
-  def isCidKeyed: Boolean =
-    tk.extendedFilters && fontType == PdfFontType.Type0 && isIdentity
 
   token.pdfObject = this
 
@@ -103,20 +88,9 @@ final class PdfFont(tk: PdfTokeniser, token: PdfTok) {
     }
 
     dict.get("FontDescriptor").foreach(fontDescriptor = _)
-    dict.getDictionary("ToUnicode") match {
-      case Some(toUnicodeStream) =>
-        if (isCidKeyed) {
-          // EXTENSION: composite Identity fonts get the full-CID parse; the
-          // 8-bit table is never consulted for them (see isCidKeyed). A
-          // Type0 font with a predefined (non-Identity) CMap keeps the
-          // default overlay path — its decode reads encoding8Bit, so
-          // routing it here would silently drop the mapping.
-          applyToUnicodeCid(toUnicodeStream)
-        } else {
-          if (encoding8Bit == null) encoding8Bit = Encodings.Standard.clone()
-          applyToUnicode(toUnicodeStream)
-        }
-      case None =>
+    dict.getDictionary("ToUnicode").foreach { toUnicodeStream =>
+      if (encoding8Bit == null) encoding8Bit = Encodings.Standard.clone()
+      applyToUnicode(toUnicodeStream)
     }
   } catch {
     case e: Exception =>
@@ -179,78 +153,6 @@ final class PdfFont(tk: PdfTokeniser, token: PdfTok) {
               encoding8Bit(cid) = unicodeChar.toChar
               unicodeChar += 1
               cid += 1
-            }
-            i += 1
-          }
-          if (t.getStreamOpCode() != "endbfrange")
-            throw t.streamException("ToUnicode stream is missing 'endbfrange' after 'beginbfrange'.")
-        case "endcmap" =>
-          done = true
-        case _ =>
-      }
-    }
-  }
-
-  /** EXTENSION (opt-in `extendedFilters`, Type0 fonts): full-range ToUnicode
-    * CMap parse per ISO 32000-1 §9.10.3 — source CIDs up to 4 hex digits,
-    * destinations of any even byte length read as UTF-16BE (multi-char
-    * targets and surrogate pairs kept verbatim, never ligature-packed), and
-    * bfrange's array-destination form `<lo> <hi> [<d0> <d1> …]`. Duplicate
-    * CIDs abort like the default-mode overlay. The map feeds
-    * [[graft.pdf.PdfTokeniser]]'s 2-byte-code string decode. */
-  private def applyToUnicodeCid(toUnicodeStream: DictTok): Unit = {
-    val t = toUnicodeStream.loadStream()
-    if (t.getStreamOpCode("begincmap") == null)
-      throw t.streamException("ToUnicode stream is missing 'begincmap'.")
-    t.setStreamMark()
-    if (t.getStreamOpCode("endcodespacerange") == null)
-      throw t.streamException("ToUnicode stream is missing 'endcodespacerange'.")
-    toUnicodeHeader = t.getStreamMarkedText()
-    cidToText = mutable.TreeMap.empty[Int, String]
-    def add(cid: Int, s: String): Unit = {
-      if (cidToText.contains(cid)) throw t.streamException(s"ToUnicode defines the same cid '$cid' twice.")
-      cidToText(cid) = s
-    }
-    /** bfrange increments the LAST UTF-16 code unit of the destination. */
-    def incLast(s: String, by: Int): String =
-      if (s.isEmpty) s
-      else s.substring(0, s.length - 1) + (s.charAt(s.length - 1) + by).toChar
-    var done = false
-    while (!done) {
-      val opCode = t.getStreamOpCode()
-      if (opCode == null) throw t.streamException("ToUnicode stream incomplete.")
-      opCode match {
-        case "beginbfchar" =>
-          t.startStreamArgumentReading()
-          val linesCount = t.getStreamInt()
-          t.endStreamArgumentReading()
-          var i = 0
-          while (i < linesCount) {
-            val cid = t.getStreamCidWide()
-            add(cid, t.getStreamHexUtf16())
-            i += 1
-          }
-          if (t.getStreamOpCode() != "endbfchar")
-            throw t.streamException("ToUnicode stream is missing 'endbfchar' after 'beginbfchar'.")
-        case "beginbfrange" =>
-          t.startStreamArgumentReading()
-          val linesCount = t.getStreamInt()
-          t.endStreamArgumentReading()
-          var i = 0
-          while (i < linesCount) {
-            val cidStart = t.getStreamCidWide()
-            val cidEnd = t.getStreamCidWide()
-            if (cidEnd < cidStart)
-              throw t.streamException(s"ToUnicode: beginbfrange cid1 '$cidStart should be smaller than cid2'$cidEnd'.")
-            if (t.peekStreamNonWsByte() == '[') {
-              t.expectStreamByte('[')
-              var cid = cidStart
-              while (cid <= cidEnd) { add(cid, t.getStreamHexUtf16()); cid += 1 }
-              t.expectStreamByte(']')
-            } else {
-              val dst0 = t.getStreamHexUtf16()
-              var cid = cidStart
-              while (cid <= cidEnd) { add(cid, incLast(dst0, cid - cidStart)); cid += 1 }
             }
             i += 1
           }

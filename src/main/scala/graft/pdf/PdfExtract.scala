@@ -57,13 +57,11 @@ object PdfExtract {
       contentDelimiter: String = "|",
       buffers: WorkBuffers = new WorkBuffers(),
       captureFragments: Boolean = true,
-      extendedFilters: Boolean = false,
       /** Compute each span's 1-based source line ([[TextStore]] semantics);
-        * costs one extra pass + char buffer over the document bytes, so the
-        * bulk pipeline leaves it off. */
+        * costs one extra pass over the document bytes, so the bulk pipeline
+        * leaves it off. */
       captureLines: Boolean = false): ExtractResult = {
-    val tk = new PdfTokeniser(bytes, password, contentDelimiter, buffers, captureFragments,
-      extendedFilters)
+    val tk = new PdfTokeniser(bytes, password, contentDelimiter, buffers, captureFragments)
     try {
       tk.verifyFileHeader()
       tk.findPages()

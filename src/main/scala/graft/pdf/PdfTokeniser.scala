@@ -21,8 +21,6 @@ final class WorkBuffers(initialInflate: Int = 200_000, val maxInflateBytes: Int 
     * document of a partition — the only full-text copies left are the final
     * toString and Spark's UTF8String encode. */
   val docTextSb: java.lang.StringBuilder = new java.lang.StringBuilder(8192)
-  /** Scratch for the extended-mode CID remap (one shown string at a time). */
-  val cidSb: StringBuilder = new StringBuilder
   val inflater: java.util.zip.Inflater = new java.util.zip.Inflater(true) // nowrap: we skip the 2-byte zlib header
 }
 
@@ -56,16 +54,6 @@ private[pdf] final class XRefTable(tk: PdfTokeniser) {
     addresses(id) = new ObjAddress(-1, -1, -1)
 
   def containsAddress(id: ObjectId): Boolean = addresses.contains(id)
-
-  /** True when the slot holds the dead marker a free entry wrote. Used only
-    * by the hybrid-reference extension (ISO 32000-1 §7.5.8.4): a /XRefStm
-    * entry may resurrect an id its OWN section's classic table freed. */
-  def isDead(id: ObjectId): Boolean =
-    addresses.get(id).exists(a => a.address == -1 && a.streamId < 0)
-  def overwriteAddress(id: ObjectId, address: Int): Unit =
-    addresses(id) = new ObjAddress(address, -1, -1)
-  def overwriteStreamAddress(id: ObjectId, streamId: Int, idx: Int): Unit =
-    addresses(id) = new ObjAddress(-1, streamId, idx)
 
   def addToken(t: PdfTok): Unit = {
     val id = t.objectId.get
@@ -115,11 +103,7 @@ final class PdfTokeniser(
       * a full char copy of every content stream, which a bulk extraction
       * pipeline never reads; skipping them roughly halves the allocation
       * rate of the hot path (output `text` is unaffected). */
-    val captureFragments: Boolean = true,
-    /** Opt-in LZW/ASCIIHex/ASCII85 filters (the reference supports only
-      * None/FlateDecode and throws otherwise — kept as the default so
-      * byte-identity vs the reference is preserved unless asked). */
-    val extendedFilters: Boolean = false) {
+    val captureFragments: Boolean = true) {
 
   private val CR: Byte = '\r'
   private val LF: Byte = '\n'
@@ -155,22 +139,7 @@ final class PdfTokeniser(
   var metadata: String = null
   var isDecryptionError: Boolean = false
   var isStringNeedsDecryption: Boolean = false
-  /** EXTENSION (extended mode only): the indirect object currently being
-    * parsed — ISO 32000-1 §7.6.2 keys string decryption by the CONTAINING
-    * indirect object, whose id the reference never threads to nested
-    * tokens (its nested decrypt crashes, Token.cs:269). Set only for
-    * regular `n g obj` parses: object-stream members' strings are not
-    * individually encrypted, so they keep the default surface. */
-  private var containingObjectId: Option[ObjectId] = None
-  /** True while parsing an object-stream member (save/restored in
-    * tokenInObjectStream): ISO 32000-1 §7.5.7 — strings there are covered
-    * by the stream's encryption and are ALREADY plaintext after the stream
-    * decode, so extended mode must not "decrypt" them again. */
-  private var parsingObjectStream: Boolean = false
   private var globalEncryptionKey: Array[Byte] = null
-  private var encryptionIsAes: Boolean = false
-  // V5/AESV3: the file key IS the object key (no MD5-sAlT derivation)
-  private var encryptionIsAesV3: Boolean = false
 
   private[pdf] val pages = mutable.ArrayBuffer.empty[PdfPage]
   def pageList: Seq[PdfPage] = pages.toSeq
@@ -316,14 +285,7 @@ final class PdfTokeniser(
         idx = continueAt
         var trailerDictionary: DictTok = null
         if (verify("xref")) {
-          // classic table: sections of "start count" + 20-byte rows.
-          // `freedHere` (extended mode only) records ids THIS section freed
-          // without a newer section having defined them live — the only ids
-          // a hybrid /XRefStm supplement may resurrect (newest-wins across
-          // sections is preserved; within a section the stream's in-use
-          // entries beat the table's compatibility free marks, §7.5.8.4).
-          val freedHere =
-            if (extendedFilters) mutable.HashSet.empty[ObjectId] else null
+          // classic table: sections of "start count" + 20-byte rows
           var sawTrailer = false
           while (!sawTrailer) {
             val startObjectNumber = parseNumber(None).integer.get
@@ -343,23 +305,7 @@ final class PdfTokeniser(
                   // spec says exactly 65535; InDesign writes 65536 (reference: Tokeniser.cs:373)
                   if (generation < 65535)
                     throw fileException(s"Xref table: entry 0000000000 should have the value 65535 but has '$generation' instead.")
-                } else {
-                  if (freedHere != null) {
-                    // EXTENSION (extended mode): newest-wins applies to free
-                    // marks too. Only an id NO newer section defined (live or
-                    // dead) takes the dead marker and becomes resurrectable by
-                    // THIS section's /XRefStm supplement. Without the guard,
-                    // an older hybrid section's compatibility free mark
-                    // clobbers a newer supplement's live entry (chained hybrid
-                    // updates lose their whole page graph), and an older
-                    // supplement can resurrect an object the newest update
-                    // genuinely deleted (stale text reappears).
-                    if (!xref.containsAddress(objectId)) {
-                      freedHere += objectId
-                      xref.removeAddress(objectId)
-                    }
-                  } else xref.removeAddress(objectId) // reference parity: unconditional clobber
-                }
+                } else xref.removeAddress(objectId) // reference parity: unconditional clobber
               } else throw fileException(s"'n' or 'f' missing after ref $address $generation.")
               i += 1
             }
@@ -370,32 +316,11 @@ final class PdfTokeniser(
             throw fileException("Pdf file format error: trailer was missing after xref table.")
           trailerDictionary = parseDictionary(None)
           trailerDictionaries += trailerDictionary
-          // EXTENSION (opt-in `extendedFilters` only): hybrid-reference files
-          // (ISO 32000-1 §7.5.8.4). The trailer's /XRefStm points at a
-          // supplementary /Type/XRef stream listing the objects the classic
-          // table hid (object-stream members marked 'f' for old readers).
-          // The reference ignores the key (Tokeniser.cs:518 bookkeeping
-          // set), losing every hidden object — default mode keeps that
-          // surface. The supplement's dict is NOT merged into the trailers:
-          // the classic trailer of the same section is authoritative, and
-          // only the classic /Prev drives the chain.
-          if (extendedFilters) trailerDictionary.getNumber("XRefStm")
-            .flatMap(_.integer).foreach { streamOffset =>
-              val saved = idx
-              idx = streamOffset
-              getNextToken() match {
-                case hybrid: DictTok =>
-                  readXrefStreamEntries(hybrid, mayResurrect = freedHere.contains)
-                case _ =>
-                  throw fileException("Hybrid /XRefStm does not point at an xref stream.")
-              }
-              idx = saved
-            }
         } else {
           // xref stream (reference: Tokeniser.cs:404-491)
           getNextToken() match {
             case xrefStream: DictTok =>
-              readXrefStreamEntries(xrefStream, mayResurrect = _ => false)
+              readXrefStreamEntries(xrefStream)
               trailerDictionary = xrefStream
               trailerDictionaries += trailerDictionary
             case _ =>
@@ -414,14 +339,9 @@ final class PdfTokeniser(
     }
   }
 
-  /** Decode one /Type/XRef stream's entry rows into the xref table
-    * (reference: Tokeniser.cs:404-491). `mayResurrect` is the hybrid-file
-    * extension hook: the main startxref/Prev chain passes `_ => false`
-    * (first-seen-wins, reference parity); a /XRefStm supplement passes the
-    * ids its OWN section's classic table freed, which its in-use entries
-    * may then overwrite (ISO 32000-1 §7.5.8.4 — the table hides
-    * object-stream members behind free entries for old readers). */
-  private def readXrefStreamEntries(xrefStream: DictTok, mayResurrect: ObjectId => Boolean): Unit = {
+  /** Decode one /Type/XRef stream's entry rows into the xref table,
+    * first-seen wins (reference: Tokeniser.cs:404-491). */
+  private def readXrefStreamEntries(xrefStream: DictTok): Unit = {
     if (!xrefStream.tpe.contains("XRef"))
       throw fileException(s"readXrefTable(); dictionary type of xrefStream should be 'XRef' but was '${xrefStream.tpe.orNull}'.")
     val size = xrefStream.getNumber("Size")
@@ -455,16 +375,11 @@ final class PdfTokeniser(
         case 1 =>
           val byteOffset = streamByteValue(widths(1))
           val gen = streamByteValue(widths(2))
-          val id = ObjectId(objectNumber, gen)
-          if (xref.isDead(id) && mayResurrect(id)) xref.overwriteAddress(id, byteOffset)
-          else xref.addAddress(id, byteOffset)
+          xref.addAddress(ObjectId(objectNumber, gen), byteOffset)
         case 2 =>
           val streamObjectNumber = streamByteValue(widths(1))
           val streamObjectIndex = streamByteValue(widths(2))
-          val id = ObjectId(objectNumber, 0)
-          if (xref.isDead(id) && mayResurrect(id))
-            xref.overwriteStreamAddress(id, streamObjectNumber, streamObjectIndex)
-          else xref.addStreamAddress(id, streamObjectNumber, streamObjectIndex)
+          xref.addStreamAddress(ObjectId(objectNumber, 0), streamObjectNumber, streamObjectIndex)
         case other =>
           throw streamException(s"readXrefTable(); xrefStream first column can be 0..2, but $other was found.")
       }
@@ -486,6 +401,9 @@ final class PdfTokeniser(
     * error; then DocumentID / encryption / DocumentInfo / Root→Pages→Metadata
     * (reference: Tokeniser.cs:508-617). */
   private def readTrailers(): Unit = {
+    // /XRefStm (a hybrid file's supplementary xref stream) is bookkeeping
+    // here, as in the reference (Tokeniser.cs:518): objects only that
+    // stream lists stay unresolved
     val bookkeeping = Set("Size", "Prev", "XRefStm", "DecodeParms", "Filter", "Index", "Length", "Type", "W")
     trailerDictionaries.foreach { trailer =>
       trailer.keys.foreach { key =>
@@ -514,25 +432,22 @@ final class PdfTokeniser(
       case _ =>
     }
 
-    var passwordErrorMessage: Option[String] = None
     trailerEntries.get("Encrypt").foreach { enc =>
-      passwordErrorMessage = setupEncryption(enc.asInstanceOf[DictTok])
-      if (passwordErrorMessage.isEmpty) {
-        isStringNeedsDecryption = true
-        // strings parsed before the key existed are decrypted in place
-        // (reference: Tokeniser.cs:562-575)
-        trailerEntries.foreach { case (key, value) =>
-          if (key != "Root" && key != "Encrypt" && key != "ID") {
-            value match {
-              case dict: DictTok =>
-                dict.keys.foreach { k =>
-                  dict.entries(k) match {
-                    case s: StrTok => s.value = decryptString(dict.objectId.get, s.value)
-                    case _         =>
-                  }
+      setupEncryption(enc.asInstanceOf[DictTok])
+      isStringNeedsDecryption = true
+      // strings parsed before the key existed are decrypted in place
+      // (reference: Tokeniser.cs:562-575)
+      trailerEntries.foreach { case (key, value) =>
+        if (key != "Root" && key != "Encrypt" && key != "ID") {
+          value match {
+            case dict: DictTok =>
+              dict.keys.foreach { k =>
+                dict.entries(k) match {
+                  case s: StrTok => s.value = decryptString(dict.objectId.get, s.value)
+                  case _         =>
                 }
-              case _ =>
-            }
+              }
+            case _ =>
           }
         }
       }
@@ -560,10 +475,6 @@ final class PdfTokeniser(
           documentInfo += s"\nException while reading info token ${infoToken.render}:\n$e\n"
       }
     }
-    passwordErrorMessage.foreach { msg =>
-      documentInfo = (if (documentInfo == null) "" else documentInfo) +
-        s"\nException while reading decryption information:\n$msg\n"
-    }
 
     trailerEntries.get("Root").foreach { rootToken =>
       val root = rootToken.asInstanceOf[DictTok]
@@ -573,14 +484,10 @@ final class PdfTokeniser(
   }
 
   /** reference: Tokeniser.cs:627-690 (live branch only — the `isNew` flag is
-    * hard-wired true there). Wrong password ends in the reference's
-    * unimplemented owner-password path, i.e. an exception.
-    *
-    * EXTENSION (opt-in `extendedFilters` only; default keeps the reference's
-    * throw): the AESV2 crypt filter — /V 4 /R 4 with /CF/StdCF/CFM/AESV2.
-    * Key derivation is the same Algorithm 2 / user-password Algorithm 5-6
-    * chain; only the per-object key (sAlT suffix) and the cipher differ. */
-  private def setupEncryption(enc: DictTok): Option[String] = {
+    * hard-wired true there). Only the RC4 standard handler (V 1|2, R 2|3)
+    * is supported; a wrong user password ends in the reference's
+    * unimplemented owner-password path, i.e. an exception. */
+  private def setupEncryption(enc: DictTok): Unit = {
     val filter = enc.getName("Filter")
     val v = enc.getNumber("V").flatMap(_.integer)
     val r = enc.getNumber("R").flatMap(_.integer)
@@ -588,108 +495,21 @@ final class PdfTokeniser(
     val o = enc.getHexBytes("O")
     val u = enc.getHexBytes("U")
     val idToken = trailerEntries.get("ID")
-    val refSupported = filter.contains("Standard") &&
+    val supported = filter.contains("Standard") &&
       (v.contains(1) || v.contains(2)) && (r.contains(2) || r.contains(3))
-    val aesSupported = extendedFilters && filter.contains("Standard") &&
-      v.contains(4) && r.contains(4) &&
-      enc.getDictionary("CF").flatMap(_.getDictionary("StdCF"))
-        .flatMap(_.getName("CFM")).contains("AESV2")
-    // EXTENSION (opt-in): AES-256 — /V 5 with /CFM/AESV3, R6 (ISO 32000-2
-    // hardened hash) or the deprecated R5 precursor. Authentication never
-    // touches /ID and there is no per-object key, so the whole setup lives
-    // in its own branch.
-    val aes256Supported = extendedFilters && filter.contains("Standard") &&
-      v.contains(5) && (r.contains(5) || r.contains(6)) &&
-      enc.getDictionary("CF").flatMap(_.getDictionary("StdCF"))
-        .flatMap(_.getName("CFM")).contains("AESV3")
-    if (aes256Supported) return setupEncryptionV5(enc, r.get, p, o, u)
-    if ((!refSupported && !aesSupported) ||
-        p.isEmpty || o.isEmpty || u.isEmpty || idToken.isEmpty)
+    if (!supported || p.isEmpty || o.isEmpty || u.isEmpty || idToken.isEmpty)
       throw new IllegalArgumentException("PdfParser can only decrypt pdf files using Standard encryption.\n" + enc.render)
-    encryptionIsAes = aesSupported && !refSupported
 
-    // V4: the key length belongs to the crypt filter (/CF/StdCF/Length); the
-    // spec says BYTES there but real writers use both conventions, so treat
-    // values ≤ 40 as bytes and larger ones as bits (the pdfbox heuristic).
-    // A top-level /Length (bits) is V2/V3 territory but accepted as a
-    // fallback; AESV2 defaults to 128-bit.
-    val lengthBits = enc.getNumber("Length").flatMap(_.integer).getOrElse(
-      if (encryptionIsAes)
-        enc.getDictionary("CF").flatMap(_.getDictionary("StdCF"))
-          .flatMap(_.getNumber("Length")).flatMap(_.integer)
-          .map(l => if (l <= 40) l * 8 else l)
-          .getOrElse(128)
-      else 40)
-    val lengthBytes = lengthBits / 8
+    val lengthBytes = enc.getNumber("Length").flatMap(_.integer).getOrElse(40) / 8
     val trailerId = idToken.get.asInstanceOf[ArrTok](0).asInstanceOf[StrTok].hexBytes.get
     val padded = PdfCrypto.pad(password)
     val permission = p.get.dec.longValue.toInt
-    // ISO 32000-1 Algorithm 2 step f (R >= 4): /EncryptMetadata false adds
-    // 0xFFFFFFFF to the key hash input
-    val encryptMetadata =
-      if (encryptionIsAes)
-        enc.get("EncryptMetadata").collect { case bt: BoolTok => bt.value }.getOrElse(true)
-      else true
-
-    val key = PdfCrypto.computeEncryptionKey(padded, o.get, permission, trailerId, lengthBytes,
-      encryptMetadata)
-    if (PdfCrypto.authenticateUserPassword(padded, trailerId, key, u.get)) {
-      globalEncryptionKey = key
-      None
-    } else {
-      // EXTENSION (opt-in `extendedFilters` only): ISO 32000-1 Algorithm 7
-      // — try the provided password as the OWNER password: invert /O's RC4
-      // chain back to the padded user password, then re-run the Algorithm
-      // 2/6 chain with it. A wrong owner password yields garbage that
-      // fails the /U check and falls through to the reference error.
-      val ownerKey = if (!extendedFilters) null else {
-        val recovered = PdfCrypto.recoverUserPasswordFromO(password, o.get, lengthBytes, r.get)
-        val k2 = PdfCrypto.computeEncryptionKey(recovered, o.get, permission, trailerId,
-          lengthBytes, encryptMetadata)
-        if (PdfCrypto.authenticateUserPassword(recovered, trailerId, k2, u.get)) k2 else null
-      }
-      if (ownerKey != null) {
-        globalEncryptionKey = ownerKey
-        None
-      } else {
-        // reference: Tokeniser.cs:810-840 — owner-password authentication is
-        // NotImplementedException there; replicated as an error (and kept
-        // verbatim in DEFAULT mode, which never attempts Algorithm 7)
-        throw new UnsupportedOperationException("owner-password authentication is not implemented")
-      }
-    }
-  }
-
-  /** EXTENSION (opt-in `extendedFilters` only): AES-256 setup — ISO 32000-2
-    * §7.6.4, /V 5 /R 5|6 with /CFM/AESV3. Tries the password as USER
-    * (Algorithm 11) then OWNER (Algorithm 12); on success the recovered
-    * 32-byte file key decrypts every string/stream directly. A /Perms
-    * entry, when present, is validated against the key (Algorithm 13) so a
-    * tampered permissions capsule surfaces as an error row rather than
-    * silently-honored garbage. */
-  private def setupEncryptionV5(enc: DictTok, revision: Int,
-      p: Option[NumTok], o: Option[Array[Byte]], u: Option[Array[Byte]]): Option[String] = {
-    val oe = enc.getHexBytes("OE")
-    val ue = enc.getHexBytes("UE")
-    if (p.isEmpty || o.isEmpty || u.isEmpty || oe.isEmpty || ue.isEmpty)
-      throw new IllegalArgumentException(
-        "AES-256 (V5) encryption dictionary is missing O/U/OE/UE/P.\n" + enc.render)
-    val key = PdfCrypto.fileKeyV5(password, o.get, u.get, oe.get, ue.get, revision)
-    if (key == null)
-      throw new IllegalArgumentException(
-        "invalid user or owner password for AES-256 (V5) encryption")
-    val permission = p.get.dec.longValue.toInt
-    val encryptMetadata =
-      enc.get("EncryptMetadata").collect { case bt: BoolTok => bt.value }.getOrElse(true)
-    enc.getHexBytes("Perms").foreach { perms =>
-      if (!PdfCrypto.verifyPermsV5(key, perms, permission, encryptMetadata))
-        throw new IllegalArgumentException(
-          "AES-256 /Perms does not validate against the file key")
-    }
+    val key = PdfCrypto.computeEncryptionKey(padded, o.get, permission, trailerId, lengthBytes)
+    if (!PdfCrypto.authenticateUserPassword(padded, trailerId, key, u.get))
+      // reference: Tokeniser.cs:810-840 — owner-password authentication is
+      // NotImplementedException there; replicated as an error
+      throw new UnsupportedOperationException("owner-password authentication is not implemented")
     globalEncryptionKey = key
-    encryptionIsAes = true
-    encryptionIsAesV3 = true
-    None
   }
 
   /** reference: Tokeniser.cs:1161-1176, plus a cycle guard. */
@@ -816,15 +636,7 @@ final class PdfTokeniser(
           new RefTok(Some(refId))
         } else if ({ val ok = bytes(idx) == 'o' && bytes(idx + 1) == 'b' && bytes(idx + 2) == 'j'; idx += 3; ok }) {
           skipWhiteSpace()
-          // EXTENSION bookkeeping: remember the indirect object being
-          // parsed so extended-mode string decryption can key nested
-          // strings by their CONTAINING object (ISO 32000-1 §7.6.2); the
-          // save/restore keeps lazy cross-object resolution re-entrant
-          val savedContaining = containingObjectId
-          containingObjectId = Some(refId)
-          val token =
-            try getNextToken(Some(refId), throwOnError)
-            finally containingObjectId = savedContaining
+          val token = getNextToken(Some(refId), throwOnError)
           val e = skipWhiteSpace()
           if (e != 'e' || bytes(idx + 1) != 'n' || bytes(idx + 2) != 'd' || bytes(idx + 3) != 'o' ||
               bytes(idx + 4) != 'b' || bytes(idx + 5) != 'j')
@@ -859,7 +671,6 @@ final class PdfTokeniser(
   private[pdf] def tokenInObjectStream(id: ObjectId, streamId: Int, streamObjectIndex: Int): PdfTok = {
     val savedBytes = bytes
     val savedIdx = idx
-    val savedInObjStm = parsingObjectStream
     // restore MUST run on the failure path too: a caller that swallows a
     // failed member parse (the additive surfaces do) would otherwise leave
     // the main cursor pointing into the decompressed ObjStm buffer and
@@ -885,12 +696,10 @@ final class PdfTokeniser(
       if (memberId != id.objectNumber)
         throw fileException(s"Pdf object stream: stream $streamId should contain ${id.objectNumber} at $streamObjectIndex, but was $memberId.")
       idx = offset
-      parsingObjectStream = true
       getNextToken(Some(id))
     } finally {
       bytes = savedBytes
       idx = savedIdx
-      parsingObjectStream = savedInObjStm
     }
   }
 
@@ -996,24 +805,16 @@ final class PdfTokeniser(
     } else throw fileException(s"String format error, '(' or '<' expected as leading character, but was '${(b0 & 0xff).toChar}'.")
 
     val raw = sb.toString
-    // Default mode: `objectId.get` throws for strings NESTED in dicts/
-    // arrays parsed after encryption setup — replicated AS-IS from the
-    // reference, whose nested tokens also carry no id and whose
-    // `objectId!.Value` throws the same way (Token.cs:269 +
-    // DictionaryToken/ArrayToken passing no id to children); the failure
-    // is captured as the document's error row. Top-level trailer dicts
-    // (/Info) are covered by the decrypt-strings-parsed-before-the-key-
-    // existed fix-up loop. EXTENSION (extended mode): nested strings fall
-    // back to the CONTAINING object's id — the key ISO 32000-1 §7.6.2
-    // actually prescribes — so encrypted nested strings decode;
-    // and strings inside OBJECT-STREAM members are already plaintext
-    // (§7.5.7, the stream itself was decrypted), so they are left as-is
-    // instead of being "decrypted" into garbage.
+    // `objectId.get` throws for strings NESTED in dicts/arrays parsed after
+    // encryption setup — replicated AS-IS from the reference, whose nested
+    // tokens also carry no id and whose `objectId!.Value` throws the same
+    // way (Token.cs:269 + DictionaryToken/ArrayToken passing no id to
+    // children); the failure is captured as the document's error row.
+    // Top-level trailer dicts (/Info) are covered by the
+    // decrypt-strings-parsed-before-the-key-existed fix-up loop.
     val value =
       if (!isStringNeedsDecryption) raw
-      else if (extendedFilters && parsingObjectStream) raw
-      else decryptString(
-        objectId.orElse(if (extendedFilters) containingObjectId else None).get, raw)
+      else decryptString(objectId.get, raw)
     idx += 1
     new StrTok(value, hexBytes, objectId)
   }
@@ -1182,10 +983,9 @@ final class PdfTokeniser(
 
   private[pdf] var argumentsStartIndex: Int = Int.MinValue
 
-  /** Decrypt (RC4 in place once, or AESV2 into a per-dict memo — AES output
-    * is shorter than the stored bytes) + inflate or alias the raw slice
-    * (reference: Tokeniser.cs:1796-1846; AES is the extended-mode extension). */
-  private[pdf] def fillStreamBytes(dict: DictTok, filter: StreamFilter.Value, chainFlate: Boolean = false): Unit = {
+  /** Decrypt (RC4 into a per-dict memo) + inflate or alias the raw slice
+    * (reference: Tokeniser.cs:1796-1846). */
+  private[pdf] def fillStreamBytes(dict: DictTok, filter: StreamFilter.Value): Unit = {
     idx = dict.streamStartIndex
     argumentsStartIndex = Int.MinValue
     // source triple: the (possibly decrypted) stored payload
@@ -1193,55 +993,27 @@ final class PdfTokeniser(
     var srcOff = dict.streamStartIndex
     var srcLen = dict.streamLength
     if (globalEncryptionKey != null) {
-      if (encryptionIsAes) {
-        if (dict.decryptedStream == null)
-          dict.decryptedStream = PdfCrypto.aesDecrypt(
-            aesObjectKey(dict.objectId.get),
-            bytes, dict.streamStartIndex, dict.streamLength)
-        srcBuf = dict.decryptedStream
-        srcOff = 0
-        srcLen = dict.decryptedStream.length
-      } else {
-        // decrypt into a per-dict memo, NOT in place: the caller's payload
-        // array must stay pristine (the reference mutates its own per-load
-        // copy, Tokeniser.cs:1796-1846; our extract() is a pure function —
-        // extracting the same array twice must not double-decrypt)
-        if (dict.decryptedStream == null) {
-          val copy = java.util.Arrays.copyOfRange(
-            bytes, dict.streamStartIndex, dict.streamStartIndex + dict.streamLength)
-          PdfCrypto.rc4InPlace(
-            PdfCrypto.objectKey(globalEncryptionKey, dict.objectId.get),
-            copy, 0, copy.length)
-          dict.decryptedStream = copy
-        }
-        srcBuf = dict.decryptedStream
-        srcOff = 0
-        srcLen = dict.decryptedStream.length
+      // decrypt into a per-dict memo, NOT in place: the caller's payload
+      // array must stay pristine (the reference mutates its own per-load
+      // copy, Tokeniser.cs:1796-1846; our extract() is a pure function —
+      // extracting the same array twice must not double-decrypt)
+      if (dict.decryptedStream == null) {
+        val copy = java.util.Arrays.copyOfRange(
+          bytes, dict.streamStartIndex, dict.streamStartIndex + dict.streamLength)
+        PdfCrypto.rc4InPlace(
+          PdfCrypto.objectKey(globalEncryptionKey, dict.objectId.get),
+          copy, 0, copy.length)
+        dict.decryptedStream = copy
       }
+      srcBuf = dict.decryptedStream
+      srcOff = 0
+      srcLen = dict.decryptedStream.length
     }
     filter match {
       case StreamFilter.None =>
         streamBuf = srcBuf
         streamOff = srcOff
         streamLen = srcLen
-        streamIdx = 0
-      case StreamFilter.Lzw | StreamFilter.AsciiHex | StreamFilter.Ascii85 | StreamFilter.RunLength =>
-        val decoded = filter match {
-          case StreamFilter.Lzw =>
-            ExtraFilters.lzwDecode(srcBuf, srcOff, srcLen)
-          case StreamFilter.AsciiHex =>
-            ExtraFilters.asciiHexDecode(srcBuf, srcOff, srcLen)
-          case StreamFilter.RunLength =>
-            ExtraFilters.runLengthDecode(srcBuf, srcOff, srcLen)
-          case _ =>
-            ExtraFilters.ascii85Decode(srcBuf, srcOff, srcLen)
-        }
-        val payload =
-          if (chainFlate) inflateArray(decoded, 0, decoded.length)
-          else decoded
-        streamBuf = payload
-        streamOff = 0
-        streamLen = payload.length
         streamIdx = 0
       case StreamFilter.FlateDecode =>
         // skip the 2-byte zlib header and inflate the raw deflate payload
@@ -1269,50 +1041,15 @@ final class PdfTokeniser(
     }
   }
 
-  /** Inflate a zlib-wrapped array (2-byte header skipped) into a fresh
-    * buffer — the second stage of an [ASCII* , FlateDecode] filter chain. */
-  private def inflateArray(data: Array[Byte], off: Int, len: Int): Array[Byte] = {
-    val inflater = buffers.inflater
-    inflater.reset()
-    inflater.setInput(data, off + 2, len - 2)
-    var buf = new Array[Byte](math.max(1024, len * 4))
-    var total = 0
-    var finished = false
-    while (!finished) {
-      val n = inflater.inflate(buf, total, buf.length - total)
-      total += n
-      if (inflater.finished() || inflater.needsDictionary() || (n == 0 && inflater.needsInput())) finished = true
-      else if (total == buf.length) {
-        if (buf.length >= buffers.maxInflateBytes)
-          throw streamException(s"Reading stream, internal $total bytes buffer overflow.")
-        buf = java.util.Arrays.copyOf(buf, math.min(buffers.maxInflateBytes, buf.length * 2))
-      }
-    }
-    java.util.Arrays.copyOf(buf, total)
-  }
-
-  /** AES per-object key: V4/AESV2 derives MD5(key ∥ obj ∥ gen ∥ sAlT);
-    * V5/AESV3 uses the 32-byte file key directly (ISO 32000-2 drops the
-    * per-object derivation entirely). */
-  private def aesObjectKey(objectId: ObjectId): Array[Byte] =
-    if (encryptionIsAesV3) globalEncryptionKey
-    else PdfCrypto.objectKeyAes(globalEncryptionKey, objectId)
-
   private[pdf] def decryptString(objectId: ObjectId, encrypted: String): String = {
     if (isDecryptionError) return "Decryption error"
     val data = new Array[Byte](encrypted.length)
     var i = 0
     while (i < encrypted.length) { data(i) = encrypted.charAt(i).toByte; i += 1 }
-    val plain =
-      if (encryptionIsAes)
-        PdfCrypto.aesDecrypt(aesObjectKey(objectId), data, 0, data.length)
-      else {
-        PdfCrypto.rc4InPlace(PdfCrypto.objectKey(globalEncryptionKey, objectId), data, 0, data.length)
-        data
-      }
+    PdfCrypto.rc4InPlace(PdfCrypto.objectKey(globalEncryptionKey, objectId), data, 0, data.length)
     // ASCII decode: non-ASCII bytes become '?', matching .NET's ASCII
     // decoder used by the reference (Tokeniser.cs:1859)
-    new String(plain.map(b => if ((b & 0xff) > 0x7f) '?' else (b & 0xff).toChar))
+    new String(data.map(b => if ((b & 0xff) > 0x7f) '?' else (b & 0xff).toChar))
   }
 
   /** PNG Up predictor, the only one supported (reference: Tokeniser.cs:2192-2215). */
@@ -1336,78 +1073,6 @@ final class PdfTokeniser(
       while (col < bytesPerRow) {
         filtered(dst) = (filtered(dst - bytesPerRow) + streamBuf(streamOff + src)).toByte
         src += 1; dst += 1; col += 1
-      }
-      row += 1
-    }
-    streamBuf = filtered
-    streamOff = 0
-    streamLen = filtered.length
-    streamIdx = 0
-  }
-
-  /** EXTENSION (opt-in `extendedFilters` only): full PNG row unfiltering —
-    * each row leads with a filter byte 0..4 (None/Sub/Up/Average/Paeth,
-    * RFC 2083 §6) applied over `bpp`-byte pixels. Predictor values 10-15
-    * in DecodeParms all route here (the value encodes the ENCODER's row
-    * strategy; the decoder always dispatches on the per-row byte). The
-    * default mode keeps the reference's Up-only [[applyPredictorUp]]. */
-  private[pdf] def applyPredictorPng(bytesPerRow: Int, bpp: Int): Unit = {
-    val rowCount = streamLen / (bytesPerRow + 1)
-    val filtered = new Array[Byte](rowCount * bytesPerRow)
-    var row = 0
-    var src = 0
-    var dst = 0
-    while (row < rowCount) {
-      val ft = streamBuf(streamOff + src) & 0xff
-      src += 1
-      var col = 0
-      while (col < bytesPerRow) {
-        val raw = streamBuf(streamOff + src) & 0xff
-        val left = if (col >= bpp) filtered(dst - bpp) & 0xff else 0
-        val above = if (row > 0) filtered(dst - bytesPerRow) & 0xff else 0
-        val upLeft = if (row > 0 && col >= bpp) filtered(dst - bytesPerRow - bpp) & 0xff else 0
-        val recon = ft match {
-          case 0 => raw
-          case 1 => raw + left
-          case 2 => raw + above
-          case 3 => raw + ((left + above) >> 1)
-          case 4 =>
-            // Paeth: nearest of left/above/upLeft to left+above-upLeft
-            val pr = left + above - upLeft
-            val pa = math.abs(pr - left)
-            val pb = math.abs(pr - above)
-            val pc = math.abs(pr - upLeft)
-            raw + (if (pa <= pb && pa <= pc) left else if (pb <= pc) above else upLeft)
-          case other =>
-            throw streamException(s"Pdf stream, ApplyPredictorPng(): PNG row filter type 0-4 expected, but was $other.")
-        }
-        filtered(dst) = recon.toByte
-        src += 1; dst += 1; col += 1
-      }
-      row += 1
-    }
-    streamBuf = filtered
-    streamOff = 0
-    streamLen = filtered.length
-    streamIdx = 0
-  }
-
-  /** EXTENSION (opt-in `extendedFilters` only): TIFF Predictor 2
-    * (horizontal differencing at 8-bit components) — each byte is a delta
-    * against the same component `bpp` bytes earlier within its row; no
-    * per-row filter byte. */
-  private[pdf] def applyPredictorTiff(bytesPerRow: Int, bpp: Int): Unit = {
-    val rowCount = streamLen / bytesPerRow
-    val filtered = new Array[Byte](rowCount * bytesPerRow)
-    var row = 0
-    var src = 0
-    while (row < rowCount) {
-      val base = row * bytesPerRow
-      var col = 0
-      while (col < bytesPerRow) {
-        val left = if (col >= bpp) filtered(base + col - bpp) & 0xff else 0
-        filtered(base + col) = ((streamBuf(streamOff + src) & 0xff) + left).toByte
-        src += 1; col += 1
       }
       row += 1
     }
@@ -1705,36 +1370,8 @@ final class PdfTokeniser(
     * caller appends, preserving the reference's no-partial-text semantics. */
   def getStreamStringScratch(font: PdfFont): CharSequence = {
     sb.setLength(0)
-    if (font != null && font.isCidKeyed) { readStreamStringInto(null); remapCidFrom(font, 0) }
-    else readStreamStringInto(font)
+    readStreamStringInto(font)
     sb
-  }
-
-  /** EXTENSION (extended mode, Type0/Identity fonts): re-interpret the raw
-    * string bytes decoded into `sb[from..)` as big-endian 2-BYTE codes and
-    * map each through the font's full ToUnicode map ([[PdfFont.cidToText]]).
-    * Unmapped CIDs pass through as the CID itself (Identity semantics: the
-    * code IS the CID; fonts built with CID == Unicode then still extract).
-    * A lone trailing byte is zero-padded into the high byte, mirroring
-    * common-reader behavior on malformed odd-length strings. */
-  private def remapCidFrom(font: PdfFont, from: Int): Unit = {
-    val cidSb = buffers.cidSb
-    cidSb.setLength(0)
-    val n = sb.length
-    var i = from
-    while (i < n) {
-      val hi = sb.charAt(i) & 0xff
-      val cid = if (i + 1 < n) (hi << 8) | (sb.charAt(i + 1) & 0xff) else hi << 8
-      val mapped = if (font.cidToText == null) null else font.cidToText.getOrElse(cid, null)
-      if (mapped != null) cidSb.append(mapped)
-      // passthrough must stay a VALID string: a CID in the surrogate range
-      // would be an unpaired UTF-16 unit that diverges on UTF-8 encode
-      else if (cid >= 0xd800 && cid <= 0xdfff) cidSb.append('�')
-      else cidSb.append(cid.toChar)
-      i += 2
-    }
-    sb.setLength(from)
-    sb.append(cidSb)
   }
 
   private def appendDecoded(ch0: Char, font: PdfFont): Unit = {
@@ -1827,17 +1464,12 @@ final class PdfTokeniser(
     sb.setLength(0)
     var b = sByte(streamIdx); streamIdx += 1
     if (b != '[') throw streamException("Read string array in stream, '[' expected.")
-    val cid = font != null && font.isCidKeyed
     var done = false
     while (!done) {
       b = sByte(streamIdx); streamIdx += 1
       if (b == '(' || b == '<') {
         streamIdx -= 1
-        // CID pairing is per element: each shown string's bytes pair up
-        // independently (an odd-length element must not borrow its high
-        // byte from the next element's first byte)
-        if (cid) { val from = sb.length; readStreamStringInto(null); remapCidFrom(font, from) }
-        else readStreamStringInto(font)
+        readStreamStringInto(font)
         b = sByte(streamIdx); streamIdx += 1
       }
       if (b == ']') done = true
@@ -1905,83 +1537,6 @@ final class PdfTokeniser(
     if (value < 0 || value > 0xff)
       throw streamException("Reading Character IDentifier CID from stream, should have only 2 hex digits.")
     value
-  }
-
-  /** EXTENSION (extended mode, composite-font CMaps): source CID of up to 4
-    * hex digits `<1A>` / `<0120>` — the form every real-world Identity-H
-    * ToUnicode CMap writes; the reference's reader caps at 2 digits
-    * (Tokeniser.cs:2557-2587), which is why its Type0 handling dies at the
-    * first 4-digit bfrange. */
-  def getStreamCidWide(): Int = {
-    var value = 0
-    streamSkipWhiteSpace()
-    var b = sByte(streamIdx); streamIdx += 1
-    if (b != '<')
-      throw streamException("Hexadecimal CID expected in the form of '<0120>', but leading '<' was missing.")
-    b = sByte(streamIdx); streamIdx += 1
-    var digits = 0
-    var done = false
-    while (!done) {
-      if (b >= '0' && b <= '9') { value = 16 * value + b - '0'; digits += 1 }
-      else if (b >= 'A' && b <= 'F') { value = 16 * value + b - 'A' + 10; digits += 1 }
-      else if (b >= 'a' && b <= 'f') { value = 16 * value + b - 'a' + 10; digits += 1 }
-      else done = true
-      // count digits, not magnitude: 9+ digits would wrap the Int back
-      // into the accepted range and silently poison the map
-      if (digits > 4)
-        throw streamException("Reading CID from stream, should have at most 4 hex digits.")
-      if (!done) { b = sByte(streamIdx); streamIdx += 1 }
-    }
-    if (b != '>')
-      throw streamException("Hexadecimal CID expected in the form of '<0120>', but closing '>' was missing.")
-    if (value < 0 || value > 0xffff)
-      throw streamException("Reading CID from stream, should have at most 4 hex digits.")
-    value
-  }
-
-  /** EXTENSION (extended mode, composite-font CMaps): destination hex string
-    * `<00660066>` of any length that is a whole number of UTF-16BE code
-    * units (4 hex digits each), returned verbatim as a String — multi-char
-    * targets and surrogate pairs preserved, no ligature packing. */
-  def getStreamHexUtf16(): String = {
-    streamSkipWhiteSpace()
-    var b = sByte(streamIdx); streamIdx += 1
-    if (b != '<')
-      throw streamException("Hexadecimal string expected, but leading '<' was missing.")
-    val out = new java.lang.StringBuilder(4)
-    var unit = 0
-    var digits = 0
-    b = sByte(streamIdx); streamIdx += 1
-    while (b != '>') {
-      val d =
-        if (b >= '0' && b <= '9') b - '0'
-        else if (b >= 'A' && b <= 'F') b - 'A' + 10
-        else if (b >= 'a' && b <= 'f') b - 'a' + 10
-        else if (isWhiteSpaceByte(b)) -1
-        else throw streamException("Invalid character in CMap destination hex string.")
-      if (d >= 0) {
-        unit = 16 * unit + d
-        digits += 1
-        if (digits == 4) { out.append(unit.toChar); unit = 0; digits = 0 }
-      }
-      b = sByte(streamIdx); streamIdx += 1
-    }
-    if (digits != 0)
-      throw streamException("CMap destination hex string is not a whole number of UTF-16 code units.")
-    out.toString
-  }
-
-  /** EXTENSION: next non-whitespace stream byte without consuming it
-    * (-1 at end of stream). */
-  def peekStreamNonWsByte(): Int =
-    if (!streamSkipWhiteSpace()) -1 else sByte(streamIdx) & 0xff
-
-  /** EXTENSION: consume one expected non-whitespace stream byte. */
-  def expectStreamByte(expected: Char): Unit = {
-    streamSkipWhiteSpace()
-    val b = sByte(streamIdx); streamIdx += 1
-    if (b != expected)
-      throw streamException(s"Expected '$expected' in CMap, found '${(b & 0xff).toChar}'.")
   }
 
   /** 4-hex-digit unicode `<89AB>`; multi-char ligature sequences are packed

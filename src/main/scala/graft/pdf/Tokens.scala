@@ -139,7 +139,7 @@ final class DictTok(private val tk: PdfTokeniser, val objectId: Option[ObjectId]
   var tpe: Option[String] = None
   var streamStartIndex: Int = Int.MinValue
   var streamLength: Int = Int.MinValue
-  /** Decrypted payload memo (RC4 and AESV2): the source document bytes are
+  /** Decrypted payload memo (RC4): the source document bytes are
     * never mutated, so extracting the same array twice cannot
     * double-decrypt. */
   var decryptedStream: Array[Byte] = null
@@ -182,81 +182,29 @@ final class DictTok(private val tk: PdfTokeniser, val objectId: Option[ObjectId]
     * (reference: Token.cs:627-669). */
   def loadStream(): PdfTokeniser = {
     if (!isStream) throw new IllegalStateException(s"'$render' is not a stream.")
-    // extendedFilters=false replicates the reference exactly (only None /
-    // FlateDecode; anything else throws, surfacing as an error row). The
-    // extended mode adds LZW / ASCIIHex / ASCII85 and the common
-    // [/ASCII{85,Hex}Decode /FlateDecode] two-stage chain.
-    var chainFlate = false
+    // only None / FlateDecode; anything else throws, surfacing as an error
+    // row, and a /Filter array uses only element 0 (Token.cs:632-636)
     def named(f: PdfTok): StreamFilter.Value = f.asInstanceOf[NameTok].value match {
       case ""            => StreamFilter.None
       case "FlateDecode" => StreamFilter.FlateDecode
-      case "LZWDecode" if tk.extendedFilters      => StreamFilter.Lzw
-      case "ASCIIHexDecode" if tk.extendedFilters => StreamFilter.AsciiHex
-      case "ASCII85Decode" if tk.extendedFilters  => StreamFilter.Ascii85
-      case "RunLengthDecode" if tk.extendedFilters => StreamFilter.RunLength
       case other => throw new UnsupportedOperationException(s"Stream filter $other is not (yet) supported.")
     }
     val filter = entries.get("Filter") match {
-      case Some(ft) =>
-        ft match {
-          case a: ArrTok =>
-            val first = named(a(0))
-            if (a.length <= 1) first
-            else if (!tk.extendedFilters) {
-              // reference behavior: a /Filter array uses only element 0
-              // (Token.cs:632-636) — kept verbatim in default mode
-              first
-            } else if (a.length == 2 &&
-                (first == StreamFilter.AsciiHex || first == StreamFilter.Ascii85) &&
-                named(a(1)) == StreamFilter.FlateDecode) {
-              chainFlate = true
-              first
-            } else {
-              // extended mode must NOT silently decode only the first stage
-              // of an unhandled chain (garbage downstream); surface the same
-              // clean error row the default mode gives for exotic filters
-              val names = a.iterator.collect { case n: NameTok => "/" + n.value }.mkString(" ")
-              throw new UnsupportedOperationException(
-                s"Stream filter chain [$names] is not (yet) supported.")
-            }
-          case t => named(t)
-        }
-      case None => StreamFilter.None
+      case Some(a: ArrTok) => named(a(0))
+      case Some(t)         => named(t)
+      case None            => StreamFilter.None
     }
-    tk.fillStreamBytes(this, filter, chainFlate)
+    tk.fillStreamBytes(this, filter)
     getDictionary("DecodeParms").foreach { parms =>
       val columns = parms.getNumber("Columns")
         .getOrElse(throw tk.fileException("Stream DecodeParms are missing Columns parameter."))
       val predictor = parms.getNumber("Predictor")
         .getOrElse(throw tk.fileException("Stream DecodeParms are missing Predictor parameter."))
-      val p = predictor.integer.get
-      if (!tk.extendedFilters) {
-        // reference behavior (Token.cs:652-668): only Predictor 12 with
-        // every row filter byte = 2 (Up) is accepted — kept verbatim
-        if (p != 12)
-          throw tk.fileException("Stream DecodeParms Predictor parameter should be 12.")
-        tk.applyPredictorUp(columns.integer.get)
-      } else {
-        // EXTENSION (opt-in `extendedFilters` only): the full ISO 32000-1
-        // §7.4.4.4 predictor surface — PNG predictors 10-15 all mean
-        // "per-row filter byte decides" (None/Sub/Up/Average/Paeth), 2 is
-        // the TIFF horizontal differencer, 1 is no prediction. Row width =
-        // Columns × Colors × BitsPerComponent/8; only 8-bit components are
-        // supported (the xref-stream / web-PDF case — sub-byte sample
-        // packing surfaces as a clean error row, never silent corruption).
-        val colors = parms.getNumber("Colors").flatMap(_.integer).getOrElse(1)
-        val bpc = parms.getNumber("BitsPerComponent").flatMap(_.integer).getOrElse(8)
-        if (bpc != 8)
-          throw tk.fileException(s"Stream DecodeParms BitsPerComponent $bpc is not supported (only 8).")
-        val bytesPerRow = columns.integer.get * colors
-        p match {
-          case 1 => () // no prediction
-          case 2 => tk.applyPredictorTiff(bytesPerRow, colors)
-          case v if v >= 10 && v <= 15 => tk.applyPredictorPng(bytesPerRow, colors)
-          case other =>
-            throw tk.fileException(s"Stream DecodeParms Predictor $other is not supported.")
-        }
-      }
+      // only Predictor 12 with every row filter byte = 2 (Up) is accepted
+      // (Token.cs:652-668)
+      if (predictor.integer.get != 12)
+        throw tk.fileException("Stream DecodeParms Predictor parameter should be 12.")
+      tk.applyPredictorUp(columns.integer.get)
     }
     tk
   }
@@ -303,7 +251,7 @@ final class RefTok(val objectId: Option[ObjectId]) extends PdfTok {
 }
 
 object StreamFilter extends Enumeration {
-  val None, FlateDecode, Lzw, AsciiHex, Ascii85, RunLength = Value
+  val None, FlateDecode = Value
 }
 
 /** Parse error carrying ±100 bytes of file context (reference: PdfParser/PdfException.cs:29-74). */

@@ -64,8 +64,7 @@ object Corpus {
   private[graft] lazy val generatorClassfiles: Seq[(String, Array[Byte])] = {
     import scala.jdk.CollectionConverters._
     val classes: Seq[Class[_]] = Seq(
-      Corpus.getClass, GoldenGen.getClass, PdfCrypto.getClass,
-      graft.pdf.ExtraFilters.getClass)
+      Corpus.getClass, GoldenGen.getClass, PdfCrypto.getClass)
     // "graft.fixtures.GoldenGen" matches GoldenGen.class, GoldenGen$.class,
     // GoldenGen$PdfBuilder.class, ... but NOT GoldenGenOther.class
     val prefixes = classes.map(_.getName.stripSuffix("$")).distinct
@@ -634,41 +633,37 @@ object Corpus {
   }
 
 
-  // Deterministic AESV2 (V4/R4) document keys, empty passwords — extended
-  // mode only (the reference throws on V 4: Tokeniser.cs:635-645).
+  // Deterministic AESV2 (V4/R4) document keys, empty passwords (the
+  // reader, like the reference, throws on V 4: Tokeniser.cs:635-645).
   // Two cached chains: /EncryptMetadata false appends 0xFFFFFFFF to the
-  // Algorithm-2 hash input (ISO 32000-1 step f), so its file key differs.
+  // Algorithm-2 hash input (ISO 32000-1 step f) — right after the /ID
+  // bytes, so it is passed as their suffix — and its file key differs.
   private val AesDocIdHex = "fedcba9876543210fedcba9876543210"
   private def aesChain(encryptMetadata: Boolean): (Array[Byte], Array[Byte], Array[Byte]) = {
     val docId = AesDocIdHex.grouped(2).map(h => Integer.parseInt(h, 16).toByte).toArray
-    val o = PdfCrypto.computeOwnerO("", "", 16)
-    val key = PdfCrypto.computeEncryptionKey(PdfCrypto.pad(""), o, EncPermission, docId, 16,
-      encryptMetadata)
+    val o = GoldenGen.computeOwnerO("", "", 16)
+    val keyInputId = if (encryptMetadata) docId else docId ++ Array.fill[Byte](4)(-1)
+    val key = PdfCrypto.computeEncryptionKey(PdfCrypto.pad(""), o, EncPermission, keyInputId, 16)
     val u = PdfCrypto.computeEncryptU(PdfCrypto.pad(""), docId, key)
     (o, key, u)
   }
   private lazy val aesOKeyU = aesChain(encryptMetadata = true)
   private lazy val aesOKeyUNoMeta = aesChain(encryptMetadata = false)
 
-  /** AES corpus (gate for the beyond-reference AESV2 capability): variant
-    * 0's chunk/page contract with every content stream AES-128-CBC-encrypted
-    * under the V4/R4 AESV2 crypt filter (deterministic per-object IVs). No
-    * /Info and no /Metadata: /StrF//StmF make every string/stream encrypted,
-    * and the gate wants the cipher path, not hex-string escaping games.
+  /** AES corpus: variant 0's chunk/page contract with every content stream
+    * AES-128-CBC-encrypted under the V4/R4 AESV2 crypt filter
+    * (deterministic per-object IVs). No /Info and no /Metadata.
     *
     * `(docId/2) % 3` routes each doc through one of the three real-world
-    * AESV2 encryption-dictionary DIALECTS (all seen in the wild; GoldenGen's
-    * fixtures parameterize the same three):
+    * AESV2 encryption-dictionary DIALECTS (all seen in the wild):
     *  - 0: top-level `/Length 128` (bits) + `/CF/StdCF/Length 16` (spec says
     *       BYTES there);
     *  - 1: `/EncryptMetadata false` — the file key itself changes
     *       (Algorithm 2 step f appends FFFFFFFF); no top-level /Length, so
     *       the reader takes the CF-Length path with the bytes convention;
-    *  - 2: `/CF/StdCF/Length 128` — the BITS convention some writers use
-    *       (the pdfbox ≤40⇒bytes heuristic must classify it as bits).
-    * Expected extraction under `extendedFilters = true` is plain `text` for
-    * every dialect; default mode replicates the reference's throw surface
-    * (error row). */
+    *  - 2: `/CF/StdCF/Length 128` — the BITS convention some writers use.
+    * The reader replicates the reference's throw surface (error row) for
+    * every dialect. */
   def pdfAesForDoc(docId: Long, text: String): Array[Byte] = {
     val dialect = ((docId / 2) % 3).toInt
     val (o, key, u) = if (dialect == 1) aesOKeyUNoMeta else aesOKeyU
@@ -677,8 +672,8 @@ object Corpus {
       val id = b.registerObject()
       val iv = Array.tabulate[Byte](16)(i =>
         ((docId * 131 + id * 31 + i * 7 + text.length) & 0xff).toByte)
-      val payload = PdfCrypto.aesEncrypt(
-        PdfCrypto.objectKeyAes(key, ObjectId(id, 0)), iv, ops.getBytes(ISO_8859_1))
+      val payload = GoldenGen.aesEncrypt(
+        GoldenGen.objectKeyAes(key, ObjectId(id, 0)), iv, ops.getBytes(ISO_8859_1))
       b.raw(s"$id 0 obj\n<</Length ${payload.length}>>stream\n")
       b.raw(payload)
       b.raw("\nendstream\nendobj\n")
@@ -726,12 +721,12 @@ object Corpus {
 
   /** R3 owner-only twin of [[pdfOwnerOnlyFromText]]: V 2/R 3/Length 40, /O
     * from the FULL Algorithm 3 chain (50×MD5 owner key + 20-key RC4), user
-    * password "graftuser" never handed to the caller — only the Algorithm 7
-    * owner path (extended mode, password [[OwnerPassword]]) can open it, and
-    * it must undo the whole 20-pass chain, not R2's single RC4. */
+    * password "graftuser" never handed to the caller — only an Algorithm 7
+    * owner path (password [[OwnerPassword]]) could open it, which the
+    * reference and the reader do not implement. */
   private lazy val ownerOnlyR3OKeyU: (Array[Byte], Array[Byte], Array[Byte]) = {
     val docId = EncDocIdHex.grouped(2).map(h => Integer.parseInt(h, 16).toByte).toArray
-    val o = PdfCrypto.computeOwnerO(OwnerPassword, "graftuser", 5)
+    val o = GoldenGen.computeOwnerO(OwnerPassword, "graftuser", 5)
     val key = PdfCrypto.computeEncryptionKey(PdfCrypto.pad("graftuser"), o, EncPermission, docId, 5)
     val u = PdfCrypto.computeEncryptU(PdfCrypto.pad("graftuser"), docId, key)
     (o, key, u)
@@ -751,13 +746,11 @@ object Corpus {
   }
 
   /** AESV2 owner-only: V4/R4 — /O is STILL the RC4-based Algorithm 3 chain
-    * (ISO 32000-1 keeps RC4 for /O and /U at R4; only payloads are AES), so
-    * [[graft.pdf.PdfCrypto.recoverUserPasswordFromO]]'s revision-≥3 branch
-    * opens it and decryption then proceeds through the AES cipher path —
-    * the owner-auth and AESV2 extensions composed. */
+    * (ISO 32000-1 keeps RC4 for /O and /U at R4; only payloads are AES);
+    * the reader rejects V 4 before any password is tried. */
   private lazy val aesOwnerOnlyOKeyU: (Array[Byte], Array[Byte], Array[Byte]) = {
     val docId = AesDocIdHex.grouped(2).map(h => Integer.parseInt(h, 16).toByte).toArray
-    val o = PdfCrypto.computeOwnerO(OwnerPassword, "graftuser", 16)
+    val o = GoldenGen.computeOwnerO(OwnerPassword, "graftuser", 16)
     val key = PdfCrypto.computeEncryptionKey(PdfCrypto.pad("graftuser"), o, EncPermission, docId, 16)
     val u = PdfCrypto.computeEncryptU(PdfCrypto.pad("graftuser"), docId, key)
     (o, key, u)
@@ -770,8 +763,8 @@ object Corpus {
       val id = b.registerObject()
       val iv = Array.tabulate[Byte](16)(i =>
         ((docIdNum * 131 + id * 31 + i * 7 + text.length) & 0xff).toByte)
-      val payload = PdfCrypto.aesEncrypt(
-        PdfCrypto.objectKeyAes(key, ObjectId(id, 0)), iv, ops.getBytes(ISO_8859_1))
+      val payload = GoldenGen.aesEncrypt(
+        GoldenGen.objectKeyAes(key, ObjectId(id, 0)), iv, ops.getBytes(ISO_8859_1))
       b.raw(s"$id 0 obj\n<</Length ${payload.length}>>stream\n")
       b.raw(payload)
       b.raw("\nendstream\nendobj\n")
@@ -786,8 +779,8 @@ object Corpus {
     b.finish(s"/Root $catalog 0 R/Encrypt $encId 0 R/ID[<$AesDocIdHex><$AesDocIdHex>]")
   }
 
-  // Deterministic AES-256 (V5) security bundles — extended mode only (the
-  // reference throws on V > 2). Real writers draw the 32-byte file key and
+  // Deterministic AES-256 (V5) security bundles (the reader, like the
+  // reference, throws on V > 2). Real writers draw the 32-byte file key and
   // the four 8-byte salts from a CSPRNG; fixtures pin them so every builder
   // output is byte-stable. R6 bundles pay the Algorithm-2.B hardened hash
   // (64+ AES/SHA-2 rounds per derivation) ONCE here, amortized corpus-wide
@@ -795,16 +788,16 @@ object Corpus {
   private val V5FileKey = Array.tabulate[Byte](32)(i => ((i * 37 + 11) & 0xff).toByte)
   private def v5Salts(seed: Int) = Array.tabulate[Byte](32)(i => ((seed * 53 + i * 29 + 5) & 0xff).toByte)
   private lazy val v5UserR6 =
-    PdfCrypto.makeV5Security("", OwnerPassword, V5FileKey, v5Salts(1), EncPermission,
+    GoldenGen.makeV5Security("", OwnerPassword, V5FileKey, v5Salts(1), EncPermission,
       encryptMetadata = true, revision = 6)
   private lazy val v5UserR5 =
-    PdfCrypto.makeV5Security("", OwnerPassword, V5FileKey, v5Salts(2), EncPermission,
+    GoldenGen.makeV5Security("", OwnerPassword, V5FileKey, v5Salts(2), EncPermission,
       encryptMetadata = true, revision = 5)
   private lazy val v5NoMetaR6 =
-    PdfCrypto.makeV5Security("", OwnerPassword, V5FileKey, v5Salts(3), EncPermission,
+    GoldenGen.makeV5Security("", OwnerPassword, V5FileKey, v5Salts(3), EncPermission,
       encryptMetadata = false, revision = 6)
   private lazy val v5OwnerOnly =
-    PdfCrypto.makeV5Security("graftuser", OwnerPassword, V5FileKey, v5Salts(4), EncPermission,
+    GoldenGen.makeV5Security("graftuser", OwnerPassword, V5FileKey, v5Salts(4), EncPermission,
       encryptMetadata = true, revision = 6)
 
   private def v5EncryptedBody(b: GoldenGen.PdfBuilder, docId: Long, text: String): Seq[Int] =
@@ -813,32 +806,30 @@ object Corpus {
       val iv = Array.tabulate[Byte](16)(i =>
         ((docId * 149 + id * 41 + i * 13 + text.length) & 0xff).toByte)
       // V5: the FILE key encrypts every stream directly — no per-object key
-      val payload = PdfCrypto.aesEncrypt(V5FileKey, iv, ops.getBytes(ISO_8859_1))
+      val payload = GoldenGen.aesEncrypt(V5FileKey, iv, ops.getBytes(ISO_8859_1))
       b.raw(s"$id 0 obj\n<</Length ${payload.length}>>stream\n")
       b.raw(payload)
       b.raw("\nendstream\nendobj\n")
       id
     }
 
-  private def v5EncDict(sec: PdfCrypto.V5Security, revision: Int, extra: String): String =
+  private def v5EncDict(sec: GoldenGen.V5Security, revision: Int, extra: String): String =
     s"<</Filter/Standard/V 5/R $revision/Length 256/P $EncPermission" +
       "/CF<</StdCF<</CFM/AESV3/AuthEvent/DocOpen/Length 32>>>>" +
       "/StmF/StdCF/StrF/StdCF" + extra +
       s"/O <${hexOf(sec.o)}>/U <${hexOf(sec.u)}>" +
       s"/OE <${hexOf(sec.oe)}>/UE <${hexOf(sec.ue)}>/Perms <${hexOf(sec.perms)}>>>"
 
-  /** AES-256 corpus (gate for the V5/AESV3 capability): variant 0's
-    * chunk/page contract with every content stream AES-256-CBC-encrypted
-    * under the file key (ISO 32000-2 drops per-object key derivation).
-    * `(docId/2) % 3` rotates three dialects, all opening with the EMPTY
-    * user password under `extendedFilters = true`:
+  /** AES-256 corpus: variant 0's chunk/page contract with every content
+    * stream AES-256-CBC-encrypted under the file key (ISO 32000-2 drops
+    * per-object key derivation). `(docId/2) % 3` rotates three dialects,
+    * all with the EMPTY user password:
     *  - 0: R6 — the hardened Algorithm-2.B hash (64+ variable rounds);
     *  - 1: R5 — the deprecated single-SHA-256 precursor (Adobe ext. 3);
     *  - 2: R6 with `/EncryptMetadata false` — unlike V4 the FILE KEY does
     *       not change (it's random, not password-derived), but the /Perms
     *       capsule's flag byte must read 'F' (Algorithm 13 validates it).
-    * Every dialect carries /Perms, so the gate also proves the
-    * Algorithm-13 round-trip; default mode keeps the reference's throw
+    * Every dialect carries /Perms; the reader keeps the reference's throw
     * surface (error row, unit-pinned). */
   def pdfAes256ForDoc(docId: Long, text: String): Array[Byte] = {
     val (sec, revision, extra) = ((docId / 2) % 3).toInt match {
@@ -854,9 +845,8 @@ object Corpus {
   }
 
   /** AES-256 owner-only: /U derives from user password "graftuser" (never
-    * handed out), so only Algorithm 12 with [[OwnerPassword]] opens it —
-    * the V5 owner path hashes (pwd ∥ salt ∥ U₄₈) and unwraps /OE, a
-    * different chain from the RC4 inversion the V≤4 arms exercise. */
+    * handed out), so only Algorithm 12 with [[OwnerPassword]] would open it;
+    * the reader rejects V 5 before any password is tried. */
   def pdfAes256OwnerOnlyFromText(docId: Long, text: String): Array[Byte] = {
     val b = new GoldenGen.PdfBuilder()
     val contentIds = v5EncryptedBody(b, docId, text)
@@ -865,55 +855,38 @@ object Corpus {
     b.finish(s"/Root $catalog 0 R/Encrypt $encId 0 R/ID[<$AesDocIdHex><$AesDocIdHex>]")
   }
 
-  /** Owner-only corpus router: R2 / R3 / AESV2-R4 / AES-256-R6 by
-    * `(docId/2) % 4`, so all four owner-auth surfaces (single-pass RC4
-    * inversion, 20-key chain inversion, owner-auth→AES composition, and
-    * the V5 Algorithm-12 /OE unwrap) are driver-gate-visible. */
-  def pdfOwnerOnlyForDoc(docId: Long, text: String): Array[Byte] =
-    ((docId / 2) % 4).toInt match {
-      case 0 => pdfOwnerOnlyFromText(text)
-      case 1 => pdfOwnerOnlyR3FromText(text)
-      case 2 => pdfAesOwnerOnlyFromText(docId, text)
-      case _ => pdfAes256OwnerOnlyFromText(docId, text)
-    }
-
-  /** EXTENDED-mode corpus: the exact chunk/page contract of variant 0, but
-    * content streams encoded with the opt-in filter surface
-    * (`extendedFilters = true` — the reference supports only None and
-    * FlateDecode and throws otherwise; replicated in default mode), routed
-    * by `(doc_id/2) % 5`: LZWDecode, ASCIIHexDecode, ASCII85Decode,
-    * RunLengthDecode, and the `[ASCII85Decode FlateDecode]` two-stage
-    * chain. Expected extraction is plain `text` (no newline ops), so the
-    * gate oracle is trivial while the decode path is anything but. */
+  /** Refused-filter corpus: the exact chunk/page contract of variant 0, but
+    * content streams encoded with filters the reference does not decode (it
+    * supports only None and FlateDecode and throws otherwise; the reader
+    * replicates that as an error row), routed by `(doc_id/2) % 5`:
+    * LZWDecode, ASCIIHexDecode, ASCII85Decode, RunLengthDecode, and the
+    * `[ASCII85Decode FlateDecode]` two-stage chain. */
   def pdfExtendedForDoc(docId: Long, text: String): Array[Byte] = {
-    import graft.pdf.ExtraFilters
     val b = new GoldenGen.PdfBuilder()
     val contentIds = rotatingOpsPerPage(text).map { ops =>
       val plain = ops.getBytes(ISO_8859_1)
       val (dictExtra, payload) = ((docId / 2) % 5).toInt match {
-        case 0 => ("/Filter/LZWDecode", ExtraFilters.lzwEncode(plain))
-        case 1 => ("/Filter/ASCIIHexDecode", ExtraFilters.asciiHexEncode(plain))
-        case 2 => ("/Filter/ASCII85Decode", ExtraFilters.ascii85Encode(plain))
-        case 3 => ("/Filter/RunLengthDecode", ExtraFilters.runLengthEncode(plain))
+        case 0 => ("/Filter/LZWDecode", GoldenGen.lzwEncode(plain))
+        case 1 => ("/Filter/ASCIIHexDecode", GoldenGen.asciiHexEncode(plain))
+        case 2 => ("/Filter/ASCII85Decode", GoldenGen.ascii85Encode(plain))
+        case 3 => ("/Filter/RunLengthDecode", GoldenGen.runLengthEncode(plain))
         case _ => ("/Filter[/ASCII85Decode/FlateDecode]",
-          ExtraFilters.ascii85Encode(GoldenGen.zlib(plain)))
+          GoldenGen.ascii85Encode(GoldenGen.zlib(plain)))
       }
       b.addStream(dictExtra, payload)
     }
     finishClassic(b, contentIds, text)
   }
 
-  /** HYBRID-reference gate corpus (ISO 32000-1 §7.5.8.4): the variant-0
+  /** HYBRID-reference corpus (ISO 32000-1 §7.5.8.4): the variant-0
     * chunk/page contract, but the ENTIRE page graph (page dicts, pages
     * root, catalog) hides inside a compressed object stream that only the
     * trailer's /XRefStm supplement can resolve — the classic table lists
     * just the content streams as in-use and marks every structural object
     * FREE, exactly the compatibility shape Acrobat writes for pre-1.5
     * readers. The reference ignores /XRefStm (Tokeniser.cs:518 bookkeeping
-    * set; default mode replicates that as an error row — unit-pinned), so
-    * extraction with `extendedFilters = true` gates the resurrect path on
-    * every page of every document. Content streams rotate raw/Flate on
-    * (doc_id/2) so the hybrid walk composes with the filter chain. */
+    * set); the reader replicates that as an error row (unit-pinned).
+    * Content streams rotate raw/Flate on (doc_id/2). */
   def pdfHybridForDoc(docId: Long, text: String): Array[Byte] = {
     val b = new GoldenGen.PdfBuilder("1.5")
     val contentIds = rotatingOpsPerPage(text).map(ops =>
@@ -1007,44 +980,29 @@ object Corpus {
     }
   }
 
-  /** Source char the Type0 gate writes as CID 0x0001, whose ToUnicode
-    * destination <00660066> is the TWO-char "ff" — extended-mode composite
-    * decoding keeps multi-char targets verbatim (no ligature packing; the
-    * packing is a default-mode reference quirk, Tokeniser.cs:2616-2644).
-    * 'e' so essentially every gate doc exercises the multi-char arm. */
+  /** Source char the Type0 corpus writes as CID 0x0001, whose ToUnicode
+    * destination <00660066> is the TWO-char "ff". 'e' so essentially every
+    * doc carries it. */
   final val Type0MarkerFF = 'e'
 
-  /** Source char the Type0 gate writes as CID 0x0002, whose ToUnicode
-    * destination <D83DDE00> is a UTF-16 SURROGATE PAIR (U+1F600) — the
-    * non-BMP arm of the destination reader. 't' for the same reason. */
+  /** Source char the Type0 corpus writes as CID 0x0002, whose ToUnicode
+    * destination <D83DDE00> is a UTF-16 SURROGATE PAIR (U+1F600). 't' for
+    * the same reason. */
   final val Type0MarkerEmoji = 't'
 
-  /** Expected extraction for [[pdfType0ForDoc]] (Scala twin of the SQL
-    * oracle `replace(replace(text,'e','ff'),'t',chr(128512))`). */
-  def type0ExpectedText(text: String): String = text.flatMap {
-    case Type0MarkerFF    => "ff"
-    case Type0MarkerEmoji => "😀"
-    case c                => c.toString
-  }
-
-  /** Per-char CID encoding of the Type0 gate: markers take the bfchar CIDs,
-    * printable ASCII rides the <0120> <017E> <0020> bfrange (cid = char +
-    * 0x100, all above the 8-bit table the reference is limited to), and
-    * anything else is written as its OWN codepoint with NO CMap entry — the
-    * reader's Identity-passthrough arm (unmapped cid → the cid itself).
-    *
-    * Supported text domain (require-pinned, LOUD not silently wrong): no
-    * chars in {U+0001, U+0002} ∪ [U+0120, U+017E] — those codepoints
-    * collide with the marker/bfrange CID windows and would decode through
-    * the CMap instead of passing through. The gate corpus is printable
-    * ASCII (verified 32..121 at every sf), far inside the domain. */
+  /** Per-char CID encoding of the Type0 corpus: markers take the bfchar
+    * CIDs, printable ASCII rides the <0120> <017E> <0020> bfrange (cid =
+    * char + 0x100, all above the 8-bit table the reference is limited to),
+    * and anything else is written as its OWN codepoint with NO CMap entry.
+    * Chars in {U+0001, U+0002} ∪ [U+0120, U+017E] collide with the
+    * marker/bfrange CID windows and are refused (require). */
   private def type0Cids(chunk: String): Array[Int] = chunk.map {
     case Type0MarkerFF    => 0x0001
     case Type0MarkerEmoji => 0x0002
     case c if c >= 0x20 && c <= 0x7e => c + 0x100
     case c =>
       require(c > 0x02 && !(c >= 0x120 && c <= 0x17e),
-        f"type0 gate: char U+${c.toInt}%04X collides with a CID window")
+        f"type0 corpus: char U+${c.toInt}%04X collides with a CID window")
       c.toInt
   }.toArray
 
@@ -1056,17 +1014,14 @@ object Corpus {
     case b => ops.append(b.toChar)
   }
 
-  /** Type0/Identity-H composite-font corpus (gate for the beyond-reference
-    * CID capability): variant-0 chunking (64-char chunks, 8 per page), every
-    * chunk shown through a Type0 font with /Encoding/Identity-H, a
-    * CIDFontType2 descendant and a full-range ToUnicode CMap. Show ops
-    * rotate hex `Tj` / escaped-literal `'` / hex-inside-`TJ` on the global
-    * chunk index, so BOTH 2-byte code paths (hex nibbles and literal bytes
-    * with octal escapes) and the array form are gate-visible. The reference
-    * parses such CMaps into a map it never consults above 0xFF (PdfFont.cs:40,
-    * Tokeniser.cs:2464-2472) — real-world Identity-H text is unreadable to
-    * it; extended mode decodes codes as big-endian 2-byte CIDs through the
-    * full map. Expected extraction is [[type0ExpectedText]]. */
+  /** Type0/Identity-H composite-font corpus: variant-0 chunking (64-char
+    * chunks, 8 per page), every chunk shown through a Type0 font with
+    * /Encoding/Identity-H, a CIDFontType2 descendant and a full-range
+    * ToUnicode CMap. Show ops rotate hex `Tj` / escaped-literal `'` /
+    * hex-inside-`TJ` on the global chunk index. The reference parses such
+    * CMaps with 2-hex-digit CID readers and decodes single BYTES through
+    * its 8-bit table (PdfFont.cs:40, Tokeniser.cs:2464-2472), so the
+    * reader does not recover the source text from these documents. */
   def pdfType0ForDoc(docId: Long, text: String): Array[Byte] = {
     val b = new GoldenGen.PdfBuilder()
     val cmap =
@@ -1121,15 +1076,13 @@ object Corpus {
     finishClassic(b, contentIds, text, fontObj = Some(("F1", fontId)))
   }
 
-  /** EXTENDED-mode predictor corpus: the exact chunk/page contract of
-    * variant 4 (cross-reference STREAM layout), but the xref stream's rows
-    * are encoded with the predictor surface the reference rejects
-    * (Token.cs:652-668 accepts only Predictor 12 + all-Up rows), routed by
-    * `(doc_id/2) % 3`: PNG Predictor 15 with per-row filter types rotating
+  /** Refused-predictor corpus: the exact chunk/page contract of variant 4
+    * (cross-reference STREAM layout), but the xref stream's rows are
+    * encoded with predictors the reference rejects (Token.cs:652-668
+    * accepts only Predictor 12 + all-Up rows), routed by `(doc_id/2) % 3`:
+    * PNG Predictor 15 with per-row filter types rotating
     * None/Sub/Up/Average/Paeth, TIFF Predictor 2 (horizontal differencing),
-    * and Predictor 1 (DecodeParms present, no prediction). Readable only
-    * under `extendedFilters = true`; expected extraction equals variant
-    * 4's, so the gate oracle is the same closed form. */
+    * and Predictor 1 (DecodeParms present, no prediction). */
   def pdfPredictorForDoc(docId: Long, text: String): Array[Byte] = {
     val mode = ((docId / 2) % 3).toInt match {
       case 0 => "png"

@@ -108,7 +108,7 @@ class CorpusVariantsSpec extends AnyFunSuite {
     assert(r.documentId.contains(s""""<${Corpus.docIdHex(t)}>"; "<${Corpus.docIdHex(t)}>"; """))
   }
 
-  test("AES corpus: all 3 AESV2 dialects round-trip under extendedFilters; default mode = error row") {
+  test("AES corpus: every AESV2 dialect is the reference error row") {
     // dialect routing: (docId/2)%3 — 0: top-level /Length 128 + CF bytes,
     // 1: /EncryptMetadata false (different file key), 2: CF Length in bits
     for (dialect <- 0 until 3; t <- Seq(texts(0), texts(3))) {
@@ -120,34 +120,16 @@ class CorpusVariantsSpec extends AnyFunSuite {
         case 1 => assert(hay.contains("/EncryptMetadata false") && !hay.contains("/Length 128"))
         case _ => assert(hay.contains("/Length 128>>") && !hay.contains("EncryptMetadata"))
       }
-      val ext = PdfExtract.extract(payload, contentDelimiter = "",
-        captureFragments = false, extendedFilters = true)
-      assert(ext.decodeFailures == 0, s"dialect $dialect: ${ext.error}")
-      assert(ext.text == t, s"dialect $dialect")
       // the reference supports only the RC4 standard handler and throws on
-      // V 4 (Tokeniser.cs:635-645) — default mode replicates that surface
+      // V 4 (Tokeniser.cs:635-645)
       val default = PdfExtract.extract(payload, contentDelimiter = "", captureFragments = false)
       assert(default.decodeFailures > 0 && default.error.isDefined)
     }
-    // the EncryptMetadata-false chain really derives a DIFFERENT key: its
-    // payload must NOT decrypt under the default-dialect document key
-    val p1 = Corpus.pdfAesForDoc(2L, texts(3)) // dialect 1
-    val forged = new String(p1.map(b => (b & 0xff).toChar))
-      .replace("/EncryptMetadata false", "/Length 128           ") // same byte length: offsets stay valid
-    val wrongKey = PdfExtract.extract(forged.map(_.toByte).toArray,
-      contentDelimiter = "", captureFragments = false, extendedFilters = true)
-    assert(wrongKey.decodeFailures > 0 || wrongKey.text != texts(3),
-      "EncryptMetadata=false must change the file key")
   }
 
-  test("hybrid /XRefStm corpus: every text shape extracts under extended mode, errors under default") {
+  test("hybrid /XRefStm corpus: every text shape is an error row, like the reference") {
     for ((t, ti) <- texts.zipWithIndex; docId <- Seq(0L, 2L)) { // both deflate arms
       val payload = Corpus.pdfHybridForDoc(docId, t)
-      val ext = PdfExtract.extract(payload, contentDelimiter = "",
-        captureFragments = false, extendedFilters = true)
-      assert(ext.decodeFailures == 0, s"text#$ti docId=$docId: ${ext.error}")
-      assert(ext.text == t, s"text#$ti docId=$docId")
-      assert(ext.pages == Corpus.pdfPageCount(t), s"text#$ti docId=$docId pages")
       // reference parity: /XRefStm is trailer bookkeeping, the hidden
       // catalog stays a free entry -> structured error row, no text
       val default = PdfExtract.extract(payload, contentDelimiter = "",
@@ -166,26 +148,14 @@ class CorpusVariantsSpec extends AnyFunSuite {
     assert(r.decodeFailures == 1 && r.text == "" && r.pages == 0)
   }
 
-  test("Algorithm 7 owner-password decryption (extended mode): R2 + R3 + AESV2-R4 extract, wrong password errors") {
+  test("owner password is never tried: R2, R3 and AESV2-R4 owner-only docs error") {
     val t = texts(2)
     for ((payload, label) <- Seq(
         (Corpus.pdfOwnerOnlyFromText(t), "R2"),
         (Corpus.pdfOwnerOnlyR3FromText(t), "R3"),
         (Corpus.pdfAesOwnerOnlyFromText(4L, t), "AESV2-R4"))) {
-      // the owner password opens the doc in extended mode
-      val ok = PdfExtract.extract(payload, password = Corpus.OwnerPassword,
-        contentDelimiter = "", captureFragments = false, extendedFilters = true)
-      assert(ok.decodeFailures == 0 && ok.text == t, s"$label: ${ok.error}")
-      // a WRONG owner password must fall through to the reference error...
-      val bad = PdfExtract.extract(payload, password = "graftwrong",
-        contentDelimiter = "", captureFragments = false, extendedFilters = true)
-      assert(bad.error.contains(
-        "UnsupportedOperationException: owner-password authentication is not implemented"),
-        s"$label wrong-password error=${bad.error}")
-      assert(bad.decodeFailures == 1 && bad.text == "")
-      // ...and DEFAULT mode never attempts Algorithm 7, even with the right
-      // owner password: R2/R3 reach the reference's owner throw; the AESV2
-      // doc never gets that far — default mode rejects V4 at the
+      // even the right owner password reaches the reference's owner throw
+      // for R2/R3; the AESV2 doc never gets that far — V4 is rejected at the
       // Standard-encryption check (the reference's V>2 surface)
       val deflt = PdfExtract.extract(payload, password = Corpus.OwnerPassword,
         contentDelimiter = "", captureFragments = false)
@@ -197,28 +167,28 @@ class CorpusVariantsSpec extends AnyFunSuite {
   }
 
   test("V5 crypto primitives: R5 hash is a single SHA-256; R6 hardened hash differs and is deterministic") {
-    import graft.pdf.PdfCrypto
-    val pwd = PdfCrypto.passwordBytesV5("graftuser")
+    import graft.fixtures.GoldenGen
+    val pwd = GoldenGen.passwordBytesV5("graftuser")
     val salt = Array.tabulate[Byte](8)(i => (i * 3 + 1).toByte)
     // R5 = SHA-256(pwd ∥ salt ∥ udata) verbatim — checked against JCE
     // directly, independent of hash2B's own code path
     val md = java.security.MessageDigest.getInstance("SHA-256")
     md.update(pwd); md.update(salt)
-    val r5 = PdfCrypto.hash2B(pwd, salt, Array.emptyByteArray, 5)
+    val r5 = GoldenGen.hash2B(pwd, salt, Array.emptyByteArray, 5)
     assert(r5.sameElements(md.digest()))
     // R6 actually runs the Algorithm-2.B loop: 32 bytes, differs from R5,
     // deterministic, and sensitive to the udata argument (the /O-side hash)
-    val r6 = PdfCrypto.hash2B(pwd, salt, Array.emptyByteArray, 6)
+    val r6 = GoldenGen.hash2B(pwd, salt, Array.emptyByteArray, 6)
     assert(r6.length == 32 && !r6.sameElements(r5))
-    assert(r6.sameElements(PdfCrypto.hash2B(pwd, salt, Array.emptyByteArray, 6)))
-    assert(!r6.sameElements(PdfCrypto.hash2B(pwd, salt, Array.fill[Byte](48)(7), 6)))
+    assert(r6.sameElements(GoldenGen.hash2B(pwd, salt, Array.emptyByteArray, 6)))
+    assert(!r6.sameElements(GoldenGen.hash2B(pwd, salt, Array.fill[Byte](48)(7), 6)))
   }
 
   test("encrypted nested string: keyed by the containing object") {
-    // extended mode decrypts a string nested in the page dict with the page
-    // object's key; default mode keeps the reference crash surface
+    // a string nested in the page dict, encrypted with the page object's
+    // key: the reader keeps the reference crash surface
     import graft.fixtures.GoldenGen
-    import graft.pdf.{DictTok, ObjectId, PdfCrypto, PdfTokeniser}
+    import graft.pdf.{ObjectId, PdfCrypto}
     import java.nio.charset.StandardCharsets.ISO_8859_1
     // V1/R2 empty-password chain, like variant 3
     val docIdHex = "0123456789abcdef0123456789abcdef"
@@ -254,25 +224,13 @@ class CorpusVariantsSpec extends AnyFunSuite {
       s"<</Filter/Standard/V 1/R 2/P -44/O <${o.map(x => f"${x & 0xff}%02x").mkString}>" +
         s"/U <${u.map(x => f"${x & 0xff}%02x").mkString}>>>")
     val pdf = b.finish(s"/Root $catalog 0 R/Encrypt $encId 0 R/ID[<$docIdHex><$docIdHex>]")
-    // extended mode: nested strings decrypt with the CONTAINING object's
-    // key (ISO 32000-1 §7.6.2) — the page parses and its text extracts
-    val ext = PdfExtract.extract(pdf, contentDelimiter = "", captureFragments = false,
-      extendedFilters = true)
-    assert(ext.text == "body" && ext.error.isEmpty, ext.error)
-    val tk = new PdfTokeniser(pdf, contentDelimiter = "", extendedFilters = true)
-    tk.verifyFileHeader()
-    tk.findPages()
-    val page = tk.trailerEntries("Root").asInstanceOf[DictTok]
-      .getDictionary("Pages").flatMap(_.getArray("Kids")).map(_(0)).get.asInstanceOf[DictTok]
-    assert(page.objectId.contains(ObjectId(pageId, 0)))
-    assert(page.getString("GraftNote").contains(note), page.getString("GraftNote"))
-    // default mode: the reference's nested-string decrypt crash surface
-    // (Token.cs:269) is kept — the document becomes an error row
+    // the reference's nested-string decrypt crash surface (Token.cs:269) is
+    // kept — the document becomes an error row
     val dft = PdfExtract.extract(pdf, contentDelimiter = "", captureFragments = false)
     assert(dft.text == "" && dft.error.exists(_.contains("NoSuchElementException")), dft.error)
   }
 
-  test("review fixes: malformed additive structures never cost page text; non-Identity Type0 keeps the overlay; CID overflow throws; surrogate passthrough is replaced") {
+  test("malformed additive structures never cost page text") {
     import graft.fixtures.GoldenGen
     import java.nio.charset.StandardCharsets.ISO_8859_1
     // dangling /Outlines, /AcroForm and /Names refs sit in catalog keys the
@@ -285,113 +243,33 @@ class CorpusVariantsSpec extends AnyFunSuite {
     val broken = PdfExtract.extract(b1.finish(s"/Root $cat1 0 R"),
       contentDelimiter = "", captureFragments = false)
     assert(broken.text == "kept text", broken.error)
-
-    def fontDoc(fontBody: String, cmap: String, ops: String): Array[Byte] = {
-      val b = new GoldenGen.PdfBuilder()
-      val cmapId = b.addStream("", cmap.getBytes(ISO_8859_1))
-      val fid = b.addObject(s"<<$fontBody/ToUnicode $cmapId 0 R>>")
-      val cid = b.addStream("", ops.getBytes(ISO_8859_1))
-      val cat = GoldenGen.catalogFor(b, Seq(cid), fontObj = Some(("F1", fid)))
-      b.finish(s"/Root $cat 0 R")
-    }
-    val overlayCmap =
-      "begincmap\n1 begincodespacerange\n<00> <FF>\nendcodespacerange\n" +
-        "1 beginbfchar\n<41> <0042>\nendbfchar\nendcmap"
-    // a NON-Identity Type0 font (here: no /Encoding key — a predefined-CMap
-    // name would fail the 8-bit table lookup in both modes, faithfully)
-    // must keep the default overlay path in extended mode, not be silently
-    // routed to the CID parse its decode never consults
-    val nonIdentity = PdfExtract.extract(
-      fontDoc("/Type/Font/Subtype/Type0", overlayCmap, "BT /F1 10 Tf (A) Tj ET"),
-      contentDelimiter = "", captureFragments = false, extendedFilters = true)
-    assert(nonIdentity.text == "B", nonIdentity.text)
-
-    // a 9-digit CID would wrap the Int back into range: must throw into the
-    // font exception (decode failure), never silently poison the map
-    val overflowCmap =
-      "begincmap\n1 begincodespacerange\n<0000> <FFFF>\nendcodespacerange\n" +
-        "1 beginbfchar\n<100000000> <0041>\nendbfchar\nendcmap"
-    val overflow = PdfExtract.extract(
-      fontDoc("/Type/Font/Subtype/Type0/Encoding/Identity-H", overflowCmap, "BT /F1 10 Tf <0041> Tj ET"),
-      contentDelimiter = "", captureFragments = false, extendedFilters = true)
-    assert(overflow.decodeFailures >= 1)
-
-    // unmapped surrogate-range CIDs pass through as U+FFFD, keeping the
-    // text a valid UTF-16 string
-    val idCmap =
-      "begincmap\n1 begincodespacerange\n<0000> <FFFF>\nendcodespacerange\nendcmap"
-    val sur = PdfExtract.extract(
-      fontDoc("/Type/Font/Subtype/Type0/Encoding/Identity-H", idCmap, "BT /F1 10 Tf <D800 0041> Tj ET"),
-      contentDelimiter = "", captureFragments = false, extendedFilters = true)
-    assert(sur.text == "�A", sur.text.map(_.toInt).mkString(","))
   }
 
-  test("Type0/Identity-H corpus: extended mode decodes 2-byte CIDs through the full CMap; default mode keeps the reference surface") {
+  test("Type0/Identity-H corpus keeps the reference surface: no full-CMap decode") {
+    // the text a full-CMap decode would give: 'e' -> "ff" (multi-char
+    // bfchar), 't' -> U+1F600 (surrogate-pair bfchar), the rest unchanged
+    def fullCmapText(t: String): String = t.flatMap {
+      case Corpus.Type0MarkerFF    => "ff"
+      case Corpus.Type0MarkerEmoji => "😀"
+      case c                       => c.toString
+    }
     for ((t, i) <- texts.zipWithIndex) {
       val docId = i.toLong * 2
       val payload = Corpus.pdfType0ForDoc(docId, t)
       val hay = new String(payload.map(b => (b & 0xff).toChar))
       assert(hay.contains("/Subtype/Type0") && hay.contains("/Encoding/Identity-H")
         && hay.contains("/Subtype/CIDFontType2"))
-      // extended: the full-CMap decode — multi-char "ff" target for 'e',
-      // surrogate-pair U+1F600 for 't', bfrange above 0xFF for the rest
-      val ext = PdfExtract.extract(payload, contentDelimiter = "",
-        captureFragments = false, extendedFilters = true)
-      assert(ext.decodeFailures == 0, s"text $i: ${ext.error}")
-      assert(ext.text == Corpus.type0ExpectedText(t), s"text $i")
-      // default mode: the reference parses the CMap but its readers cap
-      // CIDs at 2 hex digits and its decode never consults entries above
-      // 0xFF — the document "extracts", but not to the real text (and it
-      // must be an error-free-or-error-row surface, never a throw)
+      // the reference parses the CMap but its readers cap CIDs at 2 hex
+      // digits and its decode never consults entries above 0xFF — the
+      // document "extracts", but not to the real text (and it must be an
+      // error-free-or-error-row surface, never a throw)
       val default = PdfExtract.extract(payload, contentDelimiter = "",
         captureFragments = false)
-      assert(default.text != Corpus.type0ExpectedText(t) || t.isEmpty, s"text $i")
+      assert(default.text != fullCmapText(t) || t.isEmpty, s"text $i")
     }
-    // the expected-text twin matches the SQL oracle's replace chain shape
-    assert(Corpus.type0ExpectedText("tests") == "😀ff" + "s" + "😀" + "s")
   }
 
-  test("Type0 decode details: Identity passthrough, odd-length strings, bfrange array form") {
-    import graft.fixtures.GoldenGen
-    import java.nio.charset.StandardCharsets.ISO_8859_1
-    // passthrough: a char outside the CMap (here U+00E9 é, written as its
-    // own codepoint with no entry) decodes to itself
-    val pass = PdfExtract.extract(Corpus.pdfType0ForDoc(0L, "café bar"),
-      contentDelimiter = "", captureFragments = false, extendedFilters = true)
-    assert(pass.text == Corpus.type0ExpectedText("café bar"))
-
-    // hand-built doc: odd-length hex string (lone trailing byte zero-pads
-    // into the high byte) and the bfrange ARRAY-destination form
-    def doc(ops: String, cmap: String): Array[Byte] = {
-      val b = new GoldenGen.PdfBuilder()
-      val cmapId = b.addStream("", cmap.getBytes(ISO_8859_1), deflate = false)
-      val fid = b.addObject(s"<</Type/Font/Subtype/Type0/Encoding/Identity-H/ToUnicode $cmapId 0 R>>")
-      val cid = b.addStream("", ops.getBytes(ISO_8859_1), deflate = false)
-      val catalog = GoldenGen.catalogFor(b, Seq(cid), fontObj = Some(("F1", fid)))
-      b.finish(s"/Root $catalog 0 R")
-    }
-    val arrayCmap =
-      """begincmap
-        |1 begincodespacerange
-        |<0000> <FFFF>
-        |endcodespacerange
-        |1 beginbfrange
-        |<0041> <0042> [<005A0059> <0058>]
-        |endbfrange
-        |endcmap""".stripMargin
-    // <0041> → "ZY", <0042> → "X" via the array form; trailing lone byte
-    // 0x41 zero-pads to cid 0x4100 → unmapped → passthrough char U+4100
-    val r = PdfExtract.extract(doc("BT /F1 10 Tf <0041004241> Tj ET", arrayCmap),
-      contentDelimiter = "", captureFragments = false, extendedFilters = true)
-    assert(r.decodeFailures == 0, r.error)
-    assert(r.text == "ZYX\u4100", r.text)
-    // literal-string arm: same codes as escaped bytes (\000A = 0x00 0x41)
-    val r2 = PdfExtract.extract(doc("BT /F1 10 Tf (\\000A\\000B) Tj ET", arrayCmap),
-      contentDelimiter = "", captureFragments = false, extendedFilters = true)
-    assert(r2.text == "ZYX", r2.text)
-  }
-
-  test("AES-256 corpus: R6 / R5 / EncryptMetadata-false dialects round-trip; wrong password + default mode error") {
+  test("AES-256 corpus: every R6 / R5 / EncryptMetadata-false dialect is an error row") {
     // dialect routing: (docId/2)%3 — 0: R6 (hardened Algorithm-2.B hash),
     // 1: deprecated R5 (single SHA-256), 2: R6 + /EncryptMetadata false
     for (dialect <- 0 until 3; t <- Seq(texts(0), texts(3))) {
@@ -404,66 +282,30 @@ class CorpusVariantsSpec extends AnyFunSuite {
         case 1 => assert(hay.contains("/R 5"))
         case _ => assert(hay.contains("/R 6") && hay.contains("/EncryptMetadata false"))
       }
-      // empty USER password opens it in extended mode
-      val ext = PdfExtract.extract(payload, contentDelimiter = "",
-        captureFragments = false, extendedFilters = true)
-      assert(ext.decodeFailures == 0, s"dialect $dialect: ${ext.error}")
-      assert(ext.text == t, s"dialect $dialect")
-      // the bundle's OWNER password opens the same doc via Algorithm 12
-      val owner = PdfExtract.extract(payload, password = Corpus.OwnerPassword,
-        contentDelimiter = "", captureFragments = false, extendedFilters = true)
-      assert(owner.decodeFailures == 0 && owner.text == t, s"dialect $dialect owner: ${owner.error}")
-      // a wrong password fails BOTH Algorithm 11 and 12
-      val bad = PdfExtract.extract(payload, password = "graftwrong",
-        contentDelimiter = "", captureFragments = false, extendedFilters = true)
-      assert(bad.error.exists(_.contains("invalid user or owner password for AES-256")),
-        s"dialect $dialect wrong-password error=${bad.error}")
-      // default mode rejects V5 at the reference's Standard-encryption check
+      // V5 is rejected at the reference's Standard-encryption check
       val default = PdfExtract.extract(payload, contentDelimiter = "", captureFragments = false)
       assert(default.decodeFailures > 0 &&
         default.error.exists(_.contains("Standard encryption")), s"dialect $dialect: ${default.error}")
     }
-    // Algorithm 13: a tampered /Perms capsule must be rejected, not honored
-    val p = Corpus.pdfAes256ForDoc(0L, texts(3))
-    val hay = new String(p.map(b => (b & 0xff).toChar))
-    val at = hay.indexOf("/Perms <") + "/Perms <".length
-    val flipped = hay.updated(at, if (hay(at) == '0') '1' else '0') // same length: offsets stay valid
-    val tampered = PdfExtract.extract(flipped.map(_.toByte).toArray,
-      contentDelimiter = "", captureFragments = false, extendedFilters = true)
-    assert(tampered.error.exists(_.contains("/Perms does not validate")),
-      s"tampered-Perms error=${tampered.error}")
   }
 
-  test("AES-256 owner-only (Algorithm 12): owner password opens, empty/user path fails, default mode rejects V5") {
+  test("AES-256 owner-only doc: the owner password still ends in the V5 error row") {
     val t = texts(2)
     val payload = Corpus.pdfAes256OwnerOnlyFromText(6L, t)
-    val ok = PdfExtract.extract(payload, password = Corpus.OwnerPassword,
-      contentDelimiter = "", captureFragments = false, extendedFilters = true)
-    assert(ok.decodeFailures == 0 && ok.text == t, s"owner: ${ok.error}")
-    // the user password is "graftuser", never handed out — the empty
-    // password fails Algorithm 11 AND Algorithm 12
-    val empty = PdfExtract.extract(payload, contentDelimiter = "",
-      captureFragments = false, extendedFilters = true)
-    assert(empty.error.exists(_.contains("invalid user or owner password for AES-256")),
-      s"empty-password error=${empty.error}")
     val deflt = PdfExtract.extract(payload, password = Corpus.OwnerPassword,
       contentDelimiter = "", captureFragments = false)
     assert(deflt.error.exists(_.contains("Standard encryption")),
       s"default-mode error=${deflt.error}")
   }
 
-  test("extended-filter corpus: all 4 encodings round-trip under extendedFilters; default mode errors") {
+  test("refused-filter corpus: all 4 encodings are error rows, like the reference") {
     val t = texts(3)
     for (route <- 0 until 4) {
       val id = route.toLong * 2
       val payload = Corpus.pdfExtendedForDoc(id, t)
-      val ext = PdfExtract.extract(payload, contentDelimiter = "",
-        captureFragments = false, extendedFilters = true)
-      assert(ext.decodeFailures == 0, s"route $route: ${ext.error}")
-      assert(ext.text == t, s"route $route")
-      // default mode replicates the reference: None/FlateDecode only
+      // the reference decodes None/FlateDecode only
       val default = PdfExtract.extract(payload, contentDelimiter = "", captureFragments = false)
-      assert(default.decodeFailures > 0, s"route $route should fail in default mode")
+      assert(default.decodeFailures > 0, s"route $route should fail")
     }
   }
 
@@ -529,10 +371,7 @@ class CorpusVariantsSpec extends AnyFunSuite {
       (1 to 1 + rnd.nextInt(8)).foreach { _ =>
         mutated(rnd.nextInt(mutated.length)) = rnd.nextInt(256).toByte
       }
-      // alternate extended mode so the CID-decode and extended-filter
-      // paths fuzz too
-      val r = PdfExtract.extract(mutated, captureFragments = false,
-        extendedFilters = i % 2 == 0) // must not throw
+      val r = PdfExtract.extract(mutated, captureFragments = false) // must not throw
       if (r.error.isDefined) errorRows += 1
     }
     (1 to 40).foreach { i =>
@@ -583,7 +422,6 @@ class CorpusVariantsSpec extends AnyFunSuite {
     val names = Corpus.generatorClassfiles.map(_._1)
     assert(names.contains("graft.fixtures.GoldenGen$PdfBuilder"), names.mkString(", "))
     assert(names.contains("graft.pipeline.Corpus$"), names.mkString(", "))
-    assert(names.exists(_.startsWith("graft.pdf.ExtraFilters")), names.mkString(", "))
     assert(names == names.sorted && names.distinct == names) // deterministic digest input
   }
 

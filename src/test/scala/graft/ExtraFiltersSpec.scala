@@ -1,38 +1,21 @@
 package graft
 
 import graft.fixtures.GoldenGen
-import graft.pdf.{ExtraFilters, PdfExtract}
-import org.scalacheck.{Gen, Prop, Test => SCTest}
+import graft.pdf.PdfExtract
 import org.scalatest.funsuite.AnyFunSuite
 
+/** Stream filters and predictors beyond None/FlateDecode and Predictor 12:
+  * the reader refuses them like the reference (error rows), and the
+  * fixture encoders that build those documents follow the spec. */
 class ExtraFiltersSpec extends AnyFunSuite {
-
-  private val bytesGen: Gen[Array[Byte]] =
-    Gen.chooseNum(0, 4000).flatMap(n => Gen.listOfN(n, Gen.chooseNum(-128, 127).map(_.toByte)).map(_.toArray))
-
-  private def forAll(gen: Gen[Array[Byte]])(body: Array[Byte] => Unit): Unit = {
-    val prop = Prop.forAll(gen) { data => body(data); true }
-    val params = SCTest.Parameters.default
-      .withMinSuccessfulTests(100)
-      .withInitialSeed(org.scalacheck.rng.Seed(7L))
-    val result = SCTest.check(params, prop)
-    assert(result.passed, result.status.toString)
-  }
-
-  test("LZW round-trips arbitrary bytes") {
-    forAll(bytesGen) { data =>
-      val dec = ExtraFilters.lzwDecode(ExtraFilters.lzwEncode(data), 0, ExtraFilters.lzwEncode(data).length)
-      assert(dec.toSeq == data.toSeq)
-    }
-  }
 
   /** Independent LZW encoder derived directly from the published width
     * schedule (ISO 32000-1 §7.4.4 / TIFF 6 early change): width is computed
     * per-emit from the absolute table size (9→10 once entry 511 exists,
     * →11 at 1023, →12 at 2047), with a (prefixCode, byte) trie instead of
-    * the production encoder's byte-list dictionary. It shares NO width
-    * bookkeeping with ExtraFilters.lzwEncode, so an off-by-one in either
-    * encoder or decoder desyncs this test instead of being masked by
+    * the fixture encoder's byte-list dictionary. It shares NO width
+    * bookkeeping with GoldenGen.lzwEncode, so an off-by-one in the fixture
+    * encoder desyncs this test instead of being masked by
     * self-consistency. */
   private def specLzwEncode(data: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
@@ -81,74 +64,26 @@ class ExtraFiltersSpec extends AnyFunSuite {
     val data = new Array[Byte](6144)
     rnd.nextBytes(data)
     val spec = specLzwEncode(data)
-    val prod = ExtraFilters.lzwEncode(data)
-    // 1. the production encoder follows the exact spec schedule
+    val prod = GoldenGen.lzwEncode(data)
+    // the fixture encoder follows the exact spec schedule
     assert(prod.toSeq == spec.toSeq, "encoder width schedule deviates from the spec schedule")
-    // 2. the decoder decodes a spec-schedule stream it did not produce
-    assert(ExtraFilters.lzwDecode(spec, 0, spec.length).toSeq == data.toSeq)
     // also at a size that stays inside 9-bit codes but crosses emit #253-256
     // (the historical off-by-one point)
     val small = new Array[Byte](700)
     rnd.nextBytes(small)
-    val specSmall = specLzwEncode(small)
-    assert(ExtraFilters.lzwEncode(small).toSeq == specSmall.toSeq)
-    assert(ExtraFilters.lzwDecode(specSmall, 0, specSmall.length).toSeq == small.toSeq)
+    assert(GoldenGen.lzwEncode(small).toSeq == specLzwEncode(small).toSeq)
   }
 
-  test("ASCIIHex round-trips, tolerates whitespace and odd tail") {
-    forAll(bytesGen) { data =>
-      val enc = ExtraFilters.asciiHexEncode(data)
-      assert(ExtraFilters.asciiHexDecode(enc, 0, enc.length).toSeq == data.toSeq)
-    }
-    val odd = "4 1 4\n2 5>".getBytes("ISO-8859-1")
-    assert(ExtraFilters.asciiHexDecode(odd, 0, odd.length).toSeq == Seq[Byte](0x41, 0x42, 0x50))
-  }
-
-  test("ASCII85 round-trips incl. z groups and partial tails") {
-    forAll(bytesGen) { data =>
-      val enc = ExtraFilters.ascii85Encode(data)
-      assert(ExtraFilters.ascii85Decode(enc, 0, enc.length).toSeq == data.toSeq)
-    }
-  }
-
-  test("RunLength round-trips arbitrary bytes") {
-    forAll(bytesGen) { data =>
-      val enc = ExtraFilters.runLengthEncode(data)
-      assert(ExtraFilters.runLengthDecode(enc, 0, enc.length).toSeq == data.toSeq)
-    }
-    // highly repetitive input stresses the 128-per-record split
-    val runs = Array.fill[Byte](1000)(7) ++ Array.tabulate[Byte](300)(i => (i % 7).toByte) ++ Array.fill[Byte](2)(9)
-    val enc = ExtraFilters.runLengthEncode(runs)
-    assert(ExtraFilters.runLengthDecode(enc, 0, enc.length).toSeq == runs.toSeq)
-  }
-
-  test("RunLength decodes hand-built spec records (ISO 32000-1 §7.4.5)") {
-    // L=2 -> 3 literal bytes; L=254 -> 'X' repeated 257-254=3 times; EOD=128
-    val enc = Array[Byte](2, 'a', 'b', 'c', 254.toByte, 'X', 128.toByte, 'z')
-    assert(new String(ExtraFilters.runLengthDecode(enc, 0, enc.length), "ISO-8859-1") == "abcXXX")
-    // truncated literal record is tolerated (no EOD), like lzwDecode
-    val trunc = Array[Byte](5, 'a', 'b')
-    assert(new String(ExtraFilters.runLengthDecode(trunc, 0, trunc.length), "ISO-8859-1") == "ab")
-  }
-
-  test("full predictor surface (PNG per-row / TIFF / none) under extended mode; default mode errors like the reference") {
+  test("PNG per-row / TIFF / no-prediction xref streams error like the reference") {
     val text = "predictor coverage " * 40 // 760 chars -> multi-page variant-4 layout
     Seq(0L -> "png rows", 2L -> "tiff rows", 4L -> "predictor 1").foreach { case (docId, label) =>
       val pdf = graft.pipeline.Corpus.pdfPredictorForDoc(docId, text)
-      val ext = PdfExtract.extract(pdf, contentDelimiter = "", extendedFilters = true)
-      assert(ext.text == text, s"$label: ${ext.error}")
-      assert(ext.decodeFailures == 0, label)
-      // reference default (Token.cs:652-668): only Predictor 12 is accepted,
-      // and the xref stream is unreadable -> structured error row
+      // reference (Token.cs:652-668): only Predictor 12 is accepted, and
+      // the xref stream is unreadable -> structured error row
       val ref = PdfExtract.extract(pdf, contentDelimiter = "")
       assert(ref.decodeFailures >= 1, label)
       assert(ref.error.exists(_.contains("Predictor parameter should be 12")), s"$label: ${ref.error}")
     }
-    // the default-mode Up layout must stay readable under extended mode too
-    // (Predictor 12 routes through the generic PNG path there)
-    val up = graft.pipeline.Corpus.pdfXrefStreamFromText(text)
-    val extUp = PdfExtract.extract(up, contentDelimiter = "", extendedFilters = true)
-    assert(extUp.text == text, extUp.error)
   }
 
   private def pdfWithFilter(filterDict: String, payload: Array[Byte]): Array[Byte] = {
@@ -161,44 +96,20 @@ class ExtraFiltersSpec extends AnyFunSuite {
     b.finish(s"/Root $catalog 0 R")
   }
 
-  test("extended filters decode content streams; default mode errors like the reference") {
+  test("LZW / ASCIIHex / ASCII85 / RunLength content streams error like the reference") {
     val ops = "BT (filtered text works) Tj ET".getBytes("ISO-8859-1")
     val cases = Seq(
-      "/Filter/LZWDecode" -> ExtraFilters.lzwEncode(ops),
-      "/Filter/ASCIIHexDecode" -> ExtraFilters.asciiHexEncode(ops),
-      "/Filter/ASCII85Decode" -> ExtraFilters.ascii85Encode(ops),
-      "/Filter/RunLengthDecode" -> ExtraFilters.runLengthEncode(ops),
-      "/Filter[/ASCII85Decode/FlateDecode]" -> ExtraFilters.ascii85Encode(GoldenGen.zlib(ops)))
+      "/Filter/LZWDecode" -> GoldenGen.lzwEncode(ops),
+      "/Filter/ASCIIHexDecode" -> GoldenGen.asciiHexEncode(ops),
+      "/Filter/ASCII85Decode" -> GoldenGen.ascii85Encode(ops),
+      "/Filter/RunLengthDecode" -> GoldenGen.runLengthEncode(ops),
+      "/Filter[/ASCII85Decode/FlateDecode]" -> GoldenGen.ascii85Encode(GoldenGen.zlib(ops)))
     cases.foreach { case (dict, payload) =>
       val pdf = pdfWithFilter(dict, payload)
-      val ext = PdfExtract.extract(pdf, extendedFilters = true)
-      assert(ext.text == "filtered text works|", s"$dict: ${ext.error}")
-      // reference-faithful default: unsupported filter -> error row
+      // reference-faithful: unsupported filter -> error row
       val ref = PdfExtract.extract(pdf)
       assert(ref.decodeFailures >= 1, dict)
       assert(ref.error.exists(_.contains("not (yet) supported")), s"$dict: ${ref.error}")
     }
-  }
-
-  test("extended mode surfaces unhandled filter chains as error rows, not garbage") {
-    val ops = "BT (chained) Tj ET".getBytes("ISO-8859-1")
-    // chains the extended mode does NOT implement: must error, never decode
-    // only the first stage and feed still-encoded bytes to the interpreter
-    val bad = Seq(
-      "/Filter[/LZWDecode/FlateDecode]" -> GoldenGen.zlib(ExtraFilters.lzwEncode(ops)),
-      "/Filter[/ASCIIHexDecode/LZWDecode]" -> ExtraFilters.asciiHexEncode(ExtraFilters.lzwEncode(ops)),
-      "/Filter[/ASCII85Decode/FlateDecode/FlateDecode]" ->
-        ExtraFilters.ascii85Encode(GoldenGen.zlib(GoldenGen.zlib(ops))))
-    bad.foreach { case (dict, payload) =>
-      val ext = PdfExtract.extract(pdfWithFilter(dict, payload), extendedFilters = true)
-      assert(ext.decodeFailures >= 1, dict)
-      assert(ext.error.exists(_.contains("not (yet) supported")), s"$dict: ${ext.error}")
-      assert(ext.text == "", s"$dict decoded to: ${ext.text}")
-    }
-    // the one supported chain still works
-    val ok = PdfExtract.extract(
-      pdfWithFilter("/Filter[/ASCIIHexDecode/FlateDecode]",
-        ExtraFilters.asciiHexEncode(GoldenGen.zlib(ops))), extendedFilters = true)
-    assert(ok.text == "chained|", ok.error)
   }
 }

@@ -1,9 +1,9 @@
 package graft
 
 import java.io.{ByteArrayOutputStream, File, PrintStream}
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicLong
 
+import graft.TempDirs.withTempDir
 import graft.pipeline.{Checkpoint, Corpus, Main}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
@@ -100,66 +100,70 @@ class MainSpec extends AnyFunSuite {
   }
 
   test("Main: fresh submit commits every doc, re-submit commits nothing, --delta prints statuses") {
-    val dir = Files.createTempDirectory("graft_spec_main").toString
-    val texts = (0L until 12L).map(i => i -> s"main submit document $i words")
-    writePages(s"$dir/pages", texts)
-    val out = s"$dir/out"
+    withTempDir("graft_spec_main") { dir =>
+      val texts = (0L until 12L).map(i => i -> s"main submit document $i words")
+      writePages(s"$dir/pages", texts)
+      val out = s"$dir/out"
 
-    val first = submit(s"$dir/pages", out)
-    assert(first.contains("\"docs\":12,"), first)
-    assertCommitted(out, texts)
+      val first = submit(s"$dir/pages", out)
+      assert(first.contains("\"docs\":12,"), first)
+      assertCommitted(out, texts)
 
-    // a fully-resumed re-submit publishes nothing: no empty batch, no
-    // leftover staging dir
-    def listing() = Seq("extracted", "_manifest").map(d => new File(s"$out/$d").list.toSeq.sorted)
-    val before = listing()
-    assert(before.forall(_.count(_.startsWith("batch_")) == 1), before)
-    val again = submit(s"$dir/pages", out)
-    assert(again.contains("\"docs\":0,"), again)
-    assert(listing() == before)
+      // a fully-resumed re-submit publishes nothing: no empty batch, no
+      // leftover staging dir
+      def listing() = Seq("extracted", "_manifest").map(d => new File(s"$out/$d").list.toSeq.sorted)
+      val before = listing()
+      assert(before.forall(_.count(_.startsWith("batch_")) == 1), before)
+      val again = submit(s"$dir/pages", out)
+      assert(again.contains("\"docs\":0,"), again)
+      assert(listing() == before)
 
-    // next snapshot: ids 0-2 changed, 3-5 removed, 6-11 unchanged, 12-14 added
-    val next = texts.drop(6) ++ (0L until 3L).map(i => i -> s"changed document $i words") ++
-      (12L until 15L).map(i => i -> s"added document $i words")
-    writePages(s"$dir/next", next)
-    val delta = submit("--delta", s"$dir/pages", s"$dir/next", s"$dir/delta_out")
-    assert(delta.contains(""""statuses":{"added":3,"changed":3,"removed":3,"unchanged":6}"""), delta)
-    assert(delta.contains("\"docs\":6,"), delta)
+      // next snapshot: ids 0-2 changed, 3-5 removed, 6-11 unchanged, 12-14 added
+      val next = texts.drop(6) ++ (0L until 3L).map(i => i -> s"changed document $i words") ++
+        (12L until 15L).map(i => i -> s"added document $i words")
+      writePages(s"$dir/next", next)
+      val delta = submit("--delta", s"$dir/pages", s"$dir/next", s"$dir/delta_out")
+      assert(delta.contains(""""statuses":{"added":3,"changed":3,"removed":3,"unchanged":6}"""), delta)
+      assert(delta.contains("\"docs\":6,"), delta)
+    }
   }
 
   test("Main: a fresh submit extracts straight off the scan splits and writes no shuffle bytes") {
-    val dir = Files.createTempDirectory("graft_spec_main_noshuffle").toString
-    val texts = (0L until 40L).map(i => i -> s"scan aligned document $i with a few more words")
-    writePages(s"$dir/pages", texts)
-    val out = s"$dir/out"
-    val (printed, shuffled) = submitCountingShuffle(s"$dir/pages", out)
-    assert(printed.contains("\"docs\":40,"), printed)
-    assert(shuffled == 0L)
-    assertCommitted(out, texts)
+    withTempDir("graft_spec_main_noshuffle") { dir =>
+      val texts = (0L until 40L).map(i => i -> s"scan aligned document $i with a few more words")
+      writePages(s"$dir/pages", texts)
+      val out = s"$dir/out"
+      val (printed, shuffled) = submitCountingShuffle(s"$dir/pages", out)
+      assert(printed.contains("\"docs\":40,"), printed)
+      assert(shuffled == 0L)
+      assertCommitted(out, texts)
+    }
   }
 
   test("Main: a fresh submit runs exactly one Spark job") {
-    val dir = Files.createTempDirectory("graft_spec_main_onejob").toString
-    val texts = (0L until 40L).map(i => i -> s"one job document $i with a few more words")
-    writePages(s"$dir/pages", texts)
-    val out = s"$dir/out"
-    val (printed, jobs) = submitCounting(classOf[JobCountListener], JobCountListener.started)(
-      s"$dir/pages", out)
-    assert(printed.contains("\"docs\":40,"), printed)
-    assert(jobs == 1L, s"a fresh submit started $jobs jobs")
-    val again = submit(s"$dir/pages", out)
-    assert(again.contains("\"docs\":0,"), again)
-    assertCommitted(out, texts)
+    withTempDir("graft_spec_main_onejob") { dir =>
+      val texts = (0L until 40L).map(i => i -> s"one job document $i with a few more words")
+      writePages(s"$dir/pages", texts)
+      val out = s"$dir/out"
+      val (printed, jobs) = submitCounting(classOf[JobCountListener], JobCountListener.started)(
+        s"$dir/pages", out)
+      assert(printed.contains("\"docs\":40,"), printed)
+      assert(jobs == 1L, s"a fresh submit started $jobs jobs")
+      val again = submit(s"$dir/pages", out)
+      assert(again.contains("\"docs\":0,"), again)
+      assertCommitted(out, texts)
+    }
   }
 
   test("Main: fewer row groups than cores are hash-spread before extraction") {
-    val dir = Files.createTempDirectory("graft_spec_main_spread").toString
-    val texts = (0L until 40L).map(i => i -> s"single file document $i with a few more words")
-    writePages(s"$dir/pages", texts, files = 1)
-    val out = s"$dir/out"
-    val (printed, shuffled) = submitCountingShuffle(s"$dir/pages", out)
-    assert(printed.contains("\"docs\":40,"), printed)
-    assert(shuffled > 0L)
-    assertCommitted(out, texts)
+    withTempDir("graft_spec_main_spread") { dir =>
+      val texts = (0L until 40L).map(i => i -> s"single file document $i with a few more words")
+      writePages(s"$dir/pages", texts, files = 1)
+      val out = s"$dir/out"
+      val (printed, shuffled) = submitCountingShuffle(s"$dir/pages", out)
+      assert(printed.contains("\"docs\":40,"), printed)
+      assert(shuffled > 0L)
+      assertCommitted(out, texts)
+    }
   }
 }

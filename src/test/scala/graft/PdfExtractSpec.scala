@@ -90,93 +90,10 @@ class PdfExtractSpec extends AnyFunSuite {
     assert(r.text == "xref stream works|", r.error.orNull)
   }
 
-  test("hybrid /XRefStm: extended mode resurrects table-freed objects, default errors") {
-    val bytes = GoldenGen.hybridXrefPdf("hybrid payload")
-    val ext = PdfExtract.extract(bytes, extendedFilters = true)
-    assert(ext.text == "hybrid payload|", ext.error.orNull)
-    assert(ext.pages == 1)
-    // default mode replicates the reference: /XRefStm is trailer
-    // bookkeeping, the hidden /Root stays a free entry -> error row
-    val dft = PdfExtract.extract(bytes)
-    assert(dft.error.isDefined)
-    assert(dft.text == "")
-  }
-
-  test("incremental update over a hybrid section: newest wins, supplement still resurrects") {
-    // update chain: newest section is a classic table REDEFINING the
-    // content stream (object 1) at a new address, /Prev -> the original
-    // hybrid section (whose table lists the OLD object 1 and hides 2..6
-    // behind its /XRefStm). First-seen-wins must keep the new object 1
-    // while the older supplement still resurrects the hidden page tree.
-    val base = GoldenGen.hybridXrefPdf("old payload")
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(base)
-    // the original hybrid section's classic table offset (startxref value)
-    val tail = new String(base.takeRight(64).map(b => (b & 0xff).toChar))
-    val prevAt = tail.split("startxref")(1).trim.split("\\s+")(0).toInt
-    val newContentAt = out.size()
-    val payload = "BT /F1 24 Tf (new payload) Tj ET"
-    out.write(s"1 0 obj\n<</Length ${payload.length}>>stream\n$payload\nendstream\nendobj\n"
-      .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
-    val tableAt = out.size()
-    out.write((s"xref\n1 1\n" + f"$newContentAt%010d 00000 n \n" +
-      s"trailer<</Size 7/Root 5 0 R/Prev $prevAt>>\nstartxref\n$tableAt\n%%EOF\n")
-      .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
-    val r = PdfExtract.extract(out.toByteArray, extendedFilters = true)
-    assert(r.text == "new payload|", r.error.orNull)
-  }
-
-  test("chained hybrid sections: an older compat free mark never clobbers a newer supplement's live entry") {
-    // the standard Acrobat shape: a hybrid incremental update OVER a hybrid
-    // base. The newest section's table frees 2..6 (compatibility) and its
-    // /XRefStm resurrects them; the OLDER hybrid section's table frees the
-    // same ids again. Newest-wins must leave the already-live entries
-    // untouched — before the fix the older free mark overwrote them with the
-    // dead marker and the older supplement could not re-resurrect
-    // (mayResurrect=false there), erroring the whole valid document.
-    val base = GoldenGen.hybridXrefPdf("old payload")
-    val baseStr = new String(base.map(b => (b & 0xff).toChar))
-    val prevAt = baseStr.split("startxref")(1).trim.split("\\s+")(0).toInt
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(base)
-    // the update carries its OWN supplement (object 7, uncompressed
-    // /Type/XRef) re-listing the ObjStm carrier (2) and its members (3..5)
-    // at their base addresses — as Acrobat writes it
-    val stmAt = out.size()
-    val obj2At = baseStr.indexOf("2 0 obj")
-    def offRow(a: Int) = Array[Byte](1, ((a >> 16) & 0xff).toByte, ((a >> 8) & 0xff).toByte, (a & 0xff).toByte, 0)
-    val rows = offRow(obj2At) ++ Array[Byte](2, 0, 0, 2, 1) ++
-      Array[Byte](2, 0, 0, 2, 0) ++ Array[Byte](2, 0, 0, 2, 2)
-    out.write(s"7 0 obj\n<</Type/XRef/Size 8/Index[2 4]/W[1 3 1]/Length ${rows.length}/Root 5 0 R>>stream\n"
-      .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
-    out.write(rows)
-    out.write("\nendstream\nendobj\n".getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
-    val tableAt = out.size()
-    out.write((s"xref\n2 5\n" + "0000000000 00000 f \n" * 5 +
-      s"trailer<</Size 8/Root 5 0 R/Prev $prevAt/XRefStm $stmAt>>\nstartxref\n$tableAt\n%%EOF\n")
-      .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
-    val r = PdfExtract.extract(out.toByteArray, extendedFilters = true)
-    assert(r.text == "old payload|", r.error.orNull)
-    assert(r.pages == 1)
-  }
-
-  test("genuine deletion in a newer section is final: an older supplement must not resurrect it") {
-    // newest classic section genuinely frees the catalog (object 5, no
-    // /XRefStm of its own); the older hybrid section's table also frees 5
-    // and its supplement lists it. Newest-wins: the deletion stands and the
-    // document errors (the /Root is gone) — before the fix the older
-    // section re-recorded 5 as freed-here (the isDead arm) and its
-    // supplement resurrected the deleted catalog, extracting stale text.
-    val base = GoldenGen.hybridXrefPdf("old payload")
-    val baseStr = new String(base.map(b => (b & 0xff).toChar))
-    val prevAt = baseStr.split("startxref")(1).trim.split("\\s+")(0).toInt
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(base)
-    val tableAt = out.size()
-    out.write((s"xref\n5 1\n0000000000 00000 f \n" +
-      s"trailer<</Size 7/Root 5 0 R/Prev $prevAt>>\nstartxref\n$tableAt\n%%EOF\n")
-      .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
-    val r = PdfExtract.extract(out.toByteArray, extendedFilters = true)
+  test("hybrid /XRefStm is ignored like the reference: table-freed /Root errors") {
+    // the reference treats /XRefStm as trailer bookkeeping, so the hidden
+    // /Root stays a free entry -> error row
+    val r = PdfExtract.extract(GoldenGen.hybridXrefPdf("hybrid payload"))
     assert(r.error.isDefined)
     assert(r.text == "")
   }
@@ -304,34 +221,11 @@ class PdfExtractSpec extends AnyFunSuite {
     assert(errorRows > 0, "mutations never produced an error row — fuzz too weak")
   }
 
-  test("AES V4/R4: extended mode decrypts for real; default mode keeps the reference error row") {
-    val pdf = GoldenGen.encryptedPdfAes("quarterly aes report")
-    // default: the reference's exact throw surface (Tokeniser.cs:635-645)
-    val ref = PdfExtract.extract(pdf)
-    assert(ref.error.exists(_.contains("can only decrypt pdf files using Standard encryption")), ref.error)
-    assert(ref.text == "")
-    // extended: real AES-128-CBC decryption (Algorithm 2 key, sAlT object
-    // keys, IV-prefixed PKCS#5 streams)
-    val ext = PdfExtract.extract(pdf, extendedFilters = true)
-    assert(ext.error.isEmpty, ext.error)
-    assert(ext.text == "quarterly aes report|", ext.text)
-    // wrong password still authenticates-or-errors, never garbage
-    val wrong = PdfExtract.extract(pdf, password = "nope", extendedFilters = true)
-    assert(wrong.text != "quarterly aes report|")
-    assert(wrong.error.isDefined)
-    // spec-valid variants: key length only in /CF/StdCF (no top-level
-    // /Length), and /EncryptMetadata false (Algorithm 2 step f key suffix)
-    val noLen = PdfExtract.extract(
-      GoldenGen.encryptedPdfAes("stdcf length", topLevelLength = false), extendedFilters = true)
-    assert(noLen.text == "stdcf length|", noLen.error)
-    val noMeta = PdfExtract.extract(
-      GoldenGen.encryptedPdfAes("meta off", encryptMetadata = false), extendedFilters = true)
-    assert(noMeta.text == "meta off|", noMeta.error)
-    // CF /Length written in BITS (the other real-world convention)
-    val bits = PdfExtract.extract(
-      GoldenGen.encryptedPdfAes("bits form", topLevelLength = false, cfLengthInBits = true),
-      extendedFilters = true)
-    assert(bits.text == "bits form|", bits.error)
+  test("AES V4/R4 with real AES-128 streams keeps the reference error row") {
+    // the reference's exact throw surface (Tokeniser.cs:635-645)
+    val r = PdfExtract.extract(GoldenGen.encryptedPdfAes("quarterly aes report"))
+    assert(r.error.exists(_.contains("can only decrypt pdf files using Standard encryption")), r.error)
+    assert(r.text == "")
   }
 
   test("non-pdf bytes give an error row, not an exception") {

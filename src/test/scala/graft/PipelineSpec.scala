@@ -1,5 +1,6 @@
 package graft
 
+import graft.TempDirs.withTempDir
 import graft.pipeline.{Checkpoint, Corpus, ExtractPipeline, PageRow}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -88,17 +89,18 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val texts = (0L until 20L).map(i => i -> s"document number $i with some words")
     val pages = texts.map { case (id, t) => Corpus.pageRowFor(id, t, "en") }.toDS()
-    val outDir = java.nio.file.Files.createTempDirectory("graft_spec_ckpt").toString
-    val first = ExtractPipeline.run(pages.where(element_at(split(col("url"), "/"), -1).cast("long") < 5))
-    Checkpoint.commit(first, outDir)
-    val remaining = Checkpoint.resume(pages, outDir)
-    val ids = remaining.collect().map(_.url.split("/").last.toLong).sorted
-    assert(ids.toSeq == (5L until 20L).toSeq)
-    // committing the rest empties the backlog
-    Checkpoint.commit(ExtractPipeline.run(remaining), outDir)
-    assert(Checkpoint.resume(pages, outDir).count() == 0)
-    val m = Checkpoint.metrics(spark, outDir).collect().head
-    assert(m.getAs[Long]("docs_done") == 20L)
+    withTempDir("graft_spec_ckpt") { outDir =>
+      val first = ExtractPipeline.run(pages.where(element_at(split(col("url"), "/"), -1).cast("long") < 5))
+      Checkpoint.commit(first, outDir)
+      val remaining = Checkpoint.resume(pages, outDir)
+      val ids = remaining.collect().map(_.url.split("/").last.toLong).sorted
+      assert(ids.toSeq == (5L until 20L).toSeq)
+      // committing the rest empties the backlog
+      Checkpoint.commit(ExtractPipeline.run(remaining), outDir)
+      assert(Checkpoint.resume(pages, outDir).count() == 0)
+      val m = Checkpoint.metrics(spark, outDir).collect().head
+      assert(m.getAs[Long]("docs_done") == 20L)
+    }
   }
 
   test("atomic commit: an orphan (unmanifested) data batch is invisible and its urls re-run") {
@@ -106,63 +108,64 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val texts = (0L until 10L).map(i => i -> s"document number $i body words here")
     val pages = texts.map { case (id, t) => Corpus.pageRowFor(id, t, "en") }.toDS()
     def docId = element_at(split(col("url"), "/"), -1).cast("long")
-    val outDir = java.nio.file.Files.createTempDirectory("graft_spec_atomic").toString
-    Checkpoint.commitWithData(ExtractPipeline.run(pages.where(docId < 4)), outDir)
-    assert(Checkpoint.readExtracted(spark, outDir).count() == 4)
-    // crash window between data rename and manifest rename: data batch
-    // exists on disk but no manifest references it
-    ExtractPipeline.run(pages.where(docId >= 4)).toDF()
-      .write.parquet(Checkpoint.dataPath(outDir) + "/batch_orphan")
-    assert(Checkpoint.readExtracted(spark, outDir).count() == 4, "orphan batch leaked into reads")
-    val remaining = Checkpoint.resume(pages, outDir)
-    assert(remaining.count() == 6, "orphaned urls must be re-extracted")
-    Checkpoint.commitWithData(ExtractPipeline.run(remaining), outDir)
-    val out = Checkpoint.readExtracted(spark, outDir)
-    assert(out.count() == 10)
-    assert(out.select("url").distinct().count() == 10, "duplicate rows after crash-resume")
-    assert(Checkpoint.resume(pages, outDir).count() == 0)
-    // vacuum: the orphan is removable once past the grace window, but a
-    // fresh (possibly in-flight) orphan inside it is protected
-    assert(Checkpoint.vacuum(spark, outDir).isEmpty,
-      "default grace must protect a freshly-written orphan")
-    val removed = Checkpoint.vacuum(spark, outDir, graceMs = -1000L)
-    assert(removed == Seq("batch_orphan"), s"removed=$removed")
-    assert(Checkpoint.readExtracted(spark, outDir).count() == 10,
-      "vacuum must not touch referenced batches")
-    assert(Checkpoint.vacuum(spark, outDir, graceMs = -1000L).isEmpty)
-    // each batch's manifest lists exactly the visible files of its data
-    // batch, with their row count, and every url's file is among them
-    def batchDirs(root: String) = new java.io.File(root).listFiles
-      .filter(_.getName.startsWith("batch_")).map(_.getName).sorted.toSeq
-    val batches = batchDirs(Checkpoint.manifestPath(outDir))
-    assert(batches.size == 2 && batchDirs(Checkpoint.dataPath(outDir)) == batches)
-    val manifests = Checkpoint.manifests(spark, outDir).map(m => m.name -> m).toMap
-    batches.foreach { b =>
-      val m = manifests(b)
-      assert(m.dataBatch.contains(b))
-      val listed = m.files.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
-      val visible = new java.io.File(s"${Checkpoint.dataPath(outDir)}/$b").list
-        .filterNot(n => n.startsWith(".") || n.startsWith("_")).toSet
-      assert(listed == visible, s"manifest of $b differs from its data files")
-      val held = spark.read.parquet(s"${Checkpoint.dataPath(outDir)}/$b")
-        .select(col("url"), col("_metadata.file_name")).as[(String, String)].collect()
-      assert(held.nonEmpty && held.forall { case (_, f) => listed.contains(f) },
-        s"a url of $b sits in a file its manifest does not list")
-      assert(m.stats.docs == held.length)
-    }
-    // an empty commit returns 0 docs without waiting forever for its
-    // observation, and leaves no batch and no staging dir behind
-    def listing() = Seq(Checkpoint.dataPath(outDir), Checkpoint.manifestPath(outDir))
-      .map(d => new java.io.File(d).list.toSeq.sorted)
-    val before = listing()
-    Seq(spark.emptyDataset[graft.pipeline.ExtractedDoc], ExtractPipeline.run(pages.where(docId < 0)))
-      .foreach { empty =>
-        import scala.concurrent.{Await, Future}, scala.concurrent.duration._
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val stats = Await.result(Future(Checkpoint.commitWithData(empty, outDir)), 2.minutes)
-        assert(stats == Checkpoint.CommitStats(0, 0, 0, 0))
-        assert(listing() == before, "an empty commit must publish nothing")
+    withTempDir("graft_spec_atomic") { outDir =>
+      Checkpoint.commitWithData(ExtractPipeline.run(pages.where(docId < 4)), outDir)
+      assert(Checkpoint.readExtracted(spark, outDir).count() == 4)
+      // crash window between data rename and manifest rename: data batch
+      // exists on disk but no manifest references it
+      ExtractPipeline.run(pages.where(docId >= 4)).toDF()
+        .write.parquet(Checkpoint.dataPath(outDir) + "/batch_orphan")
+      assert(Checkpoint.readExtracted(spark, outDir).count() == 4, "orphan batch leaked into reads")
+      val remaining = Checkpoint.resume(pages, outDir)
+      assert(remaining.count() == 6, "orphaned urls must be re-extracted")
+      Checkpoint.commitWithData(ExtractPipeline.run(remaining), outDir)
+      val out = Checkpoint.readExtracted(spark, outDir)
+      assert(out.count() == 10)
+      assert(out.select("url").distinct().count() == 10, "duplicate rows after crash-resume")
+      assert(Checkpoint.resume(pages, outDir).count() == 0)
+      // vacuum: the orphan is removable once past the grace window, but a
+      // fresh (possibly in-flight) orphan inside it is protected
+      assert(Checkpoint.vacuum(spark, outDir).isEmpty,
+        "default grace must protect a freshly-written orphan")
+      val removed = Checkpoint.vacuum(spark, outDir, graceMs = -1000L)
+      assert(removed == Seq("batch_orphan"), s"removed=$removed")
+      assert(Checkpoint.readExtracted(spark, outDir).count() == 10,
+        "vacuum must not touch referenced batches")
+      assert(Checkpoint.vacuum(spark, outDir, graceMs = -1000L).isEmpty)
+      // each batch's manifest lists exactly the visible files of its data
+      // batch, with their row count, and every url's file is among them
+      def batchDirs(root: String) = new java.io.File(root).listFiles
+        .filter(_.getName.startsWith("batch_")).map(_.getName).sorted.toSeq
+      val batches = batchDirs(Checkpoint.manifestPath(outDir))
+      assert(batches.size == 2 && batchDirs(Checkpoint.dataPath(outDir)) == batches)
+      val manifests = Checkpoint.manifests(spark, outDir).map(m => m.name -> m).toMap
+      batches.foreach { b =>
+        val m = manifests(b)
+        assert(m.dataBatch.contains(b))
+        val listed = m.files.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
+        val visible = new java.io.File(s"${Checkpoint.dataPath(outDir)}/$b").list
+          .filterNot(n => n.startsWith(".") || n.startsWith("_")).toSet
+        assert(listed == visible, s"manifest of $b differs from its data files")
+        val held = spark.read.parquet(s"${Checkpoint.dataPath(outDir)}/$b")
+          .select(col("url"), col("_metadata.file_name")).as[(String, String)].collect()
+        assert(held.nonEmpty && held.forall { case (_, f) => listed.contains(f) },
+          s"a url of $b sits in a file its manifest does not list")
+        assert(m.stats.docs == held.length)
       }
+      // an empty commit returns 0 docs without waiting forever for its
+      // observation, and leaves no batch and no staging dir behind
+      def listing() = Seq(Checkpoint.dataPath(outDir), Checkpoint.manifestPath(outDir))
+        .map(d => new java.io.File(d).list.toSeq.sorted)
+      val before = listing()
+      Seq(spark.emptyDataset[graft.pipeline.ExtractedDoc], ExtractPipeline.run(pages.where(docId < 0)))
+        .foreach { empty =>
+          import scala.concurrent.{Await, Future}, scala.concurrent.duration._
+          import scala.concurrent.ExecutionContext.Implicits.global
+          val stats = Await.result(Future(Checkpoint.commitWithData(empty, outDir)), 2.minutes)
+          assert(stats == Checkpoint.CommitStats(0, 0, 0, 0))
+          assert(listing() == before, "an empty commit must publish nothing")
+        }
+    }
   }
 
   test("metrics: the sum of the totals each commit observed") {
@@ -172,21 +175,22 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       "%PDF-1.4 this is not really a pdf".getBytes("ISO-8859-1"), "", "en")
     val pages = (texts.map { case (id, t) => Corpus.pageRowFor(id, t, "en") } :+ junk).toDS()
     def docId = element_at(split(col("url"), "/"), -1).cast("long")
-    val outDir = java.nio.file.Files.createTempDirectory("graft_spec_metrics").toString
-    val stats = Seq(pages.where(docId < 4), pages.where(docId >= 4))
-      .map(p => Checkpoint.commitWithData(ExtractPipeline.run(p), outDir))
-    val total = stats.reduce(_ + _)
-    assert(total.docs == 10 && total.pdfDocs == 6 && total.decodeFailures >= 1)
-    def rollup() = Checkpoint.metrics(spark, outDir)
-      .as[(Long, Long, Long)].collect().toSeq
-    assert(rollup() == Seq((total.docs, total.chars, total.decodeFailures)))
-    // the totals agree with the table itself, and survive compaction
-    val table = Checkpoint.readExtracted(spark, outDir)
-      .agg(count(lit(1)), sum("n_chars"), sum("decode_failures")).as[(Long, Long, Long)].head
-    assert(table == rollup().head)
-    assert(Checkpoint.compact(spark, outDir).isDefined)
-    assert(rollup() == Seq((total.docs, total.chars, total.decodeFailures)))
-    assert(Checkpoint.manifests(spark, outDir).map(_.stats) == Seq(total))
+    withTempDir("graft_spec_metrics") { outDir =>
+      val stats = Seq(pages.where(docId < 4), pages.where(docId >= 4))
+        .map(p => Checkpoint.commitWithData(ExtractPipeline.run(p), outDir))
+      val total = stats.reduce(_ + _)
+      assert(total.docs == 10 && total.pdfDocs == 6 && total.decodeFailures >= 1)
+      def rollup() = Checkpoint.metrics(spark, outDir)
+        .as[(Long, Long, Long)].collect().toSeq
+      assert(rollup() == Seq((total.docs, total.chars, total.decodeFailures)))
+      // the totals agree with the table itself, and survive compaction
+      val table = Checkpoint.readExtracted(spark, outDir)
+        .agg(count(lit(1)), sum("n_chars"), sum("decode_failures")).as[(Long, Long, Long)].head
+      assert(table == rollup().head)
+      assert(Checkpoint.compact(spark, outDir).isDefined)
+      assert(rollup() == Seq((total.docs, total.chars, total.decodeFailures)))
+      assert(Checkpoint.manifests(spark, outDir).map(_.stats) == Seq(total))
+    }
   }
 
   test("compact: content identical, one data batch remains, resume stays empty, manifest-only kept") {
@@ -194,32 +198,33 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val texts = (0L until 12L).map(i => i -> s"document number $i body words here")
     val pages = texts.map { case (id, t) => Corpus.pageRowFor(id, t, "en") }.toDS()
     def docId = element_at(split(col("url"), "/"), -1).cast("long")
-    val outDir = java.nio.file.Files.createTempDirectory("graft_spec_compact").toString
-    (0 until 3).foreach(r => Checkpoint.commitWithData(
-      ExtractPipeline.run(pages.where(docId % 4 === r)), outDir))
-    // a manifest-only commit (work done elsewhere, no data) must survive
-    Checkpoint.commit(ExtractPipeline.run(pages.where(docId % 4 === 3)), outDir)
-    // sorted SEQUENCES, not sets: a rewrite that duplicated or dropped a
-    // row is exactly what this comparison must catch
-    def content() = Checkpoint.readExtracted(spark, outDir)
-      .select("url", "text", "n_chars").collect()
-      .map(_.toSeq.map(String.valueOf)).sortBy(_.mkString("|")).toSeq
-    val before = content()
-    def dataBatchDirs = new java.io.File(Checkpoint.dataPath(outDir))
-      .listFiles.filter(f => f.isDirectory && f.getName.startsWith("batch_")).toSeq
-    assert(dataBatchDirs.size == 3)
-    val newBatch = Checkpoint.compact(spark, outDir)
-    assert(newBatch.isDefined)
-    assert(dataBatchDirs.map(_.getName) == Seq(newBatch.get), "exactly the compacted batch remains")
-    assert(content() == before, "compaction must not change table content")
-    assert(!new java.io.File(Checkpoint.maintenanceLockPath(outDir)).exists,
-      "maintenance lock must be released")
-    assert(Checkpoint.resume(pages, outDir).count() == 0,
-      "every url (incl. the manifest-only commit's) must stay done")
-    val m = Checkpoint.metrics(spark, outDir).collect().head
-    assert(m.getAs[Long]("docs_done") == 12L)
-    // nothing left to compact
-    assert(Checkpoint.compact(spark, outDir).isEmpty)
+    withTempDir("graft_spec_compact") { outDir =>
+      (0 until 3).foreach(r => Checkpoint.commitWithData(
+        ExtractPipeline.run(pages.where(docId % 4 === r)), outDir))
+      // a manifest-only commit (work done elsewhere, no data) must survive
+      Checkpoint.commit(ExtractPipeline.run(pages.where(docId % 4 === 3)), outDir)
+      // sorted SEQUENCES, not sets: a rewrite that duplicated or dropped a
+      // row is exactly what this comparison must catch
+      def content() = Checkpoint.readExtracted(spark, outDir)
+        .select("url", "text", "n_chars").collect()
+        .map(_.toSeq.map(String.valueOf)).sortBy(_.mkString("|")).toSeq
+      val before = content()
+      def dataBatchDirs = new java.io.File(Checkpoint.dataPath(outDir))
+        .listFiles.filter(f => f.isDirectory && f.getName.startsWith("batch_")).toSeq
+      assert(dataBatchDirs.size == 3)
+      val newBatch = Checkpoint.compact(spark, outDir)
+      assert(newBatch.isDefined)
+      assert(dataBatchDirs.map(_.getName) == Seq(newBatch.get), "exactly the compacted batch remains")
+      assert(content() == before, "compaction must not change table content")
+      assert(!new java.io.File(Checkpoint.maintenanceLockPath(outDir)).exists,
+        "maintenance lock must be released")
+      assert(Checkpoint.resume(pages, outDir).count() == 0,
+        "every url (incl. the manifest-only commit's) must stay done")
+      val m = Checkpoint.metrics(spark, outDir).collect().head
+      assert(m.getAs[Long]("docs_done") == 12L)
+      // nothing left to compact
+      assert(Checkpoint.compact(spark, outDir).isEmpty)
+    }
   }
 
   test("maintenance lock: resume refuses mid-compaction; stale locks are reclaimed") {
@@ -227,60 +232,63 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val texts = (0L until 6L).map(i => i -> s"document number $i body words here")
     val pages = texts.map { case (id, t) => Corpus.pageRowFor(id, t, "en") }.toDS()
     def docId = element_at(split(col("url"), "/"), -1).cast("long")
-    val outDir = java.nio.file.Files.createTempDirectory("graft_spec_lock").toString
-    (0 until 2).foreach(r => Checkpoint.commitWithData(
-      ExtractPipeline.run(pages.where(docId % 2 === r)), outDir))
-    // simulate an in-flight compact: a fresh lock file
-    val lock = new java.io.File(Checkpoint.maintenanceLockPath(outDir))
-    assert(lock.createNewFile())
-    val ex = intercept[IllegalStateException](Checkpoint.resume(pages, outDir).count())
-    assert(ex.getMessage.contains("maintenance in progress"))
-    val ex2 = intercept[IllegalStateException](Checkpoint.compact(spark, outDir))
-    assert(ex2.getMessage.contains("maintenance already in progress"))
-    // a crashed compact's stale lock must not wedge the sink forever
-    assert(lock.setLastModified(System.currentTimeMillis() - Checkpoint.MaintenanceLockStaleMs - 1000))
-    assert(Checkpoint.resume(pages, outDir).count() == 0) // stale lock ignored
-    assert(Checkpoint.compact(spark, outDir).isDefined)   // stale lock reclaimed
-    assert(!lock.exists, "lock released after compaction")
+    withTempDir("graft_spec_lock") { outDir =>
+      (0 until 2).foreach(r => Checkpoint.commitWithData(
+        ExtractPipeline.run(pages.where(docId % 2 === r)), outDir))
+      // simulate an in-flight compact: a fresh lock file
+      val lock = new java.io.File(Checkpoint.maintenanceLockPath(outDir))
+      assert(lock.createNewFile())
+      val ex = intercept[IllegalStateException](Checkpoint.resume(pages, outDir).count())
+      assert(ex.getMessage.contains("maintenance in progress"))
+      val ex2 = intercept[IllegalStateException](Checkpoint.compact(spark, outDir))
+      assert(ex2.getMessage.contains("maintenance already in progress"))
+      // a crashed compact's stale lock must not wedge the sink forever
+      assert(lock.setLastModified(System.currentTimeMillis() - Checkpoint.MaintenanceLockStaleMs - 1000))
+      assert(Checkpoint.resume(pages, outDir).count() == 0) // stale lock ignored
+      assert(Checkpoint.compact(spark, outDir).isDefined)   // stale lock reclaimed
+      assert(!lock.exists, "lock released after compaction")
+    }
   }
 
   test("maintenance lock: heartbeat keeps a long-running holder live past staleMs") {
-    val outDir = java.nio.file.Files.createTempDirectory("graft_spec_beat").toString
-    val lock = new java.io.File(Checkpoint.maintenanceLockPath(outDir))
-    // without the heartbeat, a holder that outlives staleMs loses lock
-    // protection mid-flight: after the sleep the mtime would be > staleMs
-    // old and a competing acquire would reclaim the LIVE lock
-    Checkpoint.withMaintenanceLock(spark, outDir, staleMs = 4000L) {
-      Thread.sleep(5000L) // outlive staleMs inside the critical section
-      val age = System.currentTimeMillis() - lock.lastModified()
-      assert(age < 4000L, s"heartbeat must keep the lock fresh, age=$age ms")
-      val ex = intercept[IllegalStateException](
-        Checkpoint.withMaintenanceLock(spark, outDir, staleMs = 4000L)(()))
-      assert(ex.getMessage.contains("maintenance already in progress"),
-        "a live heartbeated lock must still repel competing maintenance")
+    withTempDir("graft_spec_beat") { outDir =>
+      val lock = new java.io.File(Checkpoint.maintenanceLockPath(outDir))
+      // without the heartbeat, a holder that outlives staleMs loses lock
+      // protection mid-flight: after the sleep the mtime would be > staleMs
+      // old and a competing acquire would reclaim the LIVE lock
+      Checkpoint.withMaintenanceLock(spark, outDir, staleMs = 4000L) {
+        Thread.sleep(5000L) // outlive staleMs inside the critical section
+        val age = System.currentTimeMillis() - lock.lastModified()
+        assert(age < 4000L, s"heartbeat must keep the lock fresh, age=$age ms")
+        val ex = intercept[IllegalStateException](
+          Checkpoint.withMaintenanceLock(spark, outDir, staleMs = 4000L)(()))
+        assert(ex.getMessage.contains("maintenance already in progress"),
+          "a live heartbeated lock must still repel competing maintenance")
+      }
+      assert(!lock.exists, "lock released after the body returns")
     }
-    assert(!lock.exists, "lock released after the body returns")
   }
 
   test("vacuum serializes with compact via the maintenance lock") {
-    val outDir = java.nio.file.Files.createTempDirectory("graft_spec_vlock").toString
-    new java.io.File(outDir).mkdirs()
-    val lock = new java.io.File(Checkpoint.maintenanceLockPath(outDir))
-    assert(lock.createNewFile()) // fresh foreign lock = compact in flight
-    // racing a compact, vacuum could delete the just-published compacted
-    // data dir (unreferenced between compact's steps 2 and 4) — it must
-    // refuse while the lock is live
-    val ex = intercept[IllegalStateException](Checkpoint.vacuum(spark, outDir))
-    assert(ex.getMessage.contains("maintenance already in progress"))
-    lock.delete()
-    assert(Checkpoint.vacuum(spark, outDir).isEmpty) // empty sink, lock free
-    assert(!lock.exists, "vacuum releases the lock it took")
+    withTempDir("graft_spec_vlock") { outDir =>
+      new java.io.File(outDir).mkdirs()
+      val lock = new java.io.File(Checkpoint.maintenanceLockPath(outDir))
+      assert(lock.createNewFile()) // fresh foreign lock = compact in flight
+      // racing a compact, vacuum could delete the just-published compacted
+      // data dir (unreferenced between compact's steps 2 and 4) — it must
+      // refuse while the lock is live
+      val ex = intercept[IllegalStateException](Checkpoint.vacuum(spark, outDir))
+      assert(ex.getMessage.contains("maintenance already in progress"))
+      lock.delete()
+      assert(Checkpoint.vacuum(spark, outDir).isEmpty) // empty sink, lock free
+      assert(!lock.exists, "vacuum releases the lock it took")
+    }
   }
 
   test("query inventory: every query has an oracle and the count is pinned") {
     // the README/NOTES quote this number; pinning it here keeps the prose
     // from drifting (r4 verdict item 7). Update BOTH on every new query.
-    assert(SparkEntry.queries.size == 22,
+    assert(SparkEntry.queries.size == 15,
       s"queries=${SparkEntry.queries.size} — update this pin AND README.md")
     assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet,
       "every query needs a DuckDB oracle (and no orphaned oracles): " +
@@ -308,35 +316,36 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("snapshot time travel: readExtractedAsOf sees exactly the batches committed by then") {
     import spark.implicits._
-    val outDir = java.nio.file.Files.createTempDirectory("graft_spec_tt").toString
-    def pages(lo: Long, hi: Long) =
-      (lo until hi).map(i => Corpus.pageRowFor(i, s"time travel doc $i", "en")).toDS()
-    def commitRange(lo: Long, hi: Long): Unit = {
-      Checkpoint.commitWithData(ExtractPipeline.run(pages(lo, hi)), outDir)
-      Thread.sleep(20) // distinct manifest mtimes on a coarse-granularity fs
+    withTempDir("graft_spec_tt") { outDir =>
+      def pages(lo: Long, hi: Long) =
+        (lo until hi).map(i => Corpus.pageRowFor(i, s"time travel doc $i", "en")).toDS()
+      def commitRange(lo: Long, hi: Long): Unit = {
+        Checkpoint.commitWithData(ExtractPipeline.run(pages(lo, hi)), outDir)
+        Thread.sleep(20) // distinct manifest mtimes on a coarse-granularity fs
+      }
+      commitRange(0, 3); commitRange(3, 7); commitRange(7, 12)
+      // a manifest-ONLY commit (no data batch) must not break as-of reads
+      val extra = Seq(Corpus.pageRowFor(100L, "manifest only doc", "en")).toDS()
+      Checkpoint.commit(ExtractPipeline.run(extra), outDir)
+      val snaps = Checkpoint.snapshots(spark, outDir)
+      assert(snaps.length == 4)
+      assert(snaps.map(_.commitMs).sliding(2).forall(p => p.head <= p.last))
+      assert(Checkpoint.readExtractedAsOf(spark, outDir, snaps(0).commitMs).count() == 3)
+      assert(Checkpoint.readExtractedAsOf(spark, outDir, snaps(1).commitMs).count() == 7)
+      assert(Checkpoint.readExtractedAsOf(spark, outDir, snaps(2).commitMs).count() == 12)
+      assert(Checkpoint.readExtractedAsOf(spark, outDir, snaps(3).commitMs).count() == 12)
+      assert(Checkpoint.readExtractedAsOf(spark, outDir, snaps(0).commitMs - 1).count() == 0)
+      // as-of the newest snapshot == the current table
+      val table = Checkpoint.readExtracted(spark, outDir)
+      assert(table.count() == 12 && table.select("url").distinct().count() == 12)
+      // every data commit's urls are done, the manifest-only commit's too
+      assert(Checkpoint.resume(pages(0, 15).union(extra), outDir)
+        .map(_.url).collect().toSet == (12L until 15L).map(Corpus.UrlPrefix + _).toSet)
+      val m = Checkpoint.metrics(spark, outDir).collect().head
+      assert(m.getAs[Long]("docs_done") == 13)
+      assert(m.getAs[Long]("total_chars") ==
+        table.agg(sum("n_chars")).head.getLong(0) + ExtractPipeline.run(extra).head.n_chars)
     }
-    commitRange(0, 3); commitRange(3, 7); commitRange(7, 12)
-    // a manifest-ONLY commit (no data batch) must not break as-of reads
-    val extra = Seq(Corpus.pageRowFor(100L, "manifest only doc", "en")).toDS()
-    Checkpoint.commit(ExtractPipeline.run(extra), outDir)
-    val snaps = Checkpoint.snapshots(spark, outDir)
-    assert(snaps.length == 4)
-    assert(snaps.map(_.commitMs).sliding(2).forall(p => p.head <= p.last))
-    assert(Checkpoint.readExtractedAsOf(spark, outDir, snaps(0).commitMs).count() == 3)
-    assert(Checkpoint.readExtractedAsOf(spark, outDir, snaps(1).commitMs).count() == 7)
-    assert(Checkpoint.readExtractedAsOf(spark, outDir, snaps(2).commitMs).count() == 12)
-    assert(Checkpoint.readExtractedAsOf(spark, outDir, snaps(3).commitMs).count() == 12)
-    assert(Checkpoint.readExtractedAsOf(spark, outDir, snaps(0).commitMs - 1).count() == 0)
-    // as-of the newest snapshot == the current table
-    val table = Checkpoint.readExtracted(spark, outDir)
-    assert(table.count() == 12 && table.select("url").distinct().count() == 12)
-    // every data commit's urls are done, the manifest-only commit's too
-    assert(Checkpoint.resume(pages(0, 15).union(extra), outDir)
-      .map(_.url).collect().toSet == (12L until 15L).map(Corpus.UrlPrefix + _).toSet)
-    val m = Checkpoint.metrics(spark, outDir).collect().head
-    assert(m.getAs[Long]("docs_done") == 13)
-    assert(m.getAs[Long]("total_chars") ==
-      table.agg(sum("n_chars")).head.getLong(0) + ExtractPipeline.run(extra).head.n_chars)
   }
 
   test("table-format seam: commit + crash-orphan + resume round-trips under ORC") {
@@ -344,89 +353,92 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val texts = (0L until 12L).map(i => i -> s"orc seam document $i body words")
     val pages = texts.map { case (id, t) => Corpus.pageRowFor(id, t, "en") }.toDS()
     def docId = element_at(split(col("url"), "/"), -1).cast("long")
-    val outDir = java.nio.file.Files.createTempDirectory("graft_spec_orc").toString
-    spark.conf.set("spark.graft.table.format", "orc")
-    try {
-      Checkpoint.commitWithData(ExtractPipeline.run(pages.where(docId < 5)), outDir)
-      assert(Checkpoint.readExtracted(spark, outDir).count() == 5)
-      // data files really are ORC, not parquet
-      val batchDirs = new java.io.File(Checkpoint.dataPath(outDir)).listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("batch_"))
-      assert(batchDirs.nonEmpty)
-      assert(batchDirs.flatMap(_.listFiles()).exists(_.getName.endsWith(".orc")),
-        "expected .orc data files under the committed batch")
-      // crash window: orphan ORC batch is invisible until committed
-      ExtractPipeline.run(pages.where(docId >= 5)).toDF()
-        .write.orc(Checkpoint.dataPath(outDir) + "/batch_orphan")
-      assert(Checkpoint.readExtracted(spark, outDir).count() == 5)
-      val remaining = Checkpoint.resume(pages, outDir)
-      assert(remaining.count() == 7)
-      Checkpoint.commitWithData(ExtractPipeline.run(remaining), outDir)
-      val out = Checkpoint.readExtracted(spark, outDir)
-      assert(out.count() == 12 && out.select("url").distinct().count() == 12)
-      assert(Checkpoint.resume(pages, outDir).count() == 0)
-    } finally spark.conf.unset("spark.graft.table.format")
+    withTempDir("graft_spec_orc") { outDir =>
+      spark.conf.set("spark.graft.table.format", "orc")
+      try {
+        Checkpoint.commitWithData(ExtractPipeline.run(pages.where(docId < 5)), outDir)
+        assert(Checkpoint.readExtracted(spark, outDir).count() == 5)
+        // data files really are ORC, not parquet
+        val batchDirs = new java.io.File(Checkpoint.dataPath(outDir)).listFiles()
+          .filter(f => f.isDirectory && f.getName.startsWith("batch_"))
+        assert(batchDirs.nonEmpty)
+        assert(batchDirs.flatMap(_.listFiles()).exists(_.getName.endsWith(".orc")),
+          "expected .orc data files under the committed batch")
+        // crash window: orphan ORC batch is invisible until committed
+        ExtractPipeline.run(pages.where(docId >= 5)).toDF()
+          .write.orc(Checkpoint.dataPath(outDir) + "/batch_orphan")
+        assert(Checkpoint.readExtracted(spark, outDir).count() == 5)
+        val remaining = Checkpoint.resume(pages, outDir)
+        assert(remaining.count() == 7)
+        Checkpoint.commitWithData(ExtractPipeline.run(remaining), outDir)
+        val out = Checkpoint.readExtracted(spark, outDir)
+        assert(out.count() == 12 && out.select("url").distinct().count() == 12)
+        assert(Checkpoint.resume(pages, outDir).count() == 0)
+      } finally spark.conf.unset("spark.graft.table.format")
+    }
   }
 
   test("exactly-once: ORPHAN legacy flat data (no legacy manifest) stays invisible") {
     import spark.implicits._
     val texts = (0L until 6L).map(i => i -> s"orphan legacy doc $i words")
     val pages = texts.map { case (id, t) => Corpus.pageRowFor(id, t, "en") }.toDS()
-    val outDir = java.nio.file.Files.createTempDirectory("graft_spec_orphleg").toString
-    // a legacy run crashed AFTER writing flat data, BEFORE its manifest:
-    // flat part-files exist, but no manifest vouches for them
-    ExtractPipeline.run(pages.limit(3)).toDF().coalesce(1).write.parquet(s"$outDir/.stage")
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(Checkpoint.dataPath(outDir)))
-    new java.io.File(s"$outDir/.stage").listFiles()
-      .filter(_.getName.startsWith("part-")).foreach { f =>
-        fs.rename(new org.apache.hadoop.fs.Path(f.getPath),
-          new org.apache.hadoop.fs.Path(s"${Checkpoint.dataPath(outDir)}/${f.getName}"))
-      }
-    // a NEW-layout commit must not make the orphan visible
-    Checkpoint.commitWithData(ExtractPipeline.run(pages), outDir)
-    val out = Checkpoint.readExtracted(spark, outDir)
-    assert(out.count() == 6, "orphan legacy flat files leaked into reads")
-    assert(out.select("url").distinct().count() == 6, "duplicate urls from orphan leak")
+    withTempDir("graft_spec_orphleg") { outDir =>
+      // a legacy run crashed AFTER writing flat data, BEFORE its manifest:
+      // flat part-files exist, but no manifest vouches for them
+      ExtractPipeline.run(pages.limit(3)).toDF().coalesce(1).write.parquet(s"$outDir/.stage")
+      val fs = new org.apache.hadoop.fs.Path(outDir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.mkdirs(new org.apache.hadoop.fs.Path(Checkpoint.dataPath(outDir)))
+      new java.io.File(s"$outDir/.stage").listFiles()
+        .filter(_.getName.startsWith("part-")).foreach { f =>
+          fs.rename(new org.apache.hadoop.fs.Path(f.getPath),
+            new org.apache.hadoop.fs.Path(s"${Checkpoint.dataPath(outDir)}/${f.getName}"))
+        }
+      // a NEW-layout commit must not make the orphan visible
+      Checkpoint.commitWithData(ExtractPipeline.run(pages), outDir)
+      val out = Checkpoint.readExtracted(spark, outDir)
+      assert(out.count() == 6, "orphan legacy flat files leaked into reads")
+      assert(out.select("url").distinct().count() == 6, "duplicate urls from orphan leak")
+    }
   }
 
   test("only batch_ directories holding manifest.json are committed manifests: a flat manifest file or a parquet-row batch marks nothing done") {
     import spark.implicits._
     val pages = (0L until 6L).map(i => Corpus.pageRowFor(i, s"flat manifest doc $i words", "en")).toDS()
-    val outDir = java.nio.file.Files.createTempDirectory("graft_spec_flatman").toString
-    // a flat part- file of manifest rows directly under _manifest/, as the
-    // pre-atomic layout wrote it: not a batch, so it vouches for nothing
-    ExtractPipeline.run(pages).select("url", "n_chars", "decode_failures")
-      .coalesce(1).write.parquet(s"$outDir/.flat")
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(Checkpoint.manifestPath(outDir)))
-    new java.io.File(s"$outDir/.flat").listFiles()
-      .filter(_.getName.startsWith("part-")).foreach { f =>
-        fs.rename(new org.apache.hadoop.fs.Path(f.getPath),
-          new org.apache.hadoop.fs.Path(s"${Checkpoint.manifestPath(outDir)}/${f.getName}"))
-      }
-    // a batch_ directory of parquet manifest rows, as written before the
-    // file list, plus the data batch it names: without a manifest.json it
-    // commits nothing, so its data batch stays invisible too
-    val old = "batch_partid"
-    val oldDocs = ExtractPipeline.run(pages).toDF()
-    oldDocs.write.parquet(s"${Checkpoint.dataPath(outDir)}/$old")
-    oldDocs.select(col("url"), col("n_chars"), col("decode_failures"),
-        spark_partition_id().as("part_id"), lit(old).as("batch"))
-      .write.parquet(s"${Checkpoint.manifestPath(outDir)}/$old")
-    assert(Checkpoint.snapshots(spark, outDir).isEmpty)
-    assert(Checkpoint.resume(pages, outDir).count() == 6)
-    assert(Checkpoint.readExtracted(spark, outDir).count() == 0)
-    // the first real commit is the only snapshot, and the flat file and the
-    // parquet-row batch stay out: each url is visible exactly once
-    Checkpoint.commitWithData(ExtractPipeline.run(pages), outDir)
-    assert(Checkpoint.snapshots(spark, outDir).map(_.name.startsWith("batch_")) == Seq(true))
-    assert(!Checkpoint.snapshots(spark, outDir).exists(_.name == old))
-    assert(Checkpoint.readExtracted(spark, outDir).count() == 6)
-    assert(Checkpoint.readExtracted(spark, outDir).select("url").distinct().count() == 6)
-    assert(Checkpoint.metrics(spark, outDir).collect().head.getAs[Long]("docs_done") == 6)
+    withTempDir("graft_spec_flatman") { outDir =>
+      // a flat part- file of manifest rows directly under _manifest/, as the
+      // pre-atomic layout wrote it: not a batch, so it vouches for nothing
+      ExtractPipeline.run(pages).select("url", "n_chars", "decode_failures")
+        .coalesce(1).write.parquet(s"$outDir/.flat")
+      val fs = new org.apache.hadoop.fs.Path(outDir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.mkdirs(new org.apache.hadoop.fs.Path(Checkpoint.manifestPath(outDir)))
+      new java.io.File(s"$outDir/.flat").listFiles()
+        .filter(_.getName.startsWith("part-")).foreach { f =>
+          fs.rename(new org.apache.hadoop.fs.Path(f.getPath),
+            new org.apache.hadoop.fs.Path(s"${Checkpoint.manifestPath(outDir)}/${f.getName}"))
+        }
+      // a batch_ directory of parquet manifest rows, as written before the
+      // file list, plus the data batch it names: without a manifest.json it
+      // commits nothing, so its data batch stays invisible too
+      val old = "batch_partid"
+      val oldDocs = ExtractPipeline.run(pages).toDF()
+      oldDocs.write.parquet(s"${Checkpoint.dataPath(outDir)}/$old")
+      oldDocs.select(col("url"), col("n_chars"), col("decode_failures"),
+          spark_partition_id().as("part_id"), lit(old).as("batch"))
+        .write.parquet(s"${Checkpoint.manifestPath(outDir)}/$old")
+      assert(Checkpoint.snapshots(spark, outDir).isEmpty)
+      assert(Checkpoint.resume(pages, outDir).count() == 6)
+      assert(Checkpoint.readExtracted(spark, outDir).count() == 0)
+      // the first real commit is the only snapshot, and the flat file and the
+      // parquet-row batch stay out: each url is visible exactly once
+      Checkpoint.commitWithData(ExtractPipeline.run(pages), outDir)
+      assert(Checkpoint.snapshots(spark, outDir).map(_.name.startsWith("batch_")) == Seq(true))
+      assert(!Checkpoint.snapshots(spark, outDir).exists(_.name == old))
+      assert(Checkpoint.readExtracted(spark, outDir).count() == 6)
+      assert(Checkpoint.readExtracted(spark, outDir).select("url").distinct().count() == 6)
+      assert(Checkpoint.metrics(spark, outDir).collect().head.getAs[Long]("docs_done") == 6)
+    }
   }
 
   test("captureLines: pdf span source lines match the reference's CR/LF/CRLF rules") {
@@ -477,50 +489,52 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // hashes the rows over 2 x 4 partitions
     val giant = Corpus.pageRowFor(0L, "x" * 500000, "en")
     val tiny = (1L to 600L).map(i => Corpus.pageRowFor(i, s"tiny doc number $i", "en"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_skew").toString
-    def table(files: Int, name: String) = {
-      (giant +: tiny).toDS().repartition(files).write.parquet(s"$dir/$name")
-      spark.read.parquet(s"$dir/$name").as[PageRow](org.apache.spark.sql.Encoders.product[PageRow])
+    withTempDir("graft_skew") { dir =>
+      def table(files: Int, name: String) = {
+        (giant +: tiny).toDS().repartition(files).write.parquet(s"$dir/$name")
+        spark.read.parquet(s"$dir/$name").as[PageRow](org.apache.spark.sql.Encoders.product[PageRow])
+      }
+      val one = table(1, "one")
+      val spread = ExtractPipeline.spread(one, one)
+      val perPart = spread.mapPartitions(it => Iterator.single(it.size)).collect()
+      assert(perPart.length == 8)
+      assert(perPart.count(_ > 0) >= 6, perPart.mkString(",")) // spread, not piled
+      // extraction result unchanged by the repartition
+      val a = ExtractPipeline.run(one).select("url", "n_chars").collect().toSet
+      val b = ExtractPipeline.run(spread).select("url", "n_chars").collect().toSet
+      assert(a == b)
+      // with a row group for each of the 4 cores, the scan splits are kept
+      val four = table(4, "four")
+      assert(ExtractPipeline.spread(four, four) eq four)
     }
-    val one = table(1, "one")
-    val spread = ExtractPipeline.spread(one, one)
-    val perPart = spread.mapPartitions(it => Iterator.single(it.size)).collect()
-    assert(perPart.length == 8)
-    assert(perPart.count(_ > 0) >= 6, perPart.mkString(",")) // spread, not piled
-    // extraction result unchanged by the repartition
-    val a = ExtractPipeline.run(one).select("url", "n_chars").collect().toSet
-    val b = ExtractPipeline.run(spread).select("url", "n_chars").collect().toSet
-    assert(a == b)
-    // with a row group for each of the 4 cores, the scan splits are kept
-    val four = table(4, "four")
-    assert(ExtractPipeline.spread(four, four) eq four)
   }
 
   test("streaming extraction (readStream -> mapPartitions -> sink) matches batch") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_pages").toString
-    val texts = (0L until 30L).map(i => i -> s"streaming corpus document $i with words")
-    texts.map { case (id, t) => Corpus.pageRowFor(id, t, "en") }.toDS()
-      .write.mode("overwrite").parquet(s"$dir/in")
-    val batch = ExtractPipeline.run(
-        spark.read.parquet(s"$dir/in").as[PageRow](org.apache.spark.sql.Encoders.product[PageRow]))
-      .select("url", "kind", "text").orderBy("url").collect()
+    withTempDir("graft_stream_pages") { dir =>
+      val texts = (0L until 30L).map(i => i -> s"streaming corpus document $i with words")
+      texts.map { case (id, t) => Corpus.pageRowFor(id, t, "en") }.toDS()
+        .write.mode("overwrite").parquet(s"$dir/in")
+      val batch = ExtractPipeline.run(
+          spark.read.parquet(s"$dir/in").as[PageRow](org.apache.spark.sql.Encoders.product[PageRow]))
+        .select("url", "kind", "text").orderBy("url").collect()
 
-    val streamIn = spark.readStream
-      .schema(spark.read.parquet(s"$dir/in").schema)
-      .parquet(s"$dir/in")
-      .as[PageRow](org.apache.spark.sql.Encoders.product[PageRow])
-    val q = ExtractPipeline.run(streamIn)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName("graft_extract_stream")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val streamed = spark.sql("SELECT url, kind, text FROM graft_extract_stream")
-      .orderBy("url").collect()
-    assert(streamed.toSeq == batch.toSeq)
+      val streamIn = spark.readStream
+        .schema(spark.read.parquet(s"$dir/in").schema)
+        .parquet(s"$dir/in")
+        .as[PageRow](org.apache.spark.sql.Encoders.product[PageRow])
+      val q = ExtractPipeline.run(streamIn)
+        .writeStream
+        .outputMode("append")
+        .format("memory")
+        .queryName("graft_extract_stream")
+        .option("checkpointLocation", s"$dir/ckpt")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination(120000)
+      val streamed = spark.sql("SELECT url, kind, text FROM graft_extract_stream")
+        .orderBy("url").collect()
+      assert(streamed.toSeq == batch.toSeq)
+    }
   }
 }

@@ -1,39 +1,27 @@
 package graft
 
-import graft.pdf.{Encodings, TextStore}
+import graft.pdf.TextStore
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Reference-semantics tests for the TextStore port
+/** Reference-semantics tests for the TextStore line rules
   * (reference: TextStoreLib/TextStore.cs:17-144, TextStoreLibTest/TextStoreTest.cs). */
 class TextStoreSpec extends AnyFunSuite {
 
-  test("CR, LF and CRLF each terminate a line; terminator stored as one '\\r'") {
+  test("CR, LF and CRLF each terminate a line; CRLF counts once") {
     val ts = new TextStore()
     val bytes = "line1\r\nline2\rline3\nline4".getBytes("ISO-8859-1")
     ts.append(bytes, 100)
-    assert(ts.linesCount == 4)
-    assert(ts.text == "line1\rline2\rline3\rline4")
-    assert((0 to 3).map(ts.lineStarts) == Seq(0, 6, 12, 18))
-    assert(ts.lineStarts(4) == 23) // sentinel (TextStore.cs:141)
-    // CRLF: the line's byte offset is bumped past the LF (TextStore.cs:108-113).
-    // Line 0's offset stays 0 — the reference's Append never writes index 0
-    // (only Reset does, to 0; TextStore.cs:68-74) — kept verbatim.
-    assert((0 to 3).map(ts.lineByteOffsets) == Seq(0, 107, 113, 119))
-    assert(ts.lineByteOffsets(4) == 124)
-    assert(ts(0) == "line1")
-    assert(ts(1) == "line2")
-    // reference quirk kept verbatim: the indexer strips one trailing char
-    // from a final line that has NO terminator (TextStore.cs:40-43)
-    assert(ts(3) == "line")
-  }
-
-  test("unmapped display bytes render as quoted hex (TextStore.cs:128-136)") {
-    val unmapped = (0 until 256).find(b => Encodings.PdfEncoding(b) == 0xffff.toChar)
-    assert(unmapped.isDefined, "display table maps every byte? quirk test needs an unmapped one")
-    val b = unmapped.get
-    val ts = new TextStore()
-    ts.append(Array('A'.toByte, b.toByte, 'B'.toByte), 0)
-    assert(ts.text == "A'" + Integer.toHexString(b) + "'B")
+    // CRLF: the line's byte offset is bumped past the LF (TextStore.cs:108-113),
+    // so lines 2..4 start at source bytes 107, 113 and 119. Line 1's offset
+    // stays 0 — the reference's Append never writes index 0 (only Reset
+    // does, to 0; TextStore.cs:68-74) — kept verbatim.
+    assert(ts.lineOfByteOffset(0) == 1)
+    assert(ts.lineOfByteOffset(106) == 1) // the CRLF pair belongs to line 1
+    assert(ts.lineOfByteOffset(107) == 2)
+    assert(ts.lineOfByteOffset(112) == 2)
+    assert(ts.lineOfByteOffset(113) == 3)
+    assert(ts.lineOfByteOffset(119) == 4)
+    assert(ts.lineOfByteOffset(123) == 4) // no terminator after the last line
   }
 
   test("lineOfByteOffset maps source offsets to 1-based lines") {
@@ -51,24 +39,16 @@ class TextStoreSpec extends AnyFunSuite {
     // contain exactly \n (0x0A) and \r (0x0D) as terminators -> 3 lines
     val ts = new TextStore(10)
     ts.append(Array.tabulate[Byte](256)(_.toByte), 0)
-    assert(ts.linesCount == 3)
+    assert(ts.lineOfByteOffset(10) == 1)
+    assert(ts.lineOfByteOffset(11) == 2)
+    assert(ts.lineOfByteOffset(14) == 3)
+    assert(ts.lineOfByteOffset(255) == 3)
     // upstream's test then asserts a lone LF append LEAVES LinesCount at 3
     // (TextStoreTest.cs:34-35) — but TextStore.cs:104-125 unconditionally
     // starts a new line on LF, making it 4. The test contradicts the code
     // it tests; we port the CODE (which is what the viewer actually runs)
     // and document the discrepancy here.
-    ts.append(Array[Byte](0x0a), 0)
-    assert(ts.linesCount == 4)
-  }
-
-  test("reset reuses the buffers (viewer lifecycle)") {
-    val ts = new TextStore(16)
-    ts.append(("x" * 100 + "\n" + "y" * 50).getBytes("ISO-8859-1"), 0)
-    assert(ts.linesCount == 2)
-    ts.reset()
-    ts.append("one\ntwo".getBytes("ISO-8859-1"), 10)
-    assert(ts.linesCount == 2)
-    assert(ts(0) == "one")
-    assert(ts.lineByteOffsets(1) == 14)
+    ts.append(Array[Byte](0x0a), 256)
+    assert(ts.lineOfByteOffset(257) == 4)
   }
 }
