@@ -127,7 +127,7 @@ class CorpusVariantsSpec extends AnyFunSuite {
     }
   }
 
-  test("hybrid /XRefStm corpus: every text shape is an error row, like the reference") {
+  test("hybrid /XRefStm corpus: every text shape is the reference error row") {
     for ((t, ti) <- texts.zipWithIndex; docId <- Seq(0L, 2L)) { // both deflate arms
       val payload = Corpus.pdfHybridForDoc(docId, t)
       // reference parity: /XRefStm is trailer bookkeeping, the hidden
@@ -269,7 +269,7 @@ class CorpusVariantsSpec extends AnyFunSuite {
     }
   }
 
-  test("AES-256 corpus: every R6 / R5 / EncryptMetadata-false dialect is an error row") {
+  test("AES-256 corpus: R6, R5 and EncryptMetadata-false dialects are error rows") {
     // dialect routing: (docId/2)%3 — 0: R6 (hardened Algorithm-2.B hash),
     // 1: deprecated R5 (single SHA-256), 2: R6 + /EncryptMetadata false
     for (dialect <- 0 until 3; t <- Seq(texts(0), texts(3))) {

@@ -96,7 +96,7 @@ class ExtraFiltersSpec extends AnyFunSuite {
     b.finish(s"/Root $catalog 0 R")
   }
 
-  test("LZW / ASCIIHex / ASCII85 / RunLength content streams error like the reference") {
+  test("LZW / ASCIIHex / ASCII85 / RunLength streams error like the reference") {
     val ops = "BT (filtered text works) Tj ET".getBytes("ISO-8859-1")
     val cases = Seq(
       "/Filter/LZWDecode" -> GoldenGen.lzwEncode(ops),
