@@ -130,7 +130,7 @@ final class PdfContent(tk: PdfTokeniser, contentsDict: DictTok, fonts: collectio
       }
     } catch {
       case e: Exception =>
-        val detail = e.getClass.getSimpleName + ": " + Option(e.getMessage).getOrElse("")
+        val detail = PdfExtract.errorText(e)
         exception = e match {
           case _: PdfStreamException | _: PdfException => detail
           case _ => detail + "\n" + tk.showStreamContentAtIndex()
@@ -175,7 +175,7 @@ final class PdfPage(tk: PdfTokeniser, pageToken: DictTok) {
     }
   } catch {
     case e: Exception =>
-      val detail = e.getClass.getSimpleName + ": " + Option(e.getMessage).getOrElse("")
+      val detail = PdfExtract.errorText(e)
       exception = e match {
         case _: PdfStreamException | _: PdfException => detail
         case _ => detail + "\n" + tk.showStreamContentAtIndex()

@@ -94,11 +94,8 @@ final class PdfFont(token: PdfTok) {
     }
   } catch {
     case e: Exception =>
-      exception = (if (exception == null) "" else exception) + describe(e) + "\n"
+      exception = (if (exception == null) "" else exception) + PdfExtract.errorText(e) + "\n"
   }
-
-  private def describe(e: Exception): String =
-    e.getClass.getSimpleName + ": " + Option(e.getMessage).getOrElse("")
 
   /** bfchar/bfrange overlay onto the 256-entry table; duplicate cid entries
     * abort the overlay exactly like the reference's `SortedDictionary.Add`

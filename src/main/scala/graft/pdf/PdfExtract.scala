@@ -34,6 +34,18 @@ final case class ExtractResult(
   * not fail a 10^12-row job. */
 object PdfExtract {
 
+  /** The `error` text of a caught exception: `<SimpleName>: <message>`.
+    * Once a throw site is compiled, HotSpot may throw the implicit JVM
+    * exceptions matched below as preallocated instances without a message
+    * (`OmitStackTraceInFastThrow`), so for them the message is always
+    * dropped: the same document then gets the same text whatever the JIT
+    * state. */
+  def errorText(e: Throwable): String = e match {
+    case _: NullPointerException | _: ArithmeticException | _: ArrayIndexOutOfBoundsException |
+        _: ArrayStoreException | _: ClassCastException => e.getClass.getSimpleName + ": "
+    case _ => e.getClass.getSimpleName + ": " + Option(e.getMessage).getOrElse("")
+  }
+
   def isPdf(bytes: Array[Byte]): Boolean = {
     if (bytes == null || bytes.length < 8) return false
     if (startsWithHeader(bytes, 0)) return true
@@ -99,11 +111,6 @@ object PdfExtract {
           if (content.error != null) errors.append(content.error).append('\n')
         }
       }
-      if (tk.isDecryptionError) {
-        decodeFailures += 1
-        errors.append("Document cannot be decrypted with provided password.").append('\n')
-      }
-
       ExtractResult(
         text = tk.docText.toString,
         nChars = tk.docText.length,
@@ -121,7 +128,7 @@ object PdfExtract {
         val msg = e match {
           case pe: PdfException       => "PdfException: " + pe.shortMessage
           case pe: PdfStreamException => "PdfStreamException: " + pe.shortMessage
-          case other                  => other.getClass.getSimpleName + ": " + Option(other.getMessage).getOrElse("")
+          case other                  => errorText(other)
         }
         ExtractResult(
           text = "",

@@ -137,7 +137,6 @@ final class PdfTokeniser(
   var documentId: String = null
   var documentInfo: String = null
   var metadata: String = null
-  var isDecryptionError: Boolean = false
   var isStringNeedsDecryption: Boolean = false
   private var globalEncryptionKey: Array[Byte] = null
 
@@ -514,7 +513,6 @@ final class PdfTokeniser(
 
   /** reference: Tokeniser.cs:1161-1176, plus a cycle guard. */
   private def readPages(pagesToken: PdfTok, visited: mutable.HashSet[ObjectId]): Unit = {
-    if (isDecryptionError) return
     val pagesDictionary = pagesToken.asInstanceOf[DictTok]
     pagesDictionary.objectId.foreach { id =>
       if (!visited.add(id)) return
@@ -1042,7 +1040,6 @@ final class PdfTokeniser(
   }
 
   private[pdf] def decryptString(objectId: ObjectId, encrypted: String): String = {
-    if (isDecryptionError) return "Decryption error"
     val data = new Array[Byte](encrypted.length)
     var i = 0
     while (i < encrypted.length) { data(i) = encrypted.charAt(i).toByte; i += 1 }

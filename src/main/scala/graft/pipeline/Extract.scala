@@ -61,8 +61,7 @@ object ExtractPipeline {
           1, r.text.length, 0, "", lang, nBytes)
       } catch {
         case e: Exception =>
-          ExtractedDoc(url, "html", "", "", Nil, 1, 0, 1,
-            e.getClass.getSimpleName + ": " + Option(e.getMessage).getOrElse(""), lang, nBytes)
+          ExtractedDoc(url, "html", "", "", Nil, 1, 0, 1, PdfExtract.errorText(e), lang, nBytes)
       }
     }
   }

@@ -235,6 +235,22 @@ class PdfExtractSpec extends AnyFunSuite {
     assert(r.decodeFailures == 1)
   }
 
+  test("errorText: implicit JVM exceptions read the same with or without a message") {
+    // HotSpot may throw these preallocated, without a message, once the
+    // throw site is compiled; the error text must not depend on that
+    Seq[String => Throwable](new NullPointerException(_), new ArithmeticException(_),
+        new ArrayIndexOutOfBoundsException(_), new ArrayStoreException(_), new ClassCastException(_))
+      .foreach { mk =>
+        val withMsg = mk("Index 486 out of bounds for length 486")
+        val bare = mk(null)
+        assert(PdfExtract.errorText(withMsg) == PdfExtract.errorText(bare))
+        assert(PdfExtract.errorText(bare) == withMsg.getClass.getSimpleName + ": ")
+      }
+    assert(PdfExtract.errorText(new IllegalStateException("bad state")) ==
+      "IllegalStateException: bad state")
+    assert(PdfExtract.errorText(new IllegalStateException()) == "IllegalStateException: ")
+  }
+
   test("isPdf classifier: prefix, embedded header, html") {
     assert(PdfExtract.isPdf(GoldenGen.helloPdf()))
     assert(PdfExtract.isPdf(GoldenGen.malformedPdf())) // header after junk

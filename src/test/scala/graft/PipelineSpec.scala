@@ -2,10 +2,15 @@ package graft
 
 import graft.TempDirs.withTempDir
 import graft.pipeline.{Checkpoint, Corpus, ExtractPipeline, PageRow}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** End-to-end Spark tests of the extraction pipeline and its commit
   * protocol, on tiny in-memory corpora (the sf tables are exercised by the
@@ -224,6 +229,69 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(m.getAs[Long]("docs_done") == 12L)
       // nothing left to compact
       assert(Checkpoint.compact(spark, outDir).isEmpty)
+    }
+  }
+
+  /** The codec of every column chunk in `files`, read from their footers. */
+  private def codecs(files: Seq[String]): Set[String] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    files.flatMap { f =>
+      ParquetFileReader.readFooter(HadoopInputFile.fromPath(new Path(f), conf),
+          ParquetMetadataConverter.NO_FILTER)
+        .getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec.name))
+    }.toSet
+  }
+
+  test("codec: every data file that commitWithData, commit and compact write is zstd") {
+    import spark.implicits._
+    val pages = (0L until 12L).map(i => Corpus.pageRowFor(i, s"codec document $i body words", "en")).toDS()
+    def docId = element_at(split(col("url"), "/"), -1).cast("long")
+    withTempDir("graft_spec_codec") { outDir =>
+      (0 until 2).foreach(r => Checkpoint.commitWithData(
+        ExtractPipeline.run(pages.where(docId % 3 === r)), outDir))
+      Checkpoint.commit(ExtractPipeline.run(pages.where(docId % 3 === 2)), outDir)
+      val committed = Checkpoint.manifests(spark, outDir)
+      assert(committed.count(_.dataBatch.isEmpty) == 1 && committed.size == 3)
+      committed.foreach(m => assert(codecs(m.files) == Set("ZSTD"), m.name))
+      assert(Checkpoint.compact(spark, outDir).isDefined)
+      val compacted = Checkpoint.manifests(spark, outDir).filter(_.dataBatch.isDefined)
+      assert(compacted.size == 1)
+      assert(codecs(compacted.head.files) == Set("ZSTD"))
+    }
+  }
+
+  test("codec: an earlier snappy batch stays readable, resumable and compacts to zstd") {
+    import spark.implicits._
+    val pages = (0L until 10L).map(i => Corpus.pageRowFor(i, s"legacy codec doc $i words", "en")).toDS()
+    def docId = element_at(split(col("url"), "/"), -1).cast("long")
+    withTempDir("graft_spec_snappy") { outDir =>
+      // the first batch as an earlier build committed it: snappy data files
+      // under extracted/<batch>/ and their manifest.json file list
+      val old = "batch_snappy00000000"
+      val oldDocs = ExtractPipeline.run(pages.where(docId < 4)).toDF()
+      oldDocs.write.option("compression", "snappy").parquet(s"${Checkpoint.dataPath(outDir)}/$old")
+      val oldFiles = new java.io.File(s"${Checkpoint.dataPath(outDir)}/$old").list
+        .filter(_.endsWith(".parquet")).sorted.toSeq
+      assert(codecs(oldFiles.map(f => s"${Checkpoint.dataPath(outDir)}/$old/$f")) == Set("SNAPPY"))
+      val (docs, chars, fails, pdfs) = oldDocs.agg(count(lit(1)), sum("n_chars"),
+        sum("decode_failures"), count_if(col("kind") === "pdf")).as[(Long, Long, Long, Long)].head
+      val manDir = new java.io.File(s"${Checkpoint.manifestPath(outDir)}/$old")
+      assert(manDir.mkdirs())
+      java.nio.file.Files.writeString(new java.io.File(manDir, Checkpoint.ManifestFile).toPath,
+        s"""{"batch":"$old","format":"parquet","files":[${oldFiles.map("\"" + _ + "\"").mkString(",")}],""" +
+          s""""docs":$docs,"chars":$chars,"decode_failures":$fails,"pdf_docs":$pdfs}""")
+      Checkpoint.commitWithData(ExtractPipeline.run(pages.where(docId >= 4)), outDir)
+      def content() = Checkpoint.readExtracted(spark, outDir).select("url", "text", "n_chars").collect()
+        .map(_.toSeq.map(String.valueOf)).sortBy(_.mkString("|")).toSeq
+      val before = content()
+      assert(before.map(_.head).sorted == (0L until 10L).map(Corpus.UrlPrefix + _).sorted,
+        "every url of both batches exactly once")
+      assert(Checkpoint.resume(pages, outDir).count() == 0, "resume skips both batches' urls")
+      assert(Checkpoint.compact(spark, outDir).isDefined)
+      val batches = Checkpoint.manifests(spark, outDir).filter(_.dataBatch.isDefined)
+      assert(batches.size == 1)
+      assert(content() == before, "compaction must not change table content")
+      assert(codecs(batches.head.files) == Set("ZSTD"))
     }
   }
 
