@@ -2,7 +2,7 @@ package graft
 
 import graft.pipeline.{Checkpoint, Corpus, ExtractPipeline, TableIO}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -26,28 +26,32 @@ object Explain {
         |
         |Checklist verified per plan:
         |- extraction: ReadSchema carries ONLY url/html/lang (text+warc_ts pruned at scan)
-        |- submit write (`Main`): no Exchange between the scan and MapPartitions
-        |  when the table has a row group per core — a fresh submit is one
-        |  scan → extract → write stage (a table with fewer row groups is
-        |  hash-spread first; pinned by MainSpec)
+        |- submit write (`Main`): the writer's input is the scan projected to
+        |  url/html/lang, with no Exchange, MapPartitions or object
+        |  (de)serializer when the table has a row group per core — each write
+        |  task extracts its scan split and writes its file, so a fresh submit
+        |  is one scan → extract → write stage (a table with fewer row groups
+        |  is hash-spread first; pinned by MainSpec)
         |""".stripMargin)
-    def dump(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
+    def dumpPlan(name: String, qe: QueryExecution): Unit = {
       sb.append(s"\n## $name\n\n```\n")
-      sb.append(df.queryExecution.explainString(FormattedMode))
+      sb.append(qe.explainString(FormattedMode))
       sb.append("```\n")
     }
+    def dump(name: String, df: org.apache.spark.sql.DataFrame): Unit = dumpPlan(name, df.queryExecution)
     // extraction over a real parquet page table (write one to tmp to show scan pruning)
     val tmp = Files.createTempDirectory("graft_explain").toString
     try {
       Corpus.pages(spark, sfDir).limit(50).repartition(4).write.mode("overwrite").parquet(s"$tmp/pages")
       val pagesTable = spark.read.parquet(s"$tmp/pages")
         .as[graft.pipeline.PageRow](org.apache.spark.sql.Encoders.product[graft.pipeline.PageRow])
-      // what a fresh submit hands its data write, as Main composes it: the
-      // table has a row group per core, so spread keeps it on the scan splits
+      // what a fresh submit hands its write tasks, as Main composes it: the
+      // table has a row group per core, so spread keeps it on the scan
+      // splits; each task then extracts and writes its split
       val submitPages = TableIO.readPages(spark, s"$tmp/pages")
-      dump("submit_write input (Main: scan -> resume -> spread -> mapPartitions)",
-        ExtractPipeline.run(ExtractPipeline.spread(
-          Checkpoint.resume(submitPages, s"$tmp/submit_out"), submitPages), "").toDF())
+      dumpPlan("submit_write input (Main: scan -> resume -> spread -> url/html/lang; extraction runs in the write task)",
+        ExtractPipeline.extractRows(ExtractPipeline.spread(
+          Checkpoint.resume(submitPages, s"$tmp/submit_out"), submitPages), "").input)
       dump("extract_pipeline (scan -> mapPartitions -> agg)",
         ExtractPipeline.run(pagesTable, "").groupBy("kind")
           .agg(count(lit(1)), sum("n_chars")))

@@ -2,9 +2,17 @@ package graft.pipeline
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
+import org.apache.spark.sql.execution.datasources.{DataSource, FileFormat}
+import org.apache.spark.sql.execution.datasources.v2.FileDataSourceV2
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 import scala.jdk.CollectionConverters._
 
 /** Resumable runs with ATOMIC commits, modeling Iceberg snapshot semantics
@@ -15,13 +23,21 @@ import scala.jdk.CollectionConverters._
   *    a manifest directory `_manifest/<batch>/` holding one small JSON file,
   *    [[ManifestFile]]. Like an Iceberg manifest, it is a file list: the
   *    names of the batch's data files, their format, and the commit's
-  *    observed [[CommitStats]] totals. The driver writes it with the Hadoop
-  *    FS API from the staged listing and the observation, so a commit runs
-  *    one Spark job, its data write;
-  *  - both are first written to dot-prefixed staging directories (hidden
-  *    from every Spark/Hadoop reader), then published with two renames,
-  *    DATA FIRST, MANIFEST LAST — the manifest rename is the single atomic
-  *    commit point;
+  *    [[CommitStats]] totals;
+  *  - the data files are written by the tasks of the commit's one Spark
+  *    job ([[write]]), Iceberg's per-task data-file model: each task writes
+  *    its partition through the format's own `OutputWriter` to one file
+  *    under a hidden name unique to its attempt, counts its rows as it
+  *    writes them, and returns the file and the counts to the driver. The
+  *    driver renames only the returned files, those of the attempts that
+  *    won, to visible names, and writes the manifest with the Hadoop FS API
+  *    from those names and the summed counts. A failed or zombie attempt's
+  *    file stays hidden, and no directory listing decides what is
+  *    committed;
+  *  - data and manifest are first written to dot-prefixed staging
+  *    directories (hidden from every Spark/Hadoop reader), then published
+  *    with two renames, DATA FIRST, MANIFEST LAST — the manifest rename is
+  *    the single atomic commit point;
   *  - readers go through [[manifests]], which lists committed manifests
   *    and reads their files on the driver: [[readExtracted]] reads ONLY the
   *    data batches they reference, [[metrics]] sums their totals, and
@@ -64,7 +80,7 @@ object Checkpoint {
 
   private val json = new ObjectMapper()
 
-  /** Totals of one commit, observed during its write. */
+  /** Totals of one commit, counted by its write tasks. */
   final case class CommitStats(docs: Long, chars: Long, decodeFailures: Long, pdfDocs: Long) {
     def +(o: CommitStats): CommitStats =
       CommitStats(docs + o.docs, chars + o.chars, decodeFailures + o.decodeFailures, pdfDocs + o.pdfDocs)
@@ -77,29 +93,84 @@ object Checkpoint {
   final case class Manifest(name: String, dataBatch: Option[String], format: String,
       files: Seq[String], stats: CommitStats)
 
-  /** Writes `rows` (`ExtractedDoc` columns) to `dir` in `format` after
-    * `keep` projects them, in one job under one `observe` that counts
-    * docs, chars, decode failures and PDF docs. The files are zstd at its
+  /** What a commit writes: each write task reads its partition of the
+    * plan `input` and turns it into rows of `schema` with `perTask`. */
+  final case class Rows(input: QueryExecution, schema: StructType,
+      perTask: Iterator[InternalRow] => Iterator[InternalRow] = identity)
+
+  private def rowsOf(df: Dataset[_]): Rows = Rows(df.queryExecution, df.schema)
+
+  /** One task's data file: the hidden, attempt-unique name it was written
+    * under, the name the driver publishes it as, and its counts. */
+  private final case class TaskFile(hidden: String, visible: String, stats: CommitStats)
+
+  /** Writes `rows` (`ExtractedDoc` columns) to `dir` in `format`, keeping
+    * only the `keep` columns when given, in one job under one SQL
+    * execution. Each non-empty partition's task writes one file through
+    * the format's own `OutputWriter` and counts its docs, chars, decode
+    * failures and PDF docs. A task writes under a hidden name unique to its
+    * attempt; the driver renames the files of the attempts that won, so a
+    * failed or zombie attempt's file is never visible. Returns the visible
+    * names, sorted, and the summed counts. The files are zstd at its
     * default level 3: rewriting a 10k-page output in one task, levels 6,
     * 9 and 19 stored 8%, 10% and 25% fewer bytes but took 1.3, 1.5 and
     * 22 times as long to write. */
-  private def writeObserved(rows: DataFrame, format: String, dir: String)(
-      keep: DataFrame => DataFrame = identity): CommitStats = {
-    val observed = Observation()
-    keep(rows.observe(observed,
-        count(lit(1)).as("docs"),
-        coalesce(sum("n_chars"), lit(0L)).as("chars"),
-        coalesce(sum("decode_failures"), lit(0L)).as("decode_failures"),
-        count_if(col("kind") === "pdf").as("pdf_docs")))
-      .write.format(format).option("compression", "zstd").save(dir)
-    val m = observed.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
-    CommitStats(m("docs"), m("chars"), m("decode_failures"), m("pdf_docs"))
+  private def write(rows: Rows, format: String, dir: String,
+      keep: Seq[String] = Nil): (Seq[String], CommitStats) = {
+    val session = rows.input.sparkSession
+    val fileFormat = DataSource.lookupDataSource(format, session.sessionState.conf)
+      .getConstructor().newInstance() match {
+        case v2: FileDataSourceV2 => v2.fallbackFileFormat.getConstructor().newInstance()
+        case v1: FileFormat => v1
+      }
+    val schema = if (keep.isEmpty) rows.schema else StructType(keep.map(rows.schema(_)))
+    val ordinals = keep.map(rows.schema.fieldIndex)
+    val Seq(kind, nChars, decodeFailures) =
+      Seq("kind", "n_chars", "decode_failures").map(rows.schema.fieldIndex)
+    val job = Job.getInstance(session.sessionState.newHadoopConf())
+    val factory = fileFormat.prepareWrite(session, job, Map("compression" -> "zstd"), schema)
+    val conf = session.sparkContext.broadcast(new SerializableConfiguration(job.getConfiguration))
+    val perTask = rows.perTask
+    val jobId = java.util.UUID.randomUUID.toString
+    val written = SQLExecution.withNewExecutionId(rows.input, Some(s"commit $dir")) {
+      session.sparkContext.runJob(rows.input.toRdd, (ctx: TaskContext, in: Iterator[InternalRow]) => {
+        val it = perTask(in)
+        if (!it.hasNext) None
+        else {
+          val attempt = new TaskAttemptContextImpl(conf.value.value, new TaskAttemptID(
+            jobId, ctx.stageId, TaskType.MAP, ctx.partitionId, ctx.attemptNumber))
+          val visible = f"part-${ctx.partitionId}%05d-$jobId-c000" + factory.getFileExtension(attempt)
+          val hidden = s".${ctx.taskAttemptId}-$visible"
+          val path = new Path(dir, hidden)
+          val out = factory.newInstance(path.toString, schema, attempt)
+          val view = if (keep.isEmpty) null else ProjectingInternalRow(schema, ordinals)
+          val pdf = UTF8String.fromString("pdf")
+          var docs, chars, failures, pdfs = 0L
+          try {
+            while (it.hasNext) {
+              val r = it.next()
+              docs += 1
+              if (!r.isNullAt(nChars)) chars += r.getInt(nChars)
+              if (!r.isNullAt(decodeFailures)) failures += r.getInt(decodeFailures)
+              if (pdf == r.getUTF8String(kind)) pdfs += 1
+              if (view == null) out.write(r) else { view.project(r); out.write(view) }
+            }
+            out.close()
+          } catch {
+            case e: Throwable =>
+              try out.close() catch { case _: Throwable => () }
+              path.getFileSystem(conf.value.value).delete(path, false)
+              throw e
+          }
+          Some(TaskFile(hidden, visible, CommitStats(docs, chars, failures, pdfs)))
+        }
+      }).toSeq.flatten
+    }
+    val fs = fsOf(session, dir)
+    written.foreach(f => if (!fs.rename(new Path(dir, f.hidden), new Path(dir, f.visible)))
+      throw new IllegalStateException(s"task file rename failed: ${f.hidden} in $dir"))
+    (written.map(_.visible).sorted, written.map(_.stats).fold(CommitStats(0, 0, 0, 0))(_ + _))
   }
-
-  /** Names of the visible files a write left in `dir`, sorted. */
-  private def visibleFiles(fs: FileSystem, dir: Path): Seq[String] =
-    fs.listStatus(dir).toSeq.filter(_.isFile).map(_.getPath.getName)
-      .filterNot(n => n.startsWith(".") || n.startsWith("_")).sorted
 
   /** Writes the file list into the staging manifest directory `dir`.
     * `files` are paths relative to `extracted/<batch>/`, or to `dir` itself
@@ -137,25 +208,30 @@ object Checkpoint {
   }
 
   /** Atomically commit a batch of extracted docs in one pass: the data is
-    * written once to staging, with no cache, under one `observe` (see
-    * [[writeObserved]]). An empty batch deletes its staging dir and
-    * publishes nothing. Otherwise the driver lists the staged data files
-    * into the manifest with the observed totals — so the manifest names
-    * exactly the files written, even for a nondeterministic upstream — and
-    * no second job runs. Then the data dir is renamed into place and the
-    * manifest after it — the commit point. Returns the observed counts. */
-  def commitWithData(done: Dataset[ExtractedDoc], outDir: String): CommitStats = {
-    val spark = done.sparkSession
+    * written once to staging, with no cache, by its tasks, which return
+    * their files and counts (see [[write]]). An empty batch deletes its
+    * staging dir and publishes nothing. Otherwise the driver lists the
+    * returned files in the manifest with the summed counts — so the
+    * manifest names exactly the files the winning attempts wrote, even for
+    * a nondeterministic upstream — and no second job runs. Then the data
+    * dir is renamed into place and the manifest after it — the commit
+    * point. Returns the counts. */
+  def commitWithData(done: Dataset[ExtractedDoc], outDir: String): CommitStats =
+    commitRows(rowsOf(done), outDir)
+
+  /** [[commitWithData]] for rows that reach the writer without an encoder,
+    * as [[ExtractPipeline.extractRows]] builds them. */
+  def commitRows(rows: Rows, outDir: String): CommitStats = {
+    val spark = rows.input.sparkSession
     val batch = newBatchId()
     val dataStaging = s"${dataPath(outDir)}/.staging_$batch"
     val manStaging = s"${manifestPath(outDir)}/.staging_$batch"
     val format = TableIO.format(spark)
-    val stats = writeObserved(done.toDF(), format, dataStaging)()
+    val (files, stats) = write(rows, format, dataStaging)
     val fs = fsOf(spark, outDir)
     if (stats.docs == 0) fs.delete(new Path(dataStaging), true)
     else {
-      writeManifest(fs, new Path(manStaging), Some(batch), format,
-        visibleFiles(fs, new Path(dataStaging)), stats)
+      writeManifest(fs, new Path(manStaging), Some(batch), format, files, stats)
       publish(spark, dataStaging, s"${dataPath(outDir)}/$batch")
       publish(spark, manStaging, s"${manifestPath(outDir)}/$batch")
     }
@@ -172,13 +248,12 @@ object Checkpoint {
     val batch = newBatchId()
     val manStaging = new Path(s"${manifestPath(outDir)}/.staging_$batch")
     val urls = new Path(manStaging, "urls")
-    val stats = writeObserved(done.toDF(), "parquet", urls.toString)(
-      _.select("url", "n_chars", "decode_failures"))
+    val (files, stats) = write(rowsOf(done), "parquet", urls.toString,
+      keep = Seq("url", "n_chars", "decode_failures"))
     val fs = fsOf(spark, outDir)
     if (stats.docs == 0) fs.delete(manStaging, true)
     else {
-      writeManifest(fs, manStaging, None, "parquet",
-        visibleFiles(fs, urls).map(f => s"${urls.getName}/$f"), stats)
+      writeManifest(fs, manStaging, None, "parquet", files.map(f => s"${urls.getName}/$f"), stats)
       publish(spark, manStaging.toString, s"${manifestPath(outDir)}/$batch")
     }
   }
@@ -231,8 +306,11 @@ object Checkpoint {
     }
   }
 
-  /** Distinct urls of the committed manifests: the `url` column alone,
-    * read with its schema given from the files they name. Every manifest's
+  /** Urls of the committed manifests: the `url` column alone, read with
+    * its schema given from the files they name. A url appears once per
+    * commit that holds it; [[resume]]'s left-anti join needs no distinct
+    * build side, so none is planned (it cost a hash aggregate and a
+    * 200-partition shuffle under the broadcast). Every manifest's
     * files fill their directory alone (a data batch or a manifest-only
     * commit's `urls/`), so the scan is given those
     * directories: Spark lists more than 32 input paths with a Spark job,
@@ -244,7 +322,7 @@ object Checkpoint {
       .map { case (format, ms) =>
         val dirs = ms.flatMap(_.files.map(f => new Path(f).getParent.toString)).distinct
         spark.read.schema(urlSchema).format(format).load(dirs: _*) }
-      .reduceOption(_ union _).map(_.distinct())
+      .reduceOption(_ union _)
   }
 
   /** Assemble the output table from the given committed batch dirs. Only
@@ -399,7 +477,7 @@ object Checkpoint {
     * collapses (the replaced manifests are gone, so time travel spans only
     * commits after the last compaction — a filesystem sink without a
     * metadata log cannot keep rewritten lineage alive), and the new
-    * manifest lists the compacted files, with totals observed during the
+    * manifest lists the compacted files, with totals counted during the
     * rewrite. Manifest-only commits are untouched.
     * Returns the new batch id; None when < 2 data batches exist. */
   def compact(spark: SparkSession, outDir: String,
@@ -425,9 +503,8 @@ object Checkpoint {
         if (nFiles < source.rdd.getNumPartitions) source.coalesce(nFiles)
         else if (nFiles > source.rdd.getNumPartitions) source.repartition(nFiles)
         else source
-      val stats = writeObserved(sized, format, dataStaging)()
-      writeManifest(fs, new Path(manStaging), Some(batch), format,
-        visibleFiles(fs, new Path(dataStaging)), stats)
+      val (files, stats) = write(rowsOf(sized), format, dataStaging)
+      writeManifest(fs, new Path(manStaging), Some(batch), format, files, stats)
       publish(spark, dataStaging, s"${dataPath(outDir)}/$batch") // step 2
       mans.filter(_.dataBatch.isDefined) // step 3
         .foreach(m => fs.delete(new Path(manifestPath(outDir), m.name), true))

@@ -7,7 +7,12 @@ import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The extraction pipeline: classify each page payload (PDF header sniff per
   * Tokeniser.cs:180-209 vs everything-else-is-HTML), route to the matching
@@ -28,8 +33,12 @@ import org.apache.spark.sql.functions._
   *  - per-partition buffer reuse mirrors the reference's explicit
   *    multi-file-loop allocation reuse (Tokeniser.cs:141-170): one
   *    Inflater/StringBuilder/work buffer per partition, not per row;
-  *  - only (url, html, lang) reach the transform ([[ExtractInput]]) so the
-  *    scan prunes the wide text column.
+  *  - only (url, html, lang) reach the transform so the scan prunes the
+  *    wide text column;
+  *  - `Main` runs the transform inside the commit's write tasks
+  *    ([[extractRows]]), on the scan's rows and with hand-built output
+  *    rows, so no encoder code is generated; [[run]] is the typed Dataset
+  *    form of the same transform.
   */
 object ExtractPipeline {
 
@@ -66,8 +75,47 @@ object ExtractPipeline {
     }
   }
 
-  /** Column-pruned, buffer-reusing extraction transform. It is a narrow
-    * map, so it runs unchanged over a `readStream` source as well. */
+  /** `ExtractedDoc`'s schema, as its product encoder derives it; the rows
+    * [[toRow]] builds have it. */
+  val DocSchema: StructType = {
+    def int(name: String) = StructField(name, IntegerType, nullable = false)
+    val span = StructType(Seq(int("start"), int("end"), int("src_offset"),
+      StructField("kind", StringType), int("src_line")))
+    StructType(Seq(StructField("url", StringType), StructField("kind", StringType),
+      StructField("text", StringType), StructField("title", StringType),
+      StructField("spans", ArrayType(span)), int("pages"), int("n_chars"), int("decode_failures"),
+      StructField("error", StringType), StructField("lang", StringType),
+      StructField("html_bytes", LongType, nullable = false)))
+  }
+
+  /** `d` as a row of [[DocSchema]], built by hand: strings as `UTF8String`,
+    * spans as an array of span rows. No serializer is generated for it. */
+  private[pipeline] def toRow(d: ExtractedDoc): InternalRow = {
+    def utf8(s: String) = UTF8String.fromString(s)
+    val spans = d.spans.iterator.map(s => new GenericInternalRow(
+      Array[Any](s.start, s.end, s.src_offset, utf8(s.kind), s.src_line)): Any).toArray
+    new GenericInternalRow(Array[Any](utf8(d.url), utf8(d.kind), utf8(d.text), utf8(d.title),
+      new GenericArrayData(spans), d.pages, d.n_chars, d.decode_failures, utf8(d.error),
+      utf8(d.lang), d.html_bytes))
+  }
+
+  /** The encoder-free extraction that `Main` commits: the plan of `pages`'
+    * (url, html, lang), and per write task [[extractOne]] over its rows,
+    * each turned into a [[DocSchema]] row by [[toRow]]. Neither an
+    * `ExtractInput` deserializer nor an `ExtractedDoc` serializer is
+    * generated, so a submit compiles only its scan. */
+  def extractRows(pages: Dataset[PageRow], delimiter: String = ""): Checkpoint.Rows =
+    Checkpoint.Rows(pages.select("url", "html", "lang").queryExecution, DocSchema, { it =>
+      val buffers = new WorkBuffers()
+      def str(s: UTF8String) = if (s == null) null else s.toString
+      it.map(r => toRow(extractOne(str(r.getUTF8String(0)), r.getBinary(1),
+        str(r.getUTF8String(2)), delimiter, buffers)))
+    })
+
+  /** Column-pruned, buffer-reusing extraction transform, as a typed
+    * Dataset: tests, gates and benchmarks read it; `Main` commits the same
+    * rows through [[extractRows]]. It is a narrow map, so it runs unchanged
+    * over a `readStream` source as well. */
   def run(pages: Dataset[PageRow], delimiter: String = "",
       captureLines: Boolean = false): Dataset[ExtractedDoc] = {
     val spark = pages.sparkSession

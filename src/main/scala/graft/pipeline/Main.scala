@@ -23,14 +23,15 @@ import org.apache.spark.sql.functions._
   * Reads the input_hint page table (parquet path or Iceberg-style table
   * path) with the `PageRow` schema given, skips urls already committed
   * under `<outDir>/_manifest` (resume), then extracts and writes the
-  * output table in one pass through [[Checkpoint.commitWithData]].
-  * Extraction runs straight off the scan splits, so a fresh submit is ONE
-  * Spark job, scan → extract → write in one stage with no shuffle; only an
+  * output table in one pass through [[Checkpoint.commitRows]]: each write
+  * task extracts its scan split ([[ExtractPipeline.extractRows]], no
+  * encoder) and writes the rows to one file. A fresh submit is ONE Spark
+  * job, scan → extract → write in one stage with no shuffle; only an
   * input with fewer parquet row groups than cores is hash-spread first
-  * ([[ExtractPipeline.spread]]). Nothing is cached, the metrics rollup is
-  * observed during that data write, and the driver then writes the
-  * checkpoint manifest: the list of the written data files and the
-  * observed totals. It prints the rollup as one JSON line. A fully-resumed
+  * ([[ExtractPipeline.spread]]). Nothing is cached, the tasks return their
+  * files and counts, and the driver publishes the files and writes the
+  * checkpoint manifest: the list of those files and the summed counts. It
+  * prints the rollup as one JSON line. A fully-resumed
   * run commits nothing. Designed so a killed run
   * re-submitted with the same arguments continues mid-table (north_rule:
   * resumable with per-partition lineage + metrics).
@@ -113,14 +114,14 @@ object Main {
       case None => allPages
     }
     val todo = if (resume) Checkpoint.resume(pages, outDir) else pages
-    // single atomic, one-pass commit: extraction runs inside the observed
-    // data write, whose counts are the run metrics; data staged + renamed,
+    // single atomic, one-pass commit: extraction runs inside the write
+    // tasks, whose returned counts are the run metrics; data staged + renamed,
     // then the manifest rename as the commit point — a crash at any moment
     // leaves either nothing or an unmanifested (invisible, re-extracted)
     // orphan, never duplicates. A fully-resumed (empty) run commits nothing,
     // so idle re-submissions don't accumulate empty batch directories
-    val m = Checkpoint.commitWithData(
-      ExtractPipeline.run(ExtractPipeline.spread(todo, allPages), delimiter), outDir)
+    val m = Checkpoint.commitRows(
+      ExtractPipeline.extractRows(ExtractPipeline.spread(todo, allPages), delimiter), outDir)
     deltaCached.foreach(_.unpersist())
     val wall = (System.nanoTime() - t0) / 1e9
     println(s"""{"docs":${m.docs},"chars":${m.chars},""" +

@@ -155,6 +155,20 @@ class MainSpec extends AnyFunSuite {
     }
   }
 
+  test("Main: a warm fresh submit compiles at most 2 generated classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    withTempDir("graft_spec_main_codegen") { dir =>
+      val texts = (0L until 40L).map(i => i -> s"codegen document $i with a few more words")
+      writePages(s"$dir/pages", texts)
+      submit(s"$dir/pages", s"$dir/out1")
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val printed = submit(s"$dir/pages", s"$dir/out2")
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      assert(printed.contains("\"docs\":40,"), printed)
+      assert(compiled <= 2, s"the second fresh submit compiled $compiled classes")
+    }
+  }
+
   test("Main: fewer row groups than cores are hash-spread before extraction") {
     withTempDir("graft_spec_main_spread") { dir =>
       val texts = (0L until 40L).map(i => i -> s"single file document $i with a few more words")

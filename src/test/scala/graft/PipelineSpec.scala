@@ -90,6 +90,50 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(d.kind == "pdf")
   }
 
+  test("extractRows: committed rows equal run's, and its schema is ExtractedDoc's") {
+    import spark.implicits._
+    // ids 0..17 hold all 9 pdf layouts (even ids) and html pages (odd ids)
+    val corpus = (0L until 18L).map(i => Corpus.pageRowFor(i, s"converter document $i words", "en")) ++ Seq(
+      PageRow("u/junk", new java.sql.Timestamp(0), "%PDF-1.4 not a pdf".getBytes("ISO-8859-1"), "", "en"),
+      PageRow("u/empty", new java.sql.Timestamp(0), Array.emptyByteArray, "", "en"),
+      Corpus.pageRowFor(40L, "null lang pdf", null), Corpus.pageRowFor(41L, "null lang html", null))
+    val pages = corpus.toDS().repartition(3)
+    assert(ExtractPipeline.DocSchema == org.apache.spark.sql.Encoders.product[graft.pipeline.ExtractedDoc].schema)
+    withTempDir("graft_spec_rows") { dir =>
+      val stats = Checkpoint.commitRows(ExtractPipeline.extractRows(pages), s"$dir/rows")
+      Checkpoint.commitWithData(ExtractPipeline.run(pages), s"$dir/typed")
+      val got = Checkpoint.readExtracted(spark, s"$dir/rows")
+      val want = ExtractPipeline.run(pages).toDF()
+      assert(got.count() == corpus.size && stats.docs == corpus.size)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+      val kinds = got.groupBy("kind").count().as[(String, Long)].collect().toMap
+      assert(kinds == Map("pdf" -> 11L, "html" -> 10L, "empty" -> 1L), kinds)
+      assert(got.where(col("lang").isNull).count() == 2 && got.where(col("error") =!= "").count() >= 2)
+      // both commits write the same parquet schema, required columns included
+      def fileSchema(out: String) = Checkpoint.manifests(spark, out).head.files.map(f =>
+        ParquetFileReader.readFooter(HadoopInputFile.fromPath(new Path(f), spark.sparkContext.hadoopConfiguration),
+          ParquetMetadataConverter.NO_FILTER).getFileMetaData.getSchema).distinct
+      assert(fileSchema(s"$dir/rows") == fileSchema(s"$dir/typed"))
+    }
+  }
+
+  test("resume: the committed urls are broadcast to the anti-join with no shuffle under it") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange}
+    val pages = (0L until 8L).map(i => Corpus.pageRowFor(i, s"resume plan doc $i words", "en")).toDS()
+    def docId = element_at(split(col("url"), "/"), -1).cast("long")
+    withTempDir("graft_spec_resume_plan") { outDir =>
+      (0 until 2).foreach(r => Checkpoint.commitWithData(ExtractPipeline.run(pages.where(docId % 4 === r)), outDir))
+      val todo = Checkpoint.resume(pages, outDir)
+      val left = todo.collect().map(_.url).toSet
+      val plan = todo.queryExecution.executedPlan
+      val exchanges = new AdaptiveSparkPlanHelper {}.collect(plan) { case e: Exchange => e }
+      assert(exchanges.nonEmpty && exchanges.forall(_.isInstanceOf[BroadcastExchangeExec]), plan.treeString)
+      assert(left == Set(2L, 3L, 6L, 7L).map(Corpus.UrlPrefix + _))
+    }
+  }
+
   test("checkpoint commit + resume skips completed urls") {
     import spark.implicits._
     val texts = (0L until 20L).map(i => i -> s"document number $i with some words")
