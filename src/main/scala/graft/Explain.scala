@@ -33,12 +33,11 @@ object Explain {
         |  is one scan → extract → write stage (a table with fewer row groups
         |  is hash-spread first; pinned by MainSpec)
         |""".stripMargin)
-    def dumpPlan(name: String, qe: QueryExecution): Unit = {
+    def dump(name: String, qe: QueryExecution): Unit = {
       sb.append(s"\n## $name\n\n```\n")
       sb.append(qe.explainString(FormattedMode))
       sb.append("```\n")
     }
-    def dump(name: String, df: org.apache.spark.sql.DataFrame): Unit = dumpPlan(name, df.queryExecution)
     // extraction over a real parquet page table (write one to tmp to show scan pruning)
     val tmp = Files.createTempDirectory("graft_explain").toString
     try {
@@ -49,12 +48,12 @@ object Explain {
       // table has a row group per core, so spread keeps it on the scan
       // splits; each task then extracts and writes its split
       val submitPages = TableIO.readPages(spark, s"$tmp/pages")
-      dumpPlan("submit_write input (Main: scan -> resume -> spread -> url/html/lang; extraction runs in the write task)",
+      dump("submit_write input (Main: scan -> resume -> spread -> url/html/lang; extraction runs in the write task)",
         ExtractPipeline.extractRows(ExtractPipeline.spread(
           Checkpoint.resume(submitPages, s"$tmp/submit_out"), submitPages), "").input)
       dump("extract_pipeline (scan -> mapPartitions -> agg)",
         ExtractPipeline.run(pagesTable, "").groupBy("kind")
-          .agg(count(lit(1)), sum("n_chars")))
+          .agg(count(lit(1)), sum("n_chars")).queryExecution)
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       dump("pdf_spans (span explode is a Generate fused after the extract map — no extra exchange)", {
         import spark.implicits._
@@ -62,14 +61,14 @@ object Explain {
           .select("doc_id", "text", "lang").as[(Long, String, String)]
           .map { case (id, t, lang) => Corpus.spanProbePageRowFor(id, t, lang) }
         ExtractPipeline.run(probe, delimiter = "").toDF()
-          .select(col("url"), posexplode(col("spans")))
+          .select(col("url"), posexplode(col("spans"))).queryExecution
       })
       dump("crawl_delta (ONE full-outer SortMergeJoin on url; presence flags are literals, no extra pass)", {
         val url = concat(lit(Corpus.UrlPrefix), col("doc_id"))
         val prev = docs.select(url.as("url"), md5(col("text").cast("binary")).as("fp"))
         val next = docs.where(col("doc_id") % 7 =!= 0)
           .select(url.as("url"), md5(col("text").cast("binary")).as("fp"))
-        graft.pipeline.Recrawl.delta(prev, next, "url", "fp")
+        graft.pipeline.Recrawl.delta(prev, next, "url", "fp").queryExecution
       })
     } finally {
       val tmpPath = new org.apache.hadoop.fs.Path(tmp)
