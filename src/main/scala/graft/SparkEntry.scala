@@ -163,15 +163,15 @@ object SparkEntry {
       import org.apache.spark.sql.SaveMode
       val pages = Corpus.pagesCached(s, dir)
       val outDir = s"${sys.props("java.io.tmpdir")}/graft_ckpt_${Integer.toHexString(dir.hashCode)}"
-      // reset any previous manifest so the query is idempotent
-      val p = new org.apache.hadoop.fs.Path(Checkpoint.manifestPath(outDir))
+      // reset any previous run so the query is idempotent
+      val p = new org.apache.hadoop.fs.Path(outDir)
       val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
       if (fs.exists(p)) fs.delete(p, true)
       // first run "completed" every doc_id % 7 == 0
       val firstBatch = ExtractPipeline.run(
         pages.where(element_at(split(col("url"), "/"), -1).cast("long") % 7 === 0),
         delimiter = "")
-      Checkpoint.commit(firstBatch, outDir)
+      Checkpoint.commitWithData(firstBatch, outDir)
       // resume: left-anti join against the manifest, extract the remainder
       val remaining = Checkpoint.resume(pages, outDir)
       ExtractPipeline.run(remaining, delimiter = "").toDF()
@@ -196,23 +196,6 @@ object SparkEntry {
       Checkpoint.compact(s, outDir)
       Checkpoint.readExtracted(s, outDir)
         .select(docIdFromUrl, col("n_chars").cast("long").as("n_chars"))
-        .orderBy("doc_id")
-    }),
-    "pdf_metadata" -> ((s, dir) => {
-      // document-level metadata surface (version sniff, trailer /Info merge,
-      // page-tree count, /Metadata XML, trailer /ID) — S2/S7/S15/S24
-      import s.implicits._
-      Corpus.pagesCached(s, dir)
-        .filter(p => Corpus.isPdfDoc(p.url.substring(Corpus.UrlPrefix.length).toLong))
-        .mapPartitions { it =>
-          val buffers = new graft.pdf.WorkBuffers()
-          it.map { p =>
-            val r = graft.pdf.PdfExtract.extract(p.html, buffers = buffers, captureFragments = false)
-            (p.url.substring(Corpus.UrlPrefix.length).toLong,
-              r.pdfVersion.getOrElse(""), r.documentInfo.getOrElse(""), r.pages.toLong,
-              r.metadata.getOrElse(""), r.documentId.getOrElse(""))
-          }
-        }.toDF("doc_id", "pdf_version", "info", "n_pages", "metadata", "document_id")
         .orderBy("doc_id")
     }),
     "pdf_owner_password_error" -> ((s, dir) => {
@@ -410,23 +393,6 @@ object SparkEntry {
     "compact_checkpoint" ->
       s"""SELECT doc_id, CAST(length(text) + $pdfExtraCharsSql AS BIGINT) AS n_chars
           FROM documents ORDER BY doc_id""",
-    // document_id: the reference renders each trailer /ID hex string as
-    // '"<hex>"; ' (StrTok.render keeps the angle brackets and wraps in
-    // double quotes); variant 3's /ID is the fixed encryption docId (the
-    // file key derives from it), every other variant's is the 32-digit
-    // zero-padded hex of the text length
-    "pdf_metadata" ->
-      """WITH d AS (SELECT doc_id, text, (doc_id // 2) % 9 AS v,
-              CASE WHEN (doc_id // 2) % 9 = 3 THEN '0123456789abcdef0123456789abcdef'
-                   ELSE printf('%032x', length(text)) END AS h
-            FROM documents WHERE doc_id % 2 = 0)
-         SELECT doc_id,
-         CASE WHEN v = 4 THEN '1.5' ELSE '1.4' END AS pdf_version,
-         'Title: doc-' || length(text) || '; Producer: graft; ' AS info,
-         CAST(((length(text)+63)//64 + 7)//8 AS BIGINT) AS n_pages,
-         '<graft:meta len="' || length(text) || '"/>' AS metadata,
-         '"<' || h || '>"; "<' || h || '>"; ' AS document_id
-         FROM d ORDER BY doc_id""",
     "sql_pdf_extract" ->
       s"""WITH d AS (SELECT doc_id, text, (doc_id // 2) % 9 AS v,
                             regexp_extract_all(text, '.{1,64}') AS ch

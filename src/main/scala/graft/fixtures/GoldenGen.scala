@@ -2,7 +2,6 @@ package graft.fixtures
 
 import graft.pdf.{ObjectId, PdfCrypto}
 import java.io.ByteArrayOutputStream
-import java.security.MessageDigest
 import java.nio.charset.StandardCharsets.ISO_8859_1
 import scala.collection.mutable
 
@@ -536,38 +535,6 @@ object GoldenGen {
     b.finish(s"/Root $catalog 0 R/Encrypt $encId 0 R/ID[<$docIdHex><$docIdHex>]")
   }
 
-  /** REAL AES-encrypted (V4/R4, AESV2) fixture: proper Algorithm-3 /O,
-    * Algorithm-5 /U, AES-128-CBC content streams with deterministic IVs.
-    * The reference throws on V4, and so does the reader. */
-  def encryptedPdfAes(message: String = "aes secret text"): Array[Byte] = {
-    val userPw = ""
-    val ownerPw = ""
-    val docIdHex = "fedcba9876543210fedcba9876543210"
-    val docId = hexToBytes(docIdHex)
-    val permission = -44
-    val lengthBytes = 16 // 128-bit key
-    val o = computeOwnerO(ownerPw, userPw, lengthBytes)
-    val key = PdfCrypto.computeEncryptionKey(PdfCrypto.pad(userPw), o, permission, docId, lengthBytes)
-    val u = PdfCrypto.computeEncryptU(PdfCrypto.pad(userPw), docId, key)
-
-    val b = new PdfBuilder()
-    val contentId = b.registerObject()
-    val plain = s"BT ($message) Tj ET".getBytes(ISO_8859_1)
-    val iv = Array.tabulate[Byte](16)(i => (i * 31 + 5).toByte) // deterministic
-    val payload = aesEncrypt(
-      objectKeyAes(key, graft.pdf.ObjectId(contentId, 0)), iv, plain)
-    b.raw(s"$contentId 0 obj\n<</Length ${payload.length}>>stream\n")
-    b.raw(payload)
-    b.raw("\nendstream\nendobj\n")
-    val catalog = catalogFor(b, Seq(contentId))
-    val encId = b.addObject(
-      s"<</Filter/Standard/V 4/R 4/P $permission/Length 128" +
-        "/CF<</StdCF<</CFM/AESV2/AuthEvent/DocOpen/Length 16>>>>" +
-        "/StmF/StdCF/StrF/StdCF" +
-        s"/O <${bytesToHex(o)}>/U <${bytesToHex(u)}>>>")
-    b.finish(s"/Root $catalog 0 R/Encrypt $encId 0 R/ID[<$docIdHex><$docIdHex>]")
-  }
-
   /** AES-encrypted (V4/R4, /CFM/AESV2) fixture. The reference supports only
     * the RC4 standard handler — V∈{1,2}, R∈{2,3} — and throws ArgumentException
     * for anything else (reference: Tokeniser.cs:635-645); our engine
@@ -586,262 +553,6 @@ object GoldenGen {
         "/StmF/StdCF/StrF/StdCF" +
         s"/O <${"ab" * 32}>/U <${"cd" * 32}>>>")
     b.finish(s"/Root $catalog 0 R/Encrypt $encId 0 R/ID[<$docIdHex><$docIdHex>]")
-  }
-
-  // ------------------------------------ encoders the reader refuses
-  // The reader decodes only None/FlateDecode streams and decrypts only the
-  // RC4 standard handler (V 1|2, R 2|3), like the reference. These writers
-  // build the fixtures that pin its error rows for everything else: the
-  // LZW / ASCIIHex / ASCII85 / RunLength filters (ISO 32000-1 §7.4.2-7.4.5)
-  // and the AESV2 (V4) and AES-256 (V5, ISO 32000-2 §7.6.4) handlers.
-
-  /** LZW encoder: MSB-first variable-width codes (9→12 bits), clear first
-    * and EOD last, early change 1 (ISO 32000-1 §7.4.4). */
-  def lzwEncode(data: Array[Byte]): Array[Byte] = {
-    val out = new ByteArrayOutputStream(data.length)
-    var acc = 0L
-    var accBits = 0
-    var width = 9
-    val dict = new java.util.HashMap[java.util.List[java.lang.Byte], Integer]()
-    var nextCode = 258
-    def emit(code: Int): Unit = {
-      acc = (acc << width) | code; accBits += width
-      while (accBits >= 8) { out.write(((acc >>> (accBits - 8)) & 0xff).toInt); accBits -= 8 }
-    }
-    emit(256) // clear
-    var cur = new java.util.ArrayList[java.lang.Byte]()
-    def codeOf(s: java.util.List[java.lang.Byte]): Int =
-      if (s.size == 1) s.get(0) & 0xff else dict.get(s)
-    var i = 0
-    while (i < data.length) {
-      val b: java.lang.Byte = data(i)
-      val cand = new java.util.ArrayList[java.lang.Byte](cur); cand.add(b)
-      val known = cand.size == 1 || dict.containsKey(cand)
-      if (known) cur = cand
-      else {
-        emit(codeOf(cur))
-        if (nextCode < 4096) {
-          dict.put(cand, nextCode); nextCode += 1
-          // mirror of the decoder's early-change point: the code emitted
-          // after entry (2^w - earlyChange) is added uses w+1 bits
-          if (nextCode - 1 >= (1 << width) - 1 && width < 12) width += 1
-        }
-        cur = new java.util.ArrayList[java.lang.Byte](); cur.add(b)
-      }
-      i += 1
-    }
-    if (!cur.isEmpty) emit(codeOf(cur))
-    emit(257) // EOD
-    if (accBits > 0) out.write(((acc << (8 - accBits)) & 0xff).toInt)
-    out.toByteArray
-  }
-
-  /** ASCIIHex encoder: lowercase digit pairs, `>` EOD. */
-  def asciiHexEncode(data: Array[Byte]): Array[Byte] =
-    (data.map(b => f"${b & 0xff}%02x").mkString + ">").getBytes("ISO-8859-1")
-
-  /** ASCII85 encoder: `z` for all-zero groups, partial tail, `~>` EOD. */
-  def ascii85Encode(data: Array[Byte]): Array[Byte] = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < data.length) {
-      val n = math.min(4, data.length - i)
-      var tuple = 0L
-      var k = 0
-      while (k < 4) { tuple = (tuple << 8) | (if (k < n) data(i + k) & 0xff else 0); k += 1 }
-      if (n == 4 && tuple == 0) sb.append('z')
-      else {
-        val chars = new Array[Char](5)
-        var t = tuple
-        var j = 4
-        while (j >= 0) { chars(j) = ('!' + (t % 85).toInt).toChar; t /= 85; j -= 1 }
-        sb.appendAll(chars, 0, n + 1)
-      }
-      i += n
-    }
-    sb.append("~>")
-    sb.toString.getBytes("ISO-8859-1")
-  }
-
-  /** Greedy RunLength encoder: runs of ≥2 equal bytes become a repeat
-    * record (up to 128 per record), everything else literal records (up to
-    * 128 bytes each), closed by the 128 EOD byte. */
-  def runLengthEncode(data: Array[Byte]): Array[Byte] = {
-    val out = new ByteArrayOutputStream(data.length + data.length / 128 + 2)
-    var i = 0
-    while (i < data.length) {
-      var run = 1
-      while (i + run < data.length && run < 128 && data(i + run) == data(i)) run += 1
-      if (run >= 2) {
-        out.write(257 - run)
-        out.write(data(i) & 0xff)
-        i += run
-      } else {
-        // literal stretch: stop (exclusive) where a ≥2-byte run begins
-        var j = i + 1
-        while (j < data.length && j - i < 128 &&
-            (j + 1 >= data.length || data(j + 1) != data(j))) j += 1
-        out.write(j - i - 1)
-        out.write(data, i, j - i)
-        i = j
-      }
-    }
-    out.write(128) // EOD
-    out.toByteArray
-  }
-
-  /** The AESV2 per-object-key salt "sAlT" (ISO 32000-1 Algorithm 1 step b). */
-  private val AesSalt = Array[Byte](0x73, 0x41, 0x6c, 0x54)
-
-  /** Per-object AES key = MD5(docKey ∥ objNum₃ ∥ gen₂ ∥ sAlT), truncated to
-    * min(n+5, 16). */
-  def objectKeyAes(globalKey: Array[Byte], objectId: ObjectId): Array[Byte] = {
-    val data = new Array[Byte](globalKey.length + 5 + 4)
-    System.arraycopy(globalKey, 0, data, 0, globalKey.length)
-    var off = globalKey.length
-    val on = objectId.objectNumber
-    data(off) = on.toByte; data(off + 1) = (on >> 8).toByte; data(off + 2) = (on >> 16).toByte
-    off += 3
-    val gen = objectId.generation
-    data(off) = gen.toByte; data(off + 1) = (gen >> 8).toByte
-    off += 2
-    System.arraycopy(AesSalt, 0, data, off, 4)
-    val hash = PdfCrypto.md5(data)
-    val keep = math.min(globalKey.length + 5, 16)
-    java.util.Arrays.copyOf(hash, keep)
-  }
-
-  /** AES-CBC encrypt with PKCS#5 padding: returns IV ∥ ciphertext, the
-    * AESV2 / AESV3 stream and string layout. */
-  def aesEncrypt(key: Array[Byte], iv: Array[Byte], plain: Array[Byte]): Array[Byte] = {
-    val cipher = javax.crypto.Cipher.getInstance("AES/CBC/PKCS5Padding")
-    cipher.init(javax.crypto.Cipher.ENCRYPT_MODE,
-      new javax.crypto.spec.SecretKeySpec(key, "AES"),
-      new javax.crypto.spec.IvParameterSpec(iv))
-    iv ++ cipher.doFinal(plain)
-  }
-
-  /** Algorithm 3 (R ≥ 3): the /O entry — RC4 chain over the padded user
-    * password with the 50×MD5 owner key. */
-  def computeOwnerO(ownerPassword: String, userPassword: String, lengthBytes: Int): Array[Byte] = {
-    var h = PdfCrypto.md5(PdfCrypto.pad(ownerPassword))
-    var i = 0
-    while (i < 50) { h = PdfCrypto.md5(h); i += 1 }
-    val rc4Key = java.util.Arrays.copyOf(h, lengthBytes)
-    var o = PdfCrypto.rc4(rc4Key, PdfCrypto.pad(userPassword))
-    var it = 1
-    while (it < 20) {
-      val k = rc4Key.map(b => (b ^ it).toByte)
-      o = PdfCrypto.rc4(k, o)
-      it += 1
-    }
-    o
-  }
-
-  private def sha(bits: Int, parts: Array[Byte]*): Array[Byte] = {
-    val md = MessageDigest.getInstance(s"SHA-$bits")
-    parts.foreach(md.update)
-    md.digest()
-  }
-
-  /** ISO 32000-2 Algorithm 2.A step a: UTF-8 password bytes truncated to
-    * 127. (Full SASLprep normalization is out of scope — ASCII passwords,
-    * the only kind the reference's surface ever accepted, pass through
-    * unchanged.) */
-  private[graft] def passwordBytesV5(password: String): Array[Byte] = {
-    val utf8 = password.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    if (utf8.length <= 127) utf8 else java.util.Arrays.copyOf(utf8, 127)
-  }
-
-  /** AES-CBC encrypt with NO padding — the V5 key-wrapping cipher (/UE,
-    * /OE) and Algorithm 2.B's inner cipher. Input must be block-aligned. */
-  private def aesCbcNoPad(key: Array[Byte], iv: Array[Byte], data: Array[Byte]): Array[Byte] = {
-    val cipher = javax.crypto.Cipher.getInstance("AES/CBC/NoPadding")
-    cipher.init(javax.crypto.Cipher.ENCRYPT_MODE,
-      new javax.crypto.spec.SecretKeySpec(key, "AES"),
-      new javax.crypto.spec.IvParameterSpec(iv))
-    cipher.doFinal(data)
-  }
-
-  /** AES-ECB encrypt, no padding — the 16-byte /Perms capsule (Algorithm 10). */
-  private def aesEcbNoPad(key: Array[Byte], data: Array[Byte]): Array[Byte] = {
-    val cipher = javax.crypto.Cipher.getInstance("AES/ECB/NoPadding")
-    cipher.init(javax.crypto.Cipher.ENCRYPT_MODE, new javax.crypto.spec.SecretKeySpec(key, "AES"))
-    cipher.doFinal(data)
-  }
-
-  /** ISO 32000-2 Algorithm 2.B: the R6 hardened hash (R5 stops after the
-    * initial SHA-256). `udata` is empty for /U-side hashes and the 48-byte
-    * /U value for /O-side hashes. Loop shape: at least 64 rounds, then
-    * continue while the last byte of the previous round's AES output
-    * exceeds (completedRounds − 32). */
-  private[graft] def hash2B(password: Array[Byte], salt: Array[Byte], udata: Array[Byte],
-      revision: Int): Array[Byte] = {
-    var k = sha(256, password, salt, udata)
-    if (revision == 5) return k
-    var e: Array[Byte] = null
-    var round = 0
-    while (round < 64 || (e(e.length - 1) & 0xff) > round - 32) {
-      // K1 = (password ∥ K ∥ udata) repeated 64 times
-      val unit = password.length + k.length + udata.length
-      val k1 = new Array[Byte](unit * 64)
-      var off = 0
-      System.arraycopy(password, 0, k1, off, password.length); off += password.length
-      System.arraycopy(k, 0, k1, off, k.length); off += k.length
-      System.arraycopy(udata, 0, k1, off, udata.length)
-      var rep = 1
-      while (rep < 64) { System.arraycopy(k1, 0, k1, rep * unit, unit); rep += 1 }
-      e = aesCbcNoPad(java.util.Arrays.copyOf(k, 16),
-        java.util.Arrays.copyOfRange(k, 16, 32), k1)
-      // "first 16 bytes of E as a big-endian unsigned integer mod 3":
-      // 256 ≡ 1 (mod 3), so the byte SUM has the same residue
-      var sum = 0
-      var i = 0
-      while (i < 16) { sum += e(i) & 0xff; i += 1 }
-      k = sha((sum % 3) match { case 0 => 256; case 1 => 384; case _ => 512 }, e)
-      round += 1
-    }
-    java.util.Arrays.copyOf(k, 32)
-  }
-
-  /** The full V5 security bundle. */
-  final case class V5Security(o: Array[Byte], u: Array[Byte], oe: Array[Byte],
-      ue: Array[Byte], perms: Array[Byte])
-
-  /** Algorithms 8/9/10: derive /O, /U, /OE, /UE and
-    * /Perms from the two passwords, a caller-chosen 32-byte file key and
-    * 32 bytes of caller-chosen salt material (vsU ∥ ksU ∥ vsO ∥ ksO, 8 bytes
-    * each) — real writers draw key and salts from a CSPRNG; fixtures pin
-    * them for byte-stable corpora. */
-  def makeV5Security(userPassword: String, ownerPassword: String,
-      fileKey: Array[Byte], salts: Array[Byte], p: Int,
-      encryptMetadata: Boolean, revision: Int): V5Security = {
-    require(fileKey.length == 32, "V5 file key must be 32 bytes")
-    require(salts.length == 32, "need 32 bytes of salt material")
-    val pu = passwordBytesV5(userPassword)
-    val po = passwordBytesV5(ownerPassword)
-    val noU = Array.emptyByteArray
-    val zeroIv = new Array[Byte](16)
-    val vsU = java.util.Arrays.copyOfRange(salts, 0, 8)
-    val ksU = java.util.Arrays.copyOfRange(salts, 8, 16)
-    val vsO = java.util.Arrays.copyOfRange(salts, 16, 24)
-    val ksO = java.util.Arrays.copyOfRange(salts, 24, 32)
-    val u = hash2B(pu, vsU, noU, revision) ++ vsU ++ ksU
-    val ue = aesCbcNoPad(hash2B(pu, ksU, noU, revision), zeroIv, fileKey)
-    val o = hash2B(po, vsO, u, revision) ++ vsO ++ ksO
-    val oe = aesCbcNoPad(hash2B(po, ksO, u, revision), zeroIv, fileKey)
-    val permsPlain = new Array[Byte](16)
-    permsPlain(0) = p.toByte
-    permsPlain(1) = (p >> 8).toByte
-    permsPlain(2) = (p >> 16).toByte
-    permsPlain(3) = (p >> 24).toByte
-    java.util.Arrays.fill(permsPlain, 4, 8, 0xff.toByte)
-    permsPlain(8) = (if (encryptMetadata) 'T' else 'F').toByte
-    permsPlain(9) = 'a'; permsPlain(10) = 'd'; permsPlain(11) = 'b'
-    // bytes 12-15 are "random data" per the spec; fixed for determinism
-    permsPlain(12) = 'g'; permsPlain(13) = 'r'; permsPlain(14) = 'f'; permsPlain(15) = 't'
-    val perms = aesEcbNoPad(fileKey, permsPlain)
-    V5Security(o, u, oe, ue, perms)
   }
 
   private def hexToBytes(s: String): Array[Byte] =

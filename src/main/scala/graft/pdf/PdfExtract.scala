@@ -22,11 +22,7 @@ final case class ExtractResult(
     spans: Seq[TextSpan],
     pages: Int,
     decodeFailures: Int,
-    error: Option[String],
-    pdfVersion: Option[String],
-    documentInfo: Option[String],
-    documentId: Option[String],
-    metadata: Option[String])
+    error: Option[String])
 
 /** E1 façade: the reference's `new PdfParser(bytes, …)` entry point as a pure
   * function (reference: PdfParser/PdfParser.cs:92-106). Per-document parse
@@ -118,11 +114,7 @@ object PdfExtract {
         spans = spans.toSeq,
         pages = tk.pageList.size,
         decodeFailures = decodeFailures,
-        error = if (errors.isEmpty) None else Some(errors.toString),
-        pdfVersion = Some(tk.versionString),
-        documentInfo = Option(tk.documentInfo),
-        documentId = Option(tk.documentId),
-        metadata = Option(tk.metadata))
+        error = if (errors.isEmpty) None else Some(errors.toString))
     } catch {
       case e: Throwable =>
         val msg = e match {
@@ -137,11 +129,7 @@ object PdfExtract {
           spans = Nil,
           pages = 0,
           decodeFailures = 1,
-          error = Some(msg),
-          pdfVersion = None,
-          documentInfo = None,
-          documentId = None,
-          metadata = None)
+          error = Some(msg))
     }
   }
 }

@@ -133,17 +133,11 @@ final class PdfTokeniser(
 
   private val objectStreams = mutable.HashMap.empty[Int, (Array[(Int, Int)], Array[Byte])]
 
-  var pdfVersion: Char = '?'
-  var documentId: String = null
-  var documentInfo: String = null
-  var metadata: String = null
   var isStringNeedsDecryption: Boolean = false
   private var globalEncryptionKey: Array[Byte] = null
 
   private[pdf] val pages = mutable.ArrayBuffer.empty[PdfPage]
   def pageList: Seq[PdfPage] = pages.toSeq
-
-  def versionString: String = s"1.$pdfVersion"
 
   // ---------------------------------------------------------------- errors
 
@@ -200,19 +194,20 @@ final class PdfTokeniser(
   // ------------------------------------------------------------ top levels
 
   /** reference: Tokeniser.cs:180-209 — `%PDF-1.x` at offset 0, else within
-    * the first 2000 bytes (FPDF tolerance). */
+    * the first 2000 bytes (FPDF tolerance). The reference reads the version
+    * byte `x`, so a file that ends right after `%PDF-1.` is an
+    * index-out-of-range error row. */
   def verifyFileHeader(): Unit = {
     def matchesAt(i: Int): Boolean =
       bytes(i) == '%' && bytes(i + 1) == 'P' && bytes(i + 2) == 'D' && bytes(i + 3) == 'F' &&
         bytes(i + 4) == '-' && bytes(i + 5) == '1' && bytes(i + 6) == '.'
-    if (!matchesAt(0)) {
-      var i = 0
-      while (i < 2000 && !matchesAt(i)) i += 1
-      if (i < 2000) { pdfVersion = bytes(i + 7).toChar; return }
+    var i = 0
+    while (i < 2000 && !matchesAt(i)) i += 1
+    if (i == 2000) {
       val found = new String(bytes.take(7).map(b => (b & 0xff).toChar))
       throw fileException(s"PDF File Header Format error: A pdf file should start with the bytes '%PDF-1.', but they are '$found'.")
     }
-    pdfVersion = bytes(7).toChar
+    if (i + 7 >= bytes.length) throw new ArrayIndexOutOfBoundsException(i + 7)
   }
 
   def findPages(): Unit = {
@@ -397,7 +392,7 @@ final class PdfTokeniser(
   }
 
   /** Union the trailer dicts (newest first); conflicting non-ID values are an
-    * error; then DocumentID / encryption / DocumentInfo / Root→Pages→Metadata
+    * error; then encryption / DocumentInfo / Root→Pages→Metadata
     * (reference: Tokeniser.cs:508-617). */
   private def readTrailers(): Unit = {
     // /XRefStm (a hybrid file's supplementary xref stream) is bookkeeping
@@ -421,16 +416,6 @@ final class PdfTokeniser(
       }
     }
 
-    trailerEntries.get("ID").foreach {
-      case idArray: ArrTok =>
-        documentId = ""
-        idArray.iterator.foreach {
-          case s: StrTok => documentId += s.render + "; "
-          case _         =>
-        }
-      case _ =>
-    }
-
     trailerEntries.get("Encrypt").foreach { enc =>
       setupEncryption(enc.asInstanceOf[DictTok])
       isStringNeedsDecryption = true
@@ -452,27 +437,18 @@ final class PdfTokeniser(
       }
     }
 
+    // the reference walks /Info's values. Their strings are not kept, but
+    // resolving them loads objects into the xref table in the reference's
+    // order, so the walk stays; its failures are caught, as there
     trailerEntries.get("Info").foreach { infoToken =>
-      documentInfo = ""
-      try {
-        def appendInfo(t: PdfTok): Unit = t match {
-          case d: DictTok =>
-            d.keys.foreach { k =>
-              d(k) match {
-                case s: StrTok => documentInfo += s"$k: ${s.value}; "
-                case _         =>
-              }
-            }
-          case _ =>
-        }
-        infoToken match {
-          case a: ArrTok => a.iterator.foreach(appendInfo)
-          case t         => appendInfo(t)
-        }
-      } catch {
-        case e: Exception =>
-          documentInfo += s"\nException while reading info token ${infoToken.render}:\n$e\n"
+      def resolveValues(t: PdfTok): Unit = t match {
+        case d: DictTok => d.keys.foreach(d(_))
+        case _          =>
       }
+      try infoToken match {
+        case a: ArrTok => a.iterator.foreach(resolveValues)
+        case t         => resolveValues(t)
+      } catch { case _: Exception => () }
     }
 
     trailerEntries.get("Root").foreach { rootToken =>
@@ -529,22 +505,14 @@ final class PdfTokeniser(
     }
   }
 
-  /** reference: Tokeniser.cs:1179-1188 */
+  /** reference: Tokeniser.cs:1179-1188. The XML payload itself is not
+    * kept; loading it decides whether the document is an error row. */
   private def readMetadata(metadataToken: PdfTok): Unit = {
     val md = metadataToken.asInstanceOf[DictTok]
     md.get("Subtype").foreach {
-      case n: NameTok if n.value == "XML" =>
-        md.loadStream()
-        metadata = showStreamContent()
+      case n: NameTok if n.value == "XML" => md.loadStream()
       case _ =>
     }
-  }
-
-  def showStreamContent(): String = {
-    sb.setLength(0)
-    var i = 0
-    while (i < streamLen) { displayChar(sb, streamBuf(streamOff + i)); i += 1 }
-    sb.toString
   }
 
   /** Raw copy of the current (decoded) stream payload; the shared decode

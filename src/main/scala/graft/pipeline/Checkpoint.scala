@@ -1,12 +1,12 @@
 package graft.pipeline
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
 import org.apache.spark.sql.execution.datasources.{DataSource, FileFormat}
 import org.apache.spark.sql.execution.datasources.v2.FileDataSourceV2
@@ -40,29 +40,27 @@ import scala.jdk.CollectionConverters._
   *    the single atomic commit point;
   *  - readers go through [[manifests]], which lists committed manifests
   *    and reads their files on the driver: [[readExtracted]] reads ONLY the
-  *    data batches they reference, [[metrics]] sums their totals, and
-  *    [[resume]] reads just the `url` column of the files they name. A
-  *    crash between the two renames leaves an orphan data directory that
-  *    no reader sees and whose urls the next run re-extracts into a fresh
-  *    batch — exactly-once output, not at-least-once;
+  *    data batches they reference and [[resume]] reads just the `url`
+  *    column of the files they name. A crash between the two renames
+  *    leaves an orphan data directory that no reader sees and whose urls
+  *    the next run re-extracts into a fresh batch — exactly-once output,
+  *    not at-least-once;
   *  - resume is a left-anti join of the input against those urls, so a
   *    re-submitted 10^12-row job re-reads only undone work;
-  *  - data files are zstd parquet, whichever commit path writes them
-  *    ([[commitWithData]], [[commit]]'s url files, [[compact]]). Batches
-  *    committed as snappy parquet before zstd stay readable and resumable,
-  *    since every reader takes the codec from the file footer, and the next
+  *  - data files are zstd parquet, whether a commit ([[commitWithData]],
+  *    [[commitRows]]) or [[compact]] writes them. Batches committed as
+  *    snappy parquet before zstd stay readable and resumable, since every
+  *    reader takes the codec from the file footer, and the next
   *    [[compact]] rewrites them as zstd.
   *
   * The north_rule's "checkpoints per-partition with lineage + metrics" maps
   * to the file list (which data file holds each url is the `_metadata`
   * of the files it names) and the recorded totals, which roll up run
-  * metrics without re-reading the output table. A manifest-only [[commit]]
-  * has no data batch: it writes its urls as parquet files under its
-  * manifest directory, and its file list names them. Resolving the
-  * manifests runs no Spark job. A `batch_` directory without a file list
-  * (the parquet-row manifests written before it) is not a committed
-  * manifest: it marks nothing done and its data batch stays invisible, so
-  * the next run re-extracts those urls once.
+  * metrics without re-reading the output table. Resolving the manifests
+  * runs no Spark job. A `batch_` directory without a file list (the
+  * parquet-row manifests written before it) is not a committed manifest:
+  * it marks nothing done and its data batch stays invisible, so the next
+  * run re-extracts those urls once.
   */
 object Checkpoint {
 
@@ -87,10 +85,9 @@ object Checkpoint {
   }
 
   /** One committed manifest. `dataBatch` is the `extracted/` directory it
-    * publishes (None for a manifest-only commit); `files` are the full
-    * paths of the `format` files that hold its urls; `stats` are the
-    * recorded totals. */
-  final case class Manifest(name: String, dataBatch: Option[String], format: String,
+    * publishes; `files` are the full paths of the `format` files in it;
+    * `stats` are the recorded totals. */
+  final case class Manifest(name: String, dataBatch: String, format: String,
       files: Seq[String], stats: CommitStats)
 
   /** What a commit writes: each write task reads its partition of the
@@ -104,29 +101,26 @@ object Checkpoint {
     * under, the name the driver publishes it as, and its counts. */
   private final case class TaskFile(hidden: String, visible: String, stats: CommitStats)
 
-  /** Writes `rows` (`ExtractedDoc` columns) to `dir` in `format`, keeping
-    * only the `keep` columns when given, in one job under one SQL
-    * execution. Each non-empty partition's task writes one file through
-    * the format's own `OutputWriter` and counts its docs, chars, decode
-    * failures and PDF docs. A task writes under a hidden name unique to its
-    * attempt; the driver renames the files of the attempts that won, so a
-    * failed or zombie attempt's file is never visible. Returns the visible
-    * names, sorted, and the summed counts. The files are zstd at its
+  /** Writes `rows` (`ExtractedDoc` columns) to `dir` in `format`, in one
+    * job under one SQL execution. Each non-empty partition's task writes
+    * one file through the format's own `OutputWriter` and counts its docs,
+    * chars, decode failures and PDF docs. A task writes under a hidden
+    * name unique to its attempt; the driver renames the files of the
+    * attempts that won, so a failed or zombie attempt's file is never
+    * visible. Returns the visible names, sorted, and the summed counts. The files are zstd at its
     * default level 3: rewriting a 10k-page output in one task, levels 6,
     * 9 and 19 stored 8%, 10% and 25% fewer bytes but took 1.3, 1.5 and
     * 22 times as long to write. */
-  private def write(rows: Rows, format: String, dir: String,
-      keep: Seq[String] = Nil): (Seq[String], CommitStats) = {
+  private def write(rows: Rows, format: String, dir: String): (Seq[String], CommitStats) = {
     val session = rows.input.sparkSession
     val fileFormat = DataSource.lookupDataSource(format, session.sessionState.conf)
       .getConstructor().newInstance() match {
         case v2: FileDataSourceV2 => v2.fallbackFileFormat.getConstructor().newInstance()
         case v1: FileFormat => v1
       }
-    val schema = if (keep.isEmpty) rows.schema else StructType(keep.map(rows.schema(_)))
-    val ordinals = keep.map(rows.schema.fieldIndex)
+    val schema = rows.schema
     val Seq(kind, nChars, decodeFailures) =
-      Seq("kind", "n_chars", "decode_failures").map(rows.schema.fieldIndex)
+      Seq("kind", "n_chars", "decode_failures").map(schema.fieldIndex)
     val job = Job.getInstance(session.sessionState.newHadoopConf())
     val factory = fileFormat.prepareWrite(session, job, Map("compression" -> "zstd"), schema)
     val conf = session.sparkContext.broadcast(new SerializableConfiguration(job.getConfiguration))
@@ -143,7 +137,6 @@ object Checkpoint {
           val hidden = s".${ctx.taskAttemptId}-$visible"
           val path = new Path(dir, hidden)
           val out = factory.newInstance(path.toString, schema, attempt)
-          val view = if (keep.isEmpty) null else ProjectingInternalRow(schema, ordinals)
           val pdf = UTF8String.fromString("pdf")
           var docs, chars, failures, pdfs = 0L
           try {
@@ -153,7 +146,7 @@ object Checkpoint {
               if (!r.isNullAt(nChars)) chars += r.getInt(nChars)
               if (!r.isNullAt(decodeFailures)) failures += r.getInt(decodeFailures)
               if (pdf == r.getUTF8String(kind)) pdfs += 1
-              if (view == null) out.write(r) else { view.project(r); out.write(view) }
+              out.write(r)
             }
             out.close()
           } catch {
@@ -173,12 +166,11 @@ object Checkpoint {
   }
 
   /** Writes the file list into the staging manifest directory `dir`.
-    * `files` are paths relative to `extracted/<batch>/`, or to `dir` itself
-    * when `batch` is None. */
-  private def writeManifest(fs: FileSystem, dir: Path, batch: Option[String], format: String,
+    * `files` are paths relative to `extracted/<batch>/`. */
+  private def writeManifest(fs: FileSystem, dir: Path, batch: String, format: String,
       files: Seq[String], stats: CommitStats): Unit = {
     val m = json.createObjectNode()
-    batch.foreach(m.put("batch", _))
+    m.put("batch", batch)
     m.put("format", format)
     val list = m.putArray("files")
     files.foreach(list.add)
@@ -193,16 +185,6 @@ object Checkpoint {
     val fs = fsOf(spark, target)
     val dst = new Path(target)
     fs.mkdirs(dst.getParent)
-    // stamp the commit time BEFORE the rename (rename preserves mtimes, so
-    // without this Snapshot.commitMs would order concurrent committers by
-    // when they STAGED, not when they committed). Stamping pre-rename means
-    // a listed manifest always carries its stamped time — there is no
-    // window where a published manifest is visible with a stale mtime; the
-    // stamp trails the true commit point by at most the rename duration.
-    // Best-effort: a filesystem without setTimes keeps the staging-write
-    // mtime (documented on snapshots()).
-    try fs.setTimes(new Path(staging), System.currentTimeMillis(), -1)
-    catch { case _: Exception => () }
     if (!fs.rename(new Path(staging), dst))
       throw new IllegalStateException(s"commit rename failed: $staging -> $target")
   }
@@ -231,60 +213,29 @@ object Checkpoint {
     val fs = fsOf(spark, outDir)
     if (stats.docs == 0) fs.delete(new Path(dataStaging), true)
     else {
-      writeManifest(fs, new Path(manStaging), Some(batch), format, files, stats)
+      writeManifest(fs, new Path(manStaging), batch, format, files, stats)
       publish(spark, dataStaging, s"${dataPath(outDir)}/$batch")
       publish(spark, manStaging, s"${manifestPath(outDir)}/$batch")
     }
     stats
   }
 
-  /** Manifest-only commit (marks urls done without writing output data —
-    * e.g. work completed by an earlier system): the urls, with n_chars and
-    * decode_failures, go to parquet files in the `urls/` directory of the
-    * manifest's own staging directory, which its file list names. Same
-    * atomic publish; an empty batch publishes nothing. */
-  def commit(done: Dataset[ExtractedDoc], outDir: String): Unit = {
-    val spark = done.sparkSession
-    val batch = newBatchId()
-    val manStaging = new Path(s"${manifestPath(outDir)}/.staging_$batch")
-    val urls = new Path(manStaging, "urls")
-    val (files, stats) = write(rowsOf(done), "parquet", urls.toString,
-      keep = Seq("url", "n_chars", "decode_failures"))
-    val fs = fsOf(spark, outDir)
-    if (stats.docs == 0) fs.delete(manStaging, true)
-    else {
-      writeManifest(fs, manStaging, None, "parquet", files.map(f => s"${urls.getName}/$f"), stats)
-      publish(spark, manStaging.toString, s"${manifestPath(outDir)}/$batch")
-    }
-  }
-
-  /** The ONE listing predicate for committed manifest entries: `batch_`
-    * directories that hold a [[ManifestFile]]. Staging dirs are
-    * dot-prefixed and never listed, and neither is anything else under
-    * `_manifest/`. Every consumer ([[manifests]], [[snapshots]]) goes
-    * through here. */
-  private def manifestStatuses(spark: SparkSession, outDir: String): Seq[FileStatus] = {
+  /** The committed manifests: the `batch_` directories under `_manifest/`
+    * that hold a [[ManifestFile]], resolved on the driver from their file
+    * lists; no Spark job runs. Staging dirs are dot-prefixed and never
+    * listed, and neither is anything else under `_manifest/`. */
+  def manifests(spark: SparkSession, outDir: String): Seq[Manifest] = {
     val root = new Path(manifestPath(outDir))
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) Nil
-    else fs.listStatus(root).toSeq.filter(s =>
-      s.isDirectory && s.getPath.getName.startsWith("batch_") &&
-        fs.exists(new Path(s.getPath, ManifestFile)))
-  }
-
-  /** The committed manifests, resolved on the driver from their file
-    * lists; no Spark job runs. */
-  def manifests(spark: SparkSession, outDir: String): Seq[Manifest] =
-    resolve(spark, outDir, manifestStatuses(spark, outDir))
-
-  private def resolve(spark: SparkSession, outDir: String, dirs: Seq[FileStatus]): Seq[Manifest] = {
     val fs = fsOf(spark, outDir)
-    dirs.map { st =>
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).toSeq.filter(st =>
+      st.isDirectory && st.getPath.getName.startsWith("batch_") &&
+        fs.exists(new Path(st.getPath, ManifestFile))).map { st =>
       val dir = st.getPath
       val in = fs.open(new Path(dir, ManifestFile))
       val m = try json.readTree(in) finally in.close()
-      val batch = Option(m.get("batch")).map(_.asText)
-      val base = batch.fold(dir)(b => new Path(dataPath(outDir), b))
+      val batch = m.get("batch").asText
+      val base = new Path(dataPath(outDir), batch)
       val files = m.get("files").elements.asScala.map(f => new Path(base, f.asText).toString).toSeq
       Manifest(dir.getName, batch, m.get("format").asText, files, CommitStats(m.get("docs").asLong,
         m.get("chars").asLong, m.get("decode_failures").asLong, m.get("pdf_docs").asLong))
@@ -311,8 +262,7 @@ object Checkpoint {
     * commit that holds it; [[resume]]'s left-anti join needs no distinct
     * build side, so none is planned (it cost a hash aggregate and a
     * 200-partition shuffle under the broadcast). Every manifest's
-    * files fill their directory alone (a data batch or a manifest-only
-    * commit's `urls/`), so the scan is given those
+    * files fill its data batch alone, so the scan is given those
     * directories: Spark lists more than 32 input paths with a Spark job,
     * which took about 500 ms for the 40 files of 10 batches at `local[4]`
     * on a 4-core machine, against 50 ms for their 10 directories. */
@@ -320,57 +270,23 @@ object Checkpoint {
     val urlSchema = StructType(Seq(StructField("url", StringType)))
     manifests(spark, outDir).filter(_.files.nonEmpty).groupBy(_.format).toSeq
       .map { case (format, ms) =>
-        val dirs = ms.flatMap(_.files.map(f => new Path(f).getParent.toString)).distinct
+        val dirs = ms.map(m => new Path(dataPath(outDir), m.dataBatch).toString)
         spark.read.schema(urlSchema).format(format).load(dirs: _*) }
       .reduceOption(_ union _)
   }
 
-  /** Assemble the output table from the given committed batch dirs. Only
-    * `batch_` directories a manifest references are read: anything else
-    * under `extracted/` (an orphan batch, stray flat files) stays
-    * invisible and its urls re-extract. */
-  private def assembleTable(spark: SparkSession, outDir: String, batches: Seq[String]): DataFrame =
+  /** The committed output table: the data batches a committed manifest
+    * references. Anything else under `extracted/` (an orphan batch from a
+    * crashed run, stray flat files) stays invisible and its urls
+    * re-extract. */
+  def readExtracted(spark: SparkSession, outDir: String): DataFrame = {
+    val batches = manifests(spark, outDir).map(_.dataBatch)
     if (batches.isEmpty)
       // schema-carrying empty table, so .select("url")/.as[ExtractedDoc]
-      // work on a fresh or manifest-only outDir
+      // work on a fresh outDir
       spark.emptyDataset(Encoders.product[ExtractedDoc]).toDF()
     else spark.read.format(TableIO.format(spark))
       .load(batches.map(b => s"${dataPath(outDir)}/$b"): _*)
-
-  /** The committed output table: data batches referenced by a committed
-    * manifest — an orphan data directory from a crashed run is invisible
-    * (see [[assembleTable]]). Definitionally the as-of read at the end of
-    * time, so the two read paths cannot drift apart. */
-  def readExtracted(spark: SparkSession, outDir: String): DataFrame =
-    readExtractedAsOf(spark, outDir, Long.MaxValue)
-
-  /** One committed snapshot. `name` is the manifest entry's batch name;
-    * `commitMs` is the commit time ([[publish]] stamps the manifest just
-    * before the rename; on a filesystem without
-    * setTimes it degrades to the staging-write mtime, which still orders
-    * single-committer histories correctly). Ties at millisecond
-    * granularity order by name and are both included by an inclusive
-    * as-of read. */
-  final case class Snapshot(manifest: String, name: String, commitMs: Long)
-
-  /** Commit history, oldest first — the Iceberg-snapshot analogue over the
-    * manifest model: every committed manifest is one snapshot; the table
-    * "as of" snapshot k is the union of the data batches referenced by
-    * manifests 1..k. */
-  def snapshots(spark: SparkSession, outDir: String): Seq[Snapshot] =
-    manifestStatuses(spark, outDir)
-      .map(s => Snapshot(s.getPath.toString, s.getPath.getName, s.getModificationTime))
-      .sortBy(s => (s.commitMs, s.manifest))
-
-  /** Time travel: the committed output table as of `commitMs` — the same
-    * manifest-gated read as [[readExtracted]] (data batches resolved from
-    * the manifests, so manifest-only commits contribute nothing),
-    * restricted to the manifests published at or before that instant.
-    * `readExtractedAsOf(outDir, snapshots.last.commitMs)` equals
-    * `readExtracted(outDir)`. */
-  def readExtractedAsOf(spark: SparkSession, outDir: String, commitMs: Long): DataFrame = {
-    val keep = manifestStatuses(spark, outDir).filter(_.getModificationTime <= commitMs)
-    assembleTable(spark, outDir, resolve(spark, outDir, keep).flatMap(_.dataBatch).distinct)
   }
 
   def maintenanceLockPath(outDir: String): String = s"$outDir/_maintenance_lock"
@@ -473,18 +389,14 @@ object Checkpoint {
     * 5 removes files under it (this sink has no immutable-metadata
     * snapshot isolation) — schedule maintenance accordingly.
     *
-    * Two documented deviations from Iceberg's rewrite: snapshot HISTORY
-    * collapses (the replaced manifests are gone, so time travel spans only
-    * commits after the last compaction — a filesystem sink without a
-    * metadata log cannot keep rewritten lineage alive), and the new
-    * manifest lists the compacted files, with totals counted during the
-    * rewrite. Manifest-only commits are untouched.
+    * One documented deviation from Iceberg's rewrite: the new manifest
+    * lists the compacted files, with totals counted during the rewrite.
     * Returns the new batch id; None when < 2 data batches exist. */
   def compact(spark: SparkSession, outDir: String,
       targetFileBytes: Long = 128L << 20,
       lockStaleMs: Long = MaintenanceLockStaleMs): Option[String] = {
     val mans = manifests(spark, outDir)
-    val dataBatches = mans.flatMap(_.dataBatch).distinct
+    val dataBatches = mans.map(_.dataBatch)
     if (dataBatches.size <= 1) return None
     withMaintenanceLock(spark, outDir, lockStaleMs) {
       val fs = fsOf(spark, outDir)
@@ -504,10 +416,9 @@ object Checkpoint {
         else if (nFiles > source.rdd.getNumPartitions) source.repartition(nFiles)
         else source
       val (files, stats) = write(rowsOf(sized), format, dataStaging)
-      writeManifest(fs, new Path(manStaging), Some(batch), format, files, stats)
+      writeManifest(fs, new Path(manStaging), batch, format, files, stats)
       publish(spark, dataStaging, s"${dataPath(outDir)}/$batch") // step 2
-      mans.filter(_.dataBatch.isDefined) // step 3
-        .foreach(m => fs.delete(new Path(manifestPath(outDir), m.name), true))
+      mans.foreach(m => fs.delete(new Path(manifestPath(outDir), m.name), true)) // step 3
       publish(spark, manStaging, s"${manifestPath(outDir)}/$batch") // step 4
       dataDirs.foreach(d => fs.delete(new Path(d), true)) // step 5
       Some(batch)
@@ -545,23 +456,11 @@ object Checkpoint {
           .filter(st => st.isDirectory && !keep(st.getPath.getName) &&
             st.getModificationTime < cutoff)
           .map { st => fs.delete(st.getPath, true); st.getPath.getName }
-      val referenced = manifests(spark, outDir).flatMap(_.dataBatch).toSet
+      val referenced = manifests(spark, outDir).map(_.dataBatch).toSet
       removeUnder(new Path(dataPath(outDir)),
         name => !(name.startsWith("batch_") && !referenced.contains(name)) &&
           !name.startsWith(".staging_")) ++
         removeUnder(new Path(manifestPath(outDir)),
           name => !name.startsWith(".staging_"))
     }
-
-  /** Run-level metrics rollup: the sum of the committed manifests'
-    * recorded totals, as one row (docs_done, total_chars,
-    * total_decode_failures). */
-  def metrics(spark: SparkSession, outDir: String): DataFrame = {
-    val mans = manifests(spark, outDir)
-    require(mans.nonEmpty, s"no committed manifests under ${manifestPath(outDir)}")
-    val t = mans.map(_.stats).reduce(_ + _)
-    import spark.implicits._
-    Seq((t.docs, t.chars, t.decodeFailures))
-      .toDF("docs_done", "total_chars", "total_decode_failures")
-  }
 }

@@ -195,7 +195,7 @@ object Corpus {
   /** The variant-0 per-page operator streams (rotating Tj/'/TJ show ops, no
     * line moves), shared by the encrypted / xref-stream / incremental /
     * malformed file layouts whose operator surface is identical. */
-  private def rotatingOpsPerPage(text: String): Seq[String] =
+  private[graft] def rotatingOpsPerPage(text: String): Seq[String] =
     pageOpsFor(text) { (ops, e, gi, _) =>
       gi % 3 match {
         case 0 => ops.append('(').append(e).append(") Tj ")
@@ -204,16 +204,16 @@ object Corpus {
       }
     }
 
-  private def rotatingShowContents(b: GoldenGen.PdfBuilder, text: String,
+  private[graft] def rotatingShowContents(b: GoldenGen.PdfBuilder, text: String,
       encryptKey: Array[Byte] = null, deflate: Boolean = true): Seq[Int] =
     rotatingOpsPerPage(text).map(ops =>
       b.addStream("", ops.getBytes(ISO_8859_1), deflate = deflate, encryptKey = encryptKey))
 
   /** Classic-xref tail shared by the variants: /Metadata XML stream, a
     * caller-chosen page-tree/catalog strategy, deterministic /Info (Title
-    * carries the text length), trailer /ID — so every document-level
-    * output (S2/S7/S24 and the XMP metadata + DocumentID surfaces) is
-    * oracle-checkable per doc. */
+    * carries the text length), trailer /ID — the document-level objects
+    * the parse loads for every PDF, although the extracted row keeps none
+    * of them. */
   private def finishClassicWith(b: GoldenGen.PdfBuilder, text: String,
       trailingNuls: Int = 0)(catalogOf: Option[Int] => Int): Array[Byte] = {
     val metaId = addMetadata(b, text)
@@ -223,15 +223,15 @@ object Corpus {
       trailingNuls)
   }
 
-  private def finishClassic(b: GoldenGen.PdfBuilder, contentIds: Seq[Int],
+  private[graft] def finishClassic(b: GoldenGen.PdfBuilder, contentIds: Seq[Int],
       text: String, fontObj: Option[(String, Int)] = None): Array[Byte] =
     finishClassicWith(b, text)(mid => GoldenGen.catalogFor(b, contentIds, fontObj, mid))
 
   private def infoContent(text: String): String =
     s"<</Title (doc-${text.length})/Producer (graft)>>"
 
-  /** The XMP-style metadata payload — deterministic and SQL-computable. */
-  def metadataXml(text: String): String = s"""<graft:meta len="${text.length}"/>"""
+  /** The XMP-style metadata payload, deterministic in the text length. */
+  private def metadataXml(text: String): String = s"""<graft:meta len="${text.length}"/>"""
 
   private def addMetadata(b: GoldenGen.PdfBuilder, text: String,
       encryptKey: Array[Byte] = null): Int =
@@ -239,7 +239,7 @@ object Corpus {
       metadataXml(text).getBytes(ISO_8859_1), encryptKey = encryptKey)
 
   /** Deterministic trailer /ID hex (32 digits) from the text length. */
-  def docIdHex(text: String): String = f"${text.length}%032x"
+  private def docIdHex(text: String): String = f"${text.length}%032x"
 
   // ------------------------------------------------------------------
   // PDF file-layout / operator variants. Even doc_ids are PDFs; each PDF
@@ -438,8 +438,8 @@ object Corpus {
   // Deterministic RC4 (40-bit V1 R2, empty passwords) document key shared by
   // every variant-3 doc: /O via Algorithm 3, file key via Algorithm 2, /U via
   // Algorithm 5 with the reference's 19-round XOR iteration.
-  private val EncDocIdHex = "0123456789abcdef0123456789abcdef"
-  private val EncPermission = -44
+  private[graft] val EncDocIdHex = "0123456789abcdef0123456789abcdef"
+  private[graft] val EncPermission = -44
   private lazy val encOKey: (Array[Byte], Array[Byte], Array[Byte]) = {
     val docId = EncDocIdHex.grouped(2).map(h => Integer.parseInt(h, 16).toByte).toArray
     val ownerHash = PdfCrypto.md5(PdfCrypto.pad(""))
@@ -496,13 +496,15 @@ object Corpus {
   /** Variant 4: PDF 1.5 cross-reference STREAM layout — content streams as
     * type-1 objects, the whole page graph + /Info packed into one
     * FlateDecode object stream (type-2 entries), xref stream with the
-    * PNG-Up predictor — S5 + S10 + S11 in the driver gate. */
-  def pdfXrefStreamFromText(text: String): Array[Byte] = {
+    * PNG-Up predictor — S5 + S10 + S11 in the driver gate. `predictor` is
+    * [[GoldenGen.finishXrefStream]]'s; tests build refused-predictor files
+    * with it. */
+  def pdfXrefStreamFromText(text: String, predictor: String = "up"): Array[Byte] = {
     val b = new GoldenGen.PdfBuilder("1.5")
     val contentIds = rotatingShowContents(b, text)
     val metaId = addMetadata(b, text) // a stream: type-1 object, not in the ObjStm
     GoldenGen.finishXrefStream(b, contentIds, infoContent(text),
-      metadataId = Some(metaId), trailerId = Some(docIdHex(text)))
+      metadataId = Some(metaId), trailerId = Some(docIdHex(text)), predictor = predictor)
   }
 
   /** Variant 6: TWO incremental updates (a three-section /Prev chain). The
@@ -633,63 +635,6 @@ object Corpus {
   }
 
 
-  // Deterministic AESV2 (V4/R4) document keys, empty passwords (the
-  // reader, like the reference, throws on V 4: Tokeniser.cs:635-645).
-  // Two cached chains: /EncryptMetadata false appends 0xFFFFFFFF to the
-  // Algorithm-2 hash input (ISO 32000-1 step f) — right after the /ID
-  // bytes, so it is passed as their suffix — and its file key differs.
-  private val AesDocIdHex = "fedcba9876543210fedcba9876543210"
-  private def aesChain(encryptMetadata: Boolean): (Array[Byte], Array[Byte], Array[Byte]) = {
-    val docId = AesDocIdHex.grouped(2).map(h => Integer.parseInt(h, 16).toByte).toArray
-    val o = GoldenGen.computeOwnerO("", "", 16)
-    val keyInputId = if (encryptMetadata) docId else docId ++ Array.fill[Byte](4)(-1)
-    val key = PdfCrypto.computeEncryptionKey(PdfCrypto.pad(""), o, EncPermission, keyInputId, 16)
-    val u = PdfCrypto.computeEncryptU(PdfCrypto.pad(""), docId, key)
-    (o, key, u)
-  }
-  private lazy val aesOKeyU = aesChain(encryptMetadata = true)
-  private lazy val aesOKeyUNoMeta = aesChain(encryptMetadata = false)
-
-  /** AES corpus: variant 0's chunk/page contract with every content stream
-    * AES-128-CBC-encrypted under the V4/R4 AESV2 crypt filter
-    * (deterministic per-object IVs). No /Info and no /Metadata.
-    *
-    * `(docId/2) % 3` routes each doc through one of the three real-world
-    * AESV2 encryption-dictionary DIALECTS (all seen in the wild):
-    *  - 0: top-level `/Length 128` (bits) + `/CF/StdCF/Length 16` (spec says
-    *       BYTES there);
-    *  - 1: `/EncryptMetadata false` — the file key itself changes
-    *       (Algorithm 2 step f appends FFFFFFFF); no top-level /Length, so
-    *       the reader takes the CF-Length path with the bytes convention;
-    *  - 2: `/CF/StdCF/Length 128` — the BITS convention some writers use.
-    * The reader replicates the reference's throw surface (error row) for
-    * every dialect. */
-  def pdfAesForDoc(docId: Long, text: String): Array[Byte] = {
-    val dialect = ((docId / 2) % 3).toInt
-    val (o, key, u) = if (dialect == 1) aesOKeyUNoMeta else aesOKeyU
-    val b = new GoldenGen.PdfBuilder()
-    val contentIds = rotatingOpsPerPage(text).map { ops =>
-      val id = b.registerObject()
-      val iv = Array.tabulate[Byte](16)(i =>
-        ((docId * 131 + id * 31 + i * 7 + text.length) & 0xff).toByte)
-      val payload = GoldenGen.aesEncrypt(
-        GoldenGen.objectKeyAes(key, ObjectId(id, 0)), iv, ops.getBytes(ISO_8859_1))
-      b.raw(s"$id 0 obj\n<</Length ${payload.length}>>stream\n")
-      b.raw(payload)
-      b.raw("\nendstream\nendobj\n")
-      id
-    }
-    val catalog = GoldenGen.catalogFor(b, contentIds)
-    val encId = b.addObject(
-      s"<</Filter/Standard/V 4/R 4/P $EncPermission" +
-        (if (dialect == 0) "/Length 128" else "") +
-        s"/CF<</StdCF<</CFM/AESV2/AuthEvent/DocOpen/Length ${if (dialect == 2) 128 else 16}>>>>" +
-        "/StmF/StdCF/StrF/StdCF" +
-        (if (dialect == 1) "/EncryptMetadata false" else "") +
-        s"/O <${hexOf(o)}>/U <${hexOf(u)}>>>")
-    b.finish(s"/Root $catalog 0 R/Encrypt $encId 0 R/ID[<$AesDocIdHex><$AesDocIdHex>]")
-  }
-
   /** Owner-password-only document: /U derives from a NON-empty user password
     * ("graftuser"), so opening with the empty password fails user
     * authentication and the reader reaches the reference's UNIMPLEMENTED
@@ -717,231 +662,6 @@ object Corpus {
     val encId = b.addObject(
       s"<</Filter/Standard/V 1/R 2/P $EncPermission/O <${hexOf(o)}>/U <${hexOf(u)}>>>")
     b.finish(s"/Root $catalog 0 R/Encrypt $encId 0 R/ID[<$EncDocIdHex><$EncDocIdHex>]")
-  }
-
-  /** R3 owner-only twin of [[pdfOwnerOnlyFromText]]: V 2/R 3/Length 40, /O
-    * from the FULL Algorithm 3 chain (50×MD5 owner key + 20-key RC4), user
-    * password "graftuser" never handed to the caller — only an Algorithm 7
-    * owner path (password [[OwnerPassword]]) could open it, which the
-    * reference and the reader do not implement. */
-  private lazy val ownerOnlyR3OKeyU: (Array[Byte], Array[Byte], Array[Byte]) = {
-    val docId = EncDocIdHex.grouped(2).map(h => Integer.parseInt(h, 16).toByte).toArray
-    val o = GoldenGen.computeOwnerO(OwnerPassword, "graftuser", 5)
-    val key = PdfCrypto.computeEncryptionKey(PdfCrypto.pad("graftuser"), o, EncPermission, docId, 5)
-    val u = PdfCrypto.computeEncryptU(PdfCrypto.pad("graftuser"), docId, key)
-    (o, key, u)
-  }
-
-  /** The owner password both owner-only builders encrypt under. */
-  val OwnerPassword = "graftowner"
-
-  def pdfOwnerOnlyR3FromText(text: String): Array[Byte] = {
-    val (o, key, u) = ownerOnlyR3OKeyU
-    val b = new GoldenGen.PdfBuilder()
-    val contentIds = rotatingShowContents(b, text, encryptKey = key)
-    val catalog = GoldenGen.catalogFor(b, contentIds)
-    val encId = b.addObject(
-      s"<</Filter/Standard/V 2/R 3/Length 40/P $EncPermission/O <${hexOf(o)}>/U <${hexOf(u)}>>>")
-    b.finish(s"/Root $catalog 0 R/Encrypt $encId 0 R/ID[<$EncDocIdHex><$EncDocIdHex>]")
-  }
-
-  /** AESV2 owner-only: V4/R4 — /O is STILL the RC4-based Algorithm 3 chain
-    * (ISO 32000-1 keeps RC4 for /O and /U at R4; only payloads are AES);
-    * the reader rejects V 4 before any password is tried. */
-  private lazy val aesOwnerOnlyOKeyU: (Array[Byte], Array[Byte], Array[Byte]) = {
-    val docId = AesDocIdHex.grouped(2).map(h => Integer.parseInt(h, 16).toByte).toArray
-    val o = GoldenGen.computeOwnerO(OwnerPassword, "graftuser", 16)
-    val key = PdfCrypto.computeEncryptionKey(PdfCrypto.pad("graftuser"), o, EncPermission, docId, 16)
-    val u = PdfCrypto.computeEncryptU(PdfCrypto.pad("graftuser"), docId, key)
-    (o, key, u)
-  }
-
-  def pdfAesOwnerOnlyFromText(docIdNum: Long, text: String): Array[Byte] = {
-    val (o, key, u) = aesOwnerOnlyOKeyU
-    val b = new GoldenGen.PdfBuilder()
-    val contentIds = rotatingOpsPerPage(text).map { ops =>
-      val id = b.registerObject()
-      val iv = Array.tabulate[Byte](16)(i =>
-        ((docIdNum * 131 + id * 31 + i * 7 + text.length) & 0xff).toByte)
-      val payload = GoldenGen.aesEncrypt(
-        GoldenGen.objectKeyAes(key, ObjectId(id, 0)), iv, ops.getBytes(ISO_8859_1))
-      b.raw(s"$id 0 obj\n<</Length ${payload.length}>>stream\n")
-      b.raw(payload)
-      b.raw("\nendstream\nendobj\n")
-      id
-    }
-    val catalog = GoldenGen.catalogFor(b, contentIds)
-    val encId = b.addObject(
-      s"<</Filter/Standard/V 4/R 4/P $EncPermission/Length 128" +
-        "/CF<</StdCF<</CFM/AESV2/AuthEvent/DocOpen/Length 16>>>>" +
-        "/StmF/StdCF/StrF/StdCF" +
-        s"/O <${hexOf(o)}>/U <${hexOf(u)}>>>")
-    b.finish(s"/Root $catalog 0 R/Encrypt $encId 0 R/ID[<$AesDocIdHex><$AesDocIdHex>]")
-  }
-
-  // Deterministic AES-256 (V5) security bundles (the reader, like the
-  // reference, throws on V > 2). Real writers draw the 32-byte file key and
-  // the four 8-byte salts from a CSPRNG; fixtures pin them so every builder
-  // output is byte-stable. R6 bundles pay the Algorithm-2.B hardened hash
-  // (64+ AES/SHA-2 rounds per derivation) ONCE here, amortized corpus-wide
-  // like encOKey/aesOKeyU.
-  private val V5FileKey = Array.tabulate[Byte](32)(i => ((i * 37 + 11) & 0xff).toByte)
-  private def v5Salts(seed: Int) = Array.tabulate[Byte](32)(i => ((seed * 53 + i * 29 + 5) & 0xff).toByte)
-  private lazy val v5UserR6 =
-    GoldenGen.makeV5Security("", OwnerPassword, V5FileKey, v5Salts(1), EncPermission,
-      encryptMetadata = true, revision = 6)
-  private lazy val v5UserR5 =
-    GoldenGen.makeV5Security("", OwnerPassword, V5FileKey, v5Salts(2), EncPermission,
-      encryptMetadata = true, revision = 5)
-  private lazy val v5NoMetaR6 =
-    GoldenGen.makeV5Security("", OwnerPassword, V5FileKey, v5Salts(3), EncPermission,
-      encryptMetadata = false, revision = 6)
-  private lazy val v5OwnerOnly =
-    GoldenGen.makeV5Security("graftuser", OwnerPassword, V5FileKey, v5Salts(4), EncPermission,
-      encryptMetadata = true, revision = 6)
-
-  private def v5EncryptedBody(b: GoldenGen.PdfBuilder, docId: Long, text: String): Seq[Int] =
-    rotatingOpsPerPage(text).map { ops =>
-      val id = b.registerObject()
-      val iv = Array.tabulate[Byte](16)(i =>
-        ((docId * 149 + id * 41 + i * 13 + text.length) & 0xff).toByte)
-      // V5: the FILE key encrypts every stream directly — no per-object key
-      val payload = GoldenGen.aesEncrypt(V5FileKey, iv, ops.getBytes(ISO_8859_1))
-      b.raw(s"$id 0 obj\n<</Length ${payload.length}>>stream\n")
-      b.raw(payload)
-      b.raw("\nendstream\nendobj\n")
-      id
-    }
-
-  private def v5EncDict(sec: GoldenGen.V5Security, revision: Int, extra: String): String =
-    s"<</Filter/Standard/V 5/R $revision/Length 256/P $EncPermission" +
-      "/CF<</StdCF<</CFM/AESV3/AuthEvent/DocOpen/Length 32>>>>" +
-      "/StmF/StdCF/StrF/StdCF" + extra +
-      s"/O <${hexOf(sec.o)}>/U <${hexOf(sec.u)}>" +
-      s"/OE <${hexOf(sec.oe)}>/UE <${hexOf(sec.ue)}>/Perms <${hexOf(sec.perms)}>>>"
-
-  /** AES-256 corpus: variant 0's chunk/page contract with every content
-    * stream AES-256-CBC-encrypted under the file key (ISO 32000-2 drops
-    * per-object key derivation). `(docId/2) % 3` rotates three dialects,
-    * all with the EMPTY user password:
-    *  - 0: R6 — the hardened Algorithm-2.B hash (64+ variable rounds);
-    *  - 1: R5 — the deprecated single-SHA-256 precursor (Adobe ext. 3);
-    *  - 2: R6 with `/EncryptMetadata false` — unlike V4 the FILE KEY does
-    *       not change (it's random, not password-derived), but the /Perms
-    *       capsule's flag byte must read 'F' (Algorithm 13 validates it).
-    * Every dialect carries /Perms; the reader keeps the reference's throw
-    * surface (error row, unit-pinned). */
-  def pdfAes256ForDoc(docId: Long, text: String): Array[Byte] = {
-    val (sec, revision, extra) = ((docId / 2) % 3).toInt match {
-      case 0 => (v5UserR6, 6, "")
-      case 1 => (v5UserR5, 5, "")
-      case _ => (v5NoMetaR6, 6, "/EncryptMetadata false")
-    }
-    val b = new GoldenGen.PdfBuilder()
-    val contentIds = v5EncryptedBody(b, docId, text)
-    val catalog = GoldenGen.catalogFor(b, contentIds)
-    val encId = b.addObject(v5EncDict(sec, revision, extra))
-    b.finish(s"/Root $catalog 0 R/Encrypt $encId 0 R/ID[<$AesDocIdHex><$AesDocIdHex>]")
-  }
-
-  /** AES-256 owner-only: /U derives from user password "graftuser" (never
-    * handed out), so only Algorithm 12 with [[OwnerPassword]] would open it;
-    * the reader rejects V 5 before any password is tried. */
-  def pdfAes256OwnerOnlyFromText(docId: Long, text: String): Array[Byte] = {
-    val b = new GoldenGen.PdfBuilder()
-    val contentIds = v5EncryptedBody(b, docId, text)
-    val catalog = GoldenGen.catalogFor(b, contentIds)
-    val encId = b.addObject(v5EncDict(v5OwnerOnly, 6, ""))
-    b.finish(s"/Root $catalog 0 R/Encrypt $encId 0 R/ID[<$AesDocIdHex><$AesDocIdHex>]")
-  }
-
-  /** Refused-filter corpus: the exact chunk/page contract of variant 0, but
-    * content streams encoded with filters the reference does not decode (it
-    * supports only None and FlateDecode and throws otherwise; the reader
-    * replicates that as an error row), routed by `(doc_id/2) % 5`:
-    * LZWDecode, ASCIIHexDecode, ASCII85Decode, RunLengthDecode, and the
-    * `[ASCII85Decode FlateDecode]` two-stage chain. */
-  def pdfExtendedForDoc(docId: Long, text: String): Array[Byte] = {
-    val b = new GoldenGen.PdfBuilder()
-    val contentIds = rotatingOpsPerPage(text).map { ops =>
-      val plain = ops.getBytes(ISO_8859_1)
-      val (dictExtra, payload) = ((docId / 2) % 5).toInt match {
-        case 0 => ("/Filter/LZWDecode", GoldenGen.lzwEncode(plain))
-        case 1 => ("/Filter/ASCIIHexDecode", GoldenGen.asciiHexEncode(plain))
-        case 2 => ("/Filter/ASCII85Decode", GoldenGen.ascii85Encode(plain))
-        case 3 => ("/Filter/RunLengthDecode", GoldenGen.runLengthEncode(plain))
-        case _ => ("/Filter[/ASCII85Decode/FlateDecode]",
-          GoldenGen.ascii85Encode(GoldenGen.zlib(plain)))
-      }
-      b.addStream(dictExtra, payload)
-    }
-    finishClassic(b, contentIds, text)
-  }
-
-  /** HYBRID-reference corpus (ISO 32000-1 §7.5.8.4): the variant-0
-    * chunk/page contract, but the ENTIRE page graph (page dicts, pages
-    * root, catalog) hides inside a compressed object stream that only the
-    * trailer's /XRefStm supplement can resolve — the classic table lists
-    * just the content streams as in-use and marks every structural object
-    * FREE, exactly the compatibility shape Acrobat writes for pre-1.5
-    * readers. The reference ignores /XRefStm (Tokeniser.cs:518 bookkeeping
-    * set); the reader replicates that as an error row (unit-pinned).
-    * Content streams rotate raw/Flate on (doc_id/2). */
-  def pdfHybridForDoc(docId: Long, text: String): Array[Byte] = {
-    val b = new GoldenGen.PdfBuilder("1.5")
-    val contentIds = rotatingOpsPerPage(text).map(ops =>
-      b.addStream("", ops.getBytes(ISO_8859_1), deflate = (docId / 2) % 2 == 0))
-    val p = contentIds.length
-    // hidden ids: objStm = p+1; page_i = p+2+i; pagesRoot = 2p+2;
-    // catalog = 2p+3; the supplement itself = 2p+4
-    val objStmId = p + 1
-    val pagesRootId = 2 * p + 2
-    val catalogId = 2 * p + 3
-    val xrefStmId = 2 * p + 4
-    val members: Seq[(Int, String)] =
-      (0 until p).map(i => (p + 2 + i,
-        s"<</Type/Page /Parent $pagesRootId 0 R/Contents ${contentIds(i)} 0 R>>")) :+
-      (pagesRootId,
-        s"<</Type/Pages /Kids[${(0 until p).map(i => s"${p + 2 + i} 0 R").mkString(" ")}] /Count $p>>") :+
-      (catalogId, s"<</Type/Catalog /Pages $pagesRootId 0 R>>")
-    val payloadBody = members.map(_._2).mkString(" ")
-    var off = 0
-    val header = members.map { case (id, src) =>
-      val entry = s"$id $off"
-      off += src.length + 1
-      entry
-    }.mkString(" ") + " "
-    val gotObjStm = b.addStream(s"/Type/ObjStm/N ${members.length}/First ${header.length}",
-      (header + payloadBody).getBytes(ISO_8859_1), deflate = true)
-    require(gotObjStm == objStmId, s"objStm id $gotObjStm != $objStmId")
-    require(p + 1 <= 255, s"member index is a 1-byte W column; $p pages overflow it")
-
-    def offRow(a: Int) = Array[Byte](1,
-      ((a >> 16) & 0xff).toByte, ((a >> 8) & 0xff).toByte, (a & 0xff).toByte, 0)
-    def stmRow(memberIdx: Int) = Array[Byte](2,
-      ((objStmId >> 16) & 0xff).toByte, ((objStmId >> 8) & 0xff).toByte,
-      (objStmId & 0xff).toByte, memberIdx.toByte)
-    val xrefStmAddress = b.size
-    val rows: Seq[Array[Byte]] =
-      offRow(b.objectOffset(objStmId)) +:                  // the carrier
-      (0 until p).map(i => stmRow(i)) :+                   // page dicts
-      stmRow(p) :+ stmRow(p + 1) :+                        // pages root, catalog
-      offRow(xrefStmAddress)                               // the supplement itself
-    val body = GoldenGen.zlib(rows.flatten.toArray)
-    b.raw(s"$xrefStmId 0 obj\n<</Type/XRef/Size ${xrefStmId + 1}/Index[$objStmId ${p + 4}]" +
-      s"/W[1 3 1]/Filter/FlateDecode/Length ${body.length}/Root $catalogId 0 R>>stream\n")
-    b.raw(body)
-    b.raw("\nendstream\nendobj\n")
-
-    // classic table: content streams in-use, everything structural FREE
-    val tableAddress = b.size
-    b.raw(s"xref\n0 ${xrefStmId + 1}\n")
-    b.raw("0000000000 65535 f \n")
-    (1 to p).foreach(i => b.raw(f"${b.objectOffset(i)}%010d 00000 n \n"))
-    (objStmId to xrefStmId).foreach(_ => b.raw("0000000000 00000 f \n"))
-    b.raw(s"trailer<</Size ${xrefStmId + 1}/Root $catalogId 0 R/XRefStm $xrefStmAddress>>\n")
-    b.raw(s"startxref\n$tableAddress\n%%EOF\n")
-    b.currentBytes
   }
 
   /** Non-ASCII marker appended by [[htmlCharsetProbe]]: all three words
@@ -978,122 +698,6 @@ object Corpus {
       case _ => withBom(page("").getBytes(UTF_16LE),
         Array(0xff.toByte, 0xfe.toByte))
     }
-  }
-
-  /** Source char the Type0 corpus writes as CID 0x0001, whose ToUnicode
-    * destination <00660066> is the TWO-char "ff". 'e' so essentially every
-    * doc carries it. */
-  final val Type0MarkerFF = 'e'
-
-  /** Source char the Type0 corpus writes as CID 0x0002, whose ToUnicode
-    * destination <D83DDE00> is a UTF-16 SURROGATE PAIR (U+1F600). 't' for
-    * the same reason. */
-  final val Type0MarkerEmoji = 't'
-
-  /** Per-char CID encoding of the Type0 corpus: markers take the bfchar
-    * CIDs, printable ASCII rides the <0120> <017E> <0020> bfrange (cid =
-    * char + 0x100, all above the 8-bit table the reference is limited to),
-    * and anything else is written as its OWN codepoint with NO CMap entry.
-    * Chars in {U+0001, U+0002} ∪ [U+0120, U+017E] collide with the
-    * marker/bfrange CID windows and are refused (require). */
-  private def type0Cids(chunk: String): Array[Int] = chunk.map {
-    case Type0MarkerFF    => 0x0001
-    case Type0MarkerEmoji => 0x0002
-    case c if c >= 0x20 && c <= 0x7e => c + 0x100
-    case c =>
-      require(c > 0x02 && !(c >= 0x120 && c <= 0x17e),
-        f"type0 corpus: char U+${c.toInt}%04X collides with a CID window")
-      c.toInt
-  }.toArray
-
-  private def appendLiteralByte(ops: StringBuilder, v: Int): Unit = v match {
-    case '\\' => ops.append("\\\\")
-    case '('  => ops.append("\\(")
-    case ')'  => ops.append("\\)")
-    case b if b < 0x20 || b > 0x7e => ops.append(f"\\$b%03o")
-    case b => ops.append(b.toChar)
-  }
-
-  /** Type0/Identity-H composite-font corpus: variant-0 chunking (64-char
-    * chunks, 8 per page), every chunk shown through a Type0 font with
-    * /Encoding/Identity-H, a CIDFontType2 descendant and a full-range
-    * ToUnicode CMap. Show ops rotate hex `Tj` / escaped-literal `'` /
-    * hex-inside-`TJ` on the global chunk index. The reference parses such
-    * CMaps with 2-hex-digit CID readers and decodes single BYTES through
-    * its 8-bit table (PdfFont.cs:40, Tokeniser.cs:2464-2472), so the
-    * reader does not recover the source text from these documents. */
-  def pdfType0ForDoc(docId: Long, text: String): Array[Byte] = {
-    val b = new GoldenGen.PdfBuilder()
-    val cmap =
-      """/CIDInit /ProcSet findresource begin
-        |12 dict begin
-        |begincmap
-        |/CIDSystemInfo << /Registry(Adobe) /Ordering(UCS) /Supplement 0 >> def
-        |/CMapName /Adobe-Identity-UCS def
-        |/CMapType 2 def
-        |1 begincodespacerange
-        |<0000> <FFFF>
-        |endcodespacerange
-        |2 beginbfchar
-        |<0001> <00660066>
-        |<0002> <D83DDE00>
-        |endbfchar
-        |1 beginbfrange
-        |<0120> <017E> <0020>
-        |endbfrange
-        |endcmap
-        |CMapName currentdict /CMap defineresource pop
-        |end
-        |end""".stripMargin
-    val cmapId = b.addStream("", cmap.getBytes(ISO_8859_1), deflate = true)
-    val descId = b.addObject(
-      "<</Type/Font/Subtype/CIDFontType2/BaseFont/GraftCID" +
-        "/CIDSystemInfo<</Registry(Adobe)/Ordering(Identity)/Supplement 0>>" +
-        "/CIDToGIDMap/Identity>>")
-    val fontId = b.addObject(
-      s"<</Type/Font/Subtype/Type0/BaseFont/GraftCID/Encoding/Identity-H" +
-        s"/DescendantFonts[$descId 0 R]/ToUnicode $cmapId 0 R>>")
-    var gi = 0
-    val contentIds = text.grouped(64).toIndexedSeq.grouped(8).map { pageChunks =>
-      val ops = new StringBuilder("BT /F1 10 Tf ")
-      pageChunks.foreach { c =>
-        val cids = type0Cids(c)
-        gi % 3 match {
-          case 0 =>
-            ops.append('<'); cids.foreach(cid => ops.append(f"$cid%04X")); ops.append("> Tj ")
-          case 1 =>
-            ops.append('(')
-            cids.foreach { cid => appendLiteralByte(ops, cid >> 8); appendLiteralByte(ops, cid & 0xff) }
-            ops.append(") ' ")
-          case _ =>
-            ops.append("[<"); cids.foreach(cid => ops.append(f"$cid%04X")); ops.append("> -120] TJ ")
-        }
-        gi += 1
-      }
-      ops.append("ET")
-      b.addStream("", ops.toString.getBytes(ISO_8859_1), deflate = true)
-    }.toSeq
-    finishClassic(b, contentIds, text, fontObj = Some(("F1", fontId)))
-  }
-
-  /** Refused-predictor corpus: the exact chunk/page contract of variant 4
-    * (cross-reference STREAM layout), but the xref stream's rows are
-    * encoded with predictors the reference rejects (Token.cs:652-668
-    * accepts only Predictor 12 + all-Up rows), routed by `(doc_id/2) % 3`:
-    * PNG Predictor 15 with per-row filter types rotating
-    * None/Sub/Up/Average/Paeth, TIFF Predictor 2 (horizontal differencing),
-    * and Predictor 1 (DecodeParms present, no prediction). */
-  def pdfPredictorForDoc(docId: Long, text: String): Array[Byte] = {
-    val mode = ((docId / 2) % 3).toInt match {
-      case 0 => "png"
-      case 1 => "tiff"
-      case _ => "none"
-    }
-    val b = new GoldenGen.PdfBuilder("1.5")
-    val contentIds = rotatingShowContents(b, text)
-    val metaId = addMetadata(b, text)
-    GoldenGen.finishXrefStream(b, contentIds, infoContent(text),
-      metadataId = Some(metaId), trailerId = Some(docIdHex(text)), predictor = mode)
   }
 
   /** Expected PDF page count for [[pdfFromText]] under `text` —

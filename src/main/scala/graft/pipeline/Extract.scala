@@ -114,8 +114,7 @@ object ExtractPipeline {
 
   /** Column-pruned, buffer-reusing extraction transform, as a typed
     * Dataset: tests, gates and benchmarks read it; `Main` commits the same
-    * rows through [[extractRows]]. It is a narrow map, so it runs unchanged
-    * over a `readStream` source as well. */
+    * rows through [[extractRows]]. */
   def run(pages: Dataset[PageRow], delimiter: String = "",
       captureLines: Boolean = false): Dataset[ExtractedDoc] = {
     val spark = pages.sparkSession

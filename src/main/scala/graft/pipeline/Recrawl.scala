@@ -3,26 +3,26 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Snapshot reconciliation for recrawls: given the previous and the new
+/** Crawl-snapshot reconciliation for recrawls: given the previous and the new
   * crawl snapshot keyed by url with a content fingerprint, classify every
   * url as added / removed / changed / unchanged. This is the incremental
   * companion to [[Checkpoint.resume]]: resume skips urls already DONE in
-  * THIS output; the delta skips urls whose CONTENT did not change between
-  * crawl snapshots, so a monthly recrawl of a 10^12-page table re-extracts
-  * only the changed slice (on the real web the unchanged fraction
+  * THIS output; the delta skips urls whose CONTENT did not change from one
+  * crawl snapshot to the next, so a monthly recrawl of a 10^12-page table
+  * re-extracts only the changed slice (on the real web the unchanged fraction
   * dominates — this is the difference between processing 100 TB and
   * processing a few TB per snapshot). ADDITIVE surface: the reference is
   * a single-document parser with no snapshot notion.
   *
   * Shape at 10^12 urls: ONE full-outer sort-merge join on url — both
   * sides shuffle once on the join key and nothing else; no window, no
-  * driver-side state. On a real table both snapshots come bucketed by
+  * driver-side state. On a real table both snapshot tables come bucketed by
   * url (crawl outputs are written url-partitioned), which makes the join
   * shuffle-free; the fingerprint comparison is a per-row projection. The
   * fingerprint column should be a digest of the EXTRACTION-RELEVANT bytes
   * (payload md5), not fetch metadata — timestamps/headers churn on every
   * fetch and would mark the whole table changed. Each snapshot must be
-  * url-UNIQUE (crawl snapshots are url-keyed); a duplicated url would
+  * url-UNIQUE (a crawl snapshot is url-keyed); a duplicated url would
   * multiply through the outer join. */
 object Recrawl {
 

@@ -8,7 +8,7 @@ import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
   * manifest (no Iceberg runtime jar offline — SURVEY.md §7); on a real
   * deployment set `spark.graft.table.format=iceberg` and the same calls go
   * through the Iceberg catalog (`format("iceberg")` with a table identifier),
-  * whose snapshots subsume the manifest's resume role. */
+  * whose snapshot log subsumes the manifest's resume role. */
 object TableIO {
   /** The one lookup of `spark.graft.table.format`: the format of the page
     * table and of the extracted data files. */

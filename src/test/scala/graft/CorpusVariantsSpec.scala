@@ -1,5 +1,6 @@
 package graft
 
+import graft.fixtures.TestPdfs
 import graft.pdf.PdfExtract
 import graft.pipeline.Corpus
 import org.scalatest.funsuite.AnyFunSuite
@@ -28,27 +29,11 @@ class CorpusVariantsSpec extends AnyFunSuite {
       for (delim <- Seq("", "|")) {
         val r = PdfExtract.extract(payload, contentDelimiter = delim, captureFragments = false)
         assert(r.decodeFailures == 0, s"v$variant failures: ${r.error}")
+        assert(r.pages == Corpus.pdfPageCount(t), s"v$variant pages=${r.pages}")
         val want = Corpus.pdfExpectedText(id, t, delim)
         assert(r.text == want,
           s"v$variant delim='$delim': got <${r.text.take(120)}> want <${want.take(120)}>")
       }
-    }
-  }
-
-  for (variant <- 0 until Corpus.NumPdfVariants) {
-    test(s"variant $variant metadata: version, /Info title, page count, XML metadata, /ID") {
-      val t = texts(3)
-      val id = docIdFor(variant)
-      val r = PdfExtract.extract(Corpus.pdfForDoc(id, t), captureFragments = false)
-      val wantVersion = if (variant == 4) "1.5" else "1.4"
-      assert(r.pdfVersion.contains(wantVersion), s"v$variant version=${r.pdfVersion}")
-      assert(r.documentInfo.contains(s"Title: doc-${t.length}; Producer: graft; "),
-        s"v$variant info=${r.documentInfo}")
-      assert(r.pages == Corpus.pdfPageCount(t))
-      assert(r.metadata.contains(Corpus.metadataXml(t)), s"v$variant metadata=${r.metadata}")
-      val h = if (variant == 3) "0123456789abcdef0123456789abcdef" else Corpus.docIdHex(t)
-      assert(r.documentId.contains(s""""<$h>"; "<$h>"; """),
-        s"v$variant document_id=${r.documentId}")
     }
   }
 
@@ -105,7 +90,6 @@ class CorpusVariantsSpec extends AnyFunSuite {
     assert(r.decodeFailures == 0, r.error)
     assert(r.text == t)
     assert(r.pages == Corpus.pdfPageCount(t))
-    assert(r.documentId.contains(s""""<${Corpus.docIdHex(t)}>"; "<${Corpus.docIdHex(t)}>"; """))
   }
 
   test("AES corpus: every AESV2 dialect is the reference error row") {
@@ -113,7 +97,7 @@ class CorpusVariantsSpec extends AnyFunSuite {
     // 1: /EncryptMetadata false (different file key), 2: CF Length in bits
     for (dialect <- 0 until 3; t <- Seq(texts(0), texts(3))) {
       val docId = dialect.toLong * 2
-      val payload = Corpus.pdfAesForDoc(docId, t)
+      val payload = TestPdfs.pdfAesForDoc(docId, t)
       val hay = new String(payload.map(b => (b & 0xff).toChar))
       dialect match {
         case 0 => assert(hay.contains("/Length 128/CF") && !hay.contains("EncryptMetadata"))
@@ -129,7 +113,7 @@ class CorpusVariantsSpec extends AnyFunSuite {
 
   test("hybrid /XRefStm corpus: every text shape is the reference error row") {
     for ((t, ti) <- texts.zipWithIndex; docId <- Seq(0L, 2L)) { // both deflate arms
-      val payload = Corpus.pdfHybridForDoc(docId, t)
+      val payload = TestPdfs.pdfHybridForDoc(docId, t)
       // reference parity: /XRefStm is trailer bookkeeping, the hidden
       // catalog stays a free entry -> structured error row, no text
       val default = PdfExtract.extract(payload, contentDelimiter = "",
@@ -152,12 +136,12 @@ class CorpusVariantsSpec extends AnyFunSuite {
     val t = texts(2)
     for ((payload, label) <- Seq(
         (Corpus.pdfOwnerOnlyFromText(t), "R2"),
-        (Corpus.pdfOwnerOnlyR3FromText(t), "R3"),
-        (Corpus.pdfAesOwnerOnlyFromText(4L, t), "AESV2-R4"))) {
+        (TestPdfs.pdfOwnerOnlyR3FromText(t), "R3"),
+        (TestPdfs.pdfAesOwnerOnlyFromText(4L, t), "AESV2-R4"))) {
       // even the right owner password reaches the reference's owner throw
       // for R2/R3; the AESV2 doc never gets that far — V4 is rejected at the
       // Standard-encryption check (the reference's V>2 surface)
-      val deflt = PdfExtract.extract(payload, password = Corpus.OwnerPassword,
+      val deflt = PdfExtract.extract(payload, password = TestPdfs.OwnerPassword,
         contentDelimiter = "", captureFragments = false)
       val expected = if (label == "AESV2-R4") "Standard encryption"
         else "owner-password authentication is not implemented"
@@ -167,21 +151,20 @@ class CorpusVariantsSpec extends AnyFunSuite {
   }
 
   test("V5 crypto primitives: R5 hash is a single SHA-256; R6 hardened hash differs and is deterministic") {
-    import graft.fixtures.GoldenGen
-    val pwd = GoldenGen.passwordBytesV5("graftuser")
+    val pwd = TestPdfs.passwordBytesV5("graftuser")
     val salt = Array.tabulate[Byte](8)(i => (i * 3 + 1).toByte)
     // R5 = SHA-256(pwd ∥ salt ∥ udata) verbatim — checked against JCE
     // directly, independent of hash2B's own code path
     val md = java.security.MessageDigest.getInstance("SHA-256")
     md.update(pwd); md.update(salt)
-    val r5 = GoldenGen.hash2B(pwd, salt, Array.emptyByteArray, 5)
+    val r5 = TestPdfs.hash2B(pwd, salt, Array.emptyByteArray, 5)
     assert(r5.sameElements(md.digest()))
     // R6 actually runs the Algorithm-2.B loop: 32 bytes, differs from R5,
     // deterministic, and sensitive to the udata argument (the /O-side hash)
-    val r6 = GoldenGen.hash2B(pwd, salt, Array.emptyByteArray, 6)
+    val r6 = TestPdfs.hash2B(pwd, salt, Array.emptyByteArray, 6)
     assert(r6.length == 32 && !r6.sameElements(r5))
-    assert(r6.sameElements(GoldenGen.hash2B(pwd, salt, Array.emptyByteArray, 6)))
-    assert(!r6.sameElements(GoldenGen.hash2B(pwd, salt, Array.fill[Byte](48)(7), 6)))
+    assert(r6.sameElements(TestPdfs.hash2B(pwd, salt, Array.emptyByteArray, 6)))
+    assert(!r6.sameElements(TestPdfs.hash2B(pwd, salt, Array.fill[Byte](48)(7), 6)))
   }
 
   test("encrypted nested string: keyed by the containing object") {
@@ -249,13 +232,13 @@ class CorpusVariantsSpec extends AnyFunSuite {
     // the text a full-CMap decode would give: 'e' -> "ff" (multi-char
     // bfchar), 't' -> U+1F600 (surrogate-pair bfchar), the rest unchanged
     def fullCmapText(t: String): String = t.flatMap {
-      case Corpus.Type0MarkerFF    => "ff"
-      case Corpus.Type0MarkerEmoji => "😀"
+      case TestPdfs.Type0MarkerFF    => "ff"
+      case TestPdfs.Type0MarkerEmoji => "😀"
       case c                       => c.toString
     }
     for ((t, i) <- texts.zipWithIndex) {
       val docId = i.toLong * 2
-      val payload = Corpus.pdfType0ForDoc(docId, t)
+      val payload = TestPdfs.pdfType0ForDoc(docId, t)
       val hay = new String(payload.map(b => (b & 0xff).toChar))
       assert(hay.contains("/Subtype/Type0") && hay.contains("/Encoding/Identity-H")
         && hay.contains("/Subtype/CIDFontType2"))
@@ -274,7 +257,7 @@ class CorpusVariantsSpec extends AnyFunSuite {
     // 1: deprecated R5 (single SHA-256), 2: R6 + /EncryptMetadata false
     for (dialect <- 0 until 3; t <- Seq(texts(0), texts(3))) {
       val docId = dialect.toLong * 2
-      val payload = Corpus.pdfAes256ForDoc(docId, t)
+      val payload = TestPdfs.pdfAes256ForDoc(docId, t)
       val hay = new String(payload.map(b => (b & 0xff).toChar))
       assert(hay.contains("/V 5") && hay.contains("/CFM/AESV3") && hay.contains("/Perms <"))
       dialect match {
@@ -291,8 +274,8 @@ class CorpusVariantsSpec extends AnyFunSuite {
 
   test("AES-256 owner-only doc: the owner password still ends in the V5 error row") {
     val t = texts(2)
-    val payload = Corpus.pdfAes256OwnerOnlyFromText(6L, t)
-    val deflt = PdfExtract.extract(payload, password = Corpus.OwnerPassword,
+    val payload = TestPdfs.pdfAes256OwnerOnlyFromText(6L, t)
+    val deflt = PdfExtract.extract(payload, password = TestPdfs.OwnerPassword,
       contentDelimiter = "", captureFragments = false)
     assert(deflt.error.exists(_.contains("Standard encryption")),
       s"default-mode error=${deflt.error}")
@@ -302,7 +285,7 @@ class CorpusVariantsSpec extends AnyFunSuite {
     val t = texts(3)
     for (route <- 0 until 4) {
       val id = route.toLong * 2
-      val payload = Corpus.pdfExtendedForDoc(id, t)
+      val payload = TestPdfs.pdfExtendedForDoc(id, t)
       // the reference decodes None/FlateDecode only
       val default = PdfExtract.extract(payload, contentDelimiter = "", captureFragments = false)
       assert(default.decodeFailures > 0, s"route $route should fail")
@@ -364,7 +347,7 @@ class CorpusVariantsSpec extends AnyFunSuite {
     val rnd = new java.util.Random(20260817L)
     val t = ("fuzz base corpus words repeated for a couple of pages worth " * 12).trim
     val bases = (0 until Corpus.NumPdfVariants).map(v => Corpus.pdfForDoc(v.toLong * 2, t)) :+
-      Corpus.pdfType0ForDoc(0L, t)
+      TestPdfs.pdfType0ForDoc(0L, t)
     var errorRows = 0
     (1 to 320).foreach { i =>
       val mutated = bases(i % bases.length).clone()

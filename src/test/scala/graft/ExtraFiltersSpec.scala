@@ -1,6 +1,6 @@
 package graft
 
-import graft.fixtures.GoldenGen
+import graft.fixtures.{GoldenGen, TestPdfs}
 import graft.pdf.PdfExtract
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,7 +14,7 @@ class ExtraFiltersSpec extends AnyFunSuite {
     * per-emit from the absolute table size (9→10 once entry 511 exists,
     * →11 at 1023, →12 at 2047), with a (prefixCode, byte) trie instead of
     * the fixture encoder's byte-list dictionary. It shares NO width
-    * bookkeeping with GoldenGen.lzwEncode, so an off-by-one in the fixture
+    * bookkeeping with TestPdfs.lzwEncode, so an off-by-one in the fixture
     * encoder desyncs this test instead of being masked by
     * self-consistency. */
   private def specLzwEncode(data: Array[Byte]): Array[Byte] = {
@@ -64,20 +64,20 @@ class ExtraFiltersSpec extends AnyFunSuite {
     val data = new Array[Byte](6144)
     rnd.nextBytes(data)
     val spec = specLzwEncode(data)
-    val prod = GoldenGen.lzwEncode(data)
+    val prod = TestPdfs.lzwEncode(data)
     // the fixture encoder follows the exact spec schedule
     assert(prod.toSeq == spec.toSeq, "encoder width schedule deviates from the spec schedule")
     // also at a size that stays inside 9-bit codes but crosses emit #253-256
     // (the historical off-by-one point)
     val small = new Array[Byte](700)
     rnd.nextBytes(small)
-    assert(GoldenGen.lzwEncode(small).toSeq == specLzwEncode(small).toSeq)
+    assert(TestPdfs.lzwEncode(small).toSeq == specLzwEncode(small).toSeq)
   }
 
   test("PNG per-row / TIFF / no-prediction xref streams error like the reference") {
     val text = "predictor coverage " * 40 // 760 chars -> multi-page variant-4 layout
     Seq(0L -> "png rows", 2L -> "tiff rows", 4L -> "predictor 1").foreach { case (docId, label) =>
-      val pdf = graft.pipeline.Corpus.pdfPredictorForDoc(docId, text)
+      val pdf = TestPdfs.pdfPredictorForDoc(docId, text)
       // reference (Token.cs:652-668): only Predictor 12 is accepted, and
       // the xref stream is unreadable -> structured error row
       val ref = PdfExtract.extract(pdf, contentDelimiter = "")
@@ -99,11 +99,11 @@ class ExtraFiltersSpec extends AnyFunSuite {
   test("LZW / ASCIIHex / ASCII85 / RunLength streams error like the reference") {
     val ops = "BT (filtered text works) Tj ET".getBytes("ISO-8859-1")
     val cases = Seq(
-      "/Filter/LZWDecode" -> GoldenGen.lzwEncode(ops),
-      "/Filter/ASCIIHexDecode" -> GoldenGen.asciiHexEncode(ops),
-      "/Filter/ASCII85Decode" -> GoldenGen.ascii85Encode(ops),
-      "/Filter/RunLengthDecode" -> GoldenGen.runLengthEncode(ops),
-      "/Filter[/ASCII85Decode/FlateDecode]" -> GoldenGen.ascii85Encode(GoldenGen.zlib(ops)))
+      "/Filter/LZWDecode" -> TestPdfs.lzwEncode(ops),
+      "/Filter/ASCIIHexDecode" -> TestPdfs.asciiHexEncode(ops),
+      "/Filter/ASCII85Decode" -> TestPdfs.ascii85Encode(ops),
+      "/Filter/RunLengthDecode" -> TestPdfs.runLengthEncode(ops),
+      "/Filter[/ASCII85Decode/FlateDecode]" -> TestPdfs.ascii85Encode(GoldenGen.zlib(ops)))
     cases.foreach { case (dict, payload) =>
       val pdf = pdfWithFilter(dict, payload)
       // reference-faithful: unsupported filter -> error row

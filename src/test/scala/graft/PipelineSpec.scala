@@ -140,15 +140,14 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val pages = texts.map { case (id, t) => Corpus.pageRowFor(id, t, "en") }.toDS()
     withTempDir("graft_spec_ckpt") { outDir =>
       val first = ExtractPipeline.run(pages.where(element_at(split(col("url"), "/"), -1).cast("long") < 5))
-      Checkpoint.commit(first, outDir)
+      Checkpoint.commitWithData(first, outDir)
       val remaining = Checkpoint.resume(pages, outDir)
       val ids = remaining.collect().map(_.url.split("/").last.toLong).sorted
       assert(ids.toSeq == (5L until 20L).toSeq)
       // committing the rest empties the backlog
-      Checkpoint.commit(ExtractPipeline.run(remaining), outDir)
+      Checkpoint.commitWithData(ExtractPipeline.run(remaining), outDir)
       assert(Checkpoint.resume(pages, outDir).count() == 0)
-      val m = Checkpoint.metrics(spark, outDir).collect().head
-      assert(m.getAs[Long]("docs_done") == 20L)
+      assert(Checkpoint.manifests(spark, outDir).map(_.stats.docs).sum == 20L)
     }
   }
 
@@ -190,7 +189,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       val manifests = Checkpoint.manifests(spark, outDir).map(m => m.name -> m).toMap
       batches.foreach { b =>
         val m = manifests(b)
-        assert(m.dataBatch.contains(b))
+        assert(m.dataBatch == b)
         val listed = m.files.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
         val visible = new java.io.File(s"${Checkpoint.dataPath(outDir)}/$b").list
           .filterNot(n => n.startsWith(".") || n.startsWith("_")).toSet
@@ -229,29 +228,24 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         .map(p => Checkpoint.commitWithData(ExtractPipeline.run(p), outDir))
       val total = stats.reduce(_ + _)
       assert(total.docs == 10 && total.pdfDocs == 6 && total.decodeFailures >= 1)
-      def rollup() = Checkpoint.metrics(spark, outDir)
-        .as[(Long, Long, Long)].collect().toSeq
-      assert(rollup() == Seq((total.docs, total.chars, total.decodeFailures)))
+      assert(Checkpoint.manifests(spark, outDir).map(_.stats).reduce(_ + _) == total)
       // the totals agree with the table itself, and survive compaction
       val table = Checkpoint.readExtracted(spark, outDir)
         .agg(count(lit(1)), sum("n_chars"), sum("decode_failures")).as[(Long, Long, Long)].head
-      assert(table == rollup().head)
+      assert(table == ((total.docs, total.chars, total.decodeFailures)))
       assert(Checkpoint.compact(spark, outDir).isDefined)
-      assert(rollup() == Seq((total.docs, total.chars, total.decodeFailures)))
       assert(Checkpoint.manifests(spark, outDir).map(_.stats) == Seq(total))
     }
   }
 
-  test("compact: content identical, one data batch remains, resume stays empty, manifest-only kept") {
+  test("compact: content identical, one data batch remains, resume stays empty") {
     import spark.implicits._
     val texts = (0L until 12L).map(i => i -> s"document number $i body words here")
     val pages = texts.map { case (id, t) => Corpus.pageRowFor(id, t, "en") }.toDS()
     def docId = element_at(split(col("url"), "/"), -1).cast("long")
     withTempDir("graft_spec_compact") { outDir =>
       (0 until 3).foreach(r => Checkpoint.commitWithData(
-        ExtractPipeline.run(pages.where(docId % 4 === r)), outDir))
-      // a manifest-only commit (work done elsewhere, no data) must survive
-      Checkpoint.commit(ExtractPipeline.run(pages.where(docId % 4 === 3)), outDir)
+        ExtractPipeline.run(pages.where(docId % 3 === r)), outDir))
       // sorted SEQUENCES, not sets: a rewrite that duplicated or dropped a
       // row is exactly what this comparison must catch
       def content() = Checkpoint.readExtracted(spark, outDir)
@@ -267,10 +261,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(content() == before, "compaction must not change table content")
       assert(!new java.io.File(Checkpoint.maintenanceLockPath(outDir)).exists,
         "maintenance lock must be released")
-      assert(Checkpoint.resume(pages, outDir).count() == 0,
-        "every url (incl. the manifest-only commit's) must stay done")
-      val m = Checkpoint.metrics(spark, outDir).collect().head
-      assert(m.getAs[Long]("docs_done") == 12L)
+      assert(Checkpoint.resume(pages, outDir).count() == 0, "every url must stay done")
+      assert(Checkpoint.manifests(spark, outDir).map(_.stats.docs) == Seq(12L))
       // nothing left to compact
       assert(Checkpoint.compact(spark, outDir).isEmpty)
     }
@@ -286,19 +278,18 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }.toSet
   }
 
-  test("codec: every data file that commitWithData, commit and compact write is zstd") {
+  test("codec: every data file that commitWithData and compact write is zstd") {
     import spark.implicits._
     val pages = (0L until 12L).map(i => Corpus.pageRowFor(i, s"codec document $i body words", "en")).toDS()
     def docId = element_at(split(col("url"), "/"), -1).cast("long")
     withTempDir("graft_spec_codec") { outDir =>
-      (0 until 2).foreach(r => Checkpoint.commitWithData(
+      (0 until 3).foreach(r => Checkpoint.commitWithData(
         ExtractPipeline.run(pages.where(docId % 3 === r)), outDir))
-      Checkpoint.commit(ExtractPipeline.run(pages.where(docId % 3 === 2)), outDir)
       val committed = Checkpoint.manifests(spark, outDir)
-      assert(committed.count(_.dataBatch.isEmpty) == 1 && committed.size == 3)
+      assert(committed.size == 3)
       committed.foreach(m => assert(codecs(m.files) == Set("ZSTD"), m.name))
       assert(Checkpoint.compact(spark, outDir).isDefined)
-      val compacted = Checkpoint.manifests(spark, outDir).filter(_.dataBatch.isDefined)
+      val compacted = Checkpoint.manifests(spark, outDir)
       assert(compacted.size == 1)
       assert(codecs(compacted.head.files) == Set("ZSTD"))
     }
@@ -332,7 +323,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         "every url of both batches exactly once")
       assert(Checkpoint.resume(pages, outDir).count() == 0, "resume skips both batches' urls")
       assert(Checkpoint.compact(spark, outDir).isDefined)
-      val batches = Checkpoint.manifests(spark, outDir).filter(_.dataBatch.isDefined)
+      val batches = Checkpoint.manifests(spark, outDir)
       assert(batches.size == 1)
       assert(content() == before, "compaction must not change table content")
       assert(codecs(batches.head.files) == Set("ZSTD"))
@@ -400,7 +391,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("query inventory: every query has an oracle and the count is pinned") {
     // the README/NOTES quote this number; pinning it here keeps the prose
     // from drifting (r4 verdict item 7). Update BOTH on every new query.
-    assert(SparkEntry.queries.size == 15,
+    assert(SparkEntry.queries.size == 14,
       s"queries=${SparkEntry.queries.size} — update this pin AND README.md")
     assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet,
       "every query needs a DuckDB oracle (and no orphaned oracles): " +
@@ -424,40 +415,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       graft.pipeline.Recrawl.delta(prev, next, "url", "fp"), "url")
       .select("url").as[String].collect().toSet
     assert(work == Set("u2", "u3", "u5"))
-  }
-
-  test("snapshot time travel: readExtractedAsOf sees exactly the batches committed by then") {
-    import spark.implicits._
-    withTempDir("graft_spec_tt") { outDir =>
-      def pages(lo: Long, hi: Long) =
-        (lo until hi).map(i => Corpus.pageRowFor(i, s"time travel doc $i", "en")).toDS()
-      def commitRange(lo: Long, hi: Long): Unit = {
-        Checkpoint.commitWithData(ExtractPipeline.run(pages(lo, hi)), outDir)
-        Thread.sleep(20) // distinct manifest mtimes on a coarse-granularity fs
-      }
-      commitRange(0, 3); commitRange(3, 7); commitRange(7, 12)
-      // a manifest-ONLY commit (no data batch) must not break as-of reads
-      val extra = Seq(Corpus.pageRowFor(100L, "manifest only doc", "en")).toDS()
-      Checkpoint.commit(ExtractPipeline.run(extra), outDir)
-      val snaps = Checkpoint.snapshots(spark, outDir)
-      assert(snaps.length == 4)
-      assert(snaps.map(_.commitMs).sliding(2).forall(p => p.head <= p.last))
-      assert(Checkpoint.readExtractedAsOf(spark, outDir, snaps(0).commitMs).count() == 3)
-      assert(Checkpoint.readExtractedAsOf(spark, outDir, snaps(1).commitMs).count() == 7)
-      assert(Checkpoint.readExtractedAsOf(spark, outDir, snaps(2).commitMs).count() == 12)
-      assert(Checkpoint.readExtractedAsOf(spark, outDir, snaps(3).commitMs).count() == 12)
-      assert(Checkpoint.readExtractedAsOf(spark, outDir, snaps(0).commitMs - 1).count() == 0)
-      // as-of the newest snapshot == the current table
-      val table = Checkpoint.readExtracted(spark, outDir)
-      assert(table.count() == 12 && table.select("url").distinct().count() == 12)
-      // every data commit's urls are done, the manifest-only commit's too
-      assert(Checkpoint.resume(pages(0, 15).union(extra), outDir)
-        .map(_.url).collect().toSet == (12L until 15L).map(Corpus.UrlPrefix + _).toSet)
-      val m = Checkpoint.metrics(spark, outDir).collect().head
-      assert(m.getAs[Long]("docs_done") == 13)
-      assert(m.getAs[Long]("total_chars") ==
-        table.agg(sum("n_chars")).head.getLong(0) + ExtractPipeline.run(extra).head.n_chars)
-    }
   }
 
   test("table-format seam: commit + crash-orphan + resume round-trips under ORC") {
@@ -539,17 +496,17 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       oldDocs.select(col("url"), col("n_chars"), col("decode_failures"),
           spark_partition_id().as("part_id"), lit(old).as("batch"))
         .write.parquet(s"${Checkpoint.manifestPath(outDir)}/$old")
-      assert(Checkpoint.snapshots(spark, outDir).isEmpty)
+      assert(Checkpoint.manifests(spark, outDir).isEmpty)
       assert(Checkpoint.resume(pages, outDir).count() == 6)
       assert(Checkpoint.readExtracted(spark, outDir).count() == 0)
-      // the first real commit is the only snapshot, and the flat file and the
+      // the first real commit is the only manifest, and the flat file and the
       // parquet-row batch stay out: each url is visible exactly once
       Checkpoint.commitWithData(ExtractPipeline.run(pages), outDir)
-      assert(Checkpoint.snapshots(spark, outDir).map(_.name.startsWith("batch_")) == Seq(true))
-      assert(!Checkpoint.snapshots(spark, outDir).exists(_.name == old))
+      assert(Checkpoint.manifests(spark, outDir).map(_.name.startsWith("batch_")) == Seq(true))
+      assert(!Checkpoint.manifests(spark, outDir).exists(_.name == old))
       assert(Checkpoint.readExtracted(spark, outDir).count() == 6)
       assert(Checkpoint.readExtracted(spark, outDir).select("url").distinct().count() == 6)
-      assert(Checkpoint.metrics(spark, outDir).collect().head.getAs[Long]("docs_done") == 6)
+      assert(Checkpoint.manifests(spark, outDir).map(_.stats.docs).sum == 6)
     }
   }
 
@@ -618,35 +575,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       // with a row group for each of the 4 cores, the scan splits are kept
       val four = table(4, "four")
       assert(ExtractPipeline.spread(four, four) eq four)
-    }
-  }
-
-  test("streaming extraction (readStream -> mapPartitions -> sink) matches batch") {
-    import spark.implicits._
-    withTempDir("graft_stream_pages") { dir =>
-      val texts = (0L until 30L).map(i => i -> s"streaming corpus document $i with words")
-      texts.map { case (id, t) => Corpus.pageRowFor(id, t, "en") }.toDS()
-        .write.mode("overwrite").parquet(s"$dir/in")
-      val batch = ExtractPipeline.run(
-          spark.read.parquet(s"$dir/in").as[PageRow](org.apache.spark.sql.Encoders.product[PageRow]))
-        .select("url", "kind", "text").orderBy("url").collect()
-
-      val streamIn = spark.readStream
-        .schema(spark.read.parquet(s"$dir/in").schema)
-        .parquet(s"$dir/in")
-        .as[PageRow](org.apache.spark.sql.Encoders.product[PageRow])
-      val q = ExtractPipeline.run(streamIn)
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName("graft_extract_stream")
-        .option("checkpointLocation", s"$dir/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination(120000)
-      val streamed = spark.sql("SELECT url, kind, text FROM graft_extract_stream")
-        .orderBy("url").collect()
-      assert(streamed.toSeq == batch.toSeq)
     }
   }
 }

@@ -61,7 +61,7 @@ class TaskWriteSpec extends AnyFunSuite with BeforeAndAfterAll {
       // attempt's file is neither visible nor left behind
       val Seq(m) = Checkpoint.manifests(spark, outDir)
       val listed = m.files.map(f => new File(f).getName).toSet
-      val batchDir = new File(Checkpoint.dataPath(outDir), m.dataBatch.get)
+      val batchDir = new File(Checkpoint.dataPath(outDir), m.dataBatch)
       val data = batchDir.list.filterNot(_.endsWith(".crc")).toSet
       assert(listed.size == 2 && data == listed, data)
     }
