@@ -416,6 +416,14 @@ final class PdfTokeniser(
       }
     }
 
+    // /ID's string is not kept either, but iterating it resolves indirect
+    // elements, which loads objects and can throw (not caught, as in the
+    // reference)
+    trailerEntries.get("ID").foreach {
+      case a: ArrTok => a.iterator.foreach(_ => ())
+      case _         =>
+    }
+
     trailerEntries.get("Encrypt").foreach { enc =>
       setupEncryption(enc.asInstanceOf[DictTok])
       isStringNeedsDecryption = true

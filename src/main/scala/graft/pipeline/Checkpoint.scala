@@ -234,7 +234,8 @@ object Checkpoint {
       val dir = st.getPath
       val in = fs.open(new Path(dir, ManifestFile))
       val m = try json.readTree(in) finally in.close()
-      val batch = m.get("batch").asText
+      val batch = Option(m.get("batch")).map(_.asText).getOrElse(throw new IllegalStateException(
+        s"manifest $dir has no data batch (manifest-only commits are no longer supported)"))
       val base = new Path(dataPath(outDir), batch)
       val files = m.get("files").elements.asScala.map(f => new Path(base, f.asText).toString).toSeq
       Manifest(dir.getName, batch, m.get("format").asText, files, CommitStats(m.get("docs").asLong,

@@ -496,15 +496,13 @@ object Corpus {
   /** Variant 4: PDF 1.5 cross-reference STREAM layout — content streams as
     * type-1 objects, the whole page graph + /Info packed into one
     * FlateDecode object stream (type-2 entries), xref stream with the
-    * PNG-Up predictor — S5 + S10 + S11 in the driver gate. `predictor` is
-    * [[GoldenGen.finishXrefStream]]'s; tests build refused-predictor files
-    * with it. */
-  def pdfXrefStreamFromText(text: String, predictor: String = "up"): Array[Byte] = {
+    * PNG-Up predictor — S5 + S10 + S11 in the driver gate. */
+  def pdfXrefStreamFromText(text: String): Array[Byte] = {
     val b = new GoldenGen.PdfBuilder("1.5")
     val contentIds = rotatingShowContents(b, text)
     val metaId = addMetadata(b, text) // a stream: type-1 object, not in the ObjStm
     GoldenGen.finishXrefStream(b, contentIds, infoContent(text),
-      metadataId = Some(metaId), trailerId = Some(docIdHex(text)), predictor = predictor)
+      metadataId = Some(metaId), trailerId = Some(docIdHex(text)))
   }
 
   /** Variant 6: TWO incremental updates (a three-section /Prev chain). The

@@ -243,10 +243,10 @@ class PdfExtractSpec extends AnyFunSuite {
     assert(r.error.contains("ArrayIndexOutOfBoundsException: ") && r.decodeFailures == 1, r.error)
   }
 
-  test("trailer /Info walk: resolving its values still decides the row, as in the reference") {
-    // xref entries 4 and 5 share one offset. /Info resolves 4 first, so the
-    // page's /Contents 5 parses "4 0 obj" a second time: the reference's
-    // duplicate-object error. Without the walk the page would read "hello".
+  /** A one-page file whose xref entries 4 and 5 share one offset: the
+    * page's /Contents 5 parses "4 0 obj" a second time if something else
+    * resolved 4 first. `trailerRefs` goes into the trailer. */
+  private def sharedOffsetPdf(trailerRefs: String): Array[Byte] = {
     val sb = new StringBuilder("%PDF-1.4\n")
     val offs = scala.collection.mutable.Map.empty[Int, Int]
     def obj(id: Int, body: String): Unit = {
@@ -262,8 +262,22 @@ class PdfExtractSpec extends AnyFunSuite {
     val xref = sb.length
     sb.append("xref\n0 7\n0000000000 65535 f \n")
     (1 to 6).foreach(i => sb.append(f"${offs(i)}%010d 00000 n \n"))
-    sb.append(s"trailer<</Size 7/Root 1 0 R/Info 6 0 R>>\nstartxref\n$xref\n%%EOF\n")
-    val r = PdfExtract.extract(sb.toString.getBytes("ISO-8859-1"))
+    sb.append(s"trailer<</Size 7/Root 1 0 R$trailerRefs>>\nstartxref\n$xref\n%%EOF\n")
+    sb.toString.getBytes("ISO-8859-1")
+  }
+
+  test("trailer /Info walk: resolving its values still decides the row, as in the reference") {
+    // /Info resolves 4 first: the reference's duplicate-object error.
+    // Without the walk the page would read "hello".
+    val plain = PdfExtract.extract(sharedOffsetPdf(""))
+    assert(plain.error.isEmpty && plain.text.startsWith("hello"), plain.error)
+    val r = PdfExtract.extract(sharedOffsetPdf("/Info 6 0 R"))
+    assert(r.text == "" && r.decodeFailures == 1, r.text)
+    assert(r.error.exists(_.startsWith("IllegalStateException: object 4 0 defined twice")), r.error)
+  }
+
+  test("trailer /ID: resolving its indirect elements still decides the row, as in the reference") {
+    val r = PdfExtract.extract(sharedOffsetPdf("/ID[4 0 R 4 0 R]"))
     assert(r.text == "" && r.decodeFailures == 1, r.text)
     assert(r.error.exists(_.startsWith("IllegalStateException: object 4 0 defined twice")), r.error)
   }

@@ -510,6 +510,19 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("a manifest that names no data batch fails reading with a clear error") {
+    withTempDir("graft_spec_nobatch") { outDir =>
+      // a manifest-only commit, as an earlier build could write one: a file
+      // list with no "batch"
+      val manDir = new java.io.File(s"${Checkpoint.manifestPath(outDir)}/batch_nodata")
+      assert(manDir.mkdirs())
+      java.nio.file.Files.writeString(new java.io.File(manDir, Checkpoint.ManifestFile).toPath,
+        """{"format":"parquet","files":[],"docs":0,"chars":0,"decode_failures":0,"pdf_docs":0}""")
+      val e = intercept[IllegalStateException](Checkpoint.manifests(spark, outDir))
+      assert(e.getMessage.contains("batch_nodata has no data batch"), e.getMessage)
+    }
+  }
+
   test("captureLines: pdf span source lines match the reference's CR/LF/CRLF rules") {
     import spark.implicits._
     val t = ("alpha beta gamma delta " * 40).trim // multi-page pdf (even id)

@@ -1,7 +1,6 @@
 package graft.fixtures
 
 import graft.pdf.{ObjectId, PdfCrypto}
-import graft.pipeline.Corpus
 import graft.pipeline.Corpus.{EncDocIdHex, EncPermission, finishClassic, hexOf,
   rotatingOpsPerPage, rotatingShowContents}
 import java.io.ByteArrayOutputStream
@@ -9,7 +8,7 @@ import java.nio.charset.StandardCharsets.ISO_8859_1
 import java.security.MessageDigest
 
 /** PDF builders that only tests use, on top of [[GoldenGen]] and
-  * [[Corpus]]'s chunk/page contract. The reader decodes only
+  * [[graft.pipeline.Corpus]]'s chunk/page contract. The reader decodes only
   * None/FlateDecode streams and decrypts only the RC4 standard handler
   * (V 1|2, R 2|3), like the reference. These writers build the fixtures
   * that pin its error rows for everything else: the LZW / ASCIIHex /
@@ -358,8 +357,8 @@ object TestPdfs {
     b.finish(s"/Root $catalog 0 R/Encrypt $encId 0 R/ID[<$AesDocIdHex><$AesDocIdHex>]")
   }
 
-  /** R3 owner-only twin of [[Corpus.pdfOwnerOnlyFromText]]: V 2/R 3/Length 40, /O
-    * from the FULL Algorithm 3 chain (50×MD5 owner key + 20-key RC4), user
+  /** R3 owner-only twin of [[graft.pipeline.Corpus.pdfOwnerOnlyFromText]]:
+    * V 2/R 3/Length 40, /O from the FULL Algorithm 3 chain (50×MD5 owner key + 20-key RC4), user
     * password "graftuser" never handed to the caller — only an Algorithm 7
     * owner path (password [[OwnerPassword]]) could open it, which the
     * reference and the reader do not implement. */
@@ -692,6 +691,13 @@ object TestPdfs {
       case 1 => "tiff"
       case _ => "none"
     }
-    Corpus.pdfXrefStreamFromText(text, predictor = mode)
+    // variant 4's objects, built here: the product builder has no
+    // predictor choice
+    val b = new GoldenGen.PdfBuilder("1.5")
+    val contentIds = rotatingShowContents(b, text)
+    val metaId = b.addStream("/Type/Metadata/Subtype/XML",
+      s"""<graft:meta len="${text.length}"/>""".getBytes(ISO_8859_1))
+    GoldenGen.finishXrefStream(b, contentIds, s"<</Title (doc-${text.length})/Producer (graft)>>",
+      metadataId = Some(metaId), trailerId = Some(f"${text.length}%032x"), predictor = mode)
   }
 }
