@@ -42,26 +42,20 @@ object Explain {
     val tmp = Files.createTempDirectory("graft_explain").toString
     try {
       Corpus.pages(spark, sfDir).limit(50).repartition(4).write.mode("overwrite").parquet(s"$tmp/pages")
-      val pagesTable = spark.read.parquet(s"$tmp/pages")
-        .as[graft.pipeline.PageRow](org.apache.spark.sql.Encoders.product[graft.pipeline.PageRow])
       // what a fresh submit hands its write tasks, as Main composes it: the
       // table has a row group per core, so spread keeps it on the scan
       // splits; each task then extracts and writes its split
       val submitPages = TableIO.readPages(spark, s"$tmp/pages")
       dump("submit_write input (Main: scan -> resume -> spread -> url/html/lang; extraction runs in the write task)",
-        ExtractPipeline.extractRows(ExtractPipeline.spread(
+        ExtractPipeline.run(ExtractPipeline.spread(
           Checkpoint.resume(submitPages, s"$tmp/submit_out"), submitPages), "").input)
-      dump("extract_pipeline (scan -> mapPartitions -> agg)",
-        ExtractPipeline.run(pagesTable, "").groupBy("kind")
-          .agg(count(lit(1)), sum("n_chars")).queryExecution)
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      dump("pdf_spans (span explode is a Generate fused after the extract map — no extra exchange)", {
+      dump("pdf_spans input (the span probe's rows, pruned to url/html/lang; the gate explodes the spans of the committed table)", {
         import spark.implicits._
         val probe = docs.where(length(col("text")) > 0)
           .select("doc_id", "text", "lang").as[(Long, String, String)]
           .map { case (id, t, lang) => Corpus.spanProbePageRowFor(id, t, lang) }
-        ExtractPipeline.run(probe, delimiter = "").toDF()
-          .select(col("url"), posexplode(col("spans"))).queryExecution
+        ExtractPipeline.run(probe, delimiter = "", captureLines = true).input
       })
       dump("crawl_delta (ONE full-outer SortMergeJoin on url; presence flags are literals, no extra pass)", {
         val url = concat(lit(Corpus.UrlPrefix), col("doc_id"))

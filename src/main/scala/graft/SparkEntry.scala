@@ -21,19 +21,41 @@ object SparkEntry {
   private def docIdFromUrl: Column =
     element_at(split(col("url"), "/"), -1).cast("long").as("doc_id")
 
-  private def extracted(s: SparkSession, dir: String): DataFrame =
-    ExtractPipeline.run(Corpus.pagesCached(s, dir), delimiter = "").toDF()
+  /** The gate `name`'s own scratch output directory under
+    * `java.io.tmpdir`, emptied first so the gate is idempotent. The gate's
+    * result reads it lazily, so it is deleted only when the JVM exits. */
+  private def scratchOut(s: SparkSession, dir: String, name: String): String = {
+    val outDir = s"${sys.props("java.io.tmpdir")}/graft_${name}_${Integer.toHexString(dir.hashCode)}"
+    val p = new org.apache.hadoop.fs.Path(outDir)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    fs.delete(p, true)
+    fs.mkdirs(p)
+    fs.deleteOnExit(p) // registers only a path that exists
+    outDir
+  }
+
+  /** `rows` read the way a user of the library reads extraction: committed
+    * to the gate's scratch output and read back from the table. */
+  private def committed(s: SparkSession, dir: String, name: String,
+      rows: Checkpoint.Rows): DataFrame = {
+    val outDir = scratchOut(s, dir, name)
+    Checkpoint.commitWithData(rows, outDir)
+    Checkpoint.readExtracted(s, outDir)
+  }
+
+  private def extracted(s: SparkSession, dir: String, name: String): DataFrame =
+    committed(s, dir, name, ExtractPipeline.run(Corpus.pagesCached(s, dir), delimiter = ""))
 
   /** Flagship: the full mixed PDF+HTML extraction pipeline on sf=0.001. */
   def entry(spark: SparkSession): DataFrame =
-    extracted(spark, "/root/testdata/sf0.001")
+    extracted(spark, "/root/testdata/sf0.001", "entry")
       .select(col("url"), col("kind"), col("text"), col("pages"),
         col("n_chars"), col("decode_failures"))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ------------------------------------------------ extraction pipeline
     "pdf_extract_roundtrip" -> ((s, dir) => {
-      extracted(s, dir).where(col("kind") === "pdf")
+      extracted(s, dir, "pdf_extract_roundtrip").where(col("kind") === "pdf")
         .select(docIdFromUrl, col("text"))
         .orderBy("doc_id")
     }),
@@ -51,7 +73,7 @@ object SparkEntry {
       // the span's source offset) is also closed-form — the probe has
       // exactly 5 newlines per object and 4 before payload 0, and its
       // streams are UNCOMPRESSED, so no pseudorandom 0x0A bytes shift lines
-      ExtractPipeline.run(pages, delimiter = "", captureLines = true).toDF()
+      committed(s, dir, "pdf_spans", ExtractPipeline.run(pages, delimiter = "", captureLines = true))
         .select(docIdFromUrl, posexplode(col("spans")))
         .select(col("doc_id"), col("pos").cast("long").as("span_idx"),
           col("col.start").cast("long").as("start_pos"),
@@ -73,7 +95,7 @@ object SparkEntry {
         .where(length(trim(col("text"))) > 0 && !col("text").rlike("[&<>]"))
         .select("doc_id", "text", "lang").as[(Long, String, String)]
         .map { case (id, t, lang) => Corpus.htmlSpanProbePageRowFor(id, t, lang) }
-      ExtractPipeline.run(pages, delimiter = "", captureLines = true).toDF()
+      committed(s, dir, "html_spans", ExtractPipeline.run(pages, delimiter = "", captureLines = true))
         .select(docIdFromUrl, posexplode(col("spans")))
         .select(col("doc_id"), col("pos").cast("long").as("span_idx"),
           col("col.start").cast("long").as("start_pos"),
@@ -84,7 +106,7 @@ object SparkEntry {
         .orderBy("doc_id", "span_idx")
     }),
     "html_extract_roundtrip" -> ((s, dir) => {
-      extracted(s, dir).where(col("kind") === "html")
+      extracted(s, dir, "html_extract_roundtrip").where(col("kind") === "html")
         .select(docIdFromUrl, col("title"), col("text"))
         .orderBy("doc_id")
     }),
@@ -129,7 +151,7 @@ object SparkEntry {
       val pages = docs(s, dir).select("doc_id", "text", "lang")
         .as[(Long, String, String)]
         .map { case (id, t, lang) => Corpus.layoutPageRowFor(id, t, lang) }
-      ExtractPipeline.run(pages, delimiter = "").toDF()
+      committed(s, dir, "html_layout_roundtrip", ExtractPipeline.run(pages, delimiter = ""))
         .select(docIdFromUrl, col("text"))
         .orderBy("doc_id")
     }),
@@ -137,13 +159,14 @@ object SparkEntry {
       // the reference's DEFAULT ContentDelimiter "|" (PdfParser.cs:83):
       // every show-op appends decoded+"|", reconstructable in SQL as
       // 64-char re-chunking of the source text
-      ExtractPipeline.run(Corpus.pagesCached(s, dir), delimiter = "|").toDF()
+      committed(s, dir, "pdf_extract_delim_roundtrip",
+        ExtractPipeline.run(Corpus.pagesCached(s, dir), delimiter = "|"))
         .where(col("kind") === "pdf")
         .select(docIdFromUrl, col("text"))
         .orderBy("doc_id")
     }),
     "extract_pipeline_mixed" -> ((s, dir) => {
-      extracted(s, dir)
+      extracted(s, dir, "extract_pipeline_mixed")
         .select(docIdFromUrl, col("kind"),
           col("n_chars").cast("long").as("n_chars"),
           col("pages").cast("long").as("pages"),
@@ -152,7 +175,7 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
     "extract_metrics_by_lang" -> ((s, dir) => {
-      extracted(s, dir)
+      extracted(s, dir, "extract_metrics_by_lang")
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_chars").cast("long")).as("total_chars"),
@@ -160,13 +183,8 @@ object SparkEntry {
         .orderBy("lang")
     }),
     "resume_after_checkpoint" -> ((s, dir) => {
-      import org.apache.spark.sql.SaveMode
       val pages = Corpus.pagesCached(s, dir)
-      val outDir = s"${sys.props("java.io.tmpdir")}/graft_ckpt_${Integer.toHexString(dir.hashCode)}"
-      // reset any previous run so the query is idempotent
-      val p = new org.apache.hadoop.fs.Path(outDir)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+      val outDir = scratchOut(s, dir, "ckpt")
       // first run "completed" every doc_id % 7 == 0
       val firstBatch = ExtractPipeline.run(
         pages.where(element_at(split(col("url"), "/"), -1).cast("long") % 7 === 0),
@@ -174,7 +192,7 @@ object SparkEntry {
       Checkpoint.commitWithData(firstBatch, outDir)
       // resume: left-anti join against the manifest, extract the remainder
       val remaining = Checkpoint.resume(pages, outDir)
-      ExtractPipeline.run(remaining, delimiter = "").toDF()
+      committed(s, dir, "ckpt_rest", ExtractPipeline.run(remaining, delimiter = ""))
         .select(docIdFromUrl, col("n_chars").cast("long").as("n_chars"))
         .orderBy("doc_id")
     }),
@@ -183,10 +201,7 @@ object SparkEntry {
       // batch; the oracle asserts content identity after the rewrite (the
       // batch-count / resume-to-zero structure is unit-pinned)
       val pages = Corpus.pagesCached(s, dir)
-      val outDir = s"${sys.props("java.io.tmpdir")}/graft_compact_${Integer.toHexString(dir.hashCode)}"
-      val p = new org.apache.hadoop.fs.Path(outDir)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+      val outDir = scratchOut(s, dir, "compact")
       val docId = element_at(split(col("url"), "/"), -1).cast("long")
       (0 until 3).foreach { r =>
         Checkpoint.commitWithData(

@@ -10,9 +10,12 @@ import scala.collection.mutable
   * Unlike the reference's fixed 200 KB inflate buffer (which throws on
   * overflow, Tokeniser.cs:1836-1837) the buffer grows geometrically up to
   * `maxInflateBytes`; past the cap a [[PdfStreamException]] is raised and the
-  * document becomes an error row instead of killing the executor.
+  * document becomes an error row instead of killing the executor. A grown
+  * buffer lasts one document: the next [[PdfTokeniser]] puts it back to
+  * `initialInflate` bytes, so one large stream does not pin up to
+  * `maxInflateBytes` for the rest of the partition.
   */
-final class WorkBuffers(initialInflate: Int = 200_000, val maxInflateBytes: Int = 1 << 26) {
+final class WorkBuffers(val initialInflate: Int = 200_000, val maxInflateBytes: Int = 1 << 26) {
   var inflateBuf: Array[Byte] = new Array[Byte](initialInflate)
   val sb: StringBuilder = new StringBuilder
   /** Document-level extracted-text accumulator: show-op text appends here
@@ -121,6 +124,8 @@ final class PdfTokeniser(
     buffers.docTextSb.setLength(0)
     buffers.docTextSb
   }
+  if (buffers.inflateBuf.length > buffers.initialInflate)
+    buffers.inflateBuf = new Array[Byte](buffers.initialInflate)
   private[pdf] val xref = new XRefTable(this)
   private val trailerDictionaries = mutable.ArrayBuffer.empty[DictTok]
   val trailerEntries: mutable.LinkedHashMap[String, PdfTok] = mutable.LinkedHashMap.empty

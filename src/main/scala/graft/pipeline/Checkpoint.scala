@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
 import org.apache.spark.sql.execution.datasources.{DataSource, FileFormat}
@@ -47,8 +47,8 @@ import scala.jdk.CollectionConverters._
   *    not at-least-once;
   *  - resume is a left-anti join of the input against those urls, so a
   *    re-submitted 10^12-row job re-reads only undone work;
-  *  - data files are zstd parquet, whether a commit ([[commitWithData]],
-  *    [[commitRows]]) or [[compact]] writes them. Batches committed as
+  *  - data files are zstd parquet, whether a commit ([[commitWithData]])
+  *    or [[compact]] writes them. Batches committed as
   *    snappy parquet before zstd stay readable and resumable, since every
   *    reader takes the codec from the file footer, and the next
   *    [[compact]] rewrites them as zstd.
@@ -91,11 +91,10 @@ object Checkpoint {
       files: Seq[String], stats: CommitStats)
 
   /** What a commit writes: each write task reads its partition of the
-    * plan `input` and turns it into rows of `schema` with `perTask`. */
+    * plan `input` and turns it into rows of `schema` with `perTask`.
+    * [[ExtractPipeline.run]] builds them. */
   final case class Rows(input: QueryExecution, schema: StructType,
       perTask: Iterator[InternalRow] => Iterator[InternalRow] = identity)
-
-  private def rowsOf(df: Dataset[_]): Rows = Rows(df.queryExecution, df.schema)
 
   /** One task's data file: the hidden, attempt-unique name it was written
     * under, the name the driver publishes it as, and its counts. */
@@ -117,6 +116,8 @@ object Checkpoint {
       .getConstructor().newInstance() match {
         case v2: FileDataSourceV2 => v2.fallbackFileFormat.getConstructor().newInstance()
         case v1: FileFormat => v1
+        case _ => throw new IllegalArgumentException(s"spark.graft.table.format=$format is not " +
+          "a file format; the output table is written as data files, so it needs one (parquet, orc, ...)")
       }
     val schema = rows.schema
     val Seq(kind, nChars, decodeFailures) =
@@ -197,13 +198,9 @@ object Checkpoint {
     * manifest names exactly the files the winning attempts wrote, even for
     * a nondeterministic upstream — and no second job runs. Then the data
     * dir is renamed into place and the manifest after it — the commit
-    * point. Returns the counts. */
-  def commitWithData(done: Dataset[ExtractedDoc], outDir: String): CommitStats =
-    commitRows(rowsOf(done), outDir)
-
-  /** [[commitWithData]] for rows that reach the writer without an encoder,
-    * as [[ExtractPipeline.extractRows]] builds them. */
-  def commitRows(rows: Rows, outDir: String): CommitStats = {
+    * point. Returns the counts. This is the one commit entry: `rows` are
+    * what [[ExtractPipeline.run]] builds. */
+  def commitWithData(rows: Rows, outDir: String): CommitStats = {
     val spark = rows.input.sparkSession
     val batch = newBatchId()
     val dataStaging = s"${dataPath(outDir)}/.staging_$batch"
@@ -285,7 +282,7 @@ object Checkpoint {
     if (batches.isEmpty)
       // schema-carrying empty table, so .select("url")/.as[ExtractedDoc]
       // work on a fresh outDir
-      spark.emptyDataset(Encoders.product[ExtractedDoc]).toDF()
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), ExtractPipeline.DocSchema)
     else spark.read.format(TableIO.format(spark))
       .load(batches.map(b => s"${dataPath(outDir)}/$b"): _*)
   }
@@ -416,7 +413,7 @@ object Checkpoint {
         if (nFiles < source.rdd.getNumPartitions) source.coalesce(nFiles)
         else if (nFiles > source.rdd.getNumPartitions) source.repartition(nFiles)
         else source
-      val (files, stats) = write(rowsOf(sized), format, dataStaging)
+      val (files, stats) = write(Rows(sized.queryExecution, sized.schema), format, dataStaging)
       writeManifest(fs, new Path(manStaging), batch, format, files, stats)
       publish(spark, dataStaging, s"${dataPath(outDir)}/$batch") // step 2
       mans.foreach(m => fs.delete(new Path(manifestPath(outDir), m.name), true)) // step 3

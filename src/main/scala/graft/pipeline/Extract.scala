@@ -10,14 +10,14 @@ import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.{col, xxhash64}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The extraction pipeline: classify each page payload (PDF header sniff per
   * Tokeniser.cs:180-209 vs everything-else-is-HTML), route to the matching
-  * per-row pure extractor inside ONE `mapPartitions`, and emit typed output
-  * rows with captured errors and span offsets.
+  * per-row pure extractor inside each write task of the commit, and emit
+  * output rows of [[DocSchema]] with captured errors and span offsets.
   *
   * Scale design (100 TB / 1000 executors):
   *  - the transform is a narrow map straight off the scan splits — zero
@@ -35,10 +35,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *    Inflater/StringBuilder/work buffer per partition, not per row;
   *  - only (url, html, lang) reach the transform so the scan prunes the
   *    wide text column;
-  *  - `Main` runs the transform inside the commit's write tasks
-  *    ([[extractRows]]), on the scan's rows and with hand-built output
-  *    rows, so no encoder code is generated; [[run]] is the typed Dataset
-  *    form of the same transform.
+  *  - the transform ([[run]]) runs inside the commit's write tasks, on
+  *    the scan's rows and with hand-built output rows, so no encoder code
+  *    is generated. It is the one extraction path: `Main`, the gates, the
+  *    tests and the benchmarks all commit its rows and read them back.
   */
 object ExtractPipeline {
 
@@ -75,8 +75,8 @@ object ExtractPipeline {
     }
   }
 
-  /** `ExtractedDoc`'s schema, as its product encoder derives it; the rows
-    * [[toRow]] builds have it. */
+  /** `ExtractedDoc`'s schema, as its product encoder would derive it: the
+    * schema of the rows [[toRow]] builds and of the committed table. */
   val DocSchema: StructType = {
     def int(name: String) = StructField(name, IntegerType, nullable = false)
     val span = StructType(Seq(int("start"), int("end"), int("src_offset"),
@@ -99,34 +99,21 @@ object ExtractPipeline {
       utf8(d.lang), d.html_bytes))
   }
 
-  /** The encoder-free extraction that `Main` commits: the plan of `pages`'
-    * (url, html, lang), and per write task [[extractOne]] over its rows,
-    * each turned into a [[DocSchema]] row by [[toRow]]. Neither an
-    * `ExtractInput` deserializer nor an `ExtractedDoc` serializer is
-    * generated, so a submit compiles only its scan. */
-  def extractRows(pages: Dataset[PageRow], delimiter: String = ""): Checkpoint.Rows =
+  /** The extraction transform: the plan of `pages`' (url, html, lang), and
+    * per write task [[extractOne]] over its rows, each turned into a
+    * [[DocSchema]] row by [[toRow]]. The rows exist only inside the tasks
+    * of the [[Checkpoint.commitWithData]] that writes them; read them back
+    * with [[Checkpoint.readExtracted]]. Neither a deserializer of the input
+    * nor an `ExtractedDoc` serializer is generated, so a submit compiles
+    * only its scan. */
+  def run(pages: Dataset[PageRow], delimiter: String = "",
+      captureLines: Boolean = false): Checkpoint.Rows =
     Checkpoint.Rows(pages.select("url", "html", "lang").queryExecution, DocSchema, { it =>
       val buffers = new WorkBuffers()
       def str(s: UTF8String) = if (s == null) null else s.toString
       it.map(r => toRow(extractOne(str(r.getUTF8String(0)), r.getBinary(1),
-        str(r.getUTF8String(2)), delimiter, buffers)))
+        str(r.getUTF8String(2)), delimiter, buffers, captureLines)))
     })
-
-  /** Column-pruned, buffer-reusing extraction transform, as a typed
-    * Dataset: tests, gates and benchmarks read it; `Main` commits the same
-    * rows through [[extractRows]]. */
-  def run(pages: Dataset[PageRow], delimiter: String = "",
-      captureLines: Boolean = false): Dataset[ExtractedDoc] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages
-      .select(col("url"), col("html"), col("lang"))
-      .as[ExtractInput]
-      .mapPartitions { it =>
-        val buffers = new WorkBuffers()
-        it.map(r => extractOne(r.url, r.html, r.lang, delimiter, buffers, captureLines))
-      }
-  }
 
   /** `pages` as extraction should consume them, judged by the parquet
     * table `scanned` they are read from. When `scanned` has at least one row

@@ -23,11 +23,13 @@ import org.apache.spark.sql.functions._
   * Reads the input_hint page table (parquet path or Iceberg-style table
   * path) with the `PageRow` schema given, skips urls already committed
   * under `<outDir>/_manifest` (resume), then extracts and writes the
-  * output table in one pass through [[Checkpoint.commitRows]]: each write
-  * task extracts its scan split ([[ExtractPipeline.extractRows]], no
-  * encoder) and writes the rows to one file. A fresh submit is ONE Spark
-  * job, scan → extract → write in one stage with no shuffle; only an
-  * input with fewer parquet row groups than cores is hash-spread first
+  * output table in one pass through [[Checkpoint.commitWithData]]: each
+  * write task extracts its scan split ([[ExtractPipeline.run]], no
+  * encoder) and writes the rows to one file. This is the library's one
+  * extraction path; anything else that extracts commits the same way and
+  * reads the table back with [[Checkpoint.readExtracted]]. A fresh submit
+  * is ONE Spark job, scan → extract → write in one stage with no shuffle;
+  * only an input with fewer parquet row groups than cores is hash-spread first
   * ([[ExtractPipeline.spread]]). Nothing is cached, the tasks return their
   * files and counts, and the driver publishes the files and writes the
   * checkpoint manifest: the list of those files and the summed counts. It
@@ -120,8 +122,8 @@ object Main {
     // leaves either nothing or an unmanifested (invisible, re-extracted)
     // orphan, never duplicates. A fully-resumed (empty) run commits nothing,
     // so idle re-submissions don't accumulate empty batch directories
-    val m = Checkpoint.commitRows(
-      ExtractPipeline.extractRows(ExtractPipeline.spread(todo, allPages), delimiter), outDir)
+    val m = Checkpoint.commitWithData(
+      ExtractPipeline.run(ExtractPipeline.spread(todo, allPages), delimiter), outDir)
     deltaCached.foreach(_.unpersist())
     val wall = (System.nanoTime() - t0) / 1e9
     println(s"""{"docs":${m.docs},"chars":${m.chars},""" +

@@ -13,12 +13,6 @@ final case class PageRow(
     text: String,
     lang: String)
 
-/** Pruned projection for the heavy transform: only the columns the extractor
-  * needs reach `mapPartitions`, so Catalyst prunes `text`/`warc_ts` at the
-  * parquet scan (ReadSchema shrinks; at 100 TB the `text` column never
-  * leaves the scan). */
-final case class ExtractInput(url: String, html: Array[Byte], lang: String)
-
 /** One extracted character-span: [start,end) in the extracted text plus the
   * source offset of the producing region (content-stream payload offset for
   * PDF, char offset for HTML) — the reference's TextStore line→byte-offset

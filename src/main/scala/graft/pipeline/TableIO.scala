@@ -5,10 +5,14 @@ import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 /** Table access seam: the pipeline reads/writes through this object so the
   * storage format is a configuration, not a code change. In this sandbox the
   * "Iceberg table of Common-Crawl-style pages" is parquet + the Checkpoint
-  * manifest (no Iceberg runtime jar offline — SURVEY.md §7); on a real
-  * deployment set `spark.graft.table.format=iceberg` and the same calls go
-  * through the Iceberg catalog (`format("iceberg")` with a table identifier),
-  * whose snapshot log subsumes the manifest's resume role. */
+  * manifest (no Iceberg runtime jar offline — SURVEY.md §7).
+  * `spark.graft.table.format` must name a FILE format (parquet, orc, …):
+  * the commit's tasks write the output's data files through that format's
+  * own `OutputWriter`, and the manifest lists them. Any other source —
+  * `iceberg`, `jdbc`, `noop` — fails the commit with an
+  * `IllegalArgumentException` before a file is written; an Iceberg
+  * catalog would need its own commit, whose snapshot log would take the
+  * manifest's resume role. */
 object TableIO {
   /** The one lookup of `spark.graft.table.format`: the format of the page
     * table and of the extracted data files. */

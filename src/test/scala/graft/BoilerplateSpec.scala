@@ -1,13 +1,13 @@
 package graft
 
-import graft.fixtures.GoldenGen
+import graft.fixtures.GoldenDocs
 import graft.html.Boilerplate
 import org.scalatest.funsuite.AnyFunSuite
 
 class BoilerplateSpec extends AnyFunSuite {
 
   test("strips nav/aside/footer and keeps main paragraphs + heading") {
-    val (html, expectedBlocks) = GoldenGen.syntheticHtml(seed = 42, paragraphs = 4)
+    val (html, expectedBlocks) = GoldenDocs.syntheticHtml(seed = 42, paragraphs = 4)
     val r = Boilerplate.extract(html)
     assert(r.text == expectedBlocks.mkString("\n"))
     assert(r.title == expectedBlocks.head)
@@ -17,8 +17,8 @@ class BoilerplateSpec extends AnyFunSuite {
   }
 
   test("deterministic per seed") {
-    val a = Boilerplate.extract(GoldenGen.syntheticHtml(7, 3)._1)
-    val b = Boilerplate.extract(GoldenGen.syntheticHtml(7, 3)._1)
+    val a = Boilerplate.extract(GoldenDocs.syntheticHtml(7, 3)._1)
+    val b = Boilerplate.extract(GoldenDocs.syntheticHtml(7, 3)._1)
     assert(a == b)
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.fixtures.{GoldenGen, TestPdfs}
+import graft.fixtures.{GoldenDocs, GoldenGen, TestPdfs}
 import graft.pdf.{PdfExtract, WorkBuffers}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,7 +18,7 @@ class PdfExtractSpec extends AnyFunSuite {
   }
 
   test("minimal hello pdf extracts Td newline + Tj + delimiter") {
-    val r = PdfExtract.extract(GoldenGen.helloPdf())
+    val r = PdfExtract.extract(GoldenDocs.helloPdf())
     assert(r.pages == 1)
     assert(r.text == "\nHello World|")
     // no font resources on the page → the reference logs the missing font
@@ -27,7 +27,7 @@ class PdfExtractSpec extends AnyFunSuite {
   }
 
   test("multiline pdf: Td/TD/T*/Tm newline rules, TJ kerning, quote op, hex, escapes") {
-    val r = PdfExtract.extract(GoldenGen.multilinePdf())
+    val r = PdfExtract.extract(GoldenDocs.multilinePdf())
     assert(r.text == "first|\nsecond|\nkerned|quoted|sameTm|\nmovedTm|Hello|octAal (esc) line\\|")
   }
 
@@ -47,7 +47,7 @@ class PdfExtractSpec extends AnyFunSuite {
   }
 
   test("fonts: Differences overlay + ToUnicode bfchar/bfrange + ligature packing") {
-    val r = PdfExtract.extract(GoldenGen.fontsPdf())
+    val r = PdfExtract.extract(GoldenDocs.fontsPdf())
     // base Standard; Differences: 'D'→B, 'd'→X; ToUnicode: 'A'→B, 'f'→ﬀ,
     // 'a'..'c'→x..z, 'g'→ﬃ (12-digit …69 tail), 'h'→ﬄ (12-digit …6C tail)
     assert(r.text == "Bxﬀy" + "CBX" + "ﬃﬄ" + "|")
@@ -62,56 +62,56 @@ class PdfExtractSpec extends AnyFunSuite {
     // decode failure and extracts with the PARTIAL overlay — bfchars parsed
     // before the throw apply (A→B, f→ﬀ, g→ﬃ), the failing <68> and the
     // never-reached bfrange ('a'..'c'→x..z) do not
-    val bad = PdfExtract.extract(GoldenGen.fontsPdfWithDest("<00660066006c>"))
+    val bad = PdfExtract.extract(GoldenDocs.fontsPdfWithDest("<00660066006c>"))
     assert(bad.decodeFailures == 1, s"failures=${bad.decodeFailures} err=${bad.error}")
     assert(bad.text == "Baﬀb" + "CBX" + "ﬃh" + "|", bad.text)
     // sanity: the same fixture with the uppercase tail is the happy path
-    val good = PdfExtract.extract(GoldenGen.fontsPdfWithDest("<00660066006C>"))
+    val good = PdfExtract.extract(GoldenDocs.fontsPdfWithDest("<00660066006C>"))
     assert(good.decodeFailures == 0 && good.text == "Bxﬀy" + "CBX" + "ﬃﬄ" + "|")
   }
 
   test("MacRoman vs WinAnsi high-byte decoding") {
     // byte 0xD5 is ’ (U+2019) in MacRoman, Õ (U+00D5) in WinAnsi
     val shown = "AÕB" // raw bytes A, 0xD5, B
-    val mac = PdfExtract.extract(GoldenGen.encodedFontPdf("MacRomanEncoding", shown))
-    val win = PdfExtract.extract(GoldenGen.encodedFontPdf("WinAnsiEncoding", shown))
+    val mac = PdfExtract.extract(GoldenDocs.encodedFontPdf("MacRomanEncoding", shown))
+    val win = PdfExtract.extract(GoldenDocs.encodedFontPdf("WinAnsiEncoding", shown))
     assert(mac.text == "A’B|")
     assert(win.text == "AÕB|")
   }
 
   test("xref stream + compressed object stream (type-2 entries)") {
-    val r = PdfExtract.extract(GoldenGen.xrefStreamPdf(predictor = false))
+    val r = PdfExtract.extract(GoldenDocs.xrefStreamPdf(predictor = false))
     assert(r.text == "xref stream works|", r.error.orNull)
     assert(r.pages == 1)
   }
 
   test("xref stream with PNG-Up predictor") {
-    val r = PdfExtract.extract(GoldenGen.xrefStreamPdf(predictor = true))
+    val r = PdfExtract.extract(GoldenDocs.xrefStreamPdf(predictor = true))
     assert(r.text == "xref stream works|", r.error.orNull)
   }
 
   test("hybrid /XRefStm is ignored like the reference: table-freed /Root errors") {
     // the reference treats /XRefStm as trailer bookkeeping, so the hidden
     // /Root stays a free entry -> error row
-    val r = PdfExtract.extract(GoldenGen.hybridXrefPdf("hybrid payload"))
+    val r = PdfExtract.extract(GoldenDocs.hybridXrefPdf("hybrid payload"))
     assert(r.error.isDefined)
     assert(r.text == "")
   }
 
   test("malformed tolerances: junk before header, CR-only EOL, wrong /Length, trailing NULs") {
-    val r = PdfExtract.extract(GoldenGen.malformedPdf())
+    val r = PdfExtract.extract(GoldenDocs.malformedPdf())
     assert(r.text == "tolerant parse|", r.error.orNull)
     // the wrong /Length is recorded as a stream-length problem, not a failure
     assert(r.error.exists(_.contains("does not point to endstream")))
   }
 
   test("RC4-encrypted pdf decrypts with empty user password") {
-    val r = PdfExtract.extract(GoldenGen.encryptedPdf("secret text"))
+    val r = PdfExtract.extract(GoldenDocs.encryptedPdf("secret text"))
     assert(r.text == "secret text|", r.error.orNull)
   }
 
   test("graphics ops: inline images skipped, clip rects parsed, text intact") {
-    val r = PdfExtract.extract(GoldenGen.graphicsPdf())
+    val r = PdfExtract.extract(GoldenDocs.graphicsPdf())
     assert(r.error.isEmpty, r.error)
     assert(r.text == "before|after|")
   }
@@ -136,10 +136,10 @@ class PdfExtractSpec extends AnyFunSuite {
 
   test("buffer reuse across documents leaves no state behind") {
     val buffers = new WorkBuffers()
-    val a1 = PdfExtract.extract(GoldenGen.fontsPdf(), buffers = buffers)
-    val b1 = PdfExtract.extract(GoldenGen.multilinePdf(), buffers = buffers)
-    val a2 = PdfExtract.extract(GoldenGen.fontsPdf(), buffers = buffers)
-    val b2 = PdfExtract.extract(GoldenGen.multilinePdf(), buffers = buffers)
+    val a1 = PdfExtract.extract(GoldenDocs.fontsPdf(), buffers = buffers)
+    val b1 = PdfExtract.extract(GoldenDocs.multilinePdf(), buffers = buffers)
+    val a2 = PdfExtract.extract(GoldenDocs.fontsPdf(), buffers = buffers)
+    val b2 = PdfExtract.extract(GoldenDocs.multilinePdf(), buffers = buffers)
     assert(a1.text == a2.text)
     assert(b1.text == b2.text)
   }
@@ -160,9 +160,23 @@ class PdfExtractSpec extends AnyFunSuite {
     assert(ok.text == "ok|")
   }
 
+  test("inflate buffer: the next document starts from the initial size") {
+    val shown = "word" * 800 // 3200 bytes inflated, past a 1 KB initial buffer
+    val b = new GoldenGen.PdfBuilder()
+    val content = b.addStream("", s"BT ($shown) Tj ET".getBytes("ISO-8859-1"), deflate = true)
+    val big = b.finish(s"/Root ${GoldenGen.catalogFor(b, Seq(content))} 0 R")
+    val buffers = new WorkBuffers(initialInflate = 1024)
+    val first = PdfExtract.extract(big, buffers = buffers)
+    assert(first.text == shown + "|", first.error)
+    assert(buffers.inflateBuf.length > 1024)
+    val second = PdfExtract.extract(GoldenDocs.helloPdf("second"), buffers = buffers)
+    assert(second.text == "\nsecond|", second.error)
+    assert(buffers.inflateBuf.length == 1024)
+  }
+
   test("AES (V4/R4) encryption becomes the reference's structured error row, not an exception") {
     // reference throw site: Tokeniser.cs:635-645 (only Standard RC4 V1-2/R2-3)
-    val r = PdfExtract.extract(GoldenGen.encryptedPdfV4())
+    val r = PdfExtract.extract(GoldenDocs.encryptedPdfV4())
     assert(r.decodeFailures == 1)
     assert(r.error.exists(_.contains("can only decrypt pdf files using Standard encryption")), r.error)
     assert(r.text == "")
@@ -195,8 +209,8 @@ class PdfExtractSpec extends AnyFunSuite {
     // one bad document must never kill a 10^12-row job: every mutation of a
     // valid PDF must come back as a (possibly partial) result or error row
     val rnd = new java.util.Random(20260817L)
-    val bases = Seq(GoldenGen.helloPdf(), GoldenGen.fontsPdf(), GoldenGen.multilinePdf(),
-      GoldenGen.xrefStreamPdf(predictor = true), GoldenGen.encryptedPdf())
+    val bases = Seq(GoldenDocs.helloPdf(), GoldenDocs.fontsPdf(), GoldenDocs.multilinePdf(),
+      GoldenDocs.xrefStreamPdf(predictor = true), GoldenDocs.encryptedPdf())
     val buffers = new WorkBuffers()
     var errorRows = 0
     (1 to 400).foreach { i =>
@@ -299,19 +313,19 @@ class PdfExtractSpec extends AnyFunSuite {
   }
 
   test("isPdf classifier: prefix, embedded header, html") {
-    assert(PdfExtract.isPdf(GoldenGen.helloPdf()))
-    assert(PdfExtract.isPdf(GoldenGen.malformedPdf())) // header after junk
+    assert(PdfExtract.isPdf(GoldenDocs.helloPdf()))
+    assert(PdfExtract.isPdf(GoldenDocs.malformedPdf())) // header after junk
     assert(!PdfExtract.isPdf("<html><body>hi</body></html>".getBytes))
     assert(!PdfExtract.isPdf(Array.emptyByteArray))
   }
 
   test("synthetic multi-page pdf is deterministic and page-count exact") {
-    val r1 = PdfExtract.extract(GoldenGen.syntheticPdf(seed = 7, pages = 5))
-    val r2 = PdfExtract.extract(GoldenGen.syntheticPdf(seed = 7, pages = 5))
+    val r1 = PdfExtract.extract(GoldenDocs.syntheticPdf(seed = 7, pages = 5))
+    val r2 = PdfExtract.extract(GoldenDocs.syntheticPdf(seed = 7, pages = 5))
     assert(r1.pages == 5)
     assert(r1.text == r2.text)
     assert(r1.text.length > 1000)
-    val r3 = PdfExtract.extract(GoldenGen.syntheticPdf(seed = 8, pages = 5))
+    val r3 = PdfExtract.extract(GoldenDocs.syntheticPdf(seed = 8, pages = 5))
     assert(r3.text != r1.text)
   }
 }

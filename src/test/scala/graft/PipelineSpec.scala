@@ -1,7 +1,8 @@
 package graft
 
 import graft.TempDirs.withTempDir
-import graft.pipeline.{Checkpoint, Corpus, ExtractPipeline, PageRow}
+import graft.pdf.WorkBuffers
+import graft.pipeline.{Checkpoint, Corpus, ExtractPipeline, ExtractedDoc, PageRow, TableIO}
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -34,7 +35,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def roundTrip(texts: Seq[(Long, String)]): Unit = {
     import spark.implicits._
     val pages = texts.map { case (id, t) => Corpus.pageRowFor(id, t, "en") }.toDS()
-    val out = ExtractPipeline.run(pages, delimiter = "").collect().map(d => d.url -> d).toMap
+    val out = Extracted(pages).map(d => d.url -> d).toMap
     texts.foreach { case (id, t) =>
       val d = out(Corpus.UrlPrefix + id)
       assert(d.error == "" || id % 2 == 0 && Corpus.pdfVariant(id) == 7,
@@ -72,7 +73,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val t = "z" * 1000 // 16 chunks -> 2 pages
     val pages = Seq(Corpus.pageRowFor(42L, t, "en")).toDS()
-    val d = ExtractPipeline.run(pages, delimiter = "").collect().head
+    val Seq(d) = Extracted(pages)
     assert(d.pages == Corpus.pdfPageCount(t))
     assert(d.pages == 2)
     assert(d.spans.length == 2)
@@ -84,13 +85,13 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val junk = "%PDF-1.4 this is not really a pdf".getBytes("ISO-8859-1")
     val pages = Seq(PageRow("u1", new java.sql.Timestamp(0), junk, "", "en")).toDS()
-    val d = ExtractPipeline.run(pages).collect().head
+    val Seq(d) = Extracted(pages)
     assert(d.decode_failures >= 1)
     assert(d.error.nonEmpty)
     assert(d.kind == "pdf")
   }
 
-  test("extractRows: committed rows equal run's, and its schema is ExtractedDoc's") {
+  test("the committed table equals extractOne on the driver, row by row") {
     import spark.implicits._
     // ids 0..17 hold all 9 pdf layouts (even ids) and html pages (odd ids)
     val corpus = (0L until 18L).map(i => Corpus.pageRowFor(i, s"converter document $i words", "en")) ++ Seq(
@@ -98,22 +99,20 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       PageRow("u/empty", new java.sql.Timestamp(0), Array.emptyByteArray, "", "en"),
       Corpus.pageRowFor(40L, "null lang pdf", null), Corpus.pageRowFor(41L, "null lang html", null))
     val pages = corpus.toDS().repartition(3)
-    assert(ExtractPipeline.DocSchema == org.apache.spark.sql.Encoders.product[graft.pipeline.ExtractedDoc].schema)
-    withTempDir("graft_spec_rows") { dir =>
-      val stats = Checkpoint.commitRows(ExtractPipeline.extractRows(pages), s"$dir/rows")
-      Checkpoint.commitWithData(ExtractPipeline.run(pages), s"$dir/typed")
-      val got = Checkpoint.readExtracted(spark, s"$dir/rows")
-      val want = ExtractPipeline.run(pages).toDF()
-      assert(got.count() == corpus.size && stats.docs == corpus.size)
-      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
-      val kinds = got.groupBy("kind").count().as[(String, Long)].collect().toMap
-      assert(kinds == Map("pdf" -> 11L, "html" -> 10L, "empty" -> 1L), kinds)
-      assert(got.where(col("lang").isNull).count() == 2 && got.where(col("error") =!= "").count() >= 2)
-      // both commits write the same parquet schema, required columns included
-      def fileSchema(out: String) = Checkpoint.manifests(spark, out).head.files.map(f =>
-        ParquetFileReader.readFooter(HadoopInputFile.fromPath(new Path(f), spark.sparkContext.hadoopConfiguration),
-          ParquetMetadataConverter.NO_FILTER).getFileMetaData.getSchema).distinct
-      assert(fileSchema(s"$dir/rows") == fileSchema(s"$dir/typed"))
+    assert(ExtractPipeline.DocSchema == org.apache.spark.sql.Encoders.product[ExtractedDoc].schema)
+    withTempDir("graft_spec_rows") { outDir =>
+      val stats = Checkpoint.commitWithData(ExtractPipeline.run(pages), outDir)
+      val got = Checkpoint.readExtracted(spark, outDir).as[ExtractedDoc].collect()
+      assert(got.length == corpus.size && stats.docs == corpus.size)
+      // each row is what the pure function gives that page alone: state
+      // leaking between the rows that share a task's buffers shows here
+      val byUrl = got.map(d => d.url -> d).toMap
+      corpus.foreach { p =>
+        assert(byUrl(p.url) == ExtractPipeline.extractOne(p.url, p.html, p.lang, "", new WorkBuffers()), p.url)
+      }
+      assert(got.groupBy(_.kind).map { case (k, ds) => k -> ds.length } ==
+        Map("pdf" -> 11, "html" -> 10, "empty" -> 1))
+      assert(got.count(_.lang == null) == 2 && got.count(_.error != "") >= 2)
     }
   }
 
@@ -161,7 +160,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(Checkpoint.readExtracted(spark, outDir).count() == 4)
       // crash window between data rename and manifest rename: data batch
       // exists on disk but no manifest references it
-      ExtractPipeline.run(pages.where(docId >= 4)).toDF()
+      Extracted(pages.where(docId >= 4)).toDS()
         .write.parquet(Checkpoint.dataPath(outDir) + "/batch_orphan")
       assert(Checkpoint.readExtracted(spark, outDir).count() == 4, "orphan batch leaked into reads")
       val remaining = Checkpoint.resume(pages, outDir)
@@ -205,7 +204,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       def listing() = Seq(Checkpoint.dataPath(outDir), Checkpoint.manifestPath(outDir))
         .map(d => new java.io.File(d).list.toSeq.sorted)
       val before = listing()
-      Seq(spark.emptyDataset[graft.pipeline.ExtractedDoc], ExtractPipeline.run(pages.where(docId < 0)))
+      Seq(spark.emptyDataset[PageRow], pages.where(docId < 0)).map(ExtractPipeline.run(_))
         .foreach { empty =>
           import scala.concurrent.{Await, Future}, scala.concurrent.duration._
           import scala.concurrent.ExecutionContext.Implicits.global
@@ -303,7 +302,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       // the first batch as an earlier build committed it: snappy data files
       // under extracted/<batch>/ and their manifest.json file list
       val old = "batch_snappy00000000"
-      val oldDocs = ExtractPipeline.run(pages.where(docId < 4)).toDF()
+      val oldDocs = Extracted(pages.where(docId < 4)).toDF()
       oldDocs.write.option("compression", "snappy").parquet(s"${Checkpoint.dataPath(outDir)}/$old")
       val oldFiles = new java.io.File(s"${Checkpoint.dataPath(outDir)}/$old").list
         .filter(_.endsWith(".parquet")).sorted.toSeq
@@ -434,7 +433,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(batchDirs.flatMap(_.listFiles()).exists(_.getName.endsWith(".orc")),
           "expected .orc data files under the committed batch")
         // crash window: orphan ORC batch is invisible until committed
-        ExtractPipeline.run(pages.where(docId >= 5)).toDF()
+        Extracted(pages.where(docId >= 5)).toDS()
           .write.orc(Checkpoint.dataPath(outDir) + "/batch_orphan")
         assert(Checkpoint.readExtracted(spark, outDir).count() == 5)
         val remaining = Checkpoint.resume(pages, outDir)
@@ -447,6 +446,21 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("table-format seam: a format without data files fails the commit by name") {
+    import spark.implicits._
+    val pages = Seq(Corpus.pageRowFor(1L, "noop seam document", "en")).toDS()
+    withTempDir("graft_spec_noop") { outDir =>
+      spark.conf.set("spark.graft.table.format", "noop")
+      try {
+        val e = intercept[IllegalArgumentException](
+          Checkpoint.commitWithData(ExtractPipeline.run(pages), outDir))
+        assert(e.getMessage.contains("spark.graft.table.format=noop") &&
+          e.getMessage.contains("file format"), e.getMessage)
+        assert(new java.io.File(outDir).list.isEmpty)
+      } finally spark.conf.unset("spark.graft.table.format")
+    }
+  }
+
   test("exactly-once: ORPHAN legacy flat data (no legacy manifest) stays invisible") {
     import spark.implicits._
     val texts = (0L until 6L).map(i => i -> s"orphan legacy doc $i words")
@@ -454,7 +468,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     withTempDir("graft_spec_orphleg") { outDir =>
       // a legacy run crashed AFTER writing flat data, BEFORE its manifest:
       // flat part-files exist, but no manifest vouches for them
-      ExtractPipeline.run(pages.limit(3)).toDF().coalesce(1).write.parquet(s"$outDir/.stage")
+      Extracted(pages.limit(3)).toDS().coalesce(1).write.parquet(s"$outDir/.stage")
       val fs = new org.apache.hadoop.fs.Path(outDir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.mkdirs(new org.apache.hadoop.fs.Path(Checkpoint.dataPath(outDir)))
@@ -477,7 +491,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     withTempDir("graft_spec_flatman") { outDir =>
       // a flat part- file of manifest rows directly under _manifest/, as the
       // pre-atomic layout wrote it: not a batch, so it vouches for nothing
-      ExtractPipeline.run(pages).select("url", "n_chars", "decode_failures")
+      Extracted(pages).toDS().select("url", "n_chars", "decode_failures")
         .coalesce(1).write.parquet(s"$outDir/.flat")
       val fs = new org.apache.hadoop.fs.Path(outDir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -491,7 +505,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       // file list, plus the data batch it names: without a manifest.json it
       // commits nothing, so its data batch stays invisible too
       val old = "batch_partid"
-      val oldDocs = ExtractPipeline.run(pages).toDF()
+      val oldDocs = Extracted(pages).toDF()
       oldDocs.write.parquet(s"${Checkpoint.dataPath(outDir)}/$old")
       oldDocs.select(col("url"), col("n_chars"), col("decode_failures"),
           spark_partition_id().as("part_id"), lit(old).as("batch"))
@@ -527,7 +541,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val t = ("alpha beta gamma delta " * 40).trim // multi-page pdf (even id)
     val pages = Seq(Corpus.pageRowFor(42L, t, "en")).toDS()
-    val d = ExtractPipeline.run(pages, delimiter = "", captureLines = true).collect().head
+    val Seq(d) = Extracted(pages, captureLines = true)
     assert(d.spans.nonEmpty)
     val raw = Corpus.pdfForDoc(42L, t) // deterministic: same bytes the corpus built
     d.spans.foreach { s =>
@@ -546,7 +560,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(s.src_line > 1) // content streams sit well below the header
     }
     // bulk path default: lines off, sentinel -1
-    val bulk = ExtractPipeline.run(pages, delimiter = "").collect().head
+    val Seq(bulk) = Extracted(pages)
     assert(bulk.spans.forall(_.src_line == -1))
   }
 
@@ -554,7 +568,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val t = ("alpha beta gamma delta " * 20).trim
     val pages = Seq(Corpus.pageRowFor(43L, t, "en")).toDS() // odd id -> html
-    val d = ExtractPipeline.run(pages, delimiter = "", captureLines = true).collect().head
+    val Seq(d) = Extracted(pages, captureLines = true)
     assert(d.kind == "html" && d.spans.nonEmpty)
     val html = new String(Corpus.htmlFromText(t, 43L), java.nio.charset.StandardCharsets.UTF_8)
     d.spans.foreach { s =>
@@ -574,7 +588,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     withTempDir("graft_skew") { dir =>
       def table(files: Int, name: String) = {
         (giant +: tiny).toDS().repartition(files).write.parquet(s"$dir/$name")
-        spark.read.parquet(s"$dir/$name").as[PageRow](org.apache.spark.sql.Encoders.product[PageRow])
+        TableIO.readPages(spark, s"$dir/$name")
       }
       val one = table(1, "one")
       val spread = ExtractPipeline.spread(one, one)
@@ -582,8 +596,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(perPart.length == 8)
       assert(perPart.count(_ > 0) >= 6, perPart.mkString(",")) // spread, not piled
       // extraction result unchanged by the repartition
-      val a = ExtractPipeline.run(one).select("url", "n_chars").collect().toSet
-      val b = ExtractPipeline.run(spread).select("url", "n_chars").collect().toSet
+      val a = Extracted(one).map(d => (d.url, d.n_chars)).toSet
+      val b = Extracted(spread).map(d => (d.url, d.n_chars)).toSet
       assert(a == b)
       // with a row group for each of the 4 cores, the scan splits are kept
       val four = table(4, "four")

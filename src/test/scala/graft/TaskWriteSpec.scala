@@ -49,9 +49,9 @@ class TaskWriteSpec extends AnyFunSuite with BeforeAndAfterAll {
     val pages = spark.sparkContext.parallelize(texts.map { case (id, t) => Corpus.pageRowFor(id, t, "en") }, 2).toDS()
     withTempDir("graft_spec_attempt") { outDir =>
       TaskWriteSpec.failed.set(0)
-      val rows = ExtractPipeline.extractRows(pages)
+      val rows = ExtractPipeline.run(pages)
       val extract = rows.perTask
-      val stats = Checkpoint.commitRows(
+      val stats = Checkpoint.commitWithData(
         rows.copy(perTask = it => TaskWriteSpec.failFirstAttempt(3)(extract(it))), outDir)
       assert(TaskWriteSpec.failed.get == 1, "the planted failure did not run")
       assert(stats.docs == 24)

@@ -1,6 +1,6 @@
 package graft.pdf
 
-import graft.fixtures.GoldenGen
+import graft.fixtures.GoldenDocs
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Re-encode of the reference's synthetic end-to-end object-graph test
@@ -17,7 +17,7 @@ class PdfGraphSpec extends AnyFunSuite {
   }
 
   test("trailer Root resolves to /Type/Catalog -> /Pages -> /Kids -> Page -> Contents stream") {
-    val tk = parsed(GoldenGen.helloPdf())
+    val tk = parsed(GoldenDocs.helloPdf())
     val root = tk.trailerEntries("Root").asInstanceOf[DictTok]
     assert(root.tpe.contains("Catalog"))
     val pages = root("Pages").asInstanceOf[DictTok]
@@ -39,7 +39,7 @@ class PdfGraphSpec extends AnyFunSuite {
   }
 
   test("multi-page tree: Kids count and Count entry agree (reference readPages semantics)") {
-    val tk = parsed(GoldenGen.syntheticPdf(seed = 3, pages = 4))
+    val tk = parsed(GoldenDocs.syntheticPdf(seed = 3, pages = 4))
     val root = tk.trailerEntries("Root").asInstanceOf[DictTok]
     val pages = root("Pages").asInstanceOf[DictTok]
     assert(pages.getArray("Kids").map(_.length).contains(4))
